@@ -117,79 +117,6 @@ def assemble(blocks: list[Block]) -> tuple[str, list[tuple[int, int]]]:
     return "".join(parts), spans
 
 
-def finalize(blocks: list[Block]) -> tuple[str, list[tuple[int, int]],
-                                           int, int, float]:
-    """One-pass batch twin of :func:`assemble` + :func:`mean_confidence`
-    + the variant count, over already-pruned blocks.
-
-    Returns ``(extracted_text, spans, n_spans, n_variants, confidence)``.
-    Bit-identical to calling the three separately: same segment iteration
-    order, same glue rules, and the confidence sum accumulates
-    left-to-right exactly like ``sum(confs)`` does (parity asserted
-    row-by-row against the scalar oracle in tests/test_extract.py)."""
-    parts: list[str] = []
-    spans: list[tuple[int, int]] = []
-    conf_total = 0.0
-    n = 0
-    n_var = 0
-    for bi, b in enumerate(blocks):
-        for si, seg in enumerate(b.segments):
-            if bi == 0 and si == 0:
-                parts.append(seg.text)
-            elif si == 0:
-                parts.append(GLUE_LINE + seg.text)
-            else:
-                parts.append(seg.glue + seg.text)
-            spans.append((seg.start, seg.end))
-            conf_total += seg.confidence
-            n += 1
-            n_var += len(seg.variants)
-    conf = float(conf_total / n) if n else 1.0
-    return "".join(parts), spans, n, n_var, conf
-
-
-def finalize_pruned(blocks: list[Block]) -> tuple[str, list[tuple[int, int]],
-                                                  int, int, int, float]:
-    """:func:`prune_empty` + :func:`finalize` fused into ONE walk (the
-    batch hot path): whitespace-only segments are skipped inline instead
-    of rebuilding pruned Block/Segment lists, so no intermediate objects
-    are allocated.  Returns ``(extracted_text, spans, n_blocks, n_spans,
-    n_variants, confidence)`` where ``n_blocks`` counts blocks with at
-    least one kept segment.
-
-    Bit-identical to the two-call sequence: same kept-segment iteration
-    order, the first KEPT segment of each block takes the block glue
-    (exactly what pruning-then-finalizing produces), and the confidence
-    sum accumulates left-to-right like the scalar path (parity asserted
-    row-by-row in tests/test_extract.py)."""
-    parts: list[str] = []
-    spans: list[tuple[int, int]] = []
-    conf_total = 0.0
-    n = 0
-    n_var = 0
-    n_blocks = 0
-    first_overall = True
-    for b in blocks:
-        first_in_block = True
-        for seg in b.segments:
-            if not seg.text.strip():
-                continue
-            if first_in_block:
-                n_blocks += 1
-                parts.append(seg.text if first_overall
-                             else GLUE_LINE + seg.text)
-                first_in_block = False
-                first_overall = False
-            else:
-                parts.append(seg.glue + seg.text)
-            spans.append((seg.start, seg.end))
-            conf_total += seg.confidence
-            n += 1
-            n_var += len(seg.variants)
-    conf = float(conf_total / n) if n else 1.0
-    return "".join(parts), spans, n_blocks, n, n_var, conf
-
-
 def mean_confidence(blocks: list[Block]) -> float:
     """Mean segment confidence over the document (A1 analog — reference
     ``Source/Tesseract/TesseractTextRecognizer.cpp:348-363``).  1.0 when empty

@@ -58,11 +58,11 @@ def _classify(b: _RawBlock) -> bool:
 
 def html_arrays(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """Allocation-light batch twin of :func:`extract_html` +
-    ``assemble.finalize_pruned``: the same tag scan and block
-    classification, but kept segments go straight to the output arrays —
-    no Segment/_RawBlock/Block objects, no closure flush, no prune walk
-    (segments are non-whitespace by construction), and confidence is the
-    constant 1.0 finalize would compute (every html Segment carries
+    ``assemble.prune_empty`` + ``assemble.assemble``: the same tag scan
+    and block classification, but kept segments go straight to the
+    output arrays — no Segment/_RawBlock/Block objects, no closure flush,
+    no prune walk (segments are non-whitespace by construction);
+    confidence is the constant 1.0 (every html Segment carries
     confidence 1.0 and no variants).  html's intra-block glue is always
     a single space (first-in-block gets the line glue), so a kept block's
     text is exactly ``" ".join(texts)`` and blocks join with ``"\\n"``.

@@ -34,13 +34,22 @@ builders' return type:
     early or inspect what got pinned.
 
 Single-session, driver-side bookkeeping only (a Python list of
-DataFrame handles — nothing distributed); not thread-safe across
-concurrently-constructing threads, which matches how plans are built.
+DataFrame handles — nothing distributed).  The scope stack is
+per-thread: a cache built on one thread registers only with that
+thread's innermost scope, never with a scope another thread opened.
 """
 
 from __future__ import annotations
 
-_SCOPES: list["CacheScope"] = []
+import threading
+
+
+class _ScopeStack(threading.local):
+    def __init__(self) -> None:
+        self.stack: list[CacheScope] = []
+
+
+_SCOPES = _ScopeStack()
 
 
 class CacheScope:
@@ -52,11 +61,11 @@ class CacheScope:
         self._dfs: list = []
 
     def __enter__(self) -> "CacheScope":
-        _SCOPES.append(self)
+        _SCOPES.stack.append(self)
         return self
 
     def __exit__(self, *exc) -> bool:
-        _SCOPES.remove(self)
+        _SCOPES.stack.remove(self)
         self.unpersist()
         return False
 
@@ -89,6 +98,6 @@ def register_cache(df):
     single entry point the lazy builders call, so every advisory cache
     they create is reachable by a lifecycle owner."""
     out = df.cache()
-    if _SCOPES:
-        _SCOPES[-1].add(out)
+    if _SCOPES.stack:
+        _SCOPES.stack[-1].add(out)
     return out

@@ -1,13 +1,18 @@
-"""Per-turn extraction dispatch + the Arrow-batch (pandas) entry point.
+"""Per-turn extraction: the Arrow-batch production path + the reference.
 
-:func:`extract_turn` is the scalar oracle: one raw payload in, one
-extraction record out.  :func:`extract_batch` is the batch twin that the
-Spark ``mapInArrow`` operator calls — sniffing is fully vectorized, the
-``plain`` class (the bulk of real transcripts) is handled with vectorized
-pandas ``.str`` ops, and the structured classes run their (regex-driven,
-allocation-light) extractors over just their class subset.  No per-row
-Python ever crosses the JVM boundary: the whole batch is one Arrow
-record batch (north-rule requirement).
+:func:`extract_batch`, called by the Spark ``mapInArrow`` operator,
+extracts every row, with or without settings: vectorized sniff, then one
+array scanner per payload class (no Segment/Block objects).
+:func:`extract_turn` is the reference — Block scanners, F7 gate,
+``assemble.prune_empty``, ``assemble.assemble`` — that tests and the
+benchmark's output check compare the batch path against.
+
+Per-turn settings (``core.settings.Settings``) change only two things:
+``two_pass`` rows pass ``SecondPass`` and ``MinWordConfidence`` to
+``two_pass_arrays``, which keeps merged words with ``conf >=
+MinWordConfidence`` when the gate is ``> 0``; every other class emits
+words at confidence 1.0, so its row is emptied only when
+``MinWordConfidence > 1.0``.
 
 Pipeline stages fused here (reference ``Source/TaskProcessor.cpp:178-373``
 ``doTask`` chain): sniff (S6 codec choice) → class extractor (X1 detect +
@@ -18,18 +23,24 @@ from __future__ import annotations
 
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from . import assemble, boilerplate, markdown, segment, sniff, tooljson
 from .assemble import Block, Segment
-from .secondpass import extract_two_pass, two_pass_arrays as \
-    extract_two_pass_arrays
+from .secondpass import extract_two_pass, two_pass_arrays
 from .settings import Settings
 
 OUTPUT_COLUMNS = [
     "payload_class", "extracted_text", "spans", "n_blocks", "n_spans",
     "n_variants", "confidence", "parse_failed", "empty_after_strip",
 ]
+
+_ARRAY_SCANNERS = {
+    "html": boilerplate.html_arrays,
+    "pdf_layout": segment.pdf_arrays,
+    "markdown": markdown.markdown_arrays,
+}
 
 
 def extract_plain(raw: str) -> list[Block]:
@@ -42,19 +53,15 @@ def extract_plain(raw: str) -> list[Block]:
 
 
 def extract_turn(text: str | None,
-                 settings_csv: str | None = None,
-                 cls: str | None = None) -> dict[str, Any]:
-    """Scalar oracle: classify + extract one turn payload.
+                 settings_csv: str | None = None) -> dict[str, Any]:
+    """Reference extraction of one turn payload (see module docstring).
 
     ``settings_csv`` = per-turn typed settings (F9/F7/X1 —
-    core.settings.Settings): MinWordConfidence gates words post-extraction,
-    SecondPass=off disables the two-pass merge.  ``cls`` = the payload
-    class when the caller already sniffed it (the batch path passes the
-    vectorized ``sniff_series`` result — agreement with scalar sniff is
-    tested in tests/test_sniff.py); None → sniff here."""
+    core.settings.Settings): MinWordConfidence gates words
+    post-extraction, SecondPass=off disables the two-pass merge."""
     raw = text if isinstance(text, str) else ""
     settings = Settings.parse_csv(settings_csv)
-    cls = cls or sniff.sniff(raw)
+    cls = sniff.sniff(raw)
     parse_failed = False
     confidence = 1.0
     if cls == "plain":
@@ -99,55 +106,36 @@ def extract_turn(text: str | None,
     }
 
 
-def _empty_record(cls: str = "plain") -> dict[str, Any]:
-    return {"payload_class": cls, "extracted_text": "", "spans": [],
-            "n_blocks": 0, "n_spans": 0, "n_variants": 0,
-            "confidence": 1.0, "parse_failed": False,
-            "empty_after_strip": False, "word_variants": []}
-
-
 def extract_batch(texts: pd.Series,
                   settings: pd.Series | None = None,
                   spans_as: str = "dicts") -> pd.DataFrame:
-    """Batch twin of :func:`extract_turn` (same index as ``texts``).
+    """Production extraction of a batch (same index as ``texts``).
 
-    Vectorized sniff; vectorized ``plain`` path; per-class dispatch for the
-    structured payloads.  Rows with non-default ``settings`` (rare in
-    practice) take the scalar path.  Agreement with the scalar oracle is
-    tested row-by-row in tests/test_extract.py.
+    ``settings`` = optional per-row settings CSVs, applied as the module
+    docstring describes.  Agreement with :func:`extract_turn` is tested
+    row by row in tests/test_extract.py, with and without settings.
 
     ``spans_as="pairs"`` returns the spans column as ``[(start, end)]``
     tuples instead of ``[{"start": ..., "end": ...}]`` dicts — the Arrow
     operator's format (it flattens spans into offset/child arrays, so
     per-span dicts are pure allocation overhead on the hot path); values
     are identical (tests/test_extract.py asserts both modes agree)."""
-    pairs = spans_as == "pairs"
     s = texts.fillna("").astype(str)
-    if settings is not None:
-        tuned = settings.fillna("").astype(str) != ""
-        if tuned.any():
-            base = extract_batch(s[~tuned], None, spans_as=spans_as)
-            recs = [extract_turn(s.at[i], settings.at[i])
-                    for i in s.index[tuned]]
-            tuned_df = pd.DataFrame(recs, index=s.index[tuned],
-                                    columns=OUTPUT_COLUMNS)
-            if pairs:
-                tuned_df["spans"] = pd.Series(
-                    [[(d["start"], d["end"]) for d in v]
-                     for v in tuned_df["spans"]],
-                    index=tuned_df.index, dtype=object)
-            return _coerce(pd.concat([base, tuned_df]).loc[s.index])
-    classes = sniff.sniff_series(s)
-
-    # positional assembly: every column is a flat numpy array (or plain
-    # python list for the ragged spans) filled by integer positions per
-    # class, and the DataFrame is constructed ONCE at the end (replaces
-    # ~40 masked .loc assignments + a full _coerce astype pass; batch
-    # cost is dominated by the per-row extractors, so this is hygiene
-    # more than speed — parity row-by-row in tests/test_extract.py)
-    import numpy as np
     n = len(s)
-    cls_np = classes.to_numpy()
+    cls_np = sniff.sniff_series(s).to_numpy()
+    # only SecondPass and MinWordConfidence change a row's output
+    second_pass = [True] * n
+    min_conf = np.zeros(n, dtype=np.float64)
+    if settings is not None:
+        for i, csv in enumerate(settings.fillna("").astype(str).tolist()):
+            if csv:
+                cfg = Settings.parse_csv(csv)
+                second_pass[i] = cfg.second_pass
+                min_conf[i] = cfg.min_word_confidence
+
+    # every column is a flat numpy array (or a python list for the ragged
+    # spans) filled by integer positions per class; the DataFrame is
+    # built once at the end
     a_text = np.empty(n, dtype=object)
     spans_col: list = [None] * n
     a_nbl = np.zeros(n, dtype=np.int32)
@@ -167,24 +155,18 @@ def extract_batch(texts: pd.Series,
         a_text[plain_pos] = stripped.to_numpy(dtype=object)
         for pos_i, a, b, ne in zip(plain_pos.tolist(), lead.tolist(),
                                    (lead + ln).tolist(), nonempty.tolist()):
-            spans_col[pos_i] = (
-                ([(a, b)] if pairs else [{"start": a, "end": b}])
-                if ne else [])
+            spans_col[pos_i] = [(a, b)] if ne else []
         a_nbl[plain_pos] = nonempty
         a_nsp[plain_pos] = nonempty
 
     tj_pos = np.flatnonzero(cls_np == "tool_json")
     if len(tj_pos):
-        # fused batch path (~33% of the corpus mix): one json.loads +
-        # regex search per row, columns built in bulk — no dataclasses,
-        # no per-row dicts, no scalar-dispatch overhead
+        # one json.loads + regex search per row, columns built in bulk
         t, st, en, kp, fl = tooljson.extract_tool_json_batch(
             s.iloc[tj_pos].tolist())
         a_text[tj_pos] = np.array(t, dtype=object)
         for pos_i, a, b, k in zip(tj_pos.tolist(), st, en, kp):
-            spans_col[pos_i] = (
-                ([(a, b)] if pairs else [{"start": a, "end": b}])
-                if k else [])
+            spans_col[pos_i] = [(a, b)] if k else []
         kept = np.array(kp, dtype=bool)
         a_nbl[tj_pos] = kept
         a_nsp[tj_pos] = kept
@@ -193,17 +175,13 @@ def extract_batch(texts: pd.Series,
         # starts with "{"), so empty_after_strip reduces to "not kept"
         a_eas[tj_pos] = ~kept
 
-    # structured classes: per-row extractors (regex state machines — not
-    # cross-row vectorizable), but everything AROUND them is batched and
-    # allocation-light: ALL FOUR classes go straight from their internal
-    # scan state to the output arrays (no Segment/Block objects at all —
-    # secondpass.two_pass_arrays / segment.pdf_arrays /
-    # boilerplate.html_arrays / markdown.markdown_arrays);
-    # per-class bulk column fill by position
+    # structured classes: per-row scanners (regex state machines — not
+    # cross-row vectorizable) straight from scan state to output arrays
     for cls in ("html", "pdf_layout", "markdown", "two_pass"):
         pos = np.flatnonzero(cls_np == cls)
         if not len(pos):
             continue
+        scan = _ARRAY_SCANNERS.get(cls)
         texts_l: list[str] = []
         nsp: list[int] = []
         nbl: list[int] = []
@@ -211,24 +189,15 @@ def extract_batch(texts: pd.Series,
         confs: list[float] = []
         eas: list[bool] = []
         for pos_i, raw in zip(pos.tolist(), s.iloc[pos].tolist()):
-            if cls == "two_pass":
-                extracted, spans, n_segs, n_var, conf = \
-                    extract_two_pass_arrays(raw, True)
+            if scan is None:
+                extracted, spans, n_segs, n_var, conf = two_pass_arrays(
+                    raw, second_pass[pos_i], float(min_conf[pos_i]))
                 n_blocks = 1 if n_segs else 0
-            elif cls == "pdf_layout":
-                extracted, spans, n_blocks, n_segs = segment.pdf_arrays(raw)
-                n_var, conf = 0, 1.0
-            elif cls == "html":
-                extracted, spans, n_blocks, n_segs = \
-                    boilerplate.html_arrays(raw)
-                n_var, conf = 0, 1.0
             else:
-                extracted, spans, n_blocks, n_segs = \
-                    markdown.markdown_arrays(raw)
+                extracted, spans, n_blocks, n_segs = scan(raw)
                 n_var, conf = 0, 1.0
             texts_l.append(extracted)
-            spans_col[pos_i] = (spans if pairs else
-                                [{"start": a, "end": b} for a, b in spans])
+            spans_col[pos_i] = spans
             nbl.append(n_blocks)
             nsp.append(n_segs)
             nvar.append(n_var)
@@ -241,6 +210,19 @@ def extract_batch(texts: pd.Series,
         a_conf[pos] = np.array(confs, dtype=np.float64)
         a_eas[pos] = np.array(eas, dtype=bool)
 
+    # F7 gate on the confidence-1.0 classes: all words or none survive
+    # (NaN compares False, like the reference's ``> 0`` test)
+    for i in np.flatnonzero(min_conf > 1.0).tolist():
+        if cls_np[i] == "two_pass":
+            continue
+        a_text[i] = ""
+        spans_col[i] = []
+        a_nbl[i] = a_nsp[i] = 0
+        a_eas[i] = bool(s.iat[i].strip())
+
+    if spans_as != "pairs":
+        spans_col = [[{"start": a, "end": b} for a, b in sp]
+                     for sp in spans_col]
     return pd.DataFrame(
         {"payload_class": cls_np, "extracted_text": a_text,
          "spans": pd.Series(spans_col, index=s.index, dtype=object),
@@ -248,14 +230,3 @@ def extract_batch(texts: pd.Series,
          "confidence": a_conf, "parse_failed": a_pf,
          "empty_after_strip": a_eas},
         index=s.index, columns=OUTPUT_COLUMNS)
-
-
-def _coerce(out: pd.DataFrame) -> pd.DataFrame:
-    out["n_blocks"] = out["n_blocks"].astype("int32")
-    out["n_spans"] = out["n_spans"].astype("int32")
-    out["n_variants"] = out["n_variants"].astype("int32")
-    out["confidence"] = out["confidence"].astype("float64")
-    out["parse_failed"] = out["parse_failed"].astype(bool)
-    out["empty_after_strip"] = out["empty_after_strip"].astype(bool)
-    out["extracted_text"] = out["extracted_text"].astype(str)
-    return out

@@ -35,10 +35,10 @@ _FENCE_RE = re.compile(r"^\s*```")
 
 def markdown_arrays(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """Allocation-light batch twin of :func:`extract_markdown` +
-    ``assemble.finalize_pruned``: the same line/piece scan, but kept
-    pieces go straight to the output arrays — no Segment/Block objects
-    and no prune walk (whitespace-only pieces are already skipped here),
-    and confidence is the constant 1.0 finalize would compute (markdown
+    ``assemble.prune_empty`` + ``assemble.assemble``: the same line/piece
+    scan, but kept pieces go straight to the output arrays — no
+    Segment/Block objects and no prune walk (whitespace-only pieces are
+    already skipped here); confidence is the constant 1.0 (markdown
     Segments carry confidence 1.0 and no variants).  Glue is exactly the
     scalar rule: ``" "`` before a piece only when a whitespace-only piece
     preceded it within the line (``pending_space``), nothing otherwise;

@@ -299,17 +299,23 @@ def extract_two_pass(raw: str, run_second: bool = True) -> tuple[list[Block], fl
     return blocks, doc_conf
 
 
-def two_pass_arrays(raw: str, run_second: bool = True
+def two_pass_arrays(raw: str, run_second: bool = True,
+                    min_conf: float = 0.0
                     ) -> tuple[str, list[tuple[int, int]], int, int, float]:
-    """Allocation-light batch twin of :func:`extract_two_pass` +
-    ``assemble.finalize_pruned``: the merged words go STRAIGHT to the
-    output arrays — no Segment/Block objects, no prune walk (every Word
-    text is ``\\S+`` so pruning can never drop one).  Returns
-    ``(extracted_text, span_pairs, n_spans, n_variants, doc_conf)``;
-    ``n_blocks`` is ``1 if n_spans else 0`` by construction (the merge
-    emits a single Block).  Byte/bit parity with the scalar path is
-    asserted row-by-row in tests/test_extract.py."""
+    """Allocation-light batch twin of :func:`extract_two_pass` + the F7
+    word-confidence gate + ``assemble.prune_empty`` + ``assemble.assemble``:
+    the merged words go STRAIGHT to the output arrays — no Segment/Block
+    objects, no prune walk (every Word text is ``\\S+`` so pruning can
+    never drop one).  ``min_conf > 0`` keeps only merged words with
+    ``conf >= min_conf`` (Settings ``MinWordConfidence``); the document
+    confidence is the merge's either way.  Returns ``(extracted_text,
+    span_pairs, n_spans, n_variants, doc_conf)``; ``n_blocks`` is ``1 if
+    n_spans else 0`` by construction (the merge emits a single Block).
+    Byte/bit parity with the scalar path is asserted row-by-row in
+    tests/test_extract.py."""
     merged, doc_conf = _merge_two_pass(raw, run_second)
+    if min_conf > 0:
+        merged = [t for t in merged if t[4] >= min_conf]
     text = " ".join(t[3] for t in merged)
     spans = [(t[1], t[2]) for t in merged]
     n_var = sum(len(t[5]) for t in merged)

@@ -112,12 +112,12 @@ _YX = itemgetter(0, 1)
 
 def pdf_arrays(raw: str) -> tuple[str, list[tuple[int, int]], int, int]:
     """Allocation-light batch twin of :func:`extract_pdf_layout` +
-    ``assemble.finalize_pruned``: the same parse → F5/band filter → W6
-    cap → (y, x) stable sort → W1 bubble pass → line grouping pipeline,
-    fused over bare ``(y, x, text, start, end)`` tuples — no Box/Segment/
-    Block objects, no prune walk (box texts are ``\\S+`` so pruning can
-    never drop one), confidence is the constant 1.0 finalize would
-    compute.  Equivalences with the scalar path: breaking the parse once
+    ``assemble.prune_empty`` + ``assemble.assemble``: the same parse →
+    F5/band filter → W6 cap → (y, x) stable sort → W1 bubble pass → line
+    grouping pipeline, fused over bare ``(y, x, text, start, end)``
+    tuples — no Box/Segment/Block objects, no prune walk (box texts are
+    ``\\S+`` so pruning can never drop one); confidence is the constant
+    1.0.  Equivalences with the scalar path: breaking the parse once
     MAX_BOXES boxes are KEPT equals ``kept[:MAX_BOXES]`` (later boxes are
     discarded either way); ``list.sort(key=itemgetter(0, 1))`` over parse
     order is the same stable permutation as ``sorted(boxes, key=lambda

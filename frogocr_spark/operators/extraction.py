@@ -5,8 +5,9 @@ second-pass merge → prune → assemble; ``Source/TaskProcessor.cpp:178-373``)
 into a single pipelined physical operator.  Catalyst plans the scan /
 anti-join / repartition around it; inside, the whole Arrow record batch is
 processed by ``frogocr_spark.core.extract.extract_batch`` (vectorized
-sniff + class dispatch — no per-row Python crossing the JVM boundary),
-and the batch boundary itself is raw Arrow: passthrough columns are
+sniff, then one array scanner per payload class for every row, per-turn
+settings included — no per-row Python crossing the JVM boundary), and
+the batch boundary itself is raw Arrow: passthrough columns are
 forwarded zero-copy and result arrays are built directly, skipping the
 pandas round-trip ``mapInPandas`` pays on both sides.
 
@@ -24,7 +25,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..core.extract import extract_batch
-from ..core.sniff import CLASSES
 
 SPAN_TYPE = T.ArrayType(T.StructType([
     T.StructField("start", T.IntegerType(), False),
@@ -47,26 +47,13 @@ EXTRACTION_FIELDS = [
 def extract_turns(df: DataFrame, *, text_col: str = "text",
                   passthrough: tuple[str, ...] = ("conv_id", "turn_idx", "role"),
                   with_partition_id: bool = True,
-                  settings_col: str | None = None,
-                  compact_classes: bool = False) -> DataFrame:
+                  settings_col: str | None = None) -> DataFrame:
     """raw transcripts → extraction results (1 row in = 1 row out).
 
     ``with_partition_id`` stamps ``F.spark_partition_id()`` *before* the UDF
     so the lineage sidecar can group by physical partition (A10/§2.10).
     ``settings_col`` = optional per-turn settings CSV (F9 — tunes
     MinWordConfidence / SecondPass per row).
-
-    ``compact_classes`` (VERDICT r4 #5, memory-bandwidth experiment):
-    ship ``payload_class`` across the Python→JVM Arrow boundary as an
-    int8 code and decode it JVM-side (one ``element_at`` over a
-    6-literal array, inside whole-stage codegen) instead of a
-    ~7-byte-avg string per row.  True Arrow dictionary encoding at
-    this boundary is UNSUPPORTED by Spark — ``ArrowColumnVector``
-    raises ``getUTF8String … UNSUPPORTED_CALL`` on a dictionary-typed
-    vector from ``mapInArrow`` (probed on 4.1.2) — so an integer code
-    + JVM decode is the available equivalent.  Output schema and
-    values are identical either way (parity-tested); measured effect
-    on the 8→32 scaling pair is recorded in NOTES_r5.md.
     """
     cols = [*passthrough, text_col]
     if settings_col:
@@ -76,15 +63,10 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
         narrow = narrow.withColumn("partition_id", F.spark_partition_id())
         cols = [*cols, "partition_id"]
 
-    in_fields = [narrow.schema[c] for c in cols
-                 if c != text_col and c != settings_col]
-    udf_fields = list(EXTRACTION_FIELDS)
-    if compact_classes:
-        udf_fields[0] = T.StructField("payload_class_code",
-                                      T.ByteType(), False)
-    out_schema = T.StructType(in_fields + udf_fields)
     pass_cols = [c for c in cols if c != text_col and c != settings_col]
-    cls_code = {c: i for i, c in enumerate(CLASSES)}
+    out_schema = T.StructType([narrow.schema[c] for c in pass_cols]
+                              + EXTRACTION_FIELDS)
+    out_names = pass_cols + [f.name for f in EXTRACTION_FIELDS]
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         # mapInArrow, not mapInPandas: the passthrough columns are sliced
@@ -124,15 +106,8 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                     ["start", "end"]))
 
             arrays = [rb.column(names.index(c)) for c in pass_cols]
-            if compact_classes:
-                cls_arr = pa.array(
-                    res["payload_class"].map(cls_code).to_numpy("int8"),
-                    pa.int8())
-            else:
-                cls_arr = pa.array(res["payload_class"].tolist(),
-                                   pa.string())
             arrays += [
-                cls_arr,
+                pa.array(res["payload_class"].tolist(), pa.string()),
                 pa.array(res["extracted_text"].tolist(), pa.string()),
                 spans_arr,
                 pa.array(res["n_blocks"].to_numpy(), pa.int32()),
@@ -142,19 +117,6 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                 pa.array(res["parse_failed"].to_numpy(), pa.bool_()),
                 pa.array(res["empty_after_strip"].to_numpy(), pa.bool_()),
             ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=pass_cols + [f.name for f in udf_fields])
+            yield pa.RecordBatch.from_arrays(arrays, names=out_names)
 
-    out = narrow.mapInArrow(run, schema=out_schema)
-    if compact_classes:
-        # JVM-side decode: element_at over a 6-literal array runs in
-        # whole-stage codegen; schema/values identical to the string
-        # path (tests/test_extract.py parity)
-        decode = F.element_at(
-            F.array(*[F.lit(c) for c in CLASSES]),
-            F.col("payload_class_code").cast("int") + F.lit(1))
-        out = (out.withColumn("payload_class", decode)
-               .drop("payload_class_code")
-               .select(*pass_cols,
-                       *[f.name for f in EXTRACTION_FIELDS]))
-    return out
+    return narrow.mapInArrow(run, schema=out_schema)

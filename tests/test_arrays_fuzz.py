@@ -4,14 +4,18 @@ The corpus test (tests/test_extract.py) proves parity on GENERATOR
 payloads; these hypothesis fuzzers prove it on hostile ones — unclosed
 tags, stray ``<``/``>``, nested/unbalanced links and blacklist tags,
 whitespace runs, malformed ``@x,y,w,h|`` tokens, markdown markers glued
-mid-line — where a fused rewrite would drift first.  Oracle = the exact
-Block-path composition each fast path's docstring claims:
-``assemble.finalize_pruned(extract_<cls>(raw))``.
+mid-line — where a fused rewrite would drift first.  Oracle = the
+Block-path composition ``extract_turn`` uses:
+``assemble.assemble(assemble.prune_empty(extract_<cls>(raw)))``.
+``two_pass`` is fuzzed through ``extract_batch`` against ``extract_turn``
+itself, with per-turn settings.
 """
 
+import pandas as pd
 from hypothesis import given, settings, strategies as st
 
-from frogocr_spark.core import assemble, boilerplate, markdown, segment
+from frogocr_spark.core import (assemble, boilerplate, extract, markdown,
+                                segment)
 
 _HTML_ATOMS = st.sampled_from([
     "<p>", "</p>", "<div>", "</div>", "<nav>", "</nav>", "<a>", "</a>",
@@ -35,10 +39,27 @@ _PDF_ATOMS = st.sampled_from([
 ])
 
 
+_TP_ATOMS = st.sampled_from([
+    "[[LOWCONF]]", "[[/LOWCONF]]", "[[LOWCONF", "LOWCONF]]", "[[", "]]",
+    "?", "drah?", "sdrow desrever", "drow", "plain words", "x", ".",
+    " ", "  ", "\n", "\t", " \n\t ", "a?b c",
+])
+
+# mirrors tests/test_extract.py SETTINGS_GRID
+_SETTINGS = st.sampled_from([
+    "", "Detector=x", "SecondPass=off", "MinWordConfidence=0.5",
+    "MinWordConfidence=0.95", "MinWordConfidence=1.0",
+    "MinWordConfidence=1.5", "MinWordConfidence=nan",
+    "MinWordConfidence=inf", "MinWordConfidence=-1",
+    "SecondPass=off,MinWordConfidence=0.25",
+    "MinWordConfidence=abc,SecondPass=OFF",
+])
+
+
 def _compose(extract_fn, raw):
-    text, spans, n_blocks, n, n_var, conf = \
-        assemble.finalize_pruned(extract_fn(raw))
-    return text, spans, n_blocks, n
+    blocks, _dropped = assemble.prune_empty(extract_fn(raw))
+    text, spans = assemble.assemble(blocks)
+    return text, spans, len(blocks), len(spans)
 
 
 @settings(max_examples=300, deadline=None)
@@ -63,6 +84,21 @@ def test_pdf_arrays_fuzz(atoms):
     raw = " ".join(atoms)
     assert segment.pdf_arrays(raw) == \
         _compose(segment.extract_pdf_layout, raw)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_TP_ATOMS, max_size=40), st.integers(0, 40), _SETTINGS)
+def test_two_pass_batch_fuzz_with_settings(atoms, at, csv):
+    """Hostile ``[[LOWCONF]]`` payloads (unclosed/nested markers, ``?``
+    hard regions, whitespace runs) with a random per-turn setting: the
+    batch row equals the reference record on every column."""
+    raw = "".join(atoms[:at] + ["[[LOWCONF]]"] + atoms[at:])
+    row = extract.extract_batch(pd.Series([raw]),
+                                pd.Series([csv])).iloc[0]
+    rec = extract.extract_turn(raw, csv)
+    assert rec["payload_class"] == "two_pass"
+    for col in extract.OUTPUT_COLUMNS:
+        assert row[col] == rec[col], col
 
 
 @settings(max_examples=100, deadline=None)

@@ -12,22 +12,21 @@ def corpus():
     return pg.gen_transcripts(n_convs=150)
 
 
-def test_batch_matches_scalar_oracle(corpus):
-    texts = pd.Series([r["text"] for r in corpus])
-    batch = extract.extract_batch(texts)
-    assert len(batch) == len(corpus)
-    for i, r in enumerate(corpus):
-        rec = extract.extract_turn(r["text"])
+def _assert_batch_matches_reference(texts, settings=None):
+    """extract_batch equals extract_turn on all 9 columns, row by row."""
+    texts = pd.Series(texts, dtype=object)
+    batch = extract.extract_batch(texts, settings)
+    assert len(batch) == len(texts)
+    stngs = [None] * len(texts) if settings is None else list(settings)
+    for i, (raw, csv) in enumerate(zip(texts, stngs)):
+        rec = extract.extract_turn(raw, csv)
         row = batch.iloc[i]
-        assert rec["payload_class"] == row["payload_class"]
-        assert rec["extracted_text"] == row["extracted_text"]
-        assert rec["spans"] == row["spans"]
-        assert rec["confidence"] == row["confidence"]
-        assert rec["parse_failed"] == row["parse_failed"]
-        assert rec["empty_after_strip"] == row["empty_after_strip"]
-        assert rec["n_blocks"] == row["n_blocks"]
-        assert rec["n_spans"] == row["n_spans"]
-        assert rec["n_variants"] == row["n_variants"]
+        for col in extract.OUTPUT_COLUMNS:
+            assert rec[col] == row[col], (col, raw, csv)
+
+
+def test_batch_matches_scalar_oracle(corpus):
+    _assert_batch_matches_reference([r["text"] for r in corpus])
 
 
 def test_span_raw_slice_invariant(corpus):
@@ -113,18 +112,7 @@ TOOL_JSON_EDGE_CASES = [
 def test_tool_json_batch_scalar_parity_edges():
     """The fused batch tool_json path must byte-match the scalar oracle
     on adversarial payloads (escapes, priority, prune, parse failure)."""
-    texts = pd.Series(TOOL_JSON_EDGE_CASES)
-    batch = extract.extract_batch(texts)
-    for i, raw in enumerate(TOOL_JSON_EDGE_CASES):
-        rec = extract.extract_turn(raw)
-        row = batch.iloc[i]
-        assert rec["payload_class"] == row["payload_class"], raw
-        assert rec["extracted_text"] == row["extracted_text"], raw
-        assert rec["spans"] == row["spans"], raw
-        assert rec["parse_failed"] == row["parse_failed"], raw
-        assert rec["empty_after_strip"] == row["empty_after_strip"], raw
-        assert rec["n_blocks"] == row["n_blocks"], raw
-        assert rec["confidence"] == row["confidence"], raw
+    _assert_batch_matches_reference(TOOL_JSON_EDGE_CASES)
 
 
 def test_tool_json_unescape_span_invariant():
@@ -147,52 +135,54 @@ def test_spans_pairs_mode_matches_dicts_mode(corpus):
     """spans_as="pairs" (the Arrow operator's allocation-light format)
     must carry exactly the same values as the default dict format, on
     every row of the full generated corpus, with and without per-row
-    settings routing a row through the scalar path."""
+    settings."""
     texts = pd.Series([r["text"] for r in corpus])
-    dicts = extract.extract_batch(texts)
-    prs = extract.extract_batch(texts, spans_as="pairs")
-    for col in dicts.columns:
-        if col == "spans":
-            continue
-        assert dicts[col].tolist() == prs[col].tolist(), col
-    for d_row, p_row in zip(dicts["spans"], prs["spans"]):
-        assert [(d["start"], d["end"]) for d in d_row] \
-            == [tuple(p) for p in p_row]
-    # tuned-settings rows (scalar path) convert too
     stngs = pd.Series(["MinWordConfidence=0.9"] + [""] * (len(texts) - 1))
-    tuned = extract.extract_batch(texts, stngs, spans_as="pairs")
-    assert [tuple(p) for p in tuned["spans"].iloc[0]] \
-        == [(d["start"], d["end"])
-            for d in extract.extract_turn(
-                texts.iloc[0], "MinWordConfidence=0.9")["spans"]]
+    for settings in (None, stngs):
+        dicts = extract.extract_batch(texts, settings)
+        prs = extract.extract_batch(texts, settings, spans_as="pairs")
+        for col in dicts.columns:
+            if col == "spans":
+                continue
+            assert dicts[col].tolist() == prs[col].tolist(), col
+        for d_row, p_row in zip(dicts["spans"], prs["spans"]):
+            assert [(d["start"], d["end"]) for d in d_row] \
+                == [tuple(p) for p in p_row]
 
 
-def test_arrays_twins_equal_finalize_pruned_composition(corpus):
-    """Each structured class's *_arrays fast path must equal the exact
-    composition its docstring claims: ``assemble.finalize_pruned(
-    extract_<cls>(raw))`` — same text, same spans, same counts, and the
-    constant confidence/variant values the Block path would compute.
-    Run over every structured row of the full generated corpus."""
-    from frogocr_spark.core import assemble, boilerplate, markdown, segment
+# per-turn settings: the gate's boundaries (0, 1.0, the second-pass
+# confidences), values that parse to NaN/inf/negative or fail to parse,
+# SecondPass=off alone and combined, and a key that changes nothing
+SETTINGS_GRID = [
+    "", "Detector=x", "SecondPass=off", "MinWordConfidence=0.5",
+    "MinWordConfidence=0.95", "MinWordConfidence=1.0",
+    "MinWordConfidence=1.5", "MinWordConfidence=nan",
+    "MinWordConfidence=inf", "MinWordConfidence=-1",
+    "SecondPass=off,MinWordConfidence=0.25",
+    "MinWordConfidence=abc,SecondPass=OFF",
+]
 
-    twins = {
-        "html": (boilerplate.html_arrays, boilerplate.extract_html),
-        "markdown": (markdown.markdown_arrays, markdown.extract_markdown),
-        "pdf_layout": (segment.pdf_arrays, segment.extract_pdf_layout),
-    }
-    checked = {k: 0 for k in twins}
-    for r in corpus:
-        raw = r["text"]
-        cls = extract.extract_turn(raw)["payload_class"]
-        if cls not in twins:
-            continue
-        arrays_fn, block_fn = twins[cls]
-        text, spans, n_blocks, n_spans = arrays_fn(raw)
-        f_text, f_spans, f_blocks, f_n, f_var, f_conf = \
-            assemble.finalize_pruned(block_fn(raw))
-        assert text == f_text
-        assert spans == f_spans
-        assert (n_blocks, n_spans) == (f_blocks, f_n)
-        assert (f_var, f_conf) == (0, 1.0)   # the constants the fast
-        checked[cls] += 1                    # path hard-codes
-    assert all(v > 50 for v in checked.values()), checked
+EDGE_PAYLOADS = TOOL_JSON_EDGE_CASES + [
+    "", "   ", None, "\n\t", "  some words  ",
+    "good words [[LOWCONF]]txet dexif[[/LOWCONF]] tail",
+    "[[LOWCONF]]unclosed region drow", "[[LOWCONF]][[/LOWCONF]]",
+    "[[LOWCONF]]a [[LOWCONF]]b[[/LOWCONF]] c[[/LOWCONF]]",
+    "x [[LOWCONF]]?drah[[/LOWCONF]] y [[LOWCONF]]ysae[[/LOWCONF]]",
+    "[[LOWCONF]]   \n\t  [[/LOWCONF]]",
+    "<div><p>unclosed paragraph with enough words here", "<nav>only nav",
+    "# heading\n[unclosed](link **bold", "```\nfence never closed",
+    "@10,100,20,8|word @1,2|short @x,y,w,h|bad", "@12,760,9,9|footer",
+]
+
+
+def test_batch_matches_reference_under_settings_grid(corpus):
+    """Every (row, settings) pair over the corpus plus edge payloads:
+    rows with settings go through the array scanners and must equal the
+    reference on all 9 columns.  Round j gives row i the setting
+    ``SETTINGS_GRID[(i + j) % 12]``, so each batch mixes all of them."""
+    texts = [r["text"] for r in corpus] + EDGE_PAYLOADS
+    k = len(SETTINGS_GRID)
+    for j in range(k):
+        _assert_batch_matches_reference(
+            texts, pd.Series([SETTINGS_GRID[(i + j) % k]
+                              for i in range(len(texts))], dtype=object))

@@ -157,28 +157,3 @@ def test_blind_retry_of_completed_run_keeps_data(spark, tmp_path):
     assert not [d for d in os.listdir(os.path.join(str(tmp_path),
                                                    "extractions"))
                 if d.startswith(".staging")]
-
-
-def test_compact_classes_parity_and_schema(spark):
-    """compact_classes ships payload_class as an int8 code across the
-    Arrow boundary and decodes it JVM-side — output schema (names,
-    types, order) and every value must equal the string path."""
-    from frogocr_spark.sources import transcripts
-    tdf = transcripts.generate(spark, 40).localCheckpoint()
-    plain = extract_turns(tdf)
-    compact = extract_turns(tdf, compact_classes=True)
-    assert [f.name for f in compact.schema.fields] == \
-           [f.name for f in plain.schema.fields]
-    assert [f.dataType for f in compact.schema.fields] == \
-           [f.dataType for f in plain.schema.fields]
-    key = lambda r: (r["conv_id"], r["turn_idx"])
-    a = sorted((r.asDict(recursive=True) for r in plain.collect()),
-               key=key)
-    b = sorted((r.asDict(recursive=True) for r in compact.collect()),
-               key=key)
-    # drop the physical-partition stamp (localCheckpoint layout detail,
-    # identical here, but keep the comparison about the data)
-    for r in a + b:
-        r.pop("partition_id", None)
-    assert a == b
-    assert {r["payload_class"] for r in a} >= {"plain"}

@@ -254,3 +254,52 @@ def test_cache_scope_nesting_and_no_scope_fallback(spark):
     # input relation — verify SOMETHING is pinned, then clean up
     assert not spark._jsparkSession.sharedState().cacheManager().isEmpty()
     spark.catalog.clearCache()
+
+
+def test_cache_scope_is_per_thread():
+    """Two threads with scopes open at the same time: each cache
+    registers with its own thread's scope, and a scope's exit
+    unpersists only that thread's cache."""
+    import threading
+
+    from frogocr_spark.core.cachectl import cache_scope, register_cache
+
+    class FakeDF:
+        def __init__(self):
+            self.cached = False
+
+        def cache(self):
+            self.cached = True
+            return self
+
+        def unpersist(self, blocking):
+            self.cached = False
+
+    dfs = {"a": FakeDF(), "b": FakeDF()}
+    both_open = threading.Barrier(2)
+    both_registered = threading.Barrier(2)
+    a_closed = threading.Event()
+    seen = {}
+
+    def work(name):
+        with cache_scope() as cs:
+            both_open.wait(5)
+            register_cache(dfs[name])
+            both_registered.wait(5)
+            seen[name] = cs.relations
+            if name == "b":
+                a_closed.wait(5)
+                seen["b_cached_after_a_exit"] = dfs["b"].cached
+                seen["a_cached_after_a_exit"] = dfs["a"].cached
+        if name == "a":
+            a_closed.set()
+
+    threads = [threading.Thread(target=work, args=(k,)) for k in dfs]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(10)
+        assert not th.is_alive()
+    assert seen["a"] == (dfs["a"],) and seen["b"] == (dfs["b"],)
+    assert seen["b_cached_after_a_exit"] and not seen["a_cached_after_a_exit"]
+    assert not dfs["a"].cached and not dfs["b"].cached

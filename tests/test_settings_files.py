@@ -1,10 +1,13 @@
 """Per-turn settings (F9/F7/SecondPass), directory source (S4),
 XML validate roundtrip (S8)."""
 
+import itertools
+
 import pandas as pd
 
 from frogocr_spark.core import alto
-from frogocr_spark.core.extract import extract_batch, extract_turn
+from frogocr_spark.core.extract import (OUTPUT_COLUMNS, extract_batch,
+                                        extract_turn)
 from frogocr_spark.core.settings import Settings
 
 
@@ -57,17 +60,45 @@ def test_batch_settings_routing():
     assert out["n_blocks"].dtype == "int32"
 
 
+MALFORMED = [
+    "<div><p>unclosed paragraph with several words in it",
+    "<nav>menu</nav><p>body <a href='x'>link</p></div></div>",
+    "<p>tag soup < > </ /> words after</span>",
+    '{"content": "truncated', '{broken json', '{"content": "a \\"q\\"',
+    '{"data": "low", "content": "   "}',
+    "# heading\n[unclosed](link **bold", "```\nfence never closed",
+    "> quote\n- item *em", "@10,100,20,8|word @1,2|short @x,y,w,h|bad",
+    "@12,760,9,9|footer @40,40,10,10|header", "@5,60,3,9|tiny",
+    "good [[LOWCONF]]drow", "[[LOWCONF]][[LOWCONF]]a[[/LOWCONF]]",
+    "x [[LOWCONF]]?drah[[/LOWCONF]] [[LOWCONF]]ysae[[/LOWCONF]] y",
+    TP, "   ", "", None,
+]
+
+
 def test_spark_operator_settings_col(spark):
+    """Truncated/unbalanced payloads of every class through the Spark
+    operator, with and without per-turn settings: each output row equals
+    the reference record."""
+    settings = [None, "", "SecondPass=off", "MinWordConfidence=0.95",
+                "MinWordConfidence=1.5", "Detector=x"]
+    rows = [("c", i, raw, csv) for i, (raw, csv)
+            in enumerate(itertools.product(MALFORMED, settings))]
     df = spark.createDataFrame(
-        [("c", 0, TP, ""), ("c", 1, TP, "SecondPass=off")],
-        "conv_id string, turn_idx int, text string, settings string")
+        rows, "conv_id string, turn_idx int, text string, settings string")
     from frogocr_spark.operators.extraction import extract_turns
-    got = {r.turn_idx: r.extracted_text for r in
+    got = {r.turn_idx: r.asDict(recursive=True) for r in
            extract_turns(df, passthrough=("conv_id", "turn_idx"),
                          settings_col="settings",
                          with_partition_id=False).collect()}
-    assert got[0] == "good words fixed text tail"
-    assert got[1] == "good words txet dexif tail"
+    assert len(got) == len(rows)
+    for _, i, raw, csv in rows:
+        rec = extract_turn(raw, csv)
+        for col in OUTPUT_COLUMNS:
+            assert got[i][col] == rec[col], (col, raw, csv)
+    tp = [i for _, i, raw, _ in rows if raw == TP]
+    assert {got[i]["extracted_text"] for i in tp} == {
+        "good words fixed text tail", "good words txet dexif tail",
+        "fixed text", ""}
 
 
 # ---------- S4 directory enumeration ----------
