@@ -3,15 +3,17 @@
 ``entry(spark)`` — flagship: the full extraction pipeline operator chain on
 a deterministic synthetic transcripts table at sf0.001 scale.
 
-``queries()`` — one entry per implemented operator from SURVEY.md §2 plus
-the training-data-pipeline operators (dedup / similarity / text analysis /
-multimodal).  Each callable takes (spark, sf_dir) and returns a DataFrame.
+``queries()`` — the extraction pipeline's contract rows: the 50 rows of
+the driver's correctness window (SURVEY.md §2 operators plus the
+in-window dedup / similarity / multimodal rows), the five per-class
+extraction rows, and ``pipeline_extract`` last.  Each callable takes
+(spark, sf_dir) and returns a DataFrame.
 
 ``oracle_sql()`` — DuckDB-runnable ANSI SQL equivalents for every
-SQL-expressible query (same column names, same rounding).  Queries without
-an oracle entry (extraction mapInPandas chain, xxhash64-based sketches,
-multimodal UDF plumbing) get the driver's rows-only check and are instead
-byte-verified against the pure-Python oracle in tests/.
+query but the last (same column names, same rounding).
+``pipeline_extract`` is the one rows-only row: it is not
+SQL-expressible, and is instead byte-verified against the pure-Python
+oracle and the golden fixtures in tests/.
 """
 
 from __future__ import annotations
@@ -244,129 +246,6 @@ def _q_tpch_q3_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(10))
 
 
-def _q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 shape: revenue per nation where customer and supplier
-    share the nation, restricted to one region and one order year.
-    Scale shape: the fact table (lineitem) joins orders on its key and
-    every dimension (customer, supplier, nation, region) is explicitly
-    broadcast — the 100 TB side is shuffled exactly once, on
-    l_orderkey; revenue sums are rounded to whole units (q1/q3
-    convention) so cross-engine double summation order cannot flip the
-    hash."""
-    li = _read(spark, sf_dir, "lineitem")
-    orders = _read(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1997-01-01"))
-    cust = _read(spark, sf_dir, "customer")
-    supp = _read(spark, sf_dir, "supplier")
-    nat = _read(spark, sf_dir, "nation")
-    reg = _read(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (li.join(orders, li.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .join(F.broadcast(supp),
-                  (li.l_suppkey == supp.s_suppkey)
-                  & (cust.c_nationkey == supp.s_nationkey))
-            .join(F.broadcast(nat), cust.c_nationkey == nat.n_nationkey)
-            .join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey)
-            .groupBy("n_name")
-            .agg(F.round(F.sum(rev), 0).alias("revenue"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-
-def _q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 shape (large-volume orders): orders whose total line
-    quantity exceeds 150, with the customer attached.  The HAVING
-    aggregate runs on the fact table FIRST (map-side combined, one
-    keyed shuffle) and only the few surviving order keys join back to
-    orders/customer — the semi-join-on-aggregate pattern.  l_quantity
-    is integer-valued, so the sum is exact in doubles (no rounding
-    ambiguity)."""
-    li = _read(spark, sf_dir, "lineitem")
-    orders = _read(spark, sf_dir, "orders")
-    cust = _read(spark, sf_dir, "customer")
-    big = (li.groupBy("l_orderkey")
-           .agg(F.sum("l_quantity").alias("total_qty"))
-           .where(F.col("total_qty") > 150))
-    return (big.join(orders, big.l_orderkey == orders.o_orderkey)
-            .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-            .select("c_custkey", "c_name", "o_orderkey",
-                    F.col("o_totalprice"),
-                    F.col("total_qty").cast("long").alias("total_qty")))
-
-
-def _q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape (EXISTS semi-join): orders in one quarter having
-    at least one lineitem, counted per priority.  The EXISTS runs as a
-    LeftSemi against the fact table — no fan-out, no dedup needed."""
-    orders = _read(spark, sf_dir, "orders").where(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1996-04-01"))
-    li = _read(spark, sf_dir, "lineitem").select("l_orderkey")
-    return (orders.join(li, orders.o_orderkey == li.l_orderkey,
-                        "left_semi")
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("order_count")))
-
-
-def _q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q13 shape (outer-join count distribution): customers by
-    number of orders INCLUDING zero-order customers — the left outer
-    join feeding a second aggregation (distribution of counts)."""
-    cust = _read(spark, sf_dir, "customer").select("c_custkey")
-    orders = _read(spark, sf_dir, "orders").select("o_custkey",
-                                                   "o_orderkey")
-    per_cust = (cust.join(orders, cust.c_custkey == orders.o_custkey,
-                          "left")
-                .groupBy("c_custkey")
-                .agg(F.count("o_orderkey").alias("c_count")))
-    return (per_cust.groupBy("c_count")
-            .agg(F.count(F.lit(1)).alias("custdist")))
-
-
-def _q_w_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-family window breadth: ntile(4), percent_rank and cume_dist
-    per event_type over the value order — all ratios of integers /
-    integer buckets, so cross-engine determinism is exact (ties broken
-    by event_id for a total order)."""
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("value").asc(), F.col("event_id").asc())
-    return ev.select(
-        "event_id", "event_type",
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"))
-
-
-def _q_agg_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct-aggregation shape: per event_type, exact distinct users
-    and distinct calendar days alongside a plain count — the
-    multi-distinct aggregate Catalyst plans via expand."""
-    ev = _read(spark, sf_dir, "events")
-    return (ev.groupBy("event_type")
-            .agg(F.countDistinct("user_id").alias("n_users"),
-                 F.countDistinct(F.to_date("ts")).alias("n_days"),
-                 F.count(F.lit(1)).alias("n_events")))
-
-
-def _q_arr_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-function surface over the token list: distinct size,
-    sorted-prefix join, containment — pure column expressions."""
-    docs = _read(spark, sf_dir, "documents")
-    ws = F.filter(F.split(F.trim(F.col("text")), r"\s+"),
-                  lambda x: x != "")
-    dedup = F.array_distinct(ws)
-    return docs.select(
-        "doc_id",
-        F.size(ws).alias("n_tokens"),
-        F.size(dedup).alias("n_distinct"),
-        F.array_join(F.slice(F.array_sort(dedup), 1, 3), ",")
-        .alias("first3"),
-        F.array_contains(ws, "the").alias("has_the"))
-
-
 def _q_j1_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1 as an interval-overlap join: per-user 1-hour activity intervals
     (event ts .. ts+3600s) overlapping with coverage > 0.75."""
@@ -510,18 +389,6 @@ def _q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_lsh_pairs(docs, "doc_id", "text",
                              num_hashes=32, bands=4, threshold=0.5,
                              hash_fn="md5") \
-        .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
-
-
-def _q_dedup_minhash_xx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash-LSH in the PRODUCTION hash mode (xxhash64 — JVM-native,
-    no portable SQL twin, hence rows-only): benched alongside the
-    md5-verified `dedup_minhash` so both the verified and the fast path
-    have recorded numbers; the two modes share every plan stage."""
-    from frogocr_spark.operators.dedup import minhash_lsh_pairs
-    docs = _read(spark, sf_dir, "documents")
-    return minhash_lsh_pairs(docs, "doc_id", "text",
-                             num_hashes=32, bands=4, threshold=0.5) \
         .select("id_a", "id_b", F.round("est_jaccard", 6).alias("est_jaccard"))
 
 
@@ -684,19 +551,6 @@ def _q_sim_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _read(spark, sf_dir, "embeddings")
     queries = emb.where("vec_id < 10")
     out = cosine_topk_ivf(emb, queries, k=5, n_clusters=32, nprobe=32,
-                          rank_round=4)
-    return out.select("query_id", "neighbor_id",
-                      F.round("cosine", 4).alias("cosine"))
-
-
-def _q_sim_cosine_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN, approximate partial-probe configuration (nprobe=8 of 32
-    cells) — approximate by construction, so rows-only here; recall vs
-    brute force is tested in tests/test_similarity.py."""
-    from frogocr_spark.operators.similarity import cosine_topk_ivf
-    emb = _read(spark, sf_dir, "embeddings")
-    queries = emb.where("vec_id < 10")
-    out = cosine_topk_ivf(emb, queries, k=5, n_clusters=32, nprobe=8,
                           rank_round=4)
     return out.select("query_id", "neighbor_id",
                       F.round("cosine", 4).alias("cosine"))
@@ -961,202 +815,6 @@ def _q_multimodal_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                       .alias("f0"))
 
 
-def _q_rep_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-family within-document repetition signals (dup-line
-    fraction, top-bigram fraction) — relational formulation so the
-    DuckDB oracle recomputes every aggregate
-    (operators/textstats.repetition_stats)."""
-    from frogocr_spark.operators.textstats import repetition_stats
-    docs = _read_split(spark, sf_dir, "documents")
-    return repetition_stats(docs).select(
-        "doc_id", F.col("n_lines").cast("long").alias("n_lines"),
-        "dup_line_frac", "top_2gram_frac")
-
-
-def _q_seq_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-stream sequence packing for pretraining layout: docs
-    concatenated in doc_id order, chunked into capacity-1024 sequences
-    via the scale-safe global prefix sum
-    (operators/ranking.global_cumsum — range partition + per-partition
-    running sum + broadcast offsets; no single-partition window)."""
-    from frogocr_spark.operators.ranking import pack_sequences
-    from frogocr_spark.operators.textstats import token_count
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", token_count(F.col("text")).alias("n_tok"))
-    return pack_sequences(docs, ["doc_id"], "n_tok", capacity=1024) \
-        .select("doc_id", "n_tok", "seq_id", "seq_offset")
-
-
-def _q_strat_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified downsample: 20 docs per language
-    stratum, picked by smallest md5(doc_id) — seedless and
-    engine-portable, so the oracle selects the identical rows
-    (operators/textstats.stratified_sample)."""
-    from frogocr_spark.operators.textstats import (language_id,
-                                                   stratified_sample)
-    docs = _read(spark, sf_dir, "documents") \
-        .withColumn("lang_id", language_id(F.col("text")))
-    return stratified_sample(docs, ["lang_id"], 20) \
-        .select("doc_id", "lang_id")
-
-
-def _q_xdoc_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document repeated 8-gram detection (substring-dedup
-    candidate generator): every word 8-gram appearing in >= 2 distinct
-    documents with its document frequency
-    (operators/textstats.cross_doc_ngrams)."""
-    from frogocr_spark.operators.textstats import cross_doc_ngrams
-    docs = _read_split(spark, sf_dir, "documents")
-    return cross_doc_ngrams(docs, n=8, min_docs=2)
-
-
-def _q_dup_gram_frac(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc substring-duplication fraction: share of each document's
-    distinct word 8-grams occurring in >= 2 documents — the resolution
-    side of xdoc_ngrams (operators/textstats.dup_gram_fraction)."""
-    from frogocr_spark.operators.textstats import dup_gram_fraction
-    docs = _read_split(spark, sf_dir, "documents")
-    return dup_gram_fraction(docs, n=8, min_docs=2)
-
-
-def _q_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benchmark decontamination: deterministic eval split
-    (doc_id % 97 == 0), candidates checked for verbatim 8-gram overlap
-    against the BROADCAST eval gram set — the corpus side is never
-    shuffled (operators/textstats.decontaminate)."""
-    from frogocr_spark.operators.textstats import decontaminate
-    docs = _read_split(spark, sf_dir, "documents")
-    eval_df = docs.where(F.col("doc_id") % 97 == 0)
-    cand = docs.where(F.col("doc_id") % 97 != 0)
-    return decontaminate(cand, eval_df, n=8)
-
-
-def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PII redaction (training-data hygiene): the corpus carries no PII,
-    so both sides deterministically augment text (emails on doc_id%7,
-    phone runs on doc_id%11) before the scrub — the byte-compared
-    `scrubbed` column verifies the Java-regex / RE2 replace semantics
-    agree (operators/textstats.redact_pii)."""
-    from frogocr_spark.operators.textstats import redact_pii
-    docs = _read_split(spark, sf_dir, "documents")
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(" contact user"),
-                            F.col("doc_id").cast("string"),
-                            F.lit("@example.org now"))).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 11 == 0,
-                   F.lit(" call +47 22 11 33 55 ok")).otherwise(F.lit("")),
-        ).alias("text"))
-    return redact_pii(aug).select("doc_id", "n_emails", "n_phones",
-                                  "scrubbed")
-
-
-def _q_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking: sliding (window=32, stride=16) token
-    windows per document — pure sequence+explode inside the map stage,
-    no shuffle (operators/textstats.chunk_windows)."""
-    from frogocr_spark.operators.textstats import chunk_windows, token_count
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", token_count(F.col("text")).alias("n_tok"))
-    return chunk_windows(docs, window=32, stride=16)
-
-
-def _q_vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus vocabulary: top-200 whitespace tokens by total count,
-    deterministic (count desc, token asc) tiebreak; partial top-k cut —
-    the token relation is never sorted in one task
-    (operators/textstats.top_vocabulary)."""
-    from frogocr_spark.operators.textstats import top_vocabulary
-    docs = _read(spark, sf_dir, "documents")
-    return top_vocabulary(docs, 200).select(
-        "token", F.col("t_count").cast("long").alias("t_count"))
-
-
-def _q_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Common-token quality score: per-doc fraction of tokens inside
-    the corpus top-100 vocabulary — the integer-exact unigram-LM
-    stand-in.  The vocabulary is bounded (top-k) so it ships as a
-    literal into one array-filter expression: the corpus side is pure
-    map-stage column math, never shuffled
-    (operators/textstats.in_vocab_ratio)."""
-    from frogocr_spark.operators.textstats import (in_vocab_ratio,
-                                                   top_vocabulary)
-    docs = _read(spark, sf_dir, "documents")
-    vocab = [r["token"] for r in top_vocabulary(docs, 100).collect()]
-    return in_vocab_ratio(docs, vocab)
-
-
-def _q_mix_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature-scaled corpus mixing: per-source cap =
-    ceil(sqrt(stratum size)), deterministic smallest-md5 pick — the
-    sqrt-rebalance for heavy-tailed domain mixes
-    (operators/textstats.mix_sample)."""
-    from frogocr_spark.operators.textstats import mix_sample
-    docs = _read(spark, sf_dir, "documents")
-    return mix_sample(docs, ["source"]).select(
-        "doc_id", "source", F.col("stratum_cap").cast("int")
-        .alias("stratum_cap"))
-
-
-def _q_source_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source characteristic terms: top-5 tokens of each source by
-    (count desc, token asc) — grouped partial top-k, no group ever
-    sorts in one task (operators/textstats.group_top_terms)."""
-    from frogocr_spark.operators.textstats import group_top_terms
-    docs = _read(spark, sf_dir, "documents")
-    return group_top_terms(docs, "source", 5).select(
-        "source", "token", F.col("t_count").cast("long").alias("t_count"),
-        "rank")
-
-
-def _q_url_canon(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL canonicalization + URL-level dedup (web-corpus hygiene): the
-    corpus carries no URLs, so both sides deterministically synthesize
-    messy variants (www / scheme+host case / default port /
-    trailing-slash / fragment / tracking params; five docs share each
-    base URL — three collapse under canonicalization, the http variant
-    and the non-default-:8080 variant stay distinct origins), then
-    canonicalize (functions/urls.canonical_url — pure parse_url +
-    array column expressions, map-only on the corpus side) and flag
-    the min-doc_id winner per canonical group."""
-    from frogocr_spark.functions.urls import canonical_url, url_domain
-    from pyspark.sql import Window
-    docs = _read(spark, sf_dir, "documents")
-    base = F.expr("doc_id DIV 5")
-    h = (base % 7).cast("string")
-    b = base.cast("string")
-    host = F.concat(F.lit("w"), h, F.lit(".example.com"))
-    url = (F.when(F.col("doc_id") % 5 == 0,
-                  F.concat(F.lit("https://www."), host, F.lit("/docs/"), b,
-                           F.lit("/?id="), b, F.lit("&utm_source=feed")))
-           .when(F.col("doc_id") % 5 == 1,
-                 # case-noise on scheme+host ONLY: the path is
-                 # case-significant and must stay lowercase to collapse
-                 F.concat(F.upper(F.concat(F.lit("https://www."), host)),
-                          F.lit(":443/docs/"), b,
-                          F.lit("?utm_campaign=x&id="), b))
-           .when(F.col("doc_id") % 5 == 2,
-                 F.concat(F.lit("https://"), host, F.lit("/docs/"), b,
-                          F.lit("?id="), b, F.lit("#sec")))
-           .when(F.col("doc_id") % 5 == 3,
-                 F.concat(F.lit("http://"), host, F.lit("/docs/"), b,
-                          F.lit("?id="), b, F.lit("&gclid=123")))
-           .otherwise(
-                 F.concat(F.lit("https://"), host, F.lit(":8080/docs/"), b,
-                          F.lit("?id="), b)))
-    aug = docs.select("doc_id", url.alias("url"))
-    out = aug.select(
-        "doc_id",
-        canonical_url(F.col("url")).alias("canon_url"),
-        url_domain(F.col("url")).alias("domain"))
-    w = Window.partitionBy("canon_url")
-    return out.withColumn(
-        "keep", (F.col("doc_id") == F.min("doc_id").over(w)))
-
-
 def _q_extract_tooljson_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The REAL mapInArrow extractor over tool_json payloads — the
     second extraction class hash-checked end to end (extract_plain_docs
@@ -1361,4116 +1019,17 @@ def _q_extract_twopass_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.try_element_at("spans", F.lit(-1))["end"].alias("last_end"))
 
 
-def _q_dedup_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental near-dup detection: the increment (doc_id % 10 == 0)
-    LSH-banded against the base — new×new and new×base candidates
-    only, base×base NEVER generated (the daily-increment shape: work
-    proportional to the increment, not the corpus).  Same md5-mode
-    signature family as dedup_minhash so DuckDB recomputes the whole
-    pipeline (operators/dedup.minhash_lsh_pairs_incremental)."""
-    from frogocr_spark.operators.dedup import minhash_lsh_pairs_incremental
-    docs = _read(spark, sf_dir, "documents")
-    new = docs.where(F.col("doc_id") % 10 == 0)
-    base = docs.where(F.col("doc_id") % 10 != 0)
-    out = minhash_lsh_pairs_incremental(
-        new, base, "doc_id", "text",
-        num_hashes=32, bands=4, threshold=0.5, hash_fn="md5")
-    return out.select("id_a", "id_b",
-                      F.round("est_jaccard", 6).alias("est_jaccard"))
-
-
-def _q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic train/val/test split by md5(doc_id) hex prefix —
-    seedless, engine-portable, stable under appends/repartition; pure
-    map-stage (operators/textstats.hash_split)."""
-    from frogocr_spark.operators.textstats import hash_split
-    docs = _read(spark, sf_dir, "documents")
-    return hash_split(docs).select("doc_id", "split")
-
-
-def _q_text_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unicode NFC normalization + control/whitespace cleanup (the
-    pre-dedup canonical form).  The corpus is ASCII, so both sides
-    deterministically append a decomposed accent (e + U+0301), a C0
-    control and a whitespace run; the byte-compared ``norm_text``
-    column verifies pandas NFC == DuckDB nfc_normalize plus the
-    Java/RE2 cleanup agreement (operators/textstats.normalize_text)."""
-    from frogocr_spark.operators.textstats import normalize_text
-    docs = _read(spark, sf_dir, "documents")
-    aug = docs.select(
-        "doc_id",
-        F.concat(F.col("text"), F.lit(" caf"), F.lit("e"),
-                 F.lit("́"), F.lit(" x"), F.lit("\x07"),
-                 F.lit("y  z")).alias("text"))
-    return normalize_text(aug).select("doc_id", "norm_text")
-
-
-def _q_c4_line_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style line-level cleaning: the corpus is single-line, so both
-    sides deterministically assemble multi-line documents (good
-    sentences + a JS/cookie boilerplate line + a too-short line + a
-    brace line on doc_id%3 + an unterminated line on doc_id%2 + a bonus
-    kept line on doc_id%5); the byte-compared ``kept_text`` verifies
-    the per-line gates end-to-end (operators/textstats.line_filters —
-    pure map stage)."""
-    from frogocr_spark.operators.textstats import line_filters
-    docs = _read_split(spark, sf_dir, "documents")
-    nl = "\n"
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"), F.lit("." + nl),
-            F.lit("Enable javascript and cookies to continue" + nl),
-            F.lit("tiny line" + nl),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit('{"nav": 1}' + nl)).otherwise(F.lit("")),
-            F.lit("This is a complete sentence number "),
-            F.col("doc_id").cast("string"), F.lit("."),
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.lit(nl + "no terminal punctuation here"))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.lit(nl + "Another good sentence appears here!"))
-            .otherwise(F.lit("")),
-        ).alias("text"))
-    return line_filters(aug).select(
-        "doc_id", "n_lines", "n_kept", "line_kept_frac", "kept_text")
-
-
-def _q_bloom_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bloom-filter decontamination — the 100 TB shape of `decontam`:
-    the eval split's 8-gram set is distilled into a 64 Kibit Bloom
-    filter (distributed build, driver traffic bounded by m_bits) that
-    ships as a string literal inside one column expression, so the
-    corpus-side probe is a PURE MAP stage: no explode, no join, no
-    shuffle (plan_audit check 13).  No false negatives by construction
-    (pytest quantifies FPs vs the exact semi-join)
-    (operators/textstats.bloom_build + bloom_decontaminate).
-
-    min_parallelism: the local test table is ONE parquet row group —
-    unsplittable by any maxPartitionBytes — while the probe is ~3
-    substring bit-tests per distinct gram; the defensive round-robin
-    repartition before the compute-heavy map costs one exchange of the
-    raw rows and buys full-core execution (30x here).  A production
-    corpus with normal row-group counts skips it (the operator only
-    repartitions when the scan yields fewer partitions)."""
-    from frogocr_spark.operators.textstats import (bloom_build,
-                                                   bloom_decontaminate)
-    docs = _read(spark, sf_dir, "documents")
-    eval_df = docs.where(F.col("doc_id") % 97 == 0)
-    cand = docs.where(F.col("doc_id") % 97 != 0)
-    bloom = bloom_build(eval_df, n=8, m_bits=65536)
-    return bloom_decontaminate(
-        cand, bloom, n=8,
-        min_parallelism=spark.sparkContext.defaultParallelism)
-
-
-def _q_event_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user ordered event stitching — the 'stable turn ordering'
-    aggregation shape (north rule): collect_list → array_sort on
-    (ts, event_id) struct → transform/array_join reassembles each
-    user's event-type sequence deterministically regardless of
-    partitioning; one keyed shuffle, map-side combined counts."""
-    ev = _read(spark, sf_dir, "events")
-    ordered = F.array_sort(F.collect_list(
-        F.struct(F.col("ts"), F.col("event_id"), F.col("event_type"))))
-    return ev.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.array_join(F.transform(ordered, lambda x: x["event_type"]),
-                     ">").alias("replay"),
-        F.unix_micros(F.min("ts").cast("timestamp")).alias("first_us"),
-        F.unix_micros(F.max("ts").cast("timestamp")).alias("last_us"))
-
-
-def _q_w_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead window family over the per-user event stream: exact
-    integer-microsecond gap to the previous event and the next event's
-    type under the total order (ts, event_id) — the turn-latency shape
-    for transcripts; single keyed window, no global sort."""
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # session tz is UTC (frogocr_spark.session), so the NTZ→TZ cast is
-    # identity and unix_micros matches DuckDB's epoch_us on naive ts
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    return ev.select(
-        "event_id", "user_id",
-        F.coalesce(us - F.lag(us).over(w), F.lit(-1)).alias("gap_us"),
-        F.coalesce(F.lead("event_type").over(w), F.lit(""))
-        .alias("next_type"))
-
-
-def _q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Substring-level dedup resolution: duplicated word 8-grams
-    (appearing in >= 2 docs) are cut out of every document except the
-    smallest containing doc_id; kept tokens are reassembled in order —
-    the fix for what whole-document minhash misses
-    (operators/textstats.substring_dedup_cut; every stage keyed on the
-    gram text or (doc, pos), no cartesian)."""
-    from frogocr_spark.operators.textstats import substring_dedup_cut
-    docs = _read_split(spark, sf_dir, "documents")
-    return substring_dedup_cut(docs, n=8, min_docs=2)
-
-
-def _q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic HyperLogLog distinct-count sketch (p=8, md5-based
-    so DuckDB recomputes register values and estimate bit-for-bit) next
-    to the exact count — the 100 TB shape of COUNT(DISTINCT): the
-    shuffle carries <= 256 register rows per group instead of the key
-    universe (operators/sketches.hll_estimate)."""
-    from frogocr_spark.operators.sketches import hll_estimate
-    ev = _read(spark, sf_dir, "events")
-    exact = ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("n_exact"))
-    est = hll_estimate(ev, ["event_type"], "user_id", p=8)
-    return exact.join(est, "event_type")
-
-
-def _q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Inverted-index build: token -> document frequency + the 50
-    smallest containing doc ids (sorted; min_df=2) — retrieval surface
-    for corpus audits.  Posting cap via two-level partial top-k so a
-    stopword's postings never sort in one task
-    (operators/textstats.inverted_index)."""
-    from frogocr_spark.operators.textstats import inverted_index
-    docs = _read(spark, sf_dir, "documents")
-    idx = inverted_index(docs, k_postings=50, min_df=2)
-    return idx.select("token", "df",
-                      F.array_join("postings", ",").alias("postings"))
-
-
-def _q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document top-5 TF-IDF terms (reciprocal-frequency idf:
-    score = tf*N/df — ONE IEEE division of exact integers, so the
-    rank order is engine-portable; rank over the rounded score per the
-    cosine-top-k lesson) (operators/textstats.tfidf_top_terms)."""
-    from frogocr_spark.operators.textstats import tfidf_top_terms
-    docs = _read(spark, sf_dir, "documents")
-    return tfidf_top_terms(docs, k=5)
-
-
-def _q_ngram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bigram LM table: per head token the top-3 continuations by count
-    with exact integer-ratio conditional probability — grouped partial
-    top-k, a stopword head never sorts in one task
-    (operators/textstats.bigram_top_continuations)."""
-    from frogocr_spark.operators.textstats import bigram_top_continuations
-    docs = _read_split(spark, sf_dir, "documents")
-    return bigram_top_continuations(docs, k=3)
-
-
-def _q_emb_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector min-max int8 quantization of the embedding column —
-    pure map-stage column expressions (array_min/max + transform), the
-    float widening and +0.5-floor tie rule chosen so every engine
-    computes identical integers
-    (operators/similarity.quantize_minmax_int8)."""
-    from frogocr_spark.operators.similarity import quantize_minmax_int8
-    emb = _read(spark, sf_dir, "embeddings")
-    q = quantize_minmax_int8(emb)
-    return q.select("vec_id", "lo", "hi",
-                    F.array_join("qvec", ",").alias("qstr"))
-
-
-def _q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank (3 iterations, damping 85/100, scale
-    10^12) over the supplier->customer shipment graph (distinct edges
-    from lineitem x orders).  All-integer power iteration: order-
-    independent sums, so the scores hash-match any engine; one keyed
-    join + one map-side-combined agg per iteration
-    (operators/graph.pagerank_int)."""
-    from frogocr_spark.operators.graph import pagerank_int
-    li = _read(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-             .select(F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-                     .alias("src"),
-                     F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-                     .alias("dst"))
-             .distinct())
-    return pagerank_int(edges, iters=3)
-
-
-def _q_cms_heavy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min-sketch heavy hitters: tokens whose CMS estimate (d=4,
-    w=512, md5 hashes) reaches 0.1% of the token stream, with the exact
-    count alongside.  The sketch is d*w cells regardless of vocabulary
-    size — broadcast into the probe (operators/sketches.cms_build)."""
-    from frogocr_spark.operators.sketches import cms_build, cms_estimate
-    docs = _read_split(spark, sf_dir, "documents")
-    toks = (docs.select(F.explode(F.split(F.trim("text"), r"\s+"))
-                        .alias("token"))
-            .filter(F.col("token") != ""))
-    sketch = cms_build(toks, "token", d=4, w=512)
-    exact = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n_true"))
-    est = cms_estimate(sketch, exact.select("token"), "token", d=4, w=512)
-    n_tok = toks.agg(F.count(F.lit(1)).alias("n_tok"))
-    return (est.join(exact, "token").crossJoin(F.broadcast(n_tok))
-            .filter(F.col("cms_est") * 1000 >= F.col("n_tok"))
-            .select("token", F.col("cms_est").cast("long").alias("cms_est"),
-                    F.col("n_true").cast("long").alias("n_true")))
-
-
-def _q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer training, 8 merges: the corpus
-    collapses to (word, cnt) once (the only corpus-wide shuffle); the
-    merge iterations then run on the bounded vocabulary — distributed
-    rounds (pair-count agg + TakeOrdered top-1 + greedy-fold map) above
-    the 200k-word driver budget, a bit-identical local loop below it
-    (the dup_clusters_star hybrid-finish pattern; differential-tested).
-    The oracle re-runs the identical 8-iteration chain in one WITH
-    (operators/bpe.bpe_train)."""
-    from frogocr_spark.operators.bpe import bpe_train
-    docs = _read(spark, sf_dir, "documents")
-    merges, _ = bpe_train(docs, n_merges=8)
-    return merges
-
-
-def _q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered event funnel signup -> view -> click -> purchase: users
-    reaching each step with each later step STRICTLY after the
-    previous one.  One keyed shuffle + an array fold; the oracle uses
-    the classic K-join formulation, so the hash match also proves the
-    fold == the K-join (operators/analytics.funnel_counts)."""
-    from frogocr_spark.operators.analytics import funnel_counts
-    ev = _read(spark, sf_dir, "events")
-    return funnel_counts(ev, ["signup", "view", "click", "purchase"])
-
-
-def _q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention matrix over integer epoch-weeks (no
-    calendar week rules): first-event agg + one user-keyed join back +
-    distinct rollup (operators/analytics.cohort_retention)."""
-    from frogocr_spark.operators.analytics import cohort_retention
-    ev = _read(spark, sf_dir, "events")
-    return cohort_retention(ev)
-
-
-def _q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-range histogram of event value per type (10 buckets of
-    width 50, integer floor bucketing) — one keyed aggregation
-    (operators/analytics.histogram_fixed)."""
-    from frogocr_spark.operators.analytics import histogram_fixed
-    ev = _read(spark, sf_dir, "events")
-    return histogram_fixed(ev, "value", "event_type",
-                           width=50.0, n_buckets=10)
-
-
-def _q_decimal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-returnflag mean/variance/correlation of (quantity, price
-    cents) with exact DECIMAL(38,0) second-moment sums — no float-SUM
-    order ambiguity at ANY row count; the float finish is a fixed tree
-    of correctly-rounded IEEE ops (operators/analytics
-    .moment_stats_exact)."""
-    from frogocr_spark.operators.analytics import moment_stats_exact
-    li = _read(spark, sf_dir, "lineitem")
-    return moment_stats_exact(
-        li, F.col("l_quantity"),
-        F.round(F.col("l_extendedprice") * 100, 0), "l_returnflag")
-
-
-def _q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) layout assignment over (user_id, floor(value))
-    — the OPTIMIZE ... ZORDER BY primitive: exact integer bit
-    interleave (pure map stage) + equal-width bucketing from a 1-row
-    broadcast min-max (operators/layout.zorder_buckets); the write-side
-    twin zorder_write is footer-stat-verified in pytest."""
-    from frogocr_spark.operators.layout import zorder_buckets
-    ev = (_read(spark, sf_dir, "events")
-          .select("event_id", F.col("user_id").alias("x"),
-                  F.floor(F.col("value")).cast("long").alias("y")))
-    return (zorder_buckets(ev, "x", "y", n_buckets=16, bits=16)
-            .select("event_id", "zval", "zbucket"))
-
-
-def _q_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass column profiler over orders (count / nulls / exact
-    distinct / native-typed min-max), unpivoted without a collect; the
-    oracle is the classic per-column UNION ALL — the hash match proves
-    the one-pass Expand plan equivalent (operators/profile)."""
-    from frogocr_spark.operators.profile import profile_table
-    o = _read(spark, sf_dir, "orders")
-    return profile_table(o, ["o_orderkey", "o_custkey", "o_orderstatus",
-                             "o_orderpriority"])
-
-
-def _q_tpch_q2_mincost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q2 shape (correlated min subquery), adapted to the
-    available tables: per part supplied by a EUROPE supplier, the rows
-    achieving the minimum price.  Spark-first DECORRELATION: one
-    map-side-combined groupBy-min + an equi-join back on (part, price)
-    — never a per-row subquery; the oracle keeps the LITERAL correlated
-    subquery, so the hash match proves the rewrite.  Dimensions
-    (supplier×nation×region, part) broadcast; the fact table shuffles
-    once on the part key."""
-    li = _read(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice")
-    sup = _read(spark, sf_dir, "supplier")
-    nat = _read(spark, sf_dir, "nation")
-    reg = _read(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    part = _read(spark, sf_dir, "part").select("p_partkey", "p_type")
-    eu = (sup.join(nat, sup["s_nationkey"] == nat["n_nationkey"])
-          .join(reg, nat["n_regionkey"] == reg["r_regionkey"])
-          .select("s_suppkey", "s_name", "n_name"))
-    supply = li.join(F.broadcast(eu),
-                     li["l_suppkey"] == eu["s_suppkey"])
-    mins = (supply.groupBy("l_partkey")
-            .agg(F.min("l_extendedprice").alias("min_price")))
-    best = supply.join(
-        mins, (supply["l_partkey"] == mins["l_partkey"])
-        & (supply["l_extendedprice"] == mins["min_price"])).drop(
-        mins["l_partkey"])
-    return (best.join(F.broadcast(part),
-                      best["l_partkey"] == part["p_partkey"])
-            .select("p_partkey", "p_type", "s_name", "n_name",
-                    "min_price"))
-
-
-def _q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON column surface: the event ``props`` payload parsed BOTH
-    ways Spark offers — path extraction (``get_json_object``, the
-    schema-less probe) and schema'd parsing (``from_json`` -> struct
-    field) — emitted side by side so the hash check also pins the two
-    APIs as agreeing.  Pure map stage; corrupt-input semantics differ
-    between engines (Spark -> NULL, DuckDB -> error) and the corpus is
-    well-formed by construction, which the n_bad gate makes explicit."""
-    from pyspark.sql.types import IntegerType, StructField as SF_
-    from pyspark.sql.types import StructType as ST_
-    ev = _read(spark, sf_dir, "events")
-    k_gjo = F.get_json_object("props", "$.k").cast("int")
-    k_fj = F.from_json(F.col("props"),
-                       ST_([SF_("k", IntegerType())]))["k"]
-    return (ev.select("event_id", "event_type",
-                      k_gjo.alias("k_gjo"), k_fj.alias("k_fj"))
-            .filter(F.col("k_gjo") >= 90))
-
-
-def _q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup semantic near-dup pairs: deterministic smallest-md5
-    seed pick (bounded TakeOrdered), LITERAL-seed argmax assignment
-    (pure map stage — corpus never shuffled to get cluster ids), then
-    within-cluster exact cosine with the threshold applied to the
-    ROUNDED value (ulp-robust, the sim_cosine_lsh lesson).  The oracle
-    recomputes seeds, assignments and pairs from scratch in SQL
-    (operators/similarity.semdedup_pairs).
-
-    n_seeds SCALES with the corpus — ``max(10, n // 200)``, mirrored
-    by a scalar-subquery LIMIT in the oracle (r5 sf10 finding): a
-    fixed seed count makes the within-cluster self-join quadratic in
-    the scale-up factor (×100 corpus → ×10⁴ pair work — observed
-    hanging the certification run), while constant ~200-vector
-    clusters keep Σ cluster_size² linear in n.  Scaling cluster count
-    with corpus size is SemDeDup's own design point (the operator
-    docstring has said so since r3; now the contract practices it).
-    The O(1) count() action prices the corpus before planning — the
-    same count a production job does to size its seed set."""
-    from frogocr_spark.operators.similarity import semdedup_pairs
-    emb = _read(spark, sf_dir, "embeddings")
-    n_seeds = max(10, emb.count() // 200)
-    return semdedup_pairs(emb, n_seeds=n_seeds, threshold=0.4)
-
-
-def _q_lm_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-LM quality gate: top-200 corpus bigram table (bounded,
-    ships as a literal) scores every doc by its known-bigram fraction;
-    the keep cut is a comparison of exact integers
-    (operators/textstats.known_bigram_filter)."""
-    from frogocr_spark.operators.textstats import known_bigram_filter
-    docs = _read_split(spark, sf_dir, "documents")
-    return known_bigram_filter(docs, lm_size=200, min_ratio_millis=500)
-
-
-def _q_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric containment pairs |A∩B|/|A| ≥ 0.5 over distinct
-    8-grams with the df ≤ 64 boilerplate cap applied BEFORE the
-    candidate join — quote/subset detection Jaccard structurally
-    misses (operators/textstats.containment_pairs)."""
-    from frogocr_spark.operators.textstats import containment_pairs
-    docs = _read_split(spark, sf_dir, "documents")
-    return containment_pairs(docs, ngram=8, threshold_millis=500,
-                             max_df=64)
-
-
-def _q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type 3σ outliers with the z-test restated over exact
-    DECIMAL(38,0) integers — (n·x−Σx)² > 9·(n·Σx²−(Σx)²) — so the
-    decision is order-independent and engine-exact; moments table
-    broadcast back, flag is map-stage column math
-    (operators/analytics.zscore_outliers)."""
-    from frogocr_spark.operators.analytics import zscore_outliers
-    ev = _read(spark, sf_dir, "events")
-    return zscore_outliers(ev, F.round(F.col("value") * 100, 0),
-                           "event_type", "event_id", z=3)
-
-
-# ONE ANSI string executed verbatim by BOTH engines: Spark runs it
-# through spark.sql() (the SQL front-end produces the same Catalyst
-# plan the DataFrame API would), DuckDB runs it as the oracle — a
-# single source of truth, so the two sides CANNOT drift.  Aggregation
-# is integer-exact (TPC-H quantities are whole numbers; the BIGINT cast
-# makes the sum order-independent) and the top-k tie-breaks on the key.
-SQL_SURFACE_TEXT = """
-WITH t AS (
-    SELECT o_custkey AS cust, o_orderkey AS okey,
-           CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty
-    FROM orders JOIN lineitem ON l_orderkey = o_orderkey
-    GROUP BY o_custkey, o_orderkey
-)
-SELECT cust, okey, qty, rk FROM (
-    SELECT cust, okey, qty,
-           ROW_NUMBER() OVER (PARTITION BY cust
-                              ORDER BY qty DESC, okey) AS rk
-    FROM t
-) ranked WHERE rk <= 2
-"""
-
-
-def _q_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL front-end end-to-end: temp views + ``spark.sql`` running
-    the EXACT text the DuckDB oracle runs (``SQL_SURFACE_TEXT`` — one
-    string, two engines).  Per-customer top-2 orders by total quantity:
-    join → keyed agg (map-side combined) → per-key rank window; no
-    global sort."""
-    _read(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(SQL_SURFACE_TEXT)
-
-
-def _q_bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenizer-apply face of BPE training: the word vocabulary
-    AFTER all 8 merges (word -> its merged symbol sequence), i.e. the
-    lookup table a corpus encoder joins against.  Same train chain as
-    bpe_merges (hybrid driver finish; operators/bpe.bpe_train); the
-    oracle re-runs the identical 8 iterations and emits the final
-    symbolized vocabulary."""
-    from frogocr_spark.operators.bpe import bpe_train
-    docs = _read(spark, sf_dir, "documents")
-    _, vocab = bpe_train(docs, n_merges=8)
-    return vocab.select("word", F.col("cnt").cast("long").alias("cnt"),
-                        F.concat_ws(" ", "syms").alias("tokens"))
-
-
-def _q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic weight-biased top-k sample (priority = md5-derived
-    60-bit integer / weight — ONE correctly-rounded IEEE division on
-    exact integer inputs, so the order is engine-exact; the A-ES
-    u^(1/w) form needs pow/ln, which are not); TakeOrdered, never a
-    global sort (operators/textstats.weighted_sample)."""
-    from frogocr_spark.operators.textstats import weighted_sample
-    docs = _read(spark, sf_dir, "documents")
-    return weighted_sample(docs, k=50, weight_col="n_chars") \
-        .select("doc_id", "n_chars", "priority")
-
-
-def _q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-node triangle counts (local clustering-coefficient numerator)
-    over the co-event graph — users linked when they act inside the
-    same 1-minute window (the co-occurrence graph every social/abuse
-    analysis starts from; the co-supply alternative is near-COMPLETE on
-    this synthetic universe — every part has ~30 suppliers — which
-    makes triangle output cubic by construction, a property of that
-    graph, not of the operator).  Degree-oriented enumeration: each
-    triangle found exactly once, hub fanout bounded by arboricity
-    (operators/graph.triangle_counts); the oracle recomputes the
-    textbook definition, so the hash match proves the oriented plan
-    equivalent."""
-    from frogocr_spark.operators.graph import triangle_counts
-    b = (_read(spark, sf_dir, "events")
-         .select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                        "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    return triangle_counts(edges)
-
-
-def _q_emb_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label vector centroid (the k-means update / class-prototype
-    primitive) made engine-exact: int8-quantized components summed
-    element-wise as int64 — order-independent where a float vector mean
-    never is (operators/similarity.quantized_centroids).  The exact sum
-    vector is emitted (comma-joined; the float mean finish is derivable
-    as sum/n and stays out of the hash)."""
-    from frogocr_spark.operators.similarity import quantized_centroids
-    emb = _read(spark, sf_dir, "embeddings")
-    out = quantized_centroids(emb, "label")
-    return out.select("label", F.col("n").cast("long").alias("n"),
-                      F.concat_ws(",", "centroid_sum").alias("sum_str"))
-
-
-def _q_fuzzy_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Record linkage: blocked edit-distance self-join over the corpus
-    vocabulary (every word pair within Levenshtein 2).  Blocking is
-    COMPLETE — |len(a)−len(b)| ≤ d is necessary for lev ≤ d, so the
-    asymmetric length-key expansion loses no pairs — and the oracle is
-    the textbook all-pairs formulation, so the hash match proves the
-    blocked plan equivalent (operators/joins.fuzzy_self_join_blocked)."""
-    from frogocr_spark.operators.dedup import _shingle_expr
-    from frogocr_spark.operators.joins import fuzzy_self_join_blocked
-    words = (_read(spark, sf_dir, "documents")
-             .select(F.explode(_shingle_expr("text", 1, None))
-                     .alias("w"))
-             .dropDuplicates(["w"]))
-    return fuzzy_self_join_blocked(words, "w", "w", max_dist=2)
-
-
-def _q_hll_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sketch × event time: per-hour per-type distinct users via the
-    same deterministic HLL as hll_distinct, keyed on an integer
-    epoch-hour window (unix_micros DIV 3600000000 — the session-UTC
-    identity on naive timestamps, == DuckDB epoch_us; no calendar or
-    locale rules).  The dashboard shape of streaming distinct
-    counting; state per (window, type) is ≤ m registers regardless of
-    traffic (operators/sketches.hll_estimate)."""
-    from frogocr_spark.operators.sketches import hll_estimate
-    ev = (_read(spark, sf_dir, "events")
-          .withColumn("win", F.expr(
-              "unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000")))
-    exact = ev.groupBy("win", "event_type").agg(
-        F.countDistinct("user_id").cast("long").alias("n_exact"))
-    est = hll_estimate(ev, ["win", "event_type"], "user_id", p=8)
-    return exact.join(est, ["win", "event_type"])
-
-
-def _q_entity_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end entity resolution — the capstone composition: blocked
-    fuzzy matching (lev ≤ 2 vocabulary pairs) → star-contraction
-    connected components → canonical form per entity cluster (the
-    lexicographically-smallest member; word ids are ascending-order
-    dense ranks, so min id ≡ min word and the oracle's recursive-CTE
-    min-label closure names the identical canonical).  Words in no pair
-    canonicalize to themselves.  The hash match verifies matcher,
-    clustering AND resolution in one row set."""
-    from frogocr_spark.operators.dedup import _shingle_expr, dup_clusters_star
-    from frogocr_spark.operators.joins import fuzzy_self_join_blocked
-    from frogocr_spark.operators.ranking import global_rank
-
-    words = (_read(spark, sf_dir, "documents")
-             .select(F.explode(_shingle_expr("text", 1, None)).alias("w"))
-             .dropDuplicates(["w"]))
-    ranked = global_rank(words, ["w"], rank_col="wid")
-    pairs = (fuzzy_self_join_blocked(ranked, "w", "wid", max_dist=2)
-             .select("id_a", "id_b"))
-    clusters = dup_clusters_star(pairs)       # (doc_id, cluster_id) = ids
-    ids = ranked.select(F.col("wid").alias("doc_id"), "w")
-    canon = ranked.select(F.col("wid").alias("cluster_id"),
-                          F.col("w").alias("canonical"))
-    resolved = (ids.join(clusters, "doc_id", "left")
-                .withColumn("cluster_id",
-                            F.coalesce("cluster_id", F.col("doc_id")))
-                .join(canon, "cluster_id"))
-    return resolved.select("w", "canonical")
-
-
-def _q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO (upsert) semantics as one anti-join + union: a CDC
-    batch of updates (every doc_id % 10 == 0, text uppercased, source
-    re-tagged) and inserts (doc_id % 10 == 3 cloned past 10M) applied
-    to the documents table (operators/tables.upsert; the crash-safe
-    snapshot twin is sources/catalog.Table.merge, pytest-covered)."""
-    from frogocr_spark.operators.tables import upsert
-    docs = _read(spark, sf_dir, "documents")
-    updates = (docs.where(F.col("doc_id") % 10 == 0)
-               .withColumn("text", F.upper(F.col("text")))
-               .withColumn("source", F.lit("cdc")))
-    inserts = (docs.where(F.col("doc_id") % 10 == 3)
-               .withColumn("doc_id", F.col("doc_id") + 10_000_000))
-    return upsert(docs, updates.unionByName(inserts), ["doc_id"])
-
-
-def _q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD type-2 dimension history from the append-only event log:
-    per user, consecutive repeats of event_type compress into versions
-    with [valid_from_us, valid_to_us) validity and a NULL-open current
-    version — the lakehouse dimension-history materialization, built
-    with two same-key windows instead of a MERGE loop
-    (operators/analytics.scd2_history)."""
-    from frogocr_spark.operators.analytics import scd2_history
-    ev = _read(spark, sf_dir, "events")
-    return scd2_history(ev, "user_id", "event_type")
-
-
-def _q_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hourly OHLC bars per event type: open/close picked by min_by/
-    max_by over the (unix_micros, event_id) total order in ONE keyed
-    aggregation (not the naive row_number-then-filter double shuffle);
-    the oracle uses the row_number formulation, so the hash match
-    proves the argmin/argmax plan equivalent
-    (operators/analytics.ohlc_bars)."""
-    from frogocr_spark.operators.analytics import ohlc_bars
-    ev = _read(spark, sf_dir, "events")
-    return ohlc_bars(ev, "event_type")
-
-
-def _q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user hourly grid densification with last-observation-
-    carried-forward fill — the resampling step before any windowed
-    model over an irregular stream: bucket pre-agg -> bounds ->
-    distributed sequence-explode grid -> one keyed left join + one
-    keyed running window (operators/analytics.gap_fill_locf)."""
-    from frogocr_spark.operators.analytics import gap_fill_locf
-    ev = _read(spark, sf_dir, "events")
-    return gap_fill_locf(ev, "user_id")
-
-
-def _q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted fact-to-dim join: events (5 distinct event_type
-    values — key cardinality far below task count, the skew class AQE's
-    byte-based split can't always see) joined to per-type totals on
-    (key, salt) with the dim replicated 8x and a deterministic
-    xxhash64(event_id) salt; shuffle_hash hint pins the non-broadcast
-    path so the salted shuffle is the demonstrated plan.  The oracle is
-    the PLAIN join, so the hash match proves salting a pure plan
-    transform (operators/skew.salted_equi_join)."""
-    from frogocr_spark.operators.skew import salted_equi_join
-    ev = _read(spark, sf_dir, "events")
-    dim = (ev.groupBy("event_type")
-           .agg(F.count(F.lit(1)).alias("n_type"),
-                F.sum(F.round(F.col("value") * 100, 0).cast("long"))
-                .alias("type_cents")))
-    fact = ev.select("event_id", "event_type",
-                     F.round(F.col("value") * 100, 0).cast("long")
-                     .alias("cents"))
-    return salted_equi_join(fact, dim, "event_type", 8,
-                            fact_salt_col="event_id")
-
-
-_KCORE_K = 8
-_KCORE_ROUNDS = 8
-
-
-def _q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (k=8) of the co-event graph (users sharing
-    a 1-minute window): iterative peeling of nodes with degree < k —
-    the community-density / spam-farm filter.  Fixed 8-round plan depth
-    (peeling is monotone, so extra rounds past the fixpoint are no-ops;
-    convergence within 8 is pytest-pinned on this corpus), matching the
-    oracle's unrolled 8-round CTE chain exactly — the hash match proves
-    the distributed peel (operators/graph.kcore)."""
-    from frogocr_spark.operators.graph import kcore
-    b = (_read(spark, sf_dir, "events")
-         .select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                        "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    return kcore(edges, _KCORE_K, rounds=_KCORE_ROUNDS)
-
-
-_PQ_M = 4
-_PQ_KSUB = 8
-
-
-def _q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization compression pass (Jégou et al. 2011): every
-    64-dim embedding shrinks to 4 codebook codes — per subspace, argmin
-    integer-exact L2 vs 8 LITERAL centroids (deterministic smallest-md5
-    seed pick, the SQL-reproducible stand-in for k-means).  A pure map
-    stage: the corpus is never shuffled/joined/exploded to get its
-    codes (operators/similarity.pq_fit/pq_codes)."""
-    from frogocr_spark.operators.similarity import pq_codes, pq_fit
-    emb = _read(spark, sf_dir, "embeddings")
-    return pq_codes(emb, pq_fit(emb, _PQ_M, _PQ_KSUB))
-
-
-def _q_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance (ADC) top-10: per query (the 5 largest-md5
-    vectors — disjoint pick from the codebook seeds), corpus distance
-    approximated as the exact-integer sum of per-subspace
-    query→centroid[code] lookups — table lookups instead of 64-dim
-    scans, the PQ search primitive; one corpus scan, no corpus join
-    (operators/similarity.pq_adc_topk)."""
-    from frogocr_spark.operators.similarity import (pq_adc_topk, pq_codes,
-                                                    pq_fit)
-    emb = _read(spark, sf_dir, "embeddings")
-    cents = pq_fit(emb, _PQ_M, _PQ_KSUB)
-    codes = pq_codes(emb, cents)
-    qs = (emb.orderBy(F.md5(F.col("vec_id").cast("string")).desc(),
-                      F.col("vec_id").desc())
-          .limit(5).select(F.col("vec_id").alias("query_id"),
-                           "embedding"))
-    return pq_adc_topk(codes, cents, qs, k=10)
-
-
-def _q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Snapshot diff (the audit/reconciliation primitive between two
-    table versions): full outer join on the key, rows classified
-    added / removed / changed (same rows dropped).  One keyed shuffle;
-    output bounded by the CHANGES.  The new version is derived
-    deterministically from documents (delete %7, uppercase %5,
-    insert shifted ids) so the oracle reproduces it."""
-    docs = _read(spark, sf_dir, "documents").select(
-        "doc_id", "text", "source")
-    new = (docs.where(F.col("doc_id") % 7 != 0)
-           .withColumn("text", F.when(F.col("doc_id") % 5 == 0,
-                                      F.upper(F.col("text")))
-                       .otherwise(F.col("text")))
-           .unionByName(docs.where(F.col("doc_id") % 9 == 4)
-                        .withColumn("doc_id",
-                                    F.col("doc_id") + 20_000_000)))
-    o = docs.select(F.col("doc_id").alias("key"),
-                    F.col("text").alias("old_text"))
-    n = new.select(F.col("doc_id").alias("key"),
-                   F.col("text").alias("new_text"))
-    j = o.join(n, "key", "full_outer")
-    return (j.withColumn(
-        "change",
-        F.when(F.col("old_text").isNull(), F.lit("added"))
-        .when(F.col("new_text").isNull(), F.lit("removed"))
-        .when(F.col("old_text") != F.col("new_text"),
-              F.lit("changed")))
-        .where(F.col("change").isNotNull())
-        .select("key", "change", "old_text", "new_text"))
-
-
-def _q_tpch_q7_natvol(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q7 shape — shipping volume between nation pairs per year:
-    the two-dimension star join (supplier nation x customer nation).
-    Dims broadcast; the fact side shuffles ONCE on the orders key;
-    revenue summed as exact integer cents."""
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    n1 = n.select(F.col("n_nationkey").alias("s_nk"),
-                  F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("c_nk"),
-                  F.col("n_name").alias("cust_nation"))
-    return (li
-            .join(F.broadcast(s.select("s_suppkey",
-                                       F.col("s_nationkey")
-                                       .alias("s_nk"))),
-                  F.col("l_suppkey") == F.col("s_suppkey"))
-            .join(o.select("o_orderkey", "o_custkey"),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(c.select("c_custkey",
-                                       F.col("c_nationkey")
-                                       .alias("c_nk"))),
-                  F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(n1), "s_nk")
-            .join(F.broadcast(n2), "c_nk")
-            .where(F.col("supp_nation") != F.col("cust_nation"))
-            .groupBy("supp_nation", "cust_nation",
-                     F.year("l_shipdate").alias("l_year"))
-            .agg(F.sum(rev).alias("revenue_cents"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-
-def _q_tpch_q17_smallqty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape — revenue from small-quantity orders: lineitems
-    with quantity < 0.2 x the part's average quantity.  The correlated
-    AVG subquery decorrelates into one map-side-combined per-part agg +
-    an equi-join back; the 0.2x-avg cut is INTEGER-exact
-    (5*qty_cents*n < sum_cents — no float division to disagree on)."""
-    li = _read(spark, sf_dir, "lineitem")
-    qc = F.round(F.col("l_quantity") * 100, 0).cast("long")
-    base = li.select("l_orderkey", "l_linenumber", "l_partkey",
-                     qc.alias("qty_cents"),
-                     F.round(F.col("l_extendedprice") * 100, 0)
-                     .cast("long").alias("price_cents"))
-    pa = (base.groupBy("l_partkey")
-          .agg(F.sum("qty_cents").alias("sum_qc"),
-               F.count(F.lit(1)).alias("n_li")))
-    j = base.join(pa, "l_partkey")
-    small = j.where(F.lit(5) * F.col("qty_cents") * F.col("n_li")
-                    < F.col("sum_qc"))
-    return small.agg(
-        F.sum("price_cents").alias("small_qty_revenue_cents"),
-        F.count(F.lit(1)).alias("n_small"))
-
-
-def _q_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Click→purchase attribution pairs per user within a 10-minute
-    window — the batch twin of the watermarked stream-stream interval
-    join (streaming/streamjoin.interval_stream_join; streaming-mode
-    state bounding pytest-verified).  Keyed equi-join on user with the
-    time range as a residual predicate — never a cartesian."""
-    from frogocr_spark.streaming.streamjoin import interval_stream_join
-    ev = _read(spark, sf_dir, "events")
-    clicks = (ev.where(F.col("event_type") == "click")
-              .select("user_id", F.col("event_id").alias("click_id"),
-                      "ts"))
-    buys = (ev.where(F.col("event_type") == "purchase")
-            .select("user_id", F.col("event_id").alias("purchase_id"),
-                    "ts"))
-    out = interval_stream_join(clicks, buys, "user_id",
-                               max_lag="10 minutes")
-    return out.select("user_id", "l_click_id", "r_purchase_id", "lag_us")
-
-
-def _q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix of per-user event sequences
-    (user-behavior modeling): consecutive (state → next) counts under
-    the (unix_micros, event_id) total order, with the from-state
-    marginal so the MLE probability is the exact ratio n/n_from
-    (operators/analytics.markov_transitions)."""
-    from frogocr_spark.operators.analytics import markov_transitions
-    ev = _read(spark, sf_dir, "events")
-    return markov_transitions(ev, "user_id", "event_type")
-
-
-def _q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized robust stats of event value (cents) per type: clamp
-    to the nearest-rank [p5, p95] empirical percentiles — integer-exact
-    cutoffs both engines compute identically, where interpolating
-    percentile functions are float-ambiguous cross-engine
-    (operators/analytics.winsorize_stats)."""
-    from frogocr_spark.operators.analytics import winsorize_stats
-    ev = _read(spark, sf_dir, "events")
-    return winsorize_stats(ev, "event_type",
-                           F.round(F.col("value") * 100, 0))
-
-
-def _q_dq_checks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Data-quality constraint report over orders (the Deequ-style
-    publish gate): completeness, uniqueness, positivity, enum-domain
-    and referential-integrity checks — every row-local check rides ONE
-    map-side-combined agg over a single scan, unpivoted without a
-    collect; referential integrity is one counted anti-join
-    (operators/quality.dq_report)."""
-    from frogocr_spark.operators.quality import dq_report
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    return dq_report(
-        o,
-        not_null=["o_custkey", "o_orderdate"],
-        unique=["o_orderkey"],
-        positive=["o_totalprice"],
-        enum={"o_orderpriority": ["1-URGENT", "2-HIGH", "3-MEDIUM",
-                                  "4-NOT SPECIFIED", "5-LOW"]},
-        ref=("o_custkey", c, "c_custkey"))
-
-
-def _q_tpch_q10_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 shape — top-20 customers by returned-item revenue:
-    fact filter pushed to the scan, dims broadcast, one fact shuffle,
-    integer-cents revenue, TakeOrdered top-k (never a global sort)."""
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    c = _read(spark, sf_dir, "customer")
-    n = _read(spark, sf_dir, "nation")
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    return (li.where(F.col("l_returnflag") == "R")
-            .select("l_orderkey", rev.alias("rev_cents"))
-            .join(o.select("o_orderkey", "o_custkey"),
-                  F.col("l_orderkey") == F.col("o_orderkey"))
-            .join(F.broadcast(c.select("c_custkey", "c_name",
-                                       "c_nationkey")),
-                  F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(n.select(F.col("n_nationkey")
-                                       .alias("c_nationkey"),
-                                       "n_name")), "c_nationkey")
-            .groupBy("c_custkey", "c_name", "n_name")
-            .agg(F.sum("rev_cents").alias("revenue_cents"),
-                 F.count(F.lit(1)).alias("n_items"))
-            .orderBy(F.col("revenue_cents").desc(), F.col("c_custkey"))
-            .limit(20))
-
-
-_Q19_BRANDS = ("Brand#12", "Brand#23", "Brand#34")
-
-
-def _q_tpch_q19_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q19 shape — the disjunctive-predicate join: three
-    (brand, size-range, quantity-range) OR-arms over one lineitem×part
-    equi-join; Catalyst pushes the common partkey equi-condition into
-    the join and the per-arm column constraints to the scans, keeping
-    the disjunction a post-join residual — never a cartesian."""
-    li = _read(spark, sf_dir, "lineitem")
-    p = _read(spark, sf_dir, "part")
-    qc = F.round(F.col("l_quantity") * 100, 0).cast("long")
-    j = (li.select("l_partkey", qc.alias("qty_cents"),
-                   F.round(F.col("l_extendedprice") * 100, 0)
-                   .cast("long").alias("price_cents"))
-         .join(F.broadcast(p.select("p_partkey", "p_brand", "p_size")),
-               F.col("l_partkey") == F.col("p_partkey")))
-    arm = lambda brand, smax, qlo, qhi: (
-        (F.col("p_brand") == brand)
-        & (F.col("p_size") >= 1) & (F.col("p_size") <= smax)
-        & (F.col("qty_cents") >= qlo * 100)
-        & (F.col("qty_cents") <= qhi * 100))
-    return (j.where(arm(_Q19_BRANDS[0], 10, 1, 15)
-                    | arm(_Q19_BRANDS[1], 20, 10, 25)
-                    | arm(_Q19_BRANDS[2], 30, 20, 35))
-            .agg(F.sum("price_cents").alias("disjunct_revenue_cents"),
-                 F.count(F.lit(1)).alias("n_matched")))
-
-
-def _q_tpch_q22_idle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q22 shape — above-average-balance customers with NO
-    urgent orders, per nation: the global-average subquery decorrelates
-    to a 1-row broadcast (integer-exact cut: bal·n > Σbal over positive
-    balances), the NOT EXISTS to a broadcast-able anti-join.  (Every
-    customer in this synthetic universe HAS orders, so the classic
-    no-orders predicate is degenerate; no-URGENT-orders keeps the
-    NOT-EXISTS shape with a non-empty answer.)"""
-    c = _read(spark, sf_dir, "customer")
-    o = _read(spark, sf_dir, "orders")
-    bal = F.round(F.col("c_acctbal") * 100, 0).cast("long")
-    base = c.select("c_custkey", "c_nationkey", bal.alias("bal_cents"))
-    stats = (base.where(F.col("bal_cents") > 0)
-             .agg(F.sum("bal_cents").alias("sum_pos"),
-                  F.count(F.lit(1)).alias("n_pos")))
-    return (base.where(F.col("bal_cents") > 0)
-            .crossJoin(F.broadcast(stats))
-            .where(F.col("bal_cents") * F.col("n_pos")
-                   > F.col("sum_pos"))
-            .join(o.where(F.col("o_orderpriority") == "1-URGENT")
-                  .select(F.col("o_custkey").alias("c_custkey"))
-                  .dropDuplicates(), "c_custkey", "left_anti")
-            .groupBy("c_nationkey")
-            .agg(F.count(F.lit(1)).alias("n_idle_rich"),
-                 F.sum("bal_cents").alias("idle_bal_cents")))
-
-
-def _q_w_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RANGE-frame sliding window — per user, for every event, the
-    count and cents-sum of that user's events in the PRECEDING HOUR
-    (``RANGE BETWEEN 3.6e9 PRECEDING AND CURRENT ROW`` over integer
-    epoch-micros).  A RANGE frame includes ALL equal-timestamp peers,
-    so the result is deterministic under any tie order — the frame
-    family row-frames can't express."""
-    ev = _read(spark, sf_dir, "events")
-    from pyspark.sql import Window
-    base = ev.select(
-        "event_id", "user_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
-    w = (Window.partitionBy("user_id").orderBy("us")
-         .rangeBetween(-3_600_000_000, 0))
-    return base.select(
-        "event_id", "user_id", "us",
-        F.count(F.lit(1)).over(w).alias("n_1h"),
-        F.sum("cents").over(w).alias("sum_cents_1h"))
-
-
-_BFS_ROUNDS = 4
-
-_GROUPING_SETS_TEXT = """
-    SELECT event_type, user_id,
-           count(*) AS n,
-           CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS BIGINT)
-           AS cents,
-           CAST(grouping(event_type) AS INT) AS g_type,
-           CAST(grouping(user_id) AS INT) AS g_user
-    FROM events
-    GROUP BY GROUPING SETS ((event_type), (user_id), ())
-"""
-
-
-def _q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-source BFS blast radius over the co-event graph: minimum
-    hop distance from the seed users (user_id % 97 == 0) within 4
-    rounds — the Pregel expansion step as one equi-join + one min-merge
-    per round, fixed plan depth matching the oracle's unrolled chain
-    (operators/graph.bfs_levels)."""
-    from frogocr_spark.operators.graph import bfs_levels
-    b = (_read(spark, sf_dir, "events")
-         .select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                        "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    seeds = (_read(spark, sf_dir, "events")
-             .select(F.col("user_id").alias("node"))
-             .where(F.col("node") % 97 == 0).dropDuplicates())
-    return bfs_levels(edges, seeds, rounds=_BFS_ROUNDS)
-
-
-def _q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary GROUPING SETS (beyond rollup/cube: the exact set list
-    ((type), (user), ()) with grouping() flags) — executed as ONE
-    Expand-planned ANSI string that the DuckDB oracle runs VERBATIM
-    (the sql_surface single-source-of-truth trick: two engines, one
-    text, cannot drift)."""
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(_GROUPING_SETS_TEXT)
-
-
-def _q_tpch_q21_waiting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q21 shape — the sole-blamed-supplier query (EXISTS +
-    NOT EXISTS self-joins on the fact): suppliers whose lineitem was
-    the ONLY returned ('R') one in a multi-supplier order.  The two
-    correlated subqueries decorrelate to one LEFT SEMI + one LEFT ANTI
-    self-join, each an orderkey equi-join with the supplier-inequality
-    as a residual — never a cartesian; supplier names via broadcast;
-    top-20 with a total (count DESC, name) tiebreak so the cut is
-    deterministic.  (Adapted: no commit/receipt dates in this schema,
-    so 'late' = returnflag R — the plan shape is Q21's.)"""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    pairs = (li.select("l_orderkey", "l_suppkey").dropDuplicates())
-    rpairs = (li.where(F.col("l_returnflag") == "R")
-              .select("l_orderkey", "l_suppkey").dropDuplicates())
-    other = pairs.select(F.col("l_orderkey").alias("okey2"),
-                         F.col("l_suppkey").alias("supp2"))
-    rother = rpairs.select(F.col("l_orderkey").alias("okey2"),
-                           F.col("l_suppkey").alias("supp2"))
-    cond = ((F.col("l_orderkey") == F.col("okey2"))
-            & (F.col("l_suppkey") != F.col("supp2")))
-    sole = (rpairs.join(other, cond, "left_semi")
-            .join(rother, cond, "left_anti"))
-    return (sole.groupBy("l_suppkey")
-            .agg(F.count(F.lit(1)).alias("n_waiting"))
-            .join(F.broadcast(s.select(F.col("s_suppkey")
-                                       .alias("l_suppkey"), "s_name")),
-                  "l_suppkey")
-            .select(F.col("l_suppkey").alias("s_suppkey"), "s_name",
-                    "n_waiting")
-            .orderBy(F.col("n_waiting").desc(), "s_name")
-            .limit(20))
-
-
-def _q_tpch_q15_topsupp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q15 shape — top supplier by quarterly revenue: the
-    max-of-aggregate view decorrelates to a 1-row broadcast, and the
-    winner test is INTEGER equality on cents (revenue == max-revenue —
-    all ties returned, no float to disagree on).  Fact filter pushed to
-    the scan; one shuffle for the per-supplier agg."""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    per = (li.where((F.col("l_shipdate") >= "1996-01-01")
-                    & (F.col("l_shipdate") < "1996-04-01"))
-           .select("l_suppkey", rev.alias("rev_cents"))
-           .groupBy("l_suppkey")
-           .agg(F.sum("rev_cents").alias("total_revenue_cents")))
-    mx = per.agg(F.max("total_revenue_cents").alias("mx"))
-    return (per.crossJoin(F.broadcast(mx))
-            .where(F.col("total_revenue_cents") == F.col("mx"))
-            .join(F.broadcast(s.select(F.col("s_suppkey")
-                                       .alias("l_suppkey"), "s_name")),
-                  "l_suppkey")
-            .select(F.col("l_suppkey").alias("s_suppkey"), "s_name",
-                    "total_revenue_cents"))
-
-
-def _q_tpch_q16_partcnt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q16 shape — supplier diversity per part class: COUNT
-    DISTINCT suppliers per (brand, size) over the distinct
-    (part, supplier) pairs, EXCLUDING blacklisted suppliers (negative
-    balance) via NOT IN → a broadcast anti-join.  (partsupp doesn't
-    exist in this schema; the distinct lineitem (partkey, suppkey)
-    pairs are its observable twin.)"""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    p = _read(spark, sf_dir, "part")
-    bad = (s.where(F.col("s_acctbal") < 0)
-           .select(F.col("s_suppkey").alias("l_suppkey")))
-    pairs = (li.select("l_partkey", "l_suppkey").dropDuplicates()
-             .join(F.broadcast(bad), "l_suppkey", "left_anti"))
-    dims = p.where((F.col("p_brand") != "Brand#45")
-                   & (F.col("p_size") <= 25)).select(
-        F.col("p_partkey").alias("l_partkey"), "p_brand", "p_size")
-    return (pairs.join(F.broadcast(dims), "l_partkey")
-            .groupBy("p_brand", "p_size")
-            .agg(F.countDistinct("l_suppkey").alias("supplier_cnt")))
-
-
-def _q_tpch_q20_excess(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q20 shape — the nested-semijoin chain: suppliers who
-    dominate some PROMO-class part's volume (>10% of its total flow —
-    ~30 suppliers/part in this synthetic universe makes the classic
-    majority cut empty).  The correlated fraction-of-SUM cut
-    decorrelates to a per-part total joined back (integer-exact:
-    10·supp_qty > part_total — no float), the IN-chains to broadcast
-    semi-joins; output is the distinct qualifying suppliers."""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    p = _read(spark, sf_dir, "part")
-    promo = (p.where(F.col("p_type").startswith("PROMO"))
-             .select(F.col("p_partkey").alias("l_partkey")))
-    qc = F.round(F.col("l_quantity") * 100, 0).cast("long")
-    base = (li.select("l_partkey", "l_suppkey", qc.alias("qty_cents"))
-            .join(F.broadcast(promo), "l_partkey"))
-    tot = (base.groupBy("l_partkey")
-           .agg(F.sum("qty_cents").alias("tot_qc")))
-    sp = (base.groupBy("l_partkey", "l_suppkey")
-          .agg(F.sum("qty_cents").alias("sp_qc")))
-    heavy = (sp.join(tot, "l_partkey")
-             .where(F.lit(10) * F.col("sp_qc") > F.col("tot_qc"))
-             .select(F.col("l_suppkey").alias("s_suppkey"))
-             .dropDuplicates())
-    return (s.join(heavy, "s_suppkey", "left_semi")
-            .select("s_suppkey", "s_name", "s_nationkey"))
-
-
-def _q_tpch_q14_promo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q14 shape — promotion revenue share by month: conditional
-    aggregation over a broadcast part join; numerator and denominator
-    emitted as exact integer cents (the ratio is one trivial driver
-    division — a float percent would be the only inexact byte in the
-    answer)."""
-    li = _read(spark, sf_dir, "lineitem")
-    p = _read(spark, sf_dir, "part")
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    j = (li.where((F.col("l_shipdate") >= "1996-01-01")
-                  & (F.col("l_shipdate") < "1997-01-01"))
-         .select("l_partkey", F.month("l_shipdate").alias("month"),
-                 rev.alias("rev_cents"))
-         .join(F.broadcast(p.select(F.col("p_partkey")
-                                    .alias("l_partkey"), "p_type")),
-               "l_partkey"))
-    return (j.groupBy("month")
-            .agg(F.sum(F.when(F.col("p_type").startswith("PROMO"),
-                              F.col("rev_cents")).otherwise(F.lit(0)))
-                 .alias("promo_cents"),
-                 F.sum("rev_cents").alias("total_cents")))
-
-
-def _q_tpch_q8_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q8 shape — national market share by year: two-level
-    conditional aggregation (the target nation's revenue vs ALL
-    revenue per ship-year) over a broadcast supplier→nation star;
-    numerator/denominator as exact integer cents."""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    dim = (s.select(F.col("s_suppkey").alias("l_suppkey"),
-                    "s_nationkey")
-           .join(F.broadcast(n.select(F.col("n_nationkey")
-                                      .alias("s_nationkey"), "n_name")),
-                 "s_nationkey"))
-    return (li.select("l_suppkey", F.year("l_shipdate").alias("year"),
-                      rev.alias("rev_cents"))
-            .join(F.broadcast(dim), "l_suppkey")
-            .groupBy("year")
-            .agg(F.sum(F.when(F.col("n_name") == "NATION_7",
-                              F.col("rev_cents")).otherwise(F.lit(0)))
-                 .alias("nation_cents"),
-                 F.sum("rev_cents").alias("total_cents")))
-
-
-def _q_ols_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type OLS of event value (cents) against event-hour — the
-    SQL regr_slope/regr_intercept/regr_r2 family, computed from
-    DECIMAL(38,0)-exact sufficient statistics in ONE map-side-combined
-    agg so slope/intercept/r² are a fixed tree of correctly-rounded
-    IEEE ops over sums both engines agree on exactly (native regr_*
-    float accumulation would hash-differ per partition order)
-    (operators/analytics.ols_fit)."""
-    from frogocr_spark.operators.analytics import ols_fit
-    ev = _read(spark, sf_dir, "events")
-    return ols_fit(
-        ev,
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"),
-        F.round(F.col("value") * 100, 0),
-        "event_type")
-
-
-def _q_pit_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Point-in-time join — each purchase event matched to the SCD2
-    user-state version valid AT ITS TIMESTAMP (facts joined to slowly
-    changing attributes as-they-were): key equi-join with the half-open
-    validity interval as a residual, dimension (bounded by CHANGES)
-    broadcast so the fact side never shuffles
-    (operators/analytics.pit_lookup over scd2_history)."""
-    from frogocr_spark.operators.analytics import scd2_history, pit_lookup
-    ev = _read(spark, sf_dir, "events")
-    dim = scd2_history(ev, "user_id", "event_type")
-    probe = (ev.where(F.col("event_type") == "purchase")
-             .select("event_id", "user_id",
-                     F.unix_micros(F.col("ts").cast("timestamp"))
-                     .alias("us")))
-    return pit_lookup(probe, dim, "user_id", F.col("us"), "event_id")
-
-
-def _q_tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 — the canonical scan-dominated revenue forecast: ALL
-    predicates (ship-year, discount band, quantity cap) are plain
-    column comparisons so every one reaches the parquet scan as a
-    pushed filter (plan shows PushedFilters on all three), and the
-    whole query is ONE map-side-combined 1-row aggregate — zero joins,
-    zero wide shuffles; the 100 TB shape is 'read the pruned row
-    groups, fold'.  Discount membership tested on ROUNDED integer
-    hundredths (the raw double 0.05 is not exactly representable;
-    ``l_discount BETWEEN .05 AND .07`` would be float-boundary
-    roulette), revenue in exact integer cents."""
-    li = _read(spark, sf_dir, "lineitem")
-    disc = F.round(F.col("l_discount") * 100, 0).cast("long")
-    rev = F.round(F.col("l_extendedprice") * F.col("l_discount") * 100,
-                  0).cast("long")
-    return (li.where((F.col("l_shipdate") >= "1996-01-01")
-                     & (F.col("l_shipdate") < "1997-01-01")
-                     & (F.col("l_quantity") < 24))
-            .select(disc.alias("d"), rev.alias("rev_cents"))
-            .where((F.col("d") >= 5) & (F.col("d") <= 7))
-            .agg(F.sum("rev_cents").alias("revenue_cents"),
-                 F.count(F.lit(1)).alias("n_items")))
-
-
-def _q_tpch_q9_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q9 shape — product-line profit by nation and year: the
-    fact joins two broadcast dims (color-filtered parts;
-    supplier→nation star collapsed driver-side into ONE broadcast
-    lookup), so the lineitem table is shuffled exactly once — for the
-    final (nation, year) aggregate.  Profit = revenue − cost in exact
-    integer cents (cost adapted to p_retailprice·quantity: this schema
-    has no partsupp.ps_supplycost; the join/agg plan IS Q9's)."""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    p = _read(spark, sf_dir, "part")
-    green = (p.where(F.col("p_name").startswith("red"))
-             .select(F.col("p_partkey").alias("l_partkey"),
-                     "p_retailprice"))
-    dim = (s.select(F.col("s_suppkey").alias("l_suppkey"),
-                    "s_nationkey")
-           .join(F.broadcast(n.select(F.col("n_nationkey")
-                                      .alias("s_nationkey"), "n_name")),
-                 "s_nationkey"))
-    rev = F.round(F.col("l_extendedprice")
-                  * (1 - F.col("l_discount")) * 100, 0).cast("long")
-    cost = F.round(F.col("p_retailprice")
-                   * F.col("l_quantity") * 100, 0).cast("long")
-    return (li.join(F.broadcast(green), "l_partkey")
-            .join(F.broadcast(dim), "l_suppkey")
-            .select("n_name", F.year("l_shipdate").alias("year"),
-                    (rev - cost).alias("profit_cents"))
-            .groupBy("n_name", "year")
-            .agg(F.sum("profit_cents").alias("profit_cents")))
-
-
-def _q_tpch_q11_important(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q11 shape — important-stock cut: per-part flow value for
-    ONE nation's suppliers, HAVING value above a global-total scalar
-    subquery.  Decorrelates to a 1-row broadcast (sum AND count in the
-    same row) with the cut INTEGER-exact and SCALE-INVARIANT:
-    value·n_parts > 2·total, i.e. parts above twice the mean part
-    value — TPC-H's own spec scales its 0.0001 fraction by 1/SF for
-    exactly this reason (a fixed fraction empties as the part universe
-    grows); the mean-relative form needs no per-scale constant and
-    bounds the output to the >2×-mean tail.  Value adapted to
-    retailprice·quantity (no partsupp in this schema); supplier-nation
-    filter is a broadcast semi-join on the fact."""
-    li = _read(spark, sf_dir, "lineitem")
-    s = _read(spark, sf_dir, "supplier")
-    n = _read(spark, sf_dir, "nation")
-    p = _read(spark, sf_dir, "part")
-    nk = (n.where(F.col("n_name") == "NATION_3")
-          .select("n_nationkey"))
-    supp = (s.join(F.broadcast(nk),
-                   s.s_nationkey == nk.n_nationkey, "left_semi")
-            .select(F.col("s_suppkey").alias("l_suppkey")))
-    val = F.round(F.col("p_retailprice")
-                  * F.col("l_quantity") * 100, 0).cast("long")
-    base = (li.join(F.broadcast(supp), "l_suppkey")
-            .join(F.broadcast(p.select(F.col("p_partkey")
-                                       .alias("l_partkey"),
-                                       "p_retailprice")),
-                  "l_partkey")
-            .select("l_partkey", val.alias("val_cents")))
-    per = (base.groupBy("l_partkey")
-           .agg(F.sum("val_cents").alias("value_cents")))
-    tot = per.agg(F.sum("value_cents").alias("tot"),
-                  F.count(F.lit(1)).alias("n_parts"))
-    return (per.crossJoin(F.broadcast(tot))
-            .where(F.col("value_cents") * F.col("n_parts")
-                   > F.lit(2) * F.col("tot"))
-            .select(F.col("l_partkey").alias("p_partkey"),
-                    "value_cents"))
-
-
-def _q_tpch_q12_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q12 shape — shipping-class service audit: lineitem→orders
-    equi-join (the fact side filtered to one ship-year BEFORE the
-    join), then per line-status counts of critical (1-URGENT/2-HIGH)
-    vs other order priorities as ONE conditional aggregate.  (This
-    schema has no l_shipmode/commitdate; l_linestatus plays the
-    two-valued class column — the join+conditional-agg plan is
-    Q12's.)"""
-    li = _read(spark, sf_dir, "lineitem")
-    o = _read(spark, sf_dir, "orders")
-    crit = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (li.where((F.col("l_shipdate") >= "1996-01-01")
-                     & (F.col("l_shipdate") < "1997-01-01"))
-            .select(F.col("l_orderkey").alias("o_orderkey"),
-                    "l_linestatus")
-            .join(o.select("o_orderkey", "o_orderpriority"),
-                  "o_orderkey")
-            .groupBy("l_linestatus")
-            .agg(F.sum(F.when(crit, 1).otherwise(0))
-                 .alias("high_line_count"),
-                 F.sum(F.when(crit, 0).otherwise(1))
-                 .alias("low_line_count")))
-
-
-_ROLLUP_GEO_TEXT = """
-    SELECT r_name, n_name,
-           CAST(grouping(r_name) AS INT) AS g_region,
-           CAST(grouping(n_name) AS INT) AS g_nation,
-           count(*) AS n_cust,
-           CAST(sum(CAST(round(c_acctbal * 100, 0) AS BIGINT))
-                AS BIGINT) AS acctbal_cents
-    FROM customer c
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
-    JOIN region r ON n.n_regionkey = r.r_regionkey
-    GROUP BY ROLLUP (r_name, n_name)
-"""
-
-
-def _q_rollup_geo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hierarchical ROLLUP over the geography dimension chain
-    (region → nation → grand total) with grouping() flags to
-    disambiguate rolled-up NULLs — planned as ONE Expand over a single
-    joined scan (dims broadcast), the OLAP subtotal primitive.  ANSI
-    text executed VERBATIM by both engines (the sql_surface
-    single-source-of-truth trick), balances as exact integer cents."""
-    _read(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _read(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    _read(spark, sf_dir, "region").createOrReplaceTempView("region")
-    return spark.sql(_ROLLUP_GEO_TEXT)
-
-
-_PIVOT_TYPES = ["click", "error", "purchase", "signup", "view"]
-
-
-def _q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PIVOT surface — long→wide reshaping: per-cohort event
-    counts spread into one column per event type.  The value list is
-    passed EXPLICITLY, which at scale skips the driver-side distinct
-    pass Spark otherwise runs to discover pivot columns (and makes the
-    output schema stable for downstream writers); plan = ONE
-    map-side-combined aggregate with the same shape as a conditional
-    agg — the oracle IS that conditional agg, so the hash match proves
-    pivot ≡ CASE-sum.  Absent combinations backfilled to 0."""
-    ev = _read(spark, sf_dir, "events")
-    return (ev.select((F.col("user_id") % 16).alias("cohort"),
-                      "event_type")
-            .groupBy("cohort")
-            .pivot("event_type", _PIVOT_TYPES)
-            .agg(F.count(F.lit(1)))
-            .na.fill(0, _PIVOT_TYPES))
-
-
-def _q_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-sequence pattern matching (the MATCH_RECOGNIZE shape):
-    each user's stream collapses to a deterministic event-initial
-    string (array_sort on (ts, event_id) → initials), then regexes
-    count conversion motifs — direct view→purchase adjacencies and
-    assisted ``v[vc]*p`` funnels.  Patterns restricted to plain classes
-    + greedy stars where Java regex (leftmost-greedy) and RE2
-    (leftmost-longest) provably agree, non-overlapping counts both
-    engines.  ONE keyed shuffle; the per-user fold is a map stage over
-    the grouped rows — no self-joins per pattern step (contrast the
-    K-way-join funnel formulation the funnel oracle keeps)."""
-    ev = _read(spark, sf_dir, "events")
-    ordered = F.array_sort(F.collect_list(
-        F.struct(F.col("ts"), F.col("event_id"), F.col("event_type"))))
-    seq = F.array_join(
-        F.transform(ordered, lambda x: F.substring(x["event_type"],
-                                                   1, 1)), "")
-    return (ev.groupBy("user_id")
-            .agg(seq.alias("seq"))
-            .select("user_id",
-                    F.length("seq").alias("n_events"),
-                    F.regexp_count(F.col("seq"), F.lit("vp"))
-                    .alias("n_direct"),
-                    F.regexp_count(F.col("seq"), F.lit("v[vc]*p"))
-                    .alias("n_assisted"))
-            .where(F.col("n_assisted") > 0))
-
-
-def _q_sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hopping (sliding) event-time windows — F.window(2h slide 1h),
-    the overlapping-window tier of event-time analytics (tumbling =
-    `event_windows`, session = `sessionize`): each event lands in
-    size/hop = 2 slots, so state and output scale 2× the tumbling
-    cost, never with window length.  Counts + exact distinct users per
-    (slot, type); window bounds emitted as integer epoch-micros
-    (session tz is UTC so Spark's epoch-aligned slots == the oracle's
-    integer DIV arithmetic).  Oracle materializes the two slots per
-    event explicitly — the hash match pins Spark's window-explode
-    semantics to the arithmetic definition."""
-    ev = _read(spark, sf_dir, "events")
-    w = F.window(F.col("ts").cast("timestamp"), "2 hours", "1 hour")
-    return (ev.select(w.alias("w"), "event_type", "user_id")
-            .groupBy("w", "event_type")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("user_id").alias("n_users"))
-            .select(F.unix_micros(F.col("w.start")).alias("win_start_us"),
-                    F.unix_micros(F.col("w.end")).alias("win_end_us"),
-                    "event_type", "n", "n_users"))
-
-
-def _q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2D Pareto frontier over parts (cheapest-for-their-size): minimize
-    price cents, maximize size.  Distributed sort-scan skyline — one
-    keyed group-max + an exclusive prefix max via the range-partitioned
-    global_cummax machinery (NO single-partition window, no quadratic
-    self-join); the oracle keeps the textbook NOT-EXISTS-dominator
-    form, so the hash match proves the linearized plan equivalent
-    (operators/analytics.skyline2d)."""
-    from frogocr_spark.operators.analytics import skyline2d
-    part = _read(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.round(F.col("p_retailprice") * 100, 0).cast("long")
-        .alias("price_cents"),
-        F.col("p_size").cast("long").alias("p_size"))
-    return skyline2d(part, "price_cents", "p_size")
-
-
-def _q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max concurrent 10-minute sessions per event type — the sweep-line
-    +1/−1 running sum on the range-partitioned global_cumsum machinery
-    (per-key reset is FREE: each key's deltas telescope to zero, so the
-    key-major global prefix sum restarts at every key boundary — a hot
-    key never serializes into one task).  The oracle computes the
-    INDEPENDENT quadratic definition — max over interval starts of
-    count(intervals containing that start) — so the hash match proves
-    sweep-line ≡ definition (operators/analytics.max_concurrency)."""
-    from frogocr_spark.operators.analytics import max_concurrency
-    ev = _read(spark, sf_dir, "events")
-    return max_concurrency(ev, "event_type", duration_us=600_000_000)
-
-
-def _q_equidepth_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equi-depth 16-bucket histogram of event value cents — the
-    optimizer-statistics / quantile ground truth.  Bucket of global
-    rank r is ((r−1)·16) DIV n: exact integer arithmetic on a rank from
-    the range-partitioned global_rank (no single-partition window);
-    boundaries are exact data values, not interpolations.  The oracle
-    runs the classic single-node row_number() + the same arithmetic
-    (operators/ranking.equidepth_histogram)."""
-    from frogocr_spark.operators.ranking import equidepth_histogram
-    ev = _read(spark, sf_dir, "events").select(
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"),
-        "event_id")
-    return equidepth_histogram(ev, "cents", "event_id", n_buckets=16)
-
-
-def _q_itemsets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket association mining over orders (baskets = orders,
-    items = parts): top-25 co-occurring part pairs by support, with the
-    exact integer confidence/lift ingredients (n_ab, n_a, n_b,
-    n_baskets — no float ratio to disagree on).  Pair expansion is
-    bounded by Σ|basket|² with a mega-basket guard; the top-n cut is
-    TakeOrdered and the count decoration joins AFTER the cut
-    (operators/analytics.assoc_rules)."""
-    from frogocr_spark.operators.analytics import assoc_rules
-    li = _read(spark, sf_dir, "lineitem")
-    return assoc_rules(li, "l_orderkey", "l_partkey", top_n=25)
-
-
-def _q_rand_proj(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson–Lindenstrauss sign random projection 64 → 8 dims — the
-    cheap dimensionality cut before sketching/ANN.  The ±1 matrix is
-    md5-derived (hashlib == Spark md5 == DuckDB md5) and ships as a
-    LITERAL; components quantize to integer ten-thousandths so every
-    output coordinate is an exact int64 signed sum — a pure map stage,
-    the embedding relation never shuffled
-    (operators/similarity.jl_project)."""
-    from frogocr_spark.operators.similarity import jl_project
-    emb = _read(spark, sf_dir, "embeddings")
-    return jl_project(emb, dim=64, k=8)
-
-
-def _q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer APPLY — encode the corpus with the 8-merge trained BPE
-    and report per-doc token counts (the pretraining cost/packing
-    statistic).  Encoding is one word-keyed equi-join against the
-    trained vocabulary (word → merged symbols) + a per-doc agg — the
-    merges never re-run over the corpus; the oracle re-runs the
-    identical train chain then the same join
-    (operators/bpe.bpe_encode_counts)."""
-    from frogocr_spark.operators.bpe import bpe_encode_counts
-    docs = _read(spark, sf_dir, "documents")
-    return bpe_encode_counts(docs, n_merges=8)
-
-
-def _q_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trending event types: top-3 types per hopping window (2 h window,
-    1 h slide) — the dashboard 'trending now' shape composing the
-    hash-verified hopping-window explode with a per-window rank cut
-    (ties broken on type; (n desc, type) is a total order per window).
-    The oracle materializes both slots per event explicitly and ranks
-    with the same tie-break."""
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    w = F.window(F.col("ts").cast("timestamp"), "2 hours", "1 hour")
-    counts = (ev.select(w.alias("w"), "event_type")
-              .groupBy("w", "event_type")
-              .agg(F.count(F.lit(1)).cast("long").alias("n"))
-              .select(F.unix_micros(F.col("w.start"))
-                      .alias("win_start_us"), "event_type", "n"))
-    rk = Window.partitionBy("win_start_us").orderBy(
-        F.desc("n"), F.asc("event_type"))
-    return (counts.withColumn("rnk", F.row_number().over(rk))
-            .where(F.col("rnk") <= 3))
-
-
-def _q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type exact quantile summary (p25/p50/p75/p95, NEAREST-RANK —
-    integer-exact where percentile_cont interpolation is
-    float-ambiguous cross-engine): all quantiles ride ONE keyed rank
-    window + one map-side-combined conditional agg
-    (operators/analytics.quantile_summary)."""
-    from frogocr_spark.operators.analytics import quantile_summary
-    ev = _read(spark, sf_dir, "events")
-    return quantile_summary(
-        ev, "event_type", F.round(F.col("value") * 100, 0), "event_id")
-
-
-def _q_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-type robust location/scale: nearest-rank median + MAD
-    (median absolute deviation) — two keyed rank windows, the
-    group-sized median table broadcast back for the deviation pass
-    (operators/analytics.mad_stats)."""
-    from frogocr_spark.operators.analytics import mad_stats
-    ev = _read(spark, sf_dir, "events")
-    return mad_stats(
-        ev, "event_type", F.round(F.col("value") * 100, 0), "event_id")
-
-
-def _q_bag_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiset (bag) set operations — Spark's native exceptAll /
-    intersectAll against the LITERAL ANSI EXCEPT ALL / INTERSECT ALL in
-    the oracle, on two overlapping bags (light lineitems vs returned
-    lineitems, by part key): per key the result carries max(0, cA−cB)
-    resp. min(cA, cB) copies, which the hash compare checks copy by
-    copy.  Spark plans both as count-aggregate + replicate — keyed
-    shuffles, no sort."""
-    li = _read(spark, sf_dir, "lineitem")
-    a = li.where(F.col("l_quantity") < 25).select("l_partkey")
-    b = li.where(F.col("l_returnflag") == "R").select("l_partkey")
-    return (a.exceptAll(b).withColumn("tag", F.lit("except"))
-            .unionAll(a.intersectAll(b)
-                      .withColumn("tag", F.lit("intersect"))))
-
-
-def _q_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRUE stateful debounce per user (48 h quiet period): an event is
-    kept iff ≥ 48 h after the previous KEPT event — the clock advances
-    only on kept events, which lag() cannot express.  One keyed shuffle
-    + an array-sort fold (operators/analytics.debounce); the oracle
-    re-runs the identical fold via DuckDB list_reduce over the same
-    (us, id) order."""
-    from frogocr_spark.operators.analytics import debounce
-    ev = _read(spark, sf_dir, "events")
-    return debounce(ev, ["user_id"], quiet_us=48 * 3_600_000_000)
-
-
-def _q_interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user total COVERED time of the union of 2-day activity
-    intervals — the measure of the union (total-active-time metric),
-    not session counting: exclusive running max of interval end per
-    user, each interval contributes max(0, e − max(s, prev_max_end))
-    (operators/analytics.interval_coverage)."""
-    from frogocr_spark.operators.analytics import interval_coverage
-    ev = _read(spark, sf_dir, "events")
-    return interval_coverage(ev, "user_id",
-                             duration_us=2 * 86_400_000_000)
-
-
-def _q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact Lloyd k-means over the embeddings (k=4, 3 rounds +
-    final assignment): md5-seeded, exact int64 argmin assignment as a
-    PURE MAP stage (centroids are literals — the corpus is never
-    joined/shuffled for its labels), floor-div centroid update bounded
-    by k·dim shuffle rows.  The oracle re-runs the identical chain as
-    an unrolled WITH sequence (operators/clustering.kmeans_int)."""
-    from frogocr_spark.operators.clustering import kmeans_int
-    emb = _read(spark, sf_dir, "embeddings")
-    return kmeans_int(emb, k=4, iters=3)
-
-
-TIME_ROLLUP_TEXT = """
-    SELECT year(l_shipdate) AS y, month(l_shipdate) AS mo,
-           CAST(grouping(year(l_shipdate)) AS INT) AS g_y,
-           CAST(grouping(month(l_shipdate)) AS INT) AS g_mo,
-           count(*) AS n_items,
-           CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                AS BIGINT) AS revenue_cents
-    FROM lineitem
-    GROUP BY ROLLUP (year(l_shipdate), month(l_shipdate))
-"""
-
-
-def _q_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar-hierarchy ROLLUP (year → month → grand total) with
-    grouping flags — ONE Expand over a single scan; the IDENTICAL ANSI
-    text runs verbatim on both engines (``TIME_ROLLUP_TEXT`` — the
-    sql_surface single-source-of-truth pattern), so the two sides
-    cannot drift."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(TIME_ROLLUP_TEXT)
-
-
-def _q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity suppression (k=5) over the documents quasi-identifier
-    triple (lang, source, length-bin): QI combos shared by < 5 docs are
-    masked to '*' and merged — the released group profile.  Two keyed
-    aggs, the second over group-profile rows
-    (operators/quality.k_anonymize)."""
-    from frogocr_spark.operators.quality import k_anonymize
-    docs = _read(spark, sf_dir, "documents").select(
-        "lang", "source",
-        F.expr("n_chars DIV 500").cast("string").alias("chars_bin"))
-    return k_anonymize(docs, ["lang", "source", "chars_bin"], k=5)
-
-
-def _q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew diagnosis for lineitem.l_suppkey — the measurement
-    that decides plain vs salted vs broadcast: top-10 heavy keys + the
-    exact integer Gini ingredients of the full key distribution
-    (Σ(2i−n−1)·cᵢ over the count-ascending rank from the
-    range-partitioned global_rank — no single-partition window at any
-    key cardinality) (operators/skew.skew_report)."""
-    from frogocr_spark.operators.skew import skew_report
-    li = _read(spark, sf_dir, "lineitem")
-    return skew_report(li, "l_suppkey", top_k=10)
-
-
-def _q_hll_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL set algebra — |clickers|, |purchasers|, |union| by register
-    max-merge (lossless for HLL) and |intersection| by
-    inclusion–exclusion: the sketch-level audience-overlap query exact
-    distinct counting can't do without re-scanning.  Each side collapses
-    to ≤ 256 register rows; the md5 sketch is deterministic so DuckDB
-    recomputes every register and estimate bit-for-bit
-    (operators/sketches.hll_union_intersect)."""
-    from frogocr_spark.operators.sketches import hll_union_intersect
-    ev = _read(spark, sf_dir, "events")
-    return hll_union_intersect(
-        ev.where(F.col("event_type") == "click"),
-        ev.where(F.col("event_type") == "purchase"),
-        "user_id", p=8)
-
-
-def _q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Newman modularity ingredients of the modal-event-type partition
-    over the co-event graph (users linked when active in the same
-    1-minute window): per community n_nodes, degree_sum, internal_edges,
-    m — exact integers, Q derivable as a fixed float finish.  Degrees =
-    edge explode + keyed agg; community decoration = two node-keyed
-    joins (operators/graph.modularity_by_community)."""
-    from frogocr_spark.operators.graph import modularity_by_community
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    b = (ev.select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                          "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    w = Window.partitionBy("user_id").orderBy(
-        F.desc("_cnt"), F.asc("event_type"))
-    comm = (ev.groupBy("user_id", "event_type")
-            .agg(F.count(F.lit(1)).alias("_cnt"))
-            .withColumn("_rn", F.row_number().over(w))
-            .where(F.col("_rn") == 1)
-            .select(F.col("user_id").alias("node"),
-                    F.col("event_type").alias("community")))
-    return modularity_by_community(edges, comm)
-
-
-def _q_postings_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Delta-encoded inverted-index postings (gap encoding — the
-    varint-friendly layout a search/dedup index stores): per term in
-    the df band [2, 64], first doc id + consecutive gaps as a pure
-    array transform over the sorted postings
-    (operators/textstats.postings_delta).  The synthetic corpus has a
-    ~40-word vocabulary, so every term is corpus-hot: the query leaves
-    the df band open upward (the banding API is exercised in pytest) —
-    postings are n_docs-length, the realistic worst case for the gap
-    transform."""
-    from frogocr_spark.operators.textstats import postings_delta
-    docs = _read(spark, sf_dir, "documents")
-    return postings_delta(docs, min_len=5, min_df=2, max_df=10**9)
-
-
-def _q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact two-sample Kolmogorov–Smirnov drift test between click and
-    purchase value distributions: the max CDF gap decided on the exact
-    integer numerator |c1·n2 − c2·n1|; both cumulative counts ride ONE
-    range-partitioned prefix sum by carry-free (c1, c2) bit-packing —
-    no single-partition window, no second pass
-    (operators/analytics.ks_statistic)."""
-    from frogocr_spark.operators.analytics import ks_statistic
-    ev = _read(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100, 0)
-    return ks_statistic(ev.where(F.col("event_type") == "click"),
-                        ev.where(F.col("event_type") == "purchase"),
-                        cents)
-
-
-def _q_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact CUSUM drift chart per event type: max/min
-    excursions of the scaled deviation walk dᵢ = n·xᵢ − Σx in (ts, id)
-    order.  The walk rides the key-major range-partitioned prefix sum —
-    per-key reset is FREE because each key's deviations telescope to
-    zero (the max_concurrency argument)
-    (operators/analytics.cusum_excursions)."""
-    from frogocr_spark.operators.analytics import cusum_excursions
-    ev = _read(spark, sf_dir, "events")
-    return cusum_excursions(ev, "event_type",
-                            F.round(F.col("value") * 100, 0))
-
-
-def _q_range_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merkle-style range checksums over orders (1000-key buckets, XOR
-    fold of 60-bit md5 row hashes over a canonical integer encoding) —
-    the anti-entropy primitive for replica/snapshot reconciliation:
-    compare digests bucket-wise, ship only differing ranges.  One scan,
-    one map-side-combined keyed agg
-    (operators/quality.range_checksums)."""
-    from frogocr_spark.operators.quality import range_checksums
-    od = _read(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0).cast("long")
-        .alias("price_cents"),
-        F.unix_micros(F.col("o_orderdate").cast("timestamp"))
-        .alias("date_us"))
-    return range_checksums(od, "o_orderkey",
-                           ["o_orderkey", "o_custkey", "o_orderstatus",
-                            "o_orderpriority", "price_cents",
-                            "date_us"], bucket_size=1000)
-
-
-def _q_window_funcs2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The remaining ANSI window-function family — first_value /
-    last_value / nth_value over the FULL frame (ROWS BETWEEN UNBOUNDED
-    PRECEDING AND UNBOUNDED FOLLOWING — the default last_value frame is
-    the classic silent-wrong-answer; the explicit frame is what the
-    oracle runs too) under the deterministic (ts, event_id) order, one
-    keyed window."""
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = (Window.partitionBy("user_id").orderBy(us, F.col("event_id"))
-         .rowsBetween(Window.unboundedPreceding,
-                      Window.unboundedFollowing))
-    return ev.select(
-        "event_id", "user_id",
-        F.first("event_type").over(w).alias("first_type"),
-        F.last("event_type").over(w).alias("last_type"),
-        F.nth_value("event_type", 2).over(w).alias("second_type"),
-        F.count(F.lit(1)).over(w).cast("long").alias("n_user_events"))
-
-
-def _q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The portable string-function surface in one verified row set:
-    lpad/rpad, translate, reverse, repeat, instr, substring, left,
-    ascii, replace — applied to the documents dimension columns; one
-    map stage, both engines run the same semantics by the hash match."""
-    docs = _read(spark, sf_dir, "documents")
-    return docs.select(
-        "doc_id",
-        F.lpad("lang", 5, "_").alias("lang_pad"),
-        F.rpad("source", 8, ".").alias("src_pad"),
-        F.translate("source", "aeiou", "01234").alias("src_trans"),
-        F.reverse(F.col("lang")).alias("lang_rev"),
-        F.repeat(F.col("lang"), 2).alias("lang_2x"),
-        F.instr(F.col("source"), "a").cast("int").alias("a_pos"),
-        F.substring("source", 2, 3).alias("src_mid"),
-        F.expr("left(source, 2)").alias("src_left"),
-        F.ascii("lang").cast("int").alias("lang_ascii"),
-        F.regexp_replace("source", "a", "@").alias("src_at"))
-
-
-CUBE_COUNTS_TEXT = """
-    SELECT lang, source,
-           CAST(grouping(lang) AS INT) AS g_lang,
-           CAST(grouping(source) AS INT) AS g_source,
-           count(*) AS n_docs,
-           CAST(sum(n_chars) AS BIGINT) AS sum_chars
-    FROM documents
-    GROUP BY CUBE (lang, source)
-"""
-
-
-def _q_cube_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUP BY CUBE over (lang, source) with grouping flags —
-    completes the reshaping triple (ROLLUP `rollup_geo`/`time_rollup`,
-    GROUPING SETS `grouping_sets`, CUBE here); ONE Expand over a single
-    scan, the IDENTICAL ANSI text run verbatim by both engines."""
-    _read(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(CUBE_COUNTS_TEXT)
-
-
-def _q_id_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands over the URGENT-order key domain (the
-    ledger-audit / missing-ids primitive): contiguous runs collapse via
-    the key−rank constancy trick, rank from the range-partitioned
-    global_rank — no single-partition window
-    (operators/ranking.id_islands)."""
-    from frogocr_spark.operators.ranking import id_islands
-    od = _read(spark, sf_dir, "orders").where(
-        F.col("o_orderpriority") == "1-URGENT")
-    return id_islands(od, "o_orderkey")
-
-
-def _q_rle_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run-length encoding of each user's event-type sequence in stable
-    (ts, id) order — session-replay compression / behavior motifs: two
-    keyed windows over one reused exchange, per-run agg, stable-order
-    string assembly (operators/analytics.rle_encode)."""
-    from frogocr_spark.operators.analytics import rle_encode
-    ev = _read(spark, sf_dir, "events")
-    return rle_encode(ev, "user_id", "event_type")
-
-
-def _q_ratio_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ratio-to-report: each order's revenue share of its nation's
-    total, emitted as the EXACT integer pair (rev_cents,
-    nation_total_cents) — no float division to disagree on.  The
-    nation totals come from a keyed agg broadcast back (NOT a window
-    partitioned by the 25-value nation key — the hot-key form)."""
-    od = _read(spark, sf_dir, "orders")
-    cu = _read(spark, sf_dir, "customer")
-    na = _read(spark, sf_dir, "nation")
-    r = (od.join(F.broadcast(cu), od.o_custkey == cu.c_custkey)
-         .join(F.broadcast(na), cu.c_nationkey == na.n_nationkey)
-         .select("o_orderkey", "n_name",
-                 F.round(F.col("o_totalprice") * 100, 0).cast("long")
-                 .alias("rev_cents")))
-    tot = r.groupBy("n_name").agg(
-        F.sum("rev_cents").cast("long").alias("nation_total_cents"))
-    return r.join(F.broadcast(tot), "n_name").select(
-        "o_orderkey", "n_name", "rev_cents", "nation_total_cents")
-
-
-def _q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reciprocal-rank fusion of two ANN rankers — the hybrid-retrieval
-    combiner: ranker A = rounded-rank cosine top-20 (the verified
-    partial-reduction path), ranker B = EXACT integer squared-L2 top-20
-    (quantize-first makes the metric an exact int64 — no sqrt, no float
-    sum), fused by the exact fraction ((60+rA)+(60+rB)) /
-    ((60+rA)(60+rB)) with ONE correctly-rounded division as the order
-    key (operators/similarity.rrf_fuse, l2sq_topk)."""
-    from frogocr_spark.operators.similarity import (cosine_topk_partial,
-                                                    l2sq_topk, rrf_fuse)
-    emb = _read(spark, sf_dir, "embeddings")
-    queries_df = emb.where("vec_id < 5")
-    ra = cosine_topk_partial(emb, queries_df, k=20, rank_round=4)
-    rb = l2sq_topk(emb, queries_df, k=20)
-    return rrf_fuse(ra, rb, k_const=60, top_k=10)
-
-
-def _q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree assortativity of the co-event graph (do hubs attach to
-    hubs?): Pearson correlation of endpoint degrees over both edge
-    orientations, on the DECIMAL(38,0)-exact moment machinery — the
-    correlation hash-matches any engine regardless of partitioning
-    (operators/graph.degree_assortativity)."""
-    from frogocr_spark.operators.graph import degree_assortativity
-    ev = _read(spark, sf_dir, "events")
-    b = (ev.select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                          "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    return degree_assortativity(edges)
-
-
-def _q_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact distributed 1R decision stump (Holte 1993): the best
-    single-threshold rule predicting 'error' events from the value —
-    accuracies as exact integer counts from the packed-pair prefix sum
-    (the ks_test machinery), winner by TakeOrdered; can never return
-    worse than the majority baseline (the all-pos/all-neg rules are
-    candidates) (operators/analytics.decision_stump)."""
-    from frogocr_spark.operators.analytics import decision_stump
-    ev = _read(spark, sf_dir, "events")
-    return decision_stump(ev, F.round(F.col("value") * 100, 0),
-                          F.col("event_type") == "error")
-
-
-BM25_QUERIES = {
-    "q_spark": ["spark", "join", "merge"],
-    "q_stream": ["window", "stream", "batch"],
-    "q_scan": ["table", "scan"],
-}
-
-
-def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 lexical retrieval over the documents corpus — the keyword
-    ranker beside the dense ANN paths (hybrid = rrf_fusion): per-query
-    top-10 by the classic k1=1.2 / b=0.75 scoring.  Scores are
-    FIXED-ORDER sums of per-term conditional aggregates, so the float
-    additions happen in the written term order on both engines; tf is
-    pre-filtered to query terms at the scan; the cut is one rank window
-    keyed by query_id (operators/textstats.bm25_scores)."""
-    from frogocr_spark.operators.textstats import bm25_scores
-    docs = _read(spark, sf_dir, "documents")
-    return bm25_scores(docs, BM25_QUERIES)
-
-
-def _q_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duration-weighted state statistics: total time users SAT in each
-    event-type state, summed over SCD2 validity intervals (open
-    versions capped at the corpus max event time) — the temporal
-    measure event counts ignore (operators/analytics.dwell_time,
-    composing the hash-verified scd2_history)."""
-    from frogocr_spark.operators.analytics import dwell_time
-    ev = _read(spark, sf_dir, "events")
-    return dwell_time(ev, "user_id", "event_type")
-
-
-def _q_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time disorder per user — the statistic that TUNES a
-    streaming watermark delay: an event is LATE if its event time
-    precedes the running max of earlier ARRIVALS (event_id order);
-    max_lateness_us is the smallest delay that would have dropped
-    nothing.  One keyed window + one keyed agg
-    (operators/analytics.disorder_stats)."""
-    from frogocr_spark.operators.analytics import disorder_stats
-    ev = _read(spark, sf_dir, "events")
-    return disorder_stats(ev, "user_id")
-
-
-def _q_sparse_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned-sparse-retrieval shape (SPLADE-family): embeddings
-    sparsified to integer components with |q| >= 0.2·10⁴ (~11% density)
-    stored as posting rows, then top-10 by EXACT int64 sparse dot via
-    the index-keyed posting join — cost = posting collisions, not
-    N·Q·dim (operators/similarity.sparsify + sparse_dot_topk)."""
-    from frogocr_spark.operators.similarity import (sparse_dot_topk,
-                                                    sparsify)
-    emb = _read(spark, sf_dir, "embeddings")
-    corpus = sparsify(emb, min_abs=2000)
-    qs = sparsify(emb.where("vec_id < 5"), min_abs=2000)
-    return sparse_dot_topk(corpus, qs, top_k=10)
-
-
-def _q_conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-to-convert distribution: per user the lag from FIRST signup
-    to the FIRST purchase strictly after it, summarized by exact
-    nearest-rank quantiles — the product-analytics latency metric,
-    composed from two verified pieces (one conditional-min agg per
-    user + analytics.quantile_summary); integer micros end to end."""
-    from frogocr_spark.operators.analytics import quantile_summary
-    ev = _read(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    per_user = (ev.groupBy("user_id")
-                .agg(F.min(F.when(F.col("event_type") == "signup", us))
-                     .alias("_s")))
-    first_purchase = (ev.select("user_id", us.alias("_us"),
-                                F.col("event_type"))
-                      .join(per_user, "user_id")
-                      .where((F.col("event_type") == "purchase")
-                             & F.col("_s").isNotNull()
-                             & (F.col("_us") > F.col("_s")))
-                      .groupBy("user_id", "_s")
-                      .agg(F.min("_us").alias("_p")))
-    lags = first_purchase.select(
-        "user_id", (F.col("_p") - F.col("_s")).alias("lag_us"),
-        F.lit("all").alias("_g"))
-    return (quantile_summary(lags, "_g", F.col("lag_us"), "user_id",
-                             ps=(25, 50, 75, 95))
-            .drop("_g"))
-
-
-def _q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM customer segmentation: per user Recency/Frequency/Monetary,
-    each scored into 3 equi-depth buckets via the range-partitioned
-    global_rank (the equidepth arithmetic — no single-partition
-    window), rolled up per 'r-f-m' segment
-    (operators/analytics.rfm_segments)."""
-    from frogocr_spark.operators.analytics import rfm_segments
-    ev = _read(spark, sf_dir, "events")
-    return rfm_segments(ev, "user_id", F.round(F.col("value") * 100, 0))
-
-
-def _q_iqr_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tukey-fence outlier counts per event type — nearest-rank
-    quartiles with the 1.5·IQR fences tested as 2v < 2·p25 − 3·IQR
-    (all int64; no float 1.5): the robust complement of the 3σ
-    zscore_outliers (operators/analytics.iqr_outliers)."""
-    from frogocr_spark.operators.analytics import iqr_outliers
-    ev = _read(spark, sf_dir, "events")
-    return iqr_outliers(ev, "event_type",
-                        F.round(F.col("value") * 100, 0))
-
-
-_SNM_WINDOW = 3
-_LPA_ROUNDS = 3
-_SSSP_ROUNDS = 4
-PHRASES = ["hash value", "row scan", "fast table",
-           "the line sort", "slow query plan"]
-
-
-def _coevent_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared co-event graph (users sharing a 1-minute window),
-    used by bfs_levels / triangles / assortativity and the new
-    label_propagation / sssp queries."""
-    b = (_read(spark, sf_dir, "events")
-         .select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                        "DIV 60000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    return (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-            .select("src", "dst").dropDuplicates())
-
-
-_COEVENT_EDGES_SQL = (
-    "SELECT a.user_id AS src, b.user_id AS dst FROM "
-    "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-    " FROM events) a JOIN "
-    "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-    " FROM events) b "
-    "ON a.win = b.win AND a.user_id < b.user_id")
-
-
-def _q_snm_blocking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sorted-neighborhood candidate generation (Hernández & Stolfo
-    1995) — the third blocking strategy beside LSH banding and PPJoin
-    prefix filtering: documents sorted by a 12-char text prefix key,
-    every pair within 3 positions a candidate.  The rank comes from
-    the range-partitioned global_rank and the neighborhood self-join
-    is a band join (pairs ≤ w apart co-locate in adjacent rank bands)
-    — never quadratic, no single-partition window
-    (operators/dedup.snm_candidates)."""
-    from frogocr_spark.operators.dedup import snm_candidates
-    docs = _read(spark, sf_dir, "documents")
-    keyed = docs.select(
-        "doc_id", F.substring(F.trim("text"), 1, 12).alias("_k"))
-    return snm_candidates(keyed, "_k", _SNM_WINDOW)
-
-
-def _q_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community detection by synchronous label propagation (Raghavan
-    2007) over the co-event graph: 3 sync rounds, every node adopting
-    the most frequent neighbor+self label, ties to the SMALLEST label
-    — the seedless deterministic LPA variant, so the DuckDB unrolled
-    CTE chain computes identical communities.  Per round ONE gather
-    equi-join + two map-side-combined aggs
-    (operators/graph.label_propagation)."""
-    from frogocr_spark.operators.graph import label_propagation
-    return label_propagation(_coevent_edges(spark, sf_dir),
-                             rounds=_LPA_ROUNDS)
-
-
-def _q_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted multi-source shortest paths (distributed Bellman-Ford,
-    4 relaxation rounds) over the co-event graph with deterministic
-    integer edge weights 1 + (src+dst) % 7 — integer distances make
-    the min-merge order-independent and engine-exact; per round ONE
-    equi-join + ONE map-side-combined min-merge
-    (operators/graph.sssp_int)."""
-    from frogocr_spark.operators.graph import sssp_int
-    edges = (_coevent_edges(spark, sf_dir)
-             .withColumn("w", F.lit(1)
-                         + (F.col("src") + F.col("dst")) % 7))
-    seeds = (_read(spark, sf_dir, "events")
-             .select(F.col("user_id").alias("node"))
-             .where(F.col("node") % 97 == 0).dropDuplicates())
-    return sssp_int(edges, seeds, rounds=_SSSP_ROUNDS)
-
-
-def _q_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theta-sketch set algebra (Dasgupta 2016): |clickers|,
-    |purchasers|, union and EXPLICIT-sample intersection estimates
-    from two KMV sketches — the order-statistic complement of the HLL
-    register sketch (hll_setops), accurate exactly where
-    inclusion-exclusion is worst (small overlaps).  Each side
-    collapses to ≤ k hash rows before the single 1×1 join; 60-bit md5
-    hashes + one truncating wide division per estimate, recomputed
-    bit-for-bit by DuckDB (operators/sketches.kmv_union_intersect)."""
-    from frogocr_spark.operators.sketches import kmv_union_intersect
-    ev = _read(spark, sf_dir, "events")
-    clk = ev.where(F.col("event_type") == "click").select("user_id")
-    pur = ev.where(F.col("event_type") == "purchase").select("user_id")
-    return kmv_union_intersect(clk, pur, "user_id", k=256)
-
-
-def _q_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact phrase search against positional postings: which
-    documents contain each multi-token phrase ADJACENT and in order —
-    the retrieval capability token-level inverted_index cannot answer.
-    Postings materialize ONLY for query-phrase terms (filtered at the
-    scan); a phrase of m terms is m−1 (doc, pos+offset) equi-joins,
-    candidate size bounded by the rarest term
-    (operators/textstats.phrase_search)."""
-    from frogocr_spark.operators.textstats import phrase_search
-    docs = _read(spark, sf_dir, "documents")
-    return phrase_search(docs, PHRASES)
-
-
-def _q_chi2_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square feature selection: the 10 tokens most positively
-    associated with each source by the exact 2×2 contingency
-    chi-square in millionths — DECIMAL(38,0) products, one truncating
-    division, so the per-class rank is engine-exact
-    (operators/featstats.chi2_terms)."""
-    from frogocr_spark.operators.featstats import chi2_terms
-    return chi2_terms(_read(spark, sf_dir, "documents"),
-                      k=10, min_df=3)
-
-
-def _q_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PMI collocation mining (Church & Hanks 1990): the 50 adjacent
-    token pairs with the highest exact scaled lift n_xy·N·10⁶ DIV
-    (n_x·n_y) — log-free because log is monotone; bigrams by index-zip
-    inside each document (a pure map, no positional self-join)
-    (operators/featstats.pmi_bigrams)."""
-    from frogocr_spark.operators.featstats import pmi_bigrams
-    return pmi_bigrams(_read(spark, sf_dir, "documents"),
-                       k=50, min_count=5)
-
-
-def _q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on a deterministic A/B split (variant =
-    user_id % 2, conversion = any purchase): the pooled z² compared to
-    1.96² as ONE exact integer cross-multiplication — the significance
-    decision can never flip on a float ulp
-    (operators/featstats.two_prop_test)."""
-    from frogocr_spark.operators.featstats import two_prop_test
-    return two_prop_test(_read(spark, sf_dir, "events"))
-
-
-def _q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document lexical-diversity profile: token/type/hapax
-    counts, the Gini-Simpson repeat numerator Σc·(c−1), and the exact
-    type/token ratio in millionths — the vocabulary-health gate next
-    to the Gopher repetition stats
-    (operators/featstats.lexical_diversity)."""
-    from frogocr_spark.operators.featstats import lexical_diversity
-    return lexical_diversity(_read(spark, sf_dir, "documents"))
-
-
-# ---- session 12: spatial, winnowing, link prediction, ML prep, -------
-# ---- smoothing/audit analytics, schema evolution, recommendations ----
-
-_SPATIAL_RADIUS = 25
-_SPATIAL_GRID = 1000
-
-
-def _q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grid-blocked spatial self-join: all BUILDING-segment customer
-    pairs within radius 25 on a deterministic md5-derived integer
-    1000x1000 grid — candidate pairs from 3x3 neighbor cells only (an
-    equi-join on the cell key, never quadratic); the oracle keeps the
-    DIRECT quadratic distance predicate, so the hash match proves the
-    blocking rewrite exact (operators/spatial.grid_neighbor_pairs)."""
-    from frogocr_spark.operators.spatial import grid_neighbor_pairs
-    cust = (_read(spark, sf_dir, "customer")
-            .where(F.col("c_mktsegment") == "BUILDING"))
-
-    def coord(tag: str):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.lit(tag), F.col("c_custkey").cast("string"))), 1, 15),
-            16, 10).cast("long") % _SPATIAL_GRID)
-
-    pts = cust.select(F.col("c_custkey").alias("id"),
-                      coord("x:").alias("x"), coord("y:").alias("y"))
-    return grid_neighbor_pairs(pts, "id", "x", "y", _SPATIAL_RADIUS)
-
-
-def _q_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing fingerprints (Schleimer 2003 / MOSS): 4-gram md5
-    hashes, window-5 minima packed as (hash<<15 | pos) so the selection
-    is a plain BIGINT windowed min — any shared 8-token substring
-    shares a fingerprint at ~1/3 the gram density
-    (operators/textstats.winnowing_fingerprints)."""
-    from frogocr_spark.operators.textstats import winnowing_fingerprints
-    docs = _read_split(spark, sf_dir, "documents")
-    return winnowing_fingerprints(docs, ngram=4, window=5)
-
-
-def _q_link_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Link prediction by neighborhood Jaccard over the co-event graph:
-    top-50 non-adjacent pairs by common*10^6 DIV (da+db-common) —
-    center-enumerated wedges, LeftAnti vs the edge set, TakeOrdered cut
-    (operators/graph.jaccard_link_prediction).
-
-    max_center_degree=150 (VERDICT r3 #2): wedges through mega-hub
-    centers cost deg² and carry near-zero Jaccard — standard hub
-    suppression drops them, bounding any single center's fanout.  At
-    sf0.01 (max degree 29) the cap never fires — the capped plan
-    provably equals the uncapped one there; at sf0.1 (degrees to 222)
-    it prunes the densest centers.  The oracle applies the identical
-    cap, so the suppressed plan stays hash-verified."""
-    from frogocr_spark.operators.graph import jaccard_link_prediction
-    return jaccard_link_prediction(_coevent_edges(spark, sf_dir), k=50,
-                                   max_center_degree=150)
-
-
-def _q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Local clustering coefficient per node of the co-event graph:
-    2*tri*10^6 DIV (deg*(deg-1)) in exact millionths over the degree
-    -oriented triangle plan — NULL where deg < 2
-    (operators/graph.clustering_coefficient)."""
-    from frogocr_spark.operators.graph import clustering_coefficient
-    return clustering_coefficient(_coevent_edges(spark, sf_dir))
-
-
-def _q_feat_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick featurization (Weinberger 2009): tokens to 256
-    signed md5 buckets, sparse non-zero (doc, bucket, val) rows — fixed
-    feature width with no vocabulary build; one explode + one keyed
-    agg (operators/ml.feature_hash)."""
-    from frogocr_spark.operators.ml import feature_hash
-    return feature_hash(_read_split(spark, sf_dir, "documents"),
-                        n_buckets=256)
-
-
-def _q_nb_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multinomial Naive-Bayes training table per source: Laplace
-    -smoothed (cnt+1)*10^6 DIV (n_class_tokens+V) over term
-    frequencies, vocab cut at total count >= 3, class priors attached —
-    sparse observed-pairs-only model rows (operators/ml.nb_train)."""
-    from frogocr_spark.operators.ml import nb_train
-    return nb_train(_read_split(spark, sf_dir, "documents"),
-                    min_count=3)
-
-
-def _q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Truncated EWMA (α=1/2, k=8) of event value cents per user over
-    the (ts, event_id) total order — the smoothing recursion restated
-    as an unrolled exact-integer lag sum + ONE truncating division, so
-    no float state can drift across engines or partitionings
-    (operators/analytics.ewma_trunc)."""
-    from frogocr_spark.operators.analytics import ewma_trunc
-    ev = _read(spark, sf_dir, "events")
-    return ewma_trunc(ev, "user_id",
-                      F.floor(F.col("value") * 100), k=8)
-
-
-def _q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lag-1 autocorrelation of event value cents per user: lag pairs
-    under the (ts, event_id) total order fed into the DECIMAL(38,0)
-    -exact moment machinery (the decimal_stats finish) — the
-    time-series memory diagnostic with zero float-sum ambiguity
-    (operators/analytics.moment_stats_exact over lag pairs)."""
-    from pyspark.sql import Window
-    from frogocr_spark.operators.analytics import moment_stats_exact
-    ev = _read(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    cents = F.floor(F.col("value") * 100).cast("long")
-    pairs = (ev.select("user_id", cents.alias("cur"),
-                       F.lag(cents).over(w).alias("prev"))
-             .where(F.col("prev").isNotNull()))
-    return moment_stats_exact(pairs, F.col("prev"), F.col("cur"),
-                              "user_id")
-
-
-def _q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-digit audit of order totals: exact integer digit
-    counts + truncating-division frequencies vs the nine hardcoded
-    log10(1+1/d) millionth constants — the classic synthetic-data /
-    fraud screen as ONE 9-group aggregation
-    (operators/analytics.benford_digits)."""
-    from frogocr_spark.operators.analytics import benford_digits
-    return benford_digits(_read(spark, sf_dir, "orders"),
-                          F.col("o_totalprice"))
-
-
-def _q_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 opening behavior paths: each user's first 3 event types
-    under the (ts, event_id) total order joined with '>' — ONE keyed
-    sorted-array collect + one path count; the oracle uses the rank
-    -window + ordered string_agg formulation, so the hash match proves
-    the two equivalent (operators/analytics.session_paths)."""
-    from frogocr_spark.operators.analytics import session_paths
-    return session_paths(_read(spark, sf_dir, "events"),
-                         "user_id", "event_type", depth=3, k=20)
-
-
-def _q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema-evolution union: the 'old' order feed (key, cents) and
-    the 'new' feed (key, cents, priority) combined with
-    unionByName(allowMissingColumns=True) — the mergeSchema read shape;
-    the oracle is the literal ANSI UNION ALL with NULL padding.  Split
-    is deterministic (o_orderkey % 10): no data rewrite, pure map."""
-    od = _read(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice") * 100, 0).cast("long")
-    old = (od.where(F.col("o_orderkey") % 10 < 3)
-           .select("o_orderkey", cents.alias("cents")))
-    new = (od.where(F.col("o_orderkey") % 10 >= 3)
-           .select("o_orderkey", cents.alias("cents"),
-                   F.col("o_orderpriority").alias("priority")))
-    return old.unionByName(new, allowMissingColumns=True)
-
-
-def _q_recs_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Item-based collaborative filtering: top-5 recommended parts per
-    part by basket Jaccard n_ab*10^6 DIV (n_a+n_b-n_ab) over order
-    baskets — pair generation bounded by basket size (<= 13 parts per
-    order here; the assoc_rules mega-basket guard pattern), both
-    directions ranked per item with a keyed window."""
-    li = _read(spark, sf_dir, "lineitem")
-    bp = li.select(F.col("l_orderkey").alias("bk"),
-                   F.col("l_partkey").alias("item")).dropDuplicates()
-    pop = bp.groupBy("item").agg(F.count(F.lit(1)).alias("n"))
-    a = bp.select("bk", F.col("item").alias("pa"))
-    b = bp.select("bk", F.col("item").alias("pb"))
-    co = (a.join(b, "bk").where(F.col("pa") < F.col("pb"))
-          .groupBy("pa", "pb").agg(F.count(F.lit(1)).alias("n_ab")))
-    both = co.unionByName(
-        co.select(F.col("pb").alias("pa"), F.col("pa").alias("pb"),
-                  "n_ab"))
-    scored = (both
-              .join(pop.select(F.col("item").alias("pa"),
-                               F.col("n").alias("n_a")), "pa")
-              .join(pop.select(F.col("item").alias("pb"),
-                               F.col("n").alias("n_b")), "pb")
-              .withColumn("jac_e6",
-                          F.expr("(n_ab * 1000000) DIV "
-                                 "(n_a + n_b - n_ab)")))
-    from pyspark.sql import Window
-    w = Window.partitionBy("pa").orderBy(
-        F.col("jac_e6").desc(), F.col("pb").asc())
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= 5)
-            .select(F.col("pa").alias("part"),
-                    F.col("pb").alias("rec"),
-                    F.col("n_ab").cast("long").alias("n_ab"),
-                    "jac_e6", F.col("rank").cast("int").alias("rank")))
-
-
-# ---- session 13: Hilbert layout, RAKE, drift, recursive CTE ----------
-
-RECURSIVE_CTE_TEXT = """
-    WITH RECURSIVE nodes AS (
-        SELECT DISTINCT user_id + 1 AS id FROM events
-    ), walk (id, anc, depth) AS (
-        SELECT id, id, CAST(0 AS BIGINT) FROM nodes
-        UNION ALL
-        SELECT id, CAST(floor(anc / 2) AS BIGINT), depth + 1
-        FROM walk WHERE anc > 1
-    )
-    SELECT id, max(depth) AS depth_to_root,
-           CAST(count(*) AS BIGINT) AS chain_len,
-           CAST(sum(anc) AS BIGINT) AS anc_sum
-    FROM walk GROUP BY id
-"""
-
-
-def _q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The recursive-CTE SQL surface (Spark 4 WITH RECURSIVE): an
-    ancestor walk up the implicit binary hierarchy parent = id DIV 2
-    (the org-chart / category-tree shape) — depth to root, chain
-    length, exact ancestor-id sum.  Single source of truth: Spark
-    executes the EXACT text DuckDB runs (``RECURSIVE_CTE_TEXT``), the
-    sql_surface pattern — the two recursions cannot drift.  The
-    per-node chain is O(log id), so the recursion materializes
-    n·log n rows — never quadratic; floor(anc / 2) is exact in double
-    far past any id here (documented)."""
-    _read(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql(RECURSIVE_CTE_TEXT)
-
-
-def _q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hilbert-curve clustering value (the locality-stronger sibling of
-    zorder_layout — no diagonal jumps, tighter per-file min-max at the
-    same bits): the classic xy→d rotate/reflect walk as one named
-    projection per level — a pure map stage, no shuffle; the oracle
-    runs the identical per-level arithmetic as a chained CTE
-    (operators/layout.hilbert_index / hilbert_sql_query)."""
-    from frogocr_spark.operators.layout import hilbert_index
-    ev = (_read(spark, sf_dir, "events")
-          .select("event_id", (F.col("user_id") % 1024).alias("x"),
-                  (F.floor("value").cast("long") % 1024).alias("y")))
-    return hilbert_index(ev, "x", "y", bits=10).select("event_id",
-                                                       "hval")
-
-
-def _q_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RAKE keyword extraction (Rose 2010): top-15 candidate phrases
-    (maximal non-stopword runs ≤ 4 words, gaps-and-islands per doc) by
-    the exact integer deg/freq score Σ(deg·10^6 DIV freq) — corpus
-    keyphrases for indexing/tagging
-    (operators/textstats.rake_keywords)."""
-    from frogocr_spark.operators.textstats import rake_keywords
-    return rake_keywords(_read_split(spark, sf_dir, "documents"),
-                         k=15, max_len=4)
-
-
-def _q_drift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-drift audit: chi-square homogeneity of the
-    event-type mix between the early and late halves of the corpus
-    window (integer midpoint-day split) — per-category contribution as
-    ONE exact DECIMAL(38,0) expression; one conditional-count agg over
-    a single scan (operators/analytics.drift_chi2)."""
-    from frogocr_spark.operators.analytics import drift_chi2
-    return drift_chi2(_read(spark, sf_dir, "events"), "event_type")
-
-
-def _q_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hour-of-day seasonality profile per event type: integer epoch
-    -hour % 24 (no calendar/timezone rules), exact share_e6 = n·10^6
-    DIV n_type — the traffic-shape report; one keyed agg + a
-    broadcast-sized totals join."""
-    ev = _read(spark, sf_dir, "events")
-    hod = F.expr("(unix_micros(CAST(ts AS TIMESTAMP)) "
-                 "DIV 3600000000) % 24")
-    per = (ev.select("event_type", hod.alias("hour"))
-           .groupBy("event_type", "hour")
-           .agg(F.count(F.lit(1)).alias("n")))
-    tot = per.groupBy("event_type").agg(F.sum("n").alias("n_type"))
-    return (per.join(F.broadcast(tot), "event_type")
-            .withColumn("share_e6", F.expr("(n * 1000000) DIV n_type"))
-            .select("event_type", F.col("hour").cast("int").alias("hour"),
-                    F.col("n").cast("long").alias("n"), "share_e6"))
-
-
-# ---- session 14: bitmaps, exponential histogram, weighted median, ----
-# ---- 2-hop reach, char-class stats, JSON key profiling ---------------
-
-
-def _q_activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user hour-of-day activity bitmap packed into ONE int64 via
-    the bit_or monoid (idempotent set-union aggregation — the roaring
-    -bitmap presence encoding for small domains) + bit_count distinct
-    hours; one map-side-combined keyed agg
-    (operators/analytics.activity_bitmap)."""
-    from frogocr_spark.operators.analytics import activity_bitmap
-    return activity_bitmap(_read(spark, sf_dir, "events"), "user_id")
-
-
-def _q_log2_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Power-of-two exponential histogram of value cents per event type
-    (the DDSketch/HdrHistogram bucketing family): bucket =
-    floor(log2(v)) computed EXACTLY as length(bin(v))−1 — the binary
-    -digit-count identity replaces libm's log and its rounding
-    ambiguity; ≤ 63 buckets of state per group
-    (operators/analytics.log2_histogram)."""
-    from frogocr_spark.operators.analytics import log2_histogram
-    ev = _read(spark, sf_dir, "events")
-    return log2_histogram(ev, "event_type",
-                          F.floor(F.col("value") * 100))
-
-
-def _q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact weighted median of floor(value) per event type with
-    deterministic integer weights 1 + user_id % 5: smallest v with
-    2·cumw ≥ totw under the total (v, event_id) order — the
-    nearest-rank discipline generalized to weights; ONE keyed window
-    (operators/analytics.weighted_median)."""
-    from frogocr_spark.operators.analytics import weighted_median
-    ev = _read(spark, sf_dir, "events")
-    return weighted_median(ev, "event_type",
-                           F.floor(F.col("value")),
-                           F.lit(1) + F.col("user_id") % 5)
-
-
-def _q_graph_2hop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Friend-of-friend audience: distinct nodes within ≤ 2 hops per
-    node of the co-event graph — one adjacency self-join on the middle
-    node + distinct + keyed count (operators/graph.two_hop_reach).
-
-    max_mid_degree=32 (VERDICT r3 #2/#3): the uncapped wedge bound is
-    Σdeg² — 33M wedge rows on this dense synthetic graph at sf0.1, and
-    quadratic in ONE hub on a power-law graph at 100 TB.  The cap
-    truncates each middle node to its 32 smallest-id neighbors
-    (join bound drops to Σ deg·min(deg,32) — linear in hub degree) and
-    flags every possibly-undercounting row ``capped`` — the oracle
-    applies the identical truncation, so the capped plan is still
-    hash-verified end to end.  The flag is the cheap linear-cost
-    over-approximation (every hub-adjacent node); the exact flag is
-    the separate ``graph_2hop_precise`` row."""
-    from frogocr_spark.operators.graph import two_hop_reach
-    return two_hop_reach(_coevent_edges(spark, sf_dir), max_mid_degree=32)
-
-
-def _q_graph_2hop_precise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audit-mode twin of ``graph_2hop`` (VERDICT r4 #6):
-    ``precise_capped=True`` flags EXACTLY the nodes whose reported
-    2-hop count undercounts — the truncated wedge candidates are
-    anti-joined against the kept reach pairs, so a hub-adjacent node
-    that reaches every truncated candidate through kept paths is
-    UNflagged (the cheap flag over-approximates and marks it).
-
-    Deliberately re-pays the wedge bound the cap avoids
-    (Σ_hub deg·(deg−cap) lost-candidate rows — there is no cheaper
-    exact-membership plan): run it to AUDIT the cheap flag's
-    over-approximation rate at affordable SFs, not as the 10^12-node
-    default.  Counts are identical to ``graph_2hop``; only ``capped``
-    narrows."""
-    from frogocr_spark.operators.graph import two_hop_reach
-    return two_hop_reach(_coevent_edges(spark, sf_dir), max_mid_degree=32,
-                         precise_capped=True)
-
-
-def _q_dedup_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTISET (weighted) Jaccard near-dup pairs (round 4):
-    WJ = Σmin(cnt)/Σmax(cnt) ≥ 0.8 over whitespace tokens — the
-    multiplicity-aware companion the set-based dedup_jaccard cannot
-    express (identical token SETS with different repetition profiles
-    score 1.0 there).  df-cap 256: tokens in more than 256 documents
-    are dropped BEFORE the candidate join (the set-similarity-join
-    boilerplate cap — this corpus's 31-token core vocabulary appears
-    in ~78% of documents and would fan out quadratically; the measure
-    is DEFINED over the capped token space, masses taken after the
-    cap).  Integer-exact cut and ratio
-    (operators/dedup.weighted_jaccard_pairs)."""
-    from frogocr_spark.operators.dedup import weighted_jaccard_pairs
-    docs = _read_split(spark, sf_dir, "documents")
-    return weighted_jaccard_pairs(docs, "doc_id", "text",
-                                  threshold_millis=800, max_df=256)
-
-
-def _q_graph_nf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Neighborhood function / HyperANF (Boldi, Rosa & Vigna 2011)
-    over the SECOND-resolution co-event graph (sparse: max degree 10
-    at sf0.1, so the ball genuinely grows over k = 0..4 instead of
-    saturating) — per k, integer cross-node register aggregates of the
-    HLL ball sketches; the distance-distribution audit (avg distance,
-    effective diameter) computable at 10^12 nodes because per-node
-    state is ≤ m registers and each round is one edge equi-join
-    (operators/graph.neighborhood_function)."""
-    from frogocr_spark.operators.graph import neighborhood_function
-    b = (_read(spark, sf_dir, "events")
-         .select(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                        "DIV 1000000").alias("win"), "user_id")
-         .dropDuplicates())
-    a1 = b.select("win", F.col("user_id").alias("src"))
-    a2 = b.select("win", F.col("user_id").alias("dst"))
-    edges = (a1.join(a2, "win").where(F.col("src") < F.col("dst"))
-             .select("src", "dst").dropDuplicates())
-    return neighborhood_function(edges, max_k=4, p=8)
-
-
-def _q_graph_2hop_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded-state 2-hop reach (round 4): per node a deterministic
-    -HLL estimate of the ≤2-hop audience — the 10^12-node scale path
-    where NO wedge is ever materialized: per-node state ≤ m register
-    rows, the 2-hop gather is ONE edge equi-join over register rows
-    (Σ deg·min(deg, m) — linear in hub degree), then the idempotent
-    (node, bucket) max merge (operators/graph.two_hop_reach_hll over
-    the sketches.hll_registers machinery).  Registers are a pure
-    function of the neighbor SET, so the composed sketch equals
-    sketching the exact 2-ball bit-for-bit (pytest); the DuckDB oracle
-    recomputes hash, registers, merge and finish exactly."""
-    from frogocr_spark.operators.graph import two_hop_reach_hll
-    return two_hop_reach_hll(_coevent_edges(spark, sf_dir), p=8)
-
-
-def _q_charclass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document character-class profile (printable-ASCII / digit /
-    upper / space counts + exact ascii_e6 ratio) — the encoding-noise
-    quality gate; classes restricted to explicit ASCII ranges so Java
-    regex and RE2 agree byte-for-byte; pure map stage
-    (operators/textstats.charclass_stats)."""
-    from frogocr_spark.operators.textstats import charclass_stats
-    return charclass_stats(_read(spark, sf_dir, "documents"))
-
-
-def _q_json_keys_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON payload schema profiling: per key of the events ``props``
-    object — row count, distinct-value count, min/max value text (the
-    schema-inference audit a lake runs before promoting a JSON column
-    to typed).  Spark explodes from_json map<string,string>; the
-    DuckDB oracle uses lateral json_each — the hash match pins the two
-    engines' JSON walks as agreeing (numeric-valued props by
-    construction; quoted-string representation differs by design and
-    is documented)."""
-    ev = _read(spark, sf_dir, "events")
-    kv = ev.select(F.explode(
-        F.from_json(F.col("props"), "map<string,string>"))
-        .alias("key", "val"))
-    return (kv.groupBy("key")
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.countDistinct("val").alias("n_distinct"),
-                 F.min(F.col("val").cast("long")).alias("min_val"),
-                 F.max(F.col("val").cast("long")).alias("max_val"))
-            .select("key", F.col("n").cast("long").alias("n"),
-                    F.col("n_distinct").cast("long").alias("n_distinct"),
-                    "min_val", "max_val"))
-
-
-# ---- session 15: TWAP, Hamilton allocation, WoW trend, sentences ------
-
-_ALLOC_TOTAL = 1000
-
-
-def _q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Time-weighted average value (cents) per user — each value holds
-    until the user's next event, sums exact in DECIMAL(38,0), one
-    truncating division; one keyed lead window + one map-side-combined
-    agg (operators/analytics.time_weighted_avg)."""
-    from frogocr_spark.operators.analytics import time_weighted_avg
-    ev = _read(spark, sf_dir, "events")
-    return time_weighted_avg(ev, "user_id",
-                             F.floor(F.col("value") * 100))
-
-
-def _q_lrm_alloc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Largest-remainder (Hamilton) proportional allocation: exactly
-    1000 sampling-quota units distributed across event types by event
-    count — floored quotas + largest fractional remainders, ties by
-    key; Σ alloc == 1000 ALWAYS, every step integer-exact
-    (operators/analytics.largest_remainder_alloc)."""
-    from frogocr_spark.operators.analytics import largest_remainder_alloc
-    counts = (_read(spark, sf_dir, "events")
-              .groupBy("event_type").agg(F.count(F.lit(1)).alias("n")))
-    return largest_remainder_alloc(counts, "event_type", F.col("n"),
-                                   _ALLOC_TOTAL)
-
-
-def _q_wow_change(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Week-over-week traffic trend per event type: integer epoch-week
-    counts, lag to the previous OBSERVED week, exact
-    delta_e6 = (n − prev)·10^6 DIV prev (NULL for each type's first
-    week) — one keyed agg + one keyed lag window."""
-    from pyspark.sql import Window
-    ev = _read(spark, sf_dir, "events")
-    week = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                  "DIV 604800000000")
-    per = (ev.select("event_type", week.alias("week"))
-           .groupBy("event_type", "week")
-           .agg(F.count(F.lit(1)).alias("n")))
-    w = Window.partitionBy("event_type").orderBy("week")
-    return (per.withColumn("prev", F.lag("n").over(w))
-            .withColumn("delta_e6",
-                        F.when(F.col("prev") > 0,
-                               F.expr("((n - prev) * 1000000) "
-                                      "DIV prev")))
-            .select("event_type", F.col("week").cast("long").alias("week"),
-                    F.col("n").cast("long").alias("n"),
-                    F.col("prev").cast("long").alias("prev"),
-                    "delta_e6"))
-
-
-def _q_sentence_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document sentence segmentation profile ([.!?]+ heuristic,
-    portable regex class): sentence/token/max counts + exact mean
-    tokens-per-sentence — the readability gate beside line_filters
-    (operators/textstats.sentence_stats)."""
-    from frogocr_spark.operators.textstats import sentence_stats
-    return sentence_stats(_read(spark, sf_dir, "documents"))
-
-
-# ---- session 16: rank test, Spearman, AMS F2 --------------------------
-
-
-def _q_rank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Whitney rank test (click vs purchase value cents), decided
-    EXACTLY: ranks from the range-partitioned global_rank (no global
-    sort), the z² cut as ONE DECIMAL(38,0) cross-multiplication — the
-    nonparametric A/B gate beside the parametric ab_test
-    (operators/analytics.mannwhitney_u)."""
-    from frogocr_spark.operators.analytics import mannwhitney_u
-    ev = _read(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100)
-    return mannwhitney_u(
-        ev.where(F.col("event_type") == "click"),
-        ev.where(F.col("event_type") == "purchase"),
-        cents, "event_id")
-
-
-def _q_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spearman rank correlation between customer account balance and
-    total order spend: both variables replaced by deterministic ranks
-    (row_number under (value, key) — tie policy documented), then the
-    DECIMAL(38,0)-exact Pearson machinery — the monotone-association
-    diagnostic immune to outliers; BOTH rank passes ride the
-    range-partitioned global_rank (no single-partition sort even
-    though customers are merely dimension-sized — at SF1000 they are
-    not), moments exact
-    (operators/analytics.moment_stats_exact over ranks)."""
-    from frogocr_spark.operators.analytics import moment_stats_exact
-    from frogocr_spark.operators.ranking import global_rank
-    cust = _read(spark, sf_dir, "customer")
-    spend = (_read(spark, sf_dir, "orders")
-             .groupBy(F.col("o_custkey").alias("c_custkey"))
-             .agg(F.sum(F.round(F.col("o_totalprice") * 100, 0)
-                        .cast("long")).alias("spend_cents")))
-    j = (cust.select("c_custkey",
-                     F.round(F.col("c_acctbal") * 100, 0).cast("long")
-                     .alias("bal_cents"))
-         .join(spend, "c_custkey"))
-    rb = global_rank(j, ["bal_cents", "c_custkey"], rank_col="rb")
-    rs = global_rank(j.select("c_custkey", "spend_cents"),
-                     ["spend_cents", "c_custkey"], rank_col="rs")
-    ranked = (rb.join(rs.select("c_custkey", "rs"), "c_custkey")
-              .withColumn("grp", F.lit("all")))
-    return moment_stats_exact(ranked, F.col("rb"), F.col("rs"), "grp")
-
-
-def _q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMS tug-of-war sketch (Alon-Matias-Szegedy 1996): the second
-    frequency moment F2 = Σf(k)² of the user-activity distribution —
-    the self-join-size/skew indicator — estimated from 16 deterministic
-    md5 ±1 cells next to the exact value; sketch state is 16 longs per
-    partition regardless of the key universe
-    (operators/sketches.ams_f2_estimate)."""
-    from frogocr_spark.operators.sketches import ams_f2_estimate
-    return ams_f2_estimate(_read(spark, sf_dir, "events"),
-                           "user_id", reps=16)
-
-
-# ---- session 17: DP release, embedding dim stats, null-safe join ------
-
-
-def _q_dp_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Differential-privacy-style release: per-event-type counts with
-    two-sided geometric noise at ε = ln 2 (Ghosh 2009 — the integer
-    utility-optimal mechanism), inverse CDF as an authoring-time EXACT
-    integer threshold table over a 60-bit md5 draw — the release
-    pipeline (sensitivity-1 count → clipped geometric noise →
-    non-negative clamp) verified bit-for-bit; production swaps the md5
-    draw for a secret-seeded RNG (documented seam)
-    (operators/quality.dp_noisy_counts)."""
-    from frogocr_spark.operators.quality import dp_noisy_counts
-    return dp_noisy_counts(_read(spark, sf_dir, "events"),
-                           "event_type")
-
-
-def _q_emb_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension embedding statistics (the feature-scaling /
-    dead-dimension audit before similarity work): values quantized to
-    the established integer grid floor(v·4096), then exact
-    DECIMAL(38,0) moments per dimension — mean/variance that cannot
-    drift with partitioning (operators/analytics.moment_stats_exact
-    machinery, x = y per dimension)."""
-    from frogocr_spark.operators.analytics import moment_stats_exact
-    emb = _read(spark, sf_dir, "embeddings")
-    dims = emb.select(F.posexplode(
-        F.expr("transform(embedding, "
-               "v -> CAST(floor(v * 4096) AS BIGINT))"))
-        .alias("dim", "q"))
-    return (moment_stats_exact(dims, F.col("q"), F.col("q"), "dim")
-            .select("dim", "n", "mean_x", "var_x"))
-
-
-def _q_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The null-safe equality surface: Spark's ``<=>`` vs ANSI
-    ``IS NOT DISTINCT FROM`` — a derived NULL-able bucket key (NULL for
-    sub-unit values) joined null-safely between the click and purchase
-    halves, so NULL keys MATCH EACH OTHER (plain ``=`` silently drops
-    them — the classic silent-row-loss bug this surface exists to
-    avoid); counts per bucket prove the NULL bucket joins."""
-    ev = _read(spark, sf_dir, "events")
-    key = F.when(F.col("value") >= 1,
-                 F.floor("value").cast("long") % 10)
-    clk = (ev.where(F.col("event_type") == "click")
-           .select(key.alias("k"))
-           .groupBy("k").agg(F.count(F.lit(1)).alias("n_click")))
-    pur = (ev.where(F.col("event_type") == "purchase")
-           .select(key.alias("k"))
-           .groupBy("k").agg(F.count(F.lit(1)).alias("n_purchase")))
-    return (clk.join(pur, clk["k"].eqNullSafe(pur["k"]), "inner")
-            .select(clk["k"].alias("bucket"), "n_click", "n_purchase"))
-
-
-# ---- session 18: HHI concentration, readability, kNN classifier ------
-
-
-def _q_hhi_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Herfindahl–Hirschman supplier-concentration index per nation —
-    the market/source-mix concentration audit, exact in 10^-8 units
-    (one truncating DIV over DECIMAL(38,0) sums — a float Σ share²
-    would drift per summation order).  Scale shape: fact table
-    aggregated map-side on the supplier key FIRST, dims broadcast,
-    then one keyed agg per nation (operators/analytics.
-    hhi_concentration)."""
-    from frogocr_spark.operators.analytics import hhi_concentration
-    li = (_read(spark, sf_dir, "lineitem")
-          .groupBy("l_suppkey")
-          .agg(F.sum(F.round(F.col("l_extendedprice") * 100, 0)
-                     .cast("long")).alias("rev_cents")))
-    sup = _read(spark, sf_dir, "supplier")
-    nat = _read(spark, sf_dir, "nation")
-    per = (li.join(F.broadcast(sup),
-                   li["l_suppkey"] == sup["s_suppkey"])
-           .join(F.broadcast(nat),
-                 sup["s_nationkey"] == nat["n_nationkey"])
-           .select("n_name", "rev_cents"))
-    return hhi_concentration(per, "n_name", "rev_cents")
-
-
-def _q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Flesch reading-ease per document, integer-exact (vowel-group
-    syllable heuristic, sentence_stats segmentation, two truncating
-    DIVs) — the classic readability quality gate beside line_filters /
-    lm_filter; pure codegen column expressions, no explode, no shuffle
-    (operators/textstats.flesch_stats)."""
-    from frogocr_spark.operators.textstats import flesch_stats
-    return flesch_stats(_read(spark, sf_dir, "documents"))
-
-
-def _q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """kNN majority-vote classification of 20 query vectors against
-    the corpus (k=5, rounded-cosine rank cut): exact partial-top-k
-    retrieval (shuffle O(P·Q·k), corpus never all-pairs joined) + a
-    deterministic vote (max count, ties → smallest label).  The
-    oracle keeps the quadratic formulation, so the hash match proves
-    the partial-reduction plan (operators/ml.knn_classify)."""
-    from frogocr_spark.operators.ml import knn_classify
-    emb = _read(spark, sf_dir, "embeddings")
-    return knn_classify(emb, emb.where("vec_id < 20"), k=5,
-                        rank_round=4)
-
-
-def _q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact HITS hubs & authorities (2 iterations, sum-
-    normalized by one truncating DIV per half-step — the L2 norm of
-    float HITS is not engine-portable) over the supplier->customer
-    shipment graph; per half-step one gather equi-join + one map-side
-    -combined agg + a 1-row total broadcast
-    (operators/graph.hits_int; oracle = unrolled CTE chain)."""
-    from frogocr_spark.operators.graph import hits_int
-    li = _read(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = _read(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-             .select(F.concat(F.lit("s"), F.col("l_suppkey").cast("string"))
-                     .alias("src"),
-                     F.concat(F.lit("c"), F.col("o_custkey").cast("string"))
-                     .alias("dst"))
-             .distinct())
-    return hits_int(edges, iters=2)
-
-
-def _q_geohash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Standard base-32 geohash encoding (Niemeyer 2008) of synthetic
-    integer-derived customer coordinates — the spatial-layout cell key
-    (prefix = containing cell, the file-skipping / spatial-bucketing
-    primitive).  Quantize + interleave + alphabet map are GENERATED
-    SQL executed verbatim by both engines (layout.geohash_*_sql — the
-    zvalue_sql single-source discipline; canonical test vector
-    u4pruydq pinned in pytest).  Pure map stage: zero shuffles on the
-    100 TB side."""
-    from frogocr_spark.operators.layout import (
-        geohash_base32_sql, geohash_interleave_sql, geohash_quant_sql)
-    cust = _read(spark, sf_dir, "customer")
-    latq = geohash_quant_sql("lat_e2 / 100.0", 20, True)
-    lonq = geohash_quant_sql("lon_e2 / 100.0", 20, False)
-    return (cust
-            .withColumn("lat_e2",
-                        F.expr("c_custkey * 37 % 18000 - 9000"))
-            .withColumn("lon_e2",
-                        F.expr("c_custkey * 73 % 36000 - 18000"))
-            .withColumn("g", F.expr(geohash_interleave_sql(latq, lonq, 8)))
-            .select("c_custkey", "lat_e2", "lon_e2",
-                    F.expr(geohash_base32_sql("g", 8)).alias("gh8"))
-            .withColumn("gh4", F.substring("gh8", 1, 4)))
-
-
-# the SQL-surface single-source-of-truth pattern (see sql_surface /
-# recursive_cte): Spark executes the EXACT text the DuckDB oracle runs,
-# so the two engines' correlated-LATERAL decorrelations are compared on
-# identical input SQL.
-LATERAL_SQL_TEXT = """
-    SELECT n_name, s_suppkey, bal_cents
-    FROM nation, LATERAL (
-        SELECT s_suppkey,
-               CAST(round(s_acctbal * 100, 0) AS BIGINT) AS bal_cents
-        FROM supplier
-        WHERE s_nationkey = n_nationkey
-        ORDER BY bal_cents DESC, s_suppkey
-        LIMIT 3
-    )
-"""
-
-
-def _q_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The correlated-LATERAL surface: per-nation top-3 suppliers by
-    account balance as a LATERAL (ORDER BY ... LIMIT) subquery — the
-    ANSI form of the grouped top-k Spark otherwise writes as a rank
-    window.  Both engines execute LATERAL_SQL_TEXT verbatim (the
-    sql_surface discipline), so the hash match proves Spark's lateral
-    decorrelation against DuckDB's; deterministic via the (balance
-    DESC, suppkey) total order."""
-    for t in ("nation", "supplier"):
-        _read(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql(LATERAL_SQL_TEXT)
-
-
-def _q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct l-diversity audit (Machanavajjhala 2007) of the event
-    stream: quasi-identifiers = (event_type, epoch-day), sensitive =
-    user_id — the k-anonymity companion gate (a k-large group whose
-    rows all share one sensitive value still exposes everyone).  Two
-    keyed aggs, the second over group-profile rows only
-    (operators/quality.l_diversity)."""
-    from frogocr_spark.operators.quality import l_diversity
-    ev = (_read(spark, sf_dir, "events")
-          .withColumn("day", F.expr(
-              "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")))
-    return l_diversity(ev, ["event_type", "day"], "user_id", l=3)
-
-
-def _q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf's-law fit of the corpus vocabulary — the distribution
-    sanity audit of a token universe (slope ≈ −1 for natural text;
-    far off → boilerplate or synthetic junk).  The log-log regression
-    is restated engine-exact: rank and frequency map to integer
-    floor(log2) via the binary-digit-count identity (log2_histogram
-    discipline — no libm), ranks come from the range-partitioned
-    global_rank under the (freq DESC, token) total order, and the
-    slope/intercept/r² ride the proven DECIMAL(38,0) OLS machinery
-    (operators/analytics.ols_fit)."""
-    from frogocr_spark.operators.analytics import ols_fit
-    from frogocr_spark.operators.ranking import global_rank
-    docs = _read_split(spark, sf_dir, "documents")
-    freq = (docs.select(F.explode(F.split(F.trim("text"), r"\s+"))
-                        .alias("token"))
-            .where(F.col("token") != "")
-            .groupBy("token").agg(F.count(F.lit(1)).alias("f"))
-            .withColumn("negf", -F.col("f")))
-    ranked = global_rank(freq, ["negf", "token"], rank_col="r")
-    b = ranked.select(
-        F.lit("all").alias("grp"),
-        (F.length(F.expr("bin(r)")) - 1).alias("x"),
-        (F.length(F.expr("bin(f)")) - 1).alias("y"))
-    return ols_fit(b, F.col("x"), F.col("y"), "grp")
-
-
-def _q_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy k-center (farthest-point) coreset selection over the
-    embedding table — diversity sampling for training-data curation
-    (Gonzalez 1985 2-approximation).  Per round a pure-map distance
-    stage against ≤ k literal centers + one TakeOrdered(1); the
-    oracle re-runs the identical greedy chain unrolled
-    (operators/clustering.maxmin_coreset)."""
-    from frogocr_spark.operators.clustering import maxmin_coreset
-    return maxmin_coreset(_read(spark, sf_dir, "embeddings"), k=6)
-
-
-def _q_soundex_blocks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Phonetic blocking-key profile of the corpus vocabulary:
-    simplified American Soundex as GENERATED ANSI SQL executed
-    verbatim by both engines (functions/phonetic.soundex_sql — the
-    geohash single-source discipline; NARA vectors pinned in pytest),
-    then per-code group stats + the most frequent member under the
-    (freq DESC, token) total order.  The record-linkage blocking
-    sibling of the length-blocked fuzzy join: one token-keyed count +
-    one code-keyed agg, all map-side combinable."""
-    from frogocr_spark.functions.phonetic import soundex_sql
-    docs = _read_split(spark, sf_dir, "documents")
-    freq = (docs.select(F.explode(F.split(F.trim("text"), r"\s+"))
-                        .alias("token"))
-            .where(F.col("token") != "")
-            .groupBy("token").agg(F.count(F.lit(1)).alias("f")))
-    coded = (freq.withColumn("code", F.expr(soundex_sql("token")))
-             .where(F.col("code").isNotNull()))
-    top = F.expr("max_by(token, struct(f, token))")
-    return (coded.groupBy("code")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_tokens"),
-                 F.sum("f").cast("long").alias("total_f"),
-                 F.min("token").alias("min_token"),
-                 top.alias("top_token")))
-
-
-def _q_w_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The IGNORE NULLS window surface (running last-known /
-    first-known over a sparse signal): per user under the (ts,
-    event_id) total order, the running last purchase amount and the
-    user's first purchase amount — ``last_value IGNORE NULLS`` over
-    the running frame + ``first_value IGNORE NULLS`` over the full
-    frame.  Engines place the modifier differently (Spark: after the
-    call; DuckDB: inside the call) — twin texts, hash-compared.
-    Single keyed window, no global sort; amounts as exact cents."""
-    ev = _read(spark, sf_dir, "events")
-    ev.createOrReplaceTempView("events_inw")
-    return spark.sql("""
-        SELECT user_id, event_id,
-               last_value(pc) IGNORE NULLS OVER (
-                   PARTITION BY user_id
-                   ORDER BY unix_micros(CAST(ts AS TIMESTAMP)), event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS last_purchase_cents,
-               first_value(pc) IGNORE NULLS OVER (
-                   PARTITION BY user_id
-                   ORDER BY unix_micros(CAST(ts AS TIMESTAMP)), event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND UNBOUNDED FOLLOWING)
-                   AS first_purchase_cents
-        FROM (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN event_type = 'purchase'
-                        THEN CAST(round(value * 100, 0) AS BIGINT)
-                   END AS pc
-            FROM events_inw
-        )
-    """)
-
-
-def _q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier evaluation report: kNN predictions for 50 query
-    vectors (the knn_classify machinery) rolled into a per-class
-    precision/recall table with exact-millionths ratios (truncating
-    DIV — no float to drift).  Two keyed counts + a diagonal count
-    over the prediction table, joined on the bounded class universe
-    (operators/ml.classification_report)."""
-    from frogocr_spark.operators.ml import (classification_report,
-                                            knn_classify)
-    emb = _read(spark, sf_dir, "embeddings")
-    pred = knn_classify(emb, emb.where("vec_id < 50"), k=5,
-                        rank_round=4)
-    return classification_report(pred)
-
-
-# single-source reshaping text (the sql_surface discipline): both
-# engines execute this EXACT string — wide per-flag aggregate, then
-# UNPIVOT back to long (the melt surface, ANSI since SQL:2016).
-UNPIVOT_SQL_TEXT = """
-    WITH wide AS (
-        SELECT l_returnflag,
-               CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT))
-                    AS BIGINT) AS qty_cents,
-               CAST(sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                    AS BIGINT) AS price_cents,
-               CAST(count(*) AS BIGINT) AS n_rows
-        FROM lineitem GROUP BY l_returnflag
-    )
-    SELECT l_returnflag, metric, val
-    FROM wide UNPIVOT (val FOR metric IN (qty_cents, price_cents,
-                                          n_rows))
-"""
-
-
-def _q_unpivot_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The UNPIVOT (melt) surface — wide-to-long reshaping, the
-    inverse of pivot_counts: both engines run UNPIVOT_SQL_TEXT
-    verbatim, so the hash match pins Spark's UNPIVOT rewrite (an
-    Expand under the hood) against DuckDB's.  One keyed agg + a
-    constant-factor row expansion over GROUP rows only."""
-    _read(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(UNPIVOT_SQL_TEXT)
-
-
-def _q_zorder3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THREE-dimensional Z-order layout audit (real OPTIMIZE ZORDER BY
-    clusters 3-4 columns): lineitem keyed on (suppkey, partkey,
-    ship-epoch-day) through the N-way Morton interleave
-    (layout.zvalue_n — generated SQL, zvalue_sql discipline), bucketed
-    equal-width into 16 z-ranges; per bucket the row count and each
-    dimension's min-max span — the per-file footer-stat tightness a
-    z-layout buys on ALL THREE predicates.  Interleave is a pure map
-    stage; the only non-map work is the 1-row min-max broadcast + one
-    keyed agg."""
-    from frogocr_spark.operators.layout import zvalue_n
-    li = (_read(spark, sf_dir, "lineitem")
-          .select(F.col("l_suppkey").alias("s"),
-                  F.col("l_partkey").alias("p"),
-                  F.expr("unix_micros(CAST(l_shipdate AS TIMESTAMP)) "
-                         "DIV 86400000000").alias("d")))
-    with_z = li.withColumn("zval", zvalue_n(["s", "p", "d"], bits=16))
-    ext = with_z.agg(F.min("zval").alias("_zmin"),
-                     F.max("zval").alias("_zmax"))
-    b = (with_z.crossJoin(F.broadcast(ext))
-         .withColumn("zbucket", F.expr(
-             "CAST((zval - _zmin) * 16 DIV (_zmax - _zmin + 1) "
-             "AS INT)")))
-    return (b.groupBy("zbucket")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_rows"),
-                 F.min("s").alias("min_s"), F.max("s").alias("max_s"),
-                 F.min("p").alias("min_p"), F.max("p").alias("max_p"),
-                 F.min("d").alias("min_d"), F.max("d").alias("max_d")))
-
-
-def _q_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact ROC-AUC of 'does event value separate purchases from
-    clicks': the midrank Mann-Whitney statistic with doubled midranks
-    from an exclusive prefix count over the DISTINCT-score domain —
-    no n⁺·n⁻ pair materialization, no float, true ½-per-tie AUC
-    (operators/analytics.auc_exact)."""
-    from frogocr_spark.operators.analytics import auc_exact
-    ev = (_read(spark, sf_dir, "events")
-          .where(F.col("event_type").isin("click", "purchase")))
-    return auc_exact(ev, F.floor(F.col("value") * 100),
-                     F.col("event_type") == "purchase")
-
-
-def _q_abc_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ABC / Pareto inventory analysis over part revenue: class A while
-    the inclusive cumulative revenue stays within 80 % of the grand
-    total (decided by integer cross-multiplication, no float share),
-    B within 95 %, else C; the cumulative rides the range-partitioned
-    global_cumsum, the grand total is a broadcast 1-row agg
-    (operators/analytics.abc_classes)."""
-    from frogocr_spark.operators.analytics import abc_classes
-    rev = (_read(spark, sf_dir, "lineitem")
-           .groupBy(F.col("l_partkey").alias("k"))
-           .agg(F.sum(F.round(F.col("l_extendedprice") * 100, 0)
-                      .cast("long")).alias("rev_cents")))
-    return abc_classes(rev, "k", "rev_cents")
-
-
-def _q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil–Sen robust trend of daily purchase revenue: median of all
-    pairwise day-to-day slopes, quantized to exact
-    (Δcents·10^6 DIV Δdays) — the 29 %-breakdown estimator a
-    spike-day outlier cannot move.  Corpus work is ONE keyed daily
-    agg; the pair join and median window touch only the
-    calendar-bounded day table (operators/analytics.theil_sen_slope)."""
-    from frogocr_spark.operators.analytics import theil_sen_slope
-    ev = _read(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                             "DIV 86400000000").alias("d"))
-             .agg(F.sum(F.floor(F.col("value") * 100))
-                  .cast("long").alias("cents")))
-    return theil_sen_slope(daily, "d", "cents")
-
-
-def _q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-trigram language ID (Cavnar–Trenkle family) with the
-    CJK script rule and deterministic argmax — the brief's 'language-ID
-    (n-gram heuristic)' as a first-class profile classifier (the
-    corpus text carries no language signal, so the prediction is the
-    same deterministic function on both engines; real multilingual
-    behavior is pinned by pytest fixtures)."""
-    from frogocr_spark.operators.textstats import langid_ngram
-    return langid_ngram(_read(spark, sf_dir, "documents"))
-
-
-def _q_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Gini coefficient of part revenue — the inequality curve
-    integral next to hhi_supplier's point measure; rank-formula
-    numerator/denominator all DECIMAL(38,0), ranks from the
-    range-partitioned global_rank (operators/analytics.gini_exact)."""
-    from frogocr_spark.operators.analytics import gini_exact
-    rev = (_read(spark, sf_dir, "lineitem")
-           .groupBy(F.col("l_partkey").alias("k"))
-           .agg(F.sum(F.round(F.col("l_extendedprice") * 100, 0)
-                      .cast("long")).alias("rev_cents")))
-    return gini_exact(rev, "k", "rev_cents")
-
-
-def _q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-a of daily purchase revenue vs time — the ordinal
-    sibling of theil_sen (sign strength of the monotone trend, ±1/0
-    pair votes, one truncating division).  Corpus work is the same ONE
-    keyed daily agg; pairs live on the calendar-bounded day table
-    (operators/analytics.kendall_tau_a)."""
-    from frogocr_spark.operators.analytics import kendall_tau_a
-    ev = _read(spark, sf_dir, "events")
-    daily = (ev.where(F.col("event_type") == "purchase")
-             .groupBy(F.expr("unix_micros(CAST(ts AS TIMESTAMP)) "
-                             "DIV 86400000000").alias("d"))
-             .agg(F.sum(F.floor(F.col("value") * 100))
-                  .cast("long").alias("cents")))
-    return kendall_tau_a(daily, "d", "cents")
-
-
-def _q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohen's kappa between two deterministic document labelers
-    (char-length vs token-count 'long/short' gates) — the
-    chance-corrected agreement audit of a labeling pipeline; confusion
-    matrix is ONE map-side-combined keyed count
-    (operators/analytics.cohen_kappa)."""
-    from frogocr_spark.operators.analytics import cohen_kappa
-    from frogocr_spark.operators.textstats import token_count
-    docs = _read(spark, sf_dir, "documents").select(
-        F.when(F.col("n_chars") >= 300, "long").otherwise("short")
-        .alias("rater_a"),
-        F.when(token_count(F.col("text")) >= 50, "long")
-        .otherwise("short").alias("rater_b"))
-    return cohen_kappa(docs, "rater_a", "rater_b")
-
-
-def _q_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-ingest-batch corpus novelty: share of each batch's distinct
-    word 8-grams first seen in that batch (batch = doc_id DIV 50, the
-    arrival-order proxy) — the crawl-freshness metric of an incremental
-    pipeline (operators/textstats.novelty_rate)."""
-    from frogocr_spark.operators.textstats import novelty_rate
-    docs = (_read(spark, sf_dir, "documents")
-            .withColumn("batch", F.expr("doc_id DIV 50")))
-    return novelty_rate(docs, "batch")
-
-
-def _q_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability-diagram calibration of the purchase-vs-click score —
-    auc_roc's companion (ranking there, LEVEL here): 10 equal-width
-    bins over the observed score range, per-bin positive rate vs
-    normalized mean score and their gap, all truncating e6 divisions
-    (operators/ml.calibration_bins)."""
-    from frogocr_spark.operators.ml import calibration_bins
-    ev = (_read(spark, sf_dir, "events")
-          .where(F.col("event_type").isin("click", "purchase")))
-    return calibration_bins(ev, F.floor(F.col("value") * 100),
-                            F.col("event_type") == "purchase")
-
-
-def _q_neg_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic contrastive negative sampling: 3 negatives per
-    document from the md5-shuffled ring, exact duplicates of the anchor
-    rejected — seedless, append-aware, skew-free equi-join on the ring
-    rank (operators/ml.ring_negatives)."""
-    from frogocr_spark.operators.ml import ring_negatives
-    return ring_negatives(_read(spark, sf_dir, "documents"), k=3)
-
-
-def _q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Train/val/test contamination audit: exact-duplicate pairs
-    bucketed by split pair via the group-size identity (never the pair
-    space) over the seedless hash_split assignment
-    (operators/quality.split_leakage)."""
-    from frogocr_spark.operators.quality import split_leakage
-    return split_leakage(_read(spark, sf_dir, "documents"))
-
-
-def _q_minmax_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map pruning audit of a BETWEEN predicate ($10k–$20k order
-    totals) against a key-ordered file layout (o_orderkey DIV 1000):
-    files skipped on min/max stats alone + residual read amplification
-    — the measurement that motivates the zorder/hilbert layout rows
-    (operators/layout.zonemap_prune_audit)."""
-    from frogocr_spark.operators.layout import zonemap_prune_audit
-    od = _read(spark, sf_dir, "orders")
-    return zonemap_prune_audit(
-        od, F.expr("o_orderkey DIV 1000"),
-        F.round(F.col("o_totalprice") * 100, 0).cast("long"),
-        1_000_000, 2_000_000)
-
-
-def _q_mojibake(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source encoding-health audit (UTF-8-as-Latin-1 mojibake
-    markers + U+FFFD).  The corpus is clean by construction, so the
-    query augments BOTH sides with the same three literal fixture rows
-    (the pii_scrub discipline) and byte-compares the per-source flag
-    counts (operators/textstats.encoding_audit)."""
-    from frogocr_spark.operators.textstats import encoding_audit
-    docs = _read(spark, sf_dir, "documents").select("source", "text")
-    fixtures = spark.createDataFrame([
-        ("synthetic", "le cafÃ© est servi"),
-        ("synthetic", "itâ€™s here Â now"),
-        ("synthetic", "clean text row"),
-    ], "source string, text string")
-    return encoding_audit(docs.unionByName(fixtures))
-
-
-def _q_fano(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Index of dispersion (Fano factor) of hourly event counts per
-    type — the burstiness audit (Poisson = 1, clumped ≫ 1), exact via
-    (n·Σc² − S²)·10^6 DIV ((n−1)·S) over observed epoch-hour buckets
-    (operators/analytics.fano_dispersion)."""
-    from frogocr_spark.operators.analytics import fano_dispersion
-    ev = _read(spark, sf_dir, "events")
-    return fano_dispersion(
-        ev, "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"))
-
-
-def _q_rate_spikes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-sigma hourly rate-spike detection per event type: the
-    k-sigma decision squared and cross-multiplied into DECIMAL(38,0)
-    (no sqrt, no float — a boundary hour can never flip on an ulp);
-    per-type moments broadcast back onto the bucket counts
-    (operators/analytics.rate_spikes)."""
-    from frogocr_spark.operators.analytics import rate_spikes
-    ev = _read(spark, sf_dir, "events")
-    return rate_spikes(
-        ev, "event_type",
-        F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 3600000000"))
-
-
-def _q_simpson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gini–Simpson vocabulary diversity per source — the
-    template-spam audit (low diversity slice = boilerplate mill);
-    repeat numerator Σc(c−1) integer-exact per slice
-    (operators/analytics.simpson_diversity)."""
-    from frogocr_spark.operators.analytics import simpson_diversity
-    return simpson_diversity(_read(spark, sf_dir, "documents"),
-                             "source")
-
-
-def _q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cramér's V association between source and lang — the
-    corpus-composition confound check; chi-square over the FULL margin
-    cross (zero cells contribute their expectation), each cell one
-    exact integer term, V² emitted without sqrt
-    (operators/analytics.cramers_v)."""
-    from frogocr_spark.operators.analytics import cramers_v
-    return cramers_v(_read(spark, sf_dir, "documents"),
-                     "source", "lang")
-
-
-def _q_eta_squared(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA effect size η² of event value (cents) across
-    event types — variance-explained screening before a segmented
-    model; per-group e6 quantization summed order-independently, every
-    division a truncating DECIMAL DIV
-    (operators/analytics.eta_squared)."""
-    from frogocr_spark.operators.analytics import eta_squared
-    ev = _read(spark, sf_dir, "events")
-    return eta_squared(ev, "event_type", F.floor(F.col("value") * 100))
-
-
-def _q_vocab_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-100 vocabulary turnover between corpus halves (id-midpoint
-    arrival proxy): the lexicon-shift audit, exact Jaccard of
-    deterministic top-k sets
-    (operators/textstats.vocab_drift)."""
-    from frogocr_spark.operators.textstats import vocab_drift
-    return vocab_drift(_read(spark, sf_dir, "documents"), k=100)
-
-
-def _q_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-mass coverage at top-10/100/1000 vocabulary cuts — the
-    Zipf companion for tokenizer-budget decisions; ranks ride
-    global_rank and the curve math touches ≤ max(k) rows
-    (operators/textstats.coverage_curve)."""
-    from frogocr_spark.operators.textstats import coverage_curve
-    return coverage_curve(_read(spark, sf_dir, "documents"))
-
-
-def _q_layout_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Layout-effectiveness shootout: the SAME value predicate
-    (floor(value) BETWEEN 10 AND 20) zone-map-audited under three file
-    layouts — 'key' (event_id ranges: clustering uncorrelated with the
-    predicate), 'zorder' (Morton buckets over (user_id, value):
-    partial value locality), 'value' (equal-width value buckets:
-    perfect locality).  The hash-matched read-amplification ordering
-    value ≤ zorder ≤ key IS the quantified case for OPTIMIZE ZORDER
-    (operators/layout.zorder_buckets + zonemap_prune_audit)."""
-    from frogocr_spark.operators.layout import (zonemap_prune_audit,
-                                                zorder_buckets)
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", F.col("user_id").alias("x"),
-        F.floor(F.col("value")).cast("long").alias("y"))
-    lo, hi = 10, 20
-
-    key = zonemap_prune_audit(ev, F.expr("event_id DIV 5000"),
-                              F.col("y"), lo, hi)
-    zb = zorder_buckets(ev, "x", "y", n_buckets=16, bits=16)
-    zo = zonemap_prune_audit(zb, F.col("zbucket"), F.col("y"), lo, hi)
-    rng = ev.groupBy().agg(F.min("y").alias("ymin"),
-                           F.max("y").alias("ymax"))
-    vb = (ev.crossJoin(F.broadcast(rng))
-          .withColumn("vbucket",
-                      F.expr("((y - ymin) * 16) DIV (ymax - ymin + 1)")))
-    va = zonemap_prune_audit(vb, F.col("vbucket"), F.col("y"), lo, hi)
-    return (key.select(F.lit("key").alias("layout"), "*")
-            .unionByName(zo.select(F.lit("zorder").alias("layout"), "*"))
-            .unionByName(va.select(F.lit("value").alias("layout"), "*")))
-
-
-def _q_time_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chronological 80/2/18 train/embargo/test split over event time —
-    the purged-split leakage control for forward-looking labels; exact
-    integer microsecond boundaries, one min/max broadcast, pure-map
-    labels (operators/ml.time_embargo_split)."""
-    from frogocr_spark.operators.ml import time_embargo_split
-    ev = _read(spark, sf_dir, "events")
-    return time_embargo_split(
-        ev, F.expr("unix_micros(CAST(ts AS TIMESTAMP))"))
-
-
-def _q_ctx_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window fit report at 16/64/256-token cuts (sized to the
-    synthetic corpus's length profile): whole-doc fit fraction and the
-    token mass a hard truncation discards, integer-exact
-    (operators/textstats.context_fit)."""
-    from frogocr_spark.operators.textstats import context_fit
-    return context_fit(_read(spark, sf_dir, "documents"),
-                       cuts=(16, 64, 256))
-
-
-def _q_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE-pretoken fertility per source (pre-tokens per whitespace
-    word) — the token-budget audit that catches punctuation/digit-heavy
-    slices; both counts are the pinned portable definitions
-    (operators/textstats.tokenizer_fertility)."""
-    from frogocr_spark.operators.textstats import tokenizer_fertility
-    return tokenizer_fertility(_read(spark, sf_dir, "documents"))
-
-
-def _q_max_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest repeated-token run per document (gaps-and-islands) —
-    the degenerate-repetition audit for looping generators and
-    navigation boilerplate; deterministic (run DESC, token ASC,
-    start ASC) winner (operators/textstats.max_token_run)."""
-    from frogocr_spark.operators.textstats import max_token_run
-    return max_token_run(_read(spark, sf_dir, "documents"))
-
-
-def _q_dedup_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Detector-agreement meta-audit: the SimHash (hamming ≤ 3) and
-    word-trigram exact-Jaccard (t = 0.7) near-dup detectors run on the
-    SAME corpus, pair sets compared — |A|, |B|, |A∩B| and the
-    set-Jaccard of the two detectors.  The number a dedup pipeline
-    needs before trusting ONE detector at 100 TB: low agreement means
-    the cheap detector is not a substitute for the exact one.  Both
-    constituent pipelines are independently oracle-verified
-    (dedup_simhash, dedup_jaccard_3gram); this audits their RELATION."""
-    from frogocr_spark.operators.dedup import (ngram_jaccard_pairs,
-                                               simhash_near_pairs)
-    docs = _read_split(spark, sf_dir, "documents")
-    a = (simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
-         .select("id_a", "id_b",
-                 F.lit(1).alias("ia"), F.lit(0).alias("ib")))
-    b = (ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.7,
-                             ngram=3)
-         .select("id_a", "id_b",
-                 F.lit(0).alias("ia"), F.lit(1).alias("ib")))
-    m = (a.unionByName(b).groupBy("id_a", "id_b")
-         .agg(F.max("ia").alias("ia"), F.max("ib").alias("ib")))
-    return (m.groupBy()
-            .agg(F.sum("ia").cast("long").alias("n_simhash"),
-                 F.sum("ib").cast("long").alias("n_jaccard3"),
-                 F.sum(F.col("ia") * F.col("ib")).cast("long")
-                 .alias("n_common"))
-            .withColumn("agree_e6", F.when(
-                F.col("n_simhash") + F.col("n_jaccard3")
-                - F.col("n_common") > 0,
-                F.expr("(CAST(n_common AS DECIMAL(38,0)) * 1000000) "
-                       "DIV (n_simhash + n_jaccard3 - n_common)")
-                .cast("long"))))
-
-
-def _q_bloom_fpr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Measured Bloom false-positive rate of the decontamination filter
-    (same eval split and 65536-bit filter as bloom_decontam) against
-    exact anti-join truth — every hit on a provable non-member is a
-    false positive (operators/textstats.bloom_false_positive_rate)."""
-    from frogocr_spark.operators.textstats import \
-        bloom_false_positive_rate
-    docs = _read(spark, sf_dir, "documents")
-    ev = docs.where(F.col("doc_id") % 97 == 0)
-    rest = docs.where(F.col("doc_id") % 97 != 0)
-    # the local test table is ONE parquet row group — same defensive
-    # round-robin as bloom_decontam so the gram explosion uses the cores
-    return bloom_false_positive_rate(
-        rest, ev, m_bits=65536,
-        min_parallelism=spark.sparkContext.defaultParallelism)
-
-
-def _q_hash_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hashing-trick collision audit at 256/1024/4096 widths — the
-    sizing companion to feat_hash, measuring exactly the collisions the
-    featurizer's 60-bit md5 incurs on THIS feature space (word
-    bigrams — the vocabulary that actually stresses small widths)
-    (operators/ml.hash_collision_audit)."""
-    from frogocr_spark.operators.ml import hash_collision_audit
-    return hash_collision_audit(_read(spark, sf_dir, "documents"),
-                                ngram=2)
-
-
-def _q_ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN quality audit — recall@5 of the LSH index against the exact
-    brute-force top-5, per query: THE standard ANN evaluation, and the
-    number that decides whether the 100 TB scale path (bucketed LSH)
-    is allowed to replace the exact quadratic join.  Both constituent
-    pipelines are independently oracle-verified (sim_cosine_topk,
-    sim_cosine_lsh); this audits their RELATION."""
-    from frogocr_spark.operators.similarity import (cosine_topk_bruteforce,
-                                                    cosine_topk_lsh)
-    emb = _read(spark, sf_dir, "embeddings")
-    qs = emb.where("vec_id < 10")
-    exact = (cosine_topk_bruteforce(emb, qs, k=5, rank_round=4)
-             .select("query_id", "neighbor_id",
-                     F.lit(1).alias("ie"), F.lit(0).alias("il")))
-    lsh = (cosine_topk_lsh(emb, qs, k=5, dim=64, score_e4=True)
-           .select("query_id", "neighbor_id",
-                   F.lit(0).alias("ie"), F.lit(1).alias("il")))
-    m = (exact.unionByName(lsh)
-         .groupBy("query_id", "neighbor_id")
-         .agg(F.max("ie").alias("ie"), F.max("il").alias("il")))
-    return (m.groupBy("query_id")
-            .agg(F.sum("ie").cast("long").alias("n_exact"),
-                 F.sum("il").cast("long").alias("n_lsh"),
-                 F.sum(F.col("ie") * F.col("il")).cast("long")
-                 .alias("n_hit"))
-            .withColumn("recall_e6", F.when(
-                F.col("n_exact") > 0,
-                F.expr("(CAST(n_hit AS DECIMAL(38,0)) * 1000000) "
-                       "DIV n_exact").cast("long"))))
-
-
-def _q_group_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type effect report — the segmented follow-up a
-    significant eta_squared demands: exact e6 group means and signed
-    deltas vs the grand mean (operators/analytics.group_effects)."""
-    from frogocr_spark.operators.analytics import group_effects
-    ev = _read(spark, sf_dir, "events")
-    return group_effects(ev, "event_type", F.floor(F.col("value") * 100))
-
-
-def _q_split_leak_near(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEAR-duplicate contamination across the train/val/test split:
-    SimHash near-dup pairs (hamming ≤ 3) tagged with each side's
-    hash_split assignment, rolled up per unordered split combo — the
-    near-dup companion of split_leakage's exact-dup audit (a close
-    paraphrase of a training doc inside the test split inflates eval
-    just as surely as an exact copy, and the exact audit cannot see
-    it).  Both constituent pipelines are independently oracle-verified
-    (dedup_simhash, hash_split); this audits their COMPOSITION.  Scale
-    shape: the pair set (output-bounded) joins the split map twice on
-    bare ids; the rollup is ≤ 6 rows and share_e6 rides an
-    unpartitioned window over those rollup rows only (the
-    bounded-SinglePartition class)."""
-    from pyspark.sql import Window
-
-    from frogocr_spark.operators.dedup import simhash_near_pairs
-    from frogocr_spark.operators.textstats import hash_split
-    docs = _read(spark, sf_dir, "documents")
-    splits = hash_split(docs).select("doc_id", "split")
-    pairs = simhash_near_pairs(docs, "doc_id", "text", max_hamming=3)
-    j = (pairs
-         .join(splits.select(F.col("doc_id").alias("id_a"),
-                             F.col("split").alias("sa")), "id_a")
-         .join(splits.select(F.col("doc_id").alias("id_b"),
-                             F.col("split").alias("sb")), "id_b"))
-    agg = (j.groupBy(F.least("sa", "sb").alias("split_a"),
-                     F.greatest("sa", "sb").alias("split_b"))
-           .agg(F.count(F.lit(1)).cast("long").alias("n_pairs")))
-    tot = F.sum("n_pairs").over(Window.partitionBy())
-    return (agg.withColumn("_tot", tot)
-            .withColumn("share_e6",
-                        F.expr("CAST((CAST(n_pairs AS DECIMAL(38,0)) "
-                               "* 1000000) DIV _tot AS BIGINT)"))
-            .drop("_tot"))
-
-
-def _q_minhash_err(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimator calibration: for every LSH candidate pair the
-    32-hash estimate (an exact rational k/32, scaled e6) is compared
-    against the TRUE word-set Jaccard of the same pair (array_intersect
-    over the distinct-word arrays — integer-exact), rolled up into the
-    calibration report: pair count, mean/max |error|, over/underestimate
-    counts.  The number that sizes num_hashes before trusting the
-    estimate as the dedup threshold at 100 TB (stddev ≈ √(J(1−J)/k)).
-    Both constituent pipelines are independently oracle-verified
-    (dedup_minhash, dedup_jaccard); this audits their RELATION.  Scale
-    shape: true Jaccard is computed ONLY for a deterministic 1/16
-    SAMPLE of the candidate set (first md5 hex digit of "id_a:id_b" =
-    '0' — engine-portable, so the oracle samples identically) via two
-    bare-id joins against the word-set relation — never a second pair
-    enumeration; the report is one global agg.
-
-    Why sampled (r5 sf10 certification finding): the per-pair gather
-    carries BOTH word arrays — ~1 KB × every candidate pair.  Linear
-    in data, but the constant is brutal: at 100× sf0.1 the ~30M-pair
-    census gather shuffled >75 GB and exhausted a single box's disk
-    (SPILL_OUT_OF_MEMORY/ENOSPC, BENCH/bench_r5_sf10.json).  A
-    calibration statistic needs a sample, not a census — the sampled
-    estimator's own stderr at these pair counts is far below the
-    effect sizes the audit exists to detect — and sampling is the
-    formulation you'd run at 10^12 pairs too."""
-    from frogocr_spark.operators.dedup import TOKEN_SPLIT, minhash_lsh_pairs
-    docs = _read(spark, sf_dir, "documents")
-    pairs = minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=32,
-                              bands=4, threshold=0.5, hash_fn="md5")
-    pairs = pairs.where(
-        F.substring(F.md5(F.concat_ws(
-            ":", F.col("id_a").cast("string"),
-            F.col("id_b").cast("string"))), 1, 1) == "0")
-    words = docs.select(
-        "doc_id",
-        F.array_distinct(F.filter(F.split(F.trim(F.col("text")),
-                                          TOKEN_SPLIT),
-                                  lambda w: w != "")).alias("ws"))
-    j = (pairs
-         .join(words.select(F.col("doc_id").alias("id_a"),
-                            F.col("ws").alias("wa")), "id_a")
-         .join(words.select(F.col("doc_id").alias("id_b"),
-                            F.col("ws").alias("wb")), "id_b"))
-    inter = F.size(F.array_intersect("wa", "wb"))
-    per = (j.withColumn("inter", inter)
-           .withColumn("uni", F.size("wa") + F.size("wb") - inter)
-           # est_jaccard = k/32 is dyadic and 1e6/32 = 31250 exactly, so
-           # est*1e6 is an exactly-representable integer-valued double
-           .withColumn("est_e6",
-                       (F.col("est_jaccard") * 1000000).cast("long"))
-           .withColumn("true_e6",
-                       F.expr("CAST((CAST(inter AS DECIMAL(38,0)) "
-                              "* 1000000) DIV uni AS BIGINT)"))
-           .withColumn("err", F.col("est_e6") - F.col("true_e6")))
-    return (per.groupBy()
-            .agg(F.count(F.lit(1)).cast("long").alias("n_pairs"),
-                 F.coalesce(F.sum(F.abs("err")), F.lit(0))
-                 .cast("long").alias("_sum_abs"),
-                 F.max(F.abs("err")).cast("long")
-                 .alias("max_abs_err_e6"),
-                 F.coalesce(F.sum((F.col("err") > 0).cast("long")),
-                            F.lit(0)).cast("long").alias("n_over"),
-                 F.coalesce(F.sum((F.col("err") < 0).cast("long")),
-                            F.lit(0)).cast("long").alias("n_under"))
-            .withColumn("mean_abs_err_e6", F.when(
-                F.col("n_pairs") > 0,
-                F.expr("CAST(CAST(_sum_abs AS DECIMAL(38,0)) "
-                       "DIV n_pairs AS BIGINT)")))
-            .drop("_sum_abs"))
-
-
-def _q_emb_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact integer Gram matrix X'X over the first 16 embedding
-    dimensions on the floor(v·4096) grid — the sufficient statistic for
-    covariance/PCA/whitening.  Spark side is the matrix-partial-
-    aggregation pattern (one numpy X'X fold per task, ≤ d(d+1)/2 partial
-    rows exchanged per partition — NO explode, NO join); the oracle is
-    the textbook per-row index expansion + pairwise product sum, so the
-    hash match proves the scale plan ≡ the definition
-    (operators/similarity.gram_matrix_int)."""
-    from frogocr_spark.operators.similarity import gram_matrix_int
-    emb = _read(spark, sf_dir, "embeddings")
-    return gram_matrix_int(emb, use_dims=16)
-
-
-def _q_avg_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact average precision of 'does event value rank purchases
-    above clicks' — the precision-recall companion of auc_roc (AP is
-    the metric of record under class imbalance, where ROC-AUC
-    flatters): per-positive truncating e6 terms under the (score DESC,
-    event_id) total order, rank and positive-prefix both riding ONE
-    range-partitioned prefix sum via carry-free bit-packing
-    (operators/analytics.average_precision_exact)."""
-    from frogocr_spark.operators.analytics import average_precision_exact
-    ev = (_read(spark, sf_dir, "events")
-          .where(F.col("event_type").isin("click", "purchase")))
-    return average_precision_exact(
-        ev, F.floor(F.col("value") * 100),
-        F.col("event_type") == "purchase", "event_id")
-
-
-def _q_ir_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retrieval-quality report of the BM25 ranker: per-query MRR@10
-    and binary NDCG@10 against deterministic conjunctive-containment
-    qrels, with the irrational log2 discounts pinned as hardcoded e6
-    constants (operators/textstats.ir_eval; oracle composes the
-    verbatim bm25 oracle text, so ranker and evaluator are verified
-    TOGETHER)."""
-    from frogocr_spark.operators.textstats import ir_eval
-    docs = _read(spark, sf_dir, "documents")
-    return ir_eval(docs, BM25_QUERIES)
-
-
-def _q_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top uncentered principal direction + eigenvalue of the embedding
-    corpus via engine-exact fixed-iteration power method over the
-    distributed integer Gram matrix — the spectral follow-up emb_gram
-    enables; all corpus-scale work is the gram partial agg, the
-    iteration is bounded O(iters·d²) driver arithmetic
-    (operators/similarity.power_iteration_int)."""
-    from frogocr_spark.operators.similarity import power_iteration_int
-    emb = _read(spark, sf_dir, "embeddings")
-    return power_iteration_int(emb, use_dims=16, iters=4)
-
-
-def _q_isotonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic (PAVA, minimax form) recalibration of the purchase
-    score over the same 10 bins as `calibration` — the best
-    non-decreasing probability per bin, engine-exact via integer
-    interval keys (operators/ml.isotonic_calibration)."""
-    from frogocr_spark.operators.ml import isotonic_calibration
-    ev = (_read(spark, sf_dir, "events")
-          .where(F.col("event_type").isin("click", "purchase")))
-    return isotonic_calibration(ev, F.floor(F.col("value") * 100),
-                                F.col("event_type") == "purchase")
-
-
-def _q_dup_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-size health profile of the dedup graph: md5-2-hex-bucket
-    chain pairs → star CC (+ singleton coalesce) → log2 size histogram
-    with giant-component fraction — the over-merging alarm.  Oracle
-    knows each component is its bucket, so the hash match proves the
-    CC + profile pipeline end to end
-    (operators/dedup.cluster_size_profile)."""
-    from pyspark.sql import Window
-
-    from frogocr_spark.operators.dedup import (cluster_size_profile,
-                                               dup_clusters_star)
-    docs = _read(spark, sf_dir, "documents").withColumn(
-        "digest", F.substring(F.md5("text"), 1, 2))
-    w = Window.partitionBy("digest").orderBy("doc_id")
-    pairs = (docs.withColumn("prev_id", F.lag("doc_id").over(w))
-             .where(F.col("prev_id").isNotNull())
-             .select(F.col("prev_id").alias("id_a"),
-                     F.col("doc_id").alias("id_b")))
-    comp = dup_clusters_star(pairs)
-    lab = (docs.select("doc_id").join(comp, "doc_id", "left")
-           .withColumn("cluster_id",
-                       F.coalesce("cluster_id", F.col("doc_id"))))
-    return cluster_size_profile(lab)
-
-
-def _q_join_size_est(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS join-cardinality estimate vs the exact join size for the
-    click ⋈ purchase self-join of events on user_id — the
-    optimizer-statistics audit behind join reorder/broadcast decisions
-    (operators/sketches.cms_join_size)."""
-    from frogocr_spark.operators.sketches import cms_join_size
-    ev = _read(spark, sf_dir, "events")
-    return cms_join_size(ev.where(F.col("event_type") == "click"),
-                         ev.where(F.col("event_type") == "purchase"),
-                         "user_id")
-
-
-def _q_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal upper bound on the event value score per event
-    type at alpha=0.1: md5-half calibration split, k-th order statistic
-    k = ceil((n+1)*0.9) via one per-group rank window, held-out
-    empirical coverage audit (operators/ml.conformal_threshold)."""
-    from frogocr_spark.operators.ml import conformal_threshold
-    ev = _read(spark, sf_dir, "events")
-    return conformal_threshold(ev, "event_type",
-                               F.floor(F.col("value") * 100),
-                               "event_id")
-
-
-def _q_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simplified (centroid-based, squared-distance) silhouette of the
-    k=4 k-means clustering — the cluster-quality audit; one pure-map
-    assignment pass + one k-row agg, integer-exact end to end
-    (operators/clustering.kmeans_silhouette)."""
-    from frogocr_spark.operators.clustering import kmeans_silhouette
-    emb = _read(spark, sf_dir, "embeddings")
-    return kmeans_silhouette(emb, k=4, iters=3)
-
-
-def _q_clustering_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact Adjusted Rand Index between the k=4 and k=8 k-means
-    partitions of the embedding corpus — pair-counting agreement,
-    multiplied-through integer formula, bounded k_a·k_b contingency
-    (operators/clustering.kmeans_agreement_ari)."""
-    from frogocr_spark.operators.clustering import kmeans_agreement_ari
-    emb = _read(spark, sf_dir, "embeddings")
-    return kmeans_agreement_ari(emb, k_a=4, k_b=8, iters=3)
-
-
-def _q_spectral2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-2 uncentered principal directions + eigenvalues + explained
-    energy of the embedding corpus: the spectral chain plus one
-    multiplied-through integer deflation (H = (v'v)²G − (v'Gv)vv',
-    truncated) — PCA-pair cartography from ONE distributed Gram fold
-    (operators/similarity.power_iteration_top2)."""
-    from frogocr_spark.operators.similarity import power_iteration_top2
-    emb = _read(spark, sf_dir, "embeddings")
-    return power_iteration_top2(emb, use_dims=16, iters=4)
-
-
-_EDIT_MAX_DIST = 10
-
-
-def _q_dedup_edit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bounded edit-distance similarity join over documents: SNM
-    prefix blocking (12-char key, window 3) + thresholded Levenshtein
-    verify (banded DP, −1 past the bound) — the record-linkage dedup
-    for character-level noise that token-set similarity under-weights.
-    Candidates O(N·w) via the rank band join, never quadratic
-    (operators/dedup.edit_distance_pairs)."""
-    from frogocr_spark.operators.dedup import edit_distance_pairs
-    docs = _read(spark, sf_dir, "documents")
-    return edit_distance_pairs(docs, max_dist=_EDIT_MAX_DIST,
-                               key_len=12, window=_SNM_WINDOW)
-
-
-_COMPACT_TARGET = 2000
-
-
-def _q_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-file compaction planning (Iceberg rewrite_data_files
-    binpack analog): greedy close-at-threshold packing of each
-    source's file manifest into ~target-byte output bins.  Plans over
-    the MANIFEST (one row per file), one group shuffle + per-group
-    Arrow-batch pack; the oracle replays the walk as a recursive CTE
-    (operators/layout.compaction_plan)."""
-    from frogocr_spark.operators.layout import compaction_plan
-    docs = _read(spark, sf_dir, "documents")
-    return compaction_plan(docs, group_col="source", id_col="doc_id",
-                           size_col="n_chars", target=_COMPACT_TARGET)
-
-
-_CV_K = 5
-
-
-def _q_cv_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-fold cross-validation of the exact 1R decision stump over
-    events (same feature/label as `stump`): md5(event_id) mod k folds,
-    per-fold exact train and held-out-test accuracy counts — the
-    generalization audit behind any learned curation rule.  2k bounded
-    passes over a localCheckpointed base (operators/ml.cv_stump)."""
-    from frogocr_spark.operators.ml import cv_stump
-    ev = _read(spark, sf_dir, "events")
-    return cv_stump(ev, F.round(F.col("value") * 100, 0),
-                    F.col("event_type") == "error", id_col="event_id",
-                    k=_CV_K)
-
-
-_SQA_RATE_MOD = 8
-
-
-def _q_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sampled-quantile error audit: exact nearest-rank p50/p90/p99
-    per event type on the full data vs the md5 1-in-8 hash sample —
-    the measured can-a-sample-profile-this-column answer, tails
-    included.  Two rank-window passes + one tiny group join
-    (operators/analytics.sample_quantile_audit)."""
-    from frogocr_spark.operators.analytics import sample_quantile_audit
-    ev = _read(spark, sf_dir, "events")
-    return sample_quantile_audit(
-        ev, "event_type", F.round(F.col("value") * 100, 0), "event_id",
-        rate_mod=_SQA_RATE_MOD)
-
-
-def _q_ivm_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance audit: the per-type (count, cent
-    sum) view absorbs a synthetic CDC batch (deletes = event_id % 17
-    == 0, inserts = copies of event_id % 13 == 0 at value+7) via the
-    delta algebra — maintained result joined against the full
-    recompute of base∖deletes∪inserts, so any divergent row is an IVM
-    bug.  Delta side = ONE small keyed agg
-    (operators/analytics.ivm_group_counts)."""
-    from frogocr_spark.operators.analytics import ivm_group_counts
-    ev = _read(spark, sf_dir, "events").select(
-        "event_id", "event_type",
-        F.round(F.col("value") * 100, 0).cast("long").alias("cents"))
-    dels = (ev.where(F.col("event_id") % 17 == 0)
-            .select(F.lit("D").alias("op"), "event_type", "cents"))
-    ins = (ev.where(F.col("event_id") % 13 == 0)
-           .select(F.lit("I").alias("op"), "event_type",
-                   (F.col("cents") + 7).alias("cents")))
-    delta = dels.unionByName(ins)
-    view = ivm_group_counts(ev, delta, "event_type", F.col("cents"))
-    rec = (ev.where(F.col("event_id") % 17 != 0)
-           .select("event_type", "cents")
-           .unionByName(ins.select("event_type", "cents"))
-           .groupBy("event_type")
-           .agg(F.count("*").alias("n_rec"),
-                F.sum("cents").alias("sum_rec")))
-    return view.join(rec, "event_type", "full_outer").select(
-        "event_type", "n_view", "sum_view", "n_rec", "sum_rec")
-
-
-def _q_fleiss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fleiss' kappa across the THREE curation gates as binary raters
-    (language == en, quality >= 0.5, n_tokens >= 5) over all documents
-    — do the gates agree beyond their marginal keep-rates, or is the
-    curate intersection mostly chance?  Pure-map votes + ONE 3-value
-    global agg + exact big-int driver finish
-    (operators/analytics.fleiss_kappa)."""
-    from frogocr_spark.operators.analytics import fleiss_kappa
-    from frogocr_spark.operators.textstats import (language_id,
-                                                   quality_score,
-                                                   token_count)
-    docs = _read(spark, sf_dir, "documents")
-    c = F.col("text")
-    return fleiss_kappa(docs, [
-        language_id(c) == "en",
-        quality_score(c) >= 0.5,
-        token_count(c) >= 5,
-    ])
-
-
-def _q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """t-closeness audit (Li 2007) completing the privacy triad beside
-    k_anonymity and l_diversity: per epoch-day QI group, the exact
-    cross-multiplied variational distance between the group's
-    event-type distribution and the table's, flagged against t = 0.3.
-    Profile-row joins only, global counts broadcast
-    (operators/quality.t_closeness)."""
-    from frogocr_spark.operators.quality import t_closeness
-    ev = (_read(spark, sf_dir, "events")
-          .withColumn("day", F.expr(
-              "unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")))
-    return t_closeness(ev, ["day"], "event_type", t_e6=300_000)
-
-
-def _q_src_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source repeated-line stripping (CCNet/RefinedWeb-style site
-    template removal): the corpus is single-line, so both sides
-    deterministically assemble multi-line documents — every doc of a
-    source gets that source's copyright footer (template: recurs in all
-    ~25 docs of the source), even doc_ids get the source's nav line
-    (template), doc_id%7 gets a unique closing remark (df=1 — must
-    survive), and an empty line separates body from footer (must
-    survive: only RECURRING NON-EMPTY lines are templates).  The
-    byte-compared ``kept_text`` verifies strip + in-order reassembly
-    end-to-end (operators/textstats.source_line_dedup)."""
-    from frogocr_spark.operators.textstats import source_line_dedup
-    docs = _read_split(spark, sf_dir, "documents")
-    nl = "\n"
-    aug = docs.select(
-        "doc_id", "source",
-        F.concat(
-            F.col("text"),
-            F.lit(nl + nl + "(c) "), F.col("source"),
-            F.lit(" | all rights reserved"),
-            F.when(F.col("doc_id") % 2 == 0,
-                   F.concat(F.lit(nl + "Navigation: home | about | "),
-                            F.col("source"))).otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(nl + "Unique closing remark "),
-                            F.col("doc_id").cast("string"), F.lit(".")))
-            .otherwise(F.lit("")),
-        ).alias("text"))
-    return source_line_dedup(aug, min_docs=3)
-
-
-def _para_aug(docs: DataFrame) -> DataFrame:
-    """Deterministic multi-paragraph composition for the paragraph-dedup
-    queries (the corpus is single-paragraph): every doc gets its unique
-    body, a per-source shared footer paragraph (duplicated across the
-    ~25 docs of the source — only the globally first occurrence may
-    survive), doc_id%5 gets a corpus-wide newsletter paragraph,
-    doc_id%10 repeats it WITHIN the same doc (in-doc second occurrence
-    must also drop), and doc_id%7 gets a unique remark (must survive)."""
-    sep = "\n\n"
-    news = "Subscribe to the newsletter today"
-    return docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.lit(sep + "Shared footer for "), F.col("source"),
-            F.lit(" | courtesy note"),
-            F.when(F.col("doc_id") % 5 == 0, F.lit(sep + news))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 10 == 0, F.lit(sep + news))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 7 == 0,
-                   F.concat(F.lit(sep + "Unique remark "),
-                            F.col("doc_id").cast("string"), F.lit(".")))
-            .otherwise(F.lit("")),
-        ).alias("text"))
-
-
-def _q_para_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-wide exact paragraph dedup (Dolma-style): over the
-    deterministic multi-paragraph composition (:func:`_para_aug`), only
-    the globally first occurrence — smallest (doc_id, position) — of
-    each trimmed paragraph survives; unique bodies and remarks are kept
-    verbatim.  The byte-compared kept_text verifies owner selection +
-    in-order reassembly end-to-end, including the in-doc repeat case
-    (operators/textstats.paragraph_dedup)."""
-    from frogocr_spark.operators.textstats import paragraph_dedup
-    docs = _read_split(spark, sf_dir, "documents")
-    return paragraph_dedup(_para_aug(docs))
-
-
-def _q_uniq_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-duplicate-line collapse (loop-degeneration cleanup):
-    the corpus is single-line, so the query deterministically composes
-    repetition — doc_id%3 gets the same line twice in a row (must
-    collapse to one), doc_id%5 gets the same line again later but
-    separated (must be KEPT: uniq is positional, not global) —
-    byte-compared cleaned_text
-    (operators/textstats.collapse_repeated_lines)."""
-    from frogocr_spark.operators.textstats import collapse_repeated_lines
-    docs = _read(spark, sf_dir, "documents")
-    nl = "\n"
-    aug = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.lit(nl + "loop line" + nl + "loop line"))
-            .otherwise(F.lit("")),
-            F.when(F.col("doc_id") % 5 == 0,
-                   F.lit(nl + "separator" + nl + "loop line"))
-            .otherwise(F.lit("")),
-        ).alias("text"))
-    return collapse_repeated_lines(aug)
-
-
-_BLOCKLIST = ("dup", "slow", "spam")  # common / rare / absent from corpus
-
-
-def _q_blockwords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-level banned-term gate (the C4 bad-words curation step): keep
-    a doc only if no lowercased token is on the blocklist; occurrence
-    and distinct-term counts give drop attribution.  The list spans a
-    common corpus term, a rare one, and an absent one so both gate
-    outcomes and the zero-hit path are exercised
-    (operators/textstats.blocklist_gate)."""
-    from frogocr_spark.operators.textstats import blocklist_gate
-    docs = _read(spark, sf_dir, "documents")
-    return blocklist_gate(docs, list(_BLOCKLIST))
-
-
-def _q_gate_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Curation-funnel report with first-fail drop attribution over the
-    ordered gate chain language → quality → length → blocklist (the
-    same gate expressions as `curate`, so stage-4 survivors equal its
-    pre-dedup gated count).  One map-side-combined single-row agg +
-    literal-struct explode — no second scan
-    (operators/textstats.curation_funnel)."""
-    from frogocr_spark.operators.textstats import curation_funnel
-    docs = _read(spark, sf_dir, "documents")
-    return curation_funnel(docs, blocklist=list(_BLOCKLIST))
-
-
-_OVL_N, _OVL_K = 3, 128
-
-
-def _q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination matrix: estimated pairwise word
-    3-gram overlap (|A∩B|, |A∪B|, Jaccard) for every unordered source
-    pair, from per-source KMV sketches — the corpus collapses to ≤ k
-    hashes per source before any pairing; the pairwise stage runs over
-    the G sketch rows, never corpus rows.  3-grams (not 8) so the
-    synthetic corpus has REAL cross-source overlap and the
-    intersection estimator is exercised on non-zero values
-    (operators/sketches.kmv_overlap_matrix)."""
-    from frogocr_spark.operators.dedup import _shingle_expr
-    from frogocr_spark.operators.sketches import kmv_overlap_matrix
-    docs = _read_split(spark, sf_dir, "documents")
-    grams = docs.select(
-        "source", F.explode(_shingle_expr("text", _OVL_N, None))
-        .alias("gram"))
-    return kmv_overlap_matrix(grams, "source", "gram", k=_OVL_K)
-
-
-_N_SHARDS = 16
-
-
-def _q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic shard export plan: global md5 shuffle order →
-    round-robin deal into exactly balanced shards, each with an
-    order-independent integrity manifest (count, exact DECIMAL(38,0)
-    hash sum, id range).  The oracle recomputes the full rank chain via
-    row_number, so the hash match proves the range-partition +
-    broadcast-offset global rank equivalent to the total order
-    (operators/layout.shard_plan)."""
-    from frogocr_spark.operators.layout import shard_plan
-    docs = _read(spark, sf_dir, "documents")
-    return shard_plan(docs.select("doc_id"), _N_SHARDS)
-
-
-_DBSCAN_MIN_PTS = 3
-
-
-def _q_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DBSCAN over the spatial_join point set (same md5-derived integer
-    grid, eps = 25, min_pts = 3): density clustering with noise,
-    composed from the audited grid-blocked neighbor join + star-CC,
-    with the scan-order-dependent textbook border rule made
-    deterministic (min cluster id).  The oracle keeps the quadratic
-    distance predicate and a recursive-CTE label closure, so the hash
-    match proves the blocked + star-CC plan equivalent to the
-    definition (operators/clustering.dbscan_grid)."""
-    from frogocr_spark.operators.clustering import dbscan_grid
-    cust = (_read(spark, sf_dir, "customer")
-            .where(F.col("c_mktsegment") == "BUILDING"))
-
-    def coord(tag: str):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.lit(tag), F.col("c_custkey").cast("string"))), 1, 15),
-            16, 10).cast("long") % _SPATIAL_GRID)
-
-    pts = cust.select(F.col("c_custkey").alias("id"),
-                      coord("x:").alias("x"), coord("y:").alias("y"))
-    return dbscan_grid(pts, _SPATIAL_RADIUS, _DBSCAN_MIN_PTS)
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Registry order is deliberate (round-2 lesson: the driver's
     correctness artifact recorded exactly the FIRST 50 entries, silently
     dropping registry positions 51-53).  The first 50 positions are all
-    DuckDB-hash-checked (every operator family has a hash row inside the
-    driver window); further hash-checked surplus entries follow at 51+
-    (verified by tools/check_contract.py, and picked up as hash rows by
-    any larger driver cap); the three rows-only-by-design
-    entries (pipeline_extract — not SQL-expressible, its correctness is
-    carried by extract_plain_docs + the golden pytest suite + entry();
-    dedup_minhash_xx — xxhash64 absent from DuckDB, pinned to the
-    hash-checked md5 twin by a pair-set-equality pytest;
-    sim_cosine_ivf_probe — approximate by construction, recall-tested)
-    are LAST, so any truncation drops only rows that carry no hash
-    signal.  tools/check_contract.py asserts this invariant."""
+    DuckDB-hash-checked; the five per-class extraction rows follow, also
+    hash-checked (by tools/check_contract.py, and picked up as hash rows
+    by any larger driver cap); the one rows-only-by-design entry,
+    pipeline_extract (not SQL-expressible; its correctness is carried by
+    extract_plain_docs + the golden pytest suite + entry()), is LAST, so
+    any truncation drops only a row that carries no hash signal.
+    tests/test_registry.py asserts this invariant."""
     return {
         "extract_plain_docs": _q_extract_plain_docs,
         "w5_nms": _q_w5_nms,
@@ -5522,269 +1081,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "multimodal_features": _q_multimodal_features,
         "multimodal_frames": _q_multimodal_frames,
         "a7_ctc": _q_a7_ctc,
-        # ---- surplus hash-checked entries (positions 51+): the driver
-        # records only the first 50 rows, so these are verified by
-        # tools/check_contract.py (and re-runnable by any reviewer);
-        # ordered BEFORE the rows-only tail so a larger driver cap picks
-        # them up as hash rows first ----
-        "rep_stats": _q_rep_stats,
-        "seq_pack": _q_seq_pack,
-        "strat_sample": _q_strat_sample,
-        "xdoc_ngrams": _q_xdoc_ngrams,
-        "dup_gram_frac": _q_dup_gram_frac,
-        "decontam": _q_decontam,
-        "pii_scrub": _q_pii_scrub,
-        "chunk_windows": _q_chunk_windows,
-        "tpch_q5": _q_tpch_q5,
-        "tpch_q18": _q_tpch_q18,
-        "agg_distinct": _q_agg_distinct,
-        "arr_ops": _q_arr_ops,
-        "tpch_q4": _q_tpch_q4,
-        "tpch_q13": _q_tpch_q13,
-        "w_rank_family": _q_w_rank_family,
-        "vocab_topk": _q_vocab_topk,
-        "lm_quality": _q_lm_quality,
-        "mix_sample": _q_mix_sample,
-        "source_topterms": _q_source_topterms,
-        "url_canon": _q_url_canon,
         "extract_tooljson_docs": _q_extract_tooljson_docs,
         "extract_pdf_docs": _q_extract_pdf_docs,
         "extract_md_docs": _q_extract_md_docs,
         "extract_html_docs": _q_extract_html_docs,
         "extract_twopass_docs": _q_extract_twopass_docs,
-        "dedup_incr": _q_dedup_incr,
-        "hash_split": _q_hash_split,
-        "text_norm": _q_text_norm,
-        "c4_line_filters": _q_c4_line_filters,
-        "bloom_decontam": _q_bloom_decontam,
-        "event_replay": _q_event_replay,
-        "w_lag_lead": _q_w_lag_lead,
-        "dedup_substring": _q_dedup_substring,
-        "hll_distinct": _q_hll_distinct,
-        "inverted_index": _q_inverted_index,
-        "tfidf_topterms": _q_tfidf_topterms,
-        "ngram_lm": _q_ngram_lm,
-        "emb_quantize": _q_emb_quantize,
-        "pagerank": _q_pagerank,
-        "cms_heavy": _q_cms_heavy,
-        "bpe_merges": _q_bpe_merges,
-        "funnel": _q_funnel,
-        "cohort_retention": _q_cohort_retention,
-        "histogram": _q_histogram,
-        "decimal_stats": _q_decimal_stats,
-        "zorder_layout": _q_zorder_layout,
-        "profile": _q_profile,
-        "tpch_q2_mincost": _q_tpch_q2_mincost,
-        "json_extract": _q_json_extract,
-        "semdedup": _q_semdedup,
-        "lm_filter": _q_lm_filter,
-        "containment": _q_containment,
-        "outliers": _q_outliers,
-        "weighted_sample": _q_weighted_sample,
-        "sql_surface": _q_sql_surface,
-        "bpe_vocab": _q_bpe_vocab,
-        "triangles": _q_triangles,
-        "emb_centroids": _q_emb_centroids,
-        "fuzzy_vocab": _q_fuzzy_vocab,
-        "hll_windows": _q_hll_windows,
-        "entity_resolve": _q_entity_resolve,
-        "merge_upsert": _q_merge_upsert,
-        "scd2_build": _q_scd2_build,
-        "ohlc_bars": _q_ohlc_bars,
-        "gap_fill": _q_gap_fill,
-        "salted_join": _q_salted_join,
-        "kcore": _q_kcore,
-        "pq_codes": _q_pq_codes,
-        "pq_search": _q_pq_search,
-        "table_diff": _q_table_diff,
-        "tpch_q7_natvol": _q_tpch_q7_natvol,
-        "tpch_q17_smallqty": _q_tpch_q17_smallqty,
-        "attribution": _q_attribution,
-        "markov_transitions": _q_markov_transitions,
-        "winsorize": _q_winsorize,
-        "dq_checks": _q_dq_checks,
-        "tpch_q10_returns": _q_tpch_q10_returns,
-        "tpch_q19_disjunct": _q_tpch_q19_disjunct,
-        "tpch_q22_idle": _q_tpch_q22_idle,
-        "w_range_frame": _q_w_range_frame,
-        "bfs_levels": _q_bfs_levels,
-        "grouping_sets": _q_grouping_sets,
-        "tpch_q21_waiting": _q_tpch_q21_waiting,
-        "tpch_q15_topsupp": _q_tpch_q15_topsupp,
-        "tpch_q16_partcnt": _q_tpch_q16_partcnt,
-        "tpch_q20_excess": _q_tpch_q20_excess,
-        "tpch_q14_promo": _q_tpch_q14_promo,
-        "tpch_q8_share": _q_tpch_q8_share,
-        "ols_regression": _q_ols_regression,
-        "pit_join": _q_pit_join,
-        "tpch_q6_forecast": _q_tpch_q6_forecast,
-        "tpch_q9_profit": _q_tpch_q9_profit,
-        "tpch_q11_important": _q_tpch_q11_important,
-        "tpch_q12_priority": _q_tpch_q12_priority,
-        "rollup_geo": _q_rollup_geo,
-        "pivot_counts": _q_pivot_counts,
-        "pattern_match": _q_pattern_match,
-        "sliding_windows": _q_sliding_windows,
-        "skyline": _q_skyline,
-        "max_concurrency": _q_max_concurrency,
-        "equidepth_hist": _q_equidepth_hist,
-        "itemsets": _q_itemsets,
-        "rand_proj": _q_rand_proj,
-        "bpe_encode": _q_bpe_encode,
-        "trending": _q_trending,
-        "quantiles": _q_quantiles,
-        "mad": _q_mad,
-        "bag_ops": _q_bag_ops,
-        "debounce": _q_debounce,
-        "interval_coverage": _q_interval_coverage,
-        "kmeans": _q_kmeans,
-        "time_rollup": _q_time_rollup,
-        "k_anonymity": _q_k_anonymity,
-        "skew_report": _q_skew_report,
-        "hll_setops": _q_hll_setops,
-        "modularity": _q_modularity,
-        "postings_delta": _q_postings_delta,
-        "ks_test": _q_ks_test,
-        "cusum_drift": _q_cusum_drift,
-        "range_checksums": _q_range_checksums,
-        "window_funcs2": _q_window_funcs2,
-        "string_funcs": _q_string_funcs,
-        "cube_counts": _q_cube_counts,
-        "id_islands": _q_id_islands,
-        "rle_encode": _q_rle_encode,
-        "ratio_share": _q_ratio_share,
-        "rrf_fusion": _q_rrf_fusion,
-        "assortativity": _q_assortativity,
-        "stump": _q_stump,
-        "bm25": _q_bm25,
-        "dwell_time": _q_dwell_time,
-        "disorder": _q_disorder,
-        "sparse_dot": _q_sparse_dot,
-        "conversion_lag": _q_conversion_lag,
-        "rfm": _q_rfm,
-        "iqr_outliers": _q_iqr_outliers,
-        "snm_blocking": _q_snm_blocking,
-        "label_prop": _q_label_prop,
-        "sssp": _q_sssp,
-        "kmv_setops": _q_kmv_setops,
-        "phrase_search": _q_phrase_search,
-        "chi2_terms": _q_chi2_terms,
-        "pmi_bigrams": _q_pmi_bigrams,
-        "ab_test": _q_ab_test,
-        "lexical_diversity": _q_lexical_diversity,
-        "spatial_join": _q_spatial_join,
-        "winnowing": _q_winnowing,
-        "link_predict": _q_link_predict,
-        "clustering_coeff": _q_clustering_coeff,
-        "feat_hash": _q_feat_hash,
-        "nb_train": _q_nb_train,
-        "ewma": _q_ewma,
-        "autocorr": _q_autocorr,
-        "benford": _q_benford,
-        "session_paths": _q_session_paths,
-        "union_by_name": _q_union_by_name,
-        "recs_jaccard": _q_recs_jaccard,
-        "recursive_cte": _q_recursive_cte,
-        "hilbert_layout": _q_hilbert_layout,
-        "rake_keywords": _q_rake_keywords,
-        "drift_chi2": _q_drift_chi2,
-        "seasonality": _q_seasonality,
-        "activity_bitmap": _q_activity_bitmap,
-        "log2_hist": _q_log2_hist,
-        "weighted_median": _q_weighted_median,
-        "graph_2hop": _q_graph_2hop,
-        "graph_2hop_precise": _q_graph_2hop_precise,
-        "graph_2hop_hll": _q_graph_2hop_hll,
-        "graph_nf": _q_graph_nf,
-        "dedup_weighted": _q_dedup_weighted,
-        "charclass": _q_charclass,
-        "json_keys_profile": _q_json_keys_profile,
-        "twap": _q_twap,
-        "lrm_alloc": _q_lrm_alloc,
-        "wow_change": _q_wow_change,
-        "sentence_stats": _q_sentence_stats,
-        "rank_test": _q_rank_test,
-        "spearman": _q_spearman,
-        "ams_f2": _q_ams_f2,
-        "dp_counts": _q_dp_counts,
-        "emb_dim_stats": _q_emb_dim_stats,
-        "nullsafe_join": _q_nullsafe_join,
-        "hhi_supplier": _q_hhi_supplier,
-        "readability": _q_readability,
-        "knn_classify": _q_knn_classify,
-        "hits": _q_hits,
-        "geohash": _q_geohash,
-        "lateral_topn": _q_lateral_topn,
-        "l_diversity": _q_l_diversity,
-        "zipf_fit": _q_zipf_fit,
-        "coreset": _q_coreset,
-        "soundex_blocks": _q_soundex_blocks,
-        "w_ignore_nulls": _q_w_ignore_nulls,
-        "knn_eval": _q_knn_eval,
-        "unpivot_surface": _q_unpivot_surface,
-        "zorder3": _q_zorder3,
-        "auc_roc": _q_auc_roc,
-        "abc_analysis": _q_abc_analysis,
-        "theil_sen": _q_theil_sen,
-        "langid": _q_langid,
-        "gini": _q_gini,
-        "kendall_tau": _q_kendall_tau,
-        "cohen_kappa": _q_cohen_kappa,
-        "novelty": _q_novelty,
-        "calibration": _q_calibration,
-        "neg_sample": _q_neg_sample,
-        "split_leakage": _q_split_leakage,
-        "minmax_prune": _q_minmax_prune,
-        "mojibake": _q_mojibake,
-        "fano": _q_fano,
-        "rate_spikes": _q_rate_spikes,
-        "simpson": _q_simpson,
-        "cramers_v": _q_cramers_v,
-        "eta_squared": _q_eta_squared,
-        "vocab_drift": _q_vocab_drift,
-        "coverage_curve": _q_coverage_curve,
-        "layout_compare": _q_layout_compare,
-        "time_split": _q_time_split,
-        "ctx_fit": _q_ctx_fit,
-        "fertility": _q_fertility,
-        "max_run": _q_max_run,
-        "dedup_agreement": _q_dedup_agreement,
-        "bloom_fpr": _q_bloom_fpr,
-        "hash_collisions": _q_hash_collisions,
-        "ann_recall": _q_ann_recall,
-        "group_effects": _q_group_effects,
-        "split_leak_near": _q_split_leak_near,
-        "minhash_err": _q_minhash_err,
-        "emb_gram": _q_emb_gram,
-        "avg_precision": _q_avg_precision,
-        "ir_eval": _q_ir_eval,
-        "dbscan": _q_dbscan,
-        "spectral": _q_spectral,
-        "silhouette": _q_silhouette,
-        "clustering_ari": _q_clustering_ari,
-        "isotonic": _q_isotonic,
-        "conformal": _q_conformal,
-        "dup_profile": _q_dup_profile,
-        "join_size_est": _q_join_size_est,
-        "spectral2": _q_spectral2,
-        "dedup_edit": _q_dedup_edit,
-        "compaction_plan": _q_compaction_plan,
-        "cv_folds": _q_cv_folds,
-        "sample_quantiles": _q_sample_quantiles,
-        "ivm_counts": _q_ivm_counts,
-        "fleiss": _q_fleiss,
-        "t_closeness": _q_t_closeness,
-        "src_line_dedup": _q_src_line_dedup,
-        "para_dedup": _q_para_dedup,
-        "blockwords": _q_blockwords,
-        "shard_manifest": _q_shard_manifest,
-        "gate_funnel": _q_gate_funnel,
-        "source_overlap": _q_source_overlap,
-        "uniq_lines": _q_uniq_lines,
         # ---- rows-only-by-design tail (see registry-order docstring) ----
         "pipeline_extract": _q_pipeline_extract,
-        "dedup_minhash_xx": _q_dedup_minhash_xx,
-        "sim_cosine_ivf_probe": _q_sim_cosine_ivf_probe,
     }
 
 
@@ -5834,7 +1137,6 @@ def _lsh_bucket_cte(nbits: int, ntables: int, dim: int = 64) -> str:
                 FROM vq v CROSS JOIN hp h
                 GROUP BY v.vec_id, h.t
             )"""
-
 
 
 def _jaccard_oracle(shingle_cte: str, threshold: float) -> str:
@@ -5904,10 +1206,6 @@ _JACCARD_TRIGRAM_CTE = r"""words AS (
                                    ELSE CAST([] AS VARCHAR[]) END) AS token
                 FROM words
             )"""
-
-
-from frogocr_spark.operators.textstats import EMAIL_RE as _PII_EMAIL
-from frogocr_spark.operators.textstats import PHONE_RE as _PII_PHONE
 
 
 def oracle_sql() -> dict[str, str]:
@@ -6446,496 +1744,6 @@ def oracle_sql() -> dict[str, str]:
                    AS fingerprint
             FROM documents
         """,
-        "rep_stats": r"""
-            WITH lines AS (
-                SELECT doc_id, trim(l) AS line
-                FROM documents, unnest(string_split(text, chr(10))) AS u(l)
-                WHERE trim(l) <> ''
-            ), line_stats AS (
-                SELECT doc_id, CAST(SUM(c) AS BIGINT) AS n_lines,
-                       CAST(COUNT(*) AS BIGINT) AS n_distinct
-                FROM (SELECT doc_id, line, COUNT(*) AS c
-                      FROM lines GROUP BY doc_id, line)
-                GROUP BY doc_id
-            ), words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), grams AS (
-                SELECT doc_id,
-                       unnest(CASE WHEN len(ws) >= 2
-                                   THEN [array_to_string(ws[j:j+1], ' ')
-                                         for j in range(1, len(ws))]
-                                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-                FROM words
-            ), gram_stats AS (
-                SELECT doc_id, MAX(c) AS top_c, SUM(c) AS total_c
-                FROM (SELECT doc_id, gram, COUNT(*) AS c
-                      FROM grams GROUP BY doc_id, gram)
-                GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(ls.n_lines, 0) AS BIGINT) AS n_lines,
-                   round(CASE WHEN ls.n_lines IS NOT NULL
-                              THEN 1.0 - ls.n_distinct * 1.0 / ls.n_lines
-                              ELSE 0.0 END, 6) AS dup_line_frac,
-                   round(COALESCE(gs.top_c * 1.0 / gs.total_c, 0.0), 6)
-                   AS top_2gram_frac
-            FROM documents d
-            LEFT JOIN line_stats ls USING (doc_id)
-            LEFT JOIN gram_stats gs USING (doc_id)
-        """,
-        "seq_pack": f"""
-            WITH t AS (
-                SELECT doc_id, CAST({n_tokens} AS INT) AS n_tok
-                FROM documents
-            ), c AS (
-                SELECT doc_id, n_tok,
-                       CAST(COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-                           ROWS BETWEEN UNBOUNDED PRECEDING
-                           AND 1 PRECEDING), 0) AS BIGINT) AS cum
-                FROM t
-            )
-            SELECT doc_id, n_tok,
-                   CAST(cum // 1024 AS BIGINT) AS seq_id,
-                   CAST(cum % 1024 AS INT) AS seq_offset
-            FROM c
-        """,
-        "strat_sample": f"""
-            WITH t AS (
-                SELECT doc_id,
-                       CASE WHEN {n_tokens} = 0 THEN 'xx'
-                            WHEN {en_hits} >= {no_hits}
-                                 AND {en_hits} * 50 >= {n_tokens} THEN 'en'
-                            WHEN {no_hits} > {en_hits}
-                                 AND {no_hits} * 50 >= {n_tokens} THEN 'no'
-                            ELSE 'xx' END AS lang_id
-                FROM documents
-            ), r AS (
-                SELECT doc_id, lang_id,
-                       row_number() OVER (PARTITION BY lang_id
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                       AS rn
-                FROM t
-            )
-            SELECT doc_id, lang_id FROM r WHERE rn <= 20
-        """,
-        "xdoc_ngrams": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), grams AS (
-                SELECT DISTINCT doc_id,
-                       unnest(CASE WHEN len(ws) >= 8
-                                   THEN [array_to_string(ws[j:j+7], ' ')
-                                         for j in range(1, len(ws) - 6)]
-                                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-                FROM words
-            )
-            SELECT gram, CAST(COUNT(*) AS BIGINT) AS n_docs
-            FROM grams GROUP BY gram HAVING COUNT(*) >= 2
-        """,
-        "dup_gram_frac": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), g AS (
-                SELECT DISTINCT doc_id,
-                       unnest(CASE WHEN len(ws) >= 8
-                                   THEN [array_to_string(ws[j:j+7], ' ')
-                                         for j in range(1, len(ws) - 6)]
-                                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-                FROM words
-            ), freq AS (
-                SELECT gram, COUNT(*) AS df FROM g GROUP BY gram
-            ), per_doc AS (
-                SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-                       CAST(SUM(CASE WHEN f.df >= 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n_dup_grams
-                FROM g JOIN freq f USING (gram) GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(p.n_grams, 0) AS BIGINT) AS n_grams,
-                   CAST(COALESCE(p.n_dup_grams, 0) AS BIGINT)
-                   AS n_dup_grams,
-                   round(COALESCE(p.n_dup_grams * 1.0 / p.n_grams, 0.0), 6)
-                   AS dup_gram_frac
-            FROM documents d LEFT JOIN per_doc p USING (doc_id)
-        """,
-        "decontam": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), g AS (
-                SELECT DISTINCT doc_id,
-                       unnest(CASE WHEN len(ws) >= 8
-                                   THEN [array_to_string(ws[j:j+7], ' ')
-                                         for j in range(1, len(ws) - 6)]
-                                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-                FROM words
-            ), eg AS (
-                SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0
-            ), cand AS (
-                SELECT doc_id, gram FROM g WHERE doc_id % 97 <> 0
-            ), tot AS (
-                SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams
-                FROM cand GROUP BY doc_id
-            ), hit AS (
-                SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_overlap
-                FROM cand WHERE gram IN (SELECT gram FROM eg)
-                GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(t.n_grams, 0) AS BIGINT) AS n_grams,
-                   CAST(COALESCE(h.n_overlap, 0) AS BIGINT) AS n_overlap,
-                   round(COALESCE(h.n_overlap * 1.0 / t.n_grams, 0.0), 6)
-                   AS overlap_frac,
-                   CASE WHEN COALESCE(h.n_overlap, 0) > 0
-                        THEN 1 ELSE 0 END AS contaminated
-            FROM (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0) d
-            LEFT JOIN tot t USING (doc_id)
-            LEFT JOIN hit h USING (doc_id)
-        """,
-        "pii_scrub": r"""
-            WITH aug AS (
-                SELECT doc_id, text ||
-                       CASE WHEN doc_id % 7 = 0
-                            THEN ' contact user' || CAST(doc_id AS VARCHAR)
-                                 || '@example.org now' ELSE '' END ||
-                       CASE WHEN doc_id % 11 = 0
-                            THEN ' call +47 22 11 33 55 ok' ELSE '' END
-                       AS text
-                FROM documents
-            ), s1 AS (
-                SELECT doc_id,
-                       CAST(len(regexp_extract_all(text, '@EMAIL@'))
-                            AS INT) AS n_emails,
-                       regexp_replace(text, '@EMAIL@', '<EMAIL>', 'g')
-                       AS t1
-                FROM aug
-            )
-            SELECT doc_id, n_emails,
-                   CAST(len(regexp_extract_all(t1, '@PHONE@')) AS INT)
-                   AS n_phones,
-                   regexp_replace(t1, '@PHONE@', '<PHONE>', 'g')
-                   AS scrubbed
-            FROM s1
-        """.replace("@EMAIL@", _PII_EMAIL).replace("@PHONE@", _PII_PHONE),
-        "chunk_windows": f"""
-            WITH t AS (
-                SELECT doc_id, CAST({n_tokens} AS INT) AS n_tok
-                FROM documents
-            )
-            SELECT doc_id, CAST(i AS INT) AS chunk_idx,
-                   CAST(i * 16 AS INT) AS tok_start,
-                   CAST(LEAST(i * 16 + 32, n_tok) AS INT) AS tok_end
-            FROM t, unnest(generate_series(0, (n_tok - 1) // 16)) AS g(i)
-            WHERE n_tok > 0
-        """,
-        "tpch_q5": """
-            SELECT n_name,
-                   round(sum(l_extendedprice * (1 - l_discount)), 0)
-                   AS revenue,
-                   CAST(count(*) AS BIGINT) AS n_items
-            FROM lineitem
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-            JOIN supplier ON l_suppkey = s_suppkey
-                         AND c_nationkey = s_nationkey
-            JOIN nation ON c_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'ASIA'
-              AND o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate < TIMESTAMP '1997-01-01'
-            GROUP BY n_name
-        """,
-        "tpch_q18": """
-            WITH big AS (
-                SELECT l_orderkey, sum(l_quantity) AS total_qty
-                FROM lineitem GROUP BY l_orderkey
-                HAVING sum(l_quantity) > 150
-            )
-            SELECT c_custkey, c_name, o_orderkey, o_totalprice,
-                   CAST(total_qty AS BIGINT) AS total_qty
-            FROM big
-            JOIN orders ON l_orderkey = o_orderkey
-            JOIN customer ON o_custkey = c_custkey
-        """,
-        "agg_distinct": """
-            SELECT event_type,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-                   CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT)
-                   AS n_days,
-                   CAST(count(*) AS BIGINT) AS n_events
-            FROM events GROUP BY event_type
-        """,
-        "arr_ops": r"""
-            WITH t AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            )
-            SELECT doc_id,
-                   CAST(len(ws) AS INT) AS n_tokens,
-                   CAST(len(list_distinct(ws)) AS INT) AS n_distinct,
-                   array_to_string(list_sort(list_distinct(ws))[1:3], ',')
-                   AS first3,
-                   list_contains(ws, 'the') AS has_the
-            FROM t
-        """,
-        "tpch_q4": """
-            SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-            FROM orders
-            WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-              AND o_orderdate < TIMESTAMP '1996-04-01'
-              AND EXISTS (SELECT 1 FROM lineitem
-                          WHERE l_orderkey = o_orderkey)
-            GROUP BY o_orderpriority
-        """,
-        "tpch_q13": """
-            WITH per_cust AS (
-                SELECT c_custkey, count(o_orderkey) AS c_count
-                FROM customer LEFT JOIN orders ON c_custkey = o_custkey
-                GROUP BY c_custkey
-            )
-            SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-            FROM per_cust GROUP BY c_count
-        """,
-        "w_rank_family": """
-            SELECT event_id, event_type,
-                   CAST(ntile(4) OVER w AS INT) AS quartile,
-                   round(percent_rank() OVER w, 6) AS pct_rank,
-                   round(cume_dist() OVER w, 6) AS cume
-            FROM events
-            WINDOW w AS (PARTITION BY event_type
-                         ORDER BY value ASC, event_id ASC)
-        """,
-        "vocab_topk": r"""
-            SELECT token, CAST(count(*) AS BIGINT) AS t_count
-            FROM (SELECT unnest(list_filter(
-                      string_split_regex(trim(text), '\s+'),
-                      x -> x <> '')) AS token
-                  FROM documents)
-            GROUP BY token
-            ORDER BY t_count DESC, token ASC
-            LIMIT 200
-        """,
-        "lm_quality": r"""
-            WITH toks AS (
-                SELECT doc_id, unnest(list_filter(
-                    string_split_regex(trim(text), '\s+'),
-                    x -> x <> '')) AS token
-                FROM documents
-            ), vocab AS (
-                SELECT token FROM (
-                    SELECT token, count(*) AS c FROM toks GROUP BY token
-                    ORDER BY c DESC, token ASC LIMIT 100)
-            ), tot AS (
-                SELECT doc_id, count(*) AS n_tok FROM toks GROUP BY doc_id
-            ), hits AS (
-                SELECT doc_id, count(*) AS n_invocab
-                FROM toks JOIN vocab USING (token) GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(t.n_tok, 0) AS INT) AS n_tok,
-                   CAST(COALESCE(h.n_invocab, 0) AS INT) AS n_invocab,
-                   round(COALESCE(h.n_invocab * 1.0 / t.n_tok, 0.0), 6)
-                   AS invocab_ratio
-            FROM documents d
-            LEFT JOIN tot t USING (doc_id)
-            LEFT JOIN hits h USING (doc_id)
-        """,
-        "mix_sample": """
-            WITH caps AS (
-                SELECT source,
-                       CAST(ceil(sqrt(count(*))) AS INT) AS stratum_cap
-                FROM documents GROUP BY source
-            ), r AS (
-                SELECT doc_id, d.source, c.stratum_cap,
-                       row_number() OVER (PARTITION BY d.source
-                           ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                       AS rn
-                FROM documents d JOIN caps c USING (source)
-            )
-            SELECT doc_id, source, stratum_cap
-            FROM r WHERE rn <= stratum_cap
-        """,
-        "source_topterms": r"""
-            WITH counts AS (
-                SELECT source, token, count(*) AS t_count
-                FROM (SELECT source, unnest(list_filter(
-                          string_split_regex(trim(text), '\s+'),
-                          x -> x <> '')) AS token
-                      FROM documents)
-                GROUP BY source, token
-            ), r AS (
-                SELECT source, token, t_count,
-                       row_number() OVER (PARTITION BY source
-                           ORDER BY t_count DESC, token ASC) AS rank
-                FROM counts
-            )
-            SELECT source, token, CAST(t_count AS BIGINT) AS t_count,
-                   CAST(rank AS INT) AS rank
-            FROM r WHERE rank <= 5
-        """,
-        "text_norm": r"""
-            SELECT doc_id,
-                   trim(regexp_replace(regexp_replace(
-                       nfc_normalize(text || ' caf' || 'e' || chr(769)
-                                     || ' x' || chr(7) || 'y  z'),
-                       '[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]', '', 'g'),
-                       '\s+', ' ', 'g')) AS norm_text
-            FROM documents
-        """,
-        "c4_line_filters": r"""
-            WITH aug AS (
-                SELECT doc_id,
-                       text || '.' || chr(10) ||
-                       'Enable javascript and cookies to continue'
-                       || chr(10) ||
-                       'tiny line' || chr(10) ||
-                       CASE WHEN doc_id % 3 = 0
-                            THEN '{"nav": 1}' || chr(10) ELSE '' END ||
-                       'This is a complete sentence number '
-                       || CAST(doc_id AS VARCHAR) || '.' ||
-                       CASE WHEN doc_id % 2 = 0
-                            THEN chr(10) || 'no terminal punctuation here'
-                            ELSE '' END ||
-                       CASE WHEN doc_id % 5 = 0
-                            THEN chr(10)
-                                 || 'Another good sentence appears here!'
-                            ELSE '' END AS text
-                FROM documents
-            ), k AS (
-                SELECT doc_id,
-                       string_split(text, chr(10)) AS ls,
-                       list_filter(string_split(text, chr(10)), x ->
-                           trim(x) <> ''
-                           AND regexp_matches(trim(x), '[.!?]$')
-                           AND len(string_split_regex(trim(x), '\s+')) >= 3
-                           AND NOT contains(trim(x), '{')
-                           AND NOT contains(trim(x), '}')
-                           AND NOT contains(lower(trim(x)), 'javascript')
-                           AND NOT contains(lower(trim(x)), 'cookie')
-                           AND NOT contains(lower(trim(x)),
-                                            'all rights reserved')
-                       ) AS ks
-                FROM aug
-            )
-            SELECT doc_id,
-                   CAST(len(ls) AS INT) AS n_lines,
-                   CAST(len(ks) AS INT) AS n_kept,
-                   round(len(ks) * 1.0 / len(ls), 6) AS line_kept_frac,
-                   array_to_string(ks, chr(10)) AS kept_text
-            FROM k
-        """,
-        "bloom_decontam": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), g AS (
-                SELECT DISTINCT doc_id,
-                       unnest(CASE WHEN len(ws) >= 8
-                                   THEN [array_to_string(ws[j:j+7], ' ')
-                                         for j in range(1, len(ws) - 6)]
-                                   ELSE CAST([] AS VARCHAR[]) END) AS gram
-                FROM words
-            ), pos AS (
-                SELECT DISTINCT
-                       ('0x' || substr(md5(gram), 1 + 8*j, 8))::BIGINT
-                       % 65536 AS p
-                FROM g, unnest([0, 1, 2]) t(j)
-                WHERE doc_id % 97 = 0
-            ), ch AS (
-                SELECT doc_id,
-                       (('0x' || substr(md5(gram), 1, 8))::BIGINT % 65536)
-                           IN (SELECT p FROM pos)
-                       AND (('0x' || substr(md5(gram), 9, 8))::BIGINT
-                            % 65536) IN (SELECT p FROM pos)
-                       AND (('0x' || substr(md5(gram), 17, 8))::BIGINT
-                            % 65536) IN (SELECT p FROM pos) AS hit
-                FROM g WHERE doc_id % 97 <> 0
-            ), agg AS (
-                SELECT doc_id, COUNT(*) AS n_grams,
-                       SUM(CASE WHEN hit THEN 1 ELSE 0 END) AS n_hits
-                FROM ch GROUP BY doc_id
-            )
-            SELECT d.doc_id,
-                   CAST(COALESCE(a.n_grams, 0) AS INT) AS n_grams,
-                   CAST(COALESCE(a.n_hits, 0) AS INT) AS n_hits,
-                   CASE WHEN COALESCE(a.n_hits, 0) > 0
-                        THEN 1 ELSE 0 END AS flagged
-            FROM (SELECT doc_id FROM documents WHERE doc_id % 97 <> 0) d
-            LEFT JOIN agg a USING (doc_id)
-        """,
-        "dedup_substring": r"""
-            WITH words AS (
-                SELECT doc_id,
-                       list_filter(string_split_regex(trim(text), '\s+'),
-                                   x -> x <> '') AS ws
-                FROM documents
-            ), toks AS (
-                SELECT doc_id, j AS pos, ws[j] AS tok
-                FROM words, unnest(range(1, len(ws) + 1)) t(j)
-            ), g AS (
-                SELECT doc_id, j AS gpos,
-                       array_to_string(ws[j:j+7], ' ') AS gram
-                FROM words, unnest(range(1, len(ws) - 6)) t(j)
-                WHERE len(ws) >= 8
-            ), freq AS (
-                SELECT gram, min(doc_id) AS owner
-                FROM g GROUP BY gram
-                HAVING count(DISTINCT doc_id) >= 2
-            ), cov AS (
-                SELECT DISTINCT g.doc_id, g.gpos + k AS pos
-                FROM g JOIN freq USING (gram), unnest(range(0, 8)) u(k)
-                WHERE g.doc_id <> freq.owner
-            ), kept AS (
-                SELECT t.doc_id, t.pos, t.tok
-                FROM toks t LEFT JOIN cov c
-                  ON t.doc_id = c.doc_id AND t.pos = c.pos
-                WHERE c.pos IS NULL
-            ), agg AS (
-                SELECT doc_id, count(*) AS n_kept,
-                       string_agg(tok, ' ' ORDER BY pos) AS cleaned_text
-                FROM kept GROUP BY doc_id
-            )
-            SELECT w.doc_id,
-                   CAST(len(w.ws) AS INT) AS n_tokens,
-                   CAST(len(w.ws) - COALESCE(a.n_kept, 0) AS INT)
-                   AS n_removed,
-                   COALESCE(a.cleaned_text, '') AS cleaned_text
-            FROM words w LEFT JOIN agg a USING (doc_id)
-        """,
-        "event_replay": """
-            SELECT user_id,
-                   CAST(count(*) AS BIGINT) AS n_events,
-                   string_agg(event_type, '>' ORDER BY ts, event_id)
-                   AS replay,
-                   epoch_us(min(ts)) AS first_us,
-                   epoch_us(max(ts)) AS last_us
-            FROM events GROUP BY user_id
-        """,
-        "w_lag_lead": """
-            SELECT event_id, user_id,
-                   COALESCE(epoch_us(ts) - lag(epoch_us(ts)) OVER
-                       (PARTITION BY user_id ORDER BY ts, event_id), -1)
-                   AS gap_us,
-                   COALESCE(lead(event_type) OVER
-                       (PARTITION BY user_id ORDER BY ts, event_id), '')
-                   AS next_type
-            FROM events
-        """,
         "extract_tooljson_docs": r"""
             WITH aug AS (
                 SELECT doc_id, text, doc_id % 8 AS v, len(text) AS n
@@ -7214,128 +2022,6 @@ SELECT doc_id, 'two_pass' AS payload_class,
 FROM pos2
 
         """,
-        "dedup_incr": r"""
-            WITH toks AS (
-                SELECT DISTINCT doc_id,
-                       unnest(string_split_regex(trim(text), '\s+')) AS token
-                FROM documents
-            ), tkh AS (
-                SELECT doc_id,
-                       ('0x' || substr(md5(token), 1, 15))::BIGINT
-                       % 2147483647 AS x
-                FROM toks WHERE token <> ''
-            ), hashes AS (
-                SELECT doc_id, i,
-                       min((x * (('0x' || substr(md5('a:' || i), 1, 7))
-                                 ::BIGINT | 1)
-                            + ('0x' || substr(md5('b:' || i), 1, 7))::BIGINT)
-                           % 2147483647) AS mh
-                FROM tkh CROSS JOIN range(0, 32) r(i)
-                GROUP BY doc_id, i
-            ), sig AS (
-                SELECT doc_id, list(mh ORDER BY i) AS s,
-                       doc_id % 10 = 0 AS is_new
-                FROM hashes GROUP BY doc_id
-            ), banded AS (
-                SELECT doc_id, is_new, b,
-                       md5(array_to_string(
-                           list_slice(s, b * 8 + 1, b * 8 + 8), ':')) AS bh
-                FROM sig CROSS JOIN range(0, 4) r(b)
-            ), cand AS (
-                -- id_a always NEW; new-new pairs once (a < b); base-base
-                -- pairs never generated (the incremental contract)
-                SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-                FROM banded a JOIN banded b ON a.b = b.b AND a.bh = b.bh
-                WHERE a.is_new
-                  AND ((b.is_new AND a.doc_id < b.doc_id) OR NOT b.is_new)
-            ), est AS (
-                SELECT id_a, id_b,
-                       list_sum(list_transform(range(1, 33),
-                           j -> CASE WHEN sa.s[j] = sb.s[j]
-                                     THEN 1 ELSE 0 END)) / 32.0 AS e
-                FROM cand
-                JOIN sig sa ON sa.doc_id = id_a
-                JOIN sig sb ON sb.doc_id = id_b
-            )
-            SELECT id_a, id_b, round(e, 6) AS est_jaccard
-            FROM est WHERE e >= 0.5
-        """,
-        "hash_split": """
-            SELECT doc_id,
-                   CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                             < 'e6' THEN 'train'
-                        WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                             < 'f3' THEN 'val'
-                        ELSE 'test' END AS split
-            FROM documents
-        """,
-        "url_canon": r"""
-            WITH aug AS (
-                SELECT doc_id,
-                       CAST(doc_id // 5 AS VARCHAR) AS b,
-                       CAST((doc_id // 5) % 7 AS VARCHAR) AS h
-                FROM documents
-            ), urls AS (
-                SELECT doc_id,
-                       CASE doc_id % 5
-                         WHEN 0 THEN 'https://www.w' || h
-                              || '.example.com/docs/' || b || '/?id=' || b
-                              || '&utm_source=feed'
-                         WHEN 1 THEN upper('https://www.w' || h
-                              || '.example.com') || ':443/docs/' || b
-                              || '?utm_campaign=x&id=' || b
-                         WHEN 2 THEN 'https://w' || h
-                              || '.example.com/docs/' || b
-                              || '?id=' || b || '#sec'
-                         WHEN 3 THEN 'http://w' || h
-                              || '.example.com/docs/' || b
-                              || '?id=' || b || '&gclid=123'
-                         ELSE 'https://w' || h || '.example.com:8080/docs/'
-                              || b || '?id=' || b
-                       END AS url
-                FROM aug
-            ), parts AS (
-                SELECT doc_id,
-                       lower(regexp_extract(url,
-                           '^([A-Za-z][A-Za-z0-9+.\-]*)://', 1)) AS scheme,
-                       lower(regexp_extract(
-                           url, '^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)',
-                           1)) AS auth,
-                       regexp_replace(regexp_extract(url,
-                           '^[A-Za-z][A-Za-z0-9+.\-]*://[^/?#]*([^?#]*)', 1),
-                           '/+$', '') AS path,
-                       list_sort(list_filter(
-                           string_split(regexp_extract(url, '\?([^#]*)', 1),
-                                        '&'),
-                           x -> x <> '' AND NOT regexp_matches(x,
-                               '^(utm_[^=]*|ref|fbclid|gclid)=')))
-                       AS params
-                FROM urls
-            ), hosts AS (
-                SELECT doc_id, scheme, path, params,
-                       regexp_replace(regexp_replace(auth, ':[0-9]+$', ''),
-                                      '^www\.', '') AS bare_host,
-                       regexp_extract(auth, ':([0-9]+)$', 1) AS port
-                FROM parts
-            ), canon AS (
-                SELECT doc_id,
-                       scheme || '://' || bare_host
-                       || CASE WHEN port <> ''
-                               AND NOT ((scheme = 'http' AND port = '80')
-                                    OR (scheme = 'https' AND port = '443'))
-                               THEN ':' || port ELSE '' END
-                       || path
-                       || CASE WHEN len(params) > 0
-                               THEN '?' || array_to_string(params, '&')
-                               ELSE '' END AS canon_url,
-                       bare_host AS domain
-                FROM hosts
-            )
-            SELECT doc_id, canon_url, domain,
-                   doc_id = min(doc_id) OVER (PARTITION BY canon_url)
-                   AS keep
-            FROM canon
-        """,
         "agg_pivot": f"""
             SELECT source,
                    count(*) FILTER (lang = 'en') AS n_en,
@@ -7545,4078 +2231,4 @@ FROM pos2
     # the partial-reduction top-k has the IDENTICAL result
     # contract as the broadcast brute force - one oracle serves both
     o["sim_cosine_topk_partial"] = o["sim_cosine_topk"]
-
-    # HLL constants interpolated from the SAME source as the Spark side
-    # (operators/sketches.hll_constants) so the two engines share the
-    # exact alpha literal and bit layout
-    from frogocr_spark.operators.sketches import hll_constants
-    _c = hll_constants(8)
-    o["hll_distinct"] = f"""
-        WITH h AS (
-            SELECT event_type,
-                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                   ::BIGINT AS h
-            FROM events
-        ), r AS (
-            SELECT event_type, h >> {_c['w']} AS bucket,
-                   CASE WHEN (h & {_c['rem_mask']}) = 0 THEN {_c['maxrho']}
-                        ELSE {_c['w']} + 1
-                             - length(bin(h & {_c['rem_mask']})) END AS rho
-            FROM h
-        ), regs AS (
-            SELECT event_type, bucket, max(rho) AS reg
-            FROM r GROUP BY 1, 2
-        ), agg AS (
-            SELECT event_type,
-                   CAST(CAST(sum(1::BIGINT << ({_c['maxrho']} - reg))
-                             AS BIGINT)
-                        + ({_c['m']} - count(*)) * {_c['empty_term']}
-                        AS BIGINT) AS reg_sum_scaled,
-                   CAST({_c['m']} - count(*) AS INT) AS n_zero_regs
-            FROM regs GROUP BY 1
-        ), ex AS (
-            SELECT event_type,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
-            FROM events GROUP BY 1
-        )
-        SELECT event_type, n_exact, n_zero_regs, reg_sum_scaled,
-               round({_c['est_num']!r} / reg_sum_scaled, 3) AS hll_est
-        FROM ex JOIN agg USING (event_type)
-    """
-    o["hll_windows"] = f"""
-        WITH h AS (
-            SELECT epoch_us(ts) // 3600000000 AS win,
-                   event_type,
-                   ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))
-                   ::BIGINT AS h,
-                   user_id
-            FROM events
-        ), r AS (
-            SELECT win, event_type, h >> {_c['w']} AS bucket,
-                   CASE WHEN (h & {_c['rem_mask']}) = 0 THEN {_c['maxrho']}
-                        ELSE {_c['w']} + 1
-                             - length(bin(h & {_c['rem_mask']})) END AS rho
-            FROM h
-        ), regs AS (
-            SELECT win, event_type, bucket, max(rho) AS reg
-            FROM r GROUP BY 1, 2, 3
-        ), agg AS (
-            SELECT win, event_type,
-                   CAST(CAST(sum(1::BIGINT << ({_c['maxrho']} - reg))
-                             AS BIGINT)
-                        + ({_c['m']} - count(*)) * {_c['empty_term']}
-                        AS BIGINT) AS reg_sum_scaled,
-                   CAST({_c['m']} - count(*) AS INT) AS n_zero_regs
-            FROM regs GROUP BY 1, 2
-        ), ex AS (
-            SELECT win, event_type,
-                   CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact
-            FROM h GROUP BY 1, 2
-        )
-        SELECT win, event_type, n_exact, n_zero_regs, reg_sum_scaled,
-               round({_c['est_num']!r} / reg_sum_scaled, 3) AS hll_est
-        FROM ex JOIN agg USING (win, event_type)
-    """
-    o["entity_resolve"] = r"""
-        WITH RECURSIVE w AS (
-            SELECT DISTINCT unnest(list_filter(
-                string_split_regex(trim(text), '\s+'),
-                x -> x <> '')) AS w
-            FROM documents
-        ), e AS (
-            SELECT a.w AS u, b.w AS v FROM w a JOIN w b ON a.w <> b.w
-            WHERE levenshtein(a.w, b.w) <= 2
-        ), lbl(node, l) AS (
-            SELECT w, w FROM w
-            UNION
-            SELECT e.v, lbl.l FROM lbl JOIN e ON e.u = lbl.node
-        )
-        SELECT node AS w, min(l) AS canonical FROM lbl GROUP BY node
-    """
-    o["fuzzy_vocab"] = r"""
-        WITH w AS (
-            SELECT DISTINCT unnest(list_filter(
-                string_split_regex(trim(text), '\s+'),
-                x -> x <> '')) AS w
-            FROM documents
-        )
-        SELECT a.w AS id_a, b.w AS id_b, a.w AS val_a, b.w AS val_b,
-               CAST(levenshtein(a.w, b.w) AS INT) AS lev
-        FROM w a JOIN w b ON a.w < b.w
-        WHERE levenshtein(a.w, b.w) <= 2
-    """
-    o["inverted_index"] = r"""
-        WITH tok AS (
-            SELECT doc_id, unnest(list_filter(
-                string_split_regex(trim(text), '\s+'),
-                x -> x <> '')) AS token
-            FROM documents
-        ), t AS (SELECT DISTINCT doc_id, token FROM tok),
-        d AS (SELECT token, count(*) AS df FROM t GROUP BY 1),
-        p AS (SELECT token, list_sort(list(doc_id)) AS pl
-              FROM t GROUP BY 1)
-        SELECT d.token, CAST(d.df AS BIGINT) AS df,
-               array_to_string(pl[1:50], ',') AS postings
-        FROM d JOIN p USING (token) WHERE d.df >= 2
-    """
-    o["tfidf_topterms"] = r"""
-        WITH tok AS (
-            SELECT doc_id, unnest(list_filter(
-                string_split_regex(trim(text), '\s+'),
-                x -> x <> '')) AS token
-            FROM documents
-        ), tf AS (
-            SELECT doc_id, token, count(*) AS tf FROM tok GROUP BY 1, 2
-        ), d AS (SELECT token, count(*) AS t_df FROM tf GROUP BY 1),
-        n AS (SELECT count(*) AS n_docs FROM documents),
-        s AS (SELECT tf.doc_id, tf.token, tf.tf, d.t_df,
-                     round(CAST(tf.tf * n.n_docs AS DOUBLE) / d.t_df, 6)
-                     AS score
-              FROM tf JOIN d USING (token) CROSS JOIN n)
-        SELECT doc_id, token AS term, CAST(tf AS INT) AS tf,
-               CAST(t_df AS BIGINT) AS t_df, score,
-               CAST(rnk AS INT) AS rank
-        FROM (SELECT *, row_number() OVER (PARTITION BY doc_id
-                  ORDER BY score DESC, token ASC) AS rnk FROM s)
-        WHERE rnk <= 5
-    """
-    o["ngram_lm"] = r"""
-        WITH words AS (
-            SELECT list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), pairs AS (
-            SELECT unnest(CASE WHEN len(ws) >= 2
-                               THEN [array_to_string(ws[j:j+1], ' ')
-                                     for j in range(1, len(ws))]
-                               ELSE CAST([] AS VARCHAR[]) END) AS gram
-            FROM words
-        ), pc AS (
-            SELECT string_split(gram, ' ')[1] AS head,
-                   string_split(gram, ' ')[2] AS cont,
-                   count(*) AS pair_n
-            FROM pairs GROUP BY 1, 2
-        ), hc AS (SELECT head, sum(pair_n) AS head_n FROM pc GROUP BY 1)
-        SELECT head, cont, CAST(pair_n AS BIGINT) AS pair_n,
-               CAST(head_n AS BIGINT) AS head_n,
-               round(pair_n * 1.0 / head_n, 6) AS p_cont,
-               CAST(rnk AS INT) AS rank
-        FROM (SELECT pc.head, pc.cont, pc.pair_n, hc.head_n,
-                     row_number() OVER (PARTITION BY pc.head
-                         ORDER BY pc.pair_n DESC, pc.cont ASC) AS rnk
-              FROM pc JOIN hc USING (head))
-        WHERE rnk <= 3
-    """
-    o["emb_quantize"] = r"""
-        WITH lh AS (
-            SELECT vec_id, embedding,
-                   CAST(list_min(embedding) AS DOUBLE) AS lo,
-                   CAST(list_max(embedding) AS DOUBLE) AS hi
-            FROM embeddings
-        )
-        SELECT vec_id, lo, hi,
-               array_to_string(list_transform(embedding, x ->
-                   CASE WHEN hi = lo THEN 0
-                        ELSE CAST(floor((CAST(x AS DOUBLE) - lo) * 255.0
-                                        / (hi - lo) + 0.5) - 128 AS INT)
-                   END), ',') AS qstr
-        FROM lh
-    """
-    from frogocr_spark.operators.graph import (pagerank_int_oracle_sql,
-                                               triangle_counts_oracle_sql)
-    o["triangles"] = triangle_counts_oracle_sql(
-        "SELECT a.user_id AS src, b.user_id AS dst FROM "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) a JOIN "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) b "
-        "ON a.win = b.win AND a.user_id < b.user_id")
-    o["emb_centroids"] = r"""
-        WITH lh AS (
-            SELECT label, embedding,
-                   CAST(list_min(embedding) AS DOUBLE) AS lo,
-                   CAST(list_max(embedding) AS DOUBLE) AS hi
-            FROM embeddings
-        ), q AS (
-            SELECT label,
-                   list_transform(embedding, x ->
-                       CASE WHEN hi = lo THEN 0
-                            ELSE CAST(floor((CAST(x AS DOUBLE) - lo)
-                                            * 255.0 / (hi - lo) + 0.5)
-                                      - 128 AS BIGINT)
-                       END) AS qvec
-            FROM lh
-        ), ex AS (
-            SELECT label, pp.pos AS pos, pp.qv AS qv FROM (
-                SELECT label,
-                       unnest([{'pos': j, 'qv': qvec[j]}
-                               for j in range(1, len(qvec) + 1)]) AS pp
-                FROM q)
-        ), agg AS (
-            SELECT label, pos, CAST(SUM(qv) AS BIGINT) AS s,
-                   COUNT(*) AS n
-            FROM ex GROUP BY label, pos
-        )
-        SELECT label, CAST(MAX(n) AS BIGINT) AS n,
-               array_to_string(list(s ORDER BY pos), ',') AS sum_str
-        FROM agg GROUP BY label
-    """
-    o["cms_heavy"] = r"""
-        WITH tok AS (
-            SELECT unnest(list_filter(
-                string_split_regex(trim(text), '\s+'),
-                x -> x <> '')) AS token
-            FROM documents
-        ), n AS (SELECT count(*) AS n_tok FROM tok),
-        rows_d AS (SELECT unnest([0, 1, 2, 3]) AS i),
-        cells AS (
-            SELECT token, i,
-                   ('0x' || substr(md5(CAST(i AS VARCHAR) || ':' || token),
-                                   1, 15))::BIGINT % 512 AS col
-            FROM tok CROSS JOIN rows_d
-        ), sk AS (SELECT i, col, count(*) AS cnt FROM cells GROUP BY 1, 2),
-        keys AS (SELECT token, count(*) AS n_true FROM tok GROUP BY 1),
-        probe AS (
-            SELECT k.token, min(coalesce(sk.cnt, 0)) AS cms_est
-            FROM keys k CROSS JOIN rows_d ii
-            LEFT JOIN sk ON sk.i = ii.i AND sk.col =
-                ('0x' || substr(md5(CAST(ii.i AS VARCHAR) || ':'
-                                    || k.token), 1, 15))::BIGINT % 512
-            GROUP BY 1
-        )
-        SELECT p.token, CAST(p.cms_est AS BIGINT) AS cms_est,
-               CAST(k.n_true AS BIGINT) AS n_true
-        FROM probe p JOIN keys k USING (token) CROSS JOIN n
-        WHERE p.cms_est * 1000 >= n.n_tok
-    """
-    from frogocr_spark.operators.bpe import (bpe_train_oracle_sql,
-                                             bpe_vocab_oracle_sql)
-    o["bpe_merges"] = bpe_train_oracle_sql(8)
-    o["bpe_vocab"] = bpe_vocab_oracle_sql(8)
-    o["sql_surface"] = SQL_SURFACE_TEXT
-    o["funnel"] = """
-        WITH e AS (
-            SELECT user_id, event_type, epoch_us(ts) AS us
-            FROM events
-            WHERE event_type IN ('signup', 'view', 'click', 'purchase')
-        ),
-        t1 AS (SELECT user_id, min(us) AS t FROM e
-               WHERE event_type = 'signup' GROUP BY 1),
-        t2 AS (SELECT e.user_id, min(us) AS t FROM e
-               JOIN t1 USING (user_id)
-               WHERE event_type = 'view' AND us > t1.t GROUP BY 1),
-        t3 AS (SELECT e.user_id, min(us) AS t FROM e
-               JOIN t2 USING (user_id)
-               WHERE event_type = 'click' AND us > t2.t GROUP BY 1),
-        t4 AS (SELECT e.user_id, min(us) AS t FROM e
-               JOIN t3 USING (user_id)
-               WHERE event_type = 'purchase' AND us > t3.t GROUP BY 1)
-        SELECT CAST(step AS INT) AS step, step_name,
-               CAST(n_users AS BIGINT) AS n_users
-        FROM (
-            SELECT 1 AS step, 'signup' AS step_name,
-                   (SELECT count(*) FROM t1) AS n_users
-            UNION ALL SELECT 2, 'view', (SELECT count(*) FROM t2)
-            UNION ALL SELECT 3, 'click', (SELECT count(*) FROM t3)
-            UNION ALL SELECT 4, 'purchase', (SELECT count(*) FROM t4))
-    """
-    o["cohort_retention"] = """
-        WITH ev AS (
-            SELECT user_id,
-                   CAST(floor(epoch_us(ts) / 604800000000) AS BIGINT) AS w
-            FROM events
-        ), f AS (SELECT user_id, min(w) AS cohort_week FROM ev GROUP BY 1),
-        d AS (SELECT DISTINCT cohort_week, w - cohort_week AS week_offset,
-                     user_id
-              FROM ev JOIN f USING (user_id))
-        SELECT cohort_week, week_offset,
-               CAST(count(*) AS BIGINT) AS n_users
-        FROM d GROUP BY 1, 2
-    """
-    o["histogram"] = """
-        SELECT event_type,
-               CAST(least(9, greatest(0,
-                    CAST(floor(CAST(value AS DOUBLE) / 50.0) AS INT)))
-                    AS INT) AS bucket,
-               CAST(count(*) AS BIGINT) AS n,
-               min(CAST(value AS DOUBLE)) AS v_min,
-               max(CAST(value AS DOUBLE)) AS v_max
-        FROM events GROUP BY 1, 2
-    """
-    o["decimal_stats"] = """
-        WITH b AS (
-            SELECT l_returnflag,
-                   CAST(l_quantity AS BIGINT) AS x,
-                   CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS y
-            FROM lineitem
-        ), a AS (
-            SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-                   sum(CAST(x AS DECIMAL(38,0))) AS sx,
-                   sum(CAST(y AS DECIMAL(38,0))) AS sy,
-                   sum(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-                   sum(CAST(y * y AS DECIMAL(38,0))) AS syy,
-                   sum(CAST(x * y AS DECIMAL(38,0))) AS sxy
-            FROM b GROUP BY 1
-        )
-        SELECT l_returnflag, n,
-               round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_x,
-               round((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_x,
-               round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_y,
-               round((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_y,
-               round(CASE WHEN
-                       (CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                       AND
-                       (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                     THEN ((CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE))
-                      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-                     / (sqrt((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                        * sqrt((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))))
-                     ELSE NULL END,
-                     6) AS corr_xy
-        FROM a
-    """
-    from frogocr_spark.operators.layout import zvalue_sql
-    _zv = zvalue_sql("user_id", "CAST(floor(value) AS BIGINT)", bits=16)
-    o["zorder_layout"] = f"""
-        WITH z AS (
-            SELECT event_id, {_zv} AS zval FROM events
-        ), ext AS (SELECT min(zval) AS zmin, max(zval) AS zmax FROM z)
-        SELECT event_id, zval,
-               CAST(floor(((zval - zmin) * 16)
-                          / (zmax - zmin + 1)) AS INT) AS zbucket
-        FROM z CROSS JOIN ext
-    """
-    o["json_extract"] = """
-        SELECT event_id, event_type,
-               CAST(json_extract_string(props, '$.k') AS INT) AS k_gjo,
-               CAST(json_extract_string(props, '$.k') AS INT) AS k_fj
-        FROM events
-        WHERE CAST(json_extract_string(props, '$.k') AS INT) >= 90
-    """
-    o["tpch_q2_mincost"] = """
-        WITH eu AS (
-            SELECT s_suppkey, s_name, n_name
-            FROM supplier
-            JOIN nation ON s_nationkey = n_nationkey
-            JOIN region ON n_regionkey = r_regionkey
-            WHERE r_name = 'EUROPE'
-        ), sup AS (
-            SELECT l_partkey, l_suppkey, l_extendedprice, s_name, n_name
-            FROM lineitem JOIN eu ON l_suppkey = eu.s_suppkey
-        )
-        SELECT p.p_partkey, p.p_type, s.s_name, s.n_name,
-               s.l_extendedprice AS min_price
-        FROM sup s JOIN part p ON s.l_partkey = p.p_partkey
-        WHERE s.l_extendedprice = (
-            SELECT min(s2.l_extendedprice) FROM sup s2
-            WHERE s2.l_partkey = s.l_partkey)
-    """
-    from frogocr_spark.operators.profile import profile_oracle_sql
-    o["profile"] = profile_oracle_sql(
-        "orders", ["o_orderkey", "o_custkey", "o_orderstatus",
-                   "o_orderpriority"])
-    o["pagerank"] = pagerank_int_oracle_sql(
-        "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, "
-        "'c' || CAST(o_custkey AS VARCHAR) AS dst "
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey",
-        iters=3)
-    o["semdedup"] = """
-        WITH seeds AS (
-            SELECT vec_id AS seed_id, CAST(embedding AS DOUBLE[]) AS sv
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-            LIMIT (SELECT greatest(10, count(*) // 200)
-                   FROM embeddings)
-        ), assign AS (
-            SELECT vec_id, seed_id, emb FROM (
-                SELECT e.vec_id, s.seed_id,
-                       CAST(e.embedding AS DOUBLE[]) AS emb,
-                       row_number() OVER (
-                           PARTITION BY e.vec_id
-                           ORDER BY round(list_cosine_similarity(
-                               CAST(e.embedding AS DOUBLE[]), s.sv), 4)
-                               DESC, s.seed_id) AS rk
-                FROM embeddings e CROSS JOIN seeds s
-            ) WHERE rk = 1
-        )
-        SELECT id_a, id_b, cluster_id, cosine FROM (
-            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-                   a.seed_id AS cluster_id,
-                   round(list_cosine_similarity(a.emb, b.emb), 4)
-                   AS cosine
-            FROM assign a JOIN assign b
-              ON a.seed_id = b.seed_id AND a.vec_id < b.vec_id
-        ) WHERE cosine >= 0.4
-    """
-    o["lm_filter"] = r"""
-        WITH words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), bi AS (
-            SELECT doc_id,
-                   CASE WHEN len(ws) >= 2
-                        THEN [array_to_string(ws[j:j+1], ' ')
-                              for j in range(1, len(ws))]
-                        ELSE CAST([] AS VARCHAR[]) END AS grams
-            FROM words
-        ), lm AS (
-            SELECT gram FROM (
-                SELECT unnest(grams) AS gram FROM bi
-            ) GROUP BY gram
-            ORDER BY COUNT(*) DESC, gram ASC LIMIT 200
-        ), lmset AS (SELECT list(gram) AS known FROM lm)
-        SELECT doc_id,
-               CAST(len(grams) AS INT) AS n_bigrams,
-               CAST(len(list_filter(grams,
-                    g -> list_contains(known, g))) AS INT) AS n_known,
-               round(CASE WHEN len(grams) = 0 THEN 0.0
-                          ELSE len(list_filter(grams,
-                               g -> list_contains(known, g)))
-                               * 1.0 / len(grams) END, 6) AS known_ratio,
-               CAST(len(list_filter(grams, g -> list_contains(known, g)))
-                    * 1000 >= 500 * len(grams) AS BOOLEAN) AS keep
-        FROM bi CROSS JOIN lmset
-    """
-    o["containment"] = r"""
-        WITH words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), g AS (
-            SELECT DISTINCT doc_id,
-                   unnest(CASE WHEN len(ws) >= 8
-                               THEN [array_to_string(ws[j:j+7], ' ')
-                                     for j in range(1, len(ws) - 6)]
-                               ELSE CAST([] AS VARCHAR[]) END) AS gram
-            FROM words
-        ), f AS (
-            SELECT gram, COUNT(*) AS df FROM g GROUP BY gram
-        ), kept AS (
-            SELECT g.doc_id, g.gram FROM g JOIN f USING (gram)
-            WHERE f.df <= 64
-        ), sizes AS (
-            SELECT doc_id, COUNT(*) AS n FROM kept GROUP BY doc_id
-        ), inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   COUNT(*) AS inter
-            FROM kept a JOIN kept b USING (gram)
-            WHERE a.doc_id <> b.doc_id GROUP BY 1, 2
-        )
-        SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-               CAST(s.n AS BIGINT) AS n_a,
-               round(inter * 1.0 / s.n, 6) AS containment
-        FROM inter JOIN sizes s ON s.doc_id = inter.id_a
-        WHERE inter * 1000 >= 500 * s.n
-    """
-    o["outliers"] = """
-        WITH b AS (
-            SELECT event_type, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS x
-            FROM events
-        ), s AS (
-            SELECT event_type, COUNT(*)::HUGEINT AS n,
-                   SUM(x::HUGEINT) AS sx, SUM(x::HUGEINT * x) AS sxx
-            FROM b GROUP BY event_type
-        )
-        SELECT b.event_type, b.event_id, b.x,
-               CAST(s.n AS BIGINT) AS n,
-               CAST(CASE WHEN s.n * b.x - s.sx > 0 THEN 1 ELSE -1 END
-                    AS INT) AS side
-        FROM b JOIN s USING (event_type)
-        WHERE (s.n * b.x - s.sx) * (s.n * b.x - s.sx)
-              > 9 * (s.n * s.sxx - s.sx * s.sx)
-    """
-    o["weighted_sample"] = """
-        SELECT doc_id, n_chars, pri AS priority FROM (
-            SELECT doc_id, n_chars,
-                   CAST(('0x' || substr(md5(CAST(doc_id AS VARCHAR)),
-                                        1, 15))::BIGINT AS DOUBLE)
-                   / CAST(n_chars AS DOUBLE) AS pri
-            FROM documents WHERE n_chars > 0
-        ) ORDER BY pri ASC, doc_id ASC LIMIT 50
-    """
-    o["scd2_build"] = """
-        WITH b AS (
-            SELECT user_id, event_type AS attr, epoch_us(ts) AS us,
-                   event_id
-            FROM events
-        ), c AS (
-            SELECT *, lag(attr) OVER (
-                PARTITION BY user_id ORDER BY us, event_id) AS prev
-            FROM b
-        ), ch AS (
-            SELECT user_id, attr, us, event_id FROM c
-            WHERE prev IS NULL OR prev <> attr
-        )
-        SELECT user_id,
-               CAST(row_number() OVER w AS INT) AS version,
-               attr,
-               us AS valid_from_us,
-               lead(us) OVER w AS valid_to_us,
-               lead(us) OVER w IS NULL AS is_current
-        FROM ch
-        WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-    """
-    o["ohlc_bars"] = """
-        WITH b AS (
-            SELECT event_type, epoch_us(ts) // 3600000000 AS bucket,
-                   value AS v, epoch_us(ts) AS us, event_id,
-                   row_number() OVER (
-                       PARTITION BY event_type, epoch_us(ts) // 3600000000
-                       ORDER BY epoch_us(ts), event_id) AS rn_a,
-                   row_number() OVER (
-                       PARTITION BY event_type, epoch_us(ts) // 3600000000
-                       ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn_d
-            FROM events
-        )
-        SELECT event_type, bucket,
-               max(CASE WHEN rn_a = 1 THEN v END) AS open,
-               max(v) AS high,
-               min(v) AS low,
-               max(CASE WHEN rn_d = 1 THEN v END) AS close,
-               count(*) AS n_events,
-               CAST(sum(CAST(round(v * 100, 0) AS BIGINT)) AS BIGINT)
-               AS vol_cents
-        FROM b GROUP BY event_type, bucket
-    """
-    o["gap_fill"] = """
-        WITH hv AS (
-            SELECT user_id, epoch_us(ts) // 3600000000 AS bucket,
-                   max(CAST(round(value * 100, 0) AS BIGINT)) AS v_cents
-            FROM events GROUP BY user_id, bucket
-        ), bounds AS (
-            SELECT user_id, min(bucket) AS b0, max(bucket) AS b1
-            FROM hv GROUP BY user_id
-        ), grid AS (
-            SELECT user_id, unnest(generate_series(b0, b1)) AS bucket
-            FROM bounds
-        )
-        SELECT g.user_id, g.bucket, hv.v_cents,
-               last_value(hv.v_cents IGNORE NULLS) OVER (
-                   PARTITION BY g.user_id ORDER BY g.bucket
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-               AS filled_cents,
-               hv.v_cents IS NULL AS is_gap
-        FROM grid g LEFT JOIN hv
-          ON g.user_id = hv.user_id AND g.bucket = hv.bucket
-    """
-    o["salted_join"] = """
-        WITH dim AS (
-            SELECT event_type, count(*) AS n_type,
-                   CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                        AS BIGINT) AS type_cents
-            FROM events GROUP BY event_type
-        )
-        SELECT e.event_type, e.event_id,
-               CAST(round(e.value * 100, 0) AS BIGINT) AS cents,
-               d.n_type, d.type_cents
-        FROM events e JOIN dim d USING (event_type)
-    """
-    from frogocr_spark.operators.graph import kcore_oracle_sql
-    o["kcore"] = kcore_oracle_sql(
-        "SELECT a.user_id AS src, b.user_id AS dst FROM "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) a JOIN "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) b "
-        "ON a.win = b.win AND a.user_id < b.user_id",
-        _KCORE_K, _KCORE_ROUNDS)
-    _pq_codes_ctes = """
-        seeds AS (
-            SELECT CAST(embedding AS DOUBLE[]) AS sv,
-                   CAST(row_number() OVER (
-                       ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-                       AS INT) - 1 AS j
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 8
-        ), cents AS (
-            SELECT j, mi, sv[mi*16+1 : (mi+1)*16] AS cv
-            FROM seeds, range(4) t(mi)
-        ), vecs AS (
-            SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-            FROM embeddings
-        ), dists AS (
-            SELECT vecs.vec_id, cents.mi, cents.j,
-                   CAST(round(list_distance(
-                       vecs.v[cents.mi*16+1 : (cents.mi+1)*16],
-                       cents.cv) * 10000, 0) AS BIGINT) AS di
-            FROM vecs CROSS JOIN cents
-        ), best AS (
-            SELECT vec_id, mi, j FROM (
-                SELECT vec_id, mi, j,
-                       row_number() OVER (PARTITION BY vec_id, mi
-                                          ORDER BY di, j) AS rk
-                FROM dists
-            ) WHERE rk = 1
-        ), codes AS (
-            SELECT vec_id,
-                   max(CASE WHEN mi = 0 THEN j END) AS code_0,
-                   max(CASE WHEN mi = 1 THEN j END) AS code_1,
-                   max(CASE WHEN mi = 2 THEN j END) AS code_2,
-                   max(CASE WHEN mi = 3 THEN j END) AS code_3
-            FROM best GROUP BY vec_id
-        )
-    """
-    o["pq_codes"] = f"""
-        WITH {_pq_codes_ctes}
-        SELECT vec_id, code_0, code_1, code_2, code_3 FROM codes
-    """
-    o["pq_search"] = f"""
-        WITH {_pq_codes_ctes},
-        qs AS (
-            SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-            FROM embeddings
-            ORDER BY md5(CAST(vec_id AS VARCHAR)) DESC, vec_id DESC
-            LIMIT 5
-        ), dtab AS (
-            SELECT qs.query_id, cents.mi, cents.j,
-                   CAST(round(list_distance(
-                       qs.qv[cents.mi*16+1 : (cents.mi+1)*16],
-                       cents.cv) * 10000, 0) AS BIGINT) AS di
-            FROM qs CROSS JOIN cents
-        ), code_long AS (
-            SELECT vec_id, 0 AS mi, code_0 AS j FROM codes UNION ALL
-            SELECT vec_id, 1, code_1 FROM codes UNION ALL
-            SELECT vec_id, 2, code_2 FROM codes UNION ALL
-            SELECT vec_id, 3, code_3 FROM codes
-        ), adc AS (
-            SELECT d.query_id, c.vec_id AS neighbor_id,
-                   CAST(sum(d.di) AS BIGINT) AS adc_dist_i
-            FROM code_long c JOIN dtab d
-              ON c.mi = d.mi AND c.j = d.j
-            GROUP BY d.query_id, c.vec_id
-        )
-        SELECT query_id, neighbor_id, adc_dist_i,
-               CAST(rank AS INT) AS rank FROM (
-            SELECT *, row_number() OVER (
-                PARTITION BY query_id
-                ORDER BY adc_dist_i, neighbor_id) AS rank
-            FROM adc
-        ) WHERE rank <= 10
-    """
-    o["table_diff"] = """
-        WITH docs AS (
-            SELECT doc_id, text FROM documents
-        ), new AS (
-            SELECT doc_id,
-                   CASE WHEN doc_id % 5 = 0 THEN upper(text)
-                        ELSE text END AS text
-            FROM docs WHERE doc_id % 7 <> 0
-            UNION ALL
-            SELECT doc_id + 20000000 AS doc_id, text
-            FROM docs WHERE doc_id % 9 = 4
-        )
-        SELECT COALESCE(o.doc_id, n.doc_id) AS key,
-               CASE WHEN o.doc_id IS NULL THEN 'added'
-                    WHEN n.doc_id IS NULL THEN 'removed'
-                    ELSE 'changed' END AS change,
-               o.text AS old_text, n.text AS new_text
-        FROM docs o FULL OUTER JOIN new n ON o.doc_id = n.doc_id
-        WHERE o.doc_id IS NULL OR n.doc_id IS NULL OR o.text <> n.text
-    """
-    o["tpch_q7_natvol"] = """
-        SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-               year(l.l_shipdate) AS l_year,
-               CAST(sum(CAST(round(l.l_extendedprice
-                                   * (1 - l.l_discount) * 100, 0)
-                             AS BIGINT)) AS BIGINT) AS revenue_cents,
-               count(*) AS n_items
-        FROM lineitem l
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n1 ON s.s_nationkey = n1.n_nationkey
-        JOIN nation n2 ON c.c_nationkey = n2.n_nationkey
-        WHERE n1.n_name <> n2.n_name
-        GROUP BY supp_nation, cust_nation, l_year
-    """
-    o["tpch_q17_smallqty"] = """
-        WITH base AS (
-            SELECT l_partkey,
-                   CAST(round(l_quantity * 100, 0) AS BIGINT)
-                   AS qty_cents,
-                   CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                   AS price_cents
-            FROM lineitem
-        ), pa AS (
-            SELECT l_partkey,
-                   CAST(sum(qty_cents) AS BIGINT) AS sum_qc,
-                   count(*) AS n_li
-            FROM base GROUP BY l_partkey
-        )
-        SELECT CAST(sum(b.price_cents) AS BIGINT)
-               AS small_qty_revenue_cents,
-               count(*) AS n_small
-        FROM base b JOIN pa USING (l_partkey)
-        WHERE 5 * b.qty_cents * pa.n_li < pa.sum_qc
-    """
-    o["attribution"] = """
-        WITH c AS (
-            SELECT user_id, event_id AS click_id, ts FROM events
-            WHERE event_type = 'click'
-        ), p AS (
-            SELECT user_id, event_id AS purchase_id, ts FROM events
-            WHERE event_type = 'purchase'
-        )
-        SELECT c.user_id, c.click_id AS l_click_id,
-               p.purchase_id AS r_purchase_id,
-               epoch_us(p.ts) - epoch_us(c.ts) AS lag_us
-        FROM c JOIN p ON c.user_id = p.user_id
-         AND p.ts >= c.ts
-         AND p.ts <= c.ts + INTERVAL 10 MINUTE
-    """
-    o["markov_transitions"] = """
-        WITH seq AS (
-            SELECT user_id, event_type AS from_state,
-                   lead(event_type) OVER (
-                       PARTITION BY user_id
-                       ORDER BY epoch_us(ts), event_id) AS to_state
-            FROM events
-        ), pairs AS (
-            SELECT from_state, to_state, count(*) AS n
-            FROM seq WHERE to_state IS NOT NULL
-            GROUP BY from_state, to_state
-        )
-        SELECT from_state, to_state, n,
-               CAST(sum(n) OVER (PARTITION BY from_state) AS BIGINT)
-               AS n_from
-        FROM pairs
-    """
-    o["winsorize"] = """
-        WITH base AS (
-            SELECT event_type, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS cents
-            FROM events
-        ), ranked AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY cents, event_id) AS rn,
-                   count(*) OVER (PARTITION BY event_type) AS n
-            FROM base
-        ), cuts AS (
-            SELECT event_type,
-                   max(CASE WHEN rn = greatest((n * 5 + 99) // 100, 1)
-                            THEN cents END) AS lo_cents,
-                   max(CASE WHEN rn = greatest((n * 95 + 99) // 100, 1)
-                            THEN cents END) AS hi_cents,
-                   max(n) AS n
-            FROM ranked GROUP BY event_type
-        )
-        SELECT b.event_type, CAST(max(c.n) AS BIGINT) AS n,
-               max(c.lo_cents) AS lo_cents,
-               max(c.hi_cents) AS hi_cents,
-               CAST(sum(greatest(least(b.cents, c.hi_cents),
-                                 c.lo_cents)) AS BIGINT)
-               AS winsorized_sum_cents,
-               CAST(sum(CASE WHEN b.cents < c.lo_cents THEN 1
-                             ELSE 0 END) AS BIGINT) AS n_lo,
-               CAST(sum(CASE WHEN b.cents > c.hi_cents THEN 1
-                             ELSE 0 END) AS BIGINT) AS n_hi
-        FROM base b JOIN cuts c USING (event_type)
-        GROUP BY b.event_type
-    """
-    o["dq_checks"] = """
-        WITH w AS (
-            SELECT count(*) AS n,
-                   sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END)
-                   AS v1,
-                   sum(CASE WHEN o_orderdate IS NULL THEN 1 ELSE 0 END)
-                   AS v2,
-                   count(*) - count(DISTINCT o_orderkey) AS v3,
-                   sum(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END)
-                   AS v4,
-                   sum(CASE WHEN o_orderpriority IS NOT NULL
-                             AND o_orderpriority NOT IN
-                                 ('1-URGENT', '2-HIGH', '3-MEDIUM',
-                                  '4-NOT SPECIFIED', '5-LOW')
-                            THEN 1 ELSE 0 END) AS v5
-            FROM orders
-        ), r AS (
-            SELECT count(*) AS v6 FROM orders
-            WHERE o_custkey NOT IN (SELECT c_custkey FROM customer)
-        )
-        SELECT 'not_null:o_custkey' AS "check",
-               CAST(COALESCE(w.v1, 0) AS BIGINT) AS n_violations,
-               CAST(w.n AS BIGINT) AS n_rows FROM w
-        UNION ALL SELECT 'not_null:o_orderdate',
-               CAST(COALESCE(w.v2, 0) AS BIGINT), CAST(w.n AS BIGINT)
-               FROM w
-        UNION ALL SELECT 'unique:o_orderkey',
-               CAST(w.v3 AS BIGINT), CAST(w.n AS BIGINT) FROM w
-        UNION ALL SELECT 'positive:o_totalprice',
-               CAST(COALESCE(w.v4, 0) AS BIGINT), CAST(w.n AS BIGINT)
-               FROM w
-        UNION ALL SELECT 'enum:o_orderpriority',
-               CAST(COALESCE(w.v5, 0) AS BIGINT), CAST(w.n AS BIGINT)
-               FROM w
-        UNION ALL SELECT 'ref:o_custkey',
-               CAST(r.v6 AS BIGINT), CAST(w.n AS BIGINT) FROM w, r
-    """
-    o["tpch_q10_returns"] = """
-        SELECT c.c_custkey, c.c_name, n.n_name,
-               CAST(sum(CAST(round(l.l_extendedprice
-                                   * (1 - l.l_discount) * 100, 0)
-                             AS BIGINT)) AS BIGINT) AS revenue_cents,
-               count(*) AS n_items
-        FROM lineitem l
-        JOIN orders o ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation n ON c.c_nationkey = n.n_nationkey
-        WHERE l.l_returnflag = 'R'
-        GROUP BY c.c_custkey, c.c_name, n.n_name
-        ORDER BY revenue_cents DESC, c.c_custkey LIMIT 20
-    """
-    o["tpch_q19_disjunct"] = """
-        WITH j AS (
-            SELECT p.p_brand, p.p_size,
-                   CAST(round(l.l_quantity * 100, 0) AS BIGINT)
-                   AS qty_cents,
-                   CAST(round(l.l_extendedprice * 100, 0) AS BIGINT)
-                   AS price_cents
-            FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        )
-        SELECT CAST(sum(price_cents) AS BIGINT)
-               AS disjunct_revenue_cents,
-               count(*) AS n_matched
-        FROM j
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 10
-               AND qty_cents BETWEEN 100 AND 1500)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 20
-               AND qty_cents BETWEEN 1000 AND 2500)
-           OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 30
-               AND qty_cents BETWEEN 2000 AND 3500)
-    """
-    o["tpch_q22_idle"] = """
-        WITH base AS (
-            SELECT c_custkey, c_nationkey,
-                   CAST(round(c_acctbal * 100, 0) AS BIGINT) AS bal_cents
-            FROM customer
-        ), stats AS (
-            SELECT CAST(sum(bal_cents) AS BIGINT) AS sum_pos,
-                   count(*) AS n_pos
-            FROM base WHERE bal_cents > 0
-        )
-        SELECT b.c_nationkey, count(*) AS n_idle_rich,
-               CAST(sum(b.bal_cents) AS BIGINT) AS idle_bal_cents
-        FROM base b, stats s
-        WHERE b.bal_cents > 0
-          AND b.bal_cents * s.n_pos > s.sum_pos
-          AND b.c_custkey NOT IN (SELECT o_custkey FROM orders
-                                  WHERE o_orderpriority = '1-URGENT')
-        GROUP BY b.c_nationkey
-    """
-    o["w_range_frame"] = """
-        WITH b AS (
-            SELECT event_id, user_id, epoch_us(ts) AS us,
-                   CAST(round(value * 100, 0) AS BIGINT) AS cents
-            FROM events
-        )
-        SELECT event_id, user_id, us,
-               count(*) OVER w AS n_1h,
-               CAST(sum(cents) OVER w AS BIGINT) AS sum_cents_1h
-        FROM b
-        WINDOW w AS (PARTITION BY user_id ORDER BY us
-                     RANGE BETWEEN 3600000000 PRECEDING
-                           AND CURRENT ROW)
-    """
-    from frogocr_spark.operators.graph import bfs_levels_oracle_sql
-    o["bfs_levels"] = bfs_levels_oracle_sql(
-        "SELECT a.user_id AS src, b.user_id AS dst FROM "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) a JOIN "
-        "(SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id "
-        " FROM events) b "
-        "ON a.win = b.win AND a.user_id < b.user_id",
-        "SELECT DISTINCT user_id AS node FROM events "
-        "WHERE user_id % 97 = 0",
-        _BFS_ROUNDS)
-    o["grouping_sets"] = _GROUPING_SETS_TEXT
-    o["tpch_q21_waiting"] = """
-        WITH pairs AS (
-            SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-        ), rp AS (
-            SELECT DISTINCT l_orderkey, l_suppkey FROM lineitem
-            WHERE l_returnflag = 'R'
-        ), sole AS (
-            SELECT l1.l_orderkey, l1.l_suppkey FROM rp l1
-            WHERE EXISTS (SELECT 1 FROM pairs l2
-                          WHERE l2.l_orderkey = l1.l_orderkey
-                            AND l2.l_suppkey <> l1.l_suppkey)
-              AND NOT EXISTS (SELECT 1 FROM rp l3
-                              WHERE l3.l_orderkey = l1.l_orderkey
-                                AND l3.l_suppkey <> l1.l_suppkey)
-        )
-        SELECT s.s_suppkey, s.s_name, count(*) AS n_waiting
-        FROM sole JOIN supplier s ON sole.l_suppkey = s.s_suppkey
-        GROUP BY s.s_suppkey, s.s_name
-        ORDER BY n_waiting DESC, s.s_name
-        LIMIT 20
-    """
-    o["tpch_q15_topsupp"] = """
-        WITH per AS (
-            SELECT l_suppkey,
-                   CAST(sum(CAST(round(l_extendedprice
-                                       * (1 - l_discount) * 100, 0)
-                                 AS BIGINT)) AS BIGINT)
-                   AS total_revenue_cents
-            FROM lineitem
-            WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-              AND l_shipdate < TIMESTAMP '1996-04-01'
-            GROUP BY l_suppkey
-        )
-        SELECT per.l_suppkey AS s_suppkey, s.s_name,
-               per.total_revenue_cents
-        FROM per JOIN supplier s ON per.l_suppkey = s.s_suppkey
-        WHERE per.total_revenue_cents =
-              (SELECT max(total_revenue_cents) FROM per)
-    """
-    o["tpch_q16_partcnt"] = """
-        WITH pairs AS (
-            SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
-            WHERE l_suppkey NOT IN (SELECT s_suppkey FROM supplier
-                                    WHERE s_acctbal < 0)
-        )
-        SELECT p.p_brand, p.p_size,
-               count(DISTINCT pairs.l_suppkey) AS supplier_cnt
-        FROM pairs JOIN part p ON pairs.l_partkey = p.p_partkey
-        WHERE p.p_brand <> 'Brand#45' AND p.p_size <= 25
-        GROUP BY p.p_brand, p.p_size
-    """
-    o["tpch_q20_excess"] = """
-        WITH base AS (
-            SELECT l_partkey, l_suppkey,
-                   CAST(round(l_quantity * 100, 0) AS BIGINT)
-                   AS qty_cents
-            FROM lineitem
-            WHERE l_partkey IN (SELECT p_partkey FROM part
-                                WHERE p_type LIKE 'PROMO%')
-        ), tot AS (
-            SELECT l_partkey, CAST(sum(qty_cents) AS BIGINT) AS tot_qc
-            FROM base GROUP BY l_partkey
-        ), sp AS (
-            SELECT l_partkey, l_suppkey,
-                   CAST(sum(qty_cents) AS BIGINT) AS sp_qc
-            FROM base GROUP BY l_partkey, l_suppkey
-        )
-        SELECT s.s_suppkey, s.s_name, s.s_nationkey
-        FROM supplier s
-        WHERE s.s_suppkey IN (
-            SELECT sp.l_suppkey FROM sp
-            JOIN tot ON sp.l_partkey = tot.l_partkey
-            WHERE 10 * sp.sp_qc > tot.tot_qc)
-    """
-    o["tpch_q14_promo"] = """
-        SELECT month(l.l_shipdate) AS month,
-               CAST(sum(CASE WHEN p.p_type LIKE 'PROMO%'
-                        THEN CAST(round(l.l_extendedprice
-                                        * (1 - l.l_discount) * 100, 0)
-                                  AS BIGINT) ELSE 0 END) AS BIGINT)
-               AS promo_cents,
-               CAST(sum(CAST(round(l.l_extendedprice
-                                   * (1 - l.l_discount) * 100, 0)
-                             AS BIGINT)) AS BIGINT) AS total_cents
-        FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l.l_shipdate < TIMESTAMP '1997-01-01'
-        GROUP BY month(l.l_shipdate)
-    """
-    o["tpch_q8_share"] = """
-        SELECT year(l.l_shipdate) AS year,
-               CAST(sum(CASE WHEN n.n_name = 'NATION_7'
-                        THEN CAST(round(l.l_extendedprice
-                                        * (1 - l.l_discount) * 100, 0)
-                                  AS BIGINT) ELSE 0 END) AS BIGINT)
-               AS nation_cents,
-               CAST(sum(CAST(round(l.l_extendedprice
-                                   * (1 - l.l_discount) * 100, 0)
-                             AS BIGINT)) AS BIGINT) AS total_cents
-        FROM lineitem l
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
-        GROUP BY year(l.l_shipdate)
-    """
-    o["ols_regression"] = """
-        WITH b AS (
-            SELECT event_type,
-                   epoch_us(ts) // 3600000000 AS x,
-                   CAST(round(value * 100, 0) AS BIGINT) AS y
-            FROM events
-        ), a AS (
-            SELECT event_type,
-                   CAST(count(*) AS HUGEINT) AS nn,
-                   CAST(sum(x) AS HUGEINT) AS sx,
-                   CAST(sum(y) AS HUGEINT) AS sy,
-                   CAST(sum(x * x) AS HUGEINT) AS sxx,
-                   CAST(sum(y * y) AS HUGEINT) AS syy,
-                   CAST(sum(x * y) AS HUGEINT) AS sxy
-            FROM b GROUP BY event_type
-        ), t AS (
-            SELECT event_type, nn, sx, sy,
-                   nn * sxy - sx * sy AS num,
-                   nn * sxx - sx * sx AS den_x,
-                   nn * syy - sy * sy AS den_y
-            FROM a
-        ), u AS (
-            SELECT event_type, nn, sx, sy,
-                   CASE WHEN den_x > 0
-                        THEN CAST(num AS DOUBLE) / CAST(den_x AS DOUBLE)
-                   END AS slope,
-                   CASE WHEN den_x > 0 AND den_y > 0
-                        THEN (CAST(num AS DOUBLE)
-                              / CAST(den_x AS DOUBLE))
-                             * (CAST(num AS DOUBLE)
-                                / CAST(den_y AS DOUBLE))
-                   END AS r2
-            FROM t
-        )
-        SELECT event_type, CAST(nn AS BIGINT) AS n,
-               round(slope, 6) AS slope,
-               round(CAST(sy AS DOUBLE) / CAST(nn AS DOUBLE)
-                     - slope * (CAST(sx AS DOUBLE)
-                                / CAST(nn AS DOUBLE)), 6) AS intercept,
-               round(r2, 6) AS r2
-        FROM u
-    """
-    o["pit_join"] = """
-        WITH b AS (
-            SELECT user_id, event_type AS attr, epoch_us(ts) AS us,
-                   event_id
-            FROM events
-        ), c AS (
-            SELECT *, lag(attr) OVER (
-                PARTITION BY user_id ORDER BY us, event_id) AS prev
-            FROM b
-        ), ch AS (
-            SELECT user_id, attr, us, event_id FROM c
-            WHERE prev IS NULL OR prev <> attr
-        ), dim AS (
-            SELECT user_id,
-                   CAST(row_number() OVER w AS INT) AS version,
-                   attr,
-                   us AS valid_from_us,
-                   lead(us) OVER w AS valid_to_us
-            FROM ch
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), probe AS (
-            SELECT event_id, user_id, epoch_us(ts) AS us FROM events
-            WHERE event_type = 'purchase'
-        )
-        SELECT p.event_id, p.user_id, d.version, d.attr,
-               d.valid_from_us
-        FROM probe p JOIN dim d ON p.user_id = d.user_id
-        WHERE p.us >= d.valid_from_us
-          AND (d.valid_to_us IS NULL OR p.us < d.valid_to_us)
-    """
-    o["tpch_q6_forecast"] = """
-        SELECT CAST(sum(CAST(round(l_extendedprice * l_discount * 100,
-                                   0) AS BIGINT)) AS BIGINT)
-               AS revenue_cents,
-               count(*) AS n_items
-        FROM lineitem
-        WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l_shipdate < TIMESTAMP '1997-01-01'
-          AND l_quantity < 24
-          AND CAST(round(l_discount * 100, 0) AS BIGINT) BETWEEN 5 AND 7
-    """
-    o["tpch_q9_profit"] = """
-        SELECT n.n_name, year(l.l_shipdate) AS year,
-               CAST(sum(CAST(round(l.l_extendedprice
-                                   * (1 - l.l_discount) * 100, 0)
-                             AS BIGINT)
-                        - CAST(round(p.p_retailprice
-                                     * l.l_quantity * 100, 0)
-                               AS BIGINT)) AS BIGINT) AS profit_cents
-        FROM lineitem l
-        JOIN part p ON l.l_partkey = p.p_partkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation n ON s.s_nationkey = n.n_nationkey
-        WHERE p.p_name LIKE 'red%'
-        GROUP BY n.n_name, year(l.l_shipdate)
-    """
-    o["tpch_q11_important"] = """
-        WITH base AS (
-            SELECT l.l_partkey,
-                   CAST(round(p.p_retailprice * l.l_quantity * 100, 0)
-                        AS BIGINT) AS val_cents
-            FROM lineitem l
-            JOIN part p ON l.l_partkey = p.p_partkey
-            WHERE l.l_suppkey IN (
-                SELECT s_suppkey FROM supplier s
-                JOIN nation n ON s.s_nationkey = n.n_nationkey
-                WHERE n.n_name = 'NATION_3')
-        ), per AS (
-            SELECT l_partkey AS p_partkey,
-                   CAST(sum(val_cents) AS BIGINT) AS value_cents
-            FROM base GROUP BY l_partkey
-        )
-        SELECT p_partkey, value_cents FROM per
-        WHERE value_cents * (SELECT count(*) FROM per)
-              > 2 * (SELECT sum(value_cents) FROM per)
-    """
-    o["tpch_q12_priority"] = """
-        SELECT l.l_linestatus,
-               CAST(sum(CASE WHEN o.o_orderpriority
-                                  IN ('1-URGENT', '2-HIGH')
-                        THEN 1 ELSE 0 END) AS BIGINT)
-               AS high_line_count,
-               CAST(sum(CASE WHEN o.o_orderpriority
-                                  IN ('1-URGENT', '2-HIGH')
-                        THEN 0 ELSE 1 END) AS BIGINT)
-               AS low_line_count
-        FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-          AND l.l_shipdate < TIMESTAMP '1997-01-01'
-        GROUP BY l.l_linestatus
-    """
-    o["rollup_geo"] = _ROLLUP_GEO_TEXT
-    o["pivot_counts"] = """
-        SELECT user_id % 16 AS cohort,
-               CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0
-                        END) AS BIGINT) AS click,
-               CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0
-                        END) AS BIGINT) AS error,
-               CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0
-                        END) AS BIGINT) AS purchase,
-               CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0
-                        END) AS BIGINT) AS signup,
-               CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0
-                        END) AS BIGINT) AS view
-        FROM events GROUP BY user_id % 16
-    """
-    o["pattern_match"] = """
-        WITH seqs AS (
-            SELECT user_id,
-                   string_agg(substring(event_type, 1, 1), ''
-                              ORDER BY ts, event_id) AS seq
-            FROM events GROUP BY user_id
-        )
-        SELECT user_id,
-               CAST(length(seq) AS BIGINT) AS n_events,
-               CAST(length(regexp_extract_all(seq, 'vp')) AS BIGINT)
-               AS n_direct,
-               CAST(length(regexp_extract_all(seq, 'v[vc]*p'))
-                    AS BIGINT) AS n_assisted
-        FROM seqs
-        WHERE length(regexp_extract_all(seq, 'v[vc]*p')) > 0
-    """
-    o["sliding_windows"] = """
-        WITH b AS (
-            SELECT epoch_us(ts) AS us, event_type, user_id FROM events
-        ), slotted AS (
-            SELECT unnest([(us // 3600000000) * 3600000000 - 3600000000,
-                           (us // 3600000000) * 3600000000])
-                   AS win_start_us,
-                   event_type, user_id
-            FROM b
-        )
-        SELECT win_start_us, win_start_us + 7200000000 AS win_end_us,
-               event_type, count(*) AS n,
-               CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
-        FROM slotted GROUP BY win_start_us, event_type
-    """
-    o["merge_upsert"] = """
-        WITH src AS (
-            SELECT doc_id, upper(text) AS text, lang, 'cdc' AS source,
-                   n_chars
-            FROM documents WHERE doc_id % 10 = 0
-            UNION ALL
-            SELECT doc_id + 10000000 AS doc_id, text, lang, source,
-                   n_chars
-            FROM documents WHERE doc_id % 10 = 3
-        )
-        SELECT d.doc_id, d.text, d.lang, d.source, d.n_chars
-        FROM documents d
-        WHERE d.doc_id NOT IN (SELECT doc_id FROM src)
-        UNION ALL
-        SELECT doc_id, text, lang, source, n_chars FROM src
-    """
-    o["skyline"] = """
-        WITH b AS (
-            SELECT p_partkey,
-                   CAST(round(p_retailprice * 100, 0) AS BIGINT)
-                   AS price_cents,
-                   CAST(p_size AS BIGINT) AS p_size
-            FROM part
-        )
-        SELECT p_partkey, price_cents, p_size FROM b p
-        WHERE NOT EXISTS (
-            SELECT 1 FROM b q
-            WHERE q.price_cents <= p.price_cents
-              AND q.p_size >= p.p_size
-              AND (q.price_cents < p.price_cents
-                   OR q.p_size > p.p_size))
-    """
-    o["max_concurrency"] = """
-        WITH iv AS (
-            SELECT event_type, epoch_us(ts) AS s,
-                   epoch_us(ts) + 600000000 AS e
-            FROM events
-        ), conc AS (
-            SELECT a.event_type, a.s, count(*) AS cnt
-            FROM iv a JOIN iv b
-              ON a.event_type = b.event_type
-             AND b.s <= a.s AND a.s < b.e
-            GROUP BY 1, 2
-        )
-        SELECT event_type, CAST(max(cnt) AS BIGINT) AS max_concurrent
-        FROM conc GROUP BY event_type
-    """
-    o["equidepth_hist"] = """
-        WITH b AS (
-            SELECT CAST(round(value * 100, 0) AS BIGINT) AS v, event_id
-            FROM events
-        ), r AS (
-            SELECT v,
-                   row_number() OVER (ORDER BY v, event_id) AS rn,
-                   count(*) OVER () AS n
-            FROM b
-        )
-        SELECT CAST(((rn - 1) * 16) // n AS INT) AS bucket,
-               count(*) AS n_rows,
-               min(v) AS lo, max(v) AS hi
-        FROM r GROUP BY 1
-    """
-    o["itemsets"] = """
-        WITH bi AS (
-            SELECT DISTINCT l_orderkey AS bk, l_partkey AS it
-            FROM lineitem
-        ), pairs AS (
-            SELECT x.it AS a, y.it AS b, count(*) AS n_ab
-            FROM bi x JOIN bi y ON x.bk = y.bk AND x.it < y.it
-            GROUP BY 1, 2
-        ), top AS (
-            SELECT * FROM pairs ORDER BY n_ab DESC, a, b LIMIT 25
-        ), items AS (
-            SELECT it, count(*) AS n FROM bi GROUP BY 1
-        ), nb AS (
-            SELECT count(DISTINCT bk) AS n_baskets FROM bi
-        )
-        SELECT t.a, t.b, CAST(t.n_ab AS BIGINT) AS n_ab,
-               CAST(ia.n AS BIGINT) AS n_a,
-               CAST(ib.n AS BIGINT) AS n_b,
-               CAST(nb.n_baskets AS BIGINT) AS n_baskets
-        FROM top t
-        JOIN items ia ON ia.it = t.a
-        JOIN items ib ON ib.it = t.b
-        CROSS JOIN nb
-    """
-    o["rand_proj"] = """
-        WITH s AS (
-            SELECT j, i,
-                   CASE WHEN ('0x' || substr(md5('rp_' || j || '_' || i),
-                                             1, 1))::BIGINT % 2 = 0
-                        THEN 1 ELSE -1 END AS sgn
-            FROM range(8) t1(j) CROSS JOIN range(64) t2(i)
-        ), q AS (
-            SELECT vec_id, i,
-                   CAST(round(CAST(embedding[i + 1] AS DOUBLE) * 10000,
-                              0) AS BIGINT) AS qv
-            FROM embeddings CROSS JOIN range(64) t(i)
-        ), p AS (
-            SELECT q.vec_id, s.j,
-                   CAST(sum(s.sgn * q.qv) AS BIGINT) AS pv
-            FROM q JOIN s USING (i)
-            GROUP BY 1, 2
-        )
-        SELECT vec_id, list(pv ORDER BY j) AS proj
-        FROM p GROUP BY vec_id
-    """
-    from frogocr_spark.operators.bpe import bpe_encode_oracle_sql
-    o["bpe_encode"] = bpe_encode_oracle_sql(8)
-    o["trending"] = """
-        WITH b AS (
-            SELECT epoch_us(ts) AS us, event_type FROM events
-        ), sl AS (
-            SELECT (us // 3600000000) AS h, event_type FROM b
-            UNION ALL
-            SELECT (us // 3600000000) - 1, event_type FROM b
-        ), c AS (
-            SELECT h * 3600000000 AS win_start_us, event_type,
-                   count(*) AS n
-            FROM sl GROUP BY 1, 2
-        ), r AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY win_start_us
-                       ORDER BY n DESC, event_type) AS rnk
-            FROM c
-        )
-        SELECT win_start_us, event_type, CAST(n AS BIGINT) AS n,
-               CAST(rnk AS INT) AS rnk
-        FROM r WHERE rnk <= 3
-    """
-    o["quantiles"] = """
-        WITH base AS (
-            SELECT event_type, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS v
-            FROM events
-        ), ranked AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY v, event_id) AS rn,
-                   count(*) OVER (PARTITION BY event_type) AS n
-            FROM base
-        )
-        SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-               max(CASE WHEN rn = greatest((n * 25 + 99) // 100, 1)
-                        THEN v END) AS p25,
-               max(CASE WHEN rn = greatest((n * 50 + 99) // 100, 1)
-                        THEN v END) AS p50,
-               max(CASE WHEN rn = greatest((n * 75 + 99) // 100, 1)
-                        THEN v END) AS p75,
-               max(CASE WHEN rn = greatest((n * 95 + 99) // 100, 1)
-                        THEN v END) AS p95
-        FROM ranked GROUP BY event_type
-    """
-    o["mad"] = """
-        WITH base AS (
-            SELECT event_type, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS v
-            FROM events
-        ), r1 AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY v, event_id) AS rn,
-                   count(*) OVER (PARTITION BY event_type) AS n
-            FROM base
-        ), med AS (
-            SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-                   max(CASE WHEN rn = greatest((n * 50 + 99) // 100, 1)
-                            THEN v END) AS median
-            FROM r1 GROUP BY event_type
-        ), dev AS (
-            SELECT b.event_type, b.event_id,
-                   abs(b.v - m.median) AS d
-            FROM base b JOIN med m USING (event_type)
-        ), r2 AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY d, event_id) AS rn,
-                   count(*) OVER (PARTITION BY event_type) AS n
-            FROM dev
-        ), madt AS (
-            SELECT event_type,
-                   max(CASE WHEN rn = greatest((n * 50 + 99) // 100, 1)
-                            THEN d END) AS mad
-            FROM r2 GROUP BY event_type
-        )
-        SELECT m.event_type, m.n, m.median, t.mad
-        FROM med m JOIN madt t USING (event_type)
-    """
-    o["bag_ops"] = """
-        SELECT pk AS l_partkey, 'except' AS tag FROM (
-            SELECT l_partkey AS pk FROM lineitem WHERE l_quantity < 25
-            EXCEPT ALL
-            SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R')
-        UNION ALL
-        SELECT pk, 'intersect' FROM (
-            SELECT l_partkey AS pk FROM lineitem WHERE l_quantity < 25
-            INTERSECT ALL
-            SELECT l_partkey FROM lineitem WHERE l_returnflag = 'R')
-    """
-    # NOTE: the natural DuckDB twin is a grouped list_reduce fold, but
-    # DuckDB 1.0.0's list_reduce corrupts accumulator state across
-    # groups at vector-boundary group counts (verified: a 9-row repro
-    # is correct, the 150-user sf0.01 run mixes one user's kept ids
-    # into another's) — so the oracle advances the SAME fold one event
-    # per recursion level instead, which only uses well-tested engine
-    # surface.
-    o["debounce"] = """
-        WITH RECURSIVE e AS (
-            SELECT user_id, epoch_us(ts) AS us, event_id,
-                   row_number() OVER (
-                       PARTITION BY user_id
-                       ORDER BY epoch_us(ts), event_id) AS rn,
-                   count(*) OVER (PARTITION BY user_id) AS n
-            FROM events
-        ), step AS (
-            SELECT user_id, rn, n, us AS last, [event_id] AS kept
-            FROM e WHERE rn = 1
-            UNION ALL
-            SELECT s.user_id, e.rn, e.n,
-                   CASE WHEN e.us - s.last >= 172800000000
-                        THEN e.us ELSE s.last END,
-                   CASE WHEN e.us - s.last >= 172800000000
-                        THEN list_append(s.kept, e.event_id)
-                        ELSE s.kept END
-            FROM step s JOIN e
-              ON e.user_id = s.user_id AND e.rn = s.rn + 1
-        )
-        SELECT user_id, CAST(n AS BIGINT) AS n_events,
-               CAST(len(kept) AS BIGINT) AS n_kept,
-               kept AS kept_ids
-        FROM step WHERE rn = n
-    """
-    o["interval_coverage"] = """
-        WITH iv AS (
-            SELECT user_id, epoch_us(ts) AS s,
-                   epoch_us(ts) + 172800000000 AS e, event_id
-            FROM events
-        ), w AS (
-            SELECT *, max(e) OVER (
-                       PARTITION BY user_id ORDER BY s, event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING) AS pe
-            FROM iv
-        )
-        SELECT user_id, CAST(count(*) AS BIGINT) AS n_intervals,
-               CAST(sum(greatest(0, e - greatest(s, COALESCE(pe, s))))
-                    AS BIGINT) AS covered_us,
-               CAST(max(e) - min(s) AS BIGINT) AS span_us
-        FROM w GROUP BY user_id
-    """
-    from frogocr_spark.operators.clustering import kmeans_oracle_sql
-    o["kmeans"] = kmeans_oracle_sql(4, 3, 64)
-    o["time_rollup"] = TIME_ROLLUP_TEXT
-    o["k_anonymity"] = """
-        WITH g AS (
-            SELECT lang, source,
-                   CAST(n_chars // 500 AS VARCHAR) AS chars_bin,
-                   count(*) AS n
-            FROM documents GROUP BY 1, 2, 3
-        ), m AS (
-            SELECT CASE WHEN n < 5 THEN '*' ELSE lang END AS lang,
-                   CASE WHEN n < 5 THEN '*' ELSE source END AS source,
-                   CASE WHEN n < 5 THEN '*' ELSE chars_bin END
-                   AS chars_bin,
-                   n
-            FROM g
-        )
-        SELECT lang, source, chars_bin, CAST(sum(n) AS BIGINT) AS n
-        FROM m GROUP BY 1, 2, 3
-    """
-    o["skew_report"] = """
-        WITH c AS (
-            SELECT l_suppkey AS key, count(*) AS cnt
-            FROM lineitem GROUP BY 1
-        ), r AS (
-            SELECT *, row_number() OVER (ORDER BY cnt, key) AS i,
-                   count(*) OVER () AS nk
-            FROM c
-        ), s AS (
-            SELECT CAST(max(nk) AS BIGINT) AS n_keys,
-                   CAST(sum(cnt) AS BIGINT) AS n_rows,
-                   CAST(sum((2 * i - nk - 1) * cnt) AS BIGINT)
-                   AS gini_num
-            FROM r
-        ), h AS (
-            SELECT row_number() OVER (ORDER BY cnt DESC, key) AS rank,
-                   key, CAST(cnt AS BIGINT) AS cnt
-            FROM c ORDER BY cnt DESC, key LIMIT 10
-        )
-        SELECT h.rank, h.key, h.cnt, s.n_keys, s.n_rows, s.gini_num
-        FROM h CROSS JOIN s
-    """
-    _hreg = lambda pred: f"""
-            SELECT h >> {_c['w']} AS bucket,
-                   max(CASE WHEN (h & {_c['rem_mask']}) = 0
-                            THEN {_c['maxrho']}
-                            ELSE {_c['w']} + 1
-                                 - length(bin(h & {_c['rem_mask']}))
-                       END) AS reg
-            FROM (SELECT ('0x' || substr(md5(CAST(user_id AS VARCHAR)),
-                                         1, 15))::BIGINT AS h
-                  FROM events WHERE {pred})
-            GROUP BY 1"""
-    _hest = (f"CAST(CAST(sum(1::BIGINT << ({_c['maxrho']} - reg)) "
-             f"AS BIGINT) + ({_c['m']} - count(*)) * {_c['empty_term']} "
-             f"AS BIGINT)")
-    o["hll_setops"] = f"""
-        WITH ra AS ({_hreg("event_type = 'click'")}),
-        rb AS ({_hreg("event_type = 'purchase'")}),
-        ru AS (
-            SELECT bucket, max(reg) AS reg
-            FROM (SELECT * FROM ra UNION ALL SELECT * FROM rb)
-            GROUP BY 1
-        ),
-        ea AS (SELECT {_hest} AS rs FROM ra),
-        eb AS (SELECT {_hest} AS rs FROM rb),
-        eu AS (SELECT {_hest} AS rs FROM ru)
-        SELECT ea.rs AS reg_sum_a, eb.rs AS reg_sum_b,
-               eu.rs AS reg_sum_union,
-               round({_c['est_num']!r} / ea.rs, 3) AS est_a,
-               round({_c['est_num']!r} / eb.rs, 3) AS est_b,
-               round({_c['est_num']!r} / eu.rs, 3) AS est_union,
-               round(round({_c['est_num']!r} / ea.rs, 3)
-                     + round({_c['est_num']!r} / eb.rs, 3)
-                     - round({_c['est_num']!r} / eu.rs, 3), 3)
-               AS est_intersect
-        FROM ea CROSS JOIN eb CROSS JOIN eu
-    """
-    o["modularity"] = """
-        WITH b AS (
-            SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id
-            FROM events
-        ), e AS (
-            SELECT DISTINCT a1.user_id AS u, a2.user_id AS v
-            FROM b a1 JOIN b a2
-              ON a1.win = a2.win AND a1.user_id < a2.user_id
-        ), cm AS (
-            SELECT user_id AS n, event_type AS c FROM (
-                SELECT user_id, event_type,
-                       row_number() OVER (
-                           PARTITION BY user_id
-                           ORDER BY count(*) DESC, event_type) AS rn
-                FROM events GROUP BY user_id, event_type)
-            WHERE rn = 1
-        ), deg AS (
-            SELECT n, count(*) AS d FROM (
-                SELECT u AS n FROM e UNION ALL SELECT v FROM e)
-            GROUP BY 1
-        ), nodes AS (
-            SELECT cm.c, COALESCE(deg.d, 0) AS d
-            FROM cm LEFT JOIN deg ON cm.n = deg.n
-        ), pc AS (
-            SELECT c AS community, CAST(count(*) AS BIGINT) AS n_nodes,
-                   CAST(sum(d) AS BIGINT) AS degree_sum
-            FROM nodes GROUP BY 1
-        ), ie AS (
-            SELECT cu.c AS community,
-                   CAST(count(*) AS BIGINT) AS internal_edges
-            FROM e JOIN cm cu ON e.u = cu.n JOIN cm cv ON e.v = cv.n
-            WHERE cu.c = cv.c GROUP BY 1
-        ), mm AS (SELECT count(*) AS m FROM e)
-        SELECT pc.community, pc.n_nodes, pc.degree_sum,
-               CAST(COALESCE(ie.internal_edges, 0) AS BIGINT)
-               AS internal_edges,
-               CAST(mm.m AS BIGINT) AS m
-        FROM pc LEFT JOIN ie USING (community) CROSS JOIN mm
-    """
-    o["postings_delta"] = r"""
-        WITH t AS (
-            SELECT DISTINCT doc_id,
-                   unnest(list_filter(
-                       string_split_regex(lower(trim(text)), '\s+'),
-                       w -> length(w) >= 5)) AS term
-            FROM documents
-        ), p AS (
-            SELECT term, list_sort(list(DISTINCT doc_id)) AS ps
-            FROM t GROUP BY term
-        )
-        SELECT term, CAST(len(ps) AS INT) AS df,
-               CAST(ps[1] AS BIGINT) AS first_doc,
-               [ps[i + 1] - ps[i] for i in range(1, len(ps))] AS gaps
-        FROM p WHERE len(ps) >= 2
-    """
-    o["ks_test"] = """
-        WITH pts AS (
-            SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                   CASE WHEN event_type = 'click' THEN 1 ELSE 2 END
-                   AS t
-            FROM events WHERE event_type IN ('click', 'purchase')
-        ), g AS (
-            SELECT v,
-                   sum(CASE WHEN t = 1 THEN 1 ELSE 0 END) AS c1,
-                   sum(CASE WHEN t = 2 THEN 1 ELSE 0 END) AS c2
-            FROM pts GROUP BY v
-        ), c AS (
-            SELECT v, sum(c1) OVER (ORDER BY v) AS k1,
-                   sum(c2) OVER (ORDER BY v) AS k2
-            FROM g
-        ), t AS (
-            SELECT CAST(sum(c1) AS BIGINT) AS n1,
-                   CAST(sum(c2) AS BIGINT) AS n2
-            FROM g
-        )
-        SELECT t.n1, t.n2,
-               CAST(max(abs(k1 * t.n2 - k2 * t.n1)) AS BIGINT)
-               AS ks_num,
-               round(CAST(max(abs(k1 * t.n2 - k2 * t.n1)) AS DOUBLE)
-                     / (CAST(t.n1 AS DOUBLE) * CAST(t.n2 AS DOUBLE)),
-                     6) AS ks
-        FROM c CROSS JOIN t GROUP BY t.n1, t.n2
-    """
-    o["cusum_drift"] = """
-        WITH b AS (
-            SELECT event_type, epoch_us(ts) AS us, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS x
-            FROM events
-        ), m AS (
-            SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                   CAST(sum(x) AS BIGINT) AS sx
-            FROM b GROUP BY event_type
-        ), r AS (
-            SELECT b.event_type, m.n, m.sx,
-                   sum(m.n * b.x - m.sx) OVER (
-                       PARTITION BY b.event_type
-                       ORDER BY b.us, b.event_id) AS run
-            FROM b JOIN m USING (event_type)
-        )
-        SELECT event_type, max(n) AS n, max(sx) AS sum_v,
-               CAST(max(run) AS BIGINT) AS max_excursion,
-               CAST(min(run) AS BIGINT) AS min_excursion
-        FROM r GROUP BY event_type
-    """
-    o["range_checksums"] = """
-        WITH b AS (
-            SELECT o_orderkey // 1000 AS bucket,
-                   ('0x' || substr(md5(concat_ws('|',
-                        COALESCE(CAST(o_orderkey AS VARCHAR), '<NULL>'),
-                        COALESCE(CAST(o_custkey AS VARCHAR), '<NULL>'),
-                        COALESCE(o_orderstatus, '<NULL>'),
-                        COALESCE(o_orderpriority, '<NULL>'),
-                        COALESCE(CAST(CAST(round(o_totalprice * 100, 0)
-                                  AS BIGINT) AS VARCHAR), '<NULL>'),
-                        COALESCE(CAST(epoch_us(o_orderdate) AS VARCHAR),
-                                 '<NULL>'))),
-                        1, 15))::BIGINT AS h
-            FROM orders
-        )
-        SELECT CAST(bucket AS BIGINT) AS bucket,
-               CAST(count(*) AS BIGINT) AS n_rows,
-               CAST(bit_xor(h) AS BIGINT) AS xor_hash
-        FROM b GROUP BY bucket
-    """
-    o["window_funcs2"] = """
-        SELECT event_id, user_id,
-               first_value(event_type) OVER w AS first_type,
-               last_value(event_type) OVER w AS last_type,
-               nth_value(event_type, 2) OVER w AS second_type,
-               CAST(count(*) OVER w AS BIGINT) AS n_user_events
-        FROM events
-        WINDOW w AS (PARTITION BY user_id
-                     ORDER BY epoch_us(ts), event_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND UNBOUNDED FOLLOWING)
-    """
-    o["string_funcs"] = """
-        SELECT doc_id,
-               lpad(lang, 5, '_') AS lang_pad,
-               rpad(source, 8, '.') AS src_pad,
-               translate(source, 'aeiou', '01234') AS src_trans,
-               reverse(lang) AS lang_rev,
-               repeat(lang, 2) AS lang_2x,
-               CAST(instr(source, 'a') AS INT) AS a_pos,
-               substring(source, 2, 3) AS src_mid,
-               left(source, 2) AS src_left,
-               CAST(ascii(lang) AS INT) AS lang_ascii,
-               replace(source, 'a', '@') AS src_at
-        FROM documents
-    """
-    o["cube_counts"] = CUBE_COUNTS_TEXT
-    o["id_islands"] = """
-        WITH k AS (
-            SELECT DISTINCT o_orderkey AS k FROM orders
-            WHERE o_orderpriority = '1-URGENT'
-        ), r AS (
-            SELECT k, row_number() OVER (ORDER BY k) AS rn FROM k
-        )
-        SELECT CAST(min(k) AS BIGINT) AS lo,
-               CAST(max(k) AS BIGINT) AS hi,
-               CAST(count(*) AS BIGINT) AS n_keys
-        FROM r GROUP BY k - rn
-    """
-    o["rle_encode"] = """
-        WITH b AS (
-            SELECT user_id, epoch_us(ts) AS us, event_id,
-                   event_type AS s
-            FROM events
-        ), f AS (
-            SELECT *, CASE WHEN lag(s) OVER w IS NULL
-                             OR lag(s) OVER w <> s THEN 1 ELSE 0 END
-                      AS chg
-            FROM b
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), r AS (
-            SELECT *, sum(chg) OVER (
-                       PARTITION BY user_id ORDER BY us, event_id
-                       ROWS UNBOUNDED PRECEDING) AS run
-            FROM f
-        ), g AS (
-            SELECT user_id, run, min(s) AS state, count(*) AS len
-            FROM r GROUP BY 1, 2
-        )
-        SELECT user_id, CAST(sum(len) AS BIGINT) AS n_events,
-               CAST(count(*) AS BIGINT) AS n_runs,
-               string_agg(state || ':' || len, ' ' ORDER BY run) AS rle
-        FROM g GROUP BY user_id
-    """
-    o["ratio_share"] = """
-        WITH r AS (
-            SELECT o.o_orderkey, n.n_name,
-                   CAST(round(o.o_totalprice * 100, 0) AS BIGINT)
-                   AS rev_cents
-            FROM orders o
-            JOIN customer c ON o.o_custkey = c.c_custkey
-            JOIN nation n ON c.c_nationkey = n.n_nationkey
-        ), t AS (
-            SELECT n_name, CAST(sum(rev_cents) AS BIGINT)
-                   AS nation_total_cents
-            FROM r GROUP BY 1
-        )
-        SELECT r.o_orderkey, r.n_name, r.rev_cents,
-               t.nation_total_cents
-        FROM r JOIN t USING (n_name)
-    """
-    o["rrf_fusion"] = """
-        WITH qs AS (
-            SELECT * FROM embeddings WHERE vec_id < 5
-        ), ca AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   row_number() OVER (
-                       PARTITION BY q.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           CAST(c.embedding AS DOUBLE[]),
-                           CAST(q.embedding AS DOUBLE[])), 4) DESC,
-                       c.vec_id) AS rank_a
-            FROM embeddings c, qs q WHERE c.vec_id <> q.vec_id
-        ), ra AS (
-            SELECT query_id, neighbor_id, rank_a FROM ca
-            WHERE rank_a <= 20
-        ), l2 AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   CAST(list_sum(list_transform(
-                       list_transform(range(1, 65), i ->
-                           CAST(round(CAST(c.embedding[i] AS DOUBLE)
-                                      * 10000, 0) AS BIGINT)
-                           - CAST(round(CAST(q.embedding[i] AS DOUBLE)
-                                        * 10000, 0) AS BIGINT)),
-                       d -> d * d)) AS BIGINT) AS d2
-            FROM embeddings c, qs q WHERE c.vec_id <> q.vec_id
-        ), rb AS (
-            SELECT query_id, neighbor_id, rank_b FROM (
-                SELECT query_id, neighbor_id,
-                       row_number() OVER (
-                           PARTITION BY query_id
-                           ORDER BY d2, neighbor_id) AS rank_b
-                FROM l2)
-            WHERE rank_b <= 20
-        ), f AS (
-            SELECT ra.query_id, ra.neighbor_id,
-                   CAST(ra.rank_a AS INT) AS rank_a,
-                   CAST(rb.rank_b AS INT) AS rank_b,
-                   CAST((60 + ra.rank_a) + (60 + rb.rank_b) AS BIGINT)
-                   AS rrf_num,
-                   CAST((60 + ra.rank_a) * (60 + rb.rank_b) AS BIGINT)
-                   AS rrf_den
-            FROM ra JOIN rb USING (query_id, neighbor_id)
-        )
-        SELECT query_id, neighbor_id, rank_a, rank_b, rrf_num,
-               rrf_den, CAST(rk AS INT) AS rank
-        FROM (
-            SELECT *, row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY round(CAST(rrf_num AS DOUBLE)
-                                      / rrf_den, 9) DESC,
-                       neighbor_id) AS rk
-            FROM f)
-        WHERE rk <= 10
-    """
-    o["assortativity"] = """
-        WITH b AS (
-            SELECT DISTINCT epoch_us(ts) // 60000000 AS win, user_id
-            FROM events
-        ), e AS (
-            SELECT DISTINCT a1.user_id AS u, a2.user_id AS v
-            FROM b a1 JOIN b a2
-              ON a1.win = a2.win AND a1.user_id < a2.user_id
-        ), deg AS (
-            SELECT n, count(*) AS d FROM (
-                SELECT u AS n FROM e UNION ALL SELECT v FROM e)
-            GROUP BY 1
-        ), pairs AS (
-            SELECT du.d AS du, dv.d AS dv
-            FROM e JOIN deg du ON e.u = du.n JOIN deg dv ON e.v = dv.n
-        ), bo AS (
-            SELECT du AS x, dv AS y FROM pairs
-            UNION ALL SELECT dv, du FROM pairs
-        ), a AS (
-            SELECT CAST(count(*) AS BIGINT) AS n,
-                   sum(CAST(x AS DECIMAL(38,0))) AS sx,
-                   sum(CAST(y AS DECIMAL(38,0))) AS sy,
-                   sum(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-                   sum(CAST(y * y AS DECIMAL(38,0))) AS syy,
-                   sum(CAST(x * y AS DECIMAL(38,0))) AS sxy
-            FROM bo
-        )
-        SELECT n,
-               round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_x,
-               round((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_x,
-               round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_y,
-               round((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_y,
-               round(CASE WHEN
-                       (CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                       AND
-                       (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                     THEN ((CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE))
-                      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-                     / (sqrt((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                        * sqrt((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                               - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                                 * (CAST(sy AS DOUBLE)
-                                    / CAST(n AS DOUBLE))))
-                     END, 6) AS corr_xy
-        FROM a
-    """
-    o["stump"] = """
-        WITH b AS (
-            SELECT CAST(round(value * 100, 0) AS BIGINT) AS v,
-                   CASE WHEN event_type = 'error' THEN 1 ELSE 0 END
-                   AS y
-            FROM events
-        ), g AS (
-            SELECT v, sum(y) AS p, sum(1 - y) AS n FROM b GROUP BY v
-        ), t AS (
-            SELECT CAST(sum(p) AS BIGINT) AS pos,
-                   CAST(sum(n) AS BIGINT) AS neg
-            FROM g
-        ), c AS (
-            SELECT v, sum(p) OVER (ORDER BY v) AS pc,
-                   sum(n) OVER (ORDER BY v) AS nc
-            FROM g
-        ), cand AS (
-            SELECT 'le' AS rule, v AS threshold,
-                   pc + (t.neg - nc) AS n_correct
-            FROM c CROSS JOIN t
-            UNION ALL
-            SELECT 'gt', v, nc + (t.pos - pc) FROM c CROSS JOIN t
-        )
-        SELECT rule, CAST(threshold AS BIGINT) AS threshold,
-               CAST(n_correct AS BIGINT) AS n_correct,
-               CAST(t.pos + t.neg AS BIGINT) AS n_total,
-               CAST(greatest(t.pos, t.neg) AS BIGINT) AS n_majority
-        FROM cand CROSS JOIN t
-        ORDER BY n_correct DESC, rule, threshold LIMIT 1
-    """
-    from frogocr_spark.operators.textstats import bm25_oracle_sql
-    o["bm25"] = bm25_oracle_sql(BM25_QUERIES)
-    o["dwell_time"] = """
-        WITH b AS (
-            SELECT user_id, event_type AS attr, epoch_us(ts) AS us,
-                   event_id
-            FROM events
-        ), c AS (
-            SELECT *, lag(attr) OVER (
-                PARTITION BY user_id ORDER BY us, event_id) AS prev
-            FROM b
-        ), ch AS (
-            SELECT user_id, attr, us, event_id FROM c
-            WHERE prev IS NULL OR prev <> attr
-        ), dim AS (
-            SELECT user_id, attr, us AS valid_from_us,
-                   lead(us) OVER w AS valid_to_us
-            FROM ch
-            WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)
-        ), cap AS (
-            SELECT max(epoch_us(ts)) AS m FROM events
-        )
-        SELECT attr, CAST(count(*) AS BIGINT) AS n_versions,
-               CAST(sum(CASE WHEN valid_to_us IS NULL THEN 1 ELSE 0
-                        END) AS BIGINT) AS n_open,
-               CAST(sum(COALESCE(valid_to_us, cap.m) - valid_from_us)
-                    AS BIGINT) AS dwell_us
-        FROM dim CROSS JOIN cap
-        GROUP BY attr
-    """
-    o["disorder"] = """
-        WITH b AS (
-            SELECT user_id, epoch_us(ts) AS us, event_id FROM events
-        ), w AS (
-            SELECT user_id, us,
-                   greatest(0, COALESCE(max(us) OVER (
-                       PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND 1 PRECEDING), us) - us) AS late
-            FROM b
-        )
-        SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-               CAST(sum(CASE WHEN late > 0 THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_late,
-               CAST(max(late) AS BIGINT) AS max_lateness_us
-        FROM w GROUP BY user_id
-    """
-    o["sparse_dot"] = """
-        WITH sp AS (
-            SELECT vec_id AS id, i AS idx,
-                   CAST(round(CAST(embedding[i] AS DOUBLE) * 10000, 0)
-                        AS BIGINT) AS qv
-            FROM embeddings CROSS JOIN range(1, 65) t(i)
-        ), spf AS (
-            SELECT * FROM sp WHERE abs(qv) >= 2000
-        ), qs AS (
-            SELECT id AS query_id, idx, qv AS qqv FROM spf
-            WHERE id < 5
-        ), scored AS (
-            SELECT q.query_id, c.id AS doc_id,
-                   CAST(sum(c.qv * q.qqv) AS BIGINT) AS sdot
-            FROM spf c JOIN qs q USING (idx)
-            WHERE c.id <> q.query_id
-            GROUP BY 1, 2
-        )
-        SELECT query_id, doc_id, sdot, CAST(rk AS INT) AS rank
-        FROM (
-            SELECT *, row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY sdot DESC, doc_id) AS rk
-            FROM scored)
-        WHERE rk <= 10
-    """
-    o["conversion_lag"] = """
-        WITH s AS (
-            SELECT user_id,
-                   min(CASE WHEN event_type = 'signup'
-                            THEN epoch_us(ts) END) AS s_us
-            FROM events GROUP BY user_id
-        ), p AS (
-            SELECT e.user_id, s.s_us, min(epoch_us(e.ts)) AS p_us
-            FROM events e JOIN s USING (user_id)
-            WHERE e.event_type = 'purchase' AND s.s_us IS NOT NULL
-              AND epoch_us(e.ts) > s.s_us
-            GROUP BY e.user_id, s.s_us
-        ), lags AS (
-            SELECT user_id, p_us - s_us AS lag FROM p
-        ), r AS (
-            SELECT lag, row_number() OVER (ORDER BY lag, user_id) AS rn,
-                   count(*) OVER () AS n
-            FROM lags
-        )
-        SELECT CAST(max(n) AS BIGINT) AS n,
-               max(CASE WHEN rn = greatest((n * 25 + 99) // 100, 1)
-                        THEN lag END) AS p25,
-               max(CASE WHEN rn = greatest((n * 50 + 99) // 100, 1)
-                        THEN lag END) AS p50,
-               max(CASE WHEN rn = greatest((n * 75 + 99) // 100, 1)
-                        THEN lag END) AS p75,
-               max(CASE WHEN rn = greatest((n * 95 + 99) // 100, 1)
-                        THEN lag END) AS p95
-        FROM r
-    """
-    o["rfm"] = """
-        WITH per AS (
-            SELECT user_id, max(epoch_us(ts)) AS last_us,
-                   count(*) AS f,
-                   CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                        AS BIGINT) AS m
-            FROM events GROUP BY user_id
-        ), capn AS (
-            SELECT max(last_us) AS cap, count(*) AS n FROM per
-        ), metrics AS (
-            SELECT p.user_id, c.cap - p.last_us AS r, p.f, p.m, c.n
-            FROM per p CROSS JOIN capn c
-        ), scored AS (
-            SELECT user_id,
-                   1 + ((row_number() OVER (ORDER BY r, user_id) - 1)
-                        * 3) // max(n) OVER () AS sr,
-                   1 + ((row_number() OVER (ORDER BY f, user_id) - 1)
-                        * 3) // max(n) OVER () AS sf,
-                   1 + ((row_number() OVER (ORDER BY m, user_id) - 1)
-                        * 3) // max(n) OVER () AS sm
-            FROM metrics
-        )
-        SELECT CAST(sr AS VARCHAR) || '-' || CAST(sf AS VARCHAR)
-               || '-' || CAST(sm AS VARCHAR) AS segment,
-               CAST(count(*) AS BIGINT) AS n_users
-        FROM scored GROUP BY 1
-    """
-    o["iqr_outliers"] = """
-        WITH base AS (
-            SELECT event_type, event_id,
-                   CAST(round(value * 100, 0) AS BIGINT) AS v
-            FROM events
-        ), ranked AS (
-            SELECT *, row_number() OVER (
-                       PARTITION BY event_type
-                       ORDER BY v, event_id) AS rn,
-                   count(*) OVER (PARTITION BY event_type) AS n
-            FROM base
-        ), cuts AS (
-            SELECT event_type, CAST(max(n) AS BIGINT) AS n,
-                   max(CASE WHEN rn = greatest((n * 25 + 99) // 100, 1)
-                            THEN v END) AS p25,
-                   max(CASE WHEN rn = greatest((n * 75 + 99) // 100, 1)
-                            THEN v END) AS p75
-            FROM ranked GROUP BY event_type
-        )
-        SELECT b.event_type, max(c.n) AS n,
-               max(c.p25) AS p25, max(c.p75) AS p75,
-               CAST(sum(CASE WHEN 2 * b.v <
-                                  2 * c.p25 - 3 * (c.p75 - c.p25)
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_low,
-               CAST(sum(CASE WHEN 2 * b.v >
-                                  2 * c.p75 + 3 * (c.p75 - c.p25)
-                             THEN 1 ELSE 0 END) AS BIGINT) AS n_high
-        FROM base b JOIN cuts c USING (event_type)
-        GROUP BY b.event_type
-    """
-    from frogocr_spark.operators.dedup import snm_candidates_oracle_sql
-    o["snm_blocking"] = snm_candidates_oracle_sql(
-        "SELECT doc_id, text FROM documents",
-        "substr(trim(text), 1, 12)", _SNM_WINDOW)
-    from frogocr_spark.operators.graph import (
-        label_propagation_oracle_sql, sssp_int_oracle_sql)
-    o["label_prop"] = label_propagation_oracle_sql(
-        _COEVENT_EDGES_SQL, _LPA_ROUNDS)
-    o["sssp"] = sssp_int_oracle_sql(
-        f"SELECT src, dst, 1 + (src + dst) % 7 AS w "
-        f"FROM ({_COEVENT_EDGES_SQL})",
-        "SELECT DISTINCT user_id AS node FROM events "
-        "WHERE user_id % 97 = 0",
-        _SSSP_ROUNDS)
-    from frogocr_spark.operators.sketches import (
-        kmv_union_intersect_oracle_sql)
-    o["kmv_setops"] = kmv_union_intersect_oracle_sql(
-        "SELECT user_id FROM events WHERE event_type = 'click'",
-        "SELECT user_id FROM events WHERE event_type = 'purchase'",
-        "user_id", 256)
-    from frogocr_spark.operators.textstats import phrase_search_oracle_sql
-    o["phrase_search"] = phrase_search_oracle_sql(
-        "SELECT doc_id, text FROM documents", PHRASES)
-    from frogocr_spark.operators.featstats import (
-        chi2_terms_oracle_sql, pmi_bigrams_oracle_sql,
-        two_prop_test_oracle_sql, lexical_diversity_oracle_sql)
-    o["chi2_terms"] = chi2_terms_oracle_sql(
-        "SELECT doc_id, text, source FROM documents", 10, 3)
-    o["pmi_bigrams"] = pmi_bigrams_oracle_sql(
-        "SELECT doc_id, text FROM documents", 50, 5)
-    o["ab_test"] = two_prop_test_oracle_sql(
-        "SELECT user_id, event_type FROM events")
-    o["lexical_diversity"] = lexical_diversity_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-    # ---- session 12 ----
-    from frogocr_spark.operators.spatial import (
-        grid_neighbor_pairs_oracle_sql)
-    o["spatial_join"] = grid_neighbor_pairs_oracle_sql(
-        f"""SELECT c_custkey AS id,
-                   CAST(('0x' || substr(md5('x:' ||
-                        CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % {_SPATIAL_GRID} AS x,
-                   CAST(('0x' || substr(md5('y:' ||
-                        CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % {_SPATIAL_GRID} AS y
-            FROM customer WHERE c_mktsegment = 'BUILDING'""",
-        _SPATIAL_RADIUS)
-    from frogocr_spark.operators.textstats import winnowing_oracle_sql
-    o["winnowing"] = winnowing_oracle_sql(
-        "SELECT doc_id, text FROM documents", ngram=4, window=5)
-    from frogocr_spark.operators.graph import (
-        jaccard_link_prediction_oracle_sql,
-        clustering_coefficient_oracle_sql)
-    o["link_predict"] = jaccard_link_prediction_oracle_sql(
-        _COEVENT_EDGES_SQL, 50, max_center_degree=150)
-    o["clustering_coeff"] = clustering_coefficient_oracle_sql(
-        _COEVENT_EDGES_SQL)
-    from frogocr_spark.operators.ml import (
-        feature_hash_oracle_sql, nb_train_oracle_sql)
-    o["feat_hash"] = feature_hash_oracle_sql(
-        "SELECT doc_id, text FROM documents", 256)
-    o["nb_train"] = nb_train_oracle_sql(
-        "SELECT doc_id, text, source FROM documents", 3)
-    from frogocr_spark.operators.analytics import (
-        ewma_trunc_oracle_sql, benford_digits_oracle_sql,
-        session_paths_oracle_sql)
-    o["ewma"] = ewma_trunc_oracle_sql(
-        "SELECT user_id, event_id, ts, value FROM events",
-        "user_id", "floor(value * 100)", k=8)
-    o["benford"] = benford_digits_oracle_sql(
-        "SELECT o_totalprice FROM orders", "o_totalprice")
-    o["session_paths"] = session_paths_oracle_sql(
-        "SELECT user_id, event_id, ts, event_type FROM events",
-        "user_id", "event_type", depth=3, k=20)
-    o["autocorr"] = """
-        WITH lagged AS (
-            SELECT user_id,
-                   CAST(floor(value * 100) AS BIGINT) AS cur,
-                   lag(CAST(floor(value * 100) AS BIGINT)) OVER
-                       (PARTITION BY user_id ORDER BY ts, event_id)
-                       AS prev
-            FROM events
-        ), b AS (
-            SELECT user_id, prev AS x, cur AS y FROM lagged
-            WHERE prev IS NOT NULL
-        ), a AS (
-            SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-                   sum(CAST(x AS DECIMAL(38,0))) AS sx,
-                   sum(CAST(y AS DECIMAL(38,0))) AS sy,
-                   sum(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-                   sum(CAST(y * y AS DECIMAL(38,0))) AS syy,
-                   sum(CAST(x * y AS DECIMAL(38,0))) AS sxy
-            FROM b GROUP BY 1
-        )
-        SELECT user_id, n,
-               round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_x,
-               round((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_x,
-               round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_y,
-               round((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_y,
-               round(CASE WHEN
-                       (CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                       AND
-                       (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                     THEN ((CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE))
-                      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-                     / (sqrt((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                        * sqrt((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))))
-                     ELSE NULL END,
-                     6) AS corr_xy
-        FROM a
-    """
-    o["union_by_name"] = """
-        SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT)
-                   AS cents,
-               CAST(NULL AS VARCHAR) AS priority
-        FROM orders WHERE o_orderkey % 10 < 3
-        UNION ALL
-        SELECT o_orderkey, CAST(round(o_totalprice * 100, 0) AS BIGINT),
-               o_orderpriority
-        FROM orders WHERE o_orderkey % 10 >= 3
-    """
-    o["recursive_cte"] = RECURSIVE_CTE_TEXT
-    from frogocr_spark.operators.layout import hilbert_sql_query
-    o["hilbert_layout"] = hilbert_sql_query(
-        "SELECT event_id, user_id % 1024 AS x, "
-        "CAST(floor(value) AS BIGINT) % 1024 AS y FROM events",
-        ["event_id"], "x", "y", bits=10)
-    from frogocr_spark.operators.textstats import rake_keywords_oracle_sql
-    o["rake_keywords"] = rake_keywords_oracle_sql(
-        "SELECT doc_id, text FROM documents", 15, 4)
-    from frogocr_spark.operators.analytics import drift_chi2_oracle_sql
-    o["drift_chi2"] = drift_chi2_oracle_sql(
-        "SELECT event_type, ts FROM events", "event_type")
-    o["seasonality"] = """
-        WITH per AS (
-            SELECT event_type,
-                   (epoch_us(ts) // 3600000000) % 24 AS hour,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        ), tot AS (
-            SELECT event_type, sum(n) AS n_type FROM per GROUP BY 1
-        )
-        SELECT per.event_type, CAST(hour AS INT) AS hour,
-               CAST(n AS BIGINT) AS n,
-               CAST((n * 1000000) // n_type AS BIGINT) AS share_e6
-        FROM per JOIN tot ON per.event_type = tot.event_type
-    """
-    from frogocr_spark.operators.analytics import (
-        activity_bitmap_oracle_sql, log2_histogram_oracle_sql,
-        weighted_median_oracle_sql)
-    o["activity_bitmap"] = activity_bitmap_oracle_sql(
-        "SELECT user_id, ts FROM events", "user_id")
-    o["log2_hist"] = log2_histogram_oracle_sql(
-        "SELECT event_type, value FROM events", "event_type",
-        "floor(value * 100)")
-    o["weighted_median"] = weighted_median_oracle_sql(
-        "SELECT event_type, event_id, user_id, value FROM events",
-        "event_type", "floor(value)", "1 + user_id % 5")
-    from frogocr_spark.operators.graph import two_hop_reach_oracle_sql
-    o["graph_2hop"] = two_hop_reach_oracle_sql(_COEVENT_EDGES_SQL,
-                                               max_mid_degree=32)
-    o["graph_2hop_precise"] = two_hop_reach_oracle_sql(
-        _COEVENT_EDGES_SQL, max_mid_degree=32, precise_capped=True)
-    from frogocr_spark.operators.graph import two_hop_reach_hll_oracle_sql
-    o["graph_2hop_hll"] = two_hop_reach_hll_oracle_sql(_COEVENT_EDGES_SQL,
-                                                       p=8)
-    o["dedup_weighted"] = r"""
-        WITH toks AS (
-            SELECT doc_id,
-                   unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS token
-            FROM documents
-        ), counts AS (
-            SELECT doc_id, token, count(*) AS cnt
-            FROM toks GROUP BY 1, 2
-        ), fdf AS (
-            SELECT token FROM (
-                SELECT token, count(*) AS c FROM counts GROUP BY 1
-            ) WHERE c <= 256
-        ), kept AS (
-            SELECT c.* FROM counts c JOIN fdf USING (token)
-        ), mass AS (
-            SELECT doc_id, sum(cnt) AS mass FROM kept GROUP BY 1
-        ), inter AS (
-            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   SUM(least(a.cnt, b.cnt)) AS inter
-            FROM kept a JOIN kept b
-              ON a.token = b.token AND a.doc_id < b.doc_id
-            GROUP BY 1, 2
-        )
-        SELECT id_a, id_b, CAST(inter AS BIGINT) AS inter,
-               CAST(ma.mass + mb.mass - inter AS BIGINT) AS n_union,
-               CAST((inter * 1000000) // (ma.mass + mb.mass - inter)
-                    AS BIGINT) AS wjaccard_e6
-        FROM inter
-        JOIN mass ma ON inter.id_a = ma.doc_id
-        JOIN mass mb ON inter.id_b = mb.doc_id
-        WHERE inter * 1000 >= 800 * (ma.mass + mb.mass - inter)
-    """
-    from frogocr_spark.operators.graph import \
-        neighborhood_function_oracle_sql
-    o["graph_nf"] = neighborhood_function_oracle_sql(
-        "SELECT a.user_id AS src, b.user_id AS dst FROM "
-        "(SELECT DISTINCT epoch_us(ts) // 1000000 AS win, user_id "
-        " FROM events) a JOIN "
-        "(SELECT DISTINCT epoch_us(ts) // 1000000 AS win, user_id "
-        " FROM events) b "
-        "ON a.win = b.win AND a.user_id < b.user_id", max_k=4, p=8)
-    from frogocr_spark.operators.textstats import (
-        charclass_stats_oracle_sql)
-    o["charclass"] = charclass_stats_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-    o["json_keys_profile"] = """
-        WITH kv AS (
-            SELECT k AS key,
-                   json_extract_string(props, '$.' || k) AS val
-            FROM (
-                SELECT props, unnest(json_keys(props)) AS k FROM events
-            )
-        )
-        SELECT key, CAST(count(*) AS BIGINT) AS n,
-               CAST(count(DISTINCT val) AS BIGINT) AS n_distinct,
-               CAST(min(CAST(val AS BIGINT)) AS BIGINT) AS min_val,
-               CAST(max(CAST(val AS BIGINT)) AS BIGINT) AS max_val
-        FROM kv GROUP BY key
-    """
-    from frogocr_spark.operators.analytics import (
-        time_weighted_avg_oracle_sql, largest_remainder_alloc_oracle_sql)
-    o["twap"] = time_weighted_avg_oracle_sql(
-        "SELECT user_id, event_id, ts, value FROM events",
-        "user_id", "floor(value * 100)")
-    o["lrm_alloc"] = largest_remainder_alloc_oracle_sql(
-        "SELECT event_type, count(*) AS n FROM events GROUP BY 1",
-        "event_type", "n", _ALLOC_TOTAL)
-    o["wow_change"] = """
-        WITH per AS (
-            SELECT event_type, epoch_us(ts) // 604800000000 AS week,
-                   count(*) AS n
-            FROM events GROUP BY 1, 2
-        )
-        SELECT event_type, CAST(week AS BIGINT) AS week,
-               CAST(n AS BIGINT) AS n,
-               CAST(lag(n) OVER (PARTITION BY event_type ORDER BY week)
-                    AS BIGINT) AS prev,
-               CASE WHEN lag(n) OVER (PARTITION BY event_type
-                                      ORDER BY week) > 0 THEN
-                   CAST(((n - lag(n) OVER (PARTITION BY event_type
-                                           ORDER BY week)) * 1000000)
-                        // lag(n) OVER (PARTITION BY event_type
-                                        ORDER BY week) AS BIGINT)
-               END AS delta_e6
-        FROM per
-    """
-    from frogocr_spark.operators.textstats import (
-        sentence_stats_oracle_sql)
-    o["sentence_stats"] = sentence_stats_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-    from frogocr_spark.operators.analytics import (
-        mannwhitney_u_oracle_sql)
-    o["rank_test"] = mannwhitney_u_oracle_sql(
-        "SELECT event_id, value FROM events WHERE event_type = 'click'",
-        "SELECT event_id, value FROM events "
-        "WHERE event_type = 'purchase'",
-        "floor(value * 100)", "event_id")
-    o["spearman"] = """
-        WITH b AS (
-            SELECT 'all' AS grp, rb AS x, rs AS y FROM (
-                SELECT c_custkey,
-                       row_number() OVER (ORDER BY bal_cents, c_custkey)
-                           AS rb,
-                       row_number() OVER (ORDER BY spend_cents,
-                                          c_custkey) AS rs
-                FROM (
-                    SELECT c.c_custkey,
-                           CAST(round(c.c_acctbal * 100, 0) AS BIGINT)
-                               AS bal_cents,
-                           s.spend_cents
-                    FROM customer c JOIN (
-                        SELECT o_custkey AS c_custkey,
-                               sum(CAST(round(o_totalprice * 100, 0)
-                                        AS BIGINT)) AS spend_cents
-                        FROM orders GROUP BY 1
-                    ) s ON c.c_custkey = s.c_custkey
-                )
-            )
-        ), a AS (
-            SELECT grp, CAST(count(*) AS BIGINT) AS n,
-                   sum(CAST(x AS DECIMAL(38,0))) AS sx,
-                   sum(CAST(y AS DECIMAL(38,0))) AS sy,
-                   sum(CAST(x * x AS DECIMAL(38,0))) AS sxx,
-                   sum(CAST(y * y AS DECIMAL(38,0))) AS syy,
-                   sum(CAST(x * y AS DECIMAL(38,0))) AS sxy
-            FROM b GROUP BY 1
-        )
-        SELECT grp, n,
-               round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_x,
-               round((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_x,
-               round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_y,
-               round((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_y,
-               round(CASE WHEN
-                       (CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                       AND
-                       (CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                       - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                         * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)) > 0
-                     THEN ((CAST(sxy AS DOUBLE) / CAST(n AS DOUBLE))
-                      - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                        * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)))
-                     / (sqrt((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)))
-                        * sqrt((CAST(syy AS DOUBLE) / CAST(n AS DOUBLE))
-                             - (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))
-                               * (CAST(sy AS DOUBLE) / CAST(n AS DOUBLE))))
-                     ELSE NULL END,
-                     6) AS corr_xy
-        FROM a
-    """
-    from frogocr_spark.operators.sketches import ams_f2_oracle_sql
-    o["ams_f2"] = ams_f2_oracle_sql(
-        "SELECT user_id FROM events", "user_id", reps=16)
-    from frogocr_spark.operators.quality import (
-        dp_noisy_counts_oracle_sql)
-    o["dp_counts"] = dp_noisy_counts_oracle_sql(
-        "SELECT event_type FROM events", "event_type")
-    o["emb_dim_stats"] = """
-        WITH b AS (
-            SELECT dim, q AS x, q AS y FROM (
-                SELECT p['dim'] AS dim, p['q'] AS q FROM (
-                    SELECT unnest(
-                        [struct_pack(dim := j - 1,
-                             q := CAST(floor(embedding[j] * 4096)
-                                       AS BIGINT))
-                         for j in range(1, len(embedding) + 1)]) AS p
-                    FROM embeddings
-                )
-            )
-        ), a AS (
-            SELECT dim, CAST(count(*) AS BIGINT) AS n,
-                   sum(CAST(x AS DECIMAL(38,0))) AS sx,
-                   sum(CAST(x * x AS DECIMAL(38,0))) AS sxx
-            FROM b GROUP BY 1
-        )
-        SELECT dim, n,
-               round(CAST(sx AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_x,
-               round((CAST(sxx AS DOUBLE) / CAST(n AS DOUBLE))
-                     - (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                       * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE)), 6)
-                   AS var_x
-        FROM a
-    """
-    o["nullsafe_join"] = """
-        WITH clk AS (
-            SELECT CASE WHEN value >= 1
-                        THEN CAST(floor(value) AS BIGINT) % 10 END AS k,
-                   count(*) AS n_click
-            FROM events WHERE event_type = 'click' GROUP BY 1
-        ), pur AS (
-            SELECT CASE WHEN value >= 1
-                        THEN CAST(floor(value) AS BIGINT) % 10 END AS k,
-                   count(*) AS n_purchase
-            FROM events WHERE event_type = 'purchase' GROUP BY 1
-        )
-        SELECT clk.k AS bucket, CAST(n_click AS BIGINT) AS n_click,
-               CAST(n_purchase AS BIGINT) AS n_purchase
-        FROM clk JOIN pur ON clk.k IS NOT DISTINCT FROM pur.k
-    """
-    from frogocr_spark.operators.analytics import (
-        hhi_concentration_oracle_sql)
-    o["hhi_supplier"] = hhi_concentration_oracle_sql(
-        """SELECT n_name,
-                  l_suppkey,
-                  sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                      AS rev_cents
-           FROM lineitem
-           JOIN supplier ON l_suppkey = s_suppkey
-           JOIN nation ON s_nationkey = n_nationkey
-           GROUP BY 1, 2""", "n_name", "rev_cents")
-    from frogocr_spark.operators.textstats import (
-        flesch_stats_oracle_sql)
-    o["readability"] = flesch_stats_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-    o["knn_classify"] = """
-        WITH scored AS (
-            SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                   c.label AS nl,
-                   row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           CAST(c.embedding AS DOUBLE[]),
-                           CAST(q.embedding AS DOUBLE[])), 4) DESC,
-                       c.vec_id) AS rk
-            FROM embeddings c,
-                 (SELECT * FROM embeddings WHERE vec_id < 20) q
-            WHERE c.vec_id <> q.vec_id
-        ), votes AS (
-            SELECT query_id, CAST(nl AS BIGINT) AS pred_label,
-                   count(*) AS n_votes
-            FROM scored WHERE rk <= 5 GROUP BY 1, 2
-        ), win AS (
-            SELECT *, row_number() OVER (PARTITION BY query_id
-                      ORDER BY n_votes DESC, pred_label ASC) AS vr
-            FROM votes
-        )
-        SELECT w.query_id, CAST(q.label AS BIGINT) AS true_label,
-               w.pred_label, CAST(w.n_votes AS BIGINT) AS n_votes,
-               CAST(CASE WHEN w.pred_label = q.label
-                         THEN 1 ELSE 0 END AS BIGINT) AS hit
-        FROM win w JOIN embeddings q ON w.query_id = q.vec_id
-        WHERE w.vr = 1
-    """
-    from frogocr_spark.operators.graph import hits_int_oracle_sql
-    o["hits"] = hits_int_oracle_sql(
-        "SELECT DISTINCT 's' || CAST(l_suppkey AS VARCHAR) AS src, "
-        "'c' || CAST(o_custkey AS VARCHAR) AS dst "
-        "FROM lineitem JOIN orders ON l_orderkey = o_orderkey",
-        iters=2)
-    from frogocr_spark.operators.layout import (
-        geohash_base32_sql as _gh32, geohash_interleave_sql as _ghil,
-        geohash_quant_sql as _ghq)
-    o["geohash"] = f"""
-        WITH c AS (
-            SELECT c_custkey,
-                   c_custkey * 37 % 18000 - 9000 AS lat_e2,
-                   c_custkey * 73 % 36000 - 18000 AS lon_e2
-            FROM customer
-        ), gi AS (
-            SELECT c_custkey, lat_e2, lon_e2,
-                   {_ghil(_ghq("lat_e2 / 100.0", 20, True),
-                          _ghq("lon_e2 / 100.0", 20, False), 8)} AS g
-            FROM c
-        )
-        SELECT c_custkey, CAST(lat_e2 AS BIGINT) AS lat_e2,
-               CAST(lon_e2 AS BIGINT) AS lon_e2,
-               {_gh32("g", 8)} AS gh8,
-               substr({_gh32("g", 8)}, 1, 4) AS gh4
-        FROM gi
-    """
-    o["lateral_topn"] = LATERAL_SQL_TEXT
-    o["l_diversity"] = """
-        WITH per_sv AS (
-            SELECT CAST(event_type AS VARCHAR) AS event_type,
-                   CAST(epoch_us(ts) // 86400000000 AS VARCHAR) AS day,
-                   user_id, count(*) AS n
-            FROM events GROUP BY 1, 2, 3
-        )
-        SELECT event_type, day, CAST(sum(n) AS BIGINT) AS n,
-               CAST(count(*) AS BIGINT) AS n_sensitive,
-               CAST(CASE WHEN count(*) >= 3 THEN 1 ELSE 0 END
-                    AS BIGINT) AS diverse
-        FROM per_sv GROUP BY event_type, day
-    """
-    o["zipf_fit"] = r"""
-        WITH toks AS (
-            SELECT unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS token
-            FROM documents
-        ), freq AS (
-            SELECT token, count(*) AS f FROM toks GROUP BY token
-        ), ranked AS (
-            SELECT f, row_number() OVER (ORDER BY -f, token) AS r
-            FROM freq
-        ), b AS (
-            SELECT 'all' AS grp,
-                   CAST(length(bin(r)) - 1 AS BIGINT) AS x,
-                   CAST(length(bin(f)) - 1 AS BIGINT) AS y
-            FROM ranked
-        ), a AS (
-            SELECT grp, CAST(count(*) AS HUGEINT) AS nn,
-                   CAST(sum(x) AS HUGEINT) AS sx,
-                   CAST(sum(y) AS HUGEINT) AS sy,
-                   CAST(sum(x * x) AS HUGEINT) AS sxx,
-                   CAST(sum(y * y) AS HUGEINT) AS syy,
-                   CAST(sum(x * y) AS HUGEINT) AS sxy
-            FROM b GROUP BY grp
-        ), t AS (
-            SELECT grp, nn, sx, sy,
-                   nn * sxy - sx * sy AS num,
-                   nn * sxx - sx * sx AS den_x,
-                   nn * syy - sy * sy AS den_y
-            FROM a
-        ), u AS (
-            SELECT grp, nn, sx, sy,
-                   CASE WHEN den_x > 0
-                        THEN CAST(num AS DOUBLE) / CAST(den_x AS DOUBLE)
-                   END AS slope,
-                   CASE WHEN den_x > 0 AND den_y > 0
-                        THEN (CAST(num AS DOUBLE)
-                              / CAST(den_x AS DOUBLE))
-                             * (CAST(num AS DOUBLE)
-                                / CAST(den_y AS DOUBLE))
-                   END AS r2
-            FROM t
-        )
-        SELECT grp, CAST(nn AS BIGINT) AS n,
-               round(slope, 6) AS slope,
-               round(CAST(sy AS DOUBLE) / CAST(nn AS DOUBLE)
-                     - slope * (CAST(sx AS DOUBLE)
-                                / CAST(nn AS DOUBLE)), 6) AS intercept,
-               round(r2, 6) AS r2
-        FROM u
-    """
-    from frogocr_spark.operators.clustering import (
-        maxmin_coreset_oracle_sql)
-    o["coreset"] = maxmin_coreset_oracle_sql(k=6, dim=64)
-    from frogocr_spark.functions.phonetic import soundex_sql as _sdx
-    o["soundex_blocks"] = rf"""
-        WITH toks AS (
-            SELECT unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS token
-            FROM documents
-        ), freq AS (
-            SELECT token, count(*) AS f FROM toks GROUP BY token
-        ), coded AS (
-            SELECT token, f, {_sdx('token', dialect='duckdb')} AS code FROM freq
-        ), nn AS (
-            SELECT * FROM coded WHERE code IS NOT NULL
-        ), top AS (
-            SELECT code, token AS top_token FROM nn
-            QUALIFY row_number() OVER (PARTITION BY code
-                        ORDER BY f DESC, token DESC) = 1
-        )
-        SELECT g.code, g.n_tokens, g.total_f, g.min_token, t.top_token
-        FROM (
-            SELECT code, CAST(count(*) AS BIGINT) AS n_tokens,
-                   CAST(sum(f) AS BIGINT) AS total_f,
-                   min(token) AS min_token
-            FROM nn GROUP BY code
-        ) g JOIN top t USING (code)
-    """
-    o["knn_eval"] = """
-        WITH scored AS (
-            SELECT q.vec_id AS query_id, c.label AS nl,
-                   row_number() OVER (PARTITION BY q.vec_id
-                       ORDER BY round(list_cosine_similarity(
-                           CAST(c.embedding AS DOUBLE[]),
-                           CAST(q.embedding AS DOUBLE[])), 4) DESC,
-                       c.vec_id) AS rk
-            FROM embeddings c,
-                 (SELECT * FROM embeddings WHERE vec_id < 50) q
-            WHERE c.vec_id <> q.vec_id
-        ), votes AS (
-            SELECT query_id, CAST(nl AS BIGINT) AS p, count(*) AS nv
-            FROM scored WHERE rk <= 5 GROUP BY 1, 2
-        ), pred AS (
-            SELECT v.query_id, CAST(q.label AS BIGINT) AS t, v.p
-            FROM (SELECT * FROM votes
-                  QUALIFY row_number() OVER (PARTITION BY query_id
-                              ORDER BY nv DESC, p ASC) = 1) v
-            JOIN embeddings q ON v.query_id = q.vec_id
-        ), classes AS (
-            SELECT t AS label FROM pred UNION SELECT p FROM pred
-        ), nt AS (
-            SELECT t AS label, count(*) AS n_true FROM pred GROUP BY 1
-        ), np AS (
-            SELECT p AS label, count(*) AS n_pred FROM pred GROUP BY 1
-        ), dg AS (
-            SELECT t AS label, count(*) AS n_correct FROM pred
-            WHERE t = p GROUP BY 1
-        )
-        SELECT c.label,
-               CAST(coalesce(n_true, 0) AS BIGINT) AS n_true,
-               CAST(coalesce(n_pred, 0) AS BIGINT) AS n_pred,
-               CAST(coalesce(n_correct, 0) AS BIGINT) AS n_correct,
-               CASE WHEN coalesce(n_pred, 0) > 0
-                    THEN CAST((coalesce(n_correct, 0) * 1000000)
-                              // n_pred AS BIGINT) END AS precision_e6,
-               CASE WHEN coalesce(n_true, 0) > 0
-                    THEN CAST((coalesce(n_correct, 0) * 1000000)
-                              // n_true AS BIGINT) END AS recall_e6
-        FROM classes c LEFT JOIN nt USING (label)
-        LEFT JOIN np USING (label) LEFT JOIN dg USING (label)
-    """
-    o["unpivot_surface"] = UNPIVOT_SQL_TEXT
-    from frogocr_spark.operators.layout import zvalue_n_sql as _zn
-    o["zorder3"] = f"""
-        WITH li AS (
-            SELECT l_suppkey AS s, l_partkey AS p,
-                   epoch_us(l_shipdate) // 86400000000 AS d
-            FROM lineitem
-        ), z AS (
-            SELECT s, p, d, {_zn(['s', 'p', 'd'], 16)} AS zval FROM li
-        ), ext AS (
-            SELECT min(zval) AS zmin, max(zval) AS zmax FROM z
-        ), b AS (
-            SELECT s, p, d,
-                   CAST((zval - zmin) * 16 // (zmax - zmin + 1)
-                        AS INT) AS zbucket
-            FROM z CROSS JOIN ext
-        )
-        SELECT zbucket, CAST(count(*) AS BIGINT) AS n_rows,
-               min(s) AS min_s, max(s) AS max_s,
-               min(p) AS min_p, max(p) AS max_p,
-               min(d) AS min_d, max(d) AS max_d
-        FROM b GROUP BY zbucket
-    """
-    o["w_ignore_nulls"] = """
-        SELECT user_id, event_id,
-               last_value(pc IGNORE NULLS) OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(ts), event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   AS last_purchase_cents,
-               first_value(pc IGNORE NULLS) OVER (
-                   PARTITION BY user_id
-                   ORDER BY epoch_us(ts), event_id
-                   ROWS BETWEEN UNBOUNDED PRECEDING
-                            AND UNBOUNDED FOLLOWING)
-                   AS first_purchase_cents
-        FROM (
-            SELECT user_id, event_id, ts,
-                   CASE WHEN event_type = 'purchase'
-                        THEN CAST(round(value * 100, 0) AS BIGINT)
-                   END AS pc
-            FROM events
-        )
-    """
-    o["recs_jaccard"] = """
-        WITH bp AS (
-            SELECT DISTINCT l_orderkey AS bk, l_partkey AS item
-            FROM lineitem
-        ), pop AS (
-            SELECT item, count(*) AS n FROM bp GROUP BY item
-        ), co AS (
-            SELECT a.item AS pa, b.item AS pb, count(*) AS n_ab
-            FROM bp a JOIN bp b ON a.bk = b.bk AND a.item < b.item
-            GROUP BY 1, 2
-        ), bidir AS (
-            SELECT pa, pb, n_ab FROM co
-            UNION ALL SELECT pb, pa, n_ab FROM co
-        ), scored AS (
-            SELECT pa, pb, n_ab,
-                   CAST((n_ab * 1000000) // (na.n + nb.n - n_ab)
-                        AS BIGINT) AS jac_e6
-            FROM bidir
-            JOIN pop na ON bidir.pa = na.item
-            JOIN pop nb ON bidir.pb = nb.item
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY pa
-                      ORDER BY jac_e6 DESC, pb ASC) AS rank
-            FROM scored
-        )
-        SELECT pa AS part, pb AS rec, CAST(n_ab AS BIGINT) AS n_ab,
-               jac_e6, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= 5
-    """
-    o["auc_roc"] = """
-        WITH lab AS (
-            SELECT CAST(floor(value * 100) AS BIGINT) AS v,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                       AS y
-            FROM events WHERE event_type IN ('click', 'purchase')
-        ), g AS (
-            SELECT v, count(*) AS cnt, sum(y) AS npos
-            FROM lab GROUP BY v
-        ), c AS (
-            SELECT cnt, npos,
-                   coalesce(sum(cnt) OVER (ORDER BY v
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND 1 PRECEDING), 0) AS cb
-            FROM g
-        ), agg AS (
-            SELECT sum(CAST(npos AS HUGEINT)) AS n_pos,
-                   sum(CAST(cnt - npos AS HUGEINT)) AS n_neg,
-                   sum(CAST(npos AS HUGEINT) * (2 * cb + cnt + 1))
-                       AS r2
-            FROM c
-        ), fin AS (
-            SELECT n_pos, n_neg,
-                   r2 - n_pos * (n_pos + 1) AS u2
-            FROM agg
-        )
-        SELECT CAST(n_pos AS BIGINT) AS n_pos,
-               CAST(n_neg AS BIGINT) AS n_neg,
-               CAST(u2 AS BIGINT) AS u2,
-               CASE WHEN n_pos > 0 AND n_neg > 0
-                    THEN CAST((u2 * 1000000) // (2 * n_pos * n_neg)
-                              AS BIGINT) END AS auc_e6
-        FROM fin
-    """
-    o["abc_analysis"] = """
-        WITH rev AS (
-            SELECT l_partkey AS k,
-                   sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                       AS v
-            FROM lineitem GROUP BY 1
-        ), c AS (
-            SELECT k, CAST(v AS HUGEINT) AS v,
-                   sum(CAST(v AS HUGEINT)) OVER (ORDER BY -v, k
-                       ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW) AS cum,
-                   sum(CAST(v AS HUGEINT)) OVER () AS tot
-            FROM rev
-        ), cls AS (
-            SELECT v, tot,
-                   CASE WHEN cum * 100 <= 80 * tot THEN 'A'
-                        WHEN cum * 100 <= 95 * tot THEN 'B'
-                        ELSE 'C' END AS abc_class
-            FROM c
-        )
-        SELECT abc_class, CAST(count(*) AS BIGINT) AS n_items,
-               CAST(sum(v) AS BIGINT) AS class_value,
-               CASE WHEN max(tot) > 0
-                    THEN CAST((sum(v) * 1000000) // max(tot)
-                              AS BIGINT) END AS share_e6
-        FROM cls GROUP BY 1
-    """
-    o["theil_sen"] = """
-        WITH daily AS (
-            SELECT epoch_us(ts) // 86400000000 AS d,
-                   sum(CAST(floor(value * 100) AS BIGINT)) AS cents
-            FROM events WHERE event_type = 'purchase' GROUP BY 1
-        ), pairs AS (
-            SELECT a.d AS x1, b.d AS x2,
-                   CAST(((b.cents - a.cents)
-                         * CAST(1000000 AS HUGEINT))
-                        // (b.d - a.d) AS BIGINT) AS slope_e6
-            FROM daily a JOIN daily b ON a.d < b.d
-        ), ranked AS (
-            SELECT slope_e6,
-                   row_number() OVER (ORDER BY slope_e6, x1, x2)
-                       AS rk,
-                   count(*) OVER () AS n_pairs
-            FROM pairs
-        ), med AS (
-            SELECT CAST(n_pairs AS BIGINT) AS n_pairs, slope_e6
-            FROM ranked WHERE rk = (n_pairs + 1) // 2
-        )
-        SELECT (SELECT CAST(count(*) AS BIGINT) FROM daily)
-                   AS n_points,
-               n_pairs, slope_e6
-        FROM med
-    """
-    from frogocr_spark.operators.textstats import langid_ngram_oracle_sql
-    o["langid"] = langid_ngram_oracle_sql(
-        "SELECT doc_id, text FROM documents")
-    o["gini"] = """
-        WITH rev AS (
-            SELECT l_partkey AS k,
-                   sum(CAST(round(l_extendedprice * 100, 0) AS BIGINT))
-                       AS v
-            FROM lineitem GROUP BY 1
-        ), r AS (
-            SELECT v, row_number() OVER (ORDER BY v, k) AS i FROM rev
-        ), a AS (
-            SELECT CAST(count(*) AS HUGEINT) AS n,
-                   sum(CAST(v AS HUGEINT)) AS s,
-                   sum(CAST(i AS HUGEINT) * v) AS t
-            FROM r
-        )
-        SELECT CAST(n AS BIGINT) AS n_items, CAST(s AS BIGINT) AS total,
-               CASE WHEN s > 0
-                    THEN CAST(((2 * t - (n + 1) * s) * 1000000)
-                              // (n * s) AS BIGINT) END AS gini_e6
-        FROM a
-    """
-    o["kendall_tau"] = """
-        WITH daily AS (
-            SELECT epoch_us(ts) // 86400000000 AS d,
-                   sum(CAST(floor(value * 100) AS BIGINT)) AS cents
-            FROM events WHERE event_type = 'purchase' GROUP BY 1
-        ), p AS (
-            SELECT count(*) AS n_pairs,
-                   coalesce(sum(CASE WHEN b.cents > a.cents
-                                     THEN 1 ELSE 0 END), 0) AS conc,
-                   coalesce(sum(CASE WHEN b.cents < a.cents
-                                     THEN 1 ELSE 0 END), 0) AS disc
-            FROM daily a JOIN daily b ON a.d < b.d
-        ), np AS (SELECT count(*) AS n_points FROM daily)
-        SELECT CAST(n_points AS BIGINT) AS n_points,
-               CAST(n_pairs AS BIGINT) AS n_pairs,
-               CAST(conc AS BIGINT) AS concordant,
-               CAST(disc AS BIGINT) AS discordant,
-               CASE WHEN n_points >= 2 THEN
-                   CAST((2 * CAST(conc - disc AS HUGEINT) * 1000000)
-                        // (CAST(n_points AS HUGEINT) * (n_points - 1))
-                        AS BIGINT)
-               END AS tau_e6
-        FROM np, p
-    """
-    o["cohen_kappa"] = r"""
-        WITH lab AS (
-            SELECT CASE WHEN n_chars >= 300 THEN 'long' ELSE 'short' END
-                       AS a,
-                   CASE WHEN (CASE WHEN trim(text) = '' THEN 0
-                              ELSE len(string_split_regex(trim(text),
-                                                          '\s+')) END)
-                            >= 50
-                        THEN 'long' ELSE 'short' END AS b
-            FROM documents
-        ), cells AS (SELECT a, b, count(*) AS c FROM lab GROUP BY 1, 2),
-        rowt AS (SELECT a, sum(c) AS ra FROM cells GROUP BY 1),
-        colt AS (SELECT b, sum(c) AS cb FROM cells GROUP BY 1),
-        pe AS (SELECT coalesce(sum(CAST(ra AS HUGEINT) * cb), 0)
-                   AS pe_num
-               FROM rowt r JOIN colt c ON r.a = c.b),
-        tot AS (SELECT CAST(sum(c) AS HUGEINT) AS n,
-                       CAST(sum(CASE WHEN a = b THEN c ELSE 0 END)
-                            AS HUGEINT) AS agree
-                FROM cells)
-        SELECT CAST(n AS BIGINT) AS n, CAST(agree AS BIGINT) AS agree,
-               CAST((agree * 1000000) // n AS BIGINT) AS po_e6,
-               CAST((pe_num * 1000000) // (n * n) AS BIGINT) AS pe_e6,
-               CASE WHEN n * n <> pe_num THEN
-                   CAST(((n * agree - pe_num) * 1000000)
-                        // (n * n - pe_num) AS BIGINT)
-               END AS kappa_e6
-        FROM tot, pe
-    """
-    o["novelty"] = r"""
-        WITH words AS (
-            SELECT doc_id // 50 AS batch,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), g AS (
-            SELECT DISTINCT batch,
-                   unnest(CASE WHEN len(ws) >= 8
-                               THEN [array_to_string(ws[j:j+7], ' ')
-                                     for j in range(1, len(ws) - 6)]
-                               ELSE CAST([] AS VARCHAR[]) END) AS gram
-            FROM words
-        ), frst AS (SELECT gram, min(batch) AS fb FROM g GROUP BY 1),
-        per_batch AS (SELECT batch, count(*) AS n_grams
-                      FROM g GROUP BY 1),
-        news AS (SELECT fb AS batch, count(*) AS n_new
-                 FROM frst GROUP BY 1)
-        SELECT CAST(p.batch AS BIGINT) AS batch,
-               CAST(p.n_grams AS BIGINT) AS n_grams,
-               CAST(coalesce(w.n_new, 0) AS BIGINT) AS n_new,
-               CAST((CAST(coalesce(w.n_new, 0) AS HUGEINT) * 1000000)
-                    // p.n_grams AS BIGINT) AS novelty_e6
-        FROM per_batch p LEFT JOIN news w USING (batch)
-    """
-    o["calibration"] = """
-        WITH lab AS (
-            SELECT CAST(floor(value * 100) AS BIGINT) AS s,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                       AS y
-            FROM events WHERE event_type IN ('click', 'purchase')
-        ), rng AS (SELECT min(s) AS smin, max(s) AS smax FROM lab),
-        b AS (
-            SELECT CASE WHEN smax > smin
-                        THEN ((s - smin) * 10) // (smax - smin + 1)
-                        ELSE 0 END AS bin, s, y, smin, smax
-            FROM lab, rng
-        ), agg AS (
-            SELECT bin, count(*) AS n, sum(CAST(s AS HUGEINT)) AS ss,
-                   sum(CAST(y AS HUGEINT)) AS sy,
-                   max(smin) AS smin, max(smax) AS smax
-            FROM b GROUP BY 1
-        ), fin AS (
-            SELECT bin, n,
-                   CAST((sy * 1000000) // n AS BIGINT) AS pos_rate_e6,
-                   CASE WHEN smax > smin THEN
-                       CAST(((ss - CAST(n AS HUGEINT) * smin) * 1000000)
-                            // (CAST(n AS HUGEINT) * (smax - smin))
-                            AS BIGINT)
-                   END AS mean_score_e6
-            FROM agg
-        )
-        SELECT CAST(bin AS BIGINT) AS bin, CAST(n AS BIGINT) AS n,
-               pos_rate_e6, mean_score_e6,
-               CAST(abs(mean_score_e6 - pos_rate_e6) AS BIGINT)
-                   AS gap_e6
-        FROM fin
-    """
-    o["neg_sample"] = """
-        WITH base AS (
-            SELECT doc_id AS id, md5(text) AS h,
-                   md5(CAST(doc_id AS VARCHAR)) AS o
-            FROM documents
-        ), r AS (
-            SELECT id, h, row_number() OVER (ORDER BY o, id) AS rk,
-                   count(*) OVER () AS n
-            FROM base
-        ), cand AS (
-            SELECT r.id, r.h, ((r.rk - 1 + s.slot) % r.n) + 1 AS nrk,
-                   s.slot
-            FROM r, (SELECT unnest([1, 2, 3]) AS slot) s
-        )
-        SELECT c.id AS doc_id, CAST(c.slot AS BIGINT) AS slot,
-               g.id AS neg_id
-        FROM cand c JOIN r g ON g.rk = c.nrk
-        WHERE g.id <> c.id AND g.h <> c.h
-    """
-    o["split_leakage"] = """
-        WITH s AS (
-            SELECT text,
-                   CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                             < 'e6' THEN 'train'
-                        WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2)
-                             < 'f3' THEN 'val'
-                        ELSE 'test' END AS split
-            FROM documents
-        ), mat AS (
-            SELECT md5(text) AS h,
-                   CAST(sum(CASE WHEN split = 'train' THEN 1 ELSE 0
-                            END) AS HUGEINT) AS t,
-                   CAST(sum(CASE WHEN split = 'val' THEN 1 ELSE 0
-                            END) AS HUGEINT) AS v,
-                   CAST(sum(CASE WHEN split = 'test' THEN 1 ELSE 0
-                            END) AS HUGEINT) AS x
-            FROM s GROUP BY 1
-        ), tot AS (
-            SELECT sum(t * (t - 1) // 2) AS tt,
-                   sum(v * (v - 1) // 2) AS vv,
-                   sum(x * (x - 1) // 2) AS xx,
-                   sum(t * v) AS tv, sum(t * x) AS tx,
-                   sum(v * x) AS vx
-            FROM mat
-        )
-        SELECT 'train' AS split_lo, 'train' AS split_hi,
-               CAST(tt AS BIGINT) AS n_pairs, false AS is_leak FROM tot
-        UNION ALL SELECT 'val', 'val', CAST(vv AS BIGINT), false
-        FROM tot
-        UNION ALL SELECT 'test', 'test', CAST(xx AS BIGINT), false
-        FROM tot
-        UNION ALL SELECT 'train', 'val', CAST(tv AS BIGINT), true
-        FROM tot
-        UNION ALL SELECT 'train', 'test', CAST(tx AS BIGINT), true
-        FROM tot
-        UNION ALL SELECT 'test', 'val', CAST(vx AS BIGINT), true
-        FROM tot
-    """
-    o["minmax_prune"] = """
-        WITH per AS (
-            SELECT o_orderkey // 1000 AS f, count(*) AS n_rows,
-                   sum(CASE WHEN CAST(round(o_totalprice * 100, 0)
-                                      AS BIGINT)
-                                 BETWEEN 1000000 AND 2000000
-                            THEN 1 ELSE 0 END) AS n_match,
-                   min(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS vmin,
-                   max(CAST(round(o_totalprice * 100, 0) AS BIGINT))
-                       AS vmax
-            FROM orders GROUP BY 1
-        ), agg AS (
-            SELECT CAST(count(*) AS HUGEINT) AS n_files,
-                   CAST(sum(CASE WHEN vmax >= 1000000
-                                      AND vmin <= 2000000
-                                 THEN 1 ELSE 0 END) AS HUGEINT)
-                       AS files_scanned,
-                   sum(CAST(n_rows AS HUGEINT)) AS rows_total,
-                   sum(CASE WHEN vmax >= 1000000 AND vmin <= 2000000
-                            THEN CAST(n_rows AS HUGEINT)
-                            ELSE 0 END) AS rows_scanned,
-                   sum(CAST(n_match AS HUGEINT)) AS rows_matching
-            FROM per
-        )
-        SELECT CAST(n_files AS BIGINT) AS n_files,
-               CAST(files_scanned AS BIGINT) AS files_scanned,
-               CAST(n_files - files_scanned AS BIGINT) AS files_pruned,
-               CAST(rows_total AS BIGINT) AS rows_total,
-               CAST(rows_scanned AS BIGINT) AS rows_scanned,
-               CAST(rows_matching AS BIGINT) AS rows_matching,
-               CAST(((n_files - files_scanned) * 1000000) // n_files
-                    AS BIGINT) AS prune_frac_e6,
-               CASE WHEN rows_matching > 0
-                    THEN CAST((rows_scanned * 1000000) // rows_matching
-                              AS BIGINT) END AS read_amp_e6
-        FROM agg
-    """
-    o["mojibake"] = """
-        WITH docs AS (
-            SELECT source, text FROM documents
-            UNION ALL SELECT 'synthetic', 'le cafÃ© est servi'
-            UNION ALL SELECT 'synthetic', 'itâ€™s here Â now'
-            UNION ALL SELECT 'synthetic', 'clean text row'
-        ), flag AS (
-            SELECT source,
-                   CASE WHEN contains(text, 'Ã©')
-                             OR contains(text, 'Ã¨')
-                             OR contains(text, 'Ã¼')
-                             OR contains(text, 'Ã±')
-                             OR contains(text, 'â€')
-                             OR contains(text, 'Â ')
-                             OR contains(text, '�')
-                        THEN 1 ELSE 0 END AS bad
-            FROM docs
-        )
-        SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(bad) AS BIGINT) AS n_bad,
-               CAST((CAST(sum(bad) AS HUGEINT) * 1000000) // count(*)
-                    AS BIGINT) AS bad_e6
-        FROM flag GROUP BY 1
-    """
-    o["fano"] = """
-        WITH c AS (
-            SELECT event_type AS "group",
-                   epoch_us(ts) // 3600000000 AS b, count(*) AS c
-            FROM events GROUP BY 1, 2
-        ), m AS (
-            SELECT "group", CAST(count(*) AS HUGEINT) AS n,
-                   CAST(sum(c) AS HUGEINT) AS s,
-                   sum(CAST(c AS HUGEINT) * c) AS q
-            FROM c GROUP BY 1
-        )
-        SELECT "group", CAST(n AS BIGINT) AS n_buckets,
-               CAST(s AS BIGINT) AS total,
-               CASE WHEN n >= 2 AND s > 0
-                    THEN CAST(((n * q - s * s) * 1000000)
-                              // ((n - 1) * s) AS BIGINT)
-               END AS fano_e6
-        FROM m
-    """
-    o["rate_spikes"] = """
-        WITH c AS (
-            SELECT event_type AS "group",
-                   epoch_us(ts) // 3600000000 AS bucket,
-                   count(*) AS cnt
-            FROM events GROUP BY 1, 2
-        ), m AS (
-            SELECT "group", CAST(count(*) AS HUGEINT) AS n,
-                   CAST(sum(cnt) AS HUGEINT) AS s,
-                   sum(CAST(cnt AS HUGEINT) * cnt) AS q
-            FROM c GROUP BY 1
-        )
-        SELECT c."group", CAST(c.bucket AS BIGINT) AS bucket,
-               CAST(c.cnt AS BIGINT) AS cnt
-        FROM c JOIN m USING ("group")
-        WHERE m.n >= 2
-          AND (CAST(c.cnt AS HUGEINT) * m.n - m.s)
-              * (CAST(c.cnt AS HUGEINT) * m.n - m.s) * (m.n - 1)
-              > 9 * m.n * (m.n * m.q - m.s * m.s)
-          AND CAST(c.cnt AS HUGEINT) * m.n > m.s
-    """
-    o["simpson"] = r"""
-        WITH toks AS (
-            SELECT source AS "group",
-                   unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS tok
-            FROM documents
-        ), c AS (
-            SELECT "group", tok, count(*) AS c FROM toks GROUP BY 1, 2
-        ), m AS (
-            SELECT "group", CAST(sum(c) AS HUGEINT) AS n_tokens,
-                   CAST(count(*) AS HUGEINT) AS n_types,
-                   sum(CAST(c AS HUGEINT) * (c - 1)) AS rep
-            FROM c GROUP BY 1
-        )
-        SELECT "group", CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(n_types AS BIGINT) AS n_types,
-               CASE WHEN n_tokens >= 2 THEN
-                   CAST(1000000 - (rep * 1000000)
-                        // (n_tokens * (n_tokens - 1)) AS BIGINT)
-               END AS simpson_e6
-        FROM m
-    """
-    o["cramers_v"] = """
-        WITH cells AS (
-            SELECT source AS a, lang AS b, count(*) AS o
-            FROM documents GROUP BY 1, 2
-        ),
-        rowt AS (SELECT a, sum(o) AS ra FROM cells GROUP BY 1),
-        colt AS (SELECT b, sum(o) AS cb FROM cells GROUP BY 1),
-        tot AS (SELECT CAST(sum(o) AS HUGEINT) AS n,
-                       CAST(count(DISTINCT a) AS HUGEINT) AS r,
-                       CAST(count(DISTINCT b) AS HUGEINT) AS c
-                FROM cells),
-        fullx AS (
-            SELECT coalesce(cl.o, 0) AS o, rt.ra, ct.cb
-            FROM rowt rt CROSS JOIN colt ct
-            LEFT JOIN cells cl ON cl.a = rt.a AND cl.b = ct.b
-        ), terms AS (
-            SELECT ((CAST(o AS HUGEINT) * t.n
-                     - CAST(ra AS HUGEINT) * cb)
-                    * (CAST(o AS HUGEINT) * t.n
-                       - CAST(ra AS HUGEINT) * cb)
-                    * 1000000)
-                   // (t.n * CAST(ra AS HUGEINT) * cb) AS trm
-            FROM fullx, tot t
-        ), chi AS (SELECT sum(trm) AS chi2 FROM terms)
-        SELECT CAST(t.n AS BIGINT) AS n, CAST(t.r AS BIGINT) AS r,
-               CAST(t.c AS BIGINT) AS c,
-               CAST(chi2 AS BIGINT) AS chi2_e6,
-               CASE WHEN least(t.r, t.c) >= 2 THEN
-                   CAST(chi2 // (t.n * (least(t.r, t.c) - 1))
-                        AS BIGINT)
-               END AS v2_e6
-        FROM tot t, chi
-    """
-    o["eta_squared"] = """
-        WITH base AS (
-            SELECT event_type AS g,
-                   CAST(floor(value * 100) AS BIGINT) AS v
-            FROM events
-        ), per AS (
-            SELECT g, count(*) AS ng, sum(CAST(v AS HUGEINT)) AS sg,
-                   sum(CAST(v AS HUGEINT) * v) AS qg
-            FROM base GROUP BY 1
-        ), agg AS (
-            SELECT CAST(sum(ng) AS HUGEINT) AS n,
-                   count(*) AS k_groups,
-                   sum(sg) AS s, sum(qg) AS q,
-                   sum((sg * sg * 1000000) // CAST(ng AS HUGEINT))
-                       AS bterm
-            FROM per
-        ), fin AS (
-            SELECT n, k_groups,
-                   bterm - (s * s * 1000000) // n AS ssb,
-                   q * 1000000 - (s * s * 1000000) // n AS sst
-            FROM agg
-        )
-        SELECT CAST(n AS BIGINT) AS n,
-               CAST(k_groups AS BIGINT) AS k_groups,
-               CAST(ssb AS BIGINT) AS ssb_e6,
-               CAST(sst AS BIGINT) AS sst_e6,
-               CASE WHEN sst > 0
-                    THEN CAST((ssb * 1000000) // sst AS BIGINT)
-               END AS eta2_e6
-        FROM fin
-    """
-    o["vocab_drift"] = r"""
-        WITH mx AS (SELECT max(doc_id) AS m FROM documents),
-        halves AS (
-            SELECT CASE WHEN doc_id * 2 <= (SELECT m FROM mx)
-                        THEN 'a' ELSE 'b' END AS half, text
-            FROM documents
-        ), toks AS (
-            SELECT half,
-                   unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS token
-            FROM halves
-        ), counts AS (
-            SELECT half, token, count(*) AS c FROM toks GROUP BY 1, 2
-        ), top AS (
-            SELECT half, token,
-                   row_number() OVER (PARTITION BY half
-                       ORDER BY c DESC, token) AS rk
-            FROM counts
-        ), sel AS (SELECT half, token FROM top WHERE rk <= 100),
-        m AS (
-            SELECT token,
-                   max(CASE WHEN half = 'a' THEN 1 ELSE 0 END) AS ia,
-                   max(CASE WHEN half = 'b' THEN 1 ELSE 0 END) AS ib
-            FROM sel GROUP BY 1
-        )
-        SELECT CAST(100 AS BIGINT) AS k,
-               CAST(sum(ia) AS BIGINT) AS n_top_a,
-               CAST(sum(ib) AS BIGINT) AS n_top_b,
-               CAST(sum(ia * ib) AS BIGINT) AS n_common,
-               CASE WHEN sum(ia) + sum(ib) - sum(ia * ib) > 0 THEN
-                   CAST((CAST(sum(ia * ib) AS HUGEINT) * 1000000)
-                        // (sum(ia) + sum(ib) - sum(ia * ib))
-                        AS BIGINT)
-               END AS jaccard_e6
-        FROM m
-    """
-    o["coverage_curve"] = r"""
-        WITH toks AS (
-            SELECT unnest(list_filter(
-                       string_split_regex(trim(text), '\s+'),
-                       x -> x <> '')) AS tok
-            FROM documents
-        ), c AS (SELECT tok, count(*) AS c FROM toks GROUP BY 1),
-        r AS (
-            SELECT tok, c,
-                   row_number() OVER (ORDER BY c DESC, tok) AS rank
-            FROM c
-        ), tot AS (SELECT CAST(sum(c) AS HUGEINT) AS total FROM c),
-        ks(k) AS (VALUES (10), (100), (1000))
-        SELECT CAST(ks.k AS BIGINT) AS k,
-               CAST(count(*) AS BIGINT) AS n_types,
-               CAST(sum(r.c) AS BIGINT) AS covered,
-               CAST(max(t.total) AS BIGINT) AS total,
-               CAST((CAST(sum(r.c) AS HUGEINT) * 1000000)
-                    // max(t.total) AS BIGINT) AS mass_e6
-        FROM r, ks, tot t
-        WHERE r.rank <= ks.k
-        GROUP BY ks.k
-    """
-    _zv2 = zvalue_sql("x", "y", bits=16)
-
-    def _audit_block(base: str, label: str) -> str:
-        # base must be a CTE name providing (f, v); predicate [10, 20]
-        return f"""
-        SELECT '{label}' AS layout,
-               CAST(n_files AS BIGINT) AS n_files,
-               CAST(files_scanned AS BIGINT) AS files_scanned,
-               CAST(n_files - files_scanned AS BIGINT) AS files_pruned,
-               CAST(rows_total AS BIGINT) AS rows_total,
-               CAST(rows_scanned AS BIGINT) AS rows_scanned,
-               CAST(rows_matching AS BIGINT) AS rows_matching,
-               CAST(((n_files - files_scanned) * 1000000) // n_files
-                    AS BIGINT) AS prune_frac_e6,
-               CASE WHEN rows_matching > 0
-                    THEN CAST((rows_scanned * 1000000) // rows_matching
-                              AS BIGINT) END AS read_amp_e6
-        FROM (
-            SELECT CAST(count(*) AS HUGEINT) AS n_files,
-                   CAST(sum(CASE WHEN vmax >= 10 AND vmin <= 20
-                                 THEN 1 ELSE 0 END) AS HUGEINT)
-                       AS files_scanned,
-                   sum(CAST(n_rows AS HUGEINT)) AS rows_total,
-                   sum(CASE WHEN vmax >= 10 AND vmin <= 20
-                            THEN CAST(n_rows AS HUGEINT) ELSE 0 END)
-                       AS rows_scanned,
-                   sum(CAST(n_match AS HUGEINT)) AS rows_matching
-            FROM (
-                SELECT f, count(*) AS n_rows,
-                       sum(CASE WHEN v BETWEEN 10 AND 20
-                                THEN 1 ELSE 0 END) AS n_match,
-                       min(v) AS vmin, max(v) AS vmax
-                FROM {base} GROUP BY 1
-            )
-        )"""
-
-    o["layout_compare"] = f"""
-        WITH ev AS (
-            SELECT event_id, user_id AS x,
-                   CAST(floor(value) AS BIGINT) AS y
-            FROM events
-        ),
-        zx AS (SELECT event_id, y, {_zv2} AS zval FROM ev),
-        zext AS (SELECT min(zval) AS zmin, max(zval) AS zmax FROM zx),
-        yext AS (SELECT min(y) AS ymin, max(y) AS ymax FROM ev),
-        bk AS (SELECT event_id // 5000 AS f, y AS v FROM ev),
-        bz AS (SELECT CAST(floor(((zval - zmin) * 16)
-                                 / (zmax - zmin + 1)) AS BIGINT) AS f,
-                      y AS v
-               FROM zx, zext),
-        bv AS (SELECT ((y - ymin) * 16) // (ymax - ymin + 1) AS f,
-                      y AS v
-               FROM ev, yext)
-        {_audit_block('bk', 'key')}
-        UNION ALL {_audit_block('bz', 'zorder')}
-        UNION ALL {_audit_block('bv', 'value')}
-    """
-    o["time_split"] = """
-        WITH base AS (
-            SELECT epoch_us(ts) AS us FROM events
-        ), rng AS (SELECT min(us) AS tmin, max(us) AS tmax FROM base),
-        lab AS (
-            SELECT CASE
-                WHEN us < tmin + ((tmax - tmin) * 80) // 100
-                    THEN 'train'
-                WHEN us < tmin + ((tmax - tmin) * 82) // 100
-                    THEN 'embargo'
-                ELSE 'test' END AS split, us
-            FROM base, rng
-        )
-        SELECT split, CAST(count(*) AS BIGINT) AS n,
-               CAST(min(us) AS BIGINT) AS first_us,
-               CAST(max(us) AS BIGINT) AS last_us
-        FROM lab GROUP BY 1
-    """
-    o["ctx_fit"] = r"""
-        WITH base AS (
-            SELECT CASE WHEN trim(text) = '' THEN 0
-                   ELSE len(string_split_regex(trim(text), '\s+'))
-                   END AS t
-            FROM documents
-        ), ks(cut) AS (VALUES (16), (64), (256))
-        SELECT CAST(cut AS BIGINT) AS cut,
-               CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(CASE WHEN t <= cut THEN 1 ELSE 0 END)
-                    AS BIGINT) AS n_fit,
-               CAST((CAST(sum(CASE WHEN t <= cut THEN 1 ELSE 0 END)
-                          AS HUGEINT) * 1000000) // count(*)
-                    AS BIGINT) AS fit_e6,
-               CAST(sum(t) AS BIGINT) AS tokens_total,
-               CAST(sum(least(t, cut)) AS BIGINT) AS tokens_kept,
-               CASE WHEN sum(t) > 0 THEN
-                   CAST((CAST(sum(t) - sum(least(t, cut)) AS HUGEINT)
-                         * 1000000) // sum(t) AS BIGINT)
-               END AS loss_e6
-        FROM base, ks GROUP BY 1
-    """
-    o["fertility"] = r"""
-        WITH base AS (
-            SELECT source AS "group",
-                   CASE WHEN trim(text) = '' THEN 0
-                        ELSE len(string_split_regex(trim(text),
-                                                    '\s+')) END AS w,
-                   len(regexp_extract_all(
-                       text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS p
-            FROM documents
-        )
-        SELECT "group", CAST(count(*) AS BIGINT) AS n_docs,
-               CAST(sum(w) AS BIGINT) AS words,
-               CAST(sum(p) AS BIGINT) AS pre_tokens,
-               CASE WHEN sum(w) > 0 THEN
-                   CAST((CAST(sum(p) AS HUGEINT) * 1000000) // sum(w)
-                        AS BIGINT)
-               END AS fertility_e6
-        FROM base GROUP BY 1
-    """
-    o["max_run"] = r"""
-        WITH words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), toks AS (
-            SELECT doc_id, ws[i] AS tok, i - 1 AS pos
-            FROM words, unnest(range(1, len(ws) + 1)) AS u(i)
-        ), isl AS (
-            SELECT doc_id, tok, pos,
-                   row_number() OVER (PARTITION BY doc_id
-                                      ORDER BY pos)
-                   - row_number() OVER (PARTITION BY doc_id, tok
-                                        ORDER BY pos) AS g
-            FROM toks
-        ), runs AS (
-            SELECT doc_id, tok, g, count(*) AS run,
-                   min(pos) AS start
-            FROM isl GROUP BY 1, 2, 3
-        ), best AS (
-            SELECT doc_id, run, tok, start,
-                   row_number() OVER (PARTITION BY doc_id
-                       ORDER BY run DESC, tok, start) AS rk
-            FROM runs
-        )
-        SELECT d.doc_id,
-               CAST(coalesce(b.run, 0) AS BIGINT) AS max_run,
-               b.tok AS run_token,
-               CAST(b.start AS BIGINT) AS run_start
-        FROM documents d
-        LEFT JOIN (SELECT * FROM best WHERE rk = 1) b USING (doc_id)
-    """
-    o["dedup_agreement"] = f"""
-        WITH simp AS ({o["dedup_simhash"]}),
-        jacp AS ({_jaccard_oracle(_JACCARD_TRIGRAM_CTE, 0.7)}),
-        tags AS (
-            SELECT id_a, id_b, 1 AS ia, 0 AS ib FROM simp
-            UNION ALL
-            SELECT id_a, id_b, 0 AS ia, 1 AS ib FROM jacp
-        ), m AS (
-            SELECT id_a, id_b, max(ia) AS ia, max(ib) AS ib
-            FROM tags GROUP BY 1, 2
-        )
-        SELECT CAST(sum(ia) AS BIGINT) AS n_simhash,
-               CAST(sum(ib) AS BIGINT) AS n_jaccard3,
-               CAST(sum(ia * ib) AS BIGINT) AS n_common,
-               CASE WHEN sum(ia) + sum(ib) - sum(ia * ib) > 0 THEN
-                   CAST((CAST(sum(ia * ib) AS HUGEINT) * 1000000)
-                        // (sum(ia) + sum(ib) - sum(ia * ib))
-                        AS BIGINT)
-               END AS agree_e6
-        FROM m
-    """
-    o["bloom_fpr"] = r"""
-        WITH words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), g AS (
-            SELECT DISTINCT doc_id,
-                   unnest(CASE WHEN len(ws) >= 8
-                               THEN [array_to_string(ws[j:j+7], ' ')
-                                     for j in range(1, len(ws) - 6)]
-                               ELSE CAST([] AS VARCHAR[]) END) AS gram
-            FROM words
-        ), mem AS (
-            SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0
-        ), pos AS (
-            SELECT DISTINCT
-                   ('0x' || substr(md5(gram), 1 + 8*j, 8))::BIGINT
-                   % 65536 AS p
-            FROM mem, unnest([0, 1, 2]) t(j)
-        ), probes AS (
-            SELECT DISTINCT gram FROM g
-            WHERE doc_id % 97 <> 0
-              AND gram NOT IN (SELECT gram FROM mem)
-        ), hits AS (
-            SELECT gram,
-                   (('0x' || substr(md5(gram), 1, 8))::BIGINT % 65536)
-                       IN (SELECT p FROM pos)
-                   AND (('0x' || substr(md5(gram), 9, 8))::BIGINT
-                        % 65536) IN (SELECT p FROM pos)
-                   AND (('0x' || substr(md5(gram), 17, 8))::BIGINT
-                        % 65536) IN (SELECT p FROM pos) AS hit
-            FROM probes
-        )
-        SELECT CAST(65536 AS BIGINT) AS m_bits, CAST(3 AS BIGINT) AS k,
-               (SELECT CAST(count(*) AS BIGINT) FROM mem) AS n_members,
-               CAST(count(*) AS BIGINT) AS n_probes,
-               CAST(coalesce(sum(CASE WHEN hit THEN 1 ELSE 0 END), 0)
-                    AS BIGINT) AS n_fp,
-               CASE WHEN count(*) > 0 THEN
-                   CAST((CAST(coalesce(sum(CASE WHEN hit THEN 1
-                                            ELSE 0 END), 0) AS HUGEINT)
-                         * 1000000) // count(*) AS BIGINT)
-               END AS fpr_e6
-        FROM hits
-    """
-    o["hash_collisions"] = r"""
-        WITH words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), toks AS (
-            SELECT DISTINCT
-                   unnest(CASE WHEN len(ws) >= 2
-                               THEN [array_to_string(ws[j:j+1], ' ')
-                                     for j in range(1, len(ws))]
-                               ELSE CAST([] AS VARCHAR[]) END) AS token
-            FROM words
-        ), hs AS (
-            SELECT ('0x' || substr(md5(token), 1, 15))::BIGINT AS h
-            FROM toks
-        ), ws(n_buckets) AS (VALUES (256), (1024), (4096)),
-        cells AS (
-            SELECT n_buckets, h % n_buckets AS b, count(*) AS c
-            FROM hs, ws GROUP BY 1, 2
-        )
-        SELECT CAST(n_buckets AS BIGINT) AS n_buckets,
-               CAST(sum(c) AS BIGINT) AS n_tokens,
-               CAST(count(*) AS BIGINT) AS occupied,
-               CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END) AS BIGINT)
-                   AS colliding,
-               CAST((CAST(sum(CASE WHEN c >= 2 THEN c ELSE 0 END)
-                          AS HUGEINT) * 1000000) // sum(c) AS BIGINT)
-                   AS collision_e6,
-               CAST(max(c) AS BIGINT) AS max_load
-        FROM cells GROUP BY 1
-    """
-    o["ann_recall"] = f"""
-        WITH ex AS ({o["sim_cosine_topk"]}),
-        ls AS ({o["sim_cosine_lsh"]}),
-        tags AS (
-            SELECT query_id, neighbor_id, 1 AS ie, 0 AS il FROM ex
-            UNION ALL
-            SELECT query_id, neighbor_id, 0 AS ie, 1 AS il FROM ls
-        ), m AS (
-            SELECT query_id, neighbor_id,
-                   max(ie) AS ie, max(il) AS il
-            FROM tags GROUP BY 1, 2
-        )
-        SELECT query_id,
-               CAST(sum(ie) AS BIGINT) AS n_exact,
-               CAST(sum(il) AS BIGINT) AS n_lsh,
-               CAST(sum(ie * il) AS BIGINT) AS n_hit,
-               CASE WHEN sum(ie) > 0 THEN
-                   CAST((CAST(sum(ie * il) AS HUGEINT) * 1000000)
-                        // sum(ie) AS BIGINT)
-               END AS recall_e6
-        FROM m GROUP BY 1
-    """
-    o["split_leak_near"] = f"""
-        WITH ph AS ({o["dedup_simhash"]}),
-        sp AS ({o["hash_split"]}),
-        tagged AS (
-            SELECT least(sa.split, sb.split) AS split_a,
-                   greatest(sa.split, sb.split) AS split_b
-            FROM ph
-            JOIN sp sa ON ph.id_a = sa.doc_id
-            JOIN sp sb ON ph.id_b = sb.doc_id
-        ), agg AS (
-            SELECT split_a, split_b, CAST(count(*) AS BIGINT) AS n_pairs
-            FROM tagged GROUP BY 1, 2
-        )
-        SELECT split_a, split_b, n_pairs,
-               CAST((CAST(n_pairs AS HUGEINT) * 1000000)
-                    // (SUM(n_pairs) OVER ()) AS BIGINT) AS share_e6
-        FROM agg
-    """
-    o["minhash_err"] = f"""
-        WITH mh_all AS ({o["dedup_minhash"]}),
-        mh AS (
-            SELECT * FROM mh_all
-            WHERE substr(md5(CAST(id_a AS VARCHAR) || ':'
-                             || CAST(id_b AS VARCHAR)), 1, 1) = '0'
-        ),
-        {_JACCARD_WORDSET_CTE},
-        sz AS (
-            SELECT doc_id, count(*) AS n FROM toks_ne GROUP BY 1
-        ), ix AS (
-            SELECT mh.id_a, mh.id_b, count(*) AS inter
-            FROM mh
-            JOIN toks_ne ta ON ta.doc_id = mh.id_a
-            JOIN toks_ne tb ON tb.doc_id = mh.id_b
-                           AND tb.token = ta.token
-            GROUP BY 1, 2
-        ), per AS (
-            SELECT CAST(mh.est_jaccard * 1000000 AS BIGINT)
-                   - CAST((CAST(coalesce(ix.inter, 0) AS HUGEINT)
-                           * 1000000)
-                          // (za.n + zb.n - coalesce(ix.inter, 0))
-                       AS BIGINT) AS err
-            FROM mh
-            LEFT JOIN ix ON ix.id_a = mh.id_a AND ix.id_b = mh.id_b
-            JOIN sz za ON za.doc_id = mh.id_a
-            JOIN sz zb ON zb.doc_id = mh.id_b
-        )
-        SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-               CAST(max(abs(err)) AS BIGINT) AS max_abs_err_e6,
-               CAST(coalesce(sum(CASE WHEN err > 0 THEN 1 ELSE 0 END), 0)
-                    AS BIGINT) AS n_over,
-               CAST(coalesce(sum(CASE WHEN err < 0 THEN 1 ELSE 0 END), 0)
-                    AS BIGINT) AS n_under,
-               CASE WHEN count(*) > 0 THEN
-                   CAST(CAST(coalesce(sum(abs(err)), 0) AS HUGEINT)
-                        // count(*) AS BIGINT)
-               END AS mean_abs_err_e6
-        FROM per
-    """
-    o["emb_gram"] = """
-        WITH vq AS (
-            SELECT vec_id,
-                   list_transform(embedding, x ->
-                       CAST(floor(CAST(x AS DOUBLE) * 4096) AS BIGINT))
-                   AS q
-            FROM embeddings
-        ), ex AS (
-            SELECT vec_id, i, q[CAST(i AS INT)] AS v
-            FROM vq, range(1, 17) r(i)
-        )
-        SELECT CAST(a.i - 1 AS BIGINT) AS i, CAST(b.i - 1 AS BIGINT) AS j,
-               CAST(SUM(CAST(a.v AS HUGEINT) * b.v) AS BIGINT) AS gram
-        FROM ex a JOIN ex b ON a.vec_id = b.vec_id AND b.i >= a.i
-        GROUP BY 1, 2
-    """
-    o["avg_precision"] = """
-        WITH s AS (
-            SELECT event_id AS i,
-                   CAST(floor(value * 100) AS BIGINT) AS v,
-                   CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                       AS y
-            FROM events
-            WHERE event_type IN ('click', 'purchase')
-        ), r AS (
-            SELECT y,
-                   row_number() OVER (ORDER BY v DESC, i) AS k,
-                   SUM(y) OVER (ORDER BY v DESC, i
-                                ROWS UNBOUNDED PRECEDING) AS cp
-            FROM s
-        )
-        SELECT CAST(count(*) AS BIGINT) AS n,
-               CAST(sum(y) AS BIGINT) AS n_pos,
-               CASE WHEN sum(y) > 0 THEN
-                   CAST(sum(CASE WHEN y = 1 THEN
-                            (CAST(cp AS HUGEINT) * 1000000) // k END)
-                        // sum(y) AS BIGINT)
-               END AS ap_e6
-        FROM r
-    """
-    from frogocr_spark.operators.textstats import ir_eval_oracle_sql
-    o["ir_eval"] = ir_eval_oracle_sql(BM25_QUERIES)
-    o["group_effects"] = """
-        WITH per AS (
-            SELECT event_type AS "group", count(*) AS n,
-                   sum(CAST(floor(value * 100) AS BIGINT)) AS total
-            FROM events GROUP BY 1
-        ), grand AS (
-            SELECT CAST(sum(n) AS HUGEINT) AS gn,
-                   CAST(sum(total) AS HUGEINT) AS gs
-            FROM per
-        )
-        SELECT "group", CAST(n AS BIGINT) AS n,
-               CAST(total AS BIGINT) AS total,
-               CAST((CAST(total AS HUGEINT) * 1000000) // n AS BIGINT)
-                   AS mean_e6,
-               CAST((CAST(total AS HUGEINT) * 1000000) // n
-                    - (gs * 1000000) // gn AS BIGINT) AS delta_e6
-        FROM per, grand
-    """
-    from frogocr_spark.operators.clustering import dbscan_oracle_sql
-    o["dbscan"] = dbscan_oracle_sql(
-        f"""SELECT c_custkey AS id,
-                   CAST(('0x' || substr(md5('x:' ||
-                        CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % {_SPATIAL_GRID} AS x,
-                   CAST(('0x' || substr(md5('y:' ||
-                        CAST(c_custkey AS VARCHAR)), 1, 15)) AS BIGINT)
-                       % {_SPATIAL_GRID} AS y
-            FROM customer WHERE c_mktsegment = 'BUILDING'""",
-        _SPATIAL_RADIUS, _DBSCAN_MIN_PTS)
-    from frogocr_spark.operators.similarity import (
-        power_iteration_oracle_sql)
-    o["spectral"] = power_iteration_oracle_sql(
-        "SELECT embedding FROM embeddings", use_dims=16, iters=4)
-    from frogocr_spark.operators.similarity import (
-        power_iteration_top2_oracle_sql)
-    o["spectral2"] = power_iteration_top2_oracle_sql(
-        "SELECT embedding FROM embeddings", use_dims=16, iters=4)
-    from frogocr_spark.operators.dedup import (
-        edit_distance_pairs_oracle_sql)
-    o["dedup_edit"] = edit_distance_pairs_oracle_sql(
-        "SELECT doc_id, text FROM documents",
-        max_dist=_EDIT_MAX_DIST, key_len=12, window=_SNM_WINDOW)
-    from frogocr_spark.operators.layout import compaction_plan_oracle_sql
-    o["compaction_plan"] = compaction_plan_oracle_sql(
-        "SELECT source, doc_id, n_chars FROM documents",
-        target=_COMPACT_TARGET)
-    # src_line_dedup: same deterministic multi-line composition; the
-    # template set is per-source count(DISTINCT doc) >= 3 on trimmed
-    # non-empty lines; DuckDB strips via list_filter against the
-    # source's template LIST (order-preserving — no positional
-    # bookkeeping needed), which is value-equivalent to the Spark
-    # side's distributed (source, line)-keyed join + pos re-sort
-    o["src_line_dedup"] = r"""
-        WITH aug AS (
-            SELECT doc_id, source,
-                   text || chr(10) || chr(10) || '(c) ' || source
-                   || ' | all rights reserved'
-                   || CASE WHEN doc_id % 2 = 0
-                           THEN chr(10) || 'Navigation: home | about | '
-                                || source ELSE '' END
-                   || CASE WHEN doc_id % 7 = 0
-                           THEN chr(10) || 'Unique closing remark '
-                                || CAST(doc_id AS VARCHAR) || '.'
-                           ELSE '' END AS text
-            FROM documents
-        ), l AS (
-            SELECT doc_id, source,
-                   string_split(text, chr(10)) AS ls
-            FROM aug
-        ), x AS (
-            SELECT doc_id, source, unnest(ls) AS line FROM l
-        ), tmpl AS (
-            SELECT source, trim(line) AS t
-            FROM x WHERE trim(line) <> ''
-            GROUP BY source, trim(line)
-            HAVING count(DISTINCT doc_id) >= 3
-        ), tl AS (
-            SELECT source, list(t) AS ts FROM tmpl GROUP BY source
-        ), k AS (
-            SELECT l.doc_id, l.source, l.ls,
-                   list_filter(l.ls, y -> NOT list_contains(
-                       coalesce(tl.ts, CAST([] AS VARCHAR[])),
-                       trim(y))) AS kept
-            FROM l LEFT JOIN tl ON l.source = tl.source
-        )
-        SELECT doc_id, source,
-               CAST(len(ls) AS INT) AS n_lines,
-               CAST(len(ls) - len(kept) AS INT) AS n_stripped,
-               array_to_string(kept, chr(10)) AS kept_text
-        FROM k
-    """
-    # para_dedup: same deterministic multi-paragraph composition; the
-    # owner of each trimmed paragraph is min(struct(doc_id, pos)) —
-    # DuckDB compares named structs lexicographically exactly like
-    # Spark — and string_agg(... ORDER BY pos) skips the dropped
-    # (NULLed) paragraphs just like collect_list
-    _news = "Subscribe to the newsletter today"
-    o["para_dedup"] = f"""
-        WITH aug AS (
-            SELECT doc_id,
-                   text || chr(10) || chr(10) || 'Shared footer for '
-                   || source || ' | courtesy note'
-                   || CASE WHEN doc_id % 5 = 0
-                           THEN chr(10) || chr(10) || '{_news}'
-                           ELSE '' END
-                   || CASE WHEN doc_id % 10 = 0
-                           THEN chr(10) || chr(10) || '{_news}'
-                           ELSE '' END
-                   || CASE WHEN doc_id % 7 = 0
-                           THEN chr(10) || chr(10) || 'Unique remark '
-                                || CAST(doc_id AS VARCHAR) || '.'
-                           ELSE '' END AS text
-            FROM documents
-        ), l AS (
-            SELECT doc_id,
-                   string_split(text, chr(10) || chr(10)) AS ps
-            FROM aug
-        ), x AS (
-            SELECT doc_id, unnest(ps) AS para,
-                   generate_subscripts(ps, 1) AS pos
-            FROM l
-        ), own AS (
-            SELECT trim(para) AS t,
-                   min({{'d': doc_id, 'p': pos}}) AS o
-            FROM x WHERE trim(para) <> ''
-            GROUP BY trim(para)
-        ), k AS (
-            SELECT x.doc_id, x.pos, x.para,
-                   (own.t IS NULL
-                    OR (struct_extract(own.o, 'd') = x.doc_id
-                        AND struct_extract(own.o, 'p') = x.pos)) AS keep
-            FROM x LEFT JOIN own ON trim(x.para) = own.t
-        )
-        SELECT doc_id, CAST(count(*) AS INT) AS n_paras,
-               CAST(sum(CASE WHEN keep THEN 0 ELSE 1 END) AS INT)
-                   AS n_dropped,
-               coalesce(string_agg(CASE WHEN keep THEN para END,
-                                   chr(10) || chr(10) ORDER BY pos),
-                        '') AS kept_text
-        FROM k GROUP BY doc_id
-    """
-    _bl = ", ".join(f"'{w}'" for w in sorted(set(_BLOCKLIST)))
-    o["blockwords"] = rf"""
-        WITH t AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(
-                       lower(trim(coalesce(text, ''))), '\s+'),
-                       x -> x <> '') AS ts
-            FROM documents
-        ), b AS (
-            SELECT doc_id, ts,
-                   list_filter(ts, x -> x IN ({_bl})) AS bs
-            FROM t
-        )
-        SELECT doc_id, CAST(len(ts) AS INT) AS n_tokens,
-               CAST(len(bs) AS INT) AS n_blocked,
-               CAST(len(list_distinct(bs)) AS INT) AS n_blocked_distinct,
-               len(bs) = 0 AS keep
-        FROM b
-    """
-    # uniq_lines: same composition; DuckDB's 1-based list_filter index
-    # with direct l[i-1] access is the formulation twin of Spark's
-    # 0-based filter + 1-based element_at
-    o["uniq_lines"] = """
-        WITH aug AS (
-            SELECT doc_id,
-                   text
-                   || CASE WHEN doc_id % 3 = 0
-                           THEN chr(10) || 'loop line'
-                                || chr(10) || 'loop line'
-                           ELSE '' END
-                   || CASE WHEN doc_id % 5 = 0
-                           THEN chr(10) || 'separator'
-                                || chr(10) || 'loop line'
-                           ELSE '' END AS text
-            FROM documents
-        ), l AS (
-            SELECT doc_id, string_split(text, chr(10)) AS ls FROM aug
-        ), k AS (
-            SELECT doc_id, ls,
-                   list_filter(ls, (x, i) -> i = 1 OR x <> ls[i - 1])
-                       AS kept
-            FROM l
-        )
-        SELECT doc_id, CAST(len(ls) AS INT) AS n_lines,
-               CAST(len(ls) - len(kept) AS INT) AS n_collapsed,
-               array_to_string(kept, chr(10)) AS cleaned_text
-        FROM k
-    """
-    # gate_funnel: same gate fragments as the curate oracle (lang/
-    # quality/length) + the blockwords token hit; first-fail CASE
-    # charges each doc to its first failing gate, running arithmetic
-    # builds the stage rows
-    _gf_blocked = (r"len(list_filter(string_split_regex("
-                   r"lower(trim(coalesce(text, ''))), '\s+'), "
-                   f"x -> x <> '' AND x IN ({_bl}))) > 0")
-    o["gate_funnel"] = f"""
-        WITH stats AS (
-            SELECT CASE WHEN {n_tokens} = 0 THEN 'xx'
-                        WHEN {en_hits} >= {no_hits}
-                             AND {en_hits} * 50 >= {n_tokens} THEN 'en'
-                        WHEN {no_hits} > {en_hits}
-                             AND {no_hits} * 50 >= {n_tokens} THEN 'no'
-                        ELSE 'xx' END AS lang_id,
-                   round((
-                       least(length(trim(text)) / 500.0, 1.0)
-                       + CASE WHEN length(trim(text)) > 0
-                              THEN CAST(length(regexp_replace(trim(text),
-                                   '[^A-Za-z]', '', 'g')) AS DOUBLE)
-                                   / length(trim(text))
-                              ELSE 0.0 END
-                       + CASE WHEN {n_tokens} > 0
-                                   AND length(trim(text)) * 1.0
-                                       / {n_tokens} >= 3
-                                   AND length(trim(text)) * 1.0
-                                       / {n_tokens} <= 12
-                              THEN 1.0 ELSE 0.5 END
-                   ) / 3.0, 6) AS quality,
-                   CAST({n_tokens} AS INT) AS n_tokens,
-                   {_gf_blocked} AS blocked
-            FROM documents
-        ), f AS (
-            SELECT CASE WHEN lang_id <> 'en' THEN 'lang'
-                        WHEN quality < 0.5 THEN 'quality'
-                        WHEN n_tokens < 5 THEN 'length'
-                        WHEN blocked THEN 'blocklist'
-                        ELSE 'kept' END AS g
-            FROM stats
-        ), a AS (
-            -- BIGINT casts here so the UNION ALL's arithmetic stays
-            -- int64 (DuckDB sum() is HUGEINT -> float64 in pandas)
-            SELECT CAST(count(*) AS BIGINT) AS t,
-                   CAST(sum(CASE WHEN g = 'lang' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS d0,
-                   CAST(sum(CASE WHEN g = 'quality' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS d1,
-                   CAST(sum(CASE WHEN g = 'length' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS d2,
-                   CAST(sum(CASE WHEN g = 'blocklist' THEN 1 ELSE 0 END)
-                        AS BIGINT) AS d3
-            FROM f
-        )
-        SELECT CAST(0 AS INT) AS stage_idx, 'lang' AS stage,
-               t AS n_in, d0 AS n_dropped, t - d0 AS n_out FROM a
-        UNION ALL SELECT 1, 'quality', t - d0, d1, t - d0 - d1 FROM a
-        UNION ALL SELECT 2, 'length', t - d0 - d1, d2,
-                         t - d0 - d1 - d2 FROM a
-        UNION ALL SELECT 3, 'blocklist', t - d0 - d1 - d2, d3,
-                         t - d0 - d1 - d2 - d3 FROM a
-    """
-    # source_overlap: grouped KMV oracle — per-source distinct 3-gram
-    # hash list, k smallest + theta, pairwise cross join (s_a < s_b),
-    # then the identical theta-cut estimator as kmv_setops (HUGEINT
-    # truncating division)
-    _m60 = 1 << 60
-    o["source_overlap"] = rf"""
-        WITH words AS (
-            SELECT source,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws
-            FROM documents
-        ), grams AS (
-            SELECT source,
-                   unnest(CASE WHEN len(ws) >= {_OVL_N}
-                               THEN [array_to_string(
-                                        ws[j:j+{_OVL_N - 1}], ' ')
-                                     for j in range(1,
-                                         len(ws) - {_OVL_N - 2})]
-                               ELSE CAST([] AS VARCHAR[]) END) AS gram
-            FROM words
-        ), h AS (
-            SELECT DISTINCT source,
-                   CAST(('0x' || substr(md5(gram), 1, 15)) AS BIGINT)
-                       AS h
-            FROM grams
-        ), r AS (
-            SELECT source, h,
-                   row_number() OVER (PARTITION BY source ORDER BY h)
-                       AS rn
-            FROM h
-        ), s AS (
-            SELECT source, list_sort(list(h)) AS mins
-            FROM r WHERE rn <= {_OVL_K} GROUP BY source
-        ), t AS (
-            SELECT source, mins,
-                   CASE WHEN len(mins) < {_OVL_K} THEN {_m60}
-                        ELSE mins[{_OVL_K}] END AS theta
-            FROM s
-        ), pairx AS (
-            SELECT a.source AS grp_a, b.source AS grp_b,
-                   a.mins AS ka, b.mins AS kb,
-                   least(a.theta, b.theta) AS theta
-            FROM t a JOIN t b ON a.source < b.source
-        ), cutx AS (
-            SELECT grp_a, grp_b, theta,
-                   list_filter(ka, x -> x < theta) AS ca,
-                   list_filter(kb, x -> x < theta) AS cb
-            FROM pairx
-        ), cnts AS (
-            SELECT grp_a, grp_b, theta,
-                   len(ca) AS na, len(cb) AS nb,
-                   len(list_distinct(list_concat(ca, cb))) AS nu,
-                   len(list_intersect(ca, cb)) AS ni
-            FROM cutx
-        )
-        SELECT grp_a, grp_b,
-               CAST((CAST(na AS HUGEINT) * {_m60}) // theta AS BIGINT)
-                   AS est_a,
-               CAST((CAST(nb AS HUGEINT) * {_m60}) // theta AS BIGINT)
-                   AS est_b,
-               CAST((CAST(nu AS HUGEINT) * {_m60}) // theta AS BIGINT)
-                   AS est_union,
-               CAST((CAST(ni AS HUGEINT) * {_m60}) // theta AS BIGINT)
-                   AS est_intersect,
-               CAST((CAST(ni AS HUGEINT) * 1000000) // nu AS BIGINT)
-                   AS jaccard_e6,
-               CAST(theta AS BIGINT) AS theta
-        FROM cnts
-    """
-    # shard_manifest: the oracle recomputes the global md5 shuffle order
-    # with a literal row_number window — the hash match proves the
-    # range-partition + broadcast-offset global_rank equivalent
-    o["shard_manifest"] = f"""
-        WITH r AS (
-            SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS k,
-                   row_number() OVER (
-                       ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id)
-                       AS rk
-            FROM documents
-        )
-        SELECT CAST((rk - 1) % {_N_SHARDS} AS INT) AS shard,
-               count(*) AS n_rows,
-               CAST(CAST(sum(CAST(('0x' || substr(k, 1, 15)) AS BIGINT))
-                         AS DECIMAL(38,0)) AS VARCHAR) AS checksum,
-               min(doc_id) AS id_min, max(doc_id) AS id_max
-        FROM r GROUP BY 1
-    """
-    from frogocr_spark.operators.quality import t_closeness_oracle_sql
-    o["t_closeness"] = t_closeness_oracle_sql(
-        "SELECT epoch_us(ts) // 86400000000 AS day, event_type "
-        "FROM events",
-        [("day", "day")], "event_type", t_e6=300_000)
-    # Fleiss' kappa over the three curate gates as binary raters —
-    # same stats CTE as the curate oracle; HUGEINT finish replays the
-    # multiplied-through formula with DuckDB // (truncating, = _tdiv)
-    o["fleiss"] = f"""
-        WITH stats AS (
-            SELECT CAST({n_tokens} AS INT) AS n_tokens,
-                   CASE WHEN {n_tokens} = 0 THEN 'xx'
-                        WHEN {en_hits} >= {no_hits}
-                             AND {en_hits} * 50 >= {n_tokens} THEN 'en'
-                        WHEN {no_hits} > {en_hits}
-                             AND {no_hits} * 50 >= {n_tokens} THEN 'no'
-                        ELSE 'xx' END AS lang_id,
-                   round((
-                       least(length(trim(text)) / 500.0, 1.0)
-                       + CASE WHEN length(trim(text)) > 0
-                              THEN CAST(length(regexp_replace(trim(text),
-                                   '[^A-Za-z]', '', 'g')) AS DOUBLE)
-                                   / length(trim(text))
-                              ELSE 0.0 END
-                       + CASE WHEN {n_tokens} > 0
-                                   AND length(trim(text)) * 1.0
-                                       / {n_tokens} >= 3
-                                   AND length(trim(text)) * 1.0
-                                       / {n_tokens} <= 12
-                              THEN 1.0 ELSE 0.5 END
-                   ) / 3.0, 6) AS quality
-            FROM documents
-        ), votes AS (
-            SELECT CAST(CASE WHEN lang_id = 'en' THEN 1 ELSE 0 END
-                        + CASE WHEN quality >= 0.5 THEN 1 ELSE 0 END
-                        + CASE WHEN n_tokens >= 5 THEN 1 ELSE 0 END
-                        AS HUGEINT) AS k
-            FROM stats
-        ), agg AS (
-            SELECT CAST(count(*) AS HUGEINT) AS n,
-                   CAST(sum(k) AS HUGEINT) AS kk,
-                   CAST(sum(k * k + (3 - k) * (3 - k)) AS HUGEINT) AS a
-            FROM votes
-        ), fin AS (
-            SELECT n, kk, a, 3 * n - kk AS d FROM agg
-        )
-        SELECT CAST(n AS BIGINT) AS n_docs,
-               CAST(3 AS BIGINT) AS n_raters,
-               CAST((a - n * 3) * 1000000 // (n * 6) AS BIGINT)
-                   AS pbar_e6,
-               CAST((kk * kk + d * d) * 1000000 // (9 * n * n)
-                   AS BIGINT) AS pe_e6,
-               CAST(CASE WHEN 2 * (9 * n * n - kk * kk - d * d) = 0
-                         THEN 1000000
-                         ELSE ((a - n * 3) * 3 * n
-                               - 2 * (kk * kk + d * d)) * 1000000
-                              // (2 * (9 * n * n - kk * kk - d * d))
-                    END AS BIGINT) AS kappa_e6
-        FROM fin
-    """
-    from frogocr_spark.operators.analytics import (
-        ivm_group_counts_oracle_sql)
-    _ivm_base = ("SELECT event_type AS g, "
-                 "CAST(round(value * 100, 0) AS BIGINT) AS v "
-                 "FROM events")
-    _ivm_delta = (
-        "SELECT 'D' AS op, event_type AS g, "
-        "CAST(round(value * 100, 0) AS BIGINT) AS v "
-        "FROM events WHERE event_id % 17 = 0 "
-        "UNION ALL "
-        "SELECT 'I', event_type, "
-        "CAST(round(value * 100, 0) AS BIGINT) + 7 "
-        "FROM events WHERE event_id % 13 = 0")
-    o["ivm_counts"] = f"""
-        WITH view AS ({ivm_group_counts_oracle_sql(_ivm_base,
-                                                   _ivm_delta,
-                                                   "event_type")}),
-        rec AS (
-            SELECT g AS event_type,
-                   CAST(count(*) AS BIGINT) AS n_rec,
-                   CAST(sum(v) AS BIGINT) AS sum_rec
-            FROM (
-                SELECT event_type AS g,
-                       CAST(round(value * 100, 0) AS BIGINT) AS v
-                FROM events WHERE event_id % 17 <> 0
-                UNION ALL
-                SELECT event_type,
-                       CAST(round(value * 100, 0) AS BIGINT) + 7
-                FROM events WHERE event_id % 13 = 0
-            ) GROUP BY g
-        )
-        SELECT COALESCE(view.event_type, rec.event_type) AS event_type,
-               n_view, sum_view, n_rec, sum_rec
-        FROM view FULL OUTER JOIN rec
-          ON view.event_type = rec.event_type
-    """
-    from frogocr_spark.operators.analytics import (
-        sample_quantile_audit_oracle_sql)
-    o["sample_quantiles"] = sample_quantile_audit_oracle_sql(
-        """SELECT event_type AS grp, event_id AS id,
-                  CAST(round(value * 100, 0) AS BIGINT) AS v
-           FROM events""", "event_type", rate_mod=_SQA_RATE_MOD)
-    from frogocr_spark.operators.ml import cv_stump_oracle_sql
-    o["cv_folds"] = cv_stump_oracle_sql(
-        """SELECT event_id AS id,
-                  CAST(round(value * 100, 0) AS BIGINT) AS v,
-                  CASE WHEN event_type = 'error' THEN 1 ELSE 0 END AS y
-           FROM events""", k=_CV_K)
-    from frogocr_spark.operators.clustering import (
-        kmeans_agreement_oracle_sql, kmeans_silhouette_oracle_sql)
-    o["silhouette"] = kmeans_silhouette_oracle_sql(k=4, iters=3)
-    o["clustering_ari"] = kmeans_agreement_oracle_sql(
-        k_a=4, k_b=8, iters=3)
-    from frogocr_spark.operators.ml import (
-        isotonic_calibration_oracle_sql)
-    o["isotonic"] = isotonic_calibration_oracle_sql(
-        """SELECT CAST(floor(value * 100) AS BIGINT) AS s,
-                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
-                      AS y
-           FROM events WHERE event_type IN ('click', 'purchase')""")
-    from frogocr_spark.operators.ml import conformal_threshold_oracle_sql
-    o["conformal"] = conformal_threshold_oracle_sql(
-        """SELECT event_type AS grp,
-                  CAST(floor(value * 100) AS BIGINT) AS s,
-                  CAST(event_id AS VARCHAR) AS id
-           FROM events""")
-    o["dup_profile"] = """
-        WITH sz AS (
-            SELECT substr(md5(text), 1, 2) AS g, count(*) AS size
-            FROM documents GROUP BY 1
-        ), tot AS (SELECT sum(size) AS td, max(size) AS mx FROM sz)
-        SELECT CAST(length(bin(size)) - 1 AS BIGINT) AS bucket,
-               CAST(count(*) AS BIGINT) AS n_clusters,
-               CAST(sum(size) AS BIGINT) AS n_docs,
-               CAST(mx AS BIGINT) AS max_size,
-               CAST((CAST(mx AS HUGEINT) * 1000000) // td AS BIGINT)
-                   AS giant_frac_e6
-        FROM sz, tot GROUP BY 1, 4, 5
-    """
-    from frogocr_spark.operators.sketches import cms_join_size_oracle_sql
-    o["join_size_est"] = cms_join_size_oracle_sql(
-        """SELECT CAST(user_id AS VARCHAR) AS k FROM events
-           WHERE event_type = 'click'""",
-        """SELECT CAST(user_id AS VARCHAR) AS k FROM events
-           WHERE event_type = 'purchase'""")
     return o

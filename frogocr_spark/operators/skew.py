@@ -45,7 +45,7 @@ def salted_equi_join(fact: DataFrame, dim: DataFrame, key: str,
     side REPLICATED once per salt value — the standard hand-salting
     remedy when the key cardinality is below the task count or one key
     dominates (the hazard class AQE's byte-based skew split cannot
-    always see; cf. the LSH hot-bucket analysis, plan_audit 8a/8b).
+    always see; cf. the LSH hot-bucket analysis in tests/test_plans.py).
 
     The salt is DETERMINISTIC — ``pmod(xxhash64(fact_salt_col), B)``
     over a fact-side column (use a unique id) — never ``rand()``, so

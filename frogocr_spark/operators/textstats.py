@@ -1,7 +1,8 @@
 """Text-analysis operators: language-ID, quality scoring, token counting,
 document fingerprinting.  All pure column expressions (JVM-side,
-whole-stage codegen) — deliberately SQL-expressible so every one has a
-DuckDB oracle in ``__spark_entry__.oracle_sql``.
+whole-stage codegen) — deliberately SQL-expressible.  The ones a
+registry row uses have a DuckDB oracle in ``__spark_entry__.oracle_sql``;
+the rest are checked against pure-Python twins in the tests.
 """
 
 from __future__ import annotations
@@ -365,8 +366,9 @@ def decontaminate(df: DataFrame, eval_df: DataFrame,
     millions of grams — while the candidate side is the 100 TB corpus.
     The eval gram set is therefore BROADCAST and the corpus-side probe
     is a broadcast left-semi-style join: the big side is never
-    shuffled, no stage is keyed on corpus data.  (plan_audit checks the
-    broadcast actually happens.)  Returns one row per candidate row."""
+    shuffled, no stage is keyed on corpus data.  (tests/test_plans.py
+    checks the broadcast actually happens.)  Returns one row per
+    candidate row."""
     from .dedup import _shingle_expr
     eval_grams = (eval_df.select(
         F.explode_outer(_shingle_expr(text_col, n, None)).alias("gram"))

@@ -102,7 +102,7 @@ def test_aqe_skew_join_fires_on_byte_skewed_smj(spark):
     QueryExecution and leaves this plan unfinalized — skew=true only
     appears in the FINAL adaptive plan).  Thresholds scaled to the
     fixture; production scale trips the default 256 MB / 5x-median
-    rule identically (tools/plan_audit.py check 8a)."""
+    rule identically."""
     skew_conf = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
@@ -212,19 +212,6 @@ def test_decontam_eval_grams_broadcast_into_semi_join(spark):
     assert "BroadcastHashJoin" in plan and "LeftSemi" in plan
 
 
-def test_q5_star_join_broadcasts_all_dimensions(spark):
-    """TPC-H Q5 shape: the four dimension tables (customer, supplier,
-    nation, region) must broadcast into the fact pipeline; the lineitem
-    side is shuffled at most once (orders equi-join) and nothing
-    degenerates to a cartesian/nested-loop product."""
-    import __spark_entry__ as entry
-    df = entry._q_tpch_q5(spark, SF)
-    plan = _plan(df)
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
 def test_top_vocabulary_is_take_ordered_not_global_sort(spark):
     """The global top-k vocabulary cut must plan as
     TakeOrderedAndProject (per-partition top-k + driver merge), never a
@@ -311,3 +298,38 @@ def test_weighted_sample_is_take_ordered_not_global_sort(spark):
     plan = _plan(weighted_sample(docs, 20, "n_chars"))
     assert "TakeOrderedAndProject" in plan
     assert "Exchange rangepartitioning" not in plan
+
+
+def test_minhash_lsh_has_no_cartesian_product(spark):
+    """Candidate generation is bucket-keyed equi-joins only — never a
+    cartesian or nested-loop product over the corpus."""
+    from frogocr_spark.operators.dedup import minhash_lsh_pairs
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = _plan(minhash_lsh_pairs(docs, "doc_id", "text", num_hashes=32,
+                                   bands=4, threshold=0.5))
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_global_rank_has_no_single_partition_exchange(spark):
+    """The dense rank comes from a RANGE exchange (order-preserving
+    partition ids) + a row_number window partitioned by that id — never
+    an Exchange SinglePartition."""
+    from frogocr_spark.operators.ranking import global_rank
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    dfreq = (docs.select(F.explode(F.split("text", r"\s+")).alias("token"))
+             .groupBy("token").agg(F.count(F.lit(1)).alias("t_df")))
+    plan = _plan(global_rank(dfreq, ["t_df", "token"]))
+    assert "SinglePartition" not in plan
+    assert "windowspecdefinition(_pid" in plan
+
+
+def test_exact_cosine_joins_packed_blocks(spark):
+    """Blocked exact cosine: the corpus is packed one row per block
+    (collect_list) before the block-pair join, and scoring is a
+    MapInPandas matmul — never a row-level cartesian over the corpus."""
+    from frogocr_spark.operators.dedup import _exact_cosine_pairs_blocked
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    plan = _plan(_exact_cosine_pairs_blocked(emb, "vec_id", "embedding",
+                                             threshold=0.4))
+    assert "MapInPandas" in plan and "collect_list" in plan

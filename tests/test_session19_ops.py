@@ -382,20 +382,20 @@ def test_max_token_run_hand_cases(spark):
     assert got[3] == (2, "p", 3)         # token ASC tiebreak: p < q
 
 
-def test_dedup_agreement_identical_pair(spark, tmp_path):
+def test_dedup_agreement_identical_pair(spark):
     # two identical docs and one unrelated: both detectors must find
     # exactly the identical pair -> perfect agreement
-    import __spark_entry__ as entry
+    from frogocr_spark.operators.dedup import (ngram_jaccard_pairs,
+                                               simhash_near_pairs)
     rows = [(1, "alpha beta gamma delta epsilon"),
             (2, "alpha beta gamma delta epsilon"),
             (3, "utterly different words entirely here")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sf = str(tmp_path)
-    df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    [r] = entry._q_dedup_agreement(spark, sf).collect()
-    assert r.n_common >= 1
-    assert (r.n_simhash, r.n_jaccard3, r.n_common,
-            r.agree_e6) == (1, 1, 1, 1_000_000)
+    a = {(r.id_a, r.id_b) for r in simhash_near_pairs(
+        df, "doc_id", "text", max_hamming=3).collect()}
+    b = {(r.id_a, r.id_b) for r in ngram_jaccard_pairs(
+        df, "doc_id", "text", threshold=0.7, ngram=3).collect()}
+    assert a == b == {(1, 2)}
 
 
 def test_hash_collision_audit_python_twin(spark):
@@ -451,24 +451,31 @@ def test_bloom_fpr_python_twin_and_no_false_negatives(spark):
     assert r.n_probes == 2
 
 
-def test_ann_recall_exact_duplicate_always_recalled(spark, tmp_path):
+def test_ann_recall_exact_duplicate_always_recalled(spark):
     # an exact duplicate vector hashes identically in EVERY LSH table,
     # so it is always a candidate and must appear in both top-5 sets
     import numpy as np
-    import __spark_entry__ as entry
+    from frogocr_spark.operators.similarity import (cosine_topk_bruteforce,
+                                                    cosine_topk_lsh)
     rng = np.random.RandomState(7)
     vecs = rng.randn(30, 64).astype("float32")
     vecs[20] = vecs[0]                    # vec 20 duplicates query 0
     rows = [(i, [float(x) for x in vecs[i]], 0) for i in range(30)]
-    df = spark.createDataFrame(
+    emb = spark.createDataFrame(
         rows, "vec_id long, embedding array<float>, label int")
-    sf = str(tmp_path)
-    df.write.mode("overwrite").parquet(f"{sf}/embeddings.parquet")
-    got = {r.query_id: r for r in
-           entry._q_ann_recall(spark, sf).collect()}
-    assert got[0].n_hit >= 1               # the duplicate is recalled
-    assert all(r.n_exact == 5 for r in got.values())
-    assert all(0 <= r.recall_e6 <= 1_000_000 for r in got.values())
+    qs = emb.where("vec_id < 10")
+
+    def top5(df):
+        out = {}
+        for r in df.collect():
+            out.setdefault(r.query_id, set()).add(r.neighbor_id)
+        return out
+    exact = top5(cosine_topk_bruteforce(emb, qs, k=5, rank_round=4))
+    lsh = top5(cosine_topk_lsh(emb, qs, k=5, dim=64, score_e4=True))
+    assert 20 in exact[0] and 20 in lsh[0]  # the duplicate is recalled
+    assert sorted(exact) == list(range(10))
+    assert all(len(v) == 5 for v in exact.values())
+    assert all(len(v) <= 5 for v in lsh.values())
 
 
 def test_new_operator_argument_guards(spark):

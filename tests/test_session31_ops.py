@@ -1,12 +1,10 @@
-"""Session 31 operators: near-dup split leakage and MinHash
-estimator calibration — hand-constructed corpora with known pair
-sets (the contract queries carry the DuckDB hash checks)."""
+"""Session 31 operators: the near-dup, split and MinHash pieces of the
+split-leakage and estimator-calibration audits, IR metrics and the
+Gram matrix — hand-constructed corpora with known pair sets."""
 
 from __future__ import annotations
 
 import hashlib
-
-import __spark_entry__ as entry
 
 
 def _split_of(doc_id: int) -> str:
@@ -21,10 +19,12 @@ def _pick_id(split: str, start: int = 0) -> int:
     return i
 
 
-def test_split_leak_near_hand_case(spark, tmp_path):
+def test_split_leak_near_hand_case(spark):
     # identical texts => simhash hamming 0 pairs; disjoint vocabularies
     # between the groups keep the fingerprints far apart (no spurious
     # pairs).  One pair crosses train/test, one sits inside train.
+    from frogocr_spark.operators.dedup import simhash_near_pairs
+    from frogocr_spark.operators.textstats import hash_split
     a = _pick_id("train")
     b = _pick_id("test")
     c = _pick_id("train", a + 1)
@@ -35,43 +35,34 @@ def test_split_leak_near_hand_case(spark, tmp_path):
     t3 = "red green blue cyan magenta yellow black white"
     rows = [(a, t1), (b, t1), (c, t2), (d, t2), (e, t3)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    sf = str(tmp_path)
-    df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    got = {(r.split_a, r.split_b): r for r in
-           entry._q_split_leak_near(spark, sf).collect()}
-    assert set(got) == {("test", "train"), ("train", "train")}
-    assert got[("test", "train")].n_pairs == 1
-    assert got[("train", "train")].n_pairs == 1
-    assert got[("test", "train")].share_e6 == 500_000
-    assert got[("train", "train")].share_e6 == 500_000
+    pairs = {(r.id_a, r.id_b) for r in
+             simhash_near_pairs(df, "doc_id", "text",
+                                max_hamming=3).collect()}
+    assert pairs == {(min(a, b), max(a, b)), (min(c, d), max(c, d))}
+    splits = {r.doc_id: r.split for r in hash_split(df).collect()}
+    assert splits == {i: _split_of(i) for i in (a, b, c, d, e)}
+    combos = sorted(tuple(sorted((splits[x], splits[y])))
+                    for x, y in pairs)
+    assert combos == [("test", "train"), ("train", "train")]
 
 
-def test_minhash_err_identical_pair_zero_error(spark, tmp_path):
+def test_minhash_err_identical_pair_zero_error(spark):
     # two identical docs: every minhash component matches (est = 1.0)
     # and the true word-set Jaccard is 1.0 — calibration error exactly
     # 0; the third doc's vocabulary is disjoint so it never becomes a
     # candidate (no band bucket can collide through shared min tokens).
-    # ids (2, 3): md5("2:3") starts with '0', so the pair is INSIDE the
-    # r5 deterministic 1/16 calibration sample; ids (1, 2) — md5 'd…'
-    # — pin the complement: the pair exists but is sampled out.
-    rows = [(2, "alpha beta gamma delta epsilon zeta eta theta"),
-            (3, "alpha beta gamma delta epsilon zeta eta theta"),
-            (4, "one two three four five six seven eight")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sf = str(tmp_path)
-    df.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
-    r = entry._q_minhash_err(spark, sf).collect()[0]
-    assert r.n_pairs == 1
-    assert r.mean_abs_err_e6 == 0
-    assert r.max_abs_err_e6 == 0
-    assert (r.n_over, r.n_under) == (0, 0)
-    rows_out = [(1, "alpha beta gamma delta epsilon zeta eta theta"),
-                (2, "alpha beta gamma delta epsilon zeta eta theta")]
-    df2 = spark.createDataFrame(rows_out, "doc_id long, text string")
-    sf2 = str(tmp_path / "out")
-    df2.write.mode("overwrite").parquet(f"{sf2}/documents.parquet")
-    r2 = entry._q_minhash_err(spark, sf2).collect()[0]
-    assert r2.n_pairs == 0 and r2.mean_abs_err_e6 is None
+    from frogocr_spark.operators.dedup import minhash_lsh_pairs
+    texts = {2: "alpha beta gamma delta epsilon zeta eta theta",
+             3: "alpha beta gamma delta epsilon zeta eta theta",
+             4: "one two three four five six seven eight"}
+    df = spark.createDataFrame(sorted(texts.items()),
+                               "doc_id long, text string")
+    got = minhash_lsh_pairs(df, "doc_id", "text", num_hashes=32, bands=4,
+                            threshold=0.5, hash_fn="md5").collect()
+    assert [(r.id_a, r.id_b) for r in got] == [(2, 3)]
+    wa, wb = (set(texts[i].split()) for i in (2, 3))
+    true_jaccard = len(wa & wb) / len(wa | wb)
+    assert got[0].est_jaccard == true_jaccard == 1.0
 
 
 def test_gram_matrix_python_twin(spark):

@@ -527,54 +527,6 @@ def test_bloom_decontaminate_fp_rate_bounded(spark):
     assert all(r["flagged"] == 1 for r in self_hit)
 
 
-@pytest.fixture(scope="module")
-def tiny_events_dir(spark, tmp_path_factory):
-    """A 2-user events.parquet written in deliberately scrambled order,
-    so the ordered-stitch/lag queries must recover (ts, event_id)."""
-    import datetime as dt
-    base = dt.datetime(2024, 1, 1)
-    rows = [  # (event_id, ts, user_id, event_type, value, props)
-        (3, base + dt.timedelta(seconds=30), 1, "c", 1.0, ""),
-        (1, base + dt.timedelta(seconds=10), 1, "a", 1.0, ""),
-        (2, base + dt.timedelta(seconds=20), 1, "b", 1.0, ""),
-        (5, base, 2, "y", 1.0, ""),   # same ts as event 4: id breaks tie
-        (4, base, 2, "x", 1.0, ""),
-    ]
-    d = tmp_path_factory.mktemp("tinyev")
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string, value double, props string")
-    df.repartition(4).write.mode("overwrite").parquet(str(d / "events.parquet"))
-    return str(d)
-
-
-def test_event_replay_stable_order(spark, tiny_events_dir):
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry
-    got = {r.user_id: r for r in
-           entry._q_event_replay(spark, tiny_events_dir).collect()}
-    assert got[1].replay == "a>b>c"
-    assert got[1].n_events == 3
-    assert got[1].first_us == 1704067210_000000
-    assert got[1].last_us == 1704067230_000000
-    # equal timestamps: event_id is the tiebreak (4 before 5)
-    assert got[2].replay == "x>y"
-
-
-def test_w_lag_lead_hand_computed(spark, tiny_events_dir):
-    import sys
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entry
-    got = {r.event_id: (r.gap_us, r.next_type) for r in
-           entry._q_w_lag_lead(spark, tiny_events_dir).collect()}
-    assert got[1] == (-1, "b")          # first event of user 1
-    assert got[2] == (10_000_000, "c")
-    assert got[3] == (10_000_000, "")   # last event of user 1
-    assert got[4] == (-1, "y")          # ties broken by event_id
-    assert got[5] == (0, "")
-
-
 def test_substring_dedup_cut_hand_computed(spark):
     rows = [
         (1, "a b c d e f g h tail one"),   # min doc_id → owns the gram

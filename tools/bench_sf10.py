@@ -41,9 +41,7 @@ os.environ.setdefault("SPARK_DRIVER_MEM", "64g")
 
 import bench  # noqa: E402
 
-SLOWEST = ["dedup_jaccard", "minhash_err", "clustering_ari",
-           "dedup_minhash", "semdedup", "graph_2hop_hll", "cv_folds",
-           "dedup_minhash_xx", "winnowing", "novelty"]
+SLOWEST = ["dedup_jaccard", "dedup_minhash"]
 UI_PORT = 4049
 
 
