@@ -15,7 +15,7 @@ DataFrame pipeline over multi-turn agent transcripts:
 Design notes (SURVEY.md §4, §7): zero custom Catalyst rules; the custom
 pieces are (a) conv_id-salted repartition + secondary sort for skew + stable
 turn ordering, (b) snapshot/manifest bookkeeping for resumability, (c) the
-extraction core itself, executed as Arrow-batched ``mapInPandas`` — never
+extraction core itself, executed as Arrow-batched ``mapInArrow`` — never
 per-row Python UDFs.
 """
 

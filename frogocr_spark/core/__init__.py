@@ -15,5 +15,14 @@ Module map (reference citations inside each module):
 - ``tooljson``    structured tool-output field extraction
 - ``secondpass``  low-confidence region re-extraction + overlap merge
 - ``assemble``    span-level text assembly + empty-cascade pruning
-- ``extract``     per-turn dispatch + batch (pandas) entry point
+- ``extract``     per-turn reference dispatch + the batch entry point
+
+Row-scanner contract: each payload class has one row scanner
+``*_arrays(raw)`` (``extract.plain_arrays``, ``tooljson.tool_json_arrays``,
+``boilerplate.html_arrays``, ``segment.pdf_arrays``,
+``markdown.markdown_arrays``, ``secondpass.two_pass_arrays``) that
+returns the row's extracted text, ``(start, end)`` span pairs and counts
+without building Segment/Block objects; ``extract.extract_batch`` loops
+over them class by class.  The Block scanners (``extract_<class>``) stay
+as the reference the tests compare the row scanners against.
 """

@@ -55,51 +55,25 @@ def extract_tool_json(raw: str) -> tuple[list[Block], bool]:
     return [], False
 
 
-def extract_tool_json_batch(
-        raws: list[str],
-) -> tuple[list[str], list[int], list[int], list[bool], list[bool]]:
-    """Batch twin of :func:`extract_tool_json` with the downstream
-    prune/assemble steps FUSED (a tool_json turn yields at most one
-    segment, so prune_empty + assemble collapse to: keep the value iff
-    ``val.strip()``).  Returns parallel lists
-    ``(texts, starts, ends, kept, parse_failed)`` — ``kept[i]`` False
-    means the pruned-empty outcome (no blocks, no spans).
-
-    This is the hot path for ~33% of the corpus mix: the loop body is
-    one C-level ``json.loads`` + a dict probe + one compiled-regex
-    search, with none of the scalar path's dataclass/dict/Series
-    overhead (measured ~4× per-row vs routing through
-    :func:`extract_turn`).  Byte-parity with the scalar oracle is
-    asserted over the full generated corpus plus adversarial edge cases
-    in tests/test_extract.py."""
-    loads = json.loads
-    texts: list[str] = []
-    starts: list[int] = []
-    ends: list[int] = []
-    kept: list[bool] = []
-    failed: list[bool] = []
-    for raw in raws:
-        t, s, e, k, f = "", 0, 0, False, False
-        try:
-            obj = loads(raw)
-        except (json.JSONDecodeError, TypeError):
-            f = True
-        else:
-            if isinstance(obj, dict):
-                for key in CONTENT_KEYS:
-                    val = obj.get(key)
-                    if isinstance(val, str):
-                        # scalar path stops at the FIRST string-valued
-                        # key even when the value prunes to empty
-                        if val.strip():
-                            m = _FIELD_RES[key].search(raw)
-                            if m:
-                                s, e = m.start(1), m.end(1)
-                            t, k = val, True
-                        break
-        texts.append(t)
-        starts.append(s)
-        ends.append(e)
-        kept.append(k)
-        failed.append(f)
-    return texts, starts, ends, kept, failed
+def tool_json_arrays(
+        raw: str) -> tuple[str, list[tuple[int, int]], int, int, bool]:
+    """Row scanner twin of :func:`extract_tool_json` +
+    ``assemble.prune_empty`` + ``assemble.assemble``: a payload yields at
+    most one segment, so pruning reduces to keeping the value iff
+    ``val.strip()``.  Returns ``(extracted_text, span_pairs, n_blocks,
+    n_spans, parse_failed)``."""
+    try:
+        obj = json.loads(raw)
+    except (json.JSONDecodeError, TypeError):
+        return "", [], 0, 0, True
+    if isinstance(obj, dict):
+        for key in CONTENT_KEYS:
+            val = obj.get(key)
+            if isinstance(val, str):
+                # the reference stops at the FIRST string-valued key,
+                # even when that value prunes to empty
+                if not val.strip():
+                    break
+                m = _FIELD_RES[key].search(raw)
+                return val, [m.span(1) if m else (0, 0)], 1, 1, False
+    return "", [], 0, 0, False

@@ -13,8 +13,7 @@ The Spark-native design is strictly stronger (SURVEY §2.8 T6):
 
 The anti-join is the engine's only cross-table join (SURVEY §2.3 note); at
 scale the committed-key side is typically much smaller than the input in a
-resume scenario and Spark's AQE picks broadcast vs shuffle automatically —
-we pass a hint only when the caller knows the key set is tiny.
+resume scenario and Spark's AQE picks broadcast vs shuffle automatically.
 
 NULL keys (VERDICT r4 #4 three-valued-logic audit): anti-join equality is
 null-unsafe — a NULL-keyed INPUT row matches nothing and would be
@@ -30,35 +29,20 @@ entering the resume loop.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 KEYS = ("conv_id", "turn_idx")
 
 
-def filter_unprocessed(input_df: DataFrame, processed: DataFrame | None,
-                       broadcast_threshold_rows: int | None = None) -> DataFrame:
-    """F1: keep only input rows whose keys are not yet committed."""
-    if processed is None:
-        return input_df
-    keys = processed.select(*KEYS).dropDuplicates(list(KEYS))
-    if broadcast_threshold_rows is not None:
-        keys = F.broadcast(keys)
-    return input_df.join(keys, on=list(KEYS), how="left_anti")
+def filter_unprocessed(input_df: DataFrame,
+                       processed: DataFrame | None) -> DataFrame:
+    """F1: keep only input rows whose keys are not yet committed.
 
-
-def filter_unprocessed_bucketed(input_df: DataFrame,
-                                processed: DataFrame | None) -> DataFrame:
-    """F1 at 10^12-row scale: storage-partitioned anti-join.
-
-    Both sides must come from conv_id-bucketed tables with the same bucket
-    count (``sources.catalog.BucketedTable``); the join then reads matching
-    buckets pairwise with ZERO Exchange — no shuffle of either the input
-    or the committed-key side on resume (plan-asserted in
-    tests/test_bucketed.py).  Keys are NOT de-duplicated here: a dropDuplicates
-    would reintroduce a shuffle, and duplicate committed keys cannot occur
-    (run_id-idempotent appends) while being harmless to anti-join semantics
-    anyway.
-    """
+    The committed keys are not de-duplicated: a duplicate key cannot
+    change a left anti join's result, and a dropDuplicates would add an
+    aggregate and a shuffle.  When both sides come from conv_id-bucketed
+    tables with the same bucket count (``sources.catalog.BucketedTable``)
+    the join reads matching buckets pairwise with ZERO Exchange
+    (plan-asserted in tests/test_bucketed.py)."""
     if processed is None:
         return input_df
     return input_df.join(processed.select(*KEYS), on=list(KEYS),

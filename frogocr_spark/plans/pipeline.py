@@ -24,8 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extraction import extract_turns
-from ..operators.resume import (filter_unprocessed,
-                                filter_unprocessed_bucketed)
+from ..operators.resume import filter_unprocessed
 from ..operators.skew import DEFAULT_SALT_BUCKETS, salted_repartition
 from ..sources.catalog import BucketedTable, Table
 from .metrics import build_sidecar
@@ -60,11 +59,8 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
 
     todo = transcripts
     if cfg.resume:
-        processed = out_table.processed_keys("conv_id", "turn_idx")
-        if cfg.bucketed_table:
-            todo = filter_unprocessed_bucketed(todo, processed)
-        else:
-            todo = filter_unprocessed(todo, processed)
+        todo = filter_unprocessed(
+            todo, out_table.processed_keys("conv_id", "turn_idx"))
 
     # salt_buckets=0 → map-only plan (zero shuffles): correct whenever the
     # input layout already bounds task sizes (parquet maxPartitionBytes
@@ -110,8 +106,13 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
         stats = {"rows_in": 0, "rows_out": 0,
                  "empty_after_strip": 0, "parse_failures": 0}
     # observe() counters came free with the write; reconcile vs sidecar
-    if observed.get("rows_out"):
-        assert observed["rows_out"] == stats["rows_out"], (observed, stats)
-        assert (observed["parse_failures"] or 0) == stats["parse_failures"]
+    if observed.get("rows_out") and (
+            observed["rows_out"] != stats["rows_out"]
+            or (observed["parse_failures"] or 0) != stats["parse_failures"]):
+        raise RuntimeError(
+            f"run {cfg.run_id!r}: extraction observed "
+            f"{observed['rows_out']} rows / {observed['parse_failures']} "
+            f"parse failures, committed output has {stats['rows_out']} / "
+            f"{stats['parse_failures']}")
     stats["observed"] = dict(observed)
     return stats

@@ -56,27 +56,21 @@ class Table:
         dir still publishes (a legitimately-empty run is recorded)."""
         import shutil
 
+        import pyarrow.parquet as pq
+
         out = os.path.join(self.data_dir, f"run_id={run_id}")
         # staging lives OUTSIDE data_dir: read() is a recursive lookup and
         # must never see half-written files
         staging = os.path.join(self.path, f".staging-run_id={run_id}")
         shutil.rmtree(staging, ignore_errors=True)
         df.write.mode("overwrite").parquet(staging)
-        try:
-            has_rows = bool(self.spark.read.parquet(staging).head(1))
-        except Exception as e:
-            # ONLY the two genuinely-empty signatures mean "no rows": an
-            # empty-DataFrame write leaves just _SUCCESS (schema cannot
-            # be inferred) or nothing.  Any other failure (corrupt
-            # footer, FS error) must propagate — treating it as empty
-            # would discard a staging dir that really has new rows.
-            msg = str(e)
-            if ("UNABLE_TO_INFER_SCHEMA" in msg
-                    or "PATH_NOT_FOUND" in msg
-                    or "Unable to infer schema" in msg):
-                has_rows = False
-            else:
-                raise
+        # footer row counts, no Spark job: an empty DataFrame writes one
+        # schema-only part file, and a corrupt footer raises here instead
+        # of passing for empty (which would discard real new rows)
+        has_rows = sum(
+            pq.read_metadata(os.path.join(staging, f)).num_rows
+            for f in os.listdir(staging)
+            if f.endswith(".parquet") and not f.startswith((".", "_"))) > 0
         if has_rows or not os.path.isdir(out):
             os.makedirs(self.data_dir, exist_ok=True)
             shutil.rmtree(out, ignore_errors=True)
@@ -153,8 +147,6 @@ class Table:
         Collapses time-travel granularity: the compacted snapshot
         replaces its sources in the log.  Returns the new snapshot id,
         or None when there is nothing to compact."""
-        import shutil
-
         live = self._run_dirs()
         if len(live) <= 1:
             return None
@@ -163,24 +155,16 @@ class Table:
         out = os.path.join(self.data_dir, f"run_id={compact_id}")
         if os.path.isdir(out):
             raise ValueError(f"snapshot {compact_id!r} already exists")
-        # FIXED staging name (compaction is a single-writer maintenance
-        # op): a crash between the staged write and the publish leaves a
-        # dir the NEXT compact/vacuum reclaims — a pid-keyed name would
-        # leak a full-table copy per crashed attempt
-        staging = os.path.join(self.path, ".staging-compact")
-        shutil.rmtree(staging, ignore_errors=True)
         # merge_schema: a compaction that read one arbitrary footer's
         # schema would silently DROP columns added by schema evolution
         df = self.read(merge_schema=True)
         if num_files:
             df = df.coalesce(num_files)
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, "_COMPACTED_FROM"), "w") as fh:
-            fh.write("\n".join(live))
-        os.replace(staging, out)        # publish: sources now dead
-        for n in live:
-            shutil.rmtree(os.path.join(self.data_dir, n),
-                          ignore_errors=True)
+        # FIXED staging name (compaction is a single-writer maintenance
+        # op): a crash between the staged write and the publish leaves a
+        # dir the NEXT compact/vacuum reclaims — a pid-keyed name would
+        # leak a full-table copy per crashed attempt
+        self._publish_rewrite(df, compact_id, live, ".staging-compact")
         return compact_id
 
     def merge(self, source: DataFrame, key_cols: list[str],
@@ -272,8 +256,8 @@ class Table:
 
     def _publish_rewrite(self, df: DataFrame, new_id: str,
                          live: list[str], staging_name: str) -> None:
-        """Shared phase-1/2/3 of every full-table rewrite (merge,
-        delete): staged write + ``_COMPACTED_FROM`` manifest naming the
+        """Shared phase-1/2/3 of every full-table rewrite (compact,
+        merge, delete): staged write + ``_COMPACTED_FROM`` manifest naming the
         superseded snapshots, one atomic publish, then source cleanup
         (:meth:`vacuum` finishes it after a crash)."""
         import shutil

@@ -4,18 +4,21 @@ The corpus test (tests/test_extract.py) proves parity on GENERATOR
 payloads; these hypothesis fuzzers prove it on hostile ones — unclosed
 tags, stray ``<``/``>``, nested/unbalanced links and blacklist tags,
 whitespace runs, malformed ``@x,y,w,h|`` tokens, markdown markers glued
-mid-line — where a fused rewrite would drift first.  Oracle = the
-Block-path composition ``extract_turn`` uses:
+mid-line, unicode whitespace, truncated/escaped/nested JSON — where a
+fused rewrite would drift first.  Oracle = the Block-path composition
+``extract_turn`` uses:
 ``assemble.assemble(assemble.prune_empty(extract_<cls>(raw)))``.
 ``two_pass`` is fuzzed through ``extract_batch`` against ``extract_turn``
 itself, with per-turn settings.
 """
 
+import json
+
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from frogocr_spark.core import (assemble, boilerplate, extract, markdown,
-                                segment)
+                                segment, tooljson)
 
 _HTML_ATOMS = st.sampled_from([
     "<p>", "</p>", "<div>", "</div>", "<nav>", "</nav>", "<a>", "</a>",
@@ -38,6 +41,34 @@ _PDF_ATOMS = st.sampled_from([
     " ", "\n", "@99999,300,50,50|big", "@0,050,08,08|pad",
 ])
 
+# str.isspace() characters beyond ASCII: strip() and trim_span must agree
+_PLAIN_ATOMS = st.sampled_from([
+    "word", "two words", "x", ".", " ", "  ", "\n", "\t", "\r", "\x0b",
+    "\x0c", "\x1c", "\x1f", "\x85", "\xa0", "\u2003", "\u3000",
+    "\u200b", "\ufeff", "é", "\U0001f600",
+])
+
+_JSON_ATOMS = st.sampled_from([
+    "{", "}", "[", "]", ":", ",", " ", "\n", '"', '\\"', "\\u0041",
+    "\\n", '"content"', '"text"', '"output"', '"stdout"', '"result"',
+    '"data"', '"status"', '"ok"', '"  "', '""', '"x y"', "null", "1",
+    "true", '"\\ud83d\\ude00"',
+])
+
+_JSON_VALUES = st.one_of(
+    st.text(max_size=12), st.sampled_from(["", " ", "\n\t", "a\"b\\c"]),
+    st.integers(), st.none(), st.lists(st.integers(), max_size=2))
+
+_TOOL_JSON = st.one_of(
+    st.lists(_JSON_ATOMS, max_size=30).map(lambda a: "{" + "".join(a)),
+    st.dictionaries(
+        st.sampled_from(tooljson.CONTENT_KEYS + ("status", "Content")),
+        st.one_of(_JSON_VALUES, st.dictionaries(
+            st.sampled_from(tooljson.CONTENT_KEYS), _JSON_VALUES,
+            max_size=2)),
+        max_size=4).flatmap(lambda d: st.builds(
+            json.dumps, st.just(d), ensure_ascii=st.booleans())),
+)
 
 _TP_ATOMS = st.sampled_from([
     "[[LOWCONF]]", "[[/LOWCONF]]", "[[LOWCONF", "LOWCONF]]", "[[", "]]",
@@ -60,6 +91,24 @@ def _compose(extract_fn, raw):
     blocks, _dropped = assemble.prune_empty(extract_fn(raw))
     text, spans = assemble.assemble(blocks)
     return text, spans, len(blocks), len(spans)
+
+
+def _compose_tool_json(raw):
+    blocks, failed = tooljson.extract_tool_json(raw)
+    return _compose(lambda _raw: blocks, raw) + (failed,)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_PLAIN_ATOMS, min_size=0, max_size=30))
+def test_plain_arrays_fuzz(atoms):
+    raw = "".join(atoms)
+    assert extract.plain_arrays(raw) == _compose(extract.extract_plain, raw)
+
+
+@settings(max_examples=300, deadline=None)
+@given(_TOOL_JSON)
+def test_tool_json_arrays_fuzz(raw):
+    assert tooljson.tool_json_arrays(raw) == _compose_tool_json(raw)
 
 
 @settings(max_examples=300, deadline=None)
@@ -104,13 +153,15 @@ def test_two_pass_batch_fuzz_with_settings(atoms, at, csv):
 @settings(max_examples=100, deadline=None)
 @given(st.text(alphabet="<>/ab \n#*`[]()@,|0123456789", max_size=200))
 def test_all_arrays_survive_arbitrary_text(raw):
-    """No crash + parity on raw soup for all three twins."""
+    """No crash + parity on raw soup for every row scanner."""
     assert boilerplate.html_arrays(raw) == \
         _compose(boilerplate.extract_html, raw)
     assert markdown.markdown_arrays(raw) == \
         _compose(markdown.extract_markdown, raw)
     assert segment.pdf_arrays(raw) == \
         _compose(segment.extract_pdf_layout, raw)
+    assert extract.plain_arrays(raw) == _compose(extract.extract_plain, raw)
+    assert tooljson.tool_json_arrays(raw) == _compose_tool_json(raw)
 
 
 def test_large_payload_parity_and_sanity():
@@ -126,10 +177,12 @@ def test_large_payload_parity_and_sanity():
               + "```\nfence\n```\n") * 700               # ~0.9 MB
     big_pdf = " ".join(f"@{(i * 7) % 900},{100 + (i % 60) * 10},20,9|w{i}"
                        for i in range(30000))            # ~0.8 MB
+    big_plain = "\n \xa0" + "a line of plain words\n" * 40000  # ~0.9 MB
     checks = [
         (boilerplate.html_arrays, boilerplate.extract_html, big_html),
         (markdown.markdown_arrays, markdown.extract_markdown, big_md),
         (segment.pdf_arrays, segment.extract_pdf_layout, big_pdf),
+        (extract.plain_arrays, extract.extract_plain, big_plain),
     ]
     for arrays_fn, block_fn, raw in checks:
         got = arrays_fn(raw)
@@ -138,9 +191,12 @@ def test_large_payload_parity_and_sanity():
         assert n_spans == len(spans) and n_blocks > 0
         for a, b in spans[:100]:
             assert raw[a:b].strip()
+    big_json = json.dumps({"status": "ok", "stdout": "out \"q\" é\n" * 60000,
+                           "content": ["nested"] * 1000})  # ~0.9 MB
+    got = tooljson.tool_json_arrays(big_json)
+    assert got == _compose_tool_json(big_json)
+    assert got[0].startswith("out") and got[2:] == (1, 1, False)
     # two_pass at scale through the real batch entry
-    from frogocr_spark.core import extract
-    import pandas as pd
     big_tp = ("plain words here [[LOWCONF]]delbrag sdrow[[/LOWCONF]] "
               "more text. ") * 12000                     # ~0.8 MB
     row = extract.extract_batch(pd.Series([big_tp]),

@@ -11,8 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from frogocr_spark.operators.resume import (filter_unprocessed,
-                                            filter_unprocessed_bucketed)
+from frogocr_spark.operators.resume import filter_unprocessed
 from frogocr_spark.sources.catalog import BucketedTable
 
 
@@ -43,7 +42,7 @@ def _executed_plan(df) -> str:
 
 def test_bucketed_anti_join_has_zero_exchanges(spark, bucketed_pair):
     _inp, _done, t_in, t_done = bucketed_pair
-    out = filter_unprocessed_bucketed(
+    out = filter_unprocessed(
         t_in.read().drop("run_id"), t_done.processed_keys("conv_id", "turn_idx"))
     plan = _executed_plan(out)
     assert "Exchange" not in plan, plan
@@ -56,7 +55,7 @@ def test_bucketed_anti_join_matches_plain(spark, bucketed_pair):
         filter_unprocessed(inp, done.select("conv_id", "turn_idx"))
         .select("conv_id", "turn_idx").collect())
     got = sorted(
-        filter_unprocessed_bucketed(
+        filter_unprocessed(
             t_in.read(), t_done.processed_keys("conv_id", "turn_idx"))
         .select("conv_id", "turn_idx").collect())
     assert got == expected

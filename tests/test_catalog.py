@@ -237,3 +237,32 @@ def test_merge_null_safe_surrogate_pattern(spark, tmp_path):
     got = sorted((r.id, r.v, r.k) for r in merged.collect())
     # the NULL-keyed row was REPLACED (id 1 gone, id 10 in), k=5 kept
     assert got == [(2, "y", 5), (10, "x2", None)]
+
+
+def test_append_truncated_part_file_raises(spark, tmp_path, monkeypatch):
+    """A staged part file with a broken footer is an error, never an
+    empty result: a retry of a committed run_id must not silently keep
+    the old data and drop the staged rows."""
+    import os
+
+    import pyarrow as pa
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    t = Table(spark, str(tmp_path / "tbl"))
+    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
+    t.append(df, "r1")
+
+    write = DataFrameWriter.parquet
+
+    def truncating_write(self, path, *args, **kwargs):
+        write(self, path, *args, **kwargs)
+        for f in os.listdir(path):
+            if f.endswith(".parquet") and not f.startswith("."):
+                p = os.path.join(path, f)
+                os.truncate(p, os.path.getsize(p) // 2)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", truncating_write)
+    with pytest.raises(pa.ArrowException):
+        t.append(df, "r1")
+    monkeypatch.undo()
+    assert t.read().count() == 2     # the committed run is untouched

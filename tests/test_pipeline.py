@@ -157,3 +157,27 @@ def test_blind_retry_of_completed_run_keeps_data(spark, tmp_path):
     assert not [d for d in os.listdir(os.path.join(str(tmp_path),
                                                    "extractions"))
                 if d.startswith(".staging")]
+
+
+def test_reconciliation_mismatch_raises(spark, tdf, tmp_path, monkeypatch):
+    """Rows lost between the observed extraction and the committed files
+    (here: the output append drops turn_idx 3) fail the run loudly — a
+    RuntimeError carrying both counts, not an assert ``python -O``
+    strips."""
+    from pyspark.sql import functions as F
+
+    append = Table.append
+
+    def lossy_append(self, df, run_id):
+        if self.path.endswith("extractions"):
+            df = df.where(F.col("turn_idx") != 3)
+        append(self, df, run_id)
+
+    monkeypatch.setattr(Table, "append", lossy_append)
+    cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
+                         salt_buckets=0)
+    n = tdf.count()
+    lost = tdf.where(F.col("turn_idx") == 3).count()
+    assert lost > 0
+    with pytest.raises(RuntimeError, match=f"{n} rows.*{n - lost} /"):
+        run_extraction(spark, tdf, cfg)
