@@ -1,10 +1,11 @@
 """Benchmark harness (driver contract).
 
-Runs every contract query at ``$SPARK_GRAFT_SF_DIR`` (default: the
-sf0.1 test tables, ``SF_DIR``) on ``local[$SPARK_GRAFT_CPUS]``
-(default: the host's core count) and prints ONE JSON line.  Primary metric:
-extraction throughput (turns/sec) over the synthetic transcripts table
-at the same scale factor.
+Measures extraction throughput (turns/sec, the primary metric) over the
+synthetic transcripts table at ``$SPARK_GRAFT_SF_DIR``'s scale factor
+(default: the sf0.1 test tables, ``SF_DIR``) on
+``local[$SPARK_GRAFT_CPUS]`` (default: the host's core count) and prints
+ONE JSON line.  ``--queries`` also times every contract query in
+registry order (the ``queries`` block gains one wall time per query).
 
 Scaling evidence for the north rule (≥0.8 efficiency between N and 4N
 executors): the same extraction job is run at local[N] and local[4N]
@@ -15,11 +16,12 @@ of ``SCALING_ROUNDS`` with per-round values + the measured
 multiprocessing hardware ceiling in the JSON.  Set SPARK_GRAFT_SCALING=0
 to skip the extra runs (drops the scaling block).
 
-Usage: python bench.py
+Usage: python bench.py [--queries]
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import shutil
@@ -230,6 +232,11 @@ def _scaling_pair(n_low: int, n_high: int, input_dir: str,
 
 
 def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--queries", action="store_true",
+                    help="also time every contract query (the panel)")
+    args = ap.parse_args()
+
     from frogocr_spark.session import get_spark
     from frogocr_spark.sources import transcripts
 
@@ -287,9 +294,11 @@ def main() -> None:
                                     reps=SCALING_ROUNDS,
                                     window=SCALING_WINDOW)
 
-        spark = get_spark(app_name="bench-queries", cores=CPUS)
-        queries = _time_queries(spark)
-        spark.stop()
+        queries: dict = {}
+        if args.queries:
+            spark = get_spark(app_name="bench-queries", cores=CPUS)
+            queries = _time_queries(spark)
+            spark.stop()
         queries["extraction_turns_per_sec"] = round(tput_main, 1)
         result["queries"] = queries
         result["value"] = round(n_rows / tput_main, 3)  # seconds, headline

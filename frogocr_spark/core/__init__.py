@@ -24,5 +24,7 @@ Row-scanner contract: each payload class has one row scanner
 returns the row's extracted text, ``(start, end)`` span pairs and counts
 without building Segment/Block objects; ``extract.extract_batch`` loops
 over them class by class.  The Block scanners (``extract_<class>``) stay
-as the reference the tests compare the row scanners against.
+as the reference the tests compare the row scanners against; for
+``two_pass`` that is ``secondpass.extract_two_pass`` over the reference
+merge, which ``two_pass_arrays`` replaces with one scan of the payload.
 """

@@ -7,10 +7,12 @@ loop that hands each row to its payload class's row scanner
 ``boilerplate.html_arrays``, ``segment.pdf_arrays``,
 ``markdown.markdown_arrays``, ``secondpass.two_pass_arrays``).  A row
 scanner goes straight from scan state to the output values — no
-Segment/Block objects.  :func:`extract_turn` is the reference — Block
-scanners, F7 gate, ``assemble.prune_empty``, ``assemble.assemble`` —
-that tests and the benchmark's output check compare the batch path
-against.
+Segment/Block objects; ``two_pass_arrays`` also builds no Word objects
+and never runs the reference merge (``secondpass._merge_two_pass``).
+:func:`extract_turn` is the reference — Block scanners (for
+``two_pass``, that merge), F7 gate, ``assemble.prune_empty``,
+``assemble.assemble`` — that tests and the benchmark's output check
+compare the batch path against.
 
 Per-turn settings (``core.settings.Settings``) change only two things:
 ``two_pass`` rows pass ``SecondPass`` and ``MinWordConfidence`` to

@@ -31,6 +31,12 @@ reversed text — documented exception to the raw-slice invariant).
 
 Confidence arithmetic stays in float32 like the reference
 (``Source/Confidence.hpp:30``) so oracle/Spark parity is bit-exact.
+
+:func:`_merge_two_pass` (behind :func:`extract_two_pass`) runs these
+steps literally and is the reference.  The batch path's row scanner
+:func:`two_pass_arrays` gets the same output from one scan of the
+payload; its docstring derives why, and ``_PREMISES`` checks at import
+that the constants still allow it.
 """
 
 from __future__ import annotations
@@ -68,7 +74,7 @@ class Word:
     end: int
     conf: float
     # reading-order key: equals ``start`` for first-pass words (callers
-    # pass it explicitly — no __post_init__ on the hot path); for
+    # pass it explicitly — no __post_init__); for
     # second-pass words it is region_start + corrected-text offset, so the
     # corrected sequence reads forward even though the provenance spans are
     # mirrored through the reversal (module doc).
@@ -118,10 +124,9 @@ def _words_of(text: str, base: int, conf: np.float32) -> list[Word]:
 def _first_pass_arrays(raw: str) -> tuple[list[str], list[int], list[int],
                                           list[float],
                                           list[tuple[int, int]]]:
-    """Hot-path form of :func:`first_pass`: parallel (texts, starts,
-    ends, confs) lists instead of Word objects — first-pass words never
-    carry variants, so the per-word dataclass was pure allocation
-    overhead on the batch path.  Same scan, same values."""
+    """List form of :func:`first_pass` for :func:`_merge_two_pass`:
+    parallel (texts, starts, ends, confs) lists instead of Word objects
+    (first-pass words never carry variants).  Same scan, same values."""
     texts: list[str] = []
     starts: list[int] = []
     ends: list[int] = []
@@ -151,8 +156,8 @@ def _first_pass_arrays(raw: str) -> tuple[list[str], list[int], list[int],
 def first_pass(raw: str) -> tuple[list[Word], list[tuple[int, int]]]:
     """Read everything; garbled regions at GARBLED_CONF.  Returns the word
     list plus the candidate region intervals (detector output, X1 analog).
-    (Word-object view of :func:`_first_pass_arrays` — the merge hot path
-    uses the arrays directly.)"""
+    (Word-object view of :func:`_first_pass_arrays` — the reference
+    merge uses the lists directly.)"""
     texts, starts, ends, confs, regions = _first_pass_arrays(raw)
     words = [Word(t, s, e, c, s)
              for t, s, e, c in zip(texts, starts, ends, confs)]
@@ -178,11 +183,12 @@ def _merge_two_pass(raw: str, run_second: bool
     """The full two-pass merge up to (but not including) Segment/Block
     construction; returns ``(merged, doc_conf)`` where ``merged`` is a
     reading-ordered list of ``(order_key, start, end, text, conf,
-    variants)`` tuples (first-pass words never carry variants, so the
-    hot path works on parallel lists/tuples; only second-pass words —
-    which accumulate J2 variants — are Word objects internally).
-    Shared by the scalar :func:`extract_two_pass` and the
-    allocation-light batch twin :func:`two_pass_arrays`."""
+    variants)`` tuples (first-pass words never carry variants, so they
+    stay parallel lists/tuples; only second-pass words — which
+    accumulate J2 variants — are Word objects internally).
+    The reference merge: :func:`extract_two_pass` builds on it, and the
+    tests check the batch row scanner :func:`two_pass_arrays`, which
+    does not call it, against it."""
     texts, starts, ends, confs, regions = _first_pass_arrays(raw)
     if not run_second:
         regions = []
@@ -299,24 +305,143 @@ def extract_two_pass(raw: str, run_second: bool = True) -> tuple[list[Block], fl
     return blocks, doc_conf
 
 
+# Byte patterns of the four confidences, for building the float32 arrays
+# the document-confidence means are taken over
+_CONF_BYTES = {float(c): c.tobytes() for c in (
+    FIRSTPASS_CONF, GARBLED_CONF, SECONDPASS_CONF, SECONDPASS_HARD_CONF)}
+_FP_F, _GB_F = float(FIRSTPASS_CONF), float(GARBLED_CONF)
+_SP_F, _HARD_F = float(SECONDPASS_CONF), float(SECONDPASS_HARD_CONF)
+
+# What two_pass_arrays' one-scan derivation assumes of the constants (its
+# docstring says where each one is used).  Checked with ``raise`` so a
+# retuned threshold fails at import, also under ``python -O``, instead of
+# silently parting from the reference merge.
+_PREMISES = {
+    "GARBLED_CONF < QUAD_GATE <= 1.0": _GB_F < QUAD_GATE <= 1.0,
+    "GARBLED_CONF <= WORD_GATE < FIRSTPASS_CONF":
+        _GB_F <= WORD_GATE < _FP_F,
+    "SECONDPASS_CONF > MAJORITY_STRICT": _SP_F > MAJORITY_STRICT,
+    "MAJORITY_RELAXED < SECONDPASS_HARD_CONF <= MAJORITY_STRICT":
+        MAJORITY_RELAXED < _HARD_F <= MAJORITY_STRICT,
+    "COVERAGE_THR < 1.0": COVERAGE_THR < 1.0,
+}
+_BROKEN = [k for k, ok in _PREMISES.items() if not ok]
+if _BROKEN:
+    raise RuntimeError("secondpass constants break two_pass_arrays' "
+                       "derivation: " + "; ".join(_BROKEN))
+
+
+def _f32_mean(buf: bytes) -> np.float32:
+    """float32 mean of the packed float32 values in ``buf`` as the
+    reference takes it: ``np.add.reduce`` is the pairwise sum that
+    ``.sum(dtype=float32)`` runs, then one float32 division."""
+    return np.add.reduce(np.frombuffer(buf, np.float32)) / np.float32(
+        len(buf) // 4)
+
+
 def two_pass_arrays(raw: str, run_second: bool = True,
                     min_conf: float = 0.0
                     ) -> tuple[str, list[tuple[int, int]], int, int, float]:
-    """Allocation-light batch twin of :func:`extract_two_pass` + the F7
-    word-confidence gate + ``assemble.prune_empty`` + ``assemble.assemble``:
-    the merged words go STRAIGHT to the output arrays — no Segment/Block
-    objects, no prune walk (every Word text is ``\\S+`` so pruning can
-    never drop one).  ``min_conf > 0`` keeps only merged words with
-    ``conf >= min_conf`` (Settings ``MinWordConfidence``); the document
-    confidence is the merge's either way.  Returns ``(extracted_text,
-    span_pairs, n_spans, n_variants, doc_conf)``; ``n_blocks`` is ``1 if
-    n_spans else 0`` by construction (the merge emits a single Block).
-    Byte/bit parity with the scalar path is asserted row-by-row in
-    tests/test_extract.py."""
-    merged, doc_conf = _merge_two_pass(raw, run_second)
-    if min_conf > 0:
-        merged = [t for t in merged if t[4] >= min_conf]
-    text = " ".join(t[3] for t in merged)
-    spans = [(t[1], t[2]) for t in merged]
-    n_var = sum(len(t[5]) for t in merged)
-    return text, spans, len(merged), n_var, doc_conf
+    """Row scanner for ``two_pass`` payloads: the output of
+    :func:`extract_two_pass` + the F7 word-confidence gate +
+    ``assemble.prune_empty`` + ``assemble.assemble``, computed in one
+    scan with no Word, Segment or Block objects.
+
+    ``min_conf > 0`` keeps only merged words with ``conf >= min_conf``
+    (Settings ``MinWordConfidence``; NaN compares false and gates
+    nothing); the document confidence is the merge's either way.
+    ``run_second=False`` is Settings ``SecondPass=off``.  Returns
+    ``(extracted_text, span_pairs, n_spans, n_variants, doc_conf)``;
+    ``n_blocks`` is ``1 if n_spans else 0`` (the merge emits one Block).
+
+    The payload splits into pieces at the ``_REGION_RE`` matches:
+    outside text, region interior, outside text, ….  First-pass words
+    are the ``\\S+`` runs of each piece, at FIRSTPASS_CONF outside and
+    GARBLED_CONF inside a region; the markers keep every word inside
+    its piece.  From that, the reference merge reduces to per-region
+    decisions (the premises are checked at import, ``_PREMISES``):
+
+    - J1/J3: the only first-pass words that intersect a region are its
+      own garbled words, each covered 1.0 (> COVERAGE_THR).  A region
+      with words has J1 mean GARBLED_CONF < QUAD_GATE and is kept; one
+      without has mean 1.0 and is not.
+    - A4: a kept region's second-pass confidence is SECONDPASS_HARD_CONF
+      if it holds a ``?``, else SECONDPASS_CONF.  Easy regions are
+      always accepted (SECONDPASS_CONF > MAJORITY_STRICT); hard ones
+      only under the relaxed threshold, i.e. when easy regions are a
+      strict majority of the kept ones.
+    - J2: a region's second-pass words are its garbled words mirrored
+      through the reversal — the same ``(start, end)`` intervals in
+      reverse order, texts reversed.  Each garbled word of an accepted
+      region (GARBLED_CONF <= WORD_GATE) is erased by its mirror word
+      (coverage 1.0) and becomes that word's one variant; no other
+      word is erased (FIRSTPASS_CONF > WORD_GATE, and intervals from
+      different pieces are disjoint).
+    - Merge order: an accepted region's corrected words have order keys
+      inside the region, where no surviving first-pass word starts, so
+      the merged reading order is the pieces in order with each
+      accepted region read in corrected order.
+    - Confidence: the float32 means over all first-pass words in
+      position order and over the accepted regions' second-pass words
+      in region order, as the reference builds its arrays, so
+      ``doc_conf`` is bit-identical.
+
+    tests/test_arrays_fuzz.py and tests/test_extract.py check this
+    against the reference merge (:func:`_merge_two_pass`)."""
+    finditer, span = _WORD_RE.finditer, re.Match.span
+    # (start, end, word spans) per piece: even index outside, odd region
+    pieces = []
+    pos = 0
+    for m in _REGION_RE.finditer(raw):
+        a, b = m.span(1)
+        e = m.start()
+        pieces.append((pos, e, list(map(span, finditer(raw, pos, e)))))
+        pieces.append((a, b, list(map(span, finditer(raw, a, b)))))
+        pos = m.end()
+    pieces.append((pos, len(raw), list(map(span, finditer(raw, pos)))))
+
+    # J1/J3 + A4: second-pass confidence of each accepted region
+    accepted: dict[int, float] = {}
+    if run_second:
+        kept = [k for k in range(1, len(pieces), 2) if pieces[k][2]]
+        hard = {k for k in kept if "?" in raw[pieces[k][0]:pieces[k][1]]}
+        relaxed = 2 * (len(kept) - len(hard)) > len(kept)
+        for k in kept:
+            if k not in hard:
+                accepted[k] = _SP_F
+            elif relaxed:
+                accepted[k] = _HARD_F
+
+    gate = min_conf > 0
+    parts: list[str] = []
+    spans: list[tuple[int, int]] = []
+    n_var = 0
+    fp_buf: list[bytes] = []
+    sp_buf: list[bytes] = []
+    for k, (a, b, ws) in enumerate(pieces):
+        if not ws:
+            continue
+        conf = _GB_F if k & 1 else _FP_F
+        fp_buf.append(_CONF_BYTES[conf] * len(ws))
+        sp_conf = accepted.get(k)
+        if sp_conf is None:
+            if gate and conf < min_conf:
+                continue
+            parts.append(" ".join(raw[a:b].split()))
+            spans += ws
+        else:
+            # J2: the corrected words replace the garbled ones
+            sp_buf.append(_CONF_BYTES[sp_conf] * len(ws))
+            if gate and sp_conf < min_conf:
+                continue
+            parts.append(" ".join(raw[a:b][::-1].split()))
+            spans += reversed(ws)
+            n_var += len(ws)
+
+    fp_mean = _f32_mean(b"".join(fp_buf)) if fp_buf else np.float32(1.0)
+    if sp_buf:  # A6
+        doc_conf = float((fp_mean + _f32_mean(b"".join(sp_buf)))
+                         / np.float32(2.0))
+    else:
+        doc_conf = float(fp_mean)
+    return " ".join(parts), spans, len(spans), n_var, doc_conf

@@ -8,17 +8,22 @@ mid-line, unicode whitespace, truncated/escaped/nested JSON — where a
 fused rewrite would drift first.  Oracle = the Block-path composition
 ``extract_turn`` uses:
 ``assemble.assemble(assemble.prune_empty(extract_<cls>(raw)))``.
-``two_pass`` is fuzzed through ``extract_batch`` against ``extract_turn``
-itself, with per-turn settings.
+``two_pass_arrays`` is fuzzed directly against the reference merge
+(``extract_two_pass`` + the F7 gate + the same composition), confidence
+bit for bit, under a grid of ``(SecondPass, MinWordConfidence)`` values;
+``two_pass`` is also fuzzed through ``extract_batch`` against
+``extract_turn`` itself, with per-turn settings.
 """
 
 import json
+import struct
 
 import pandas as pd
 from hypothesis import given, settings, strategies as st
 
 from frogocr_spark.core import (assemble, boilerplate, extract, markdown,
-                                segment, tooljson)
+                                secondpass, segment, tooljson)
+from frogocr_spark.core.assemble import Block
 
 _HTML_ATOMS = st.sampled_from([
     "<p>", "</p>", "<div>", "</div>", "<nav>", "</nav>", "<a>", "</a>",
@@ -70,10 +75,31 @@ _TOOL_JSON = st.one_of(
             json.dumps, st.just(d), ensure_ascii=st.booleans())),
 )
 
-_TP_ATOMS = st.sampled_from([
-    "[[LOWCONF]]", "[[/LOWCONF]]", "[[LOWCONF", "LOWCONF]]", "[[", "]]",
-    "?", "drah?", "sdrow desrever", "drow", "plain words", "x", ".",
-    " ", "  ", "\n", "\t", " \n\t ", "a?b c",
+# words, ``?`` and unicode whitespace, inside and outside regions
+_TP_WORDS = st.sampled_from([
+    "?", "drah?", "?x", "a?b c", "sdrow desrever", "drow", "x", ".",
+    "é", "\U0001f600", " ", "  ", "\n", "\t", "\xa0", "\u3000",
+    "\x1c", "\x85",
+])
+# well-formed regions, easy or hard, empty or whitespace-only among them,
+# plus stray, nested and unclosed markers
+_TP_SOUP = st.one_of(
+    _TP_WORDS,
+    st.lists(_TP_WORDS, max_size=4).map(
+        lambda a: "[[LOWCONF]]" + "".join(a) + "[[/LOWCONF]]"),
+    st.sampled_from(["[[LOWCONF]]", "[[/LOWCONF]]", "[[LOWCONF",
+                     "LOWCONF]]", "[[", "]]"]),
+)
+
+# (SecondPass, MinWordConfidence) as two_pass_arrays takes them: NaN and
+# negative gates are off; 0.96 drops the easy second-pass words
+# (float32 0.96 < 0.96), the exact float32 values keep them
+_TP_GRID = st.sampled_from([
+    (True, 0.0), (False, 0.0), (True, float("nan")), (True, -1.0),
+    (True, 0.3), (True, 0.8), (True, 0.96), (True, 1.5),
+    (False, 0.3), (False, 0.96),
+    (True, float(secondpass.SECONDPASS_CONF)),
+    (True, float(secondpass.SECONDPASS_HARD_CONF)),
 ])
 
 # mirrors tests/test_extract.py SETTINGS_GRID
@@ -96,6 +122,28 @@ def _compose(extract_fn, raw):
 def _compose_tool_json(raw):
     blocks, failed = tooljson.extract_tool_json(raw)
     return _compose(lambda _raw: blocks, raw) + (failed,)
+
+
+def _compose_two_pass(raw, run_second=True, min_conf=0.0):
+    """Reference for ``two_pass_arrays``: the merge's Blocks, the F7 gate
+    as ``extract_turn`` applies it, then the shared composition; the
+    confidence as its float64 bytes, so equality is bit equality."""
+    blocks, conf = secondpass.extract_two_pass(raw, run_second)
+    if min_conf > 0:
+        blocks = [Block(segments=[s for s in b.segments
+                                  if s.confidence >= min_conf],
+                        kind=b.kind, detector=b.detector,
+                        recognizer=b.recognizer, confidence=b.confidence)
+                  for b in blocks]
+    blocks, _dropped = assemble.prune_empty(blocks)
+    text, spans = assemble.assemble(blocks)
+    n_var = sum(len(s.variants) for b in blocks for s in b.segments)
+    return text, spans, len(spans), n_var, struct.pack("<d", conf)
+
+
+def _two_pass(raw, run_second=True, min_conf=0.0):
+    got = secondpass.two_pass_arrays(raw, run_second, min_conf)
+    return got[:4] + (struct.pack("<d", got[4]),)
 
 
 @settings(max_examples=300, deadline=None)
@@ -136,7 +184,18 @@ def test_pdf_arrays_fuzz(atoms):
 
 
 @settings(max_examples=300, deadline=None)
-@given(st.lists(_TP_ATOMS, max_size=40), st.integers(0, 40), _SETTINGS)
+@given(st.lists(_TP_SOUP, max_size=40), _TP_GRID)
+def test_two_pass_arrays_fuzz(atoms, grid):
+    """The one-scan row scanner equals the reference merge on hostile
+    ``[[LOWCONF]]`` soup under every gate, confidence bit for bit."""
+    raw = "".join(atoms)
+    run_second, min_conf = grid
+    assert _two_pass(raw, run_second, min_conf) == \
+        _compose_two_pass(raw, run_second, min_conf)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_TP_SOUP, max_size=40), st.integers(0, 40), _SETTINGS)
 def test_two_pass_batch_fuzz_with_settings(atoms, at, csv):
     """Hostile ``[[LOWCONF]]`` payloads (unclosed/nested markers, ``?``
     hard regions, whitespace runs) with a random per-turn setting: the
@@ -162,6 +221,8 @@ def test_all_arrays_survive_arbitrary_text(raw):
         _compose(segment.extract_pdf_layout, raw)
     assert extract.plain_arrays(raw) == _compose(extract.extract_plain, raw)
     assert tooljson.tool_json_arrays(raw) == _compose_tool_json(raw)
+    for tp in (raw, "[[LOWCONF]]" + raw + "[[/LOWCONF]]" + raw):
+        assert _two_pass(tp) == _compose_two_pass(tp)
 
 
 def test_large_payload_parity_and_sanity():
@@ -196,6 +257,15 @@ def test_large_payload_parity_and_sanity():
     got = tooljson.tool_json_arrays(big_json)
     assert got == _compose_tool_json(big_json)
     assert got[0].startswith("out") and got[2:] == (1, 1, False)
+    # 300 words x 20 regions (tests/test_twopass_paths.py's shape)
+    big_regions = " ".join(
+        " ".join(f"w{i}_{j}" for j in range(15))
+        + " [[LOWCONF]]" + f"fix{i} ok{i}"[::-1] + "[[/LOWCONF]]"
+        for i in range(20))
+    got = secondpass.two_pass_arrays(big_regions)
+    assert _two_pass(big_regions) == _compose_two_pass(big_regions)
+    assert got[2] == 300 + 40 and got[3] == 40
+    assert "fix19 ok19" in got[0] and "91xif" not in got[0]
     # two_pass at scale through the real batch entry
     big_tp = ("plain words here [[LOWCONF]]delbrag sdrow[[/LOWCONF]] "
               "more text. ") * 12000                     # ~0.8 MB

@@ -71,6 +71,80 @@ def test_majority_relaxation_accepts_hard_region():
     assert _text(blocks) == "aa good one bb also fine cc wh?t is dd"
 
 
+def test_minority_easy_region_hand_computed():
+    """A4 with easy regions a minority (1 of 3 kept): the strict
+    threshold rejects both hard regions, so their garbled words stay at
+    GARBLED_CONF, and only the easy region's words carry variants.  The
+    document confidence is recomputed by hand in float32; with 7
+    first-pass words (< 8) numpy's pairwise sum is a plain left-to-right
+    loop."""
+    import numpy as np
+
+    from frogocr_spark.core import extract
+
+    raw = ("aa [[LOWCONF]]" + "good one"[::-1] + "[[/LOWCONF]] "
+           "[[LOWCONF]]" + "wh?t is"[::-1] + "[[/LOWCONF]] "
+           "[[LOWCONF]]" + "so?"[::-1] + "[[/LOWCONF]] zz")
+    want_text = "aa good one si t?hw ?os zz"
+    f32 = np.float32
+    fp_sum = f32(0.0)
+    for c in (sp.FIRSTPASS_CONF, *[sp.GARBLED_CONF] * 5, sp.FIRSTPASS_CONF):
+        fp_sum = f32(fp_sum + c)
+    fp_mean = f32(fp_sum / f32(7))
+    sp_mean = f32(f32(sp.SECONDPASS_CONF + sp.SECONDPASS_CONF) / f32(2))
+    want_conf = float(f32(f32(fp_mean + sp_mean) / f32(2)))
+
+    text, spans, n_spans, n_var, conf = sp.two_pass_arrays(raw)
+    assert (text, n_spans, n_var) == (want_text, 7, 2)
+    assert [raw[a:b] for a, b in spans] == [
+        "aa", "doog", "eno", "si", "t?hw", "?os", "zz"]
+    assert conf == want_conf
+    rec = extract.extract_turn(raw)
+    assert rec["extracted_text"] == want_text
+    assert rec["n_variants"] == 2 and rec["confidence"] == want_conf
+    # the hard regions' words kept their first-pass confidence
+    blocks, _ = sp.extract_two_pass(raw)
+    confs = {s.text: s.confidence for s in blocks[0].segments}
+    for w in ("si", "t?hw", "?os"):
+        assert confs[w] == float(sp.GARBLED_CONF)
+    # so a 0.5 word gate drops exactly them, on both paths
+    gated = sp.two_pass_arrays(raw, True, 0.5)
+    assert gated[0] == "aa good one zz" and gated[3] == 2
+    assert gated[4] == want_conf
+    assert extract.extract_turn(
+        raw, "MinWordConfidence=0.5")["extracted_text"] == "aa good one zz"
+
+
+def test_second_pass_mean_takes_region_order():
+    """Regions easy (1 word), hard (1), easy (2): easy is a majority, so
+    all are accepted, and the second-pass mean is taken over [0.96, 0.80,
+    0.96, 0.96] in region order — the reference's element order, which
+    here decides the last bit (the sorted order gives another value)."""
+    import numpy as np
+
+    from frogocr_spark.core import extract
+
+    raw = ("aa [[LOWCONF]]eno[[/LOWCONF]] [[LOWCONF]]?owt[[/LOWCONF]] "
+           "[[LOWCONF]]ruof eerht[[/LOWCONF]]")
+    f32 = np.float32
+
+    def mean(confs):
+        acc = f32(0.0)
+        for c in confs:
+            acc = f32(acc + c)
+        return f32(acc / f32(len(confs)))
+
+    E, H = sp.SECONDPASS_CONF, sp.SECONDPASS_HARD_CONF
+    fp_mean = mean([sp.FIRSTPASS_CONF] + [sp.GARBLED_CONF] * 4)
+    want, other = (float(f32(f32(fp_mean + mean(order)) / f32(2)))
+                   for order in ([E, H, E, E], [E, E, E, H]))
+    assert want != other
+    text, _spans, n_spans, n_var, conf = sp.two_pass_arrays(raw)
+    assert (text, n_spans, n_var) == ("aa one two? three four", 5, 4)
+    assert conf == want
+    assert extract.extract_turn(raw)["confidence"] == want
+
+
 def test_erased_words_survive_as_variants():
     """The J2 replacement keeps the losing first-pass reading as a
     Variant on its second-pass replacement (the reference's per-symbol
@@ -177,11 +251,13 @@ def test_window_pruning_matches_exhaustive_scan():
 
 
 def test_sumdiv_mean_bit_identity():
-    """The hot-path sum/div confidence means (secondpass._merge_two_pass)
-    must be bit-identical to the np.mean(dtype=float32) forms they
-    replaced, over the actual confidence alphabet at every array size the
-    pairwise summation regime distinguishes (incl. >8 and >2*8192-block
-    boundaries are unreachable per-row, 4097 covers the pairwise split)."""
+    """The confidence means must be bit-identical to np.mean(dtype=float32)
+    over the actual confidence alphabet at every array size the pairwise
+    summation regime distinguishes (incl. >8 and >2*8192-block
+    boundaries are unreachable per-row, 4097 covers the pairwise split).
+    Two forms: the reference merge's sum/div (secondpass._merge_two_pass)
+    and the batch row scanner's ``np.add.reduce`` over packed float32
+    bytes (secondpass._f32_mean, used by two_pass_arrays)."""
     import random
 
     import numpy as np
@@ -195,6 +271,8 @@ def test_sumdiv_mean_bit_identity():
         lhs = a.sum(dtype=np.float32) / np.float32(n)
         rhs = np.float32(a.mean(dtype=np.float32))
         assert np.float32(lhs).tobytes() == rhs.tobytes(), n
+        assert np.float32(sp._f32_mean(a.tobytes())).tobytes() == \
+            rhs.tobytes(), n
         idx = sorted(rng.sample(range(n), max(1, n // 3)))
         lhs = a[idx].sum(dtype=np.float32) / np.float32(len(idx))
         rhs = np.float32(a[idx].mean(dtype=np.float32))
