@@ -40,7 +40,10 @@ def main(argv: list[str] | None = None) -> None:
                         "--input (deterministic, seed-stable)")
     p.add_argument("--skew-conv-turns", type=int, default=0)
     p.add_argument("--output", required=True, help="output table root")
-    p.add_argument("--run-id", default="r1")
+    p.add_argument("--run-id", default="r1",
+                   help="commit id of the output and its sidecar; a "
+                        "rerun of a committed id raises if the input has "
+                        "new turns, so give new input a new id")
     p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--salt-buckets", type=int, default=16)
     p.add_argument("--no-resume", action="store_true")

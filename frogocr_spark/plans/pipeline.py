@@ -3,11 +3,16 @@
     read(transcripts)
       → F1 anti-join committed keys           (resume)
       → conv_id-salted repartition + secondary sort   (skew + ordering)
-      → fused mapInArrow extraction           (one Arrow pass)
-      → idempotent run_id append              (exactly-once)
-      → lineage/metrics sidecar from the committed output (single
-        extraction pass: the sidecar aggregates the written parquet, so
-        extraction is never recomputed)
+      → commit_run:
+          observe rows_in                     (rows entering extraction)
+          → fused mapInArrow extraction       (one Arrow pass)
+          → idempotent run_id append          (exactly-once)
+          → lineage/metrics sidecar built once from the committed run
+          → its totals read back, reconciled against rows_in
+
+The stream's ``foreachBatch`` calls the same ``commit_run`` per epoch
+with ``run_id=epoch_<N>`` — the reference's one scheduler loop for
+drain and continuous modes (``Source/Application.cpp:287-336``).
 
 Scale notes: every step before the UDF is Catalyst-planned (scan with
 column pruning, anti-join broadcast/shuffle via AQE); the UDF itself is
@@ -19,15 +24,18 @@ of total table size per-partition.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from ..operators.extraction import extract_turns
 from ..operators.resume import filter_unprocessed
 from ..operators.skew import DEFAULT_SALT_BUCKETS, salted_repartition
 from ..sources.catalog import BucketedTable, Table
-from .metrics import build_sidecar
+from .metrics import build_sidecar, sidecar_totals
 
 
 @dataclass
@@ -37,7 +45,6 @@ class PipelineConfig:
     num_partitions: int | None = None
     salt_buckets: int = DEFAULT_SALT_BUCKETS
     resume: bool = True
-    stage_settings: dict = field(default_factory=dict)
     # bucketed output layout (the 10^12-row resume path): when set, the
     # extraction output lands in a conv_id-bucketed session table of this
     # name and the resume anti-join is storage-partitioned — zero
@@ -47,9 +54,53 @@ class PipelineConfig:
     buckets: int = 32
 
 
+def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
+               run_id: str, out_table: Table | BucketedTable,
+               side_table: Table) -> dict:
+    """Extract ``todo`` with ``extract`` and commit it as run ``run_id``.
+
+    Observe → append → build the sidecar from the written run → append
+    it → read its totals back → reconcile; the observe() counters fill
+    on the append's write.  ``rows_in`` is observed on ``todo`` as
+    given, after any shuffle: AQE swaps a shuffle stage that produced
+    no rows, observe() included, for an empty relation.  Returns the
+    sidecar totals of the committed run (a blind retry re-reports the
+    run it left intact); raises RuntimeError when they differ from the
+    rows or parse failures that entered or left extraction."""
+    obs_in, obs_out = Observation("rows_in"), Observation("extract")
+    extracted = extract(
+        todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in")))
+    extracted = extracted.observe(
+        obs_out,
+        F.count(F.lit(1)).alias("rows_out"),
+        F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
+        F.sum(F.col("empty_after_strip").cast("long")).alias("empty"))
+    out_table.append(extracted, run_id)
+    observed = {**obs_in.get, **obs_out.get}
+
+    side_table.append(build_sidecar(out_table.read_snapshot(run_id), run_id),
+                      run_id)
+    stats = sidecar_totals(side_table, run_id)
+    if observed["rows_in"] and (
+            observed["rows_in"] != stats["rows_out"]
+            or (observed["parse_failures"] or 0) != stats["parse_failures"]):
+        raise RuntimeError(
+            f"run {run_id!r}: extraction observed "
+            f"{observed['rows_in']} rows in / {observed['parse_failures']} "
+            f"parse failures, committed output has {stats['rows_out']} / "
+            f"{stats['parse_failures']}")
+    stats["observed"] = observed
+    return stats
+
+
 def run_extraction(spark: SparkSession, transcripts: DataFrame,
                    cfg: PipelineConfig) -> dict:
-    """Execute the pipeline; returns run stats from the sidecar."""
+    """Execute the pipeline; returns run stats from the sidecar.
+
+    With resume on, a rerun under an already-committed ``run_id`` that
+    still finds new rows raises ValueError before writing anything: the
+    append replaces a run, so it would drop the rows committed before.
+    A blind retry that finds nothing new stays a no-op."""
     if cfg.bucketed_table:
         out_table = BucketedTable(spark, cfg.bucketed_table,
                                   buckets=cfg.buckets)
@@ -61,6 +112,11 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     if cfg.resume:
         todo = filter_unprocessed(
             todo, out_table.processed_keys("conv_id", "turn_idx"))
+        if cfg.run_id in out_table.snapshots() and not todo.isEmpty():
+            raise ValueError(
+                f"run {cfg.run_id!r} is already committed and the input "
+                f"has turns it does not hold; rerunning it would replace "
+                f"its rows with only the new ones. Pass a new --run-id.")
 
     # salt_buckets=0 → map-only plan (zero shuffles): correct whenever the
     # input layout already bounds task sizes (parquet maxPartitionBytes
@@ -68,51 +124,5 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     # per-row).  The salted shuffle is for pathological layouts and for
     # feeding downstream per-conversation operators.
     if cfg.salt_buckets > 0:
-        distributed = salted_repartition(todo, cfg.num_partitions,
-                                         cfg.salt_buckets)
-    else:
-        distributed = todo
-    extracted = extract_turns(distributed)
-    # A10/X5: global counters piggyback on the write action itself via
-    # observe() — no extra job (the per-partition detail lives in the
-    # sidecar below)
-    from pyspark.sql import functions as F
-    from pyspark.sql.observation import Observation
-    obs = Observation("extract")
-    extracted = extracted.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_out"),
-        F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-        F.sum(F.col("empty_after_strip").cast("long")).alias("empty"))
-    out_table.append(extracted, cfg.run_id)
-    observed = obs.get
-
-    if cfg.bucketed_table:
-        this_run = (out_table.read()
-                    .where(F.col("run_id") == cfg.run_id).drop("run_id"))
-    else:
-        this_run = spark.read.parquet(
-            os.path.join(out_table.data_dir, f"run_id={cfg.run_id}"))
-    sidecar = build_sidecar(this_run, cfg.run_id, cfg.stage_settings)
-    side_table.append(sidecar, cfg.run_id)
-
-    agg = sidecar.groupBy().sum("rows_in", "rows_out",
-                                "empty_after_strip", "parse_failures").collect()
-    if agg and agg[0][0] is not None:
-        r = agg[0]
-        stats = {"rows_in": r[0], "rows_out": r[1],
-                 "empty_after_strip": r[2], "parse_failures": r[3]}
-    else:
-        stats = {"rows_in": 0, "rows_out": 0,
-                 "empty_after_strip": 0, "parse_failures": 0}
-    # observe() counters came free with the write; reconcile vs sidecar
-    if observed.get("rows_out") and (
-            observed["rows_out"] != stats["rows_out"]
-            or (observed["parse_failures"] or 0) != stats["parse_failures"]):
-        raise RuntimeError(
-            f"run {cfg.run_id!r}: extraction observed "
-            f"{observed['rows_out']} rows / {observed['parse_failures']} "
-            f"parse failures, committed output has {stats['rows_out']} / "
-            f"{stats['parse_failures']}")
-    stats["observed"] = dict(observed)
-    return stats
+        todo = salted_repartition(todo, cfg.num_partitions, cfg.salt_buckets)
+    return commit_run(todo, extract_turns, cfg.run_id, out_table, side_table)

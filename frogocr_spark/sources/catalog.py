@@ -11,12 +11,14 @@ parquet directory with identical *semantics* behind one interface
   reference ``Source/Application.cpp:62-64,518-521`` — becomes
   exactly-once: checkpointed keys + idempotent writes, SURVEY §2.8 T6).
 - ``read()``              — full table scan.
+- ``snapshots()`` / ``read_snapshot(run_id)`` — committed run_ids / one
+  run's rows.
 - ``processed_keys()``    — the committed key set used by the resume
   anti-join (output-exists skip F1 — reference
   ``Source/TaskProcessor.cpp:191-209``).
 
 At 100 TB the backend would be a real Iceberg catalog; every call site
-only touches this class, so the swap is one module.
+only touches these classes, so the swap is one module.
 """
 
 from __future__ import annotations
@@ -44,7 +46,11 @@ class Table:
 
     def append(self, df: DataFrame, run_id: str) -> None:
         """Idempotent append: one directory per run_id; re-running a failed
-        run_id replaces only that run's files.
+        run_id replaces only that run's files.  Replace, not add: the
+        rows staged under a run_id become the whole run (a stream's
+        replayed epoch relies on this), so ``plans.pipeline.
+        run_extraction`` refuses a resumed rerun of a committed run_id
+        that finds new rows.
 
         Staged publish: the write lands in a staging dir, then atomically
         replaces the run dir — EXCEPT when the staging result is empty and
@@ -408,6 +414,21 @@ class BucketedTable:
 
     def read(self) -> DataFrame:
         return self.spark.table(self.name)
+
+    def snapshots(self) -> list[str]:
+        """Committed run_ids, sorted (partition dirs; no Spark job)."""
+        loc = self._location()
+        if not os.path.isdir(loc):
+            return []
+        return [n.split("=", 1)[1] for n in sorted(os.listdir(loc))
+                if n.startswith("run_id=")]
+
+    def read_snapshot(self, run_id: str) -> DataFrame:
+        """One committed run's rows, without the ``run_id`` column."""
+        from pyspark.sql import functions as F
+
+        return (self.read().where(F.col("run_id") == run_id)
+                .drop("run_id"))
 
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
         if not self.exists():

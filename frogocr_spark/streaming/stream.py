@@ -10,9 +10,12 @@ Mapping (reference → Spark):
   ``maxFilesPerTrigger``
 - at-most-once fetch-then-delete (``:62-64,518-521``) → checkpointed
   offsets + idempotent per-epoch writes = exactly-once (strictly stronger)
-
-The transformation is the SAME fused extraction operator as the batch
-plan — Structured Streaming reuses the incremental Catalyst plan.
+- one scheduler loop for both modes → each epoch goes through the batch
+  pipeline's commit step (``plans.pipeline.commit_run``): the SAME fused
+  extraction operator, the append as run ``epoch_<N>``, and that
+  epoch's lineage sidecar in ``<output_dir>/metrics``, reconciled
+  against the rows the epoch read.  A replayed epoch replaces its own
+  output and sidecar.
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.extraction import extract_turns
+from ..plans.pipeline import commit_run
 from ..sources.catalog import Table
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
@@ -31,7 +35,8 @@ def start_stream(spark: SparkSession, input_dir: str, output_dir: str,
                  checkpoint_dir: str | None = None,
                  available_now: bool = True,
                  max_files_per_trigger: int | None = None) -> StreamingQuery:
-    """Stream transcripts parquet dir → extraction table (exactly-once)."""
+    """Stream transcripts parquet dir → extraction table + per-epoch
+    sidecar (exactly-once)."""
     if checkpoint_dir is None:
         checkpoint_dir = os.path.join(output_dir, "_checkpoint")
     reader = (spark.readStream.schema(TRANSCRIPT_SCHEMA)
@@ -40,14 +45,14 @@ def start_stream(spark: SparkSession, input_dir: str, output_dir: str,
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.load(input_dir)
 
-    extracted = extract_turns(stream)
     out_table = Table(spark, os.path.join(output_dir, "extractions"))
+    side_table = Table(spark, os.path.join(output_dir, "metrics"))
 
     def write_epoch(batch_df, epoch_id: int) -> None:
-        # idempotent per-epoch append: a replayed epoch overwrites itself
-        out_table.append(batch_df, run_id=f"epoch_{epoch_id}")
+        commit_run(batch_df, extract_turns, f"epoch_{epoch_id}", out_table,
+                   side_table)
 
-    writer = (extracted.writeStream
+    writer = (stream.writeStream
               .foreachBatch(write_epoch)
               .option("checkpointLocation", checkpoint_dir)
               .outputMode("append"))

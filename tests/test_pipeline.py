@@ -8,9 +8,11 @@ from frogocr_spark.core.extract import extract_turn
 from frogocr_spark.operators.extraction import extract_turns
 from frogocr_spark.operators.resume import filter_unprocessed
 from frogocr_spark.operators.skew import salted_repartition
+from frogocr_spark.plans import pipeline
+from frogocr_spark.plans.metrics import TOTALS
 from frogocr_spark.plans.pipeline import PipelineConfig, run_extraction
 from frogocr_spark.sources import payloadgen, transcripts
-from frogocr_spark.sources.catalog import Table
+from frogocr_spark.sources.catalog import BucketedTable, Table
 
 N_CONVS = 40
 
@@ -104,7 +106,8 @@ def test_resume_exactly_once(spark, tdf, oracle, tmp_path):
     # idempotent retry of the same run_id: no duplicates
     stats3 = run_extraction(spark, tdf, PipelineConfig(
         output_dir=str(tmp_path), run_id="r3"))
-    assert stats3["rows_out"] == 0
+    # a zero-row run: the sidecar read-back sums to zeros
+    assert {k: stats3[k] for k in TOTALS} == dict.fromkeys(TOTALS, 0)
     assert Table(spark, str(tmp_path / "extractions")).read().count() == len(oracle)
 
 
@@ -181,3 +184,53 @@ def test_reconciliation_mismatch_raises(spark, tdf, tmp_path, monkeypatch):
     assert lost > 0
     with pytest.raises(RuntimeError, match=f"{n} rows.*{n - lost} /"):
         run_extraction(spark, tdf, cfg)
+
+
+def test_extraction_row_loss_raises_through_rows_in(spark, tdf, tmp_path,
+                                                    monkeypatch):
+    """rows_in is observed on the frame that enters extraction, so rows
+    the extraction itself drops (here: turn_idx 3) fail the
+    reconciliation, although the extraction output and the committed
+    files agree with each other."""
+    from pyspark.sql import functions as F
+
+    extract = pipeline.extract_turns
+    monkeypatch.setattr(
+        pipeline, "extract_turns",
+        lambda df: extract(df).where(F.col("turn_idx") != 3))
+    cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
+                         num_partitions=4)
+    n = tdf.count()
+    lost = tdf.where(F.col("turn_idx") == 3).count()
+    assert lost > 0
+    with pytest.raises(RuntimeError, match=f"{n} rows in.*{n - lost} /"):
+        run_extraction(spark, tdf, cfg)
+
+
+@pytest.mark.parametrize("bucketed", [False, True], ids=["parquet",
+                                                         "bucketed"])
+def test_rerun_of_committed_run_id_with_new_rows_raises(spark, tmp_path,
+                                                        bucketed):
+    """A resumed rerun under a committed run_id that finds new rows
+    raises before writing: the append replaces a run, so going on would
+    leave only the new rows under that run_id."""
+    cfg = PipelineConfig(output_dir=str(tmp_path), run_id="r1",
+                         salt_buckets=0, buckets=4,
+                         bucketed_table="bt_rerun" if bucketed else None)
+
+    def keys():
+        out = (BucketedTable(spark, "bt_rerun").read() if bucketed
+               else Table(spark, str(tmp_path / "extractions")).read())
+        return sorted(out.select("conv_id", "turn_idx").collect())
+
+    try:
+        first = transcripts.generate(spark, 20)
+        run_extraction(spark, first, cfg)
+        committed = keys()
+        assert committed == sorted(first.select("conv_id",
+                                                "turn_idx").collect())
+        with pytest.raises(ValueError, match="'r1'.*new --run-id"):
+            run_extraction(spark, transcripts.generate(spark, 40), cfg)
+        assert keys() == committed
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bt_rerun")

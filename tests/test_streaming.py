@@ -3,6 +3,8 @@
 import os
 
 from frogocr_spark.operators.extraction import extract_turns
+from frogocr_spark.plans.metrics import sidecar_totals
+from frogocr_spark.plans.pipeline import commit_run
 from frogocr_spark.sources import transcripts
 from frogocr_spark.sources.catalog import Table
 from frogocr_spark.streaming import stream
@@ -44,3 +46,43 @@ def test_checkpoint_no_reprocessing(spark, tmp_path):
     assert n2 > n1
     keys = table.read().select("conv_id", "turn_idx")
     assert keys.count() == keys.distinct().count()  # exactly-once
+
+
+def test_drain_writes_one_sidecar_per_epoch(spark, tmp_path):
+    """Every non-empty epoch is committed with its own sidecar run,
+    whose totals add up to the input; committing the same epoch again
+    replaces its output and sidecar instead of adding to them."""
+    input_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    tdf = transcripts.generate(spark, 12)
+    tdf.repartition(3).write.parquet(input_dir)
+    n = tdf.count()
+    q = stream.start_stream(spark, input_dir, out_dir,
+                            max_files_per_trigger=1)
+    q.awaitTermination()
+    epochs = [f"epoch_{p['batchId']}" for p in q.recentProgress
+              if p["numInputRows"] > 0]
+    assert len(epochs) == 3
+
+    side = Table(spark, os.path.join(out_dir, "metrics"))
+    assert side.snapshots() == sorted(epochs)
+
+    assert sum(sidecar_totals(side, e)["rows_out"] for e in epochs) == n
+    assert sum(sidecar_totals(side, e)["rows_in"] for e in epochs) == n
+
+    # replay the first epoch's input under its own epoch id, twice
+    out = Table(spark, os.path.join(out_dir, "extractions"))
+    first = sidecar_totals(side, epochs[0])
+    # the keys are collected first: the replay overwrites the files
+    # they come from
+    epoch_keys = spark.createDataFrame(
+        out.read_snapshot(epochs[0]).select("conv_id", "turn_idx").collect())
+    replay = spark.read.parquet(input_dir).join(
+        epoch_keys, ["conv_id", "turn_idx"], "left_semi")
+    for _ in range(2):
+        stats = commit_run(replay, extract_turns, epochs[0], out, side)
+        assert stats["observed"]["rows_in"] == first["rows_out"]
+    assert side.snapshots() == sorted(epochs)
+    assert sidecar_totals(side, epochs[0]) == first
+    keys = out.read().select("conv_id", "turn_idx")
+    assert keys.count() == keys.distinct().count() == n
