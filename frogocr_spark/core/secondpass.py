@@ -114,13 +114,6 @@ def majority_vote_relaxation(confidences: list[float],
 _WORD_RE = re.compile(r"\S+")
 
 
-def _words_of(text: str, base: int, conf: np.float32) -> list[Word]:
-    conf_f = float(conf)
-    return [Word(m.group(), base + m.start(), base + m.end(), conf_f,
-                 base + m.start())
-            for m in _WORD_RE.finditer(text)]
-
-
 def _first_pass_arrays(raw: str) -> tuple[list[str], list[int], list[int],
                                           list[float],
                                           list[tuple[int, int]]]:

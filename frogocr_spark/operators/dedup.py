@@ -489,9 +489,9 @@ def minhash_lsh_pairs_incremental(
     the artifact a production pipeline persists per snapshot) and the
     base TEXT is never read.  ``new_signatures`` does the same for the
     increment — a caller that also persists the batch's signatures
-    (streaming ingestion) computes them ONCE and shares them.  ids must
-    be disjoint across the two inputs (same contract as the union the
-    batch operator would see).
+    computes them ONCE and shares them.  ids must be disjoint across
+    the two inputs (same contract as the union the batch operator
+    would see).
     Estimated Jaccard is verified on every emitted pair exactly as in
     :func:`minhash_lsh_pairs`; hot-bucket capping composes the same way
     if needed (apply it to the unioned banded relation)."""

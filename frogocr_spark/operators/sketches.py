@@ -105,8 +105,7 @@ def hll_merge_registers(regs: DataFrame,
     """Union-merge register tables: element-wise max per (group,
     bucket).  max is idempotent/commutative/associative, so merging is
     safe under ANY delivery semantics — replayed or duplicated register
-    rows cannot change the result (the streaming ingest relies on
-    this)."""
+    rows cannot change the result."""
     return (regs.groupBy(*group_cols, "bucket")
             .agg(F.max("reg").alias("reg")))
 
@@ -114,7 +113,7 @@ def hll_merge_registers(regs: DataFrame,
 def hll_estimate_from_registers(regs: DataFrame, group_cols: list[str],
                                 p: int = 8) -> DataFrame:
     """The estimate finish over an (already-merged) register table —
-    shared by the batch estimator and the streaming ingest reader."""
+    shared by the batch estimator and the union/intersection estimate."""
     c = hll_constants(p)
     # column-valued shift amount → SQL expr (the PySpark shiftleft
     # wrapper only takes a literal bit count)

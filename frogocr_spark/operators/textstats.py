@@ -121,10 +121,9 @@ def rolling_fingerprint(df: DataFrame, text_col: str = "text",
 def curation_gates(df: DataFrame, text_col: str = "text",
                    lang: str = "en", min_quality: float = 0.5,
                    min_tokens: int = 5) -> DataFrame:
-    """The canonical curation gate set (language + quality + length),
-    shared by the batch ``curate`` contract query and the streaming
-    ``curate_stream`` twin so the two paths cannot silently drift.
-    Appends lang_id / quality / n_tokens columns and filters."""
+    """The canonical curation gate set (language + quality + length) of
+    the ``curate`` contract query.  Appends lang_id / quality / n_tokens
+    columns and filters."""
     c = F.col(text_col)
     return (df.withColumn("lang_id", language_id(c))
             .withColumn("quality", quality_score(c))

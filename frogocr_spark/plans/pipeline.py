@@ -78,8 +78,8 @@ def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
     out_table.append(extracted, run_id)
     observed = {**obs_in.get, **obs_out.get}
 
-    side_table.append(build_sidecar(out_table.read_snapshot(run_id), run_id),
-                      run_id)
+    side_table.append(build_sidecar(
+        out_table.read_snapshot(run_id, extracted.schema), run_id), run_id)
     stats = sidecar_totals(side_table, run_id)
     if observed["rows_in"] and (
             observed["rows_in"] != stats["rows_out"]

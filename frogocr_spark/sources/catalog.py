@@ -26,6 +26,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Table:
@@ -52,9 +53,13 @@ class Table:
         run_extraction`` refuses a resumed rerun of a committed run_id
         that finds new rows.
 
-        Staged publish: the write lands in a staging dir, then atomically
-        replaces the run dir — EXCEPT when the staging result is empty and
-        a committed run dir already exists.  That case is a blind retry of
+        Staged publish: the write lands in a staging dir; the committed
+        run dir is renamed aside, the staging dir renamed into its place,
+        then the set-aside dir deleted (or by the next append of the
+        run_id, after a crash).  Readers see the old run, the new run or
+        no run (resume re-extracts it), never part of one.  The publish
+        is skipped when the staging result is empty and a committed run
+        dir already exists.  That case is a blind retry of
         an already-COMPLETED run (the resume anti-join filtered everything
         out); clobbering the committed output with the empty result would
         lose the run's data (found by a retry probe — the pre-staging
@@ -65,10 +70,12 @@ class Table:
         import pyarrow.parquet as pq
 
         out = os.path.join(self.data_dir, f"run_id={run_id}")
-        # staging lives OUTSIDE data_dir: read() is a recursive lookup and
-        # must never see half-written files
+        # staged and set-aside dirs live OUTSIDE data_dir: read() is a
+        # recursive lookup and must never see half-written/deleted files
         staging = os.path.join(self.path, f".staging-run_id={run_id}")
+        replaced = os.path.join(self.path, f".replaced-run_id={run_id}")
         shutil.rmtree(staging, ignore_errors=True)
+        shutil.rmtree(replaced, ignore_errors=True)
         df.write.mode("overwrite").parquet(staging)
         # footer row counts, no Spark job: an empty DataFrame writes one
         # schema-only part file, and a corrupt footer raises here instead
@@ -79,13 +86,12 @@ class Table:
             if f.endswith(".parquet") and not f.startswith((".", "_"))) > 0
         if has_rows or not os.path.isdir(out):
             os.makedirs(self.data_dir, exist_ok=True)
-            shutil.rmtree(out, ignore_errors=True)
+            if os.path.isdir(out):
+                os.replace(out, replaced)
             os.replace(staging, out)
+            shutil.rmtree(replaced, ignore_errors=True)
         else:
             shutil.rmtree(staging, ignore_errors=True)
-
-    def overwrite(self, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(os.path.join(self.data_dir, "run_id=all"))
 
     def _run_dirs(self) -> list[str]:
         """Live run-dir names, superseded-by-compaction dirs excluded.
@@ -190,8 +196,6 @@ class Table:
         data files containing matches; this full-table rewrite is the
         sandbox-scale analog — the protocol (manifest supersede + atomic
         publish) is the part that transfers."""
-        import shutil
-
         from frogocr_spark.operators.tables import upsert
 
         live = self._run_dirs()
@@ -304,10 +308,12 @@ class Table:
                           ignore_errors=True)
         return removed + dead
 
-    def read_snapshot(self, run_id: str) -> DataFrame:
-        """Read one committed run's rows (snapshot-scoped scan)."""
-        return self.spark.read.parquet(
-            os.path.join(self.data_dir, f"run_id={run_id}"))
+    def read_snapshot(self, run_id: str,
+                      schema: StructType | None = None) -> DataFrame:
+        """Read one committed run's rows (snapshot-scoped scan); given the
+        schema it was written with, Spark runs no schema-inference job."""
+        return self.spark.read.load(
+            os.path.join(self.data_dir, f"run_id={run_id}"), "parquet", schema)
 
     def read_until(self, run_id: str) -> DataFrame:
         """Time travel: union of snapshots up to and including ``run_id``
@@ -423,8 +429,10 @@ class BucketedTable:
         return [n.split("=", 1)[1] for n in sorted(os.listdir(loc))
                 if n.startswith("run_id=")]
 
-    def read_snapshot(self, run_id: str) -> DataFrame:
-        """One committed run's rows, without the ``run_id`` column."""
+    def read_snapshot(self, run_id: str,
+                      schema: StructType | None = None) -> DataFrame:
+        """One committed run's rows, without the ``run_id`` column (the
+        catalog holds the schema; ``schema`` is unused)."""
         from pyspark.sql import functions as F
 
         return (self.read().where(F.col("run_id") == run_id)

@@ -266,3 +266,78 @@ def test_append_truncated_part_file_raises(spark, tmp_path, monkeypatch):
         t.append(df, "r1")
     monkeypatch.undo()
     assert t.read().count() == 2     # the committed run is untouched
+
+
+def test_append_publish_crash_never_shows_part_of_a_run(spark, tmp_path,
+                                                         monkeypatch):
+    """A crash at any filesystem step of a replacing append leaves the
+    run's rows all old, all new or absent (resume re-extracts an absent
+    run) — never part of either — and the next append of that run_id
+    publishes cleanly and leaves no staged or set-aside dir behind."""
+    import os
+    import shutil
+
+    old = spark.createDataFrame([(i, "old") for i in range(8)],
+                                "id long, v string").repartition(4)
+    new = spark.createDataFrame([(i, "new") for i in range(8)],
+                                "id long, v string").repartition(4)
+    want_old = [(i, "old") for i in range(8)]
+    want_new = [(i, "new") for i in range(8)]
+    real_replace, real_rmtree = os.replace, shutil.rmtree
+
+    def rows(t):
+        if not t.snapshots():
+            return []
+        return sorted((r.id, r.v) for r in t.read().collect())
+
+    def append_crashing_at(t, fail_at):
+        """Append ``new`` as r1, raising at the ``fail_at``-th rename or
+        rmtree under the table root; False if the append finished."""
+        steps = 0
+
+        def crash_here(path):
+            nonlocal steps
+            if not str(path).startswith(t.path):
+                return False
+            steps += 1
+            return steps - 1 == fail_at
+
+        def replace(src, dst):
+            if crash_here(src):
+                raise OSError("injected crash before rename")
+            real_replace(src, dst)
+
+        def rmtree(path, *args, **kwargs):
+            if crash_here(path):
+                # killed part-way through: one part file gone, rest left
+                for root, _dirs, files in os.walk(path):
+                    for f in files:
+                        if f.endswith(".parquet"):
+                            os.remove(os.path.join(root, f))
+                            raise OSError("injected crash mid-rmtree")
+                raise OSError("injected crash mid-rmtree")
+            real_rmtree(path, *args, **kwargs)
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", replace)
+            m.setattr(shutil, "rmtree", rmtree)
+            try:
+                t.append(new, "r1")
+            except OSError:
+                return True
+        return False
+
+    fail_at = 0
+    while True:
+        t = Table(spark, str(tmp_path / f"tbl{fail_at}"))
+        t.append(old, "r1")
+        assert rows(t) == want_old
+        if not append_crashing_at(t, fail_at):
+            break
+        assert rows(t) in (want_old, want_new, []), fail_at
+        t.append(new, "r1")
+        assert rows(t) == want_new, fail_at
+        assert os.listdir(t.path) == ["data"], fail_at
+        fail_at += 1
+    assert rows(t) == want_new
+    assert fail_at >= 3      # both renames and the cleanup were each hit

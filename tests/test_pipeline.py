@@ -111,9 +111,19 @@ def test_resume_exactly_once(spark, tdf, oracle, tmp_path):
     assert Table(spark, str(tmp_path / "extractions")).read().count() == len(oracle)
 
 
+def _digest(df):
+    """Order-independent digest of every column but ``partition_id``."""
+    from pyspark.sql import functions as F
+
+    cols = [c for c in df.columns if c != "partition_id"]
+    return df.select(
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)"))).first()
+
+
 def test_skewed_conversation(spark, tmp_path):
     """Invariant: one conv with 2000 turns among 20 small ones still
-    produces exact output under salting."""
+    produces exact output under salting, and the same bytes unsalted."""
     skew = transcripts.generate(spark, 20, skew_conv_turns=2000)
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="r1",
                          num_partitions=8, salt_buckets=8)
@@ -130,6 +140,11 @@ def test_skewed_conversation(spark, tmp_path):
               for r in big.where("turn_idx in (0, 999, 1999)").collect()}
     for t, text in sample.items():
         assert text == extract_turn(payloadgen.gen_turn(0, t)["text"])["extracted_text"]
+    unsalted = tmp_path / "unsalted"
+    run_extraction(spark, skew, PipelineConfig(
+        output_dir=str(unsalted), run_id="r1", salt_buckets=0))
+    assert _digest(out) == _digest(
+        Table(spark, str(unsalted / "extractions")).read())
 
 
 def test_filter_unprocessed_none_passthrough(spark, tdf):
