@@ -38,14 +38,6 @@ def ctc_collapse(scores: np.ndarray,
     return kept.tolist(), float(vals[keep].mean())
 
 
-def softmax(x: np.ndarray, axis: int = -1) -> np.ndarray:
-    """Numerically-stable softmax (A8 — ``Source/Paddle/utility.cpp:102-125``
-    subtracts the max before exponentiating, same here)."""
-    shifted = x - x.max(axis=axis, keepdims=True)
-    e = np.exp(shifted)
-    return e / e.sum(axis=axis, keepdims=True)
-
-
 def ctc_decode(scores: np.ndarray, vocab: list[str]) -> tuple[str, float]:
     ids, conf = ctc_collapse(scores)
     return "".join(vocab[i] for i in ids), conf

@@ -1141,35 +1141,6 @@ def ewma_trunc(df: DataFrame, key_col: str, value_col,
                     F.expr("_num DIV _den").alias("ewma")))
 
 
-def ewma_trunc_oracle_sql(src_sql: str, key_col: str, value_expr: str,
-                          k: int = 8, id_col: str = "event_id") -> str:
-    """DuckDB twin of :func:`ewma_trunc` — the same unrolled lag sum
-    over the same (epoch_us, id) total order."""
-    over = f"OVER (PARTITION BY {key_col} ORDER BY epoch_us(ts), {id_col})"
-    nums, dens = [], []
-    for i in range(k):
-        wt = 1 << (k - 1 - i)
-        xi = f"lag(x, {i}) {over}" if i else "x"
-        nums.append(f"coalesce(({xi}) * {wt}, 0)")
-        dens.append(f"CASE WHEN ({xi}) IS NOT NULL THEN {wt} ELSE 0 END")
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {key_col}, {id_col}, ts,
-                   CAST({value_expr} AS BIGINT) AS x
-            FROM src
-        ), summed AS (
-            SELECT {key_col}, {id_col}, x,
-                   {' + '.join(nums)} AS num,
-                   {' + '.join(dens)} AS den
-            FROM base
-        )
-        SELECT {key_col}, {id_col}, x,
-               CAST(num // den AS BIGINT) AS ewma
-        FROM summed
-    """
-
-
 def benford_digits(df: DataFrame, value_col) -> DataFrame:
     """Benford's-law first-digit audit (the classic fraud/synthetic
     -data screen): observed counts and frequencies of the leading
@@ -1203,29 +1174,6 @@ def benford_digits(df: DataFrame, value_col) -> DataFrame:
                     F.col("delta_e6").cast("long").alias("delta_e6")))
 
 
-def benford_digits_oracle_sql(src_sql: str, value_expr: str) -> str:
-    """DuckDB twin of :func:`benford_digits` — same constant table."""
-    bens = [301030, 176091, 124939, 96910, 79181,
-            66947, 58503, 51153, 45757]
-    ben_case = " ".join(f"WHEN {d + 1} THEN {b}"
-                        for d, b in enumerate(bens))
-    return f"""
-        WITH src AS ({src_sql}),
-        counts AS (
-            SELECT CAST(substr(CAST(CAST(floor({value_expr}) AS BIGINT)
-                        AS VARCHAR), 1, 1) AS INT) AS digit,
-                   count(*) AS n
-            FROM src GROUP BY 1
-        ), total AS (SELECT sum(n) AS n_all FROM counts)
-        SELECT digit, CAST(n AS BIGINT) AS n,
-               CAST((n * 1000000) // n_all AS BIGINT) AS freq_e6,
-               CAST(CASE digit {ben_case} END AS BIGINT) AS benford_e6,
-               CAST(abs((n * 1000000) // n_all -
-                        CASE digit {ben_case} END) AS BIGINT) AS delta_e6
-        FROM counts CROSS JOIN total
-    """
-
-
 def session_paths(df: DataFrame, key_col: str, state_col: str,
                   depth: int = 3, k: int = 20, ts_col: str = "ts",
                   id_col: str = "event_id") -> DataFrame:
@@ -1256,30 +1204,6 @@ def session_paths(df: DataFrame, key_col: str, state_col: str,
             .orderBy(F.col("n_keys").desc(), F.col("path").asc())
             .limit(int(k))
             .select("path", F.col("n_keys").cast("long").alias("n_keys")))
-
-
-def session_paths_oracle_sql(src_sql: str, key_col: str,
-                             state_col: str, depth: int = 3,
-                             k: int = 20, id_col: str = "event_id"
-                             ) -> str:
-    """DuckDB twin of :func:`session_paths` — rank window + ordered
-    string_agg instead of the array collect (the hash match proves the
-    two formulations equivalent)."""
-    return f"""
-        WITH src AS ({src_sql}),
-        ranked AS (
-            SELECT {key_col} AS key, {state_col} AS s,
-                   row_number() OVER (PARTITION BY {key_col}
-                       ORDER BY epoch_us(ts), {id_col}) AS rn
-            FROM src
-        ), paths AS (
-            SELECT key, string_agg(s, '>' ORDER BY rn) AS path
-            FROM ranked WHERE rn <= {int(depth)} GROUP BY key
-        )
-        SELECT path, CAST(count(*) AS BIGINT) AS n_keys
-        FROM paths GROUP BY path
-        ORDER BY n_keys DESC, path ASC LIMIT {int(k)}
-    """
 
 
 def drift_chi2(df: DataFrame, state_col: str,
@@ -1340,35 +1264,6 @@ def drift_chi2(df: DataFrame, state_col: str,
                       "chi2_e6")
 
 
-def drift_chi2_oracle_sql(src_sql: str, state_col: str) -> str:
-    """DuckDB twin of :func:`drift_chi2`."""
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {state_col} AS state,
-                   epoch_us(ts) // {US_PER_DAY} AS day
-            FROM src
-        ), split AS (
-            SELECT (min(day) + max(day) + 1) // 2 AS d_split FROM base
-        ), per AS (
-            SELECT state,
-                   sum(CASE WHEN day < d_split THEN 1 ELSE 0 END) AS a,
-                   sum(CASE WHEN day < d_split THEN 0 ELSE 1 END) AS b
-            FROM base CROSS JOIN split GROUP BY state
-        ), tot AS (SELECT sum(a) AS na, sum(b) AS nb FROM per)
-        SELECT state AS {state_col},
-               CAST(a AS BIGINT) AS n_a, CAST(b AS BIGINT) AS n_b,
-               CASE WHEN CAST(na AS HUGEINT) * nb * (a + b) > 0 THEN
-                   CAST(((CAST(a AS HUGEINT) * nb
-                          - CAST(b AS HUGEINT) * na)
-                         * (CAST(a AS HUGEINT) * nb
-                            - CAST(b AS HUGEINT) * na) * 1000000) //
-                        (CAST(na AS HUGEINT) * nb * (a + b)) AS BIGINT)
-               END AS chi2_e6
-        FROM per CROSS JOIN tot
-    """
-
-
 def activity_bitmap(df: DataFrame, key_col: str,
                     ts_col: str = "ts") -> DataFrame:
     """Per-key hour-of-day activity bitmap: bit h set iff the key has
@@ -1392,21 +1287,6 @@ def activity_bitmap(df: DataFrame, key_col: str,
                     F.col("hours_mask").cast("long").alias("hours_mask"),
                     F.expr("bit_count(hours_mask)").cast("int")
                     .alias("n_hours")))
-
-
-def activity_bitmap_oracle_sql(src_sql: str, key_col: str) -> str:
-    """DuckDB twin of :func:`activity_bitmap`."""
-    return f"""
-        WITH src AS ({src_sql})
-        SELECT {key_col},
-               CAST(bit_or(CAST(1 AS BIGINT) <<
-                    CAST((epoch_us(ts) // 3600000000) % 24 AS INT))
-                    AS BIGINT) AS hours_mask,
-               CAST(bit_count(bit_or(CAST(1 AS BIGINT) <<
-                    CAST((epoch_us(ts) // 3600000000) % 24 AS INT)))
-                    AS INT) AS n_hours
-        FROM src GROUP BY {key_col}
-    """
 
 
 def log2_histogram(df: DataFrame, group_col: str,
@@ -1436,28 +1316,6 @@ def log2_histogram(df: DataFrame, group_col: str,
                     F.expr("(CAST(1 AS BIGINT) << (bucket + 1)) - 1")
                     .alias("hi"),
                     F.col("n").cast("long").alias("n")))
-
-
-def log2_histogram_oracle_sql(src_sql: str, group_col: str,
-                              value_expr: str) -> str:
-    """DuckDB twin of :func:`log2_histogram`."""
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {group_col} AS grp,
-                   CAST({value_expr} AS BIGINT) AS v
-            FROM src
-        ), bucketed AS (
-            SELECT grp, CAST(length(bin(v)) - 1 AS INT) AS bucket
-            FROM base WHERE v > 0
-        )
-        SELECT grp AS {group_col}, bucket,
-               CAST(CAST(1 AS BIGINT) << bucket AS BIGINT) AS lo,
-               CAST((CAST(1 AS BIGINT) << (bucket + 1)) - 1 AS BIGINT)
-                   AS hi,
-               CAST(count(*) AS BIGINT) AS n
-        FROM bucketed GROUP BY grp, bucket
-    """
 
 
 def weighted_median(df: DataFrame, group_col: str, value_col,
@@ -1492,37 +1350,6 @@ def weighted_median(df: DataFrame, group_col: str, value_col,
             .select(F.col("grp").alias(group_col),
                     F.col("m.v").alias("median_v"),
                     F.col("tot_w").cast("long").alias("tot_w")))
-
-
-def weighted_median_oracle_sql(src_sql: str, group_col: str,
-                               value_expr: str, weight_expr: str,
-                               id_col: str = "event_id") -> str:
-    """DuckDB twin of :func:`weighted_median`."""
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {group_col} AS grp,
-                   CAST({value_expr} AS BIGINT) AS v,
-                   CAST({weight_expr} AS BIGINT) AS w,
-                   {id_col} AS id
-            FROM src
-        ), cum AS (
-            SELECT grp, v, id,
-                   sum(w) OVER (PARTITION BY grp ORDER BY v, id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                       AS cumw,
-                   sum(w) OVER (PARTITION BY grp) AS totw
-            FROM base
-        ), hit AS (
-            SELECT grp, v, id, totw,
-                   row_number() OVER (PARTITION BY grp
-                                      ORDER BY v, id) AS rn
-            FROM cum WHERE 2 * cumw >= totw
-        )
-        SELECT grp AS {group_col}, v AS median_v,
-               CAST(totw AS BIGINT) AS tot_w
-        FROM hit WHERE rn = 1
-    """
 
 
 def time_weighted_avg(df: DataFrame, key_col: str, value_col,
@@ -1565,34 +1392,6 @@ def time_weighted_avg(df: DataFrame, key_col: str, value_col,
                 F.col("sdt").cast("long").alias("total_us")))
 
 
-def time_weighted_avg_oracle_sql(src_sql: str, key_col: str,
-                                 value_expr: str,
-                                 id_col: str = "event_id") -> str:
-    """DuckDB twin of :func:`time_weighted_avg`."""
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {key_col} AS key,
-                   CAST({value_expr} AS BIGINT) AS v,
-                   lead(epoch_us(ts)) OVER
-                       (PARTITION BY {key_col}
-                        ORDER BY epoch_us(ts), {id_col})
-                       - epoch_us(ts) AS dt
-            FROM src
-        ), agg AS (
-            SELECT key,
-                   sum(CAST(v AS HUGEINT) * dt) AS svdt,
-                   sum(CAST(dt AS HUGEINT)) AS sdt
-            FROM base WHERE dt IS NOT NULL GROUP BY key
-        )
-        SELECT key AS {key_col},
-               CASE WHEN sdt > 0 THEN CAST(svdt // sdt AS BIGINT) END
-                   AS twap,
-               CAST(sdt AS BIGINT) AS total_us
-        FROM agg
-    """
-
-
 def largest_remainder_alloc(df: DataFrame, key_col: str, count_col,
                             total: int) -> DataFrame:
     """Proportional integer allocation by the largest-remainder
@@ -1631,39 +1430,6 @@ def largest_remainder_alloc(df: DataFrame, key_col: str, count_col,
     return out.select("key", "n", "base", "extra",
                       (F.col("base") + F.col("extra")).cast("long")
                       .alias("alloc"))
-
-
-def largest_remainder_alloc_oracle_sql(src_sql: str, key_col: str,
-                                       count_expr: str,
-                                       total: int) -> str:
-    """DuckDB twin of :func:`largest_remainder_alloc`."""
-    t = int(total)
-    return f"""
-        WITH src AS ({src_sql}),
-        base AS (
-            SELECT {key_col} AS key, CAST({count_expr} AS BIGINT) AS n
-            FROM src
-        ), wide AS (
-            SELECT key, n, sum(n) OVER () AS t,
-                   CAST(n AS HUGEINT) * {t} AS nt
-            FROM base
-        ), quota AS (
-            SELECT key, n, t,
-                   CAST(nt // t AS BIGINT) AS base,
-                   CAST(nt % t AS BIGINT) AS rem
-            FROM wide
-        ), ranked AS (
-            SELECT *, sum(base) OVER () AS sbase,
-                   row_number() OVER (ORDER BY rem DESC, key ASC) AS rk
-            FROM quota
-        )
-        SELECT key, n, base,
-               CAST(CASE WHEN rk <= {t} - sbase THEN 1 ELSE 0 END AS INT)
-                   AS extra,
-               CAST(base + CASE WHEN rk <= {t} - sbase THEN 1 ELSE 0 END
-                    AS BIGINT) AS alloc
-        FROM ranked
-    """
 
 
 def mannwhitney_u(df_a: DataFrame, df_b: DataFrame, value_col,
@@ -1729,49 +1495,6 @@ def mannwhitney_u(df_a: DataFrame, df_b: DataFrame, value_col,
         .alias("significant"))
 
 
-def mannwhitney_u_oracle_sql(a_sql: str, b_sql: str, value_expr: str,
-                             id_col: str, alpha_num: int = 38416,
-                             alpha_den: int = 10000) -> str:
-    """DuckDB twin of :func:`mannwhitney_u` — same total order, same
-    integer decision."""
-    return f"""
-        WITH pooled AS (
-            SELECT CAST({value_expr} AS BIGINT) AS v, 0 AS s,
-                   {id_col} AS id FROM ({a_sql})
-            UNION ALL
-            SELECT CAST({value_expr} AS BIGINT), 1, {id_col}
-            FROM ({b_sql})
-        ), ranked AS (
-            SELECT *, row_number() OVER (ORDER BY v, s, id) AS rank
-            FROM pooled
-        ), agg AS (
-            SELECT sum(CASE WHEN s = 0 THEN 1 ELSE 0 END) AS n_a,
-                   sum(CASE WHEN s = 1 THEN 1 ELSE 0 END) AS n_b,
-                   sum(CASE WHEN s = 0 THEN rank END) AS ra
-            FROM ranked
-        ), wide AS (
-            SELECT CAST(n_a AS HUGEINT) AS n_a,
-                   CAST(n_b AS HUGEINT) AS n_b,
-                   2 * CAST(ra AS HUGEINT)
-                       - CAST(n_a AS HUGEINT) * (n_a + 1) AS u2
-            FROM agg
-        ), fin AS (
-            SELECT n_a, n_b, u2,
-                   (u2 - n_a * n_b) * (u2 - n_a * n_b) AS d2,
-                   n_a * n_b * (n_a + n_b + 1) AS den
-            FROM wide
-        )
-        SELECT CAST(n_a AS BIGINT) AS n_a, CAST(n_b AS BIGINT) AS n_b,
-               CAST(u2 AS BIGINT) AS u2,
-               CASE WHEN den > 0
-                    THEN CAST((d2 * 3000000) // den AS BIGINT) END
-                   AS z2_e6,
-               coalesce(den > 0 AND d2 * 3 * {alpha_den} >
-                        {alpha_num} * den, false) AS significant
-        FROM fin
-    """
-
-
 def hhi_concentration(df: DataFrame, group_col: str,
                       value_col) -> DataFrame:
     """Herfindahl–Hirschman market-concentration index per group —
@@ -1805,27 +1528,6 @@ def hhi_concentration(df: DataFrame, group_col: str,
                     F.col("_tot").cast("long").alias("total"),
                     F.expr("(_ss * 100000000) DIV (_tot * _tot)")
                     .cast("long").alias("hhi_e8")))
-
-
-def hhi_concentration_oracle_sql(src_sql: str, group_col: str,
-                                 value_expr: str) -> str:
-    """DuckDB twin of :func:`hhi_concentration` (HUGEINT exact sums,
-    ``//`` truncating division)."""
-    return f"""
-        WITH src AS ({src_sql}),
-        agg AS (
-            SELECT {group_col} AS grp, count(*) AS n_entities,
-                   sum(CAST({value_expr} AS HUGEINT)) AS tot,
-                   sum(CAST({value_expr} AS HUGEINT)
-                       * CAST({value_expr} AS HUGEINT)) AS ss
-            FROM src GROUP BY 1
-        )
-        SELECT grp AS {group_col},
-               CAST(n_entities AS BIGINT) AS n_entities,
-               CAST(tot AS BIGINT) AS total,
-               CAST((ss * 100000000) // (tot * tot) AS BIGINT) AS hhi_e8
-        FROM agg WHERE tot > 0
-    """
 
 
 def auc_exact(df: DataFrame, score, is_pos) -> DataFrame:
@@ -2441,43 +2143,6 @@ def sample_quantile_audit(df: DataFrame, group_col: str, value_col,
     return joined.select(*out, *errs)
 
 
-def sample_quantile_audit_oracle_sql(src_sql: str, group_col: str,
-                                     rate_mod: int = 8,
-                                     ps: tuple = (50, 90, 99)) -> str:
-    """DuckDB twin of :func:`sample_quantile_audit`.  ``src_sql`` must
-    yield ``(grp, id, v)`` rows."""
-    def side(pred: str, tag: str) -> str:
-        cuts = ",\n               ".join(
-            f"max(CASE WHEN rn = greatest((n * {int(p)} + 99) // 100, 1)"
-            f" THEN v END) AS p{int(p)}_{tag}" for p in ps)
-        return f"""
-            SELECT grp, CAST(max(n) AS BIGINT) AS n_{tag},
-               {cuts}
-            FROM (
-                SELECT grp, v, row_number() OVER (
-                           PARTITION BY grp ORDER BY v, id) AS rn,
-                       count(*) OVER (PARTITION BY grp) AS n
-                FROM src WHERE {pred}
-            ) GROUP BY grp
-        """
-    errs = ",\n               ".join(
-        f"CAST(abs(f.p{int(p)}_full - s.p{int(p)}_samp) AS BIGINT)"
-        f" AS p{int(p)}_err" for p in ps)
-    pcols = ",\n               ".join(
-        f"f.p{int(p)}_full, s.p{int(p)}_samp" for p in ps)
-    return f"""
-        WITH src AS MATERIALIZED ({src_sql}),
-        f AS ({side('TRUE', 'full')}),
-        s AS ({side(
-            f"('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15))::BIGINT"
-            f" % {rate_mod} = 0", 'samp')})
-        SELECT f.grp AS {group_col}, f.n_full, s.n_samp,
-               {pcols},
-               {errs}
-        FROM f LEFT JOIN s ON f.grp = s.grp
-    """
-
-
 def ivm_group_counts(base: DataFrame, delta: DataFrame,
                      group_col: str, value_col,
                      op_col: str = "op") -> DataFrame:
@@ -2527,32 +2192,6 @@ def ivm_group_counts(base: DataFrame, delta: DataFrame,
             .where(F.col("n_view") != 0))
     return view.select(F.col("_g").alias(group_col),
                        "n_view", "sum_view")
-
-
-def ivm_group_counts_oracle_sql(base_sql: str, delta_sql: str,
-                                group_col: str = "g") -> str:
-    """DuckDB twin of :func:`ivm_group_counts`: the same delta algebra
-    in SQL.  ``base_sql`` yields (g, v); ``delta_sql`` yields
-    (op, g, v)."""
-    return f"""
-        WITH b AS (
-            SELECT g, CAST(count(*) AS BIGINT) AS bn,
-                   CAST(sum(v) AS BIGINT) AS bs
-            FROM ({base_sql}) GROUP BY g
-        ), d AS (
-            SELECT g,
-                   CAST(sum(CASE WHEN op = 'I' THEN 1 ELSE -1 END)
-                        AS BIGINT) AS dn,
-                   CAST(sum((CASE WHEN op = 'I' THEN 1 ELSE -1 END) * v)
-                        AS BIGINT) AS ds
-            FROM ({delta_sql}) GROUP BY g
-        )
-        SELECT COALESCE(b.g, d.g) AS {group_col},
-               COALESCE(bn, 0) + COALESCE(dn, 0) AS n_view,
-               COALESCE(bs, 0) + COALESCE(ds, 0) AS sum_view
-        FROM b FULL OUTER JOIN d ON b.g = d.g
-        WHERE COALESCE(bn, 0) + COALESCE(dn, 0) <> 0
-    """
 
 
 def fleiss_kappa(df: DataFrame, rater_cols: list) -> DataFrame:

@@ -181,69 +181,6 @@ def bpe_train(docs: DataFrame, n_merges: int = 6,
     return merges_df, vocab
 
 
-def bpe_train_oracle_sql(n_merges: int = 6,
-                         docs_table: str = "documents",
-                         text_col: str = "text") -> str:
-    """The DuckDB twin: one WITH chain re-running the identical
-    vocabulary build, pair counts, tie-broken top-1 and greedy fold per
-    iteration (list_reduce over singleton lists; the CROSS JOIN to the
-    1-row m{i} CTE feeds the winning pair into the lambda)."""
-    sql = [f"""
-        WITH w AS (
-            SELECT unnest(string_split_regex(trim({text_col}), '\\s+'))
-                   AS word
-            FROM {docs_table}
-        ), s0 AS (
-            SELECT word, CAST(count(*) AS BIGINT) AS cnt,
-                   list_append([word[j] for j in
-                                range(1, length(word) + 1)],
-                               '</w>') AS syms
-            FROM w WHERE regexp_full_match(word, '[A-Za-z]+')
-            GROUP BY word
-        )"""]
-    for i in range(1, n_merges + 1):
-        p = i - 1
-        sql.append(f""", pr{i} AS (
-            SELECT cnt, unnest([{{'a': syms[j], 'b': syms[j+1]}}
-                                for j in range(1, len(syms))]) AS pp
-            FROM s{p} WHERE len(syms) >= 2
-        ), m{i} AS (
-            SELECT pp.a AS a, pp.b AS b, pp.a || pp.b AS m,
-                   CAST(sum(cnt) AS BIGINT) AS pc
-            FROM pr{i} GROUP BY 1, 2, 3
-            ORDER BY pc DESC, a ASC, b ASC LIMIT 1
-        ), s{i} AS (
-            SELECT word, cnt,
-                   list_reduce(list_transform(syms, x -> [x]),
-                       (acc, e) -> CASE WHEN acc[-1] = a AND e[1] = b
-                                   THEN list_append(acc[:-2], m)
-                                   ELSE list_append(acc, e[1]) END)
-                   AS syms
-            FROM s{p} CROSS JOIN m{i}
-        )""")
-    finals = " UNION ALL ".join(
-        f"SELECT {i} AS merge_rank, a, b, m AS merged, pc AS cnt "
-        f"FROM m{i}" for i in range(1, n_merges + 1))
-    sql.append(f" SELECT CAST(merge_rank AS INT) AS merge_rank, a, b, "
-               f"merged, cnt FROM ({finals}) ORDER BY merge_rank")
-    return "".join(sql)
-
-
-def bpe_vocab_oracle_sql(n_merges: int = 6,
-                         docs_table: str = "documents",
-                         text_col: str = "text") -> str:
-    """DuckDB oracle for the FINAL vocabulary after ``n_merges`` (the
-    tokenizer-apply lookup table): the identical iteration chain as
-    :func:`bpe_train_oracle_sql`, finishing with the merged symbol
-    sequence per word instead of the merge list."""
-    chain = bpe_train_oracle_sql(n_merges, docs_table, text_col)
-    # reuse the WITH chain verbatim; replace only the final SELECT
-    cut = chain.rindex(" SELECT CAST(merge_rank AS INT)")
-    return (chain[:cut]
-            + f" SELECT word, CAST(cnt AS BIGINT) AS cnt, "
-              f"array_to_string(syms, ' ') AS tokens FROM s{n_merges}")
-
-
 def bpe_encode_counts(docs: DataFrame, n_merges: int = 6,
                       id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
@@ -276,26 +213,3 @@ def bpe_encode_counts(docs: DataFrame, n_merges: int = 6,
             .groupBy(id_col)
             .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
                  F.sum("_ntok").cast("long").alias("n_tokens")))
-
-
-def bpe_encode_oracle_sql(n_merges: int = 6,
-                          docs_table: str = "documents",
-                          text_col: str = "text") -> str:
-    """DuckDB oracle for :func:`bpe_encode_counts`: the identical train
-    chain, then the corpus word stream joined against the final
-    vocabulary and rolled up per document."""
-    chain = bpe_train_oracle_sql(n_merges, docs_table, text_col)
-    cut = chain.rindex(" SELECT CAST(merge_rank AS INT)")
-    return (chain[:cut]
-            + f""", dw AS (
-                SELECT doc_id,
-                       unnest(string_split_regex(trim({text_col}),
-                                                 '\\s+')) AS word
-                FROM {docs_table}
-            )
-            SELECT d.doc_id,
-                   CAST(count(*) AS BIGINT) AS n_words,
-                   CAST(sum(len(s.syms)) AS BIGINT) AS n_tokens
-            FROM dw d JOIN s{n_merges} s USING (word)
-            WHERE regexp_full_match(d.word, '[A-Za-z]+')
-            GROUP BY d.doc_id""")

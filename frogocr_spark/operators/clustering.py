@@ -126,82 +126,6 @@ def kmeans_int(corpus: DataFrame, k: int = 4, iters: int = 3, *,
         "cluster", "n_members", "inertia", "centroid")
 
 
-def _kmeans_chain_sql(k: int, iters: int, dim: int, *, table: str,
-                      id_col: str, vec_col: str, scale: int,
-                      prefix: str = "") -> str:
-    """The CTE chain of the k-means oracle WITHOUT the leading ``WITH``
-    and with every CTE name prefixed — so compositional audits
-    (silhouette, clustering agreement) can splice one or several
-    independent chains into a larger query.  Exposes, for consumers:
-    ``{prefix}d{iters+1}`` (all k exact distances per point vs the
-    final centroids: vid, q, j, d) and ``{prefix}a{iters+1}`` (the
-    argmin assignment)."""
-    p = prefix
-    sql = [f"""
-        {p}q AS (
-            SELECT {id_col} AS vid,
-                   list_transform({vec_col}, x ->
-                       CAST(round(CAST(x AS DOUBLE) * {scale}, 0)
-                            AS BIGINT)) AS q
-            FROM {table}
-        ), {p}c0 AS (
-            SELECT row_number() OVER (
-                       ORDER BY md5(CAST(vid AS VARCHAR)), vid) - 1
-                   AS j, q AS c
-            FROM {p}q
-            QUALIFY row_number() OVER (
-                        ORDER BY md5(CAST(vid AS VARCHAR)), vid)
-                    <= {k}
-        )"""]
-    ssq = (f"CAST(list_sum(list_transform(range(1, {dim} + 1), i -> "
-           f"(q.q[i] - c.c[i]) * (q.q[i] - c.c[i]))) AS BIGINT)")
-    for r in range(1, iters + 2):
-        pr = r - 1
-        sql.append(f""", {p}d{r} AS (
-            SELECT q.vid, q.q, c.j, {ssq} AS d
-            FROM {p}q q CROSS JOIN {p}c{pr} c
-        ), {p}a{r} AS (
-            SELECT vid, q, j, d FROM {p}d{r}
-            QUALIFY row_number() OVER (
-                        PARTITION BY vid ORDER BY d, j) = 1
-        )""")
-        if r <= iters:
-            sql.append(f""", {p}u{r} AS (
-            SELECT a.j, t.i,
-                   CAST(floor(CAST(sum(a.q[t.i]) AS DOUBLE)
-                              / count(*)) AS BIGINT) AS ci
-            FROM {p}a{r} a CROSS JOIN range(1, {dim} + 1) t(i)
-            GROUP BY a.j, t.i
-        ), {p}c{r} AS (
-            SELECT j, list(ci ORDER BY i) AS c FROM {p}u{r} GROUP BY j
-            UNION ALL
-            SELECT j, c FROM {p}c{pr}
-            WHERE j NOT IN (SELECT DISTINCT j FROM {p}a{r})
-        )""")
-    return "".join(sql)
-
-
-def kmeans_oracle_sql(k: int = 4, iters: int = 3, dim: int = 64, *,
-                      table: str = "embeddings", id_col: str = "vec_id",
-                      vec_col: str = "embedding",
-                      scale: int = 10_000) -> str:
-    """DuckDB twin: one WITH chain re-running the identical seed pick,
-    per-round exact-integer argmin assignment (cross join to the k-row
-    centroid CTE, ``QUALIFY row_number() OVER (PARTITION BY id ORDER BY
-    d, j) = 1``), floor-division update with empty-cluster carryover,
-    and the final assignment + rollup."""
-    chain = _kmeans_chain_sql(k, iters, dim, table=table, id_col=id_col,
-                              vec_col=vec_col, scale=scale)
-    last = iters + 1
-    return f"""WITH {chain}
-        SELECT a.j AS cluster,
-               CAST(count(*) AS BIGINT) AS n_members,
-               CAST(sum(a.d) AS BIGINT) AS inertia,
-               c.c AS centroid
-        FROM a{last} a JOIN c{iters} c ON a.j = c.j
-        GROUP BY a.j, c.c"""
-
-
 def maxmin_coreset(corpus: DataFrame, k: int = 5, *,
                    id_col: str = "vec_id", vec_col: str = "embedding",
                    scale: int = 10_000) -> DataFrame:
@@ -248,52 +172,6 @@ def maxmin_coreset(corpus: DataFrame, k: int = 5, *,
     id_type = corpus.schema[id_col].dataType.simpleString()
     return spark.createDataFrame(
         picks, f"round long, {id_col} {id_type}, dist long")
-
-
-def maxmin_coreset_oracle_sql(k: int = 5, dim: int = 64, *,
-                              table: str = "embeddings",
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding",
-                              scale: int = 10_000) -> str:
-    """DuckDB twin of :func:`maxmin_coreset`: the identical greedy
-    chain unrolled as CTEs (min-over-selected via a grouped cross
-    join, pick via QUALIFY on (dist DESC, id))."""
-    ssq = (f"CAST(list_sum(list_transform(range(1, {dim} + 1), i -> "
-           f"(q.q[i] - s.sq[i]) * (q.q[i] - s.sq[i]))) AS BIGINT)")
-    sql = [f"""
-        WITH q AS (
-            SELECT {id_col} AS vid,
-                   list_transform({vec_col}, x ->
-                       CAST(round(CAST(x AS DOUBLE) * {scale}, 0)
-                            AS BIGINT)) AS q
-            FROM {table}
-        ), sel0 AS (
-            SELECT vid AS svid, q AS sq FROM q
-            QUALIFY row_number() OVER (
-                        ORDER BY md5(CAST(vid AS VARCHAR)), vid) = 1
-        )"""]
-    for r in range(1, k):
-        p = r - 1
-        sql.append(f""", d{r} AS (
-            SELECT q.vid, min({ssq}) AS d
-            FROM q CROSS JOIN sel{p} s
-            WHERE q.vid NOT IN (SELECT svid FROM sel{p})
-            GROUP BY q.vid
-        ), p{r} AS (
-            SELECT vid, d FROM d{r}
-            QUALIFY row_number() OVER (ORDER BY d DESC, vid) = 1
-        ), sel{r} AS (
-            SELECT svid, sq FROM sel{p}
-            UNION ALL
-            SELECT q.vid, q.q FROM q JOIN p{r} USING (vid)
-        )""")
-    parts = [f"SELECT 0 AS round, svid AS {id_col}, "
-             f"CAST(0 AS BIGINT) AS dist FROM sel0"]
-    for r in range(1, k):
-        parts.append(f"SELECT {r} AS round, vid AS {id_col}, "
-                     f"CAST(d AS BIGINT) AS dist FROM p{r}")
-    sql.append("\n" + "\nUNION ALL\n".join(parts))
-    return "".join(sql)
 
 
 def dbscan_grid(pts: DataFrame, eps: int, min_pts: int, *,
@@ -364,51 +242,6 @@ def dbscan_grid(pts: DataFrame, eps: int, min_pts: int, *,
                 .alias("cluster_id")))
 
 
-def dbscan_oracle_sql(pts_sql: str, eps: int, min_pts: int) -> str:
-    """DuckDB twin of :func:`dbscan_grid` — the textbook form: direct
-    quadratic ε-neighbor predicate, correlated neighbor counts, and a
-    recursive-CTE min-label closure over the core-core graph, so the
-    hash match proves the blocked join + star-CC + deterministic
-    border rule equivalent to the definition."""
-    e2 = int(eps) * int(eps)
-    return f"""
-        WITH RECURSIVE pts AS ({pts_sql}),
-        nb AS (
-            SELECT a.id AS ia, b.id AS ib FROM pts a JOIN pts b
-            ON a.id <> b.id
-            AND (a.x - b.x) * (a.x - b.x)
-                + (a.y - b.y) * (a.y - b.y) <= {e2}
-        ), deg AS (
-            SELECT p.id, count(nb.ib) AS n_nb
-            FROM pts p LEFT JOIN nb ON nb.ia = p.id GROUP BY 1
-        ), core AS (
-            SELECT id FROM deg WHERE n_nb + 1 >= {int(min_pts)}
-        ), ce AS (
-            SELECT ia, ib FROM nb
-            WHERE ia IN (SELECT id FROM core)
-              AND ib IN (SELECT id FROM core)
-        ), lbl(node, l) AS (
-            SELECT id, id FROM core
-            UNION
-            SELECT ce.ib, lbl.l FROM lbl JOIN ce ON ce.ia = lbl.node
-        ), comp AS (
-            SELECT node AS id, min(l) AS cl FROM lbl GROUP BY 1
-        ), bord AS (
-            SELECT nb.ia AS id, min(c.cl) AS bcl
-            FROM nb JOIN comp c ON nb.ib = c.id GROUP BY 1
-        )
-        SELECT p.id,
-               CASE WHEN cm.cl IS NOT NULL THEN 'core'
-                    WHEN b.bcl IS NOT NULL THEN 'border'
-                    ELSE 'noise' END AS role,
-               CAST(CASE WHEN cm.cl IS NOT NULL THEN cm.cl
-                         ELSE b.bcl END AS BIGINT) AS cluster_id
-        FROM pts p
-        LEFT JOIN comp cm ON cm.id = p.id
-        LEFT JOIN bord b ON b.id = p.id
-    """
-
-
 def kmeans_silhouette(corpus: DataFrame, k: int = 4, iters: int = 3, *,
                       id_col: str = "vec_id", vec_col: str = "embedding",
                       scale: int = 10_000) -> DataFrame:
@@ -446,40 +279,6 @@ def kmeans_silhouette(corpus: DataFrame, k: int = 4, iters: int = 3, *,
             .agg(F.count(F.lit(1)).cast("long").alias("n_members"),
                  F.expr("CAST(sum(_s) DIV count(1) AS BIGINT)")
                  .alias("mean_s_e6")))
-
-
-def kmeans_silhouette_oracle_sql(k: int = 4, iters: int = 3,
-                                 dim: int = 64, *,
-                                 table: str = "embeddings",
-                                 id_col: str = "vec_id",
-                                 vec_col: str = "embedding",
-                                 scale: int = 10_000) -> str:
-    """DuckDB twin of :func:`kmeans_silhouette`: the verbatim k-means
-    chain, then best/runner-up distances per point by the same (d, j)
-    window order, the same integer s, the same floored mean."""
-    chain = _kmeans_chain_sql(k, iters, dim, table=table, id_col=id_col,
-                              vec_col=vec_col, scale=scale)
-    last = iters + 1
-    return f"""WITH {chain}, sd AS (
-            SELECT vid, j, d, row_number() OVER (
-                       PARTITION BY vid ORDER BY d, j) AS rn
-            FROM d{last}
-        ), ab AS (
-            SELECT vid,
-                   max(CASE WHEN rn = 1 THEN j END) AS cl,
-                   max(CASE WHEN rn = 1 THEN d END) AS a,
-                   max(CASE WHEN rn = 2 THEN d END) AS b
-            FROM sd WHERE rn <= 2 GROUP BY vid
-        ), s AS (
-            SELECT cl, CASE WHEN b = 0 THEN 0
-                            ELSE ((b - a) * 1000000) // b END AS s
-            FROM ab
-        )
-        SELECT CAST(cl AS BIGINT) AS cluster,
-               CAST(count(*) AS BIGINT) AS n_members,
-               CAST(CAST(sum(s) AS HUGEINT) // count(*) AS BIGINT)
-                   AS mean_s_e6
-        FROM s GROUP BY cl"""
 
 
 def kmeans_agreement_ari(corpus: DataFrame, k_a: int = 4, k_b: int = 8,
@@ -537,49 +336,3 @@ def kmeans_agreement_ari(corpus: DataFrame, k_a: int = 4, k_b: int = 8,
     return corpus.sparkSession.createDataFrame(
         [(n, s_ij, s_a, s_b, ari)],
         "n long, s_ij long, s_a long, s_b long, ari_e6 long")
-
-
-def kmeans_agreement_oracle_sql(k_a: int = 4, k_b: int = 8,
-                                iters: int = 3, dim: int = 64, *,
-                                table: str = "embeddings",
-                                id_col: str = "vec_id",
-                                vec_col: str = "embedding",
-                                scale: int = 10_000) -> str:
-    """DuckDB twin of :func:`kmeans_agreement_ari`: TWO independent
-    prefixed k-means chains spliced into one query, contingency by an
-    id equi-join of the two assignment CTEs, the identical
-    multiplied-through integer ARI with HUGEINT arithmetic and
-    truncating ``//``."""
-    ch_a = _kmeans_chain_sql(k_a, iters, dim, table=table,
-                             id_col=id_col, vec_col=vec_col,
-                             scale=scale, prefix="pa_")
-    ch_b = _kmeans_chain_sql(k_b, iters, dim, table=table,
-                             id_col=id_col, vec_col=vec_col,
-                             scale=scale, prefix="pb_")
-    last = iters + 1
-    return f"""WITH {ch_a}, {ch_b}, ct AS (
-            SELECT a.j AS ja, b.j AS jb, count(*) AS nij
-            FROM pa_a{last} a JOIN pb_a{last} b ON a.vid = b.vid
-            GROUP BY 1, 2
-        ), tot AS (
-            SELECT CAST(sum(nij) AS HUGEINT) AS n,
-                   CAST(sum(nij * (nij - 1) // 2) AS HUGEINT) AS s_ij
-            FROM ct
-        ), sa AS (
-            SELECT CAST(sum(ai * (ai - 1) // 2) AS HUGEINT) AS s_a
-            FROM (SELECT sum(nij) AS ai FROM ct GROUP BY ja)
-        ), sb AS (
-            SELECT CAST(sum(bi * (bi - 1) // 2) AS HUGEINT) AS s_b
-            FROM (SELECT sum(nij) AS bi FROM ct GROUP BY jb)
-        ), f AS (
-            SELECT n, s_ij, s_a, s_b, n * (n - 1) // 2 AS t
-            FROM tot, sa, sb
-        )
-        SELECT CAST(n AS BIGINT) AS n, CAST(s_ij AS BIGINT) AS s_ij,
-               CAST(s_a AS BIGINT) AS s_a, CAST(s_b AS BIGINT) AS s_b,
-               CAST(CASE WHEN t * (s_a + s_b) - 2 * s_a * s_b = 0
-                         THEN 1000000
-                         ELSE (2 * (t * s_ij - s_a * s_b) * 1000000)
-                              // (t * (s_a + s_b) - 2 * s_a * s_b)
-                    END AS BIGINT) AS ari_e6
-        FROM f"""

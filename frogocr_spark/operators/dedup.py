@@ -1048,8 +1048,7 @@ def snm_candidates(df: DataFrame, key_col: str, window: int,
     spans at most adjacent bands) — candidate cost is O(N·w/P) per
     task, never quadratic, and a hot key cannot concentrate rows
     because rank is unique.  The residual ``0 < r2 − r1 ≤ w`` filter
-    runs post-join.  The oracle keeps the direct rank-distance
-    formulation, so the hash match proves the band-join rewrite.
+    runs post-join.
 
     Note: ``global_rank`` executes eagerly at call time (documented
     there).  Output: (id_a, id_b, gap) with id_a the lower-ranked row.
@@ -1074,25 +1073,6 @@ def snm_candidates(df: DataFrame, key_col: str, window: int,
             .select(F.col("_id").alias("id_a"), "id_b",
                     (F.col("r2") - F.col("r")).cast("int")
                     .alias("gap")))
-
-
-def snm_candidates_oracle_sql(src_sql: str, key_expr: str,
-                              window: int) -> str:
-    """DuckDB twin of :func:`snm_candidates`: the textbook definition
-    — row_number over the blocking order, pairs with rank distance ≤
-    w.  ``src_sql`` must yield (doc_id, text-bearing columns) rows;
-    ``key_expr`` is the blocking-key expression over them."""
-    return f"""
-        WITH src AS ({src_sql}),
-        ranked AS (
-            SELECT doc_id AS id, row_number() OVER (
-                ORDER BY {key_expr}, doc_id) AS r
-            FROM src
-        )
-        SELECT a.id AS id_a, b.id AS id_b, CAST(b.r - a.r AS INT) AS gap
-        FROM ranked a JOIN ranked b
-          ON b.r > a.r AND b.r - a.r <= {window}
-    """
 
 
 def cluster_size_profile(clusters: DataFrame,
@@ -1167,28 +1147,3 @@ def edit_distance_pairs(df: DataFrame, max_dist: int = 10,
         .select("id_a", "id_b",
                 F.levenshtein("_ta", "_tb", max_dist).alias("dist")))
     return scored.where(F.col("dist") >= 0)
-
-
-def edit_distance_pairs_oracle_sql(src_sql: str, max_dist: int = 10,
-                                   key_len: int = 12,
-                                   window: int = 3) -> str:
-    """DuckDB twin of :func:`edit_distance_pairs` — textbook form:
-    rank-distance SNM candidates, length filter, full ``levenshtein``
-    (DuckDB has no banded variant; equality with the thresholded Spark
-    result on kept rows is exactly what the hash proves)."""
-    return f"""
-        WITH src AS ({src_sql}),
-        ranked AS (
-            SELECT doc_id AS id, text, length(text) AS len,
-                   row_number() OVER (
-                       ORDER BY substr(trim(text), 1, {key_len}),
-                                doc_id) AS r
-            FROM src
-        )
-        SELECT a.id AS id_a, b.id AS id_b,
-               CAST(levenshtein(a.text, b.text) AS INT) AS dist
-        FROM ranked a JOIN ranked b
-          ON b.r > a.r AND b.r - a.r <= {window}
-        WHERE abs(a.len - b.len) <= {max_dist}
-          AND levenshtein(a.text, b.text) <= {max_dist}
-    """

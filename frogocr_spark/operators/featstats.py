@@ -113,55 +113,6 @@ def chi2_terms(df: DataFrame, k: int = 10, min_df: int = 3,
                     "chi2_e6", F.col("rank").cast("int").alias("rank")))
 
 
-def chi2_terms_oracle_sql(docs_sql: str, k: int, min_df: int,
-                          class_col: str = "source") -> str:
-    """DuckDB twin of :func:`chi2_terms` — HUGEINT products and the
-    identical truncating ``//`` division."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        toks AS (
-            SELECT DISTINCT doc_id, {class_col} AS cls,
-                   unnest(string_split_regex(trim(text), '\s+')) AS token
-            FROM docs
-        ), act AS (
-            SELECT cls, token, count(*) AS a FROM toks
-            WHERE token <> '' GROUP BY cls, token
-        ), dfreq AS (
-            SELECT token, sum(a) AS n_t FROM act GROUP BY token
-        ), csize AS (
-            SELECT {class_col} AS cls, count(*) AS n_c
-            FROM docs GROUP BY 1
-        ), nn AS (SELECT count(*) AS n_docs FROM docs),
-        cells AS (
-            SELECT act.cls, act.token,
-                   CAST(a AS HUGEINT) AS a,
-                   CAST(n_t - a AS HUGEINT) AS b,
-                   CAST(n_c - a AS HUGEINT) AS c,
-                   CAST(n_docs - n_c - (n_t - a) AS HUGEINT) AS d,
-                   CAST(n_docs AS HUGEINT) AS n
-            FROM act JOIN dfreq USING (token)
-            JOIN csize ON act.cls = csize.cls
-            CROSS JOIN nn
-            WHERE n_t >= {min_df}
-        ), scored AS (
-            SELECT cls, token, a, b, c, d,
-                   CAST((n * (a*d - b*c) * (a*d - b*c) * 1000000) //
-                        ((a+b) * (c+d) * (a+c) * (b+d)) AS BIGINT)
-                       AS chi2_e6
-            FROM cells WHERE a*d > b*c AND b + d > 0
-        ), ranked AS (
-            SELECT *, row_number() OVER (PARTITION BY cls
-                      ORDER BY chi2_e6 DESC, token ASC) AS rank
-            FROM scored
-        )
-        SELECT cls AS {class_col}, token,
-               CAST(a AS BIGINT) AS a, CAST(b AS BIGINT) AS b,
-               CAST(c AS BIGINT) AS c, CAST(d AS BIGINT) AS d,
-               chi2_e6, CAST(rank AS INT) AS rank
-        FROM ranked WHERE rank <= {k}
-    """
-
-
 def pmi_bigrams(df: DataFrame, k: int = 50, min_count: int = 5,
                 id_col: str = "doc_id",
                 text_col: str = "text") -> DataFrame:
@@ -215,48 +166,6 @@ def pmi_bigrams(df: DataFrame, k: int = 50, min_count: int = 5,
             .select("x", "y", F.col("n_xy").cast("long").alias("n_xy"),
                     F.col("n_x").cast("long").alias("n_x"),
                     F.col("n_y").cast("long").alias("n_y"), "pmi_e6"))
-
-
-def pmi_bigrams_oracle_sql(docs_sql: str, k: int,
-                           min_count: int) -> str:
-    """DuckDB twin of :func:`pmi_bigrams`."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               t -> t <> '') AS ws
-            FROM docs
-        ), uni AS (
-            SELECT unnest(ws) AS token FROM words
-        ), ucnt AS (
-            SELECT token, count(*) AS n_tok FROM uni GROUP BY token
-        ), nn AS (SELECT sum(n_tok) AS n_all FROM ucnt),
-        pairs AS (
-            SELECT p['x'] AS x, p['y'] AS y, count(*) AS n_xy FROM (
-                SELECT unnest(CASE WHEN len(ws) >= 2 THEN
-                           [struct_pack(x := ws[j], y := ws[j+1])
-                            for j in range(1, len(ws))]
-                       ELSE [] END) AS p
-                FROM words
-            ) GROUP BY 1, 2 HAVING count(*) >= {min_count}
-        ), scored AS (
-            SELECT x, y, n_xy, ux.n_tok AS n_x, uy.n_tok AS n_y,
-                   CAST((CAST(n_xy AS HUGEINT) * CAST(n_all AS HUGEINT)
-                         * 1000000) //
-                        (CAST(ux.n_tok AS HUGEINT) *
-                         CAST(uy.n_tok AS HUGEINT)) AS BIGINT)
-                       AS pmi_e6
-            FROM pairs
-            JOIN ucnt ux ON pairs.x = ux.token
-            JOIN ucnt uy ON pairs.y = uy.token
-            CROSS JOIN nn
-        )
-        SELECT x, y, CAST(n_xy AS BIGINT) AS n_xy,
-               CAST(n_x AS BIGINT) AS n_x, CAST(n_y AS BIGINT) AS n_y,
-               pmi_e6
-        FROM scored ORDER BY pmi_e6 DESC, x ASC, y ASC LIMIT {k}
-    """
 
 
 def two_prop_test(events: DataFrame, convert_type: str = "purchase",
@@ -324,51 +233,6 @@ def two_prop_test(events: DataFrame, convert_type: str = "purchase",
         .alias("significant"))
 
 
-def two_prop_test_oracle_sql(events_sql: str,
-                             convert_type: str = "purchase",
-                             alpha_num: int = 38416,
-                             alpha_den: int = 10000) -> str:
-    """DuckDB twin of :func:`two_prop_test`."""
-    return f"""
-        WITH ev AS ({events_sql}),
-        per_user AS (
-            SELECT user_id AS uid,
-                   max(CASE WHEN event_type = '{convert_type}'
-                       THEN 1 ELSE 0 END) AS conv
-            FROM ev GROUP BY 1
-        ), per_variant AS (
-            SELECT uid % 2 AS variant, count(*) AS n, sum(conv) AS c
-            FROM per_user GROUP BY 1
-        ), one AS (
-            SELECT max(CASE WHEN variant = 0 THEN n END) AS n1,
-                   max(CASE WHEN variant = 0 THEN c END) AS c1,
-                   max(CASE WHEN variant = 1 THEN n END) AS n2,
-                   max(CASE WHEN variant = 1 THEN c END) AS c2
-            FROM per_variant
-        ), wide AS (
-            SELECT n1, c1, n2, c2,
-                   (CAST(c1 AS HUGEINT) * n2 - CAST(c2 AS HUGEINT) * n1)
-                       AS diff,
-                   CAST(n1 AS HUGEINT) + n2 AS t,
-                   CAST(c1 AS HUGEINT) + c2 AS cc
-            FROM one
-        ), fin AS (
-            SELECT n1, c1, n2, c2,
-                   diff * diff * t AS num,
-                   CAST(n1 AS HUGEINT) * n2 * cc * (t - cc) AS den
-            FROM wide
-        )
-        SELECT CAST(n1 AS BIGINT) AS n1, CAST(c1 AS BIGINT) AS c1,
-               CAST(n2 AS BIGINT) AS n2, CAST(c2 AS BIGINT) AS c2,
-               CASE WHEN den > 0
-                    THEN CAST((num * 1000000) // den AS BIGINT) END
-                   AS z2_e6,
-               coalesce(den > 0 AND num * {alpha_den} >
-                        den * {alpha_num}, false) AS significant
-        FROM fin
-    """
-
-
 def lexical_diversity(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text") -> DataFrame:
     """Per-document lexical-diversity profile — the vocabulary-health
@@ -411,32 +275,3 @@ def lexical_diversity(df: DataFrame, id_col: str = "doc_id",
                         F.when(F.col("n_tokens") > 0,
                                F.expr("(n_types * 1000000) "
                                       "DIV n_tokens"))))
-
-
-def lexical_diversity_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of :func:`lexical_diversity`."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        tf AS (
-            SELECT doc_id, token, count(*) AS tf FROM (
-                SELECT doc_id,
-                       unnest(string_split_regex(trim(text), '\s+'))
-                           AS token
-                FROM docs
-            ) WHERE token <> '' GROUP BY doc_id, token
-        ), stats AS (
-            SELECT doc_id, sum(tf) AS n_tokens, count(*) AS n_types,
-                   sum(CASE WHEN tf = 1 THEN 1 ELSE 0 END) AS n_hapax,
-                   sum(tf * (tf - 1)) AS simpson_num
-            FROM tf GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-               CAST(coalesce(n_types, 0) AS BIGINT) AS n_types,
-               CAST(coalesce(n_hapax, 0) AS BIGINT) AS n_hapax,
-               CAST(coalesce(simpson_num, 0) AS BIGINT) AS simpson_num,
-               CASE WHEN coalesce(n_tokens, 0) > 0
-                    THEN CAST((n_types * 1000000) // n_tokens
-                              AS BIGINT) END AS ttr_e6
-        FROM docs d LEFT JOIN stats s ON d.doc_id = s.doc_id
-    """

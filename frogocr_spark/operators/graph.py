@@ -95,39 +95,6 @@ def pagerank_int(edges: DataFrame, iters: int = 3,
     return scores
 
 
-def pagerank_int_oracle_sql(edges_sql: str, iters: int = 3,
-                            scale: int = DEFAULT_SCALE,
-                            damp_num: int = 85,
-                            damp_den: int = 100) -> str:
-    """The DuckDB twin: chained CTEs computing the IDENTICAL integers
-    (``//`` truncates like Spark's ``DIV`` on non-negative values).
-    ``edges_sql`` must yield distinct (src, dst)."""
-    base = (scale * (damp_den - damp_num)) // damp_den
-    sql = [f"WITH e AS ({edges_sql}),"]
-    sql.append("nodes AS (SELECT src AS node FROM e "
-               "UNION SELECT dst FROM e),")
-    sql.append("deg AS (SELECT src, count(*) AS out_deg FROM e "
-               "GROUP BY src),")
-    sql.append("ed AS (SELECT e.src, e.dst, deg.out_deg FROM e "
-               "JOIN deg USING (src)),")
-    sql.append(f"it0 AS (SELECT node, CAST({scale} AS BIGINT) AS score "
-               f"FROM nodes),")
-    for i in range(1, iters + 1):
-        sql.append(
-            f"m{i} AS (SELECT ed.dst AS node, "
-            f"CAST(sum(s.score // ed.out_deg) AS BIGINT) AS in_mass "
-            f"FROM ed JOIN it{i-1} s ON ed.src = s.node "
-            f"GROUP BY ed.dst),")
-        sql.append(
-            f"it{i} AS (SELECT n.node, CAST({base} + "
-            f"(COALESCE(m.in_mass, 0) * {damp_num}) // {damp_den} "
-            f"AS BIGINT) AS score "
-            f"FROM nodes n LEFT JOIN m{i} m USING (node)),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(f"SELECT node, score FROM it{iters}")
-    return "\n".join(sql)
-
-
 def triangle_counts(edges: DataFrame, src: str = "src",
                     dst: str = "dst") -> DataFrame:
     """Per-node triangle counts over an undirected graph (the local
@@ -187,49 +154,6 @@ def triangle_counts(edges: DataFrame, src: str = "src",
                     .alias("n_triangles")))
 
 
-def triangle_counts_oracle_sql(edges_sql: str) -> str:
-    """DuckDB twin: canonicalize, orient by (degree, id), wedge join +
-    closing-edge join, explode the three corners — identical semantics,
-    so the hash match proves the degree-oriented plan equivalent to the
-    textbook definition."""
-    return f"""
-        WITH raw AS ({edges_sql}),
-        und AS (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), nodes AS (
-            SELECT DISTINCT node FROM (
-                SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-        ), deg AS (
-            SELECT node, COUNT(*) AS d FROM (
-                SELECT u AS node FROM und UNION ALL SELECT v FROM und)
-            GROUP BY node
-        ), oriented AS (
-            SELECT CASE WHEN (da.d < db.d)
-                             OR (da.d = db.d AND und.u < und.v)
-                        THEN und.u ELSE und.v END AS a,
-                   CASE WHEN (da.d < db.d)
-                             OR (da.d = db.d AND und.u < und.v)
-                        THEN und.v ELSE und.u END AS b
-            FROM und JOIN deg da ON da.node = und.u
-                     JOIN deg db ON db.node = und.v
-        ), tris AS (
-            SELECT e1.a, e1.b, e2.b AS c
-            FROM oriented e1 JOIN oriented e2 ON e1.a = e2.a
-            WHERE e1.b < e2.b
-              AND EXISTS (SELECT 1 FROM und
-                          WHERE und.u = e1.b AND und.v = e2.b)
-        ), corners AS (
-            SELECT unnest([a, b, c]) AS node FROM tris
-        ), cnt AS (
-            SELECT node, COUNT(*) AS n FROM corners GROUP BY node
-        )
-        SELECT nodes.node, CAST(COALESCE(cnt.n, 0) AS BIGINT)
-               AS n_triangles
-        FROM nodes LEFT JOIN cnt USING (node)
-    """
-
-
 def kcore(edges: DataFrame, k: int, rounds: int | None = None,
           src: str = "src", dst: str = "dst",
           max_rounds: int = 100) -> DataFrame:
@@ -250,9 +174,9 @@ def kcore(edges: DataFrame, k: int, rounds: int | None = None,
       peeling is monotone (each round's survivor set shrinks or is
       stable), so extra rounds past the fixpoint are no-ops and an
       R-round run equals the true k-core whenever convergence happens
-      within R.  This is the contract-query mode: the DuckDB oracle
-      (:func:`kcore_oracle_sql`) unrolls the identical R rounds, so a
-      hash match proves the distributed peel equivalent.
+      within R.  This is the contract-query mode: a DuckDB oracle that
+      unrolls the identical R rounds as a CTE chain gives a hash match
+      that proves the distributed peel equivalent.
 
     Scale shape: per round ONE degree aggregation (map-side combined,
     node-sized output) + TWO left-semi equi-joins restricting edges to
@@ -298,34 +222,6 @@ def kcore(edges: DataFrame, k: int, rounds: int | None = None,
             .agg(F.count(F.lit(1)).cast("long").alias("core_degree")))
 
 
-def kcore_oracle_sql(edges_sql: str, k: int, rounds: int) -> str:
-    """DuckDB twin of ``kcore(..., rounds=R)``: the peel unrolled as a
-    chain of plain CTEs (recursive CTEs cannot reference the working
-    table twice, which the two-endpoint restriction needs — same
-    unrolling pattern as :func:`pagerank_int_oracle_sql`)."""
-    sql = [f"WITH raw AS ({edges_sql}),"]
-    sql.append("e0 AS MATERIALIZED (SELECT DISTINCT least(src, dst) AS u, "
-               "greatest(src, dst) AS v FROM raw WHERE src <> dst),")
-    for i in range(1, rounds + 1):
-        sql.append(
-            f"d{i} AS MATERIALIZED (SELECT node, count(*) AS d FROM ("
-            f"SELECT u AS node FROM e{i-1} UNION ALL "
-            f"SELECT v FROM e{i-1}) GROUP BY node),")
-        sql.append(
-            f"a{i} AS MATERIALIZED (SELECT node FROM d{i} "
-            f"WHERE d >= {k}),")
-        sql.append(
-            f"e{i} AS MATERIALIZED (SELECT e.u, e.v FROM e{i-1} e "
-            f"JOIN a{i} x ON e.u = x.node "
-            f"JOIN a{i} y ON e.v = y.node),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(
-        f"SELECT node, CAST(count(*) AS BIGINT) AS core_degree FROM ("
-        f"SELECT u AS node FROM e{rounds} UNION ALL "
-        f"SELECT v FROM e{rounds}) GROUP BY node")
-    return "\n".join(sql)
-
-
 def bfs_levels(edges: DataFrame, seeds: DataFrame, rounds: int,
                src: str = "src", dst: str = "dst",
                seed_col: str = "node") -> DataFrame:
@@ -334,8 +230,8 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame, rounds: int,
     hop distance — the influence-propagation / blast-radius primitive
     (abuse spread, contamination reach, social distance).
 
-    Fixed plan depth: exactly ``rounds`` expansion rounds (matching the
-    oracle's unrolled CTE chain — :func:`bfs_levels_oracle_sql`); BFS
+    Fixed plan depth: exactly ``rounds`` expansion rounds (matching an
+    oracle's unrolled CTE chain); BFS
     levels are monotone under expansion, so rounds past the eccentricity
     are no-ops, and the R-round result equals true min-distance for
     every node within R hops (nodes further out are absent, by
@@ -367,32 +263,6 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame, rounds: int,
                   .agg(F.min("level").cast("int").alias("level"))
                   .localCheckpoint())
     return levels
-
-
-def bfs_levels_oracle_sql(edges_sql: str, seeds_sql: str,
-                          rounds: int) -> str:
-    """DuckDB twin: the identical fixed-round expansion unrolled as a
-    MATERIALIZED CTE chain (the :func:`kcore_oracle_sql` pattern —
-    min-merge per round, so the hash match proves the Pregel-style
-    plan computes true min hop distances)."""
-    sql = [f"WITH raw AS ({edges_sql}),"]
-    sql.append("bi AS MATERIALIZED (SELECT DISTINCT u, v FROM ("
-               "SELECT src AS u, dst AS v FROM raw WHERE src <> dst "
-               "UNION ALL "
-               "SELECT dst, src FROM raw WHERE src <> dst)),")
-    sql.append(f"l0 AS MATERIALIZED (SELECT DISTINCT node, "
-               f"0 AS level FROM ({seeds_sql})),")
-    for i in range(1, rounds + 1):
-        sql.append(
-            f"l{i} AS MATERIALIZED (SELECT node, min(level) AS level "
-            f"FROM (SELECT node, level FROM l{i-1} UNION ALL "
-            f"SELECT bi.v AS node, {i} AS level FROM l{i-1} f "
-            f"JOIN bi ON f.node = bi.u AND f.level = {i-1}) "
-            f"GROUP BY node),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(f"SELECT node, CAST(level AS INT) AS level "
-               f"FROM l{rounds}")
-    return "\n".join(sql)
 
 
 def modularity_by_community(edges: DataFrame, comm: DataFrame,
@@ -490,11 +360,11 @@ def label_propagation(edges: DataFrame, rounds: int,
     the usual random-order LPA, so two engines (and two cluster
     topologies) compute the identical communities.
 
-    Fixed plan depth: exactly ``rounds`` sync rounds, matching the
-    oracle's unrolled CTE chain (:func:`label_propagation_oracle_sql`)
-    — the contract-query mode, same design as :func:`kcore` /
-    :func:`bfs_levels`.  LPA is not monotone, so the R-round result is
-    defined AS the R-round result (both sides run the identical chain).
+    Fixed plan depth: exactly ``rounds`` sync rounds, matching an
+    oracle's unrolled CTE chain — the contract-query mode, same design
+    as :func:`kcore` / :func:`bfs_levels`.  LPA is not monotone, so the
+    R-round result is defined AS the R-round result (both sides run the
+    identical chain).
 
     Scale shape: per round ONE equi-join (labels ⋈ edges, keyed on the
     node — the Pregel gather) + ONE (node, label)-keyed count
@@ -529,40 +399,6 @@ def label_propagation(edges: DataFrame, rounds: int,
     return labels
 
 
-def label_propagation_oracle_sql(edges_sql: str, rounds: int) -> str:
-    """DuckDB twin: the identical sync-LPA rounds unrolled as a
-    MATERIALIZED CTE chain; the argmax is restated as max-count +
-    min-label-among-max (provably the same as ``max_by(label,
-    struct(cnt, -label))``), so a hash match proves the distributed
-    gather/argmax equivalent."""
-    sql = [f"WITH raw AS ({edges_sql}),"]
-    sql.append("und AS MATERIALIZED (SELECT DISTINCT least(src, dst) "
-               "AS u, greatest(src, dst) AS v FROM raw "
-               "WHERE src <> dst),")
-    sql.append("bi AS MATERIALIZED (SELECT u, v FROM und UNION ALL "
-               "SELECT v, u FROM und),")
-    sql.append("l0 AS MATERIALIZED (SELECT DISTINCT u AS node, "
-               "u AS label FROM bi),")
-    for i in range(1, rounds + 1):
-        sql.append(
-            f"v{i} AS MATERIALIZED (SELECT node, label, "
-            f"count(*) AS cnt FROM ("
-            f"SELECT bi.v AS node, l.label FROM l{i-1} l "
-            f"JOIN bi ON l.node = bi.u "
-            f"UNION ALL SELECT node, label FROM l{i-1}) "
-            f"GROUP BY node, label),")
-        sql.append(
-            f"m{i} AS MATERIALIZED (SELECT node, max(cnt) AS mc "
-            f"FROM v{i} GROUP BY node),")
-        sql.append(
-            f"l{i} AS MATERIALIZED (SELECT v.node, min(v.label) "
-            f"AS label FROM v{i} v JOIN m{i} m "
-            f"ON v.node = m.node AND v.cnt = m.mc GROUP BY v.node),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(f"SELECT node, label FROM l{rounds}")
-    return "\n".join(sql)
-
-
 def sssp_int(edges: DataFrame, seeds: DataFrame, rounds: int,
              src: str = "src", dst: str = "dst", weight: str = "w",
              seed_col: str = "node") -> DataFrame:
@@ -576,8 +412,8 @@ def sssp_int(edges: DataFrame, seeds: DataFrame, rounds: int,
     engine-exact (float weight sums would tie-break differently in the
     last ulp).  Fixed plan depth: exactly ``rounds`` relaxation rounds
     — after R rounds every node whose true shortest path uses ≤ R
-    edges carries its final distance (Bellman-Ford invariant), and the
-    oracle (:func:`sssp_int_oracle_sql`) unrolls the identical chain.
+    edges carries its final distance (Bellman-Ford invariant), so an
+    oracle that unrolls the identical chain matches it.
 
     Scale shape: per round ONE equi-join (distances ⋈ edges, keyed on
     the node) + ONE min-merge (map-side combined); distance relation
@@ -605,31 +441,6 @@ def sssp_int(edges: DataFrame, seeds: DataFrame, rounds: int,
                 .agg(F.min("dist").cast("long").alias("dist"))
                 .localCheckpoint())
     return dist
-
-
-def sssp_int_oracle_sql(edges_sql: str, seeds_sql: str,
-                        rounds: int) -> str:
-    """DuckDB twin of :func:`sssp_int`: the relaxation unrolled as a
-    MATERIALIZED min-merge CTE chain (the :func:`bfs_levels_oracle_sql`
-    pattern with weighted candidates)."""
-    sql = [f"WITH raw AS ({edges_sql}),"]
-    sql.append("bi AS MATERIALIZED (SELECT u, v, min(w) AS w FROM ("
-               "SELECT src AS u, dst AS v, w FROM raw WHERE src <> dst "
-               "UNION ALL SELECT dst, src, w FROM raw "
-               "WHERE src <> dst) GROUP BY u, v),")
-    sql.append(f"d0 AS MATERIALIZED (SELECT DISTINCT node, "
-               f"CAST(0 AS BIGINT) AS dist FROM ({seeds_sql})),")
-    for i in range(1, rounds + 1):
-        sql.append(
-            f"d{i} AS MATERIALIZED (SELECT node, min(dist) AS dist "
-            f"FROM (SELECT node, dist FROM d{i-1} UNION ALL "
-            f"SELECT bi.v AS node, f.dist + bi.w AS dist "
-            f"FROM d{i-1} f JOIN bi ON f.node = bi.u) "
-            f"GROUP BY node),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(f"SELECT node, CAST(dist AS BIGINT) AS dist "
-               f"FROM d{rounds}")
-    return "\n".join(sql)
 
 
 def jaccard_link_prediction(edges: DataFrame, k: int = 50,
@@ -696,49 +507,6 @@ def jaccard_link_prediction(edges: DataFrame, k: int = 50,
                     "jaccard_e6"))
 
 
-def jaccard_link_prediction_oracle_sql(edges_sql: str, k: int,
-                                       max_center_degree: int | None = None
-                                       ) -> str:
-    """DuckDB twin of :func:`jaccard_link_prediction` — same center
-    -enumerated wedges, same hub cap, same exact integer score."""
-    cap = ""
-    if max_center_degree is not None:
-        cap = (f"JOIN deg dn ON adj.n = dn.n AND "
-               f"dn.deg <= {int(max_center_degree)}")
-    return f"""
-        WITH raw AS ({edges_sql}),
-        und AS MATERIALIZED (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), adj AS MATERIALIZED (
-            SELECT u AS n, v AS x FROM und
-            UNION ALL SELECT v, u FROM und
-        ), deg AS MATERIALIZED (
-            SELECT n, count(*) AS deg FROM adj GROUP BY n
-        ), centers AS (
-            SELECT adj.n, adj.x FROM adj {cap}
-        ), pairs AS (
-            SELECT l.x AS a, r.x AS b, count(*) AS common
-            FROM centers l JOIN centers r
-              ON l.n = r.n AND l.x < r.x
-            GROUP BY 1, 2
-        ), nonadj AS (
-            SELECT p.* FROM pairs p
-            WHERE NOT EXISTS (SELECT 1 FROM und
-                              WHERE und.u = p.a AND und.v = p.b)
-        )
-        SELECT a, b, CAST(common AS BIGINT) AS common,
-               CAST(da.deg AS BIGINT) AS deg_a,
-               CAST(db.deg AS BIGINT) AS deg_b,
-               CAST((common * 1000000) // (da.deg + db.deg - common)
-                    AS BIGINT) AS jaccard_e6
-        FROM nonadj
-        JOIN deg da ON nonadj.a = da.n
-        JOIN deg db ON nonadj.b = db.n
-        ORDER BY jaccard_e6 DESC, a ASC, b ASC LIMIT {int(k)}
-    """
-
-
 def clustering_coefficient(edges: DataFrame, src: str = "src",
                            dst: str = "dst") -> DataFrame:
     """Local clustering coefficient per node: ``cc_e6 = 2 * triangles *
@@ -769,29 +537,6 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
                               "(deg * (deg - 1))")))
             .select("node", F.col("deg").cast("long").alias("deg"),
                     "n_triangles", "cc_e6"))
-
-
-def clustering_coefficient_oracle_sql(edges_sql: str) -> str:
-    """DuckDB twin of :func:`clustering_coefficient`, reusing the
-    triangle oracle (textbook wedge definition) + a degree join."""
-    tri = triangle_counts_oracle_sql(edges_sql)
-    return f"""
-        WITH tri AS MATERIALIZED ({tri}),
-        raw AS ({edges_sql}),
-        und AS (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), deg AS (
-            SELECT n AS node, count(*) AS deg FROM (
-                SELECT u AS n FROM und UNION ALL SELECT v FROM und
-            ) GROUP BY 1
-        )
-        SELECT tri.node, CAST(deg AS BIGINT) AS deg, n_triangles,
-               CASE WHEN deg >= 2 THEN
-                    CAST((2 * n_triangles * 1000000) //
-                         (deg * (deg - 1)) AS BIGINT) END AS cc_e6
-        FROM tri JOIN deg ON tri.node = deg.node
-    """
 
 
 def two_hop_reach(edges: DataFrame, src: str = "src",
@@ -891,89 +636,6 @@ def two_hop_reach(edges: DataFrame, src: str = "src",
             .withColumn("capped", F.coalesce("capped", F.lit(False))))
 
 
-def two_hop_reach_oracle_sql(edges_sql: str,
-                             max_mid_degree: int | None = None,
-                             precise_capped: bool = False) -> str:
-    """DuckDB twin of :func:`two_hop_reach` — same smallest-id mid
-    truncation, same capped-row flag (cheap hub-adjacent over-
-    approximation by default; ``precise_capped`` mirrors the exact
-    lost-candidate anti-join)."""
-    if max_mid_degree is None:
-        mid_cte = "adj_mid AS (SELECT n, x FROM adj)"
-        capped = "FALSE AS capped"
-        flag_join = ""
-    else:
-        cap = int(max_mid_degree)
-        if precise_capped:
-            mid_cte = f"""ranked AS MATERIALIZED (
-                SELECT n, x,
-                       row_number() OVER (PARTITION BY n ORDER BY x) AS r
-                FROM adj
-            ), adj_mid AS (
-                SELECT n, x FROM ranked WHERE r <= {cap}
-            ), truncated AS (
-                SELECT n, x FROM ranked WHERE r > {cap}
-            ), kept_pairs AS MATERIALIZED (
-                SELECT DISTINCT a, c FROM (
-                    SELECT n AS a, x AS c FROM adj
-                    UNION ALL
-                    SELECT l.n AS a, r.x AS c
-                    FROM adj l JOIN adj_mid r ON l.x = r.n
-                    WHERE l.n <> r.x
-                )
-            ), flagged AS (
-                SELECT DISTINCT lost.a AS n FROM (
-                    SELECT DISTINCT l.n AS a, r.x AS c
-                    FROM adj l JOIN truncated r ON l.x = r.n
-                    WHERE l.n <> r.x
-                ) lost
-                WHERE NOT EXISTS (
-                    SELECT 1 FROM kept_pairs kp
-                    WHERE kp.a = lost.a AND kp.c = lost.c
-                )
-            )"""
-        else:
-            mid_cte = f"""adj_mid AS (
-                SELECT n, x FROM (
-                    SELECT n, x,
-                           row_number() OVER (PARTITION BY n ORDER BY x)
-                               AS r
-                    FROM adj
-                ) WHERE r <= {cap}
-            ), flagged AS (
-                SELECT DISTINCT adj.n FROM adj
-                JOIN (SELECT n FROM deg WHERE n_1hop > {cap}) h
-                  ON adj.x = h.n
-            )"""
-        capped = "(fl.n IS NOT NULL) AS capped"
-        flag_join = "LEFT JOIN flagged fl ON deg.n = fl.n"
-    return f"""
-        WITH raw AS ({edges_sql}),
-        und AS MATERIALIZED (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), adj AS MATERIALIZED (
-            SELECT u AS n, v AS x FROM und
-            UNION ALL SELECT v, u FROM und
-        ), deg AS MATERIALIZED (
-            SELECT n, count(*) AS n_1hop FROM adj GROUP BY n
-        ), {mid_cte}, hop2 AS (
-            SELECT l.n AS a, r.x AS c
-            FROM adj l JOIN adj_mid r ON l.x = r.n
-            WHERE l.n <> r.x
-        ), reach AS (
-            SELECT a, count(DISTINCT c) AS n_2hop_total FROM (
-                SELECT n AS a, x AS c FROM adj
-                UNION ALL SELECT a, c FROM hop2
-            ) GROUP BY a
-        )
-        SELECT deg.n AS node, CAST(n_1hop AS BIGINT) AS n_1hop,
-               CAST(n_2hop_total AS BIGINT) AS n_2hop_total,
-               {capped}
-        FROM deg JOIN reach ON deg.n = reach.a {flag_join}
-    """
-
-
 def two_hop_reach_hll(edges: DataFrame, src: str = "src",
                       dst: str = "dst", p: int = 8) -> DataFrame:
     """Bounded-state 2-hop reach: per node, a deterministic-HLL
@@ -1022,61 +684,6 @@ def two_hop_reach_hll(edges: DataFrame, src: str = "src",
             .select(F.col("n").alias("node"),
                     F.col("n_1hop").cast("long").alias("n_1hop"),
                     "n_zero_regs", "reg_sum_scaled", "hll_est"))
-
-
-def two_hop_reach_hll_oracle_sql(edges_sql: str, p: int = 8) -> str:
-    """DuckDB twin of :func:`two_hop_reach_hll`: identical md5 hash,
-    bucket split, rho, register union and one-division finish (the
-    hll_distinct oracle pattern over the graph gather)."""
-    from .sketches import hll_constants
-    c = hll_constants(p)
-    return f"""
-        WITH raw AS ({edges_sql}),
-        und AS MATERIALIZED (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), adj AS MATERIALIZED (
-            SELECT u AS n, v AS x FROM und
-            UNION ALL SELECT v, u FROM und
-        ), deg AS (
-            SELECT n, count(*) AS n_1hop FROM adj GROUP BY n
-        ), hashed AS (
-            SELECT n, x,
-                   ('0x' || substr(md5(CAST(x AS VARCHAR)), 1, 15))::BIGINT
-                   AS h
-            FROM adj
-        ), regs1 AS MATERIALIZED (
-            SELECT n, h >> {c['w']} AS bucket,
-                   CAST(max(CASE WHEN (h & {c['rem_mask']}) = 0
-                            THEN {c['maxrho']}
-                            ELSE {c['w']} + 1
-                                 - length(bin(h & {c['rem_mask']}))
-                            END) AS BIGINT) AS reg
-            FROM hashed GROUP BY 1, 2
-        ), merged AS (
-            SELECT n, bucket, max(reg) AS reg FROM (
-                SELECT n, bucket, reg FROM regs1
-                UNION ALL
-                SELECT a.n AS n, r.bucket, r.reg
-                FROM (SELECT n, x AS mid FROM adj) a
-                JOIN regs1 r ON r.n = a.mid
-            ) GROUP BY 1, 2
-        ), agg AS (
-            SELECT n,
-                   CAST(sum(1::BIGINT << CAST({c['maxrho']} - reg AS INT))
-                        AS BIGINT) AS hit_sum,
-                   count(*) AS n_hit
-            FROM merged GROUP BY n
-        )
-        SELECT deg.n AS node, CAST(n_1hop AS BIGINT) AS n_1hop,
-               CAST({c['m']} - n_hit AS INT) AS n_zero_regs,
-               CAST(hit_sum + ({c['m']} - n_hit) * {c['empty_term']}
-                    AS BIGINT) AS reg_sum_scaled,
-               round({c['est_num']!r} /
-                     CAST(hit_sum + ({c['m']} - n_hit) * {c['empty_term']}
-                          AS DOUBLE), 3) AS hll_est
-        FROM deg JOIN agg ON deg.n = agg.n
-    """
 
 
 def _lc_floor_table(p: int) -> list[int]:
@@ -1190,76 +797,6 @@ def neighborhood_function(edges: DataFrame, src: str = "src",
     return out
 
 
-def neighborhood_function_oracle_sql(edges_sql: str, max_k: int = 4,
-                                     p: int = 8) -> str:
-    """DuckDB twin of :func:`neighborhood_function` — the identical
-    register chain unrolled as K materialized CTEs."""
-    from .sketches import hll_constants
-    c = hll_constants(p)
-    parts = [f"""
-        WITH raw AS ({edges_sql}),
-        und AS MATERIALIZED (
-            SELECT DISTINCT least(src, dst) AS u, greatest(src, dst) AS v
-            FROM raw WHERE src <> dst
-        ), adj AS MATERIALIZED (
-            SELECT u AS n, v AS x FROM und
-            UNION ALL SELECT v, u FROM und
-        ), nodes AS (SELECT DISTINCT n FROM adj),
-        r0 AS MATERIALIZED (
-            SELECT n, h >> {c['w']} AS bucket,
-                   CAST(CASE WHEN (h & {c['rem_mask']}) = 0
-                        THEN {c['maxrho']}
-                        ELSE {c['w']} + 1
-                             - length(bin(h & {c['rem_mask']}))
-                        END AS BIGINT) AS reg
-            FROM (SELECT n,
-                         ('0x' || substr(md5(CAST(n AS VARCHAR)), 1, 15))
-                         ::BIGINT AS h
-                  FROM nodes)
-        )"""]
-    for k in range(1, max_k + 1):
-        parts.append(f""", r{k} AS MATERIALIZED (
-            SELECT n, bucket, max(reg) AS reg FROM (
-                SELECT n, bucket, reg FROM r{k-1}
-                UNION ALL
-                SELECT a.n, r.bucket, r.reg
-                FROM (SELECT n, x AS mid FROM adj) a
-                JOIN r{k-1} r ON r.n = a.mid
-            ) GROUP BY 1, 2
-        )""")
-    finishes = []
-    for k in range(max_k + 1):
-        finishes.append(f"""
-            SELECT {k} AS k, CAST(count(*) AS BIGINT) AS n_nodes,
-                   CAST(CAST(sum(CAST(
-                       CASE WHEN {c['est_num']!r} /
-                                 CAST(hit + ({c['m']} - nh)
-                                      * {c['empty_term']} AS DOUBLE)
-                                 <= {2.5 * c['m']!r}
-                             AND ({c['m']} - nh) > 0
-                            THEN ({_lc_floor_table(p)})[
-                                CAST({c['m']} - nh AS INT) + 1]
-                            ELSE CAST(floor({c['est_num']!r} /
-                                 CAST(hit + ({c['m']} - nh)
-                                      * {c['empty_term']} AS DOUBLE))
-                                 AS BIGINT) END
-                                 AS HUGEINT)) AS HUGEINT) AS VARCHAR)
-                       AS nf_floor,
-                   CAST(CAST(sum(CAST(hit AS HUGEINT)
-                                 + ({c['m']} - nh)
-                                 * {c['empty_term']}::HUGEINT)
-                             AS HUGEINT) AS VARCHAR) AS sum_reg_scaled,
-                   CAST(sum({c['m']} - nh) AS BIGINT) AS sum_zero_regs
-            FROM (SELECT n,
-                         CAST(sum(1::BIGINT <<
-                                  CAST({c['maxrho']} - reg AS INT))
-                              AS BIGINT) AS hit,
-                         count(*) AS nh
-                  FROM r{k} GROUP BY n)""")
-    return ("".join(parts) + "\n"
-            + "\nUNION ALL\n".join(finishes))
-
-
 def effective_diameter(nf_rows, q: float = 0.9) -> float:
     """HyperANF finish: the q-effective diameter from collected
     :func:`neighborhood_function` rows — the smallest k (with linear
@@ -1356,42 +893,3 @@ def hits_int(edges: DataFrame, iters: int = 2,
                  .agg(F.sum("auth").alias("_raw")))
         hub = _normalize(h_raw, "hub").localCheckpoint()
     return hub.join(auth, "node").select("node", "hub", "auth")
-
-
-def hits_int_oracle_sql(edges_sql: str, iters: int = 2,
-                        scale: int = 1_000_000) -> str:
-    """DuckDB twin of :func:`hits_int`: the identical integer chain as
-    unrolled CTEs (HUGEINT sums, ``//`` ≡ Spark ``DIV`` on these
-    non-negative values)."""
-    sql = [f"WITH e AS ({edges_sql}),",
-           "nodes AS (SELECT src AS node FROM e UNION "
-           "SELECT dst FROM e),",
-           f"h0 AS (SELECT node, CAST({scale} AS BIGINT) AS hub "
-           f"FROM nodes),"]
-    for i in range(1, iters + 1):
-        sql.append(
-            f"ar{i} AS (SELECT e.dst AS node, "
-            f"CAST(sum(h.hub) AS HUGEINT) AS raw "
-            f"FROM e JOIN h{i-1} h ON e.src = h.node GROUP BY e.dst),")
-        sql.append(f"at{i} AS (SELECT greatest(coalesce(sum(raw), 1), 1)"
-                   f" AS t FROM ar{i}),")
-        sql.append(
-            f"a{i} AS (SELECT n.node, CAST(COALESCE(r.raw, 0) * {scale}"
-            f" // t AS BIGINT) AS auth "
-            f"FROM nodes n LEFT JOIN ar{i} r USING (node) "
-            f"CROSS JOIN at{i}),")
-        sql.append(
-            f"hr{i} AS (SELECT e.src AS node, "
-            f"CAST(sum(a.auth) AS HUGEINT) AS raw "
-            f"FROM e JOIN a{i} a ON e.dst = a.node GROUP BY e.src),")
-        sql.append(f"ht{i} AS (SELECT greatest(coalesce(sum(raw), 1), 1)"
-                   f" AS t FROM hr{i}),")
-        sql.append(
-            f"h{i} AS (SELECT n.node, CAST(COALESCE(r.raw, 0) * {scale}"
-            f" // t AS BIGINT) AS hub "
-            f"FROM nodes n LEFT JOIN hr{i} r USING (node) "
-            f"CROSS JOIN ht{i}),")
-    sql[-1] = sql[-1].rstrip(",")
-    sql.append(f"SELECT h.node, h.hub, a.auth "
-               f"FROM h{iters} h JOIN a{iters} a USING (node)")
-    return "\n".join(sql)

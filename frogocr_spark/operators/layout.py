@@ -372,10 +372,9 @@ def compaction_plan(files: DataFrame, group_col: str = "source",
     shuffle on ``group_col``, then a per-group sequential pack inside
     an Arrow batch (greedy close-at-threshold is order-dependent by
     definition — no parallel form exists; at manifest scale the loop
-    is microseconds per group).  Groups pack in parallel.  The oracle
-    replays the same walk as a DuckDB recursive CTE, so the hash match
-    pins the exact greedy semantics (boundary file INCLUDED in the
-    closing bin, accumulator reset to zero).
+    is microseconds per group).  Groups pack in parallel.  Greedy
+    semantics: the boundary file is INCLUDED in the closing bin, and
+    the accumulator resets to zero.
     """
     import pandas as pd
 
@@ -408,43 +407,6 @@ def compaction_plan(files: DataFrame, group_col: str = "source",
 
     manifest = files.select(group_col, id_col, size_col)
     return manifest.groupBy(group_col).applyInPandas(pack, out_schema)
-
-
-def compaction_plan_oracle_sql(files_sql: str, group_col: str = "source",
-                               id_col: str = "doc_id",
-                               size_col: str = "n_chars",
-                               target: int = 2000) -> str:
-    """DuckDB twin of :func:`compaction_plan`: the greedy walk as a
-    recursive CTE carrying ``(bin, acc)`` one file forward per step —
-    the sequential definition the distributed per-group pack must
-    reproduce."""
-    return f"""
-        WITH RECURSIVE manifest AS (
-            SELECT {group_col} AS grp, {id_col} AS fid,
-                   {size_col} AS sz,
-                   row_number() OVER (PARTITION BY {group_col}
-                                      ORDER BY {id_col}) AS rn
-            FROM ({files_sql})
-        ),
-        walk AS (
-            SELECT grp, fid, sz, rn, 1 AS bin,
-                   CAST(sz AS BIGINT) AS acc
-            FROM manifest WHERE rn = 1
-            UNION ALL
-            SELECT m.grp, m.fid, m.sz, m.rn,
-                   CASE WHEN w.acc >= {target} THEN w.bin + 1
-                        ELSE w.bin END,
-                   CASE WHEN w.acc >= {target} THEN CAST(m.sz AS BIGINT)
-                        ELSE w.acc + m.sz END
-            FROM walk w JOIN manifest m
-              ON m.grp = w.grp AND m.rn = w.rn + 1
-        )
-        SELECT grp AS {group_col}, CAST(bin AS BIGINT) AS bin_id,
-               count(*) AS n_files, CAST(sum(sz) AS BIGINT) AS bin_bytes,
-               min(fid) AS first_id, max(fid) AS last_id
-        FROM walk
-        GROUP BY grp, bin
-    """
 
 
 def shard_plan(df: DataFrame, n_shards: int,

@@ -59,33 +59,6 @@ def feature_hash(df: DataFrame, n_buckets: int = 1024,
                         F.col("val").cast("long").alias("val"))
 
 
-def feature_hash_oracle_sql(docs_sql: str, n_buckets: int) -> str:
-    """DuckDB twin of :func:`feature_hash` — same md5 bucket + sign
-    bit (``h DIV n_buckets`` parity), same sparse non-zero cut."""
-    b = int(n_buckets)
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        toks AS (
-            SELECT doc_id,
-                   unnest(string_split_regex(trim(text), '\s+')) AS token
-            FROM docs
-        ), hashed AS (
-            SELECT doc_id,
-                   CAST(('0x' || substr(md5(token), 1, 15)) AS BIGINT)
-                       AS h
-            FROM toks WHERE token <> ''
-        ), cells AS (
-            SELECT doc_id, h % {b} AS bucket,
-                   sum(CASE WHEN (h // {b}) % 2 = 0 THEN 1 ELSE -1 END)
-                       AS val
-            FROM hashed GROUP BY 1, 2
-        )
-        SELECT doc_id, CAST(bucket AS INT) AS bucket,
-               CAST(val AS BIGINT) AS val
-        FROM cells WHERE val <> 0
-    """
-
-
 def nb_train(df: DataFrame, min_count: int = 2,
              id_col: str = "doc_id", class_col: str = "source",
              text_col: str = "text") -> DataFrame:
@@ -138,46 +111,6 @@ def nb_train(df: DataFrame, min_count: int = 2,
         F.col("n_class_tokens").cast("long").alias("n_class_tokens"),
         F.col("vocab_size").cast("long").alias("vocab_size"),
         "p_e6", "prior_e6")
-
-
-def nb_train_oracle_sql(docs_sql: str, min_count: int,
-                        class_col: str = "source") -> str:
-    """DuckDB twin of :func:`nb_train`."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        toks AS (
-            SELECT {class_col} AS cls,
-                   unnest(string_split_regex(trim(text), '\s+')) AS token
-            FROM docs
-        ), ct AS (
-            SELECT cls, token, count(*) AS cnt FROM toks
-            WHERE token <> '' GROUP BY 1, 2
-        ), vocab AS (
-            SELECT token FROM ct GROUP BY token
-            HAVING sum(cnt) >= {int(min_count)}
-        ), vs AS (SELECT count(*) AS vocab_size FROM vocab),
-        ctv AS (
-            SELECT ct.* FROM ct JOIN vocab USING (token)
-        ), csize AS (
-            SELECT cls, sum(cnt) AS n_class_tokens FROM ctv GROUP BY 1
-        ), cdocs AS (
-            SELECT {class_col} AS cls, count(*) AS n_cls_docs
-            FROM docs GROUP BY 1
-        ), nn AS (SELECT count(*) AS n_docs FROM docs)
-        SELECT ctv.cls AS {class_col}, token,
-               CAST(cnt AS BIGINT) AS cnt,
-               CAST(n_class_tokens AS BIGINT) AS n_class_tokens,
-               CAST(vocab_size AS BIGINT) AS vocab_size,
-               CAST(((cnt + 1) * 1000000) //
-                    (n_class_tokens + vocab_size) AS BIGINT) AS p_e6,
-               CAST((n_cls_docs * 1000000) // n_docs AS BIGINT)
-                   AS prior_e6
-        FROM ctv
-        JOIN csize ON ctv.cls = csize.cls
-        CROSS JOIN vs
-        JOIN cdocs ON ctv.cls = cdocs.cls
-        CROSS JOIN nn
-    """
 
 
 def knn_classify(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -526,49 +459,6 @@ def isotonic_calibration(df: DataFrame, score, is_pos,
                     .cast("long").alias("fit_e6")))
 
 
-def isotonic_calibration_oracle_sql(labeled_sql: str, n_bins: int = 10,
-                                    key_scale: int = 10 ** 12) -> str:
-    """DuckDB twin of :func:`isotonic_calibration` — identical binning
-    (the verbatim ``calibration_bins`` oracle shape), cumulative sums,
-    integer interval keys, and the max-over-j of min-over-k fold.
-    ``labeled_sql`` must yield ``(s BIGINT, y 0/1)``."""
-    ks = int(key_scale)
-    return f"""
-        WITH lab AS ({labeled_sql}),
-        rng AS (SELECT min(s) AS smin, max(s) AS smax FROM lab),
-        bx AS (
-            SELECT CASE WHEN smax > smin
-                        THEN ((s - smin) * {int(n_bins)})
-                             // (smax - smin + 1)
-                        ELSE 0 END AS bin, y
-            FROM lab, rng
-        ), bins AS (
-            SELECT bin, count(*) AS c, sum(y) AS p FROM bx GROUP BY 1
-        ), cum AS (
-            SELECT bin, c, p,
-                   row_number() OVER (ORDER BY bin) AS i,
-                   sum(c) OVER (ORDER BY bin) AS cc,
-                   sum(p) OVER (ORDER BY bin) AS cy
-            FROM bins
-        ), pr AS (
-            SELECT lo.i AS j, hi.i AS k,
-                   (CAST(hi.cy - (lo.cy - lo.p) AS HUGEINT) * {ks})
-                   // (hi.cc - (lo.cc - lo.c)) AS key
-            FROM cum lo JOIN cum hi ON hi.i >= lo.i
-        ), mn AS (
-            SELECT t.i AS t, pr.j, min(pr.key) AS mk
-            FROM cum t JOIN pr ON pr.j <= t.i AND pr.k >= t.i
-            GROUP BY 1, 2
-        ), ft AS (SELECT t, max(mk) AS fk FROM mn GROUP BY 1)
-        SELECT CAST(cum.bin AS BIGINT) AS bin,
-               CAST(cum.c AS BIGINT) AS n,
-               CAST((CAST(cum.p AS HUGEINT) * 1000000) // cum.c
-                    AS BIGINT) AS pos_rate_e6,
-               CAST(ft.fk // {ks // 10 ** 6} AS BIGINT) AS fit_e6
-        FROM cum JOIN ft ON ft.t = cum.i
-    """
-
-
 def conformal_threshold(df: DataFrame, group_col: str, score,
                         id_col: str, *, alpha_num: int = 1,
                         alpha_den: int = 10,
@@ -640,53 +530,6 @@ def conformal_threshold(df: DataFrame, group_col: str, score,
                     .alias("coverage_e6")))
 
 
-def conformal_threshold_oracle_sql(scored_sql: str, *,
-                                   alpha_num: int = 1,
-                                   alpha_den: int = 10,
-                                   calib_hex: str = "8") -> str:
-    """DuckDB twin of :func:`conformal_threshold`.  ``scored_sql`` must
-    yield ``(grp, s BIGINT, id VARCHAR)``."""
-    keep = int(alpha_den) - int(alpha_num)
-    return f"""
-        WITH base AS ({scored_sql}),
-        calib AS (
-            SELECT grp, s, id FROM base
-            WHERE substr(md5(id), 1, 1) < '{calib_hex}'
-        ), holdout AS (
-            SELECT grp, s FROM base
-            WHERE substr(md5(id), 1, 1) >= '{calib_hex}'
-        ), ranked AS (
-            SELECT grp, s,
-                   row_number() OVER (PARTITION BY grp
-                                      ORDER BY s, id) AS rn,
-                   count(*) OVER (PARTITION BY grp) AS n_cal
-            FROM calib
-        ), stats AS (
-            SELECT grp, max(n_cal) AS n_cal,
-                   max(((n_cal + 1) * {keep} + {int(alpha_den)} - 1)
-                       // {int(alpha_den)}) AS k,
-                   max(CASE WHEN rn = ((n_cal + 1) * {keep}
-                                       + {int(alpha_den)} - 1)
-                                      // {int(alpha_den)}
-                            THEN s END) AS thr
-            FROM ranked GROUP BY grp
-        ), cov AS (
-            SELECT h.grp, count(*) AS n_eval,
-                   sum(CASE WHEN h.s <= st.thr THEN 1 ELSE 0 END)
-                       AS n_cov
-            FROM holdout h JOIN stats st ON st.grp = h.grp
-            GROUP BY h.grp
-        )
-        SELECT st.grp AS "group", CAST(st.n_cal AS BIGINT) AS n_cal,
-               CAST(st.k AS BIGINT) AS k, CAST(st.thr AS BIGINT) AS thr,
-               CAST(coalesce(cov.n_eval, 0) AS BIGINT) AS n_eval,
-               CAST(CASE WHEN st.thr IS NOT NULL AND cov.n_eval > 0
-                         THEN (cov.n_cov * 1000000) // cov.n_eval
-                    END AS BIGINT) AS coverage_e6
-        FROM stats st LEFT JOIN cov ON cov.grp = st.grp
-    """
-
-
 def cv_stump(df: DataFrame, value_col, label_col,
              id_col: str = "event_id", k: int = 5) -> DataFrame:
     """k-fold cross-validation of the exact 1R decision stump
@@ -737,85 +580,3 @@ def cv_stump(df: DataFrame, value_col, label_col,
         rows, "fold int, rule string, threshold long, "
               "train_correct long, train_total long, "
               "test_correct long, test_total long")
-
-
-def cv_stump_oracle_sql(src_sql: str, k: int = 5) -> str:
-    """DuckDB twin of :func:`cv_stump`.  ``src_sql`` must yield
-    ``(id, v, y)`` rows (v integer feature, y 0/1 label); emits one
-    stump-train + test-eval block per fold, unioned."""
-    blocks = []
-    for f in range(k):
-        blocks.append(f"""
-        SELECT {f} AS fold, best.rule, best.threshold,
-               best.n_correct AS train_correct,
-               best.n_total AS train_total,
-               ev.tc AS test_correct, ev.tt AS test_total
-        FROM (
-            WITH b AS (
-                SELECT v, y FROM folded WHERE f <> {f}
-            ), g AS (
-                SELECT v, sum(y) AS p, sum(1 - y) AS n FROM b GROUP BY v
-            ), t AS (
-                SELECT CAST(sum(p) AS BIGINT) AS pos,
-                       CAST(sum(n) AS BIGINT) AS neg FROM g
-            ), c AS (
-                SELECT v, sum(p) OVER (ORDER BY v) AS pc,
-                       sum(n) OVER (ORDER BY v) AS nc
-                FROM g
-            ), cand AS (
-                SELECT 'le' AS rule, v AS threshold,
-                       pc + (t.neg - nc) AS n_correct
-                FROM c CROSS JOIN t
-                UNION ALL
-                SELECT 'gt', v, nc + (t.pos - pc) FROM c CROSS JOIN t
-            )
-            SELECT rule, CAST(threshold AS BIGINT) AS threshold,
-                   CAST(n_correct AS BIGINT) AS n_correct,
-                   CAST(t.pos + t.neg AS BIGINT) AS n_total
-            FROM cand CROSS JOIN t
-            ORDER BY n_correct DESC, rule, threshold LIMIT 1
-        ) best CROSS JOIN (
-            SELECT CAST(count(*) AS BIGINT) AS tt,
-                   CAST(COALESCE(sum(CASE WHEN
-                       (CASE WHEN best2.rule = 'le'
-                             THEN fo.v <= best2.threshold
-                             ELSE fo.v > best2.threshold END)
-                       = (fo.y = 1) THEN 1 ELSE 0 END), 0) AS BIGINT)
-                       AS tc
-            FROM (SELECT * FROM folded WHERE f = {f}) fo
-            CROSS JOIN (
-                WITH b AS (
-                    SELECT v, y FROM folded WHERE f <> {f}
-                ), g AS (
-                    SELECT v, sum(y) AS p, sum(1 - y) AS n
-                    FROM b GROUP BY v
-                ), t AS (
-                    SELECT CAST(sum(p) AS BIGINT) AS pos,
-                           CAST(sum(n) AS BIGINT) AS neg FROM g
-                ), c AS (
-                    SELECT v, sum(p) OVER (ORDER BY v) AS pc,
-                           sum(n) OVER (ORDER BY v) AS nc
-                    FROM g
-                ), cand AS (
-                    SELECT 'le' AS rule, v AS threshold,
-                           pc + (t.neg - nc) AS n_correct
-                    FROM c CROSS JOIN t
-                    UNION ALL
-                    SELECT 'gt', v, nc + (t.pos - pc) FROM c CROSS JOIN t
-                )
-                SELECT rule, threshold
-                FROM cand CROSS JOIN t
-                ORDER BY n_correct DESC, rule, threshold LIMIT 1
-            ) best2
-            GROUP BY ALL
-        ) ev""")
-    body = "\n        UNION ALL\n".join(blocks)
-    return f"""
-        WITH folded AS MATERIALIZED (
-            SELECT ('0x' || substr(md5(CAST(id AS VARCHAR)), 1, 15))
-                       ::BIGINT % {k} AS f,
-                   v, y
-            FROM ({src_sql})
-        )
-        {body}
-    """

@@ -60,17 +60,3 @@ def profile_table(df: DataFrame, cols: list[str]) -> DataFrame:
                     F.col("r.n_null").cast("long").alias("n_null"),
                     F.col("r.n_distinct").cast("long").alias("n_distinct"),
                     "r.min_s", "r.max_s"))
-
-
-def profile_oracle_sql(table: str, cols: list[str]) -> str:
-    """The SQL twin: a UNION ALL of per-column profile rows (the oracle
-    optimizes for clarity, the operator for single-pass execution —
-    the hash match proves them equivalent)."""
-    parts = [f"""
-        SELECT '{c}' AS column, CAST(count(*) AS BIGINT) AS n,
-               CAST(count(*) - count({c}) AS BIGINT) AS n_null,
-               CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-               CAST(min({c}) AS VARCHAR) AS min_s,
-               CAST(max({c}) AS VARCHAR) AS max_s
-        FROM {table}""" for c in cols]
-    return " UNION ALL ".join(parts)

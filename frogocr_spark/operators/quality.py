@@ -209,32 +209,6 @@ def dp_noisy_counts(df: DataFrame, group_col: str,
                       "noise", "n_noisy")
 
 
-def dp_noisy_counts_oracle_sql(src_sql: str, group_col: str,
-                               salt: str = "dp0") -> str:
-    """DuckDB twin of :func:`dp_noisy_counts` — the identical
-    threshold table as a CASE chain."""
-    branches = " ".join(
-        f"WHEN h < {th} THEN {k}"
-        for k, th in _GEOM_THRESHOLDS[:-1])
-    return f"""
-        WITH src AS ({src_sql}),
-        counts AS (
-            SELECT {group_col} AS grp, count(*) AS n
-            FROM src GROUP BY 1
-        ), drawn AS (
-            SELECT grp, n,
-                   CAST(('0x' || substr(md5('{salt}:' ||
-                        CAST(grp AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-            FROM counts
-        )
-        SELECT grp AS {group_col}, CAST(n AS BIGINT) AS n,
-               CAST(CASE {branches} ELSE 8 END AS INT) AS noise,
-               CAST(greatest(n + CASE {branches} ELSE 8 END, 0)
-                    AS BIGINT) AS n_noisy
-        FROM drawn
-    """
-
-
 def l_diversity(df: DataFrame, qi_cols: list[str], sensitive_col: str,
                 l: int = 3) -> DataFrame:
     """l-diversity audit (Machanavajjhala 2007) — the governance gate
@@ -372,46 +346,3 @@ def t_closeness(df: DataFrame, qi_cols: list[str], sensitive_col: str,
         .cast("long"))
     return out.select(*qi_cols, "n", "tv_e6",
                       (F.col("tv_e6") <= t_e6).alias("ok"))
-
-
-def t_closeness_oracle_sql(src_sql: str,
-                           qi_named: list[tuple[str, str]],
-                           sensitive_expr: str,
-                           t_e6: int = 300_000) -> str:
-    """DuckDB twin of :func:`t_closeness`.  ``qi_named`` =
-    ``[(expr, out_name), ...]`` so the oracle emits the same QI column
-    names as the Spark side; HUGEINT cross-multiplication, ``//``."""
-    qs = ", ".join(f"{e} AS {n}" for e, n in qi_named)
-    qn = ", ".join(n for _, n in qi_named)
-    return f"""
-        WITH src AS MATERIALIZED (
-            SELECT {qs}, {sensitive_expr} AS s FROM ({src_sql})
-        ), pairs AS (
-            SELECT {qn}, s, CAST(count(*) AS HUGEINT) AS c
-            FROM src GROUP BY {qn}, s
-        ), gcnt AS (
-            SELECT s, CAST(count(*) AS HUGEINT) AS cj
-            FROM src GROUP BY s
-        ), tot AS (
-            SELECT CAST(count(*) AS HUGEINT) AS n_total FROM src
-        ), sizes AS (
-            SELECT {qn}, CAST(sum(c) AS HUGEINT) AS ng
-            FROM pairs GROUP BY {qn}
-        ), dev AS (
-            SELECT {qn}, max(ng) AS n,
-                   sum(abs(c * n_total - cj * ng)) AS d,
-                   sum(cj * ng) AS cov,
-                   max(n_total) AS n_total
-            FROM pairs
-            JOIN gcnt USING (s)
-            JOIN sizes USING ({qn})
-            CROSS JOIN tot
-            GROUP BY {qn}
-        )
-        SELECT {qn}, CAST(n AS BIGINT) AS n,
-               CAST((d + (n_total * n - cov)) * 1000000
-                    // (2 * n * n_total) AS BIGINT) AS tv_e6,
-               ((d + (n_total * n - cov)) * 1000000
-                    // (2 * n * n_total)) <= {t_e6} AS ok
-        FROM dev
-    """

@@ -1033,65 +1033,6 @@ def power_iteration_int(df: DataFrame, *, vec_col: str = "embedding",
         "i long, component_e6 long, rayleigh_e6 long")
 
 
-def power_iteration_oracle_sql(vecs_sql: str, *, use_dims: int = 16,
-                               scale: int = 4096,
-                               iters: int = 4) -> str:
-    """DuckDB twin of :func:`power_iteration_int`: textbook per-row
-    Gram expansion (the verbatim ``emb_gram`` oracle shape), then the
-    iteration chain unrolled as CTEs — matrix-vector product as a
-    join+sum, normalization as HUGEINT ``//`` (truncating, matching
-    :func:`_tdiv`)."""
-    d, sc = int(use_dims), int(scale)
-    sql = [f"""
-        WITH vq AS (
-            SELECT list_transform(v, x ->
-                       CAST(floor(CAST(x AS DOUBLE) * {sc}) AS BIGINT))
-                   AS q, rid
-            FROM (SELECT embedding AS v, row_number() OVER () AS rid
-                  FROM ({vecs_sql}))
-        ), ex AS (
-            SELECT rid, i, q[CAST(i AS INT)] AS val
-            FROM vq, range(1, {d} + 1) r(i)
-        ), g AS (
-            SELECT a.i - 1 AS i, b.i - 1 AS j,
-                   SUM(CAST(a.val AS HUGEINT) * b.val) AS gram
-            FROM ex a JOIN ex b ON a.rid = b.rid AND b.i >= a.i
-            GROUP BY 1, 2
-        ), gs AS (
-            SELECT i, j, gram FROM g
-            UNION ALL
-            SELECT j, i, gram FROM g WHERE i <> j
-        ), v0 AS (
-            SELECT CAST(t.i AS BIGINT) AS i,
-                   CAST(1000000 AS HUGEINT) AS v
-            FROM range(0, {d}) t(i)
-        )"""]
-    for r in range(1, iters + 1):
-        p = r - 1
-        sql.append(f""", w{r} AS (
-            SELECT gs.i, SUM(gs.gram * vp.v) AS w
-            FROM gs JOIN v{p} vp ON vp.i = gs.j GROUP BY 1
-        ), v{r} AS (
-            SELECT w{r}.i, (w * 1000000)
-                   // (SELECT max(abs(w)) FROM w{r}) AS v
-            FROM w{r}
-        )""")
-    n = iters
-    sql.append(f""", wf AS (
-            SELECT gs.i, SUM(gs.gram * vp.v) AS w
-            FROM gs JOIN v{n} vp ON vp.i = gs.j GROUP BY 1
-        ), ray AS (
-            SELECT (SUM(v{n}.v * wf.w) * 1000000)
-                   // (SELECT SUM(v * v) FROM v{n}) AS r
-            FROM v{n} JOIN wf ON wf.i = v{n}.i
-        )
-        SELECT CAST(v{n}.i AS BIGINT) AS i,
-               CAST(v{n}.v AS BIGINT) AS component_e6,
-               CAST(ray.r AS BIGINT) AS rayleigh_e6
-        FROM v{n}, ray""")
-    return "".join(sql)
-
-
 def power_iteration_top2(df: DataFrame, *, vec_col: str = "embedding",
                          use_dims: int = 16, scale: int = 4096,
                          iters: int = 4,
@@ -1177,108 +1118,3 @@ def power_iteration_top2(df: DataFrame, *, vec_col: str = "embedding",
         [(i, v1[i], v2[i], l1, l2, e1, e2) for i in range(d)],
         "i long, c1_e6 long, c2_e6 long, lambda1_e6 long, "
         "lambda2_e6 long, energy1_e6 long, energy2_e6 long")
-
-
-def power_iteration_top2_oracle_sql(vecs_sql: str, *,
-                                    use_dims: int = 16,
-                                    scale: int = 4096, iters: int = 4,
-                                    deflate_div: int = 10 ** 26) -> str:
-    """DuckDB twin of :func:`power_iteration_top2` — the
-    ``power_iteration_oracle_sql`` chain, then the outer-product
-    deflation as a 2-vector cross join, a second unrolled iteration
-    chain over the truncated H, and the Rayleigh/trace/energy rollup.
-    All HUGEINT; every ``//`` truncates, matching ``_tdiv``."""
-    d, sc, dd = int(use_dims), int(scale), int(deflate_div)
-    sql = [f"""
-        WITH vq AS (
-            SELECT list_transform(v, x ->
-                       CAST(floor(CAST(x AS DOUBLE) * {sc}) AS BIGINT))
-                   AS q, rid
-            FROM (SELECT embedding AS v, row_number() OVER () AS rid
-                  FROM ({vecs_sql}))
-        ), ex AS (
-            SELECT rid, i, q[CAST(i AS INT)] AS val
-            FROM vq, range(1, {d} + 1) r(i)
-        ), g AS (
-            SELECT a.i - 1 AS i, b.i - 1 AS j,
-                   SUM(CAST(a.val AS HUGEINT) * b.val) AS gram
-            FROM ex a JOIN ex b ON a.rid = b.rid AND b.i >= a.i
-            GROUP BY 1, 2
-        ), gs AS MATERIALIZED (
-            SELECT i, j, gram FROM g
-            UNION ALL
-            SELECT j, i, gram FROM g WHERE i <> j
-        ), v0 AS (
-            SELECT CAST(t.i AS BIGINT) AS i,
-                   CAST(1000000 AS HUGEINT) AS v
-            FROM range(0, {d}) t(i)
-        )"""]
-    for r in range(1, iters + 1):
-        p = r - 1
-        sql.append(f""", w{r} AS MATERIALIZED (
-            SELECT gs.i, SUM(gs.gram * vp.v) AS w
-            FROM gs JOIN v{p} vp ON vp.i = gs.j GROUP BY 1
-        ), v{r} AS MATERIALIZED (
-            SELECT w{r}.i, (w * 1000000)
-                   // (SELECT max(abs(w)) FROM w{r}) AS v
-            FROM w{r}
-        )""")
-    n = iters
-    sql.append(f""", gv AS MATERIALIZED (
-            SELECT gs.i, SUM(gs.gram * vp.v) AS w
-            FROM gs JOIN v{n} vp ON vp.i = gs.j GROUP BY 1
-        ), sc1 AS MATERIALIZED (
-            SELECT (SELECT SUM(v * v) FROM v{n}) AS s1,
-                   (SELECT SUM(v{n}.v * gv.w)
-                    FROM v{n} JOIN gv ON gv.i = v{n}.i) AS s2
-        ), hm AS MATERIALIZED (
-            SELECT gs.i, gs.j,
-                   (sc1.s1 * sc1.s1 * gs.gram
-                    - sc1.s2 * a.v * b.v) // {dd} AS h
-            FROM gs, sc1, v{n} a, v{n} b
-            WHERE a.i = gs.i AND b.i = gs.j
-        ), u0 AS (
-            SELECT CAST(t.i AS BIGINT) AS i,
-                   CAST(1000000 AS HUGEINT) AS v
-            FROM range(0, {d}) t(i)
-        )""")
-    for r in range(1, iters + 1):
-        p = r - 1
-        sql.append(f""", x{r} AS MATERIALIZED (
-            SELECT hm.i, SUM(hm.h * up.v) AS w
-            FROM hm JOIN u{p} up ON up.i = hm.j GROUP BY 1
-        ), y{r} AS MATERIALIZED (
-            SELECT max(abs(w)) AS m FROM x{r}
-        ), u{r} AS MATERIALIZED (
-            SELECT x{r}.i,
-                   CASE WHEN y{r}.m = 0 THEN CAST(0 AS HUGEINT)
-                        ELSE (w * 1000000) // y{r}.m END AS v
-            FROM x{r}, y{r}
-        )""")
-    sql.append(f""", gv2 AS MATERIALIZED (
-            SELECT gs.i, SUM(gs.gram * up.v) AS w
-            FROM gs JOIN u{n} up ON up.i = gs.j GROUP BY 1
-        ), fin AS MATERIALIZED (
-            SELECT (SELECT (s2 * 1000000) // s1 FROM sc1) AS l1,
-                   CASE WHEN (SELECT SUM(v * v) FROM u{n}) = 0
-                        THEN CAST(0 AS HUGEINT)
-                        ELSE (SELECT SUM(u{n}.v * gv2.w) FROM u{n}
-                              JOIN gv2 ON gv2.i = u{n}.i) * 1000000
-                             // (SELECT SUM(v * v) FROM u{n}) END AS l2,
-                   (SELECT SUM(gram) FROM gs WHERE i = j) AS tr
-        )
-        SELECT CAST(v{n}.i AS BIGINT) AS i,
-               CAST(v{n}.v AS BIGINT) AS c1_e6,
-               CAST(u{n}.v AS BIGINT) AS c2_e6,
-               CAST(fin.l1 AS BIGINT) AS lambda1_e6,
-               CAST(fin.l2 AS BIGINT) AS lambda2_e6,
-               CAST(CASE WHEN fin.tr = 0 THEN 0
-                         ELSE (fin.l1 * 1000000)
-                              // (fin.tr * 1000000) END AS BIGINT)
-                   AS energy1_e6,
-               CAST(CASE WHEN fin.tr = 0 THEN 0
-                         ELSE (fin.l2 * 1000000)
-                              // (fin.tr * 1000000) END AS BIGINT)
-                   AS energy2_e6
-        FROM v{n} JOIN u{n} ON u{n}.i = v{n}.i, fin""")
-    return "".join(sql)

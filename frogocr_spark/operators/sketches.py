@@ -378,52 +378,6 @@ def kmv_union_intersect(df_a: DataFrame, df_b: DataFrame,
                     F.col("theta").cast("long").alias("theta")))
 
 
-def kmv_union_intersect_oracle_sql(a_sql: str, b_sql: str,
-                                   key_expr: str, k: int) -> str:
-    """DuckDB twin of :func:`kmv_union_intersect` — list slicing for
-    the k smallest distinct hashes, HUGEINT for the wide division."""
-    m = KMV_M
-
-    def side(src_sql: str, tag: str) -> str:
-        return (
-            f"{tag}_h AS (SELECT DISTINCT CAST(('0x' || "
-            f"substr(md5(CAST({key_expr} AS VARCHAR)), 1, 15)) "
-            f"AS BIGINT) AS h FROM ({src_sql})), "
-            f"{tag}_s AS (SELECT list_sort(list(h)) AS mins FROM ("
-            f"SELECT h FROM {tag}_h ORDER BY h LIMIT {k})), "
-            f"{tag}_t AS (SELECT mins, CASE WHEN len(mins) < {k} "
-            f"THEN {m} ELSE mins[{k}] END AS theta FROM {tag}_s)")
-
-    return f"""
-        WITH {side(a_sql, 'a')}, {side(b_sql, 'b')},
-        pairx AS (
-            SELECT a.mins AS ka, b.mins AS kb,
-                   least(a.theta, b.theta) AS theta
-            FROM a_t a CROSS JOIN b_t b
-        ), cutx AS (
-            SELECT theta,
-                   list_filter(ka, x -> x < theta) AS ca,
-                   list_filter(kb, x -> x < theta) AS cb
-            FROM pairx
-        ), cnts AS (
-            SELECT theta, len(ca) AS na, len(cb) AS nb,
-                   len(list_distinct(list_concat(ca, cb))) AS nu,
-                   len(list_intersect(ca, cb)) AS ni
-            FROM cutx
-        )
-        SELECT CAST((CAST(na AS HUGEINT) * {m}) // theta AS BIGINT)
-                   AS est_a,
-               CAST((CAST(nb AS HUGEINT) * {m}) // theta AS BIGINT)
-                   AS est_b,
-               CAST((CAST(nu AS HUGEINT) * {m}) // theta AS BIGINT)
-                   AS est_union,
-               CAST((CAST(ni AS HUGEINT) * {m}) // theta AS BIGINT)
-                   AS est_intersect,
-               CAST(theta AS BIGINT) AS theta
-        FROM cnts
-    """
-
-
 def kmv_overlap_matrix(df: DataFrame, group_col: str, key_col: str,
                        k: int = 256) -> DataFrame:
     """Pairwise set-overlap matrix from per-group KMV sketches — the
@@ -529,32 +483,6 @@ def ams_f2_estimate(df: DataFrame, key_col: str,
                     F.lit(int(reps)).cast("int").alias("reps")))
 
 
-def ams_f2_oracle_sql(src_sql: str, key_expr: str,
-                      reps: int = 16) -> str:
-    """DuckDB twin of :func:`ams_f2_estimate` — recomputes every ±1
-    sign from the same md5 parity."""
-    sign = (f"CASE WHEN CAST(('0x' || substr(md5('ams:' || r || ':' || "
-            f"CAST({key_expr} AS VARCHAR)), 1, 15)) AS BIGINT) % 2 = 0 "
-            f"THEN 1 ELSE -1 END")
-    return f"""
-        WITH src AS ({src_sql}),
-        cells AS (
-            SELECT r, sum({sign}) AS z
-            FROM src CROSS JOIN range(0, {int(reps)}) t(r)
-            GROUP BY r
-        ), est AS (
-            SELECT CAST(sum(z * z) // count(*) AS BIGINT) AS f2_est
-            FROM cells
-        ), exact AS (
-            SELECT CAST(sum(f * f) AS BIGINT) AS f2_exact FROM (
-                SELECT count(*) AS f FROM src GROUP BY {key_expr}
-            )
-        )
-        SELECT f2_est, f2_exact, CAST({int(reps)} AS INT) AS reps
-        FROM est CROSS JOIN exact
-    """
-
-
 def cms_join_size(a: DataFrame, b: DataFrame, key_col: str,
                   d: int = 4, w: int = 512) -> DataFrame:
     """Join-cardinality estimation audit — the optimizer-statistics
@@ -602,47 +530,3 @@ def cms_join_size(a: DataFrame, b: DataFrame, key_col: str,
                         "((est_size - exact_size) "
                         "* CAST(1000000 AS BIGINT)) DIV exact_size"))
                     .cast("long").alias("over_e6")))
-
-
-def cms_join_size_oracle_sql(a_sql: str, b_sql: str, *, d: int = 4,
-                             w: int = 512) -> str:
-    """DuckDB twin of :func:`cms_join_size`.  ``a_sql``/``b_sql`` must
-    each yield one column ``k`` (VARCHAR)."""
-    rows = ", ".join(str(i) for i in range(d))
-
-    def cells(side: str) -> str:
-        return f"""
-            SELECT r.i AS row,
-                   CAST(('0x' || substr(md5(CAST(r.i AS VARCHAR)
-                        || ':' || k), 1, 15)) AS BIGINT) % {w} AS col,
-                   count(*) AS cnt
-            FROM {side}, (SELECT unnest([{rows}]) AS i) r
-            GROUP BY 1, 2"""
-
-    return f"""
-        WITH a AS ({a_sql}), b AS ({b_sql}),
-        sa AS ({cells('a')}), sb AS ({cells('b')}),
-        ip AS (
-            SELECT sa.row, sum(sa.cnt * sb.cnt) AS ip
-            FROM sa JOIN sb ON sa.row = sb.row AND sa.col = sb.col
-            GROUP BY 1
-        ), est AS (
-            SELECT min(coalesce(ip.ip, 0)) AS est_size
-            FROM (SELECT unnest([{rows}]) AS row) spine
-            LEFT JOIN ip ON ip.row = spine.row
-        ), exact AS (
-            SELECT coalesce(sum(ea.na * eb.nb), 0) AS exact_size
-            FROM (SELECT k, count(*) AS na FROM a GROUP BY 1) ea
-            JOIN (SELECT k, count(*) AS nb FROM b GROUP BY 1) eb
-                 ON ea.k = eb.k
-        )
-        SELECT CAST((SELECT count(*) FROM a) AS BIGINT) AS n_a,
-               CAST((SELECT count(*) FROM b) AS BIGINT) AS n_b,
-               CAST(exact_size AS BIGINT) AS exact_size,
-               CAST(est_size AS BIGINT) AS est_size,
-               CAST(CASE WHEN exact_size > 0 THEN
-                        (CAST(est_size - exact_size AS HUGEINT)
-                         * 1000000) // exact_size
-                    END AS BIGINT) AS over_e6
-        FROM exact, est
-    """

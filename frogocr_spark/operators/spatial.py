@@ -2,8 +2,7 @@
 (points within radius r) every geo/embedding-2D workload needs, built
 with the same blocking discipline as the LSH/SNM dedup family: a
 candidate-generation rewrite whose output provably equals the direct
-quadratic predicate, verified by the oracle keeping the quadratic
-form.
+quadratic predicate.
 
 All coordinates are INTEGERS (the caller pre-scales: fixed-point
 micro-degrees, pixel coords, quantized embeddings) so every distance
@@ -75,19 +74,3 @@ def grid_neighbor_pairs(df: DataFrame, id_col: str, x_col: str,
             .where(F.col("dist2") <= r * r)
             .select("id_a", "id_b", F.col("dist2").cast("long")
                     .alias("dist2")))
-
-
-def grid_neighbor_pairs_oracle_sql(pts_sql: str, radius: int) -> str:
-    """DuckDB twin of :func:`grid_neighbor_pairs` — deliberately the
-    DIRECT QUADRATIC distance self-join (no grid), so the hash match
-    proves the blocking rewrite loses and invents nothing."""
-    r = int(radius)
-    return f"""
-        WITH pts AS ({pts_sql})
-        SELECT a.id AS id_a, b.id AS id_b,
-               CAST((a.x - b.x) * (a.x - b.x)
-                    + (a.y - b.y) * (a.y - b.y) AS BIGINT) AS dist2
-        FROM pts a JOIN pts b ON a.id < b.id
-        WHERE (a.x - b.x) * (a.x - b.x)
-              + (a.y - b.y) * (a.y - b.y) <= {r * r}
-    """

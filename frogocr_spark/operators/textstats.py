@@ -1382,69 +1382,6 @@ def bm25_scores(docs: DataFrame, queries: dict[str, list[str]], *,
                     F.round("_score", 6).alias("score"), "rank"))
 
 
-def bm25_oracle_sql(queries: dict[str, list[str]], *,
-                    docs_table: str = "documents",
-                    text_col: str = "text", k1: float = 1.2,
-                    b: float = 0.75, top_k: int = 10) -> str:
-    """DuckDB twin of :func:`bm25_scores` — the IDENTICAL expression
-    tree (same literal doubles, same written-order term sums, same
-    rounded rank key).  Corpus stats (N, avgdl) come from an in-SQL
-    CTE: ``CAST(Σdl AS DOUBLE)/N`` is the same single correctly-rounded
-    IEEE division the Spark side performs in Python on the collected
-    exact integers, so the avgdl DOUBLE is bit-identical."""
-    terms = sorted({t for ts in queries.values() for t in ts})
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    parts = []
-    for qid, qterms in queries.items():
-        q_in = ", ".join(f"'{t}'" for t in qterms)
-        cells = " + ".join(
-            f"COALESCE(max(CASE WHEN tok = '{t}' THEN c END), 0.0)"
-            for t in qterms)
-        parts.append(f"""
-            SELECT '{qid}' AS query_id, _doc AS doc_id,
-                   {cells} AS _score
-            FROM contrib WHERE tok IN ({q_in}) GROUP BY _doc""")
-    union = " UNION ALL ".join(parts)
-    return rf"""
-        WITH toks AS (
-            SELECT doc_id AS _doc,
-                   unnest(list_filter(string_split_regex(
-                       lower(trim({text_col})), '\s+'),
-                       w -> w <> '')) AS tok
-            FROM {docs_table}
-        ), dl AS (
-            SELECT _doc, count(*) AS dl FROM toks GROUP BY 1
-        ), st AS (
-            SELECT CAST(count(*) AS DOUBLE) AS nd,
-                   CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl
-            FROM dl
-        ), tf AS (
-            SELECT _doc, tok, count(*) AS tf FROM toks
-            WHERE tok IN ({in_list}) GROUP BY 1, 2
-        ), dfx AS (
-            SELECT tok, count(DISTINCT _doc) AS df FROM tf GROUP BY 1
-        ), contrib AS (
-            SELECT t._doc, t.tok,
-                   ln(((st.nd - d.df + 0.5)
-                       / (d.df + 0.5)) + 1.0)
-                   * ((t.tf * {float(k1) + 1.0!r})
-                      / (t.tf + {float(k1)!r}
-                         * ({1.0 - b!r} + {float(b)!r}
-                            * (CAST(l.dl AS DOUBLE)
-                               / st.avgdl)))) AS c
-            FROM tf t JOIN dfx d USING (tok) JOIN dl l USING (_doc)
-            CROSS JOIN st
-        ), allq AS ({union})
-        SELECT query_id, doc_id, round(_score, 6) AS score,
-               CAST(rk AS INT) AS rank
-        FROM (
-            SELECT *, row_number() OVER (
-                       PARTITION BY query_id
-                       ORDER BY round(_score, 6) DESC, doc_id) AS rk
-            FROM allq)
-        WHERE rk <= {int(top_k)}"""
-
-
 def phrase_search(df: DataFrame, phrases: list[str],
                   id_col: str = "doc_id",
                   text_col: str = "text") -> DataFrame:
@@ -1497,47 +1434,6 @@ def phrase_search(df: DataFrame, phrases: list[str],
     for o in outs[1:]:
         res = res.unionByName(o)
     return res
-
-
-def phrase_search_oracle_sql(docs_sql: str, phrases: list[str]) -> str:
-    """DuckDB twin of :func:`phrase_search`: positional postings via a
-    list comprehension with explicit 1-based positions, one join chain
-    per phrase, UNION ALL across phrases."""
-    parts = []
-    for phrase in phrases:
-        toks = phrase.split()
-        sel = ["SELECT p0.doc_id AS doc_id, count(*) AS n_matches",
-               "FROM post p0"]
-        conds = [f"p0.token = '{toks[0]}'"]
-        for i, t in enumerate(toks[1:], start=1):
-            sel.append(f"JOIN post p{i} ON p{i}.doc_id = p0.doc_id "
-                       f"AND p{i}.pos = p0.pos + {i}")
-            conds.append(f"p{i}.token = '{t}'")
-        q = (" ".join(sel) + " WHERE " + " AND ".join(conds)
-             + " GROUP BY p0.doc_id")
-        parts.append(f"SELECT '{phrase}' AS phrase, doc_id, "
-                     f"CAST(n_matches AS BIGINT) AS n_matches "
-                     f"FROM ({q})")
-    body = " UNION ALL ".join(parts)
-    terms = sorted({t for p in phrases for t in p.split()})
-    in_list = ", ".join(f"'{t}'" for t in terms)
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               t -> t <> '') AS ws
-            FROM docs
-        ), post AS (
-            SELECT doc_id, u['pos'] AS pos, u['tok'] AS token FROM (
-                SELECT doc_id,
-                       unnest([struct_pack(pos := j - 1, tok := ws[j])
-                               for j in range(1, len(ws) + 1)]) AS u
-                FROM words
-            ) WHERE u['tok'] IN ({in_list})
-        )
-        {body}
-    """
 
 
 def winnowing_fingerprints(df: DataFrame, ngram: int = 4,
@@ -1596,50 +1492,6 @@ def winnowing_fingerprints(df: DataFrame, ngram: int = 4,
         F.col("_id").alias(id_col),
         F.expr(f"sel DIV {1 << 15}").alias("fp_hash"),
         (F.col("sel") % (1 << 15)).cast("int").alias("pos"))
-
-
-def winnowing_oracle_sql(docs_sql: str, ngram: int = 4,
-                         window: int = 5) -> str:
-    """DuckDB twin of :func:`winnowing_fingerprints` — same 48-bit md5
-    gram hash, same (hash, pos) packing, same windowed BIGINT min."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               t -> t <> '') AS ws
-            FROM docs
-        ), sized AS (
-            SELECT doc_id, ws, len(ws) - {ngram} + 1 AS n_grams
-            FROM words WHERE len(ws) - {ngram} + 1 <= 32768
-        ), grams AS (
-            SELECT doc_id, n_grams,
-                   g['pos'] AS pos, g['comb'] AS comb
-            FROM (
-                SELECT doc_id, n_grams,
-                       unnest(CASE WHEN n_grams >= 1 THEN
-                           [struct_pack(
-                                pos := j - 1,
-                                comb := CAST(('0x' || substr(
-                                    md5(array_to_string(
-                                        ws[j:j+{ngram}-1], ' ')),
-                                    1, 12)) AS BIGINT) * 32768 + (j - 1))
-                            for j in range(1, n_grams + 1)]
-                       ELSE [] END) AS g
-                FROM sized
-            )
-        ), sel AS (
-            SELECT DISTINCT doc_id,
-                   min(comb) OVER (PARTITION BY doc_id ORDER BY pos
-                       ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING)
-                       AS s
-            FROM grams
-            QUALIFY pos <= n_grams - {window}
-        )
-        SELECT doc_id, s // 32768 AS fp_hash,
-               CAST(s % 32768 AS INT) AS pos
-        FROM sel
-    """
 
 
 RAKE_STOPWORDS = (
@@ -1712,64 +1564,6 @@ def rake_keywords(df: DataFrame, k: int = 15, max_len: int = 4,
                     F.col("score_e6").cast("long").alias("score_e6")))
 
 
-def rake_keywords_oracle_sql(docs_sql: str, k: int, max_len: int,
-                             stopwords: tuple = RAKE_STOPWORDS) -> str:
-    """DuckDB twin of :func:`rake_keywords` — same islands, same
-    integer score."""
-    sw = ", ".join(f"'{s}'" for s in stopwords)
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        toks AS (
-            SELECT doc_id, p['pos'] AS pos, p['token'] AS token
-            FROM (
-                SELECT doc_id,
-                       unnest(CASE WHEN len(ws) >= 1 THEN
-                           [struct_pack(pos := j - 1, token := ws[j])
-                            for j in range(1, len(ws) + 1)]
-                       ELSE [] END) AS p
-                FROM (
-                    SELECT doc_id,
-                           list_filter(string_split_regex(
-                               lower(trim(text)), '\s+'),
-                               t -> t <> '') AS ws
-                    FROM docs
-                )
-            )
-        ), ns AS (
-            SELECT doc_id, pos, token,
-                   pos - row_number() OVER (PARTITION BY doc_id
-                                            ORDER BY pos) AS island
-            FROM toks WHERE token NOT IN ({sw})
-        ), occ AS (
-            SELECT string_agg(token, ' ' ORDER BY pos) AS phrase,
-                   count(*) AS plen
-            FROM ns GROUP BY doc_id, island
-            HAVING count(*) <= {int(max_len)}
-        ), wstats AS (
-            SELECT word, sum(plen) AS deg, count(*) AS freq FROM (
-                SELECT unnest(string_split(phrase, ' ')) AS word, plen
-                FROM occ
-            ) GROUP BY word
-        ), uniq AS (
-            SELECT phrase, count(*) AS n_occ, max(plen) AS n_words
-            FROM occ GROUP BY phrase
-        ), scored AS (
-            SELECT phrase, n_occ, n_words,
-                   sum((deg * 1000000) // freq) AS score_e6
-            FROM (
-                SELECT phrase, n_occ, n_words,
-                       unnest(string_split(phrase, ' ')) AS word
-                FROM uniq
-            ) JOIN wstats USING (word)
-            GROUP BY phrase, n_occ, n_words
-        )
-        SELECT phrase, CAST(n_occ AS BIGINT) AS n_occ,
-               CAST(n_words AS BIGINT) AS n_words,
-               CAST(score_e6 AS BIGINT) AS score_e6
-        FROM scored ORDER BY score_e6 DESC, phrase ASC LIMIT {int(k)}
-    """
-
-
 def charclass_stats(df: DataFrame, id_col: str = "doc_id",
                     text_col: str = "text") -> DataFrame:
     """Per-document character-class profile: printable-ASCII, digit,
@@ -1800,26 +1594,6 @@ def charclass_stats(df: DataFrame, id_col: str = "doc_id",
         "ascii_e6",
         F.when(F.col("n_chars") > 0,
                F.expr("(n_ascii * 1000000) DIV n_chars")))
-
-
-def charclass_stats_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of :func:`charclass_stats`."""
-    def cnt(cls: str) -> str:
-        return (f"length(text) - length(regexp_replace(text, "
-                f"'{cls}', '', 'g'))")
-    return f"""
-        WITH docs AS ({docs_sql})
-        SELECT doc_id,
-               CAST(length(text) AS BIGINT) AS n_chars,
-               CAST({cnt('[ -~]')} AS BIGINT) AS n_ascii,
-               CAST({cnt('[0-9]')} AS BIGINT) AS n_digit,
-               CAST({cnt('[A-Z]')} AS BIGINT) AS n_upper,
-               CAST({cnt('[ ]')} AS BIGINT) AS n_space,
-               CASE WHEN length(text) > 0 THEN
-                   CAST((({cnt('[ -~]')}) * 1000000) // length(text)
-                        AS BIGINT) END AS ascii_e6
-        FROM docs
-    """
 
 
 def sentence_stats(df: DataFrame, id_col: str = "doc_id",
@@ -1859,35 +1633,6 @@ def sentence_stats(df: DataFrame, id_col: str = "doc_id",
                         F.when(F.col("n_sentences") > 0,
                                F.expr("(n_tokens * 1000000) "
                                       "DIV n_sentences"))))
-
-
-def sentence_stats_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of :func:`sentence_stats`."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        sent AS (
-            SELECT doc_id,
-                   len(list_filter(string_split_regex(trim(s), '\s+'),
-                                   t -> t <> '')) AS tk
-            FROM (
-                SELECT doc_id,
-                       unnest(string_split_regex(text, '[.!?]+')) AS s
-                FROM docs
-            )
-        ), agg AS (
-            SELECT doc_id, count(*) AS n_sentences, sum(tk) AS n_tokens,
-                   max(tk) AS max_tokens
-            FROM sent WHERE tk > 0 GROUP BY doc_id
-        )
-        SELECT d.doc_id,
-               CAST(coalesce(n_sentences, 0) AS BIGINT) AS n_sentences,
-               CAST(coalesce(n_tokens, 0) AS BIGINT) AS n_tokens,
-               CAST(coalesce(max_tokens, 0) AS BIGINT) AS max_tokens,
-               CASE WHEN coalesce(n_sentences, 0) > 0 THEN
-                   CAST((n_tokens * 1000000) // n_sentences AS BIGINT)
-               END AS avg_tokens_e6
-        FROM docs d LEFT JOIN agg a ON d.doc_id = a.doc_id
-    """
 
 
 def flesch_stats(df: DataFrame, id_col: str = "doc_id",
@@ -1932,38 +1677,6 @@ def flesch_stats(df: DataFrame, id_col: str = "doc_id",
         F.when((F.col("n_words") > 0) & (F.col("n_sentences") > 0),
                F.expr("206835 - (1015 * n_words) DIV n_sentences "
                       "- (84600 * n_syllables) DIV n_words")))
-
-
-def flesch_stats_oracle_sql(docs_sql: str) -> str:
-    """DuckDB twin of :func:`flesch_stats` (same vowel-group /
-    sentence-split / truncating-DIV formulas)."""
-    return rf"""
-        WITH docs AS ({docs_sql}),
-        b AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(trim(text), '\s+'),
-                               x -> x <> '') AS ws,
-                   len(list_filter(string_split_regex(text, '[.!?]+'),
-                       s -> len(list_filter(
-                           string_split_regex(trim(s), '\s+'),
-                           t -> t <> '')) > 0)) AS n_sentences
-            FROM docs
-        ), c AS (
-            SELECT doc_id, len(ws) AS n_words,
-                   CAST(n_sentences AS BIGINT) AS n_sentences,
-                   coalesce(list_sum(list_transform(ws, w ->
-                       len(regexp_extract_all(w, '[aeiouyAEIOUY]+')))),
-                       0) AS n_syllables
-            FROM b
-        )
-        SELECT doc_id, CAST(n_words AS BIGINT) AS n_words, n_sentences,
-               CAST(n_syllables AS BIGINT) AS n_syllables,
-               CASE WHEN n_words > 0 AND n_sentences > 0 THEN
-                   CAST(206835 - (1015 * n_words) // n_sentences
-                        - (84600 * n_syllables) // n_words AS BIGINT)
-               END AS flesch_e3
-        FROM c
-    """
 
 
 # Cavnar–Trenkle-style character-trigram language profiles (public
@@ -2039,50 +1752,6 @@ def langid_ngram(df: DataFrame, id_col: str = "doc_id",
                 F.when(is_cjk, F.col("_cjk"))
                 .when(F.col("b").isNotNull(), -F.col("b.ns"))
                 .otherwise(F.lit(0)).cast("long").alias("score")))
-
-
-def langid_ngram_oracle_sql(docs_sql: str, cjk_pct: int = 10) -> str:
-    """DuckDB twin of :func:`langid_ngram` — same padded trigrams, same
-    profile VALUES table, same (score DESC, lang ASC) argmax and CJK
-    literal-range script rule."""
-    vals = ", ".join(
-        f"('{g}', '{lang}')" for lang in sorted(LANG_TRIGRAM_PROFILES)
-        for g in LANG_TRIGRAM_PROFILES[lang])
-    return f"""
-        WITH docs AS ({docs_sql}),
-        base AS (
-            SELECT doc_id, ' ' || lower(text) || ' ' AS t,
-                   length(regexp_replace(text, '[^一-鿿]', '',
-                                         'g')) AS cjk,
-                   length(text) AS n
-            FROM docs
-        ), prof(gram, lang) AS (VALUES {vals}),
-        tri AS (
-            SELECT doc_id, substring(t, i, 3) AS gram
-            FROM base,
-                 unnest(range(1, greatest(length(t) - 1, 1))) AS u(i)
-        ), sc AS (
-            SELECT t.doc_id, p.lang, count(*) AS score
-            FROM tri t JOIN prof p USING (gram)
-            GROUP BY 1, 2
-        ), best AS (
-            SELECT doc_id, lang, score,
-                   row_number() OVER (PARTITION BY doc_id
-                       ORDER BY score DESC, lang) AS rk
-            FROM sc
-        )
-        SELECT b.doc_id,
-               CASE WHEN b.n > 0 AND b.cjk * 100 >= {cjk_pct} * b.n
-                    THEN 'zh'
-                    WHEN w.lang IS NOT NULL THEN w.lang
-                    ELSE 'und' END AS pred_lang,
-               CAST(CASE WHEN b.n > 0 AND b.cjk * 100 >= {cjk_pct} * b.n
-                         THEN b.cjk
-                         WHEN w.lang IS NOT NULL THEN w.score
-                         ELSE 0 END AS BIGINT) AS score
-        FROM base b
-        LEFT JOIN (SELECT * FROM best WHERE rk = 1) w USING (doc_id)
-    """
 
 
 def novelty_rate(df: DataFrame, batch_col: str, id_col: str = "doc_id",
@@ -2491,69 +2160,3 @@ def ir_eval(docs: DataFrame, queries: dict[str, list[str]], *,
                        "DIV idcg_e6").cast("long")))
             .select("query_id", "n_rel", "hits", "rr_e6",
                     "dcg_e6", "idcg_e6", "ndcg_e6"))
-
-
-def ir_eval_oracle_sql(queries: dict[str, list[str]], *,
-                       docs_table: str = "documents",
-                       text_col: str = "text",
-                       top_k: int = 10) -> str:
-    """DuckDB twin of :func:`ir_eval`: the run list is the verbatim
-    :func:`bm25_oracle_sql` text as a CTE; qrels are per-query
-    conjunctive list_contains filters; the same hardcoded e6 discount
-    tables (list literals indexed by rank) and the same truncating
-    divisions."""
-    runs = bm25_oracle_sql(queries, docs_table=docs_table,
-                           text_col=text_col, top_k=top_k)
-    qparts = []
-    for qid, ts in queries.items():
-        conj = " AND ".join(f"list_contains(ws, '{t}')"
-                            for t in sorted(set(ts)))
-        qparts.append(f"SELECT '{qid}' AS query_id, doc_id "
-                      f"FROM words WHERE {conj}")
-    qr = " UNION ALL ".join(qparts)
-    disc = "[{}]".format(", ".join(str(x)
-                                   for x in NDCG_DISC_E6[:top_k]))
-    cum = "[{}]".format(", ".join(str(x)
-                                  for x in NDCG_IDCG_CUM_E6[:top_k]))
-    return rf"""
-        WITH runs AS ({runs}),
-        words AS (
-            SELECT doc_id,
-                   list_filter(string_split_regex(
-                       lower(trim({text_col})), '\s+'),
-                       w -> w <> '') AS ws
-            FROM {docs_table}
-        ), qrels AS ({qr}),
-        nr AS (
-            SELECT query_id, CAST(count(*) AS BIGINT) AS n_rel
-            FROM qrels GROUP BY 1
-        ), per AS (
-            SELECT r.query_id,
-                   CAST(coalesce(sum(CASE WHEN q.doc_id IS NOT NULL
-                            THEN {disc}[r.rank] ELSE 0 END), 0)
-                       AS BIGINT) AS dcg_e6,
-                   CAST(coalesce(sum(CASE WHEN q.doc_id IS NOT NULL
-                            THEN 1 ELSE 0 END), 0) AS BIGINT) AS hits,
-                   min(CASE WHEN q.doc_id IS NOT NULL
-                            THEN r.rank END) AS fr
-            FROM runs r
-            LEFT JOIN qrels q ON q.query_id = r.query_id
-                             AND q.doc_id = r.doc_id
-            GROUP BY 1
-        )
-        SELECT p.query_id, coalesce(nr.n_rel, 0) AS n_rel, p.hits,
-               CASE WHEN p.fr IS NOT NULL
-                    THEN CAST(1000000 // p.fr AS BIGINT)
-                    ELSE 0 END AS rr_e6,
-               p.dcg_e6,
-               CASE WHEN coalesce(nr.n_rel, 0) > 0
-                    THEN CAST({cum}[CAST(least(nr.n_rel, {top_k})
-                                         AS INT)] AS BIGINT)
-                    ELSE 0 END AS idcg_e6,
-               CASE WHEN coalesce(nr.n_rel, 0) > 0 THEN
-                   CAST((CAST(p.dcg_e6 AS HUGEINT) * 1000000)
-                        // {cum}[CAST(least(nr.n_rel, {top_k})
-                                      AS INT)] AS BIGINT)
-               END AS ndcg_e6
-        FROM per p LEFT JOIN nr USING (query_id)
-    """
