@@ -83,7 +83,7 @@ def extract_turn(text: str | None,
                  settings_csv: str | None = None) -> dict[str, Any]:
     """Reference extraction of one turn payload (see module docstring).
 
-    ``settings_csv`` = per-turn typed settings (F9/F7/X1 —
+    ``settings_csv`` = per-turn typed settings (F9/F7 —
     core.settings.Settings): MinWordConfidence gates words
     post-extraction, SecondPass=off disables the two-pass merge."""
     raw = text if isinstance(text, str) else ""
@@ -116,20 +116,19 @@ def extract_turn(text: str | None,
     extracted, spans = assemble.assemble(blocks)
     if cls != "two_pass":
         confidence = assemble.mean_confidence(blocks)
-    # per-word alternative readings (Variant depth, Document.hpp:22-30):
-    # aligned 1:1 with spans; only the two-pass merge produces them
-    word_variants = [list(s.variants) for b in blocks for s in b.segments]
     return {
         "payload_class": cls,
         "extracted_text": extracted,
         "spans": [{"start": a, "end": b} for a, b in spans],
         "n_blocks": len(blocks),
         "n_spans": len(spans),
-        "n_variants": sum(len(v) for v in word_variants),
+        # per-word alternative readings (Variant depth,
+        # Document.hpp:22-30); only the two-pass merge produces them
+        "n_variants": sum(len(s.variants) for b in blocks
+                          for s in b.segments),
         "confidence": confidence,
         "parse_failed": parse_failed,
         "empty_after_strip": (not extracted) and bool(raw.strip()),
-        "word_variants": word_variants,   # sink-level detail, not a DF column
     }
 
 

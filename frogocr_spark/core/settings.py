@@ -1,11 +1,10 @@
-"""Per-turn typed settings with defaults (F9/X1/X2 parity).
+"""Per-turn typed settings with defaults (F9 parity).
 
 FrogOCR carries a dynamic ``settings_csv`` per task, parsed into a typed
 struct with per-key fallbacks — reference ``Source/Settings.hpp:70-78``
-(parse), ``:131-209`` (typed ``set()`` with defaults), ``:80-129``
-(re-serialize).  The transcript engine supports the same mechanism: an
-optional ``settings`` CSV column on the input table tunes the extractor
-per row.
+(parse) and ``:131-209`` (typed ``set()`` with defaults).  The
+transcript engine supports the same mechanism: an optional ``settings``
+CSV column on the input table tunes the extractor per row.
 
 Supported keys (defaults = reference defaults where they exist):
 
@@ -15,7 +14,8 @@ Supported keys (defaults = reference defaults where they exist):
 - ``SecondPass`` (``on``/``off``, default on) — enable the two-pass
   low-confidence merge (the optional second detection pass,
   ``Source/TaskProcessor.cpp:249-262``).
-- ``Detector`` (informational override recorded in provenance — X1).
+
+Any other key is ignored.
 """
 
 from __future__ import annotations
@@ -27,7 +27,6 @@ from dataclasses import dataclass
 class Settings:
     min_word_confidence: float = 0.0
     second_pass: bool = True
-    detector: str = ""
 
     @classmethod
     def parse_csv(cls, csv: str | None) -> "Settings":
@@ -47,16 +46,4 @@ class Settings:
         return cls(
             min_word_confidence=mwc,
             second_pass=kv.get("SecondPass", "on").lower() != "off",
-            detector=kv.get("Detector", ""),
         )
-
-    def csv(self) -> str:
-        """Re-serialize (Settings.hpp:80-129 analog, stable key order)."""
-        parts = []
-        if self.min_word_confidence:
-            parts.append(f"MinWordConfidence={self.min_word_confidence:g}")
-        if not self.second_pass:
-            parts.append("SecondPass=off")
-        if self.detector:
-            parts.append(f"Detector={self.detector}")
-        return ",".join(parts)

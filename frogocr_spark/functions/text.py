@@ -1,12 +1,13 @@
 """Scalar string functions re-expressed from the reference's string core
-(SURVEY §2.7).  Each is a plain Column expression — codegen'd, no UDFs —
-and each SQL-expressible one has a DuckDB oracle in __spark_entry__.
+(SURVEY §2.7).  Each is a plain Column expression — codegen'd, no UDFs.
+``xml_attribute_escape`` and ``merge_tokens`` have DuckDB oracles in
+``__spark_entry__`` (rows ``c7_xml_escape``, ``c5_token_assembly``); the
+settings helpers are checked in pytest.
 
 Reference citations:
 - xml_attribute_escape — ``Source/Core/String.hpp:82-88`` (& FIRST, then
   quote/lt/gt — order matters, tested)
 - settings_csv_to_map  — ``Source/Settings.hpp:70-78`` (k=v CSV map)
-- path_with_extension  — ``Source/Core/String.hpp:23-27``
 - merge_tokens         — ``merge_strings`` ``Source/Core/String.cpp:110-132``
 - levenshtein          — ``Source/Core/String.cpp:134-179`` → built-in
 """
@@ -35,11 +36,6 @@ def settings_csv_to_map(col: Column) -> Column:
 def setting_with_default(settings_map: Column, key: str, default: str) -> Column:
     """Typed setting projection with fallback (Settings.hpp:131-209 F9)."""
     return F.coalesce(settings_map.getItem(key), F.lit(default))
-
-
-def path_with_extension(col: Column, new_ext: str) -> Column:
-    """Replace the final extension: ``a/b.jpg`` → ``a/b.xml``."""
-    return F.regexp_replace(col, r"\.[^./]*$", f".{new_ext}")
 
 
 def merge_tokens(col: Column, glue: str = " ") -> Column:

@@ -7,7 +7,7 @@ Cluster usage (multi-executor):
         frogocr_spark/job.py \\
         --input  <transcripts parquet/iceberg path> \\
         --output <output table root> \\
-        --run-id r1 [--partitions 2048] [--salt-buckets 16] [--no-resume]
+        --run-id r1 [--partitions 2048] [--salt-buckets N] [--no-resume]
 
 Local smoke (also what bench.py measures):
 
@@ -26,6 +26,7 @@ import json
 
 # absolute imports: spark-submit executes this file as a top-level script
 # (no parent package); the package itself ships via --py-files
+from frogocr_spark.operators.skew import DEFAULT_SALT_BUCKETS
 from frogocr_spark.plans.pipeline import PipelineConfig, run_extraction
 from frogocr_spark.session import get_spark
 from frogocr_spark.sources import transcripts
@@ -45,13 +46,13 @@ def main(argv: list[str] | None = None) -> None:
                         "rerun of a committed id raises if the input has "
                         "new turns, so give new input a new id")
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--salt-buckets", type=int, default=16)
+    p.add_argument("--salt-buckets", type=int, default=DEFAULT_SALT_BUCKETS)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--bucketed-table", default=None,
                    help="write output to a conv_id-bucketed session table "
                         "of this name (storage-partitioned resume "
                         "anti-join — the 10^12-row layout)")
-    p.add_argument("--buckets", type=int, default=32)
+    p.add_argument("--buckets", type=int, default=PipelineConfig.buckets)
     p.add_argument("--cores", type=int, default=None,
                    help="local[] cores; ignored under a real cluster master")
     args = p.parse_args(argv)

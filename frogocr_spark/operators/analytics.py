@@ -10,16 +10,15 @@ only floating-point steps are IEEE-correctly-rounded single operations
 Scale shapes:
 
 - funnel: ONE keyed shuffle (collect per-user events) + an array fold —
-  not K sequential self-joins.  The oracle deliberately uses the
-  K-join formulation, so the hash match also proves the two
-  formulations equivalent.
+  not K sequential self-joins.
 - cohort retention: first-event agg + one equi-join back on the user
   key + a distinct-rollup — all map-side combinable.
 - histogram: pure keyed aggregation; bucket index is integer floor
   division (no float bins to disagree on).
 - moment stats: one aggregation carrying five DECIMAL(38,0) sums —
-  order-independent exact integers, so variance/correlation hash-match
-  any engine (a float ``SUM`` would differ per partitioning).
+  order-independent exact integers, so variance/correlation are the
+  same on any engine and partitioning (a float ``SUM`` would differ per
+  partitioning).
 
 Reference parity: the reference's per-run counter rollups
 (Source/Core/Database.cpp) are the A10 analog; these generalize that
@@ -157,12 +156,12 @@ def moment_stats_exact(df: DataFrame, x_col: "F.Column", y_col: "F.Column",
     sx, sy = F.col("sx").cast("double"), F.col("sy").cast("double")
     sxx, syy = F.col("sxx").cast("double"), F.col("syy").cast("double")
     sxy = F.col("sxy").cast("double")
-    # identical parenthesization in the SQL oracle — see oracle_sql()
+    # the parenthesization fixes each IEEE rounding step: keep it
     var_x = (sxx / nd) - (sx / nd) * (sx / nd)
     var_y = (syy / nd) - (sy / nd) * (sy / nd)
     cov = (sxy / nd) - (sx / nd) * (sy / nd)
     # correlation is undefined for a constant series -> NULL (and ANSI
-    # mode would raise on the 0-divide); oracle mirrors the CASE
+    # mode would raise on the 0-divide)
     corr = F.when((var_x > 0) & (var_y > 0),
                   cov / (F.sqrt(var_x) * F.sqrt(var_y)))
     return agg.select(
@@ -448,7 +447,7 @@ def ols_fit(df: DataFrame, x_col: "F.Column", y_col: "F.Column",
     num_d, denx_d, deny_d = (num.cast("double"), den_x.cast("double"),
                              den_y.cast("double"))
     slope = F.when(den_x > 0, num_d / denx_d)
-    # identical parenthesization in the SQL oracle — see oracle_sql()
+    # the parenthesization fixes each IEEE rounding step: keep it
     intercept = (F.col("sy").cast("double") / nd
                  - slope * (F.col("sx").cast("double") / nd))
     r2 = F.when((den_x > 0) & (den_y > 0),
@@ -501,10 +500,9 @@ def skyline2d(df: DataFrame, min_col: str, max_col: str,
     p.max_col`` with at least one strict.  Both columns must be exact
     integers (longs) so the cross-engine comparison is bit-exact.
 
-    The textbook definition is a quadratic NOT EXISTS self-join (the
-    DuckDB oracle keeps exactly that form); the distributed plan is the
-    sort-scan skyline, linearized and shuffle-bounded by the number of
-    DISTINCT ``min_col`` values:
+    The textbook definition is a quadratic NOT EXISTS self-join; the
+    distributed plan is the sort-scan skyline, linearized and
+    shuffle-bounded by the number of DISTINCT ``min_col`` values:
 
     1. per-``min_col`` group max of ``max_col`` — one map-side-combined
        keyed aggregation (a point below its own group's max is dominated
@@ -557,8 +555,8 @@ def max_concurrency(df: DataFrame, key_col: str, ts_col: str = "ts",
 
     The max of the running sum equals max over start points of
     ``count(intervals containing that start)`` — the quadratic
-    definition the DuckDB oracle computes independently (max
-    concurrency is always attained at some interval start).
+    definition (max concurrency is always attained at some interval
+    start).
 
     EAGER at plan-construction (global_cumsum).  Output: ``key_col,
     max_concurrent (long)``."""
@@ -2152,10 +2150,9 @@ def ivm_group_counts(base: DataFrame, delta: DataFrame,
     ``(g, n, s)`` absorbs a batch as ``n += Σ sign, s += Σ sign·v``
     where sign = +1 for 'I' (insert) and −1 for 'D' (delete; an update
     arrives as D+I) — groups whose maintained count reaches zero leave
-    the view.  Returns the MAINTAINED view; the contract query joins
-    it against a full recompute of base∖deletes∪inserts so any
-    maintained ≠ recomputed row is an IVM bug (or a non-distributive
-    aggregate smuggled in).
+    the view.  Returns the MAINTAINED view; joined against a full
+    recompute of base∖deletes∪inserts, any maintained ≠ recomputed row
+    is an IVM bug (or a non-distributive aggregate smuggled in).
 
     Scale shape: the delta side is ONE small keyed agg full-outer-
     joined onto the view.  Here the view is materialized once from

@@ -25,7 +25,7 @@ Spark jobs eagerly (same contract as ``ranking.global_rank``).  The
 vocabulary is localCheckpoint'ed per iteration to truncate lineage —
 without it every iteration would replay the whole chain.
 
-Determinism contract (what the DuckDB oracle recomputes bit-for-bit):
+Determinism contract (what makes the merges engine-exact):
 words are restricted to ``^[A-Za-z]+$`` (sidesteps UTF-16-code-unit vs
 codepoint indexing differences between engines), counts are exact
 int64, ties break on (a ASC, b ASC).

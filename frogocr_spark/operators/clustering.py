@@ -1,8 +1,8 @@
 """Integer-exact distributed k-means (Lloyd's algorithm) — the
 clustering primitive of the embedding-curation pipeline (IVF coarse
 quantizers, SemDeDup cluster structure, dataset cartography), expressed
-so that every iteration is ENGINE-EXACT and an ANSI-SQL oracle can
-re-run the identical chain bit-for-bit:
+so that every iteration is ENGINE-EXACT — an ANSI-SQL engine re-runs
+the identical chain bit-for-bit:
 
 - components quantize to integer ten-thousandths (``round(v·10⁴)`` —
   one float→double cast and one correctly-rounded multiply both engines
@@ -98,7 +98,7 @@ def _lloyd(q: DataFrame, k: int, iters: int) -> list[list[int]]:
         centroids = [
             [by_j[j][i][0] // by_j[j][i][1]          # Python // floors,
              for i in range(len(centroids[j]))]      # matching the
-            if j in by_j else centroids[j]           # oracle's floor()
+            if j in by_j else centroids[j]           # SQL floor()
             for j in range(k)]
     return centroids
 

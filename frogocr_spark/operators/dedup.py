@@ -685,8 +685,8 @@ def dup_clusters(pairs: DataFrame, id_a: str = "id_a",
 
 
 def _union_find_local(edges: list[tuple[int, int]]) -> dict[int, int]:
-    """Driver-side union-find with path halving + min-root (the exact
-    oracle the distributed variants are tested against)."""
+    """Driver-side union-find with path halving + min-root: the local
+    finish of :func:`dup_clusters_star` once the edge set is small."""
     parent: dict[int, int] = {}
 
     def find(x: int) -> int:

@@ -26,11 +26,10 @@ damp 85/100 that allows ~10^5 nodes; pass a smaller ``scale`` for
 bigger graphs (raises if the bound is violated when ``n_nodes`` is
 supplied).
 
-Semantics notes (documented variants, mirrored exactly by the SQL
-oracle): mass lost to ``DIV`` truncation and to dangling nodes (no
-out-edges) is dropped, not redistributed — per-iteration mass is not
-conserved, as in the common "toy" PR formulation; nodes with no
-in-edges settle at ``base``.
+Semantics notes (documented variants): mass lost to ``DIV`` truncation
+and to dangling nodes (no out-edges) is dropped, not redistributed —
+per-iteration mass is not conserved, as in the common "toy" PR
+formulation; nodes with no in-edges settle at ``base``.
 
 Scale shape: per iteration ONE equi-join (edges ⋈ scores, keyed on
 src) and ONE keyed aggregation (keyed on dst, map-side combined — a
@@ -174,9 +173,8 @@ def kcore(edges: DataFrame, k: int, rounds: int | None = None,
       peeling is monotone (each round's survivor set shrinks or is
       stable), so extra rounds past the fixpoint are no-ops and an
       R-round run equals the true k-core whenever convergence happens
-      within R.  This is the contract-query mode: a DuckDB oracle that
-      unrolls the identical R rounds as a CTE chain gives a hash match
-      that proves the distributed peel equivalent.
+      within R.  A fixed depth is also what SQL can express: the same
+      R rounds unrolled as a CTE chain compute the identical k-core.
 
     Scale shape: per round ONE degree aggregation (map-side combined,
     node-sized output) + TWO left-semi equi-joins restricting edges to
@@ -230,12 +228,11 @@ def bfs_levels(edges: DataFrame, seeds: DataFrame, rounds: int,
     hop distance — the influence-propagation / blast-radius primitive
     (abuse spread, contamination reach, social distance).
 
-    Fixed plan depth: exactly ``rounds`` expansion rounds (matching an
-    oracle's unrolled CTE chain); BFS
-    levels are monotone under expansion, so rounds past the eccentricity
-    are no-ops, and the R-round result equals true min-distance for
-    every node within R hops (nodes further out are absent, by
-    contract).
+    Fixed plan depth: exactly ``rounds`` expansion rounds (what an
+    unrolled SQL CTE chain expresses too); BFS levels are monotone
+    under expansion, so rounds past the eccentricity are no-ops, and
+    the R-round result equals true min-distance for every node within
+    R hops (nodes further out are absent, by contract).
 
     Scale shape: per round ONE equi-join (frontier ⋈ edges, keyed on
     the node) + one min-agg merge (map-side combined) — the classic
@@ -323,7 +320,7 @@ def degree_assortativity(edges: DataFrame, src: str = "src",
     moment machinery: per edge BOTH orientations (deg_u, deg_v) and
     (deg_v, deg_u) feed :func:`~frogocr_spark.operators.analytics.
     moment_stats_exact` — all five sufficient sums are DECIMAL(38,0)
-    exact, so the correlation hash-matches any engine regardless of
+    exact, so the correlation is the same on any engine and
     partitioning.  Symmetrization makes mean_x == mean_y by
     construction (a free internal consistency check).
 
@@ -360,11 +357,10 @@ def label_propagation(edges: DataFrame, rounds: int,
     the usual random-order LPA, so two engines (and two cluster
     topologies) compute the identical communities.
 
-    Fixed plan depth: exactly ``rounds`` sync rounds, matching an
-    oracle's unrolled CTE chain — the contract-query mode, same design
-    as :func:`kcore` / :func:`bfs_levels`.  LPA is not monotone, so the
-    R-round result is defined AS the R-round result (both sides run the
-    identical chain).
+    Fixed plan depth: exactly ``rounds`` sync rounds, the same design
+    as :func:`kcore` / :func:`bfs_levels` (an unrolled SQL CTE chain
+    runs the identical rounds).  LPA is not monotone, so the R-round
+    result is defined AS the R-round result.
 
     Scale shape: per round ONE equi-join (labels ⋈ edges, keyed on the
     node — the Pregel gather) + ONE (node, label)-keyed count
@@ -412,8 +408,9 @@ def sssp_int(edges: DataFrame, seeds: DataFrame, rounds: int,
     engine-exact (float weight sums would tie-break differently in the
     last ulp).  Fixed plan depth: exactly ``rounds`` relaxation rounds
     — after R rounds every node whose true shortest path uses ≤ R
-    edges carries its final distance (Bellman-Ford invariant), so an
-    oracle that unrolls the identical chain matches it.
+    edges carries its final distance (Bellman-Ford invariant), so any
+    engine that unrolls the identical chain computes the same
+    distances.
 
     Scale shape: per round ONE equi-join (distances ⋈ edges, keyed on
     the node) + ONE min-merge (map-side combined); distance relation
@@ -465,7 +462,7 @@ def jaccard_link_prediction(edges: DataFrame, k: int = 50,
     wedge must be counted, not each triangle once).  On power-law
     graphs ``max_center_degree`` caps the hub fanout (wedges through
     mega-hubs carry near-zero Jaccard anyway — standard hub
-    suppression; the oracle must apply the same cap).  One
+    suppression).  One
     neighbor-list agg -> one pair count (map-side combined) -> degree
     decoration joins -> LeftAnti vs the edge set -> TakeOrdered k.
     Output: ``(a, b, common, deg_a, deg_b, jaccard_e6)``."""

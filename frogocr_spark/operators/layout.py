@@ -59,7 +59,8 @@ def zvalue(x: "F.Column", y: "F.Column", bits: int = 16) -> "F.Column":
 
 def zvalue_sql(x_expr: str, y_expr: str, bits: int = 16) -> str:
     """The identical interleave as ANSI SQL (DuckDB-runnable) — emitted
-    programmatically so oracle and operator can never drift."""
+    programmatically so the SQL text and the operator can never
+    drift."""
     terms = []
     for i in range(bits):
         terms.append(f"(((CAST({x_expr} AS BIGINT) >> {i}) & 1) "
@@ -169,8 +170,8 @@ def hilbert_sql_query(src_sql: str, id_cols: list[str], x_expr: str,
                       out_col: str = "hval") -> str:
     """The identical Hilbert walk as a chained-CTE ANSI SQL query
     (DuckDB-runnable) — one CTE per level naming the rotated frame, so
-    oracle and operator share the same per-level formulas and the
-    expression stays linear."""
+    the SQL text and the operator share the same per-level formulas and
+    the expression stays linear."""
     ids = ", ".join(id_cols)
     parts = [f"WITH h{bits} AS (SELECT {ids}, "
              f"CAST({x_expr} AS BIGINT) AS hx, "
@@ -294,8 +295,8 @@ def zvalue_n(cols: list, bits: int = 16) -> "F.Column":
 
 def zvalue_n_sql(exprs: list, bits: int = 16) -> str:
     """The identical N-way interleave as SQL text (DuckDB-runnable) —
-    generated programmatically so oracle and operator cannot drift
-    (the :func:`zvalue_sql` discipline)."""
+    generated programmatically so the SQL text and the operator cannot
+    drift (the :func:`zvalue_sql` discipline)."""
     n = len(exprs)
     if n < 2:
         raise ValueError(f"need >= 2 expressions, got {n}")

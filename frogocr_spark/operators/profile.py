@@ -17,8 +17,7 @@ of k scans).
 Determinism: min/max are computed on the NATIVE type and cast to
 string only for the uniform output schema — restrict profiled columns
 to integer/varchar types when hash-comparing across engines (float
-string rendering differs; the contract query profiles only
-BIGINT/VARCHAR columns).
+string rendering differs).
 
 Reference parity: the reference's per-run counter queries
 (Source/Core/Database.cpp) are per-run, not per-column; this is the

@@ -418,7 +418,7 @@ def quantize_minmax_int8(df: DataFrame, vec_col: str = "embedding",
     Engine-portable by construction: every input float widens to
     double EXACTLY, and the formula is plain IEEE ``−·/+`` plus
     ``floor`` — all correctly rounded and identically ordered in any
-    engine, so a DuckDB oracle reproduces the integers bit-for-bit (no
+    engine, so DuckDB reproduces the integers bit-for-bit (no
     libm call, no half-even-vs-half-up ``round`` ambiguity: the
     ``+0.5 then floor`` idiom pins the tie behavior).
 
@@ -443,7 +443,7 @@ def seed_assignments(corpus: DataFrame, n_seeds: int, *,
     """Deterministic one-shot clustering for SemDeDup-style semantic
     dedup: the ``n_seeds`` vectors with the smallest ``md5(id)`` are the
     cluster seeds (a seedless, engine-portable pick — no RNG, no
-    iterative k-means, so an ANSI-SQL oracle reproduces the exact same
+    iterative k-means, so any ANSI-SQL engine reproduces the exact same
     clustering), and every vector is assigned to the seed with the
     highest ROUNDED cosine (ties → smaller seed id).  Rounding the
     ARGMAX key is the same ulp-robustness trick as the top-k rank
@@ -913,10 +913,9 @@ def gram_matrix_int(df: DataFrame, *, vec_col: str = "embedding",
     accumulator (numpy ``X'X``, BLAS-backed), then emits at most
     ``d(d+1)/2`` partial rows; the only exchange carries
     ``P · d(d+1)/2`` rows REGARDLESS of corpus size — never a
-    per-row explode (d² row blowup) and never a pairwise join.  The
-    DuckDB oracle IS the textbook per-row expansion (corpus × 16 index
-    cross then pairwise product sum), so the hash match proves the
-    partial-agg plan equivalent to the definition.
+    per-row explode (d² row blowup) and never a pairwise join, which is
+    what the textbook per-row expansion (corpus × index cross, then
+    pairwise product sum) would cost.
 
     Exactness: |q| ≤ scale (unit-ish inputs), so a partial product is
     ≤ scale² and an int64 partial sum holds ~5·10^8 rows per task at
@@ -968,8 +967,8 @@ def _tdiv(a: int, b: int) -> int:
     """Integer division TRUNCATING toward zero (b > 0) — DuckDB's ``//``
     semantics, which differ from Python's floor ``//`` on negative
     dividends (-7 // 2: DuckDB -3, Python -4).  Every signed e6 scaling
-    step in the spectral path goes through this so the oracle's ``//``
-    reproduces the engine bit-for-bit."""
+    step in the spectral path goes through this so DuckDB's ``//``
+    reproduces it bit-for-bit."""
     q = abs(a) // b
     return q if a >= 0 else -q
 

@@ -3,10 +3,10 @@ HyperLogLog.
 
 Why not ``approx_count_distinct``: Spark's built-in is HLL++ with an
 engine-private hash — correct, but unverifiable against any other
-engine.  This module builds the classic Flajolet HLL from ``md5`` so a
-DuckDB oracle recomputes the sketch BIT-FOR-BIT: same hash, same
-register values, same estimate.  That turns the usual "approximate ≈
-exact within ε" smoke test into an exact cross-engine value check,
+engine.  This module builds the classic Flajolet HLL from ``md5`` so
+any engine (or a pure-Python twin) recomputes the sketch BIT-FOR-BIT:
+same hash, same register values, same estimate.  That turns the usual
+"approximate ≈ exact within ε" smoke test into an exact value check,
 while keeping the genuine distributed-sketch shape:
 
 - map side: hash → (bucket, rho) is a pure column expression;
@@ -61,9 +61,9 @@ def _alpha(m: int) -> float:
 
 
 def hll_constants(p: int) -> dict:
-    """The derived constants for precision ``p`` — exposed so the SQL
-    oracle embeds the IDENTICAL literals (``repr`` round-trips the
-    double exactly in both parsers)."""
+    """The derived constants for precision ``p`` — exposed so SQL text
+    can embed the IDENTICAL literals (``repr`` round-trips the double
+    exactly in both parsers)."""
     if not 6 <= p <= 16:
         raise ValueError(f"p must be in [6, 16], got {p}")
     m = 1 << p
@@ -169,8 +169,8 @@ def hll_relative_error(p: int) -> float:
 # ---------------------------------------------------------------------------
 # Count-min sketch — the frequency-estimation sibling of the HLL above.
 # Same determinism contract: every hash is md5-derived, every counter is
-# an exact integer sum, so a DuckDB oracle recomputes the sketch (and
-# every estimate read from it) bit-for-bit.
+# an exact integer sum, so any engine recomputes the sketch (and every
+# estimate read from it) bit-for-bit.
 #
 # Scale shape (the reason a 100 TB pipeline uses this instead of a full
 # token->count table): the sketch is d*w int64 cells REGARDLESS of the
@@ -279,8 +279,8 @@ def hll_union_intersect(df_a: DataFrame, df_b: DataFrame, key_col: str,
 # the HLL register sketch above, and the one that gives cheap exact
 # SET-OPERATION estimates (theta-sketch intersection; Dasgupta et al.
 # 2016).  Same determinism contract: 60-bit md5 hashes, integer-only
-# arithmetic, one truncating wide division per estimate — a DuckDB
-# oracle recomputes the sketch and every estimate bit-for-bit.
+# arithmetic, one truncating wide division per estimate — any engine
+# recomputes the sketch and every estimate bit-for-bit.
 # --------------------------------------------------------------------
 
 KMV_M = 1 << 60  # hash domain size (60-bit md5 prefix)

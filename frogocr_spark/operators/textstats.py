@@ -209,11 +209,10 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
       total bigrams (0.0 when no bigram)
 
     Relational formulation (explode → two keyed aggregations with
-    map-side combine), deliberately SQL-expressible so the DuckDB
-    oracle recomputes it: shuffles are keyed on (doc, line) /
-    (doc, bigram) — never wider than the tokenized corpus, and hot keys
-    within one doc combine map-side.  Returns one row per input row
-    (docs with no lines/bigrams keep 0.0 fractions)."""
+    map-side combine), deliberately SQL-expressible: shuffles are keyed
+    on (doc, line) / (doc, bigram) — never wider than the tokenized
+    corpus, and hot keys within one doc combine map-side.  Returns one
+    row per input row (docs with no lines/bigrams keep 0.0 fractions)."""
     base = df.select(id_col, text_col)
     lines = base.select(
         id_col,
@@ -260,9 +259,9 @@ def stratified_sample(df: DataFrame, strata_cols: list[str],
     """Deterministic stratified downsample: the ``n_per_stratum`` rows
     of each stratum with the smallest ``md5(id)`` — a seedless,
     engine-portable "random" order (md5 is uniform in the id, stable
-    across runs/engines, so the DuckDB oracle picks the identical
-    sample).  The curation use: cap per-stratum volume (e.g. per
-    (lang_id, quality bucket)) before expensive downstream stages.
+    across runs/engines, so any engine picks the identical sample).
+    The curation use: cap per-stratum volume (e.g. per (lang_id,
+    quality bucket)) before expensive downstream stages.
 
     Scale shape (partial top-k, the same map-side-combine-for-rank
     pattern as similarity.cosine_topk_partial): a naive single window
@@ -396,7 +395,7 @@ def decontaminate(df: DataFrame, eval_df: DataFrame,
 
 # portable PII patterns: plain character classes + bounded quantifiers
 # only — identical semantics under Java regex (Spark) and RE2 (DuckDB),
-# so the scrub is oracle-verifiable byte-for-byte
+# so the scrub is the same byte-for-byte on both engines
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 PHONE_RE = r"\+?[0-9][0-9 -]{6,}[0-9]"
 
@@ -468,8 +467,8 @@ def top_vocabulary(df: DataFrame, k: int, id_col: str = "doc_id",
                    text_col: str = "text") -> DataFrame:
     """Corpus vocabulary: the ``k`` most frequent whitespace tokens with
     their total counts, deterministically ordered (count desc, token
-    asc — seedless tiebreak, so the DuckDB oracle picks the identical
-    set).  The first stage of quality scoring / tokenizer training.
+    asc — seedless tiebreak, so any engine picks the identical set).
+    The first stage of quality scoring / tokenizer training.
 
     Scale shape: explode → one token-keyed aggregation (map-side
     combined — hot tokens like "the" partial-aggregate in every task)
@@ -696,7 +695,7 @@ def line_filters(df: DataFrame, text_col: str = "text",
     JVM-side, map-only (no shuffle at any scale: line cleaning is
     embarrassingly parallel, unlike the doc-level dedup family).
     Predicates are restricted to constructs Java regex and RE2 agree
-    on, so the DuckDB oracle reproduces the kept text byte-for-byte."""
+    on, so DuckDB would keep the identical text byte-for-byte."""
     lines = F.split(F.col(text_col), "\n")
 
     def _keep(x):
@@ -996,8 +995,9 @@ def normalize_text(df: DataFrame, text_col: str = "text",
     it runs as an Arrow-batched pandas UDF (``Series.str.normalize`` —
     batch-level, no per-row JVM crossing); the control/whitespace
     cleanup stays JVM-side ``regexp_replace`` (Java regex ``\\s`` and
-    RE2 ``\\s`` agree on the ASCII class, so the DuckDB
-    ``nfc_normalize`` oracle reproduces the result byte-for-byte)."""
+    RE2 ``\\s`` agree on the ASCII class, so DuckDB's
+    ``nfc_normalize`` plus the same ``regexp_replace`` would give the
+    identical result)."""
     # no type hints: postponed annotation evaluation (PEP 563) turns them
     # into unresolvable strings for pandas_udf's signature inspection
     _nfc = F.pandas_udf(lambda s: s.str.normalize("NFC"), "string")
@@ -1318,8 +1318,8 @@ def bm25_scores(docs: DataFrame, queries: dict[str, list[str]], *,
     idf(t) = ln((N − df + ½)/(df + ½) + 1); per-term contribution
     ``idf · tf·(k1+1)/(tf + k1·(1 − b + b·dl/avgdl))`` — every input is
     an exact integer (tf, df, N, dl) or a shared literal double
-    (k1, b, avgdl), and the expression tree is identical in the DuckDB
-    oracle, so both engines produce the same doubles op for op.
+    (k1, b, avgdl), so any engine evaluating the same expression tree
+    produces the same doubles op for op.
 
     Scale shape: one tokenize pass feeds dl and tf; tf is PRE-FILTERED
     to query terms at the scan (the corpus never materializes its full

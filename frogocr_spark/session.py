@@ -20,6 +20,14 @@ from pyspark.sql import SparkSession
 ARROW_BATCH_ROWS = 65_536
 
 
+def _default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 24g: in local mode the
+    driver JVM is the only executor, and a heap sized past the host is
+    never pressed to collect.  ``SPARK_DRIVER_MEM`` overrides it."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2 >> 20, 24 << 10)}m"
+
+
 def get_spark(app_name: str = "frogocr_spark", cores: int | None = None,
               shuffle_partitions: int | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
@@ -40,7 +48,8 @@ def get_spark(app_name: str = "frogocr_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_ROWS))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # storage-partitioned joins over conv_id-bucketed tables: allow a

@@ -286,18 +286,26 @@ class Table:
 
     def vacuum(self) -> list[str]:
         """Remove compaction-superseded run dirs still on disk (crash
-        recovery for the window between compaction phases 2 and 3) and
-        any abandoned compaction/merge staging dir (a crash during
-        phase 1).  Returns the removed names."""
+        recovery for the window between compaction phases 2 and 3), any
+        abandoned compaction/merge/delete staging dir (a crash during
+        phase 1), and the staged or set-aside dirs a crashed
+        :meth:`append` leaves (``.staging-run_id=<id>``,
+        ``.replaced-run_id=<id>``), which otherwise wait for an append of
+        the same run_id that may never come.  None of these is visible
+        to readers.  Single-writer assumption, like the fixed staging
+        names: vacuum must not run while an append or rewrite is in
+        flight, or it deletes that writer's staging dir.  Returns the
+        removed names."""
         import shutil
 
-        removed: list[str] = []
-        for sname in (".staging-compact", ".staging-merge",
-                      ".staging-delete"):
-            staging = os.path.join(self.path, sname)
-            if os.path.isdir(staging):
-                shutil.rmtree(staging, ignore_errors=True)
-                removed.append(sname)
+        if not os.path.isdir(self.path):
+            return []
+        removed = sorted(
+            n for n in os.listdir(self.path)
+            if n in (".staging-compact", ".staging-merge", ".staging-delete")
+            or n.startswith((".staging-run_id=", ".replaced-run_id=")))
+        for n in removed:
+            shutil.rmtree(os.path.join(self.path, n), ignore_errors=True)
         if not os.path.isdir(self.data_dir):
             return removed
         on_disk = {n for n in os.listdir(self.data_dir)

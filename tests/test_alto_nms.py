@@ -1,36 +1,6 @@
-"""ALTO-analog XML rendering + NMS suppression."""
+"""NMS suppression: the greedy interval kernel and its Spark operator."""
 
-import re
-
-from frogocr_spark.core import alto, nms
-from frogocr_spark.core.extract import extract_turn
-
-
-def test_xml_attr_escape_order():
-    assert alto.xml_attr('&"<>') == "&amp;&quot;&lt;&gt;"
-    # pre-existing entity gets re-escaped (& first ⇒ no double-unescape)
-    assert alto.xml_attr("&amp;") == "&amp;amp;"
-
-
-def test_render_positional_ids_deterministic():
-    rec = extract_turn("@60,100,50,14|hello @120,102,50,14|world @60,300,50,14|below")
-    xml = alto.render_turn_xml("conv_x", 3, rec["payload_class"],
-                               [(s["start"], s["end"]) for s in rec["spans"]],
-                               rec["extracted_text"], rec["confidence"])
-    ids = re.findall(r'ID="([^"]+)"', xml)
-    assert ids == ["p_3", "p_3_b_0", "p_3_b_0_s_0", "p_3_b_0_s_1",
-                   "p_3_b_1", "p_3_b_1_s_0"]
-    assert 'CONTENT="hello" START=' in xml
-    # rendering is a pure function → byte-identical on re-render
-    xml2 = alto.render_turn_xml("conv_x", 3, rec["payload_class"],
-                                [(s["start"], s["end"]) for s in rec["spans"]],
-                                rec["extracted_text"], rec["confidence"])
-    assert xml == xml2
-
-
-def test_render_empty_lines_dropped():
-    xml = alto.render_turn_xml("c", 0, "plain", [], "", 1.0)
-    assert "<block" not in xml
+from frogocr_spark.core import nms
 
 
 def test_nms_greedy_suppression():

@@ -341,3 +341,53 @@ def test_append_publish_crash_never_shows_part_of_a_run(spark, tmp_path,
         fail_at += 1
     assert rows(t) == want_new
     assert fail_at >= 3      # both renames and the cleanup were each hit
+
+
+def test_vacuum_reclaims_crashed_append_debris(spark, tmp_path,
+                                               monkeypatch):
+    """A crash in an append's final cleanup leaves
+    ``.replaced-run_id=<id>`` (a copy of the old run) and a crash before
+    its first rename leaves ``.staging-run_id=<id>``; vacuum reclaims
+    both without waiting for a rerun of those run_ids, and every run
+    still reads whole."""
+    import os
+    import shutil
+
+    t = Table(spark, str(tmp_path / "tbl"))
+
+    def frame(tag):
+        return spark.createDataFrame([(i, tag) for i in range(6)],
+                                     "id long, v string").repartition(3)
+
+    t.append(frame("old1"), "r1")
+    t.append(frame("old2"), "r2")
+    real_replace, real_rmtree = os.replace, shutil.rmtree
+
+    def rmtree(path, *args, **kwargs):
+        if (os.path.basename(str(path)) == ".replaced-run_id=r1"
+                and os.path.isdir(path)):
+            # killed part-way through: one part file gone, rest left
+            os.remove(next(os.path.join(path, f) for f in os.listdir(path)
+                           if f.endswith(".parquet")))
+            raise OSError("injected crash mid-rmtree")
+        real_rmtree(path, *args, **kwargs)
+
+    def replace(src, dst):
+        if str(src) == os.path.join(t.data_dir, "run_id=r2"):
+            raise OSError("injected crash before rename")
+        real_replace(src, dst)
+
+    with monkeypatch.context() as m:
+        m.setattr(shutil, "rmtree", rmtree)
+        m.setattr(os, "replace", replace)
+        for tag, run_id in (("new1", "r1"), ("new2", "r2")):
+            with pytest.raises(OSError):
+                t.append(frame(tag), run_id)
+    assert sorted(os.listdir(t.path)) == [
+        ".replaced-run_id=r1", ".staging-run_id=r2", "data"]
+
+    assert t.vacuum() == [".replaced-run_id=r1", ".staging-run_id=r2"]
+    assert os.listdir(t.path) == ["data"]
+    assert t.snapshots() == ["r1", "r2"]
+    assert sorted((r.id, r.v) for r in t.read().collect()) == sorted(
+        [(i, "new1") for i in range(6)] + [(i, "old2") for i in range(6)])

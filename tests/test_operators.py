@@ -120,13 +120,6 @@ def test_settings_csv_map_and_default(spark):
     assert row.dpi == "300" and row.mwc == "0.0"
 
 
-def test_path_with_extension(spark):
-    df = spark.createDataFrame([("/in/scan.0001.jpg",), ("noext",)], "p string")
-    got = [r.o for r in df.select(
-        ftext.path_with_extension(F.col("p"), "xml").alias("o")).collect()]
-    assert got == ["/in/scan.0001.xml", "noext"]
-
-
 def test_merge_tokens(spark):
     df = spark.createDataFrame([("  a  b\t c ",)], "s string")
     assert df.select(ftext.merge_tokens(F.col("s")).alias("o")).first().o == "a b c"
