@@ -21,9 +21,14 @@ from .assemble import Block, Segment
 
 CONTENT_KEYS = ("content", "text", "output", "stdout", "result", "data")
 
-# "key" : "value-with-escapes"   (group 2 = raw value token)
+# "key" : "value-with-escapes"   (group 1 = raw value token).  The
+# quantifiers are possessive: with a backtracking loop per character,
+# sre kept ~140 bytes of state per character of the value (7 GB peak for
+# a 50 MB one).  Every loop step starts at a character that is not a
+# quote, so giving steps back could never put the closing quote next:
+# the matches are those of the plain ``(?:[^"\\]|\\.)*`` loop.
 _FIELD_RES = {
-    k: re.compile(r'"' + k + r'"\s*:\s*"((?:[^"\\]|\\.)*)"')
+    k: re.compile(r'"' + k + r'"\s*:\s*"((?:[^"\\]++|\\.)*+)"')
     for k in CONTENT_KEYS
 }
 

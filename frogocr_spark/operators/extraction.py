@@ -18,6 +18,8 @@ transfer width stays minimal (SURVEY §4 "column pruning").
 
 from __future__ import annotations
 
+import os
+import sys
 from collections.abc import Iterator
 
 from pyspark.sql import DataFrame
@@ -42,6 +44,56 @@ EXTRACTION_FIELDS = [
     T.StructField("parse_failed", T.BooleanType(), False),
     T.StructField("empty_after_strip", T.BooleanType(), False),
 ]
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``importlib.invalidate_caches()`` cheap for zip archives that
+    did not change: on CPython < 3.12, re-read an archive's directory only
+    when its ``(st_mtime_ns, st_size)`` differs from what it was when this
+    importer last read it.
+
+    Why: PySpark 4.1.2's worker calls ``importlib.invalidate_caches()``
+    at the start of every task (``pyspark/worker_util.py:
+    setup_spark_files``).  Before 3.12, that makes every
+    ``zipimport.zipimporter`` re-read its whole archive directory.  A
+    worker holds ~16 of them: ``pyspark.zip`` (1,328 entries) once per
+    pyspark subpackage loaded from it, the py4j zip, and the
+    ``spark-core`` jar (5,359 entries, no ``.py`` file) that Spark puts
+    on the worker path.  One call costs 0.11-0.18 s of CPU in a
+    ``local[4]`` worker, almost all in ``zipimport._read_directory``;
+    over ``agent_resume``'s 51,377 turns an identity ``mapInArrow`` costs
+    1.24 s CPU, against 0.54 s for the same rows in one task.  CPython
+    3.12 made the invalidation lazy upstream (gh-103200), so there this
+    does nothing.
+
+    Limits: it lives in the worker process, so it relies on
+    ``spark.python.worker.reuse`` (on by default).  It is installed by
+    the first task a worker runs, so that task, and the next one while
+    each importer records the stat it read at, still pay the full
+    re-read.  Every later task in the worker skips it, whatever its UDF.
+
+    Idempotent: installed once per process, never wrapped twice.
+    """
+    if sys.version_info >= (3, 12):
+        return
+    import zipimport
+    reread = zipimport.zipimporter.invalidate_caches
+    if getattr(reread, "stat_checked", False):
+        return
+
+    def invalidate_caches(self):
+        # stat before the read: a change during the read shows next time
+        try:
+            st = os.stat(self.archive)
+            seen = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            seen = None
+        if seen is None or getattr(self, "_read_at", None) != seen:
+            reread(self)
+            self._read_at = seen
+
+    invalidate_caches.stat_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
 
 
 def extract_turns(df: DataFrame, *, text_col: str = "text",
@@ -69,6 +121,7 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     out_names = pass_cols + [f.name for f in EXTRACTION_FIELDS]
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        _skip_unchanged_zip_rereads()
         # mapInArrow, not mapInPandas: the passthrough columns are
         # forwarded zero-copy, and pyarrow converts extract_batch's frame
         # in one call against the declared schema (spans from (start,

@@ -24,6 +24,7 @@ of total table size per-partition.
 from __future__ import annotations
 
 import os
+import time
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -31,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
+from ..core.sniff import CLASSES
 from ..operators.extraction import extract_turns
 from ..operators.resume import filter_unprocessed
 from ..operators.skew import DEFAULT_SALT_BUCKETS, salted_repartition
@@ -65,8 +67,12 @@ def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
     given, after any shuffle: AQE swaps a shuffle stage that produced
     no rows, observe() included, for an empty relation.  Returns the
     sidecar totals of the committed run (a blind retry re-reports the
-    run it left intact); raises RuntimeError when they differ from the
-    rows or parse failures that entered or left extraction."""
+    run it left intact), plus ``class_rows`` (rows per payload class
+    that left extraction) and ``phase_s`` (wall seconds of the
+    extract+append and of the sidecar build+read-back); raises
+    RuntimeError when the totals differ from the rows or parse failures
+    that entered or left extraction."""
+    t0 = time.perf_counter()
     obs_in, obs_out = Observation("rows_in"), Observation("extract")
     extracted = extract(
         todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in")))
@@ -74,13 +80,18 @@ def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
         obs_out,
         F.count(F.lit(1)).alias("rows_out"),
         F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-        F.sum(F.col("empty_after_strip").cast("long")).alias("empty"))
+        F.sum(F.col("empty_after_strip").cast("long")).alias("empty"),
+        *(F.count_if(F.col("payload_class") == c).alias(f"class_{c}")
+          for c in CLASSES))
     out_table.append(extracted, run_id)
     observed = {**obs_in.get, **obs_out.get}
+    class_rows = {c: observed.pop(f"class_{c}") or 0 for c in CLASSES}
+    t1 = time.perf_counter()
 
     side_table.append(build_sidecar(
         out_table.read_snapshot(run_id, extracted.schema), run_id), run_id)
     stats = sidecar_totals(side_table, run_id)
+    t2 = time.perf_counter()
     if observed["rows_in"] and (
             observed["rows_in"] != stats["rows_out"]
             or (observed["parse_failures"] or 0) != stats["parse_failures"]):
@@ -90,12 +101,18 @@ def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
             f"parse failures, committed output has {stats['rows_out']} / "
             f"{stats['parse_failures']}")
     stats["observed"] = observed
+    stats["class_rows"] = class_rows
+    stats["phase_s"] = {"extract_append": round(t1 - t0, 3),
+                        "sidecar": round(t2 - t1, 3)}
     return stats
 
 
 def run_extraction(spark: SparkSession, transcripts: DataFrame,
                    cfg: PipelineConfig) -> dict:
-    """Execute the pipeline; returns run stats from the sidecar.
+    """Execute the pipeline; returns run stats from the sidecar (see
+    :func:`commit_run`), with ``phase_s["resume_check"]``: the wall
+    seconds of the committed-key lookup and committed-``run_id`` check
+    (the anti-join itself runs inside ``extract_append``).
 
     With resume on, a rerun under an already-committed ``run_id`` that
     still finds new rows raises ValueError before writing anything: the
@@ -108,6 +125,7 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
         out_table = Table(spark, os.path.join(cfg.output_dir, "extractions"))
     side_table = Table(spark, os.path.join(cfg.output_dir, "metrics"))
 
+    t0 = time.perf_counter()
     todo = transcripts
     if cfg.resume:
         todo = filter_unprocessed(
@@ -117,6 +135,7 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
                 f"run {cfg.run_id!r} is already committed and the input "
                 f"has turns it does not hold; rerunning it would replace "
                 f"its rows with only the new ones. Pass a new --run-id.")
+    resume_s = time.perf_counter() - t0
 
     # salt_buckets=0 → map-only plan (zero shuffles): correct whenever the
     # input layout already bounds task sizes (parquet maxPartitionBytes
@@ -125,4 +144,8 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     # feeding downstream per-conversation operators.
     if cfg.salt_buckets > 0:
         todo = salted_repartition(todo, cfg.num_partitions, cfg.salt_buckets)
-    return commit_run(todo, extract_turns, cfg.run_id, out_table, side_table)
+    stats = commit_run(todo, extract_turns, cfg.run_id, out_table,
+                       side_table)
+    stats["phase_s"] = {"resume_check": round(resume_s, 3),
+                        **stats["phase_s"]}
+    return stats

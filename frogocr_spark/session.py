@@ -18,6 +18,14 @@ from pyspark.sql import SparkSession
 # (fewer Arrow flushes + fewer Python-side loop iterations) and still far
 # inside executor memory at 32 concurrent tasks.
 ARROW_BATCH_ROWS = 65_536
+# ... and by bytes, so a few oversized turns (tens of MB each) are not
+# sent to Python in one batch with 65k others: Spark cuts a mapInArrow
+# batch at whichever bound it reaches first.  Far above the ~16 MB of a
+# 64k-row batch of ordinary turns, so those batches do not change.  A
+# batch closes at the first row that takes it past this size, so one
+# oversized row still gets through.  Any value but the default also
+# makes Spark check the batch size per row.
+ARROW_BATCH_BYTES = 128 << 20
 
 
 def _default_driver_memory() -> str:
@@ -48,6 +56,8 @@ def get_spark(app_name: str = "frogocr_spark", cores: int | None = None,
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch",
                 str(ARROW_BATCH_ROWS))
+        .config("spark.sql.execution.arrow.maxBytesPerBatch",
+                str(ARROW_BATCH_BYTES))
         .config("spark.driver.memory",
                 os.environ.get("SPARK_DRIVER_MEM") or _default_driver_memory())
         .config("spark.ui.enabled", "false")

@@ -2,9 +2,12 @@
 repartitioning, resume exactly-once, skew, sidecar reconciliation
 (FIXTURES.md §5 invariants 1, 2, 5, 6)."""
 
+from concurrent.futures import ThreadPoolExecutor
+
 import pytest
 
 from frogocr_spark.core.extract import extract_turn
+from frogocr_spark.core.sniff import CLASSES
 from frogocr_spark.operators.extraction import extract_turns
 from frogocr_spark.operators.resume import filter_unprocessed
 from frogocr_spark.operators.skew import salted_repartition
@@ -74,6 +77,14 @@ def test_pipeline_end_to_end_with_sidecar(spark, tdf, oracle, tmp_path):
     stats = run_extraction(spark, tdf, cfg)
     assert stats["rows_in"] == len(oracle)
     assert stats["rows_in"] == stats["rows_out"]
+    # per-class rows from the extraction observe(): they partition rows_in
+    assert sum(stats["class_rows"].values()) == stats["observed"]["rows_in"]
+    assert stats["class_rows"] == {
+        c: sum(rec["payload_class"] == c for rec in oracle.values())
+        for c in CLASSES}
+    assert set(stats["phase_s"]) == {"resume_check", "extract_append",
+                                     "sidecar"}
+    assert all(t >= 0 for t in stats["phase_s"].values())
     out = Table(spark, str(tmp_path / "extractions")).read()
     got = _collect_map(out)
     assert len(got) == len(oracle)
@@ -249,3 +260,73 @@ def test_rerun_of_committed_run_id_with_new_rows_raises(spark, tmp_path,
         assert keys() == committed
     finally:
         spark.sql("DROP TABLE IF EXISTS bt_rerun")
+
+
+OVERSIZED_MB = 50
+
+
+def _oversized_turns(rows):
+    """One ~OVERSIZED_MB turn each of plain, tool_json (a log in
+    ``stdout``, escapes included), html and pdf_layout, repeated from
+    the generator's own payloads of that class.  markdown and two_pass
+    emit a span per word: at 16 MB the reference extract_turn alone
+    takes 13-21 s and ~1 GB for them, so they are left out."""
+    import json
+
+    from frogocr_spark.core.sniff import sniff
+    size = OVERSIZED_MB << 20
+    by_class = {}
+    for r in rows:
+        by_class.setdefault(sniff(r["text"]), []).append(r["text"])
+
+    def fill(unit):
+        return (unit * (size // len(unit) + 1))[:size]
+
+    return {
+        "plain": fill(" ".join(by_class["plain"])),
+        "tool_json": json.dumps({"status": "ok", "stdout": fill(
+            "\n".join(by_class["plain"]))}),
+        "html": fill("\n".join(by_class["html"])),
+        "pdf_layout": fill(" ".join(by_class["pdf_layout"])),
+    }
+
+
+def test_oversized_turns_match_extract_turn(spark, tmp_path):
+    """A few OVERSIZED_MB turns mixed with ordinary ones
+    go through the operator, in Arrow batches the session bounds by
+    bytes as well as rows, and match extract_turn row for row."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from frogocr_spark.session import ARROW_BATCH_BYTES
+    assert (spark.conf.get("spark.sql.execution.arrow.maxBytesPerBatch")
+            == str(ARROW_BATCH_BYTES))
+    rows = payloadgen.gen_transcripts(30)
+    big = _oversized_turns(rows)
+    rows = rows[:200] + [
+        {"conv_id": f"big-{cls}", "turn_idx": 0, "role": "tool", "text": t}
+        for cls, t in big.items()] + rows[200:]
+    pq.write_table(pa.Table.from_pylist(
+        [{k: r[k] for k in ("conv_id", "turn_idx", "role", "text")}
+         for r in rows]), tmp_path / "in.parquet")
+    # the reference runs while the Spark job waits on its workers
+    with ThreadPoolExecutor(1) as pool:
+        pending = pool.submit(
+            lambda: {(r["conv_id"], r["turn_idx"]): extract_turn(r["text"])
+                     for r in rows})
+        got = extract_turns(spark.read.parquet(str(tmp_path / "in.parquet"))
+                            ).toArrow().to_pylist()
+        want = pending.result()
+    assert len(got) == len(want) == len(rows)
+    for row in got:
+        key = (row["conv_id"], row["turn_idx"])
+        rec = want.pop(key)
+        if key[0].startswith("big-"):
+            assert key[0] == "big-" + rec["payload_class"]
+        for col in ("payload_class", "extracted_text", "spans", "n_blocks",
+                    "n_spans", "n_variants", "parse_failed",
+                    "empty_after_strip"):
+            assert row[col] == rec[col], (key, col)
+        assert row["confidence"] == pytest.approx(rec["confidence"],
+                                                  abs=1e-12)
+    assert not want
