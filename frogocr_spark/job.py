@@ -13,6 +13,12 @@ Local smoke (also what bench.py measures):
 
     python -m frogocr_spark.job --generate-convs 1000 --output /tmp/out
 
+Spark's event log is Spark's own setting, which the session leaves
+alone: ``spark-submit --conf spark.eventLog.enabled=true --conf
+spark.eventLog.dir=<dir>`` (add ``--conf spark.eventLog.compress=false``
+for plain JSON lines), or the same ``--conf`` flags followed by
+``pyspark-shell`` in ``PYSPARK_SUBMIT_ARGS`` for ``python -m``.
+
 The pipeline itself is in plans.pipeline — this module is only argument
 parsing + session setup, so the same code path runs under spark-submit on
 a real cluster and under pytest locally (the reference's equivalent is the

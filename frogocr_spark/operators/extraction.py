@@ -11,6 +11,13 @@ the batch boundary itself is raw Arrow: passthrough columns are
 forwarded zero-copy and the result frame becomes Arrow in one
 ``pa.RecordBatch.from_pandas`` call against ``EXTRACTION_FIELDS``.
 
+Given a ``tally`` accumulator, each task also counts its partition in
+the same pass (the reference counts per-task provenance where it does
+the work, ``Source/TaskProcessor.cpp:19-88``): one entry per non-empty
+partition, keyed by ``partition_id`` and merged last-wins
+(:class:`LastWins`), which ``plans.metrics.tally_sidecar`` turns into
+the lineage sidecar without another Spark job.
+
 Column pruning matters at 100 TB: the operator selects only the columns it
 consumes plus the requested passthrough keys before the UDF, so the Arrow
 transfer width stays minimal (SURVEY §4 "column pruning").
@@ -20,8 +27,10 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 from collections.abc import Iterator
 
+from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +53,21 @@ EXTRACTION_FIELDS = [
     T.StructField("parse_failed", T.BooleanType(), False),
     T.StructField("empty_after_strip", T.BooleanType(), False),
 ]
+
+
+class LastWins(AccumulatorParam):
+    """Accumulator of ``{partition_id: entry}`` dicts merged by
+    ``dict.update``: a task that runs again (retry, speculation, a second
+    action over the same frame) replaces its partition's entry instead
+    of adding to it.  Extraction is deterministic, so only the entry's
+    Python time can differ between attempts."""
+
+    def zero(self, value: dict) -> dict:
+        return {}
+
+    def addInPlace(self, value1: dict, value2: dict) -> dict:
+        value1.update(value2)
+        return value1
 
 
 def _skip_unchanged_zip_rereads() -> None:
@@ -99,13 +123,26 @@ def _skip_unchanged_zip_rereads() -> None:
 def extract_turns(df: DataFrame, *, text_col: str = "text",
                   passthrough: tuple[str, ...] = ("conv_id", "turn_idx", "role"),
                   with_partition_id: bool = True,
-                  settings_col: str | None = None) -> DataFrame:
+                  settings_col: str | None = None,
+                  tally: Accumulator | None = None) -> DataFrame:
     """raw transcripts → extraction results (1 row in = 1 row out).
 
     ``with_partition_id`` stamps ``F.spark_partition_id()`` *before* the UDF
-    so the lineage sidecar can group by physical partition (A10/§2.10).
+    so the lineage sidecar can key by physical partition (A10/§2.10).
     ``settings_col`` = optional per-turn settings CSV (F9 — tunes
     MinWordConfidence / SecondPass per row).
+    ``tally`` = optional :class:`LastWins` accumulator: once a task's
+    batches are exhausted, it adds ``{partition_id: entry}``, the entry
+    a dict keyed by sidecar column: ``rows_in``, ``rows_out``,
+    ``empty_after_strip``, ``parse_failures``, ``n_convs_approx``,
+    ``confidence_sum`` and ``python_cpu_s`` (the worker's
+    ``time.process_time()`` over the task).  ``n_convs_approx`` counts
+    runs of equal consecutive ``conv_id``s, so a task's state is a few
+    numbers whatever its size: it is the exact distinct count when the
+    partition is sorted by ``conv_id`` (``salted_repartition`` sorts
+    it), an upper bound otherwise.  A partition with no rows adds
+    nothing.  Needs ``with_partition_id`` and ``conv_id`` among the
+    passthrough columns.
     """
     cols = [*passthrough, text_col]
     if settings_col:
@@ -121,25 +158,46 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     out_names = pass_cols + [f.name for f in EXTRACTION_FIELDS]
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        cpu0 = time.process_time()
         _skip_unchanged_zip_rereads()
         # mapInArrow, not mapInPandas: the passthrough columns are
         # forwarded zero-copy, and pyarrow converts extract_batch's frame
         # in one call against the declared schema (spans from (start,
         # end) pairs straight to the struct list)
         import pyarrow as pa
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
         res_schema = to_arrow_schema(T.StructType(EXTRACTION_FIELDS))
+        pid = last_conv = None
+        t = {"rows_in": 0, "rows_out": 0, "empty_after_strip": 0,
+             "parse_failures": 0, "n_convs_approx": 0, "confidence_sum": 0.0}
         for rb in batches:
             if rb.num_rows == 0:
                 continue
             stngs = (rb.column(settings_col).to_pandas()
                      if settings_col else None)
-            res = pa.RecordBatch.from_pandas(
-                extract_batch(rb.column(text_col).to_pandas(), stngs,
-                              spans_as="pairs"),
-                schema=res_schema, preserve_index=False)
+            frame = extract_batch(rb.column(text_col).to_pandas(), stngs,
+                                  spans_as="pairs")
+            res = pa.RecordBatch.from_pandas(frame, schema=res_schema,
+                                             preserve_index=False)
+            if tally is not None:
+                pid = rb.column("partition_id")[0].as_py()
+                t["rows_in"] += rb.num_rows
+                t["rows_out"] += res.num_rows
+                t["empty_after_strip"] += int(frame["empty_after_strip"].sum())
+                t["parse_failures"] += int(frame["parse_failed"].sum())
+                t["confidence_sum"] += float(frame["confidence"].sum())
+                conv = rb.column("conv_id")
+                changes = pc.sum(pc.not_equal(
+                    conv.slice(1), conv.slice(0, len(conv) - 1))).as_py()
+                t["n_convs_approx"] += ((changes or 0)
+                                        + (conv[0].as_py() != last_conv))
+                last_conv = conv[-1].as_py()
             yield pa.RecordBatch.from_arrays(
                 [rb.column(c) for c in pass_cols] + res.columns,
                 names=out_names)
+        if pid is not None:
+            t["python_cpu_s"] = time.process_time() - cpu0
+            tally.add({pid: t})
 
     return narrow.mapInArrow(run, schema=out_schema)

@@ -3,33 +3,81 @@
 The analog of FrogOCR's per-stage ``Processing`` provenance records
 (reference ``Source/TaskProcessor.cpp:19-88,338-355``) and per-processor
 counters (``Source/TaskProcessor.hpp:51``, ``Source/Application.cpp:
-318-331``), re-expressed as one aggregation over a committed run's
-output:
+318-331``), counted, as there, in the pass that does the work:
 
 ``(run_id, partition_id) → rows_in, rows_out, empty_after_strip,
-parse_failures, n_convs_approx, mean_confidence, created_at``
+parse_failures, n_convs_approx, mean_confidence, created_at,
+python_cpu_s``
 
-Both row columns count the committed rows (extraction is 1:1), so they
-cannot catch a lost row on their own.  The check is the pipeline's
-(``plans.pipeline.commit_run``): the rows observed entering extraction
-must equal the sidecar's ``rows_out`` total, read back from the few
-sidecar rows by :func:`sidecar_totals` (FIXTURES.md §5.6).  Aggregation
-is map-side partial (plain ``groupBy().agg`` — Spark does the
-partial/final split).
+Each extraction task counts its own partition into a ``LastWins``
+accumulator (``operators.extraction.extract_turns(tally=...)``), and
+:func:`tally_sidecar` turns those entries into the sidecar rows on the
+driver; the pipeline writes them with pyarrow, so no Spark job runs
+after the output write.  ``n_convs_approx`` counts runs of equal
+consecutive ``conv_id``s (exact within a partition sorted by
+``conv_id``, as the salted shuffle leaves it) and ``python_cpu_s`` is
+the task's Python worker CPU seconds.
+
+The check is the pipeline's (``plans.pipeline.commit_run``), three
+independent counts of one run: the rows observed entering extraction,
+the rows the tasks counted (the sidecar's ``rows_out`` total, read back
+by :func:`sidecar_totals`, FIXTURES.md §5.6) and the rows in the
+committed parquet footers; plus the parse failures observed leaving
+extraction against those the tasks counted.  The sidecar is published
+before the output, so a committed run always has its sidecar: a crash
+between the two leaves a sidecar without output, whose turns the
+resume re-extracts, replacing it.
+
+:func:`build_sidecar` is the same table as one Spark aggregation over
+an extraction output (``n_convs_approx`` approximate, no
+``python_cpu_s``); the pipeline benchmark times it as the cost the
+tallies replace.
 """
 
 from __future__ import annotations
 
 import os
+from datetime import datetime, timezone
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 TOTALS = ("rows_in", "rows_out", "empty_after_strip", "parse_failures")
 
+# the sidecar's columns, with the types Spark gave them when it wrote
+# the sidecar (int partition_id, long counts)
+SIDECAR_SCHEMA = pa.schema([
+    ("partition_id", pa.int32()),
+    ("rows_in", pa.int64()),
+    ("rows_out", pa.int64()),
+    ("empty_after_strip", pa.int64()),
+    ("parse_failures", pa.int64()),
+    ("n_convs_approx", pa.int64()),
+    ("mean_confidence", pa.float64()),
+    ("run_id", pa.string()),
+    ("created_at", pa.timestamp("us", tz="UTC")),
+    ("python_cpu_s", pa.float64()),
+])
+
+
+def tally_sidecar(tallies: dict, run_id: str) -> pa.Table:
+    """The sidecar rows of run ``run_id`` from the extraction tasks'
+    ``{partition_id: entry}`` tallies (entries keyed by sidecar column,
+    ``confidence_sum`` in place of ``mean_confidence``), one row per
+    partition that held rows."""
+    # wall-clock provenance lives ONLY here (C9: timestamps never enter
+    # the matched output — reference Processing.dateTime analog,
+    # Source/TaskProcessor.cpp:11-13)
+    now = datetime.now(timezone.utc)
+    return pa.Table.from_pylist(
+        [{**e, "partition_id": pid, "run_id": run_id, "created_at": now,
+          "mean_confidence": e["confidence_sum"] / e["rows_out"]}
+         for pid, e in sorted(tallies.items())], schema=SIDECAR_SCHEMA)
+
 
 def build_sidecar(extracted: DataFrame, run_id: str) -> DataFrame:
-    """Aggregate the extraction output into the lineage sidecar table."""
+    """Aggregate an extraction output into its lineage sidecar rows."""
     return (
         extracted
         .groupBy("partition_id")
@@ -42,9 +90,6 @@ def build_sidecar(extracted: DataFrame, run_id: str) -> DataFrame:
             F.avg("confidence").alias("mean_confidence"),
         )
         .withColumn("run_id", F.lit(run_id))
-        # wall-clock provenance lives ONLY here (C9: timestamps never enter
-        # the matched output — reference Processing.dateTime analog,
-        # Source/TaskProcessor.cpp:11-13)
         .withColumn("created_at", F.current_timestamp())
     )
 

@@ -5,10 +5,22 @@
       → conv_id-salted repartition + secondary sort   (skew + ordering)
       → commit_run:
           observe rows_in                     (rows entering extraction)
-          → fused mapInArrow extraction       (one Arrow pass)
-          → idempotent run_id append          (exactly-once)
-          → lineage/metrics sidecar built once from the committed run
-          → its totals read back, reconciled against rows_in
+          → fused mapInArrow extraction       (one Arrow pass; each task
+                                               also tallies its partition)
+          → run_id output staged              (the one Spark action)
+          → lineage/metrics sidecar built on the driver from the tallies,
+            appended with pyarrow             (no Spark job)
+          → the staged output published       (exactly-once; its rows
+                                               counted from the footers)
+          → three-way check: rows observed entering extraction = rows
+            the tasks counted = rows in the committed files
+
+The sidecar is published before the output, so a committed run always
+has its sidecar: a crash between the two publishes leaves a sidecar
+without output, and the retry's resume finds the run's turns
+unprocessed, re-extracts them and replaces that sidecar.  A blind retry
+of a completed run counts nothing and stages nothing, so both publishes
+keep what is committed and the run's totals are re-reported.
 
 The stream's ``foreachBatch`` calls the same ``commit_run`` per epoch
 with ``run_id=epoch_<N>`` — the reference's one scheduler loop for
@@ -33,11 +45,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
 
 from ..core.sniff import CLASSES
-from ..operators.extraction import extract_turns
+from ..operators.extraction import LastWins, extract_turns
 from ..operators.resume import filter_unprocessed
 from ..operators.skew import DEFAULT_SALT_BUCKETS, salted_repartition
 from ..sources.catalog import BucketedTable, Table
-from .metrics import build_sidecar, sidecar_totals
+# build_sidecar is not called here; it stays bound as
+# pipeline.build_sidecar, which the pipeline benchmark's traced run wraps
+from .metrics import build_sidecar, sidecar_totals, tally_sidecar  # noqa: F401
 
 
 @dataclass
@@ -56,26 +70,34 @@ class PipelineConfig:
     buckets: int = 32
 
 
-def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
+def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
                run_id: str, out_table: Table | BucketedTable,
                side_table: Table) -> dict:
     """Extract ``todo`` with ``extract`` and commit it as run ``run_id``.
 
-    Observe → append → build the sidecar from the written run → append
-    it → read its totals back → reconcile; the observe() counters fill
-    on the append's write.  ``rows_in`` is observed on ``todo`` as
-    given, after any shuffle: AQE swaps a shuffle stage that produced
+    Observe → extract, each task tallying its partition → stage the
+    output → append the sidecar rows from the tallies with pyarrow →
+    publish the output → reconcile; the observe() counters and the
+    tallies fill on the staging write, the one Spark action.  ``extract`` takes the frame and a ``tally``
+    keyword (``extract_turns``'s).  ``rows_in`` is observed on ``todo``
+    as given, after any shuffle: AQE swaps a shuffle stage that produced
     no rows, observe() included, for an empty relation.  Returns the
     sidecar totals of the committed run (a blind retry re-reports the
     run it left intact), plus ``class_rows`` (rows per payload class
     that left extraction) and ``phase_s`` (wall seconds of the
-    extract+append and of the sidecar build+read-back); raises
-    RuntimeError when the totals differ from the rows or parse failures
-    that entered or left extraction."""
+    extract+stage and of the sidecar append, output publish and
+    read-back); raises
+    RuntimeError when the rows that entered extraction, the rows its
+    tasks counted and the rows in the committed files disagree, or the
+    parse failures observed and counted do."""
     t0 = time.perf_counter()
+    # one accumulator per call, emptied once read: PySpark's driver
+    # registry keeps every accumulator for the session's life
+    tally = todo.sparkSession.sparkContext.accumulator({}, LastWins())
     obs_in, obs_out = Observation("rows_in"), Observation("extract")
     extracted = extract(
-        todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in")))
+        todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in")),
+        tally=tally)
     extracted = extracted.observe(
         obs_out,
         F.count(F.lit(1)).alias("rows_out"),
@@ -83,23 +105,26 @@ def commit_run(todo: DataFrame, extract: Callable[[DataFrame], DataFrame],
         F.sum(F.col("empty_after_strip").cast("long")).alias("empty"),
         *(F.count_if(F.col("payload_class") == c).alias(f"class_{c}")
           for c in CLASSES))
-    out_table.append(extracted, run_id)
+    out_table.stage(extracted, run_id)
     observed = {**obs_in.get, **obs_out.get}
     class_rows = {c: observed.pop(f"class_{c}") or 0 for c in CLASSES}
+    counted, tally.value = tally.value, {}
     t1 = time.perf_counter()
 
-    side_table.append(build_sidecar(
-        out_table.read_snapshot(run_id, extracted.schema), run_id), run_id)
+    side_table.append(tally_sidecar(counted, run_id), run_id)
+    out_table.publish(run_id)
+    committed = out_table.committed_rows(run_id)
     stats = sidecar_totals(side_table, run_id)
     t2 = time.perf_counter()
-    if observed["rows_in"] and (
-            observed["rows_in"] != stats["rows_out"]
-            or (observed["parse_failures"] or 0) != stats["parse_failures"]):
+    rows_in = observed["rows_in"]
+    failures = observed["parse_failures"] or 0
+    if committed != stats["rows_out"] or (rows_in and (
+            rows_in != committed or failures != stats["parse_failures"])):
         raise RuntimeError(
-            f"run {run_id!r}: extraction observed "
-            f"{observed['rows_in']} rows in / {observed['parse_failures']} "
-            f"parse failures, committed output has {stats['rows_out']} / "
-            f"{stats['parse_failures']}")
+            f"run {run_id!r}: extraction observed {rows_in} rows in / "
+            f"{failures} parse failures, its tasks counted "
+            f"{stats['rows_out']} / {stats['parse_failures']}, the "
+            f"committed files hold {committed} / {rows_in} rows")
     stats["observed"] = observed
     stats["class_rows"] = class_rows
     stats["phase_s"] = {"extract_append": round(t1 - t0, 3),

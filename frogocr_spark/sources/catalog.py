@@ -10,9 +10,12 @@ parquet directory with identical *semantics* behind one interface
   snapshot-per-commit analog; FrogOCR's at-most-once fetch-then-delete —
   reference ``Source/Application.cpp:62-64,518-521`` — becomes
   exactly-once: checkpointed keys + idempotent writes, SURVEY §2.8 T6).
+  ``stage(df, run_id)`` then ``publish(run_id)`` are its two halves, for
+  a caller that commits something else between them.
 - ``read()``              — full table scan.
 - ``snapshots()`` / ``read_snapshot(run_id)`` — committed run_ids / one
-  run's rows.
+  run's rows; ``committed_rows(run_id)`` — its row count from the
+  parquet footers (no Spark job).
 - ``processed_keys()``    — the committed key set used by the resume
   anti-join (output-exists skip F1 — reference
   ``Source/TaskProcessor.cpp:191-209``).
@@ -25,8 +28,18 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+
+def footer_rows(run_dir: str) -> int:
+    """Rows in the parquet files under ``run_dir`` (0 when it is absent),
+    summed from their footers: no data is read and no Spark job runs."""
+    return sum(pq.read_metadata(os.path.join(root, f)).num_rows
+               for root, _dirs, files in os.walk(run_dir) for f in files
+               if f.endswith(".parquet") and not f.startswith((".", "_")))
 
 
 class Table:
@@ -45,21 +58,47 @@ class Table:
                 return True
         return False
 
-    def append(self, df: DataFrame, run_id: str) -> None:
+    def append(self, df: DataFrame | pa.Table, run_id: str) -> None:
         """Idempotent append: one directory per run_id; re-running a failed
-        run_id replaces only that run's files.  Replace, not add: the
+        run_id replaces only that run's files.  ``df`` is a Spark
+        DataFrame, or a ``pa.Table`` written by pyarrow as one part file
+        (a few driver-built rows need no Spark job).  Replace, not add: the
         rows staged under a run_id become the whole run (a stream's
         replayed epoch relies on this), so ``plans.pipeline.
         run_extraction`` refuses a resumed rerun of a committed run_id
-        that finds new rows.
+        that finds new rows.  :meth:`stage` then :meth:`publish`; a caller
+        that must act between the write and the publish calls the two
+        itself."""
+        self.stage(df, run_id)
+        self.publish(run_id)
 
-        Staged publish: the write lands in a staging dir; the committed
-        run dir is renamed aside, the staging dir renamed into its place,
-        then the set-aside dir deleted (or by the next append of the
-        run_id, after a crash).  Readers see the old run, the new run or
-        no run (resume re-extracts it), never part of one.  The publish
-        is skipped when the staging result is empty and a committed run
-        dir already exists.  That case is a blind retry of
+    def _staging(self, run_id: str) -> str:
+        # staged and set-aside dirs live OUTSIDE data_dir: read() is a
+        # recursive lookup and must never see half-written/deleted files
+        return os.path.join(self.path, f".staging-run_id={run_id}")
+
+    def stage(self, df: DataFrame | pa.Table, run_id: str) -> None:
+        """Write ``df`` as run ``run_id``'s next version into a staging
+        dir that no reader sees (any earlier staged write is dropped)."""
+        import shutil
+
+        staging = self._staging(run_id)
+        shutil.rmtree(staging, ignore_errors=True)
+        if isinstance(df, pa.Table):
+            os.makedirs(staging)
+            pq.write_table(df, os.path.join(staging, "part-00000.parquet"))
+        else:
+            df.write.mode("overwrite").parquet(staging)
+
+    def publish(self, run_id: str) -> None:
+        """Make the staged write of run ``run_id`` the committed run.
+
+        The committed run dir is renamed aside, the staging dir renamed
+        into its place, then the set-aside dir deleted (or by the next
+        publish of the run_id, after a crash).  Readers see the old run,
+        the new run or no run (resume re-extracts it), never part of one.
+        The publish is skipped when the staged result is empty and a
+        committed run dir already exists.  That case is a blind retry of
         an already-COMPLETED run (the resume anti-join filtered everything
         out); clobbering the committed output with the empty result would
         lose the run's data (found by a retry probe — the pre-staging
@@ -67,24 +106,14 @@ class Table:
         dir still publishes (a legitimately-empty run is recorded)."""
         import shutil
 
-        import pyarrow.parquet as pq
-
         out = os.path.join(self.data_dir, f"run_id={run_id}")
-        # staged and set-aside dirs live OUTSIDE data_dir: read() is a
-        # recursive lookup and must never see half-written/deleted files
-        staging = os.path.join(self.path, f".staging-run_id={run_id}")
+        staging = self._staging(run_id)
         replaced = os.path.join(self.path, f".replaced-run_id={run_id}")
-        shutil.rmtree(staging, ignore_errors=True)
         shutil.rmtree(replaced, ignore_errors=True)
-        df.write.mode("overwrite").parquet(staging)
         # footer row counts, no Spark job: an empty DataFrame writes one
         # schema-only part file, and a corrupt footer raises here instead
         # of passing for empty (which would discard real new rows)
-        has_rows = sum(
-            pq.read_metadata(os.path.join(staging, f)).num_rows
-            for f in os.listdir(staging)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))) > 0
-        if has_rows or not os.path.isdir(out):
+        if footer_rows(staging) or not os.path.isdir(out):
             os.makedirs(self.data_dir, exist_ok=True)
             if os.path.isdir(out):
                 os.replace(out, replaced)
@@ -92,6 +121,11 @@ class Table:
             shutil.rmtree(replaced, ignore_errors=True)
         else:
             shutil.rmtree(staging, ignore_errors=True)
+
+    def committed_rows(self, run_id: str) -> int:
+        """Rows in committed run ``run_id`` (0 if absent), from its parquet
+        footers: no Spark job."""
+        return footer_rows(os.path.join(self.data_dir, f"run_id={run_id}"))
 
     def _run_dirs(self) -> list[str]:
         """Live run-dir names, superseded-by-compaction dirs excluded.
@@ -360,10 +394,11 @@ class BucketedTable:
     ``(conv_id, turn_idx)`` are a superset of the bucket key — hash
     co-location on ``conv_id`` alone already co-locates every join key.
 
-    Uses ``saveAsTable``/``insertInto`` (bucket metadata lives in the
-    session catalog); run_id idempotency via dynamic partition overwrite
-    on the ``run_id`` partition column, same semantics as
-    :class:`Table.append`.
+    Writes with ``saveAsTable`` (bucket metadata lives in the session
+    catalog) into a staging dir, then publishes by renaming the
+    ``run_id`` partition dir into place: the same staged, idempotent
+    semantics as :class:`Table.append`, split the same way into
+    :meth:`stage` and :meth:`publish`.
     """
 
     def __init__(self, spark: SparkSession, name: str, *,
@@ -410,21 +445,65 @@ class BucketedTable:
 
     def append(self, df: DataFrame, run_id: str) -> None:
         """Idempotent append: re-running a failed run_id replaces only that
-        run's partition (dynamic overwrite), never duplicating rows."""
+        run's partition, never duplicating rows; :meth:`stage` then
+        :meth:`publish`, like :meth:`Table.append`."""
+        self.stage(df, run_id)
+        self.publish(run_id)
+
+    def _aside(self, kind: str, run_id: str) -> str:
+        """The staging or set-aside dir of ``run_id``: beside the table's
+        location, never inside it."""
+        return os.path.join(os.path.dirname(self._location()),
+                            f".{kind}-{self.name.lower()}-run_id={run_id}")
+
+    def stage(self, df: DataFrame, run_id: str) -> None:
+        """Write ``df`` as run ``run_id``'s bucketed files into a staging
+        dir outside the table (the bucket layout needs ``saveAsTable``, so
+        under a throwaway external table, dropped at once).  The first
+        stage also creates the table, empty, with the staged bucket
+        spec."""
+        import shutil
+
         from pyspark.sql import functions as F
 
-        stamped = df.withColumn("run_id", F.lit(run_id))
+        staging, tmp = self._aside("staging", run_id), f"{self.name}__staging"
+        shutil.rmtree(staging, ignore_errors=True)
+        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
+        (df.withColumn("run_id", F.lit(run_id)).write.partitionBy("run_id")
+         .bucketBy(self.buckets, self.bucket_col).sortBy(*self.sort_cols)
+         .option("path", staging).saveAsTable(tmp))
         if not self.exists():
-            (stamped.write.partitionBy("run_id")
-             .bucketBy(self.buckets, self.bucket_col)
-             .sortBy(*self.sort_cols)
-             .mode("overwrite").saveAsTable(self.name))
-            return
-        with _conf(self.spark, "spark.sql.sources.partitionOverwriteMode",
-                   "dynamic"):
-            # insertInto is position-based; match the table's column order
-            cols = self.spark.table(self.name).columns
-            stamped.select(*cols).write.insertInto(self.name, overwrite=True)
+            self.spark.sql(f"CREATE TABLE {self.name} LIKE {tmp}")
+        self.spark.sql(f"DROP TABLE {tmp}")   # external: the files stay
+
+    def publish(self, run_id: str) -> None:
+        """Move the staged partition of run ``run_id`` into the table: the
+        committed partition dir is renamed aside, the staged one renamed
+        into its place, then the set-aside dir deleted, as in
+        :meth:`Table.publish`.  An empty staged write writes no partition
+        dir and publishes nothing (a blind retry keeps the committed
+        run)."""
+        import shutil
+
+        staging = self._aside("staging", run_id)
+        staged = os.path.join(staging, f"run_id={run_id}")
+        out = os.path.join(self._location(), f"run_id={run_id}")
+        replaced = self._aside("replaced", run_id)
+        shutil.rmtree(replaced, ignore_errors=True)
+        if footer_rows(staged):
+            if os.path.isdir(out):
+                os.replace(out, replaced)
+            os.replace(staged, out)
+            self.spark.sql(f"ALTER TABLE {self.name} ADD IF NOT EXISTS "
+                           f"PARTITION (run_id = '{run_id}')")
+            self.spark.sql(f"REFRESH TABLE {self.name}")
+            shutil.rmtree(replaced, ignore_errors=True)
+        shutil.rmtree(staging, ignore_errors=True)
+
+    def committed_rows(self, run_id: str) -> int:
+        """Rows in committed run ``run_id`` (0 if absent), from the parquet
+        footers of its partition dir, like :meth:`Table.committed_rows`."""
+        return footer_rows(os.path.join(self._location(), f"run_id={run_id}"))
 
     def read(self) -> DataFrame:
         return self.spark.table(self.name)
@@ -450,20 +529,3 @@ class BucketedTable:
         if not self.exists():
             return None
         return self.read().select(*key_cols)
-
-
-class _conf:
-    """Scoped SQL-conf override (restores the previous value on exit)."""
-
-    def __init__(self, spark: SparkSession, key: str, value: str):
-        self.spark, self.key, self.value = spark, key, value
-
-    def __enter__(self):
-        self.old = self.spark.conf.get(self.key, None)
-        self.spark.conf.set(self.key, self.value)
-
-    def __exit__(self, *exc):
-        if self.old is None:
-            self.spark.conf.unset(self.key)
-        else:
-            self.spark.conf.set(self.key, self.old)

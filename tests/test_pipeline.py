@@ -1,6 +1,7 @@
 """End-to-end Spark pipeline: oracle parity, determinism under
-repartitioning, resume exactly-once, skew, sidecar reconciliation
-(FIXTURES.md §5 invariants 1, 2, 5, 6)."""
+repartitioning, resume exactly-once, skew, sidecar reconciliation from
+the extraction tasks' tallies, Spark jobs per run (FIXTURES.md §5
+invariants 1, 2, 5, 6)."""
 
 from concurrent.futures import ThreadPoolExecutor
 
@@ -8,12 +9,13 @@ import pytest
 
 from frogocr_spark.core.extract import extract_turn
 from frogocr_spark.core.sniff import CLASSES
-from frogocr_spark.operators.extraction import extract_turns
+from frogocr_spark.operators.extraction import LastWins, extract_turns
 from frogocr_spark.operators.resume import filter_unprocessed
 from frogocr_spark.operators.skew import salted_repartition
 from frogocr_spark.plans import pipeline
 from frogocr_spark.plans.metrics import TOTALS
-from frogocr_spark.plans.pipeline import PipelineConfig, run_extraction
+from frogocr_spark.plans.pipeline import (PipelineConfig, commit_run,
+                                          run_extraction)
 from frogocr_spark.sources import payloadgen, transcripts
 from frogocr_spark.sources.catalog import BucketedTable, Table
 
@@ -90,9 +92,14 @@ def test_pipeline_end_to_end_with_sidecar(spark, tdf, oracle, tmp_path):
     assert len(got) == len(oracle)
     for k, rec in oracle.items():
         assert got[k].extracted_text == rec["extracted_text"]
-    # sidecar reconciliation (invariant 6)
+    # sidecar reconciliation (invariant 6): one row per partition the
+    # tasks counted, summing to the rows that entered extraction
     side = Table(spark, str(tmp_path / "metrics")).read().collect()
+    assert sorted(r.partition_id for r in side) == sorted(
+        {r.partition_id for r in out.select("partition_id").collect()})
+    assert sum(r.rows_in for r in side) == stats["observed"]["rows_in"]
     assert sum(r.rows_out for r in side) == len(oracle)
+    assert all(r.python_cpu_s > 0 for r in side)
     n_failures = sum(1 for rec in oracle.values() if rec["parse_failed"])
     assert sum(r.parse_failures for r in side) == n_failures
     n_empty = sum(1 for rec in oracle.values() if rec["empty_after_strip"])
@@ -175,13 +182,22 @@ def test_blind_retry_of_completed_run_keeps_data(spark, tmp_path):
 
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="rr", salt_buckets=0)
     df = tgen.generate(spark, 15)
-    run_extraction(spark, df, cfg)
     t = Table(spark, os.path.join(str(tmp_path), "extractions"))
+    side_dir = os.path.join(str(tmp_path), "metrics", "data", "run_id=rr")
+
+    def side_files():
+        return {f: os.stat(os.path.join(side_dir, f)).st_mtime_ns
+                for f in os.listdir(side_dir)}
+
+    first, before = run_extraction(spark, df, cfg), side_files()
     n = t.read().count()
     assert n == df.count()
     stats = run_extraction(spark, df, cfg)   # blind retry, same run_id
     assert t.read().count() == n             # data survived
     assert (stats["observed"]["rows_out"] or 0) == 0   # nothing re-ran
+    # the sidecar is left as it was and its totals re-reported
+    assert side_files() == before
+    assert {k: stats[k] for k in TOTALS} == {k: first[k] for k in TOTALS}
     # staging dir cleaned up
     assert not [d for d in os.listdir(os.path.join(str(tmp_path),
                                                    "extractions"))
@@ -195,14 +211,14 @@ def test_reconciliation_mismatch_raises(spark, tdf, tmp_path, monkeypatch):
     strips."""
     from pyspark.sql import functions as F
 
-    append = Table.append
+    stage = Table.stage
 
-    def lossy_append(self, df, run_id):
+    def lossy_stage(self, df, run_id):
         if self.path.endswith("extractions"):
             df = df.where(F.col("turn_idx") != 3)
-        append(self, df, run_id)
+        stage(self, df, run_id)
 
-    monkeypatch.setattr(Table, "append", lossy_append)
+    monkeypatch.setattr(Table, "stage", lossy_stage)
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
                          salt_buckets=0)
     n = tdf.count()
@@ -223,7 +239,7 @@ def test_extraction_row_loss_raises_through_rows_in(spark, tdf, tmp_path,
     extract = pipeline.extract_turns
     monkeypatch.setattr(
         pipeline, "extract_turns",
-        lambda df: extract(df).where(F.col("turn_idx") != 3))
+        lambda df, **kw: extract(df, **kw).where(F.col("turn_idx") != 3))
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
                          num_partitions=4)
     n = tdf.count()
@@ -231,6 +247,123 @@ def test_extraction_row_loss_raises_through_rows_in(spark, tdf, tmp_path,
     assert lost > 0
     with pytest.raises(RuntimeError, match=f"{n} rows in.*{n - lost} /"):
         run_extraction(spark, tdf, cfg)
+
+
+def test_last_wins_merge_counts_a_partition_once(spark):
+    """A partition's entry added twice (a re-executed task) counts
+    once.  A real task failure cannot be injected: the shared local
+    session runs with spark.task.maxFailures=1."""
+    acc = spark.sparkContext.accumulator({}, LastWins())
+    for pid in (3, 3, 4):
+        acc.add({pid: {"rows_in": 5, "rows_out": 5}})
+    assert acc.value == {p: {"rows_in": 5, "rows_out": 5} for p in (3, 4)}
+
+
+def test_tally_is_exact_over_two_actions(spark, tdf, oracle):
+    """One extracted frame run by two actions with one tally: every
+    partition's second entry replaces its first, so the counts match
+    the rows once, not twice.  The salted shuffle sorts each partition
+    by conv_id, so its conv_id runs are its distinct conv_ids."""
+    acc = spark.sparkContext.accumulator({}, LastWins())
+    out = extract_turns(salted_repartition(tdf, 4, salt_buckets=4),
+                        tally=acc)
+    out.write.format("noop").mode("overwrite").save()
+    rows = out.collect()
+    convs = {}
+    for r in rows:
+        convs.setdefault(r.partition_id, set()).add(r.conv_id)
+    assert {p: e["n_convs_approx"] for p, e in acc.value.items()} == {
+        p: len(c) for p, c in convs.items()}
+
+    def total(col):
+        return sum(e[col] for e in acc.value.values())
+
+    assert total("rows_in") == total("rows_out") == len(oracle)
+    assert total("parse_failures") == sum(
+        rec["parse_failed"] for rec in oracle.values())
+    assert total("empty_after_strip") == sum(
+        rec["empty_after_strip"] for rec in oracle.values())
+    assert total("confidence_sum") == pytest.approx(
+        sum(rec["confidence"] for rec in oracle.values()))
+    assert all(e["python_cpu_s"] > 0 for e in acc.value.values())
+
+
+def test_partition_with_no_rows_writes_no_sidecar_row(spark, tdf, tmp_path):
+    """Three rows spread over eight partitions: only the three
+    partitions that held a row get a sidecar row."""
+    out = Table(spark, str(tmp_path / "extractions"))
+    side = Table(spark, str(tmp_path / "metrics"))
+    stats = commit_run(tdf.limit(3).repartition(8), extract_turns, "r1",
+                       out, side)
+    assert stats["rows_out"] == stats["observed"]["rows_in"] == 3
+    pids = {r.partition_id for r in out.read().collect()}
+    rows = side.read().collect()
+    assert len(pids) == 3
+    assert sorted(r.partition_id for r in rows) == sorted(pids)
+    assert all(r.rows_in == 1 for r in rows)
+
+
+def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
+    """A fresh run is two Spark jobs, the salted shuffle and the output
+    write; nothing after the output write runs one.  A new hidden job
+    (a schema inference, a read-back) fails this test."""
+    sc = spark.sparkContext
+    group = "test-fresh-run-jobs"
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    after_output = []
+    stage = Table.stage
+
+    def counting_stage(self, df, run_id):
+        stage(self, df, run_id)
+        if self.path.endswith("extractions"):
+            after_output.append(jobs())
+
+    monkeypatch.setattr(Table, "stage", counting_stage)
+    tdf = transcripts.generate(spark, 500)
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        stats = run_extraction(spark, tdf, PipelineConfig(
+            output_dir=str(tmp_path), run_id="r1"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert stats["rows_out"] == stats["observed"]["rows_in"] > 0
+    assert after_output == [2]
+    assert jobs() == 2
+
+
+def test_crash_between_publishes_then_retry_commits_the_run(
+        spark, tdf, tmp_path, monkeypatch):
+    """The output publish raises after the sidecar is published; the
+    retry finds the run's turns unprocessed, extracts them again and
+    replaces the sidecar, so the run ends with its output and one
+    sidecar whose totals equal it."""
+    publish = Table.publish
+
+    def crashing_publish(self, run_id):
+        if self.path.endswith("extractions"):
+            raise OSError("killed before the output publish")
+        publish(self, run_id)
+
+    cfg = PipelineConfig(output_dir=str(tmp_path), run_id="r1",
+                         salt_buckets=0)
+    with monkeypatch.context() as m:
+        m.setattr(Table, "publish", crashing_publish)
+        with pytest.raises(OSError, match="output publish"):
+            run_extraction(spark, tdf, cfg)
+    out = Table(spark, str(tmp_path / "extractions"))
+    side = Table(spark, str(tmp_path / "metrics"))
+    assert (out.snapshots(), side.snapshots()) == ([], ["r1"])
+
+    stats = run_extraction(spark, tdf, cfg)
+    n = tdf.count()
+    assert stats["observed"]["rows_in"] == n
+    assert (out.snapshots(), side.snapshots()) == (["r1"], ["r1"])
+    assert stats["rows_in"] == stats["rows_out"] == out.read().count() == n
+    assert sum(r.rows_out for r in side.read().collect()) == n
 
 
 @pytest.mark.parametrize("bucketed", [False, True], ids=["parquet",

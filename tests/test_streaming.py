@@ -51,7 +51,8 @@ def test_checkpoint_no_reprocessing(spark, tmp_path):
 def test_drain_writes_one_sidecar_per_epoch(spark, tmp_path):
     """Every non-empty epoch is committed with its own sidecar run,
     whose totals add up to the input; committing the same epoch again
-    replaces its output and sidecar instead of adding to them."""
+    replaces its output and sidecar instead of adding to them, and
+    leaves the totals as they were."""
     input_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
     tdf = transcripts.generate(spark, 12)
@@ -84,5 +85,7 @@ def test_drain_writes_one_sidecar_per_epoch(spark, tmp_path):
         assert stats["observed"]["rows_in"] == first["rows_out"]
     assert side.snapshots() == sorted(epochs)
     assert sidecar_totals(side, epochs[0]) == first
+    # each epoch's sidecar comes from its tasks' own counts
+    assert all(r.python_cpu_s > 0 for r in side.read().collect())
     keys = out.read().select("conv_id", "turn_idx")
     assert keys.count() == keys.distinct().count() == n
