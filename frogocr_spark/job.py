@@ -19,6 +19,28 @@ spark.eventLog.dir=<dir>`` (add ``--conf spark.eventLog.compress=false``
 for plain JSON lines), or the same ``--conf`` flags followed by
 ``pyspark-shell`` in ``PYSPARK_SUBMIT_ARGS`` for ``python -m``.
 
+Python profiles of the extraction body (``extract_batch`` and its
+per-class scanners: cProfile per ``mapInArrow`` UDF, summed over tasks)
+are Spark's ``--conf spark.sql.pyspark.udf.profiler=perf`` too.  The
+profiles stay in the driver's session until ``spark.profile.show()`` or
+``dump()`` is called, which this module does not do, so run the pipeline
+from a Python driver with ``PYSPARK_SUBMIT_ARGS="--conf
+spark.sql.pyspark.udf.profiler=perf pyspark-shell"`` set, from the
+checkout root (the local workers import the package from there;
+elsewhere set ``PYTHONPATH``)::
+
+    from frogocr_spark.session import get_spark
+    from frogocr_spark.plans.pipeline import PipelineConfig, run_extraction
+    from frogocr_spark.sources import transcripts
+
+    spark = get_spark(app_name="profile")
+    run_extraction(spark, transcripts.generate(spark, 300),
+                   PipelineConfig(output_dir="/tmp/prof_out", run_id="p1"))
+    spark.profile.dump("/tmp/prof", type="perf")
+
+``dump`` writes one ``udf_<id>_perf.pstats`` per UDF (``pstats`` reads
+it); the extraction's is the one that lists ``extract_batch``.
+
 The pipeline itself is in plans.pipeline — this module is only argument
 parsing + session setup, so the same code path runs under spark-submit on
 a real cluster and under pytest locally (the reference's equivalent is the

@@ -41,36 +41,3 @@ def rebuild_tables(df: DataFrame, *, tags_col: str = "tags",
     return df.withColumn(out_col, rebuild(F.col(tags_col), F.col(cells_col),
                                           F.col(ocr_col)))
 
-
-def upsert(target: DataFrame, source: DataFrame,
-           key_cols: list[str]) -> DataFrame:
-    """MERGE INTO … WHEN MATCHED THEN UPDATE, WHEN NOT MATCHED THEN
-    INSERT — the relational upsert as a DataFrame combinator: target
-    rows whose key matches a source row are REPLACED by the source row,
-    unmatched target rows are kept, unmatched source rows are inserted.
-    Assumes ``source`` has at most one row per key (the MERGE
-    cardinality precondition; a duplicate-key source makes real MERGE
-    raise, here it would fan the anti-join's complement out).
-
-    Scale shape: ONE left-anti equi-join on the keys + a union —
-    Catalyst/AQE picks broadcast-anti automatically when the source
-    (typically a small CDC batch vs a huge table) fits the threshold;
-    neither input needs a pre-sort or global shuffle beyond the join
-    keys.  The snapshot-publishing twin that makes this durable is
-    ``sources/catalog.Table.merge``.
-
-    NULL keys under three-valued logic (VERDICT r4 #4): the match
-    condition is the join's null-UNSAFE equality — exactly SQL
-    ``MERGE … ON t.k = s.k``, where ``NULL = NULL`` is NULL, never
-    TRUE.  So a NULL-keyed target row is never "matched" (kept as-is),
-    a NULL-keyed source row is never a match either (inserted as new),
-    and when both exist BOTH survive.  This matters on schema-evolved
-    tables, where every pre-evolution row holds NULL in an evolved key
-    column: merging on such a key UPDATES nothing pre-evolution — it
-    only inserts (pinned in tests/test_catalog.py).  Merging on keys
-    with NULLs is almost always a modeling error; use a null-safe
-    surrogate (e.g. ``coalesce(k, sentinel)``) if NULL is a real key
-    value."""
-    matched_keys = source.select(*key_cols)
-    kept = target.join(matched_keys, key_cols, "left_anti")
-    return kept.unionByName(source)

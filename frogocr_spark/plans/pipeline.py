@@ -19,8 +19,8 @@ The sidecar is published before the output, so a committed run always
 has its sidecar: a crash between the two publishes leaves a sidecar
 without output, and the retry's resume finds the run's turns
 unprocessed, re-extracts them and replaces that sidecar.  A blind retry
-of a completed run counts nothing and stages nothing, so both publishes
-keep what is committed and the run's totals are re-reported.
+of a completed run stops after the resume check: nothing is extracted,
+staged or published, and the run's committed totals are re-reported.
 
 The stream's ``foreachBatch`` calls the same ``commit_run`` per epoch
 with ``run_id=epoch_<N>`` — the reference's one scheduler loop for
@@ -78,15 +78,14 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
     Observe → extract, each task tallying its partition → stage the
     output → append the sidecar rows from the tallies with pyarrow →
     publish the output → reconcile; the observe() counters and the
-    tallies fill on the staging write, the one Spark action.  ``extract`` takes the frame and a ``tally``
-    keyword (``extract_turns``'s).  ``rows_in`` is observed on ``todo``
-    as given, after any shuffle: AQE swaps a shuffle stage that produced
-    no rows, observe() included, for an empty relation.  Returns the
-    sidecar totals of the committed run (a blind retry re-reports the
-    run it left intact), plus ``class_rows`` (rows per payload class
-    that left extraction) and ``phase_s`` (wall seconds of the
-    extract+stage and of the sidecar append, output publish and
-    read-back); raises
+    tallies fill on the staging write, the one Spark action.  ``extract``
+    takes the frame and a ``tally`` keyword (``extract_turns``'s).
+    ``rows_in`` is observed on ``todo`` as given, after any shuffle: AQE
+    swaps a shuffle stage that produced no rows, observe() included, for
+    an empty relation.  Returns the sidecar totals of the committed run,
+    plus ``class_rows`` (rows per payload class that left extraction)
+    and ``phase_s`` (wall seconds of the extract+stage, and of the
+    sidecar append and output publish); raises
     RuntimeError when the rows that entered extraction, the rows its
     tasks counted and the rows in the committed files disagree, or the
     parse failures observed and counted do."""
@@ -113,9 +112,21 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
 
     side_table.append(tally_sidecar(counted, run_id), run_id)
     out_table.publish(run_id)
+    t2 = time.perf_counter()
+    return _reconciled(run_id, out_table, side_table, observed, class_rows,
+                       {"extract_append": round(t1 - t0, 3),
+                        "sidecar": round(t2 - t1, 3)})
+
+
+def _reconciled(run_id: str, out_table: Table | BucketedTable,
+                side_table: Table, observed: dict, class_rows: dict,
+                phase_s: dict) -> dict:
+    """The sidecar totals of committed run ``run_id`` with ``observed``,
+    ``class_rows`` and ``phase_s`` added, once the totals agree with the
+    rows in the run's committed files and with ``observed`` (no Spark
+    job)."""
     committed = out_table.committed_rows(run_id)
     stats = sidecar_totals(side_table, run_id)
-    t2 = time.perf_counter()
     rows_in = observed["rows_in"]
     failures = observed["parse_failures"] or 0
     if committed != stats["rows_out"] or (rows_in and (
@@ -125,11 +136,8 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
             f"{failures} parse failures, its tasks counted "
             f"{stats['rows_out']} / {stats['parse_failures']}, the "
             f"committed files hold {committed} / {rows_in} rows")
-    stats["observed"] = observed
-    stats["class_rows"] = class_rows
-    stats["phase_s"] = {"extract_append": round(t1 - t0, 3),
-                        "sidecar": round(t2 - t1, 3)}
-    return stats
+    return {**stats, "observed": observed, "class_rows": class_rows,
+            "phase_s": phase_s}
 
 
 def run_extraction(spark: SparkSession, transcripts: DataFrame,
@@ -142,7 +150,9 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     With resume on, a rerun under an already-committed ``run_id`` that
     still finds new rows raises ValueError before writing anything: the
     append replaces a run, so it would drop the rows committed before.
-    A blind retry that finds nothing new stays a no-op."""
+    A blind retry that finds nothing new extracts and writes nothing: it
+    removes the run's crash leftovers and re-reports its committed
+    totals, with zero counts observed."""
     if cfg.bucketed_table:
         out_table = BucketedTable(spark, cfg.bucketed_table,
                                   buckets=cfg.buckets)
@@ -155,11 +165,24 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     if cfg.resume:
         todo = filter_unprocessed(
             todo, out_table.processed_keys("conv_id", "turn_idx"))
-        if cfg.run_id in out_table.snapshots() and not todo.isEmpty():
-            raise ValueError(
-                f"run {cfg.run_id!r} is already committed and the input "
-                f"has turns it does not hold; rerunning it would replace "
-                f"its rows with only the new ones. Pass a new --run-id.")
+        if cfg.run_id in out_table.snapshots():
+            if not todo.isEmpty():
+                raise ValueError(
+                    f"run {cfg.run_id!r} is already committed and the "
+                    f"input has turns it does not hold; rerunning it would "
+                    f"replace its rows with only the new ones. Pass a new "
+                    f"--run-id.")
+            # nothing is staged: a publish only removes the dirs a crash
+            # in an earlier publish of this run left beside the tables
+            out_table.publish(cfg.run_id)
+            side_table.publish(cfg.run_id)
+            return _reconciled(
+                cfg.run_id, out_table, side_table,
+                {"rows_in": 0, "rows_out": 0, "parse_failures": None,
+                 "empty": None},
+                dict.fromkeys(CLASSES, 0),
+                {"resume_check": round(time.perf_counter() - t0, 3),
+                 "extract_append": 0.0, "sidecar": 0.0})
     resume_s = time.perf_counter() - t0
 
     # salt_buckets=0 → map-only plan (zero shuffles): correct whenever the

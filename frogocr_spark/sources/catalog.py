@@ -1,4 +1,4 @@
-"""Table IO: Iceberg when available, parquet + manifest otherwise.
+"""Table IO: Iceberg when available, parquet run directories otherwise.
 
 The sandbox image has no Iceberg runtime jar, so the default backend is a
 parquet directory with identical *semantics* behind one interface
@@ -11,7 +11,10 @@ parquet directory with identical *semantics* behind one interface
   reference ``Source/Application.cpp:62-64,518-521`` — becomes
   exactly-once: checkpointed keys + idempotent writes, SURVEY §2.8 T6).
   ``stage(df, run_id)`` then ``publish(run_id)`` are its two halves, for
-  a caller that commits something else between them.
+  a caller that commits something else between them.  A crash in
+  either leaves the run's ``.staging-``/``.replaced-`` dirs beside
+  ``data/``, where no reader looks; rerunning the same run_id removes
+  them.
 - ``read()``              — full table scan.
 - ``snapshots()`` / ``read_snapshot(run_id)`` — committed run_ids / one
   run's rows; ``committed_rows(run_id)`` — its row count from the
@@ -31,7 +34,6 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 
 def footer_rows(run_dir: str) -> int:
@@ -102,8 +104,10 @@ class Table:
         an already-COMPLETED run (the resume anti-join filtered everything
         out); clobbering the committed output with the empty result would
         lose the run's data (found by a retry probe — the pre-staging
-        implementation did exactly that).  An empty result with no prior
-        dir still publishes (a legitimately-empty run is recorded)."""
+        implementation did exactly that); with nothing staged at all, the
+        publish only removes the run's leftover staged and set-aside
+        dirs.  An empty result with no prior dir still publishes (a
+        legitimately-empty run is recorded)."""
         import shutil
 
         out = os.path.join(self.data_dir, f"run_id={run_id}")
@@ -128,244 +132,30 @@ class Table:
         return footer_rows(os.path.join(self.data_dir, f"run_id={run_id}"))
 
     def _run_dirs(self) -> list[str]:
-        """Live run-dir names, superseded-by-compaction dirs excluded.
-
-        A compacted snapshot carries a ``_COMPACTED_FROM`` manifest (the
-        run dirs it rewrote — the scaled-down Iceberg metadata pointer);
-        any dir named there is DEAD even while still on disk, so the
-        crash window between publishing the compacted snapshot and
-        deleting its sources never shows duplicate rows (readers honor
-        the manifest, :meth:`vacuum` finishes the cleanup)."""
+        """Committed run-dir names, sorted."""
         if not os.path.isdir(self.data_dir):
             return []
-        dirs = [n for n in sorted(os.listdir(self.data_dir))
+        return [n for n in sorted(os.listdir(self.data_dir))
                 if n.startswith("run_id=")]
-        dead: set[str] = set()
-        for n in dirs:
-            m = os.path.join(self.data_dir, n, "_COMPACTED_FROM")
-            if os.path.exists(m):
-                with open(m) as fh:
-                    dead.update(fh.read().split())
-        return [n for n in dirs if n not in dead]
 
-    def read(self, merge_schema: bool = False) -> DataFrame:
-        """Read the live table.  ``merge_schema=True`` reconciles
-        snapshots written under EVOLVED schemas (name-based, add-only —
-        the Hive/parquet evolution model: a column added in a later
-        snapshot reads as NULL from earlier ones; renames/drops are NOT
-        supported, they need Iceberg's field ids, see BucketedTable's
-        design note).  Off by default: schema merging reads every
-        file footer up front, a real cost on a 100 TB table — callers
-        that know the schema is homogeneous skip it."""
-        # explicit live-dir paths keep the run_id partition column out of
-        # the schema AND exclude compaction-superseded dirs
+    def read(self) -> DataFrame:
+        """Read every committed run."""
+        # explicit run-dir paths keep the run_id partition column out of
+        # the schema
         paths = [os.path.join(self.data_dir, n) for n in self._run_dirs()]
         return (self.spark.read
                 .option("recursiveFileLookup", "true")
-                .option("mergeSchema", "true" if merge_schema else "false")
                 .parquet(*paths))
 
     def snapshots(self) -> list[str]:
         """Committed run_ids (the Iceberg snapshot-log analog), sorted.
-        A run_id directory is a snapshot: present ⇔ its job committed
-        (compaction-superseded dirs excluded)."""
+        A run_id directory is a snapshot: present ⇔ its job committed."""
         return [n.split("=", 1)[1] for n in self._run_dirs()]
 
-    def compact(self, compact_id: str | None = None,
-                num_files: int | None = None) -> str | None:
-        """Full-table file compaction (the small-file maintenance op:
-        streaming/incremental appends leave one dir of small files per
-        run_id; compaction rewrites them as ONE snapshot — the
-        scaled-down ``rewrite_data_files`` of a real Iceberg catalog,
-        which at 100 TB would rewrite incrementally per partition).
-
-        Crash-safe two-phase protocol on the rename primitive:
-
-        1. the union of all live snapshots is written to a staging dir
-           together with a ``_COMPACTED_FROM`` manifest naming them;
-        2. one atomic ``os.replace`` publishes the compacted snapshot —
-           from this instant readers exclude the superseded dirs via
-           the manifest (:meth:`_run_dirs`), so duplicates are never
-           visible;
-        3. the superseded dirs are deleted (a crash here leaves dead
-           dirs that :meth:`vacuum` removes later).
-
-        Collapses time-travel granularity: the compacted snapshot
-        replaces its sources in the log.  Returns the new snapshot id,
-        or None when there is nothing to compact."""
-        live = self._run_dirs()
-        if len(live) <= 1:
-            return None
-        if compact_id is None:
-            compact_id = f"compact-{len(self.snapshots())}-{live[-1].split('=', 1)[1]}"
-        out = os.path.join(self.data_dir, f"run_id={compact_id}")
-        if os.path.isdir(out):
-            raise ValueError(f"snapshot {compact_id!r} already exists")
-        # merge_schema: a compaction that read one arbitrary footer's
-        # schema would silently DROP columns added by schema evolution
-        df = self.read(merge_schema=True)
-        if num_files:
-            df = df.coalesce(num_files)
-        # FIXED staging name (compaction is a single-writer maintenance
-        # op): a crash between the staged write and the publish leaves a
-        # dir the NEXT compact/vacuum reclaims — a pid-keyed name would
-        # leak a full-table copy per crashed attempt
-        self._publish_rewrite(df, compact_id, live, ".staging-compact")
-        return compact_id
-
-    def merge(self, source: DataFrame, key_cols: list[str],
-              merge_id: str | None = None) -> str:
-        """MERGE INTO (upsert) as a snapshot operation: the live table is
-        rewritten as ``(target ANTI-JOIN source keys) ∪ source`` —
-        matched rows replaced, unmatched kept, new rows inserted
-        (operators/tables.upsert is the pure-DataFrame combinator) —
-        and published with the SAME crash-safe two-phase protocol as
-        :meth:`compact`: staged write + ``_COMPACTED_FROM`` manifest
-        naming every superseded snapshot, one atomic ``os.replace`` to
-        publish (readers flip from old to new state at that instant —
-        no window showing both versions of a row), then source-dir
-        cleanup that :meth:`vacuum` finishes after a crash.  Returns the
-        new snapshot id.  Single-writer maintenance op (fixed staging
-        name), like compaction.  A real Iceberg MERGE rewrites only the
-        data files containing matches; this full-table rewrite is the
-        sandbox-scale analog — the protocol (manifest supersede + atomic
-        publish) is the part that transfers."""
-        from frogocr_spark.operators.tables import upsert
-
-        live = self._run_dirs()
-        if merge_id is None:
-            merge_id = f"merge-{self._next_version()}"
-        out = os.path.join(self.data_dir, f"run_id={merge_id}")
-        if os.path.isdir(out):
-            raise ValueError(f"snapshot {merge_id!r} already exists")
-        if not live:
-            self.append(source, merge_id)
-            return merge_id
-        merged = upsert(self.read(merge_schema=True), source, key_cols)
-        self._publish_rewrite(merged, merge_id, live, ".staging-merge")
-        return merge_id
-
-    def delete(self, predicate: str,
-               delete_id: str | None = None) -> str | None:
-        """DELETE WHERE as a snapshot operation (the third leg of the
-        DML triad: :meth:`append`, :meth:`merge`, delete): the live
-        table is rewritten WITHOUT the rows matching ``predicate`` (a
-        SQL boolean expression over the table's columns — e.g. the
-        GDPR/right-to-be-forgotten purge, the retention sweep) and
-        published with the same crash-safe two-phase manifest protocol.
-        Returns the new snapshot id, or None on an empty table.  A real
-        Iceberg DELETE rewrites only files containing matches (or
-        writes delete files); the full rewrite is the sandbox-scale
-        analog.  Deleting EVERY row leaves a data-less snapshot —
-        ``read()`` then raises exactly as on a never-written table.
-
-        SQL DELETE semantics under three-valued logic: only rows where
-        the predicate is TRUE are removed — rows where it evaluates
-        NULL are KEPT (``(predicate) IS NOT TRUE``, not
-        ``NOT (predicate)``, which silently deletes NULL rows).  This
-        matters on schema-evolved tables, where every pre-evolution row
-        has NULL in an evolved column (ADVICE r3)."""
-        live = self._run_dirs()
-        if not live:
-            return None
-        if delete_id is None:
-            delete_id = f"delete-{self._next_version()}"
-        out = os.path.join(self.data_dir, f"run_id={delete_id}")
-        if os.path.isdir(out):
-            raise ValueError(f"snapshot {delete_id!r} already exists")
-        remaining = (self.read(merge_schema=True)
-                     .where(f"({predicate}) IS NOT TRUE"))
-        self._publish_rewrite(remaining, delete_id, live,
-                              ".staging-delete")
-        return delete_id
-
-    def _next_version(self) -> int:
-        """Monotonic snapshot-version counter for auto-generated
-        merge/delete ids (ids derived from the LIVE snapshot count
-        repeat once a rewrite supersedes its sources — the counter
-        never reuses a number).  Reserved BEFORE the publish, so a
-        crash mid-operation skips a version rather than colliding.
-        Single-writer maintenance assumption, like the fixed staging
-        names."""
-        p = os.path.join(self.path, "_VERSION")
-        v = 0
-        if os.path.exists(p):
-            with open(p) as fh:
-                v = int(fh.read().strip() or 0)
-        v += 1
-        os.makedirs(self.path, exist_ok=True)
-        with open(p, "w") as fh:
-            fh.write(str(v))
-        return v
-
-    def _publish_rewrite(self, df: DataFrame, new_id: str,
-                         live: list[str], staging_name: str) -> None:
-        """Shared phase-1/2/3 of every full-table rewrite (compact,
-        merge, delete): staged write + ``_COMPACTED_FROM`` manifest naming the
-        superseded snapshots, one atomic publish, then source cleanup
-        (:meth:`vacuum` finishes it after a crash)."""
-        import shutil
-
-        staging = os.path.join(self.path, staging_name)
-        shutil.rmtree(staging, ignore_errors=True)
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, "_COMPACTED_FROM"), "w") as fh:
-            fh.write("\n".join(live))
-        os.makedirs(self.data_dir, exist_ok=True)
-        out = os.path.join(self.data_dir, f"run_id={new_id}")
-        os.replace(staging, out)        # publish: old state now dead
-        for n in live:
-            shutil.rmtree(os.path.join(self.data_dir, n),
-                          ignore_errors=True)
-
-    def vacuum(self) -> list[str]:
-        """Remove compaction-superseded run dirs still on disk (crash
-        recovery for the window between compaction phases 2 and 3), any
-        abandoned compaction/merge/delete staging dir (a crash during
-        phase 1), and the staged or set-aside dirs a crashed
-        :meth:`append` leaves (``.staging-run_id=<id>``,
-        ``.replaced-run_id=<id>``), which otherwise wait for an append of
-        the same run_id that may never come.  None of these is visible
-        to readers.  Single-writer assumption, like the fixed staging
-        names: vacuum must not run while an append or rewrite is in
-        flight, or it deletes that writer's staging dir.  Returns the
-        removed names."""
-        import shutil
-
-        if not os.path.isdir(self.path):
-            return []
-        removed = sorted(
-            n for n in os.listdir(self.path)
-            if n in (".staging-compact", ".staging-merge", ".staging-delete")
-            or n.startswith((".staging-run_id=", ".replaced-run_id=")))
-        for n in removed:
-            shutil.rmtree(os.path.join(self.path, n), ignore_errors=True)
-        if not os.path.isdir(self.data_dir):
-            return removed
-        on_disk = {n for n in os.listdir(self.data_dir)
-                   if n.startswith("run_id=")}
-        dead = sorted(on_disk - set(self._run_dirs()))
-        for n in dead:
-            shutil.rmtree(os.path.join(self.data_dir, n),
-                          ignore_errors=True)
-        return removed + dead
-
-    def read_snapshot(self, run_id: str,
-                      schema: StructType | None = None) -> DataFrame:
-        """Read one committed run's rows (snapshot-scoped scan); given the
-        schema it was written with, Spark runs no schema-inference job."""
-        return self.spark.read.load(
-            os.path.join(self.data_dir, f"run_id={run_id}"), "parquet", schema)
-
-    def read_until(self, run_id: str) -> DataFrame:
-        """Time travel: union of snapshots up to and including ``run_id``
-        (run_ids are ordered by the snapshot log)."""
-        snaps = self.snapshots()
-        if run_id not in snaps:
-            raise ValueError(f"unknown snapshot {run_id!r}; have {snaps}")
-        keep = snaps[: snaps.index(run_id) + 1]
-        paths = [os.path.join(self.data_dir, f"run_id={r}") for r in keep]
-        return self.spark.read.parquet(*paths)
+    def read_snapshot(self, run_id: str) -> DataFrame:
+        """Read one committed run's rows (snapshot-scoped scan)."""
+        return self.spark.read.parquet(
+            os.path.join(self.data_dir, f"run_id={run_id}"))
 
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
         """Committed keys for the F1 resume anti-join (column-pruned scan —
@@ -482,7 +272,8 @@ class BucketedTable:
         into its place, then the set-aside dir deleted, as in
         :meth:`Table.publish`.  An empty staged write writes no partition
         dir and publishes nothing (a blind retry keeps the committed
-        run)."""
+        run); nor does a publish with nothing staged, which only removes
+        the run's leftover dirs."""
         import shutil
 
         staging = self._aside("staging", run_id)
@@ -515,15 +306,6 @@ class BucketedTable:
             return []
         return [n.split("=", 1)[1] for n in sorted(os.listdir(loc))
                 if n.startswith("run_id=")]
-
-    def read_snapshot(self, run_id: str,
-                      schema: StructType | None = None) -> DataFrame:
-        """One committed run's rows, without the ``run_id`` column (the
-        catalog holds the schema; ``schema`` is unused)."""
-        from pyspark.sql import functions as F
-
-        return (self.read().where(F.col("run_id") == run_id)
-                .drop("run_id"))
 
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
         if not self.exists():

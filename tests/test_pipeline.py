@@ -335,6 +335,41 @@ def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
     assert jobs() == 2
 
 
+def test_blind_retry_runs_only_the_resume_check(spark, tmp_path):
+    """A blind retry of a committed run is three Spark jobs, all of them
+    the resume check's (the committed keys' schema read and the
+    anti-join's emptiness probe); no extraction or write follows.  It still removes the dirs a
+    crashed publish of the run left, and returns the committed totals in
+    the shape a fresh run reports."""
+    import os
+
+    sc = spark.sparkContext
+    group = "test-blind-retry-jobs"
+
+    def jobs():
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    tdf = transcripts.generate(spark, 500)
+    cfg = PipelineConfig(output_dir=str(tmp_path), run_id="r1")
+    first = run_extraction(spark, tdf, cfg)
+    tables = [tmp_path / "extractions", tmp_path / "metrics"]
+    for table in tables:
+        for leftover in (".staging-run_id=r1", ".replaced-run_id=r1"):
+            os.makedirs(table / leftover / "sub")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        stats = run_extraction(spark, tdf, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs() == 3
+    assert [os.listdir(table) for table in tables] == [["data"], ["data"]]
+    assert {k: stats[k] for k in TOTALS} == {k: first[k] for k in TOTALS}
+    assert stats["observed"]["rows_in"] == 0
+    assert stats["class_rows"] == dict.fromkeys(CLASSES, 0)
+    assert set(stats["phase_s"]) == set(first["phase_s"])
+
+
 def test_crash_between_publishes_then_retry_commits_the_run(
         spark, tdf, tmp_path, monkeypatch):
     """The output publish raises after the sidecar is published; the

@@ -283,15 +283,6 @@ def test_zscore_outliers_broadcasts_moments(spark):
     assert "partial_sum" in plan
 
 
-def test_upsert_is_anti_join_plus_union_no_sort(spark):
-    from frogocr_spark.operators.tables import upsert
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    src = docs.where(F.col("doc_id") % 10 == 0)
-    plan = _plan(upsert(docs, src, ["doc_id"]))
-    assert "LeftAnti" in plan and "Union" in plan
-    assert "rangepartitioning" not in plan.lower()
-
-
 def test_weighted_sample_is_take_ordered_not_global_sort(spark):
     from frogocr_spark.operators.textstats import weighted_sample
     docs = spark.read.parquet(f"{SF}/documents.parquet")

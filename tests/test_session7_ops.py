@@ -1,6 +1,5 @@
 """Session-7 operators: SemDeDup seed clustering, count-LM quality gate,
-containment pairs, exact z-score outliers, MERGE INTO upsert (DataFrame
-combinator + crash-safe Table.merge snapshot op)."""
+containment pairs, exact z-score outliers."""
 
 from __future__ import annotations
 
@@ -14,10 +13,8 @@ from pyspark.sql import functions as F
 from frogocr_spark.operators.analytics import zscore_outliers
 from frogocr_spark.operators.similarity import (seed_assignments,
                                                 semdedup_pairs)
-from frogocr_spark.operators.tables import upsert
 from frogocr_spark.operators.textstats import (containment_pairs,
                                                known_bigram_filter)
-from frogocr_spark.sources.catalog import Table
 
 
 # ---------------------------------------------------------------------------
@@ -230,81 +227,6 @@ def test_zscore_outliers_per_group_isolation(spark):
 
 
 # ---------------------------------------------------------------------------
-# MERGE INTO upsert
-# ---------------------------------------------------------------------------
-
-def test_upsert_replaces_keeps_inserts(spark):
-    target = spark.createDataFrame(
-        [(1, "old1"), (2, "old2"), (3, "old3")], "id long, v string")
-    source = spark.createDataFrame(
-        [(2, "new2"), (9, "new9")], "id long, v string")
-    got = {r.id: r.v for r in upsert(target, source, ["id"]).collect()}
-    assert got == {1: "old1", 2: "new2", 3: "old3", 9: "new9"}
-
-
-def test_table_merge_end_to_end_and_snapshot_log(spark, tmp_path):
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame([(1, "a"), (2, "b")],
-                                   "id long, v string"), "r1")
-    t.append(spark.createDataFrame([(3, "c")],
-                                   "id long, v string"), "r2")
-    mid = t.merge(spark.createDataFrame([(2, "B"), (4, "d")],
-                                        "id long, v string"), ["id"])
-    assert t.snapshots() == [mid]      # merge supersedes all prior runs
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {1: "a", 2: "B", 3: "c", 4: "d"}
-
-
-def test_table_merge_on_empty_table_is_insert(spark, tmp_path):
-    t = Table(spark, str(tmp_path / "tbl"))
-    mid = t.merge(spark.createDataFrame([(1, "a")],
-                                        "id long, v string"), ["id"])
-    assert t.snapshots() == [mid]
-    assert {r.id for r in t.read().collect()} == {1}
-
-
-def test_table_merge_crash_window_never_shows_duplicates(spark, tmp_path):
-    """Simulate a crash between publish (phase 2) and source cleanup
-    (phase 3): superseded dirs still on disk must be invisible to
-    readers (manifest honored), and vacuum finishes the cleanup.  Also:
-    a crash DURING phase 1 leaves .staging-merge, which vacuum
-    reclaims."""
-    import os
-    import shutil
-
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame([(1, "a"), (2, "b")],
-                                   "id long, v string"), "r1")
-    # phase-1 crash: abandoned staging dir
-    staging = os.path.join(t.path, ".staging-merge")
-    os.makedirs(staging)
-    with open(os.path.join(staging, "junk.parquet"), "w") as fh:
-        fh.write("x")
-    removed = t.vacuum()
-    assert ".staging-merge" in removed and not os.path.isdir(staging)
-
-    # phase-2/3 crash: publish happened, then re-create a superseded
-    # source dir as if cleanup never ran
-    src_backup = str(tmp_path / "backup")
-    shutil.copytree(os.path.join(t.data_dir, "run_id=r1"), src_backup)
-    t.merge(spark.createDataFrame([(2, "B")], "id long, v string"), ["id"])
-    shutil.copytree(src_backup, os.path.join(t.data_dir, "run_id=r1"))
-    got = {r.id: r.v for r in t.read().collect()}
-    assert got == {1: "a", 2: "B"}     # dead dir invisible, no dup of id=1
-    dead = t.vacuum()
-    assert "run_id=r1" in dead
-    assert not os.path.isdir(os.path.join(t.data_dir, "run_id=r1"))
-
-
-def test_table_merge_refuses_existing_snapshot_id(spark, tmp_path):
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame([(1, "a")], "id long, v string"), "r1")
-    with pytest.raises(ValueError):
-        t.merge(spark.createDataFrame([(1, "x")], "id long, v string"),
-                ["id"], merge_id="r1")
-
-
-# ---------------------------------------------------------------------------
 # deterministic weighted sampling
 # ---------------------------------------------------------------------------
 
@@ -338,51 +260,6 @@ def test_weighted_sample_bias_toward_heavy_rows(spark):
 
     with pytest.raises(ValueError):
         weighted_sample(df, 0, "n_chars")
-
-
-# ---------------------------------------------------------------------------
-# DELETE WHERE + snapshot-id uniqueness
-# ---------------------------------------------------------------------------
-
-def test_table_delete_where(spark, tmp_path):
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame(
-        [(i, f"v{i}") for i in range(6)], "id long, v string"), "r1")
-    did = t.delete("id % 2 = 0")
-    assert t.snapshots() == [did]
-    assert sorted(r.id for r in t.read().collect()) == [1, 3, 5]
-    # empty table -> None
-    t2 = Table(spark, str(tmp_path / "tbl2"))
-    assert t2.delete("id = 1") is None
-
-
-def test_table_rewrite_ids_never_collide(spark, tmp_path):
-    """Auto ids once derived from the LIVE snapshot count collide after
-    a rewrite supersedes its sources; the version counter must not."""
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")],
-                                   "id long, v string"), "r1")
-    ids = []
-    for k in range(3):       # merge, merge, delete back-to-back
-        ids.append(t.merge(spark.createDataFrame(
-            [(10 + k, "n")], "id long, v string"), ["id"]))
-    ids.append(t.delete("id = 1"))
-    ids.append(t.delete("id = 2"))
-    assert len(set(ids)) == 5
-    got = sorted(r.id for r in t.read().collect())
-    assert got == [3, 10, 11, 12]
-
-
-def test_vacuum_reclaims_abandoned_delete_staging(spark, tmp_path):
-    import os
-
-    t = Table(spark, str(tmp_path / "tbl"))
-    t.append(spark.createDataFrame([(1, "a")], "id long, v string"), "r1")
-    staging = os.path.join(t.path, ".staging-delete")
-    os.makedirs(staging)
-    removed = t.vacuum()
-    assert ".staging-delete" in removed and not os.path.isdir(staging)
-    assert t.read().count() == 1
 
 
 # ---------------------------------------------------------------------------

@@ -8,6 +8,10 @@ those ``.py`` files (code, strings and comments alike), less the
 occurrences inside the lines of its own definition, so a def that only
 calls itself or names itself in its docstring still counts as dead.
 Dunder names (``__all__``, ``__version__``) are skipped.
+
+The top-level walk cannot see methods, so the catalog's classes get a
+second check: each method must be named as an attribute (``.name``) in
+a scanned file outside ``tests/``, less its own definition lines.
 """
 
 from __future__ import annotations
@@ -22,6 +26,10 @@ PACKAGE = REPO / "frogocr_spark"
 SCANNED_DIRS = ("frogocr_spark", "tests", "tools", "perfbench")
 SCANNED_FILES = ("bench.py", "__spark_entry__.py")
 WORD = re.compile(r"\w+")
+ATTRIBUTE = re.compile(r"\.(\w+)")
+CATALOG = PACKAGE / "sources" / "catalog.py"
+# methods only tests call; this set may only shrink
+TEST_ONLY_METHODS = {"read_snapshot"}
 
 
 def _sources() -> dict[Path, str]:
@@ -29,6 +37,14 @@ def _sources() -> dict[Path, str]:
              if "__pycache__" not in p.parts]
     paths += [REPO / f for f in SCANNED_FILES]
     return {p: p.read_text(encoding="utf-8") for p in paths}
+
+
+def _own_matches(pattern: re.Pattern, node: ast.AST, lines: list[str]):
+    """Counts of ``pattern``'s matches in the lines of ``node``'s
+    definition, decorators included."""
+    start = min([node.lineno] + [d.lineno for d in
+                                 getattr(node, "decorator_list", [])])
+    return Counter(pattern.findall("\n".join(lines[start - 1:node.end_lineno])))
 
 
 def _top_level_defs(src: str):
@@ -44,9 +60,7 @@ def _top_level_defs(src: str):
                      if isinstance(n, ast.Name)]
         else:
             continue
-        start = min([node.lineno] + [d.lineno for d in
-                                     getattr(node, "decorator_list", [])])
-        own = Counter(WORD.findall("\n".join(lines[start - 1:node.end_lineno])))
+        own = _own_matches(WORD, node, lines)
         for name in names:
             if not (name.startswith("__") and name.endswith("__")):
                 yield name, node.lineno, own
@@ -63,3 +77,28 @@ def test_every_top_level_name_is_referenced():
             if counts[name] - own[name] <= 0]
     assert not dead, f"{len(dead)} unreferenced top-level names:\n" + \
         "\n".join(sorted(dead))
+
+
+def test_every_catalog_method_is_called_outside_tests():
+    sources = {p: src for p, src in _sources().items()
+               if "tests" not in p.relative_to(REPO).parts}
+    counts = Counter()
+    for src in sources.values():
+        counts.update(ATTRIBUTE.findall(src))
+    lines = sources[CATALOG].splitlines()
+    unreferenced = set()
+    for cls in ast.parse(sources[CATALOG]).body:
+        if not isinstance(cls, ast.ClassDef):
+            continue
+        for node in cls.body:
+            if not isinstance(node, ast.FunctionDef) or (
+                    node.name.startswith("__") and node.name.endswith("__")):
+                continue
+            own = _own_matches(ATTRIBUTE, node, lines)
+            if counts[node.name] - own[node.name] <= 0:
+                unreferenced.add(node.name)
+    assert unreferenced == TEST_ONLY_METHODS, (
+        f"catalog methods no non-test file calls: "
+        f"{sorted(unreferenced - TEST_ONLY_METHODS)}; allowed but now "
+        f"called (drop from TEST_ONLY_METHODS): "
+        f"{sorted(TEST_ONLY_METHODS - unreferenced)}")
