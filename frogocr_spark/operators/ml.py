@@ -3,7 +3,7 @@ Naive-Bayes training — the two classic "turn a curated corpus into a
 model-ready table" steps that run AFTER the curation loop
 (dedup/quality gates) and BEFORE training.
 
-Same engine-portability discipline as featstats: md5-derived hashes,
+Same engine-portability discipline as the sketches: md5-derived hashes,
 exact integer counts, one truncating scaled division where a
 probability is reported — no float whose last ulp could differ across
 engines.
@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _WS = r"\s+"
-_DEC = "decimal(38,0)"
 
 
 def feature_hash(df: DataFrame, n_buckets: int = 1024,

@@ -16,12 +16,12 @@ parquet directory with identical *semantics* behind one interface
   ``data/``, where no reader looks; rerunning the same run_id removes
   them.
 - ``read()``              — full table scan.
-- ``snapshots()`` / ``read_snapshot(run_id)`` — committed run_ids / one
-  run's rows; ``committed_rows(run_id)`` — its row count from the
-  parquet footers (no Spark job).
+- ``snapshots()``         — committed run_ids; ``committed_rows(run_id)``
+  — a run's row count from the parquet footers (no Spark job).
 - ``processed_keys()``    — the committed key set used by the resume
   anti-join (output-exists skip F1 — reference
-  ``Source/TaskProcessor.cpp:191-209``).
+  ``Source/TaskProcessor.cpp:191-209``), typed from one part file's
+  footer (no schema-inference Spark job).
 
 At 100 TB the backend would be a real Iceberg catalog; every call site
 only touches these classes, so the swap is one module.
@@ -36,12 +36,19 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
+def _part_files(run_dir: str):
+    """Paths of the parquet part files under ``run_dir`` (none when it
+    is absent)."""
+    for root, _dirs, files in os.walk(run_dir):
+        for f in files:
+            if f.endswith(".parquet") and not f.startswith((".", "_")):
+                yield os.path.join(root, f)
+
+
 def footer_rows(run_dir: str) -> int:
     """Rows in the parquet files under ``run_dir`` (0 when it is absent),
     summed from their footers: no data is read and no Spark job runs."""
-    return sum(pq.read_metadata(os.path.join(root, f)).num_rows
-               for root, _dirs, files in os.walk(run_dir) for f in files
-               if f.endswith(".parquet") and not f.startswith((".", "_")))
+    return sum(pq.read_metadata(p).num_rows for p in _part_files(run_dir))
 
 
 class Table:
@@ -51,14 +58,6 @@ class Table:
         self.spark = spark
         self.path = path
         self.data_dir = os.path.join(path, "data")
-
-    def exists(self) -> bool:
-        if not os.path.isdir(self.data_dir):
-            return False
-        for _root, _dirs, files in os.walk(self.data_dir):
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
 
     def append(self, df: DataFrame | pa.Table, run_id: str) -> None:
         """Idempotent append: one directory per run_id; re-running a failed
@@ -138,31 +137,39 @@ class Table:
         return [n for n in sorted(os.listdir(self.data_dir))
                 if n.startswith("run_id=")]
 
-    def read(self) -> DataFrame:
-        """Read every committed run."""
+    def _run_paths(self) -> list[str]:
         # explicit run-dir paths keep the run_id partition column out of
         # the schema
-        paths = [os.path.join(self.data_dir, n) for n in self._run_dirs()]
+        return [os.path.join(self.data_dir, n) for n in self._run_dirs()]
+
+    def read(self) -> DataFrame:
+        """Read every committed run."""
         return (self.spark.read
                 .option("recursiveFileLookup", "true")
-                .parquet(*paths))
+                .parquet(*self._run_paths()))
 
     def snapshots(self) -> list[str]:
         """Committed run_ids (the Iceberg snapshot-log analog), sorted.
         A run_id directory is a snapshot: present ⇔ its job committed."""
         return [n.split("=", 1)[1] for n in self._run_dirs()]
 
-    def read_snapshot(self, run_id: str) -> DataFrame:
-        """Read one committed run's rows (snapshot-scoped scan)."""
-        return self.spark.read.parquet(
-            os.path.join(self.data_dir, f"run_id={run_id}"))
-
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
         """Committed keys for the F1 resume anti-join (column-pruned scan —
-        only the key columns are read from parquet)."""
-        if not self.exists():
+        only the key columns are read from parquet).  Their types come
+        from one committed part file's footer, so no Spark job infers
+        the table's schema; the table holds no schema of its own."""
+        from pyspark.sql.pandas.types import from_arrow_schema
+
+        paths = self._run_paths()
+        part = next((f for p in paths for f in _part_files(p)), None)
+        if part is None:
             return None
-        return self.read().select(*key_cols)
+        footer = pq.read_schema(part)
+        keys = from_arrow_schema(pa.schema([footer.field(c)
+                                            for c in key_cols]))
+        return (self.spark.read.schema(keys)
+                .option("recursiveFileLookup", "true")
+                .parquet(*paths))
 
 
 class BucketedTable:

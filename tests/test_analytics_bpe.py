@@ -1,7 +1,7 @@
-"""Count-min sketch (operators/sketches), BPE merge training
-(operators/bpe), and funnel / cohort / histogram / exact moment stats
-(operators/analytics) — differential-tested against pure-Python twins
-and hand-computed values."""
+"""Count-min sketch (operators/sketches) and funnel / cohort /
+histogram / exact moment stats (operators/analytics) —
+differential-tested against pure-Python twins and hand-computed
+values."""
 
 from __future__ import annotations
 
@@ -17,7 +17,6 @@ from frogocr_spark.operators.analytics import (cohort_retention,
                                                funnel_counts,
                                                histogram_fixed,
                                                moment_stats_exact)
-from frogocr_spark.operators.bpe import bpe_train, word_vocab
 from frogocr_spark.operators.sketches import (cms_build, cms_estimate,
                                               cms_heavy_hitters)
 
@@ -84,87 +83,6 @@ def test_cms_build_validates_shape(spark):
         cms_build(df, "token", d=0, w=512)
     with pytest.raises(ValueError):
         cms_build(df, "token", d=4, w=1)
-
-
-# ------------------------------------------------------------- BPE
-
-def _py_bpe(words: dict[str, int], n_merges: int):
-    """Pure-Python reference BPE (Sennrich et al. algorithm 1)."""
-    vocab = {w: [*w, "</w>"] for w in words}
-    merges = []
-    for rank in range(1, n_merges + 1):
-        pairs = {}
-        for w, syms in vocab.items():
-            for a, b in zip(syms, syms[1:]):
-                pairs[(a, b)] = pairs.get((a, b), 0) + words[w]
-        if not pairs:
-            break
-        (a, b), cnt = min(pairs.items(), key=lambda kv: (-kv[1], kv[0]))
-        merged = a + b
-        merges.append((rank, a, b, merged, cnt))
-        for w, syms in vocab.items():
-            out = [syms[0]]
-            for s in syms[1:]:
-                if out[-1] == a and s == b:
-                    out[-1] = merged
-                else:
-                    out.append(s)
-            vocab[w] = out
-    return merges, vocab
-
-
-def test_bpe_classic_corpus_matches_reference_algorithm(spark):
-    words = {"low": 6, "lower": 2, "newest": 7, "widest": 3, "wide": 1}
-    text = " ".join(" ".join([w] * c) for w, c in words.items())
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    merges, vocab = bpe_train(docs, n_merges=6)
-    exp_merges, exp_vocab = _py_bpe(words, 6)
-    assert [tuple(r) for r in merges.collect()] == exp_merges
-    got_vocab = {r["word"]: list(r["syms"]) for r in vocab.collect()}
-    assert got_vocab == exp_vocab
-
-
-def test_bpe_greedy_fold_nonoverlapping(spark):
-    # "aaaa" + pair (a,a): greedy left-to-right -> aa, aa (never aaa)
-    docs = spark.createDataFrame([(1, "aaaa aaaa aaaa")],
-                                 ["doc_id", "text"])
-    merges, vocab = bpe_train(docs, n_merges=1)
-    m = merges.collect()
-    assert [tuple(r) for r in m] == [(1, "a", "a", "aa", 9)]
-    syms = vocab.collect()[0]["syms"]
-    assert list(syms) == ["aa", "aa", "</w>"]
-
-
-def test_bpe_word_vocab_filters_nonalpha(spark):
-    docs = spark.createDataFrame([(1, "abc 123 a-b abc")],
-                                 ["doc_id", "text"])
-    v = {r["word"]: (r["cnt"], list(r["syms"]))
-         for r in word_vocab(docs).collect()}
-    assert v == {"abc": (2, ["a", "b", "c", "</w>"])}
-
-
-def test_bpe_validates_n_merges(spark):
-    docs = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        bpe_train(docs, n_merges=0)
-
-
-def test_bpe_distributed_and_driver_paths_are_bit_identical(spark):
-    """driver_finish_words=0 forces the fully-distributed rounds; the
-    default takes the hybrid driver finish — same merges, same final
-    vocab, and both equal the reference algorithm."""
-    words = {"low": 6, "lower": 2, "newest": 7, "widest": 3, "wide": 1,
-             "west": 4, "best": 4, "lowest": 2}
-    text = " ".join(" ".join([w] * c) for w, c in words.items())
-    docs = spark.createDataFrame([(1, text)], ["doc_id", "text"])
-    m_dist, v_dist = bpe_train(docs, n_merges=8, driver_finish_words=0)
-    m_loc, v_loc = bpe_train(docs, n_merges=8)
-    exp_merges, exp_vocab = _py_bpe(words, 8)
-    assert ([tuple(r) for r in m_dist.collect()]
-            == [tuple(r) for r in m_loc.collect()] == exp_merges)
-    vd = {r["word"]: list(r["syms"]) for r in v_dist.collect()}
-    vl = {r["word"]: list(r["syms"]) for r in v_loc.collect()}
-    assert vd == vl == exp_vocab
 
 
 # ------------------------------------------------------------- funnel

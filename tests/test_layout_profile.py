@@ -1,7 +1,6 @@
-"""Z-order layout (operators/layout) and the column profiler
-(operators/profile) — bit-interleave vs a pure-Python twin, bucket
-arithmetic, the parquet-footer proof that z-clustering tightens
-min-max statistics on BOTH dimensions, and profiler vs hand counts."""
+"""Z-order layout (operators/layout) — bit-interleave vs a pure-Python
+twin, bucket arithmetic, and the parquet-footer proof that
+z-clustering tightens min-max statistics on BOTH dimensions."""
 
 from __future__ import annotations
 
@@ -13,7 +12,6 @@ from pyspark.sql import functions as F
 
 from frogocr_spark.operators.layout import (zorder_buckets, zorder_write,
                                             zvalue, zvalue_sql)
-from frogocr_spark.operators.profile import profile_table
 
 
 # ------------------------------------------------------------ zvalue
@@ -145,25 +143,3 @@ def test_zorder_write_tightens_footer_stats_on_both_dims(spark, tmp_path):
     # and the data survives the rewrite byte-for-byte
     back = spark.read.parquet(zpath)
     assert sorted(map(tuple, back.collect())) == sorted(rows)
-
-
-# ----------------------------------------------------------- profiler
-
-def test_profile_table_hand_computed(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (2, "b"), (None, "a")],
-        ["k", "s"])
-    got = {r["column"]: r for r in profile_table(df, ["k", "s"]).collect()}
-    k, s = got["k"], got["s"]
-    assert (k["n"], k["n_null"], k["n_distinct"]) == (4, 1, 2)
-    assert (k["min_s"], k["max_s"]) == ("1", "2")
-    assert (s["n"], s["n_null"], s["n_distinct"]) == (4, 1, 2)
-    assert (s["min_s"], s["max_s"]) == ("a", "b")
-
-
-def test_profile_table_validates(spark):
-    df = spark.createDataFrame([(1,)], ["k"])
-    with pytest.raises(ValueError):
-        profile_table(df, [])
-    with pytest.raises(ValueError):
-        profile_table(df, ["nope"])

@@ -1,6 +1,5 @@
 """Session-10 operators: prefix-max machinery, 2D skyline, sweep-line
-concurrency, equi-depth histograms, association rules, JL projection,
-and BPE corpus encoding — each checked against hand-computed values
+concurrency, equi-depth histograms, association rules and JL projection — each checked against hand-computed values
 and/or a pure-Python brute-force twin (the contract queries carry the
 DuckDB hash checks; these pin the semantics on adversarial edges)."""
 
@@ -199,20 +198,6 @@ def test_jl_sign_matrix_deterministic_and_md5_derived(spark):
     assert m1[2][7] == (1 if nib % 2 == 0 else -1)
 
 
-# --------------------------------------------------------------- bpe encode
-def test_bpe_encode_counts_classic_corpus(spark):
-    from frogocr_spark.operators.bpe import bpe_encode_counts
-    docs = spark.createDataFrame(
-        [(1, "low low lower"), (2, "newest newest 42!")],
-        "doc_id long, text string")
-    # 2 merges on this corpus: (l, o) -> lo, (lo, w) -> low
-    out = {r.doc_id: (r.n_words, r.n_tokens)
-           for r in bpe_encode_counts(docs, n_merges=2).collect()}
-    # doc 1: low=[low,</w>](2) x2, lower=[low,e,r,</w>](4) -> 8 tokens
-    # doc 2: newest = 6 chars + </w> = 7 syms x2 = 14; "42!" excluded
-    assert out == {1: (3, 8), 2: (2, 14)}
-
-
 # ------------------------------------------------------------- quantiles
 def test_quantile_summary_hand_case(spark):
     from frogocr_spark.operators.analytics import quantile_summary
@@ -351,22 +336,6 @@ def test_kmeans_int_validates(spark):
         kmeans_int(df, k=4, iters=3)  # corpus smaller than k
 
 
-# ------------------------------------------------------------ k-anonymity
-def test_k_anonymize_suppresses_and_merges(spark):
-    from frogocr_spark.operators.quality import k_anonymize
-    rows = ([("no", "web", "1")] * 5 + [("no", "web", "2")] * 2
-            + [("en", "pdf", "1")] * 1)
-    df = spark.createDataFrame(rows, "lang string, src string, b string")
-    got = {(r.lang, r.src, r.b): r.n
-           for r in k_anonymize(df, ["lang", "src", "b"], k=3).collect()}
-    # the two small groups (2 + 1 rows) merge into one '*' residual
-    assert got == {("no", "web", "1"): 5, ("*", "*", "*"): 3}
-    with pytest.raises(ValueError):
-        k_anonymize(df, [], k=3)
-    with pytest.raises(ValueError):
-        k_anonymize(df, ["lang"], k=1)
-
-
 # ------------------------------------------------------------ skew report
 def test_skew_report_uniform_gini_is_zero(spark):
     from frogocr_spark.operators.skew import skew_report
@@ -409,35 +378,6 @@ def test_hll_setops_disjoint_intersection_near_zero(spark):
     out = hll_union_intersect(a, b, "k", p=8).collect()[0]
     # sketch noise, but nowhere near the set sizes
     assert abs(out.est_intersect) < 0.2 * out.est_a
-
-
-# -------------------------------------------------------------- modularity
-def test_modularity_two_triangles_bridge(spark):
-    from frogocr_spark.operators.graph import modularity_by_community
-    # triangles {1,2,3} and {4,5,6} joined by bridge 3-4; perfect split
-    edges = [(1, 2), (1, 3), (2, 3), (4, 5), (4, 6), (5, 6), (3, 4)]
-    e = spark.createDataFrame(edges, "src long, dst long")
-    cm = spark.createDataFrame(
-        [(i, "L" if i <= 3 else "R") for i in range(1, 7)],
-        "node long, community string")
-    got = {r.community: (r.n_nodes, r.degree_sum, r.internal_edges, r.m)
-           for r in modularity_by_community(e, cm).collect()}
-    assert got == {"L": (3, 7, 3, 7), "R": (3, 7, 3, 7)}
-    # Q = sum(e_c/m - (d_c/2m)^2) = 2*(3/7 - (7/14)^2) = 6/7 - 1/2
-    q = sum(ic / 7 - (d / 14) ** 2 for _, d, ic, _ in got.values())
-    assert abs(q - (6 / 7 - 0.5)) < 1e-12
-
-
-def test_modularity_isolated_community_zero_internal(spark):
-    from frogocr_spark.operators.graph import modularity_by_community
-    e = spark.createDataFrame([(1, 2)], "src long, dst long")
-    cm = spark.createDataFrame([(1, "a"), (2, "b"), (9, "c")],
-                               "node long, community string")
-    got = {r.community: (r.n_nodes, r.degree_sum, r.internal_edges)
-           for r in modularity_by_community(e, cm).collect()}
-    # cross-community edge: no internal edges anywhere; node 9 has no
-    # edges but still counts with degree 0
-    assert got == {"a": (1, 1, 0), "b": (1, 1, 0), "c": (1, 0, 0)}
 
 
 # ---------------------------------------------------------- postings delta
@@ -502,40 +442,6 @@ def test_cusum_hand_case_and_multi_key_reset(spark):
            for r in cusum_excursions(df, "k", F.col("x"),
                                      num_partitions=3).collect()}
     assert got == {"a": (0, -10), "b": (0, 0)}
-
-
-# -------------------------------------------------------------- checksums
-def test_range_checksums_localize_single_row_diff(spark):
-    from frogocr_spark.operators.quality import range_checksums
-    rows = [(i, f"v{i}") for i in range(50)]
-    df1 = spark.createDataFrame(rows, "id long, v string")
-    rows2 = list(rows)
-    rows2[37] = (37, "CHANGED")
-    df2 = spark.createDataFrame(rows2, "id long, v string")
-    c1 = {r.bucket: (r.n_rows, r.xor_hash)
-          for r in range_checksums(df1, "id", ["id", "v"],
-                                   bucket_size=10).collect()}
-    c2 = {r.bucket: (r.n_rows, r.xor_hash)
-          for r in range_checksums(df2, "id", ["id", "v"],
-                                   bucket_size=10).collect()}
-    diff = {b for b in c1 if c1[b] != c2[b]}
-    assert diff == {3}                      # row 37 lives in bucket 3
-    assert c1[3][0] == c2[3][0] == 10       # counts agree, digest not
-    with pytest.raises(ValueError):
-        range_checksums(df1, "id", ["id"], bucket_size=0)
-
-
-def test_range_checksums_order_independent(spark):
-    from frogocr_spark.operators.quality import range_checksums
-    rows = [(i, f"v{i}") for i in range(30)]
-    df1 = spark.createDataFrame(rows, "id long, v string")
-    df2 = spark.createDataFrame(rows[::-1], "id long, v string") \
-        .repartition(7)
-    c1 = sorted((r.bucket, r.n_rows, r.xor_hash) for r in
-                range_checksums(df1, "id", ["id", "v"], 8).collect())
-    c2 = sorted((r.bucket, r.n_rows, r.xor_hash) for r in
-                range_checksums(df2, "id", ["id", "v"], 8).collect())
-    assert c1 == c2
 
 
 # ---------------------------------------------------------------- islands
@@ -618,40 +524,6 @@ def test_duration_and_quiet_validation(spark):
         max_concurrency(df, "k", duration_us=0)
     with pytest.raises(ValueError):
         debounce(df, ["k"], quiet_us=0)
-
-
-def test_range_checksums_null_not_skipped(spark):
-    from frogocr_spark.operators.quality import range_checksums
-    # ('a', NULL) and (NULL, 'a') must hash DIFFERENTLY — concat_ws
-    # alone would skip the NULL and collapse both to 'a'
-    d1 = spark.createDataFrame([(1, "a", None)],
-                               "id long, x string, y string")
-    d2 = spark.createDataFrame([(1, None, "a")],
-                               "id long, x string, y string")
-    h1 = range_checksums(d1, "id", ["x", "y"]).collect()[0].xor_hash
-    h2 = range_checksums(d2, "id", ["x", "y"]).collect()[0].xor_hash
-    assert h1 != h2
-
-
-# ---------------------------------------------------------- assortativity
-def test_assortativity_star_is_minus_one(spark):
-    from frogocr_spark.operators.graph import degree_assortativity
-    e = spark.createDataFrame([(0, 1), (0, 2), (0, 3)],
-                              "src long, dst long")
-    out = degree_assortativity(e).collect()[0]
-    # star: every edge joins deg-3 hub to a deg-1 leaf -> perfectly
-    # disassortative; symmetrization makes mean_x == mean_y
-    assert out.n == 6 and out.corr_xy == -1.0
-    assert out.mean_x == out.mean_y
-
-
-def test_assortativity_regular_graph_is_null(spark):
-    from frogocr_spark.operators.graph import degree_assortativity
-    e = spark.createDataFrame([(0, 1), (1, 2), (2, 0)],
-                              "src long, dst long")
-    out = degree_assortativity(e).collect()[0]
-    # cycle: all degrees equal -> zero variance -> correlation NULL
-    assert out.var_x == 0.0 and out.corr_xy is None
 
 
 # ----------------------------------------------------------------- stump

@@ -1,23 +1,15 @@
-"""Session-11 operators: sorted-neighborhood blocking, label
-propagation, weighted SSSP, KMV/theta sketches, positional phrase
-search, and the featstats module (chi2 / PMI / two-proportion test /
-lexical diversity) — hand-computed cases and pure-Python twins (the
-contract queries carry the DuckDB hash checks; these pin semantics on
-adversarial edges)."""
+"""Session-11 operators: sorted-neighborhood blocking, KMV/theta
+sketches and positional phrase search — hand-computed cases and
+pure-Python twins (the contract queries carry the DuckDB hash checks;
+these pin semantics on adversarial edges)."""
 
 from __future__ import annotations
 
 import hashlib
 
 import pytest
-from pyspark.sql import functions as F
 
 from frogocr_spark.operators.dedup import snm_candidates
-from frogocr_spark.operators.featstats import (chi2_terms,
-                                               lexical_diversity,
-                                               pmi_bigrams,
-                                               two_prop_test)
-from frogocr_spark.operators.graph import label_propagation, sssp_int
 from frogocr_spark.operators.sketches import (KMV_M, kmv_estimate,
                                               kmv_sketch,
                                               kmv_union_intersect)
@@ -50,67 +42,6 @@ def test_snm_window_validation(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, k string")
     with pytest.raises(ValueError):
         snm_candidates(df, "k", 0)
-
-
-# ------------------------------------------------------------------- lpa
-def test_label_propagation_two_cliques_bridge(spark):
-    # two triangles {1,2,3} and {7,8,9} joined by a bridge 3-7:
-    # after 2 sync rounds every node in the first clique carries 1,
-    # the second clique settles on 7 (min-label tie-breaks).
-    edges = [(1, 2), (2, 3), (1, 3), (7, 8), (8, 9), (7, 9), (3, 7)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.label
-           for r in label_propagation(df, rounds=2).collect()}
-    assert got[1] == 1 and got[2] == 1 and got[3] == 1
-    assert got[8] == 7 and got[9] == 7
-
-
-def test_label_propagation_zero_rounds_identity(spark):
-    edges = [(1, 2), (2, 3)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.label
-           for r in label_propagation(df, rounds=0).collect()}
-    assert got == {1: 1, 2: 2, 3: 3}
-
-
-def test_label_propagation_self_vote_tie(spark):
-    # path 1-2: each node sees one neighbor label + its own (count 1
-    # each) -> tie -> SMALLEST label wins for both -> both become 1.
-    df = spark.createDataFrame([(2, 1)], "src long, dst long")
-    got = {r.node: r.label
-           for r in label_propagation(df, rounds=1).collect()}
-    assert got == {1: 1, 2: 1}
-
-
-# ------------------------------------------------------------------ sssp
-def test_sssp_hand_case(spark):
-    # 1 -(2)- 2 -(3)- 3 and the direct 1 -(10)- 3: within 2 rounds the
-    # two-hop path (5) beats the direct edge (10).
-    edges = [(1, 2, 2), (2, 3, 3), (1, 3, 10)]
-    seeds = [(1,)]
-    e = spark.createDataFrame(edges, "src long, dst long, w long")
-    s = spark.createDataFrame(seeds, "node long")
-    got = {r.node: r.dist for r in sssp_int(e, s, rounds=2).collect()}
-    assert got == {1: 0, 2: 2, 3: 5}
-
-
-def test_sssp_round_bound_and_multi_seed(spark):
-    # path 1-2-3-4 (unit weights), seeds {1, 4}: after ONE round only
-    # 1-hop neighbors are final; min over seeds everywhere.
-    edges = [(1, 2, 1), (2, 3, 1), (3, 4, 1)]
-    e = spark.createDataFrame(edges, "src long, dst long, w long")
-    s = spark.createDataFrame([(1,), (4,)], "node long")
-    got = {r.node: r.dist for r in sssp_int(e, s, rounds=1).collect()}
-    assert got == {1: 0, 2: 1, 3: 1, 4: 0}
-
-
-def test_sssp_parallel_edges_keep_min(spark):
-    # duplicate edge with different weights: the min weight wins.
-    edges = [(1, 2, 7), (1, 2, 4)]
-    e = spark.createDataFrame(edges, "src long, dst long, w long")
-    s = spark.createDataFrame([(1,)], "node long")
-    got = {r.node: r.dist for r in sssp_int(e, s, rounds=1).collect()}
-    assert got == {1: 0, 2: 4}
 
 
 # ------------------------------------------------------------------- kmv
@@ -169,85 +100,3 @@ def test_phrase_search_empty_vocab_raises(spark):
     df = spark.createDataFrame([(1, "a")], "doc_id long, text string")
     with pytest.raises(ValueError):
         phrase_search(df, [" "])
-
-
-# ------------------------------------------------------------------ chi2
-def test_chi2_terms_hand_case(spark):
-    # 'hot' appears in all 3 docs of class A and none of class B ->
-    # top term for A.  N=6, a=3 b=0 c=0 d=3: chi2 = 6*(9)^2*1e6 /
-    # (3*3*3*3) = 6e6.
-    rows = ([(i, "hot filler", "A") for i in range(3)]
-            + [(10 + i, "cold filler", "B") for i in range(3)])
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    out = {(r.source, r.token): (r.a, r.b, r.c, r.d, r.chi2_e6, r.rank)
-           for r in chi2_terms(df, k=5, min_df=1).collect()}
-    assert out[("A", "hot")] == (3, 0, 0, 3, 6_000_000, 1)
-    assert out[("B", "cold")] == (3, 0, 0, 3, 6_000_000, 1)
-    # 'filler' is in every doc (b+d covers all) -> never positively
-    # associated, absent from both lists
-    assert not any(t == "filler" for (_, t) in out)
-
-
-def test_chi2_min_df_cut(spark):
-    rows = [(1, "rare common", "A"), (2, "common", "A"),
-            (3, "common", "B"), (4, "common", "B")]
-    df = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    toks = {r.token for r in chi2_terms(df, k=5, min_df=2).collect()}
-    assert "rare" not in toks
-
-
-# ------------------------------------------------------------------- pmi
-def test_pmi_bigrams_hand_case(spark):
-    # corpus: "a b" 3 times and "c c" once in one doc; tokens: a=3,
-    # b=3, c=2, N=8.  pmi(a,b) = 3*8e6/(3*3) ; pmi(c,c) = 1*8e6/(2*2).
-    rows = [(1, "a b a b a b c c")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.x, r.y): (r.n_xy, r.pmi_e6)
-           for r in pmi_bigrams(df, k=10, min_count=1).collect()}
-    assert got[("a", "b")] == (3, 3 * 8 * 10**6 // 9)
-    assert got[("c", "c")] == (1, 8 * 10**6 // 4)
-    # "b a" and "b c" bigrams exist too (the zip is positional)
-    assert got[("b", "a")][0] == 2 and got[("b", "c")][0] == 1
-
-
-def test_pmi_bigrams_no_cross_document_pairs(spark):
-    rows = [(1, "p q"), (2, "q r")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {(r.x, r.y) for r in
-           pmi_bigrams(df, k=10, min_count=1).collect()}
-    assert ("q", "q") not in got and ("r", "p") not in got
-
-
-# ----------------------------------------------------------------- abtest
-def test_two_prop_test_hand_case(spark):
-    # variant 0 = even uids, variant 1 = odd.  evens: 4 users 4
-    # converts; odds: 4 users 0 converts.  z2 = (4*4-0)^2*8 /
-    # (4*4*4*4) = 8  -> significant at 3.8416.
-    rows = ([(u, "purchase") for u in (0, 2, 4, 6)]
-            + [(u, "view") for u in (1, 3, 5, 7)])
-    df = spark.createDataFrame(rows, "user_id long, event_type string")
-    out = two_prop_test(df).collect()[0]
-    assert (out.n1, out.c1, out.n2, out.c2) == (4, 4, 4, 0)
-    assert out.z2_e6 == 8_000_000 and out.significant
-
-
-def test_two_prop_test_degenerate_no_variance(spark):
-    # everyone converts: C = T -> den = 0 -> NULL z2, not significant.
-    rows = [(u, "purchase") for u in range(6)]
-    df = spark.createDataFrame(rows, "user_id long, event_type string")
-    out = two_prop_test(df).collect()[0]
-    assert out.z2_e6 is None and out.significant is False
-
-
-# ------------------------------------------------------------- diversity
-def test_lexical_diversity_hand_case(spark):
-    rows = [(1, "a a b c"),   # tokens 4, types 3, hapax 2, simpson 2
-            (2, "   "),       # empty after trim
-            (3, "z")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r.doc_id: (r.n_tokens, r.n_types, r.n_hapax,
-                      r.simpson_num, r.ttr_e6)
-           for r in lexical_diversity(df).collect()}
-    assert got[1] == (4, 3, 2, 2, 750_000)
-    assert got[2] == (0, 0, 0, 0, None)
-    assert got[3] == (1, 1, 1, 0, 1_000_000)

@@ -1,9 +1,8 @@
 """Session-12 operators: grid-blocked spatial join, winnowing
-fingerprints, Jaccard link prediction, clustering coefficient, the
-ML-prep module (feature hashing / NB training), truncated EWMA,
-Benford audit, and session paths — hand-computed cases and pure-Python
-twins (the contract queries carry the DuckDB hash checks; these pin
-semantics on adversarial edges)."""
+fingerprints, the ML-prep module (feature hashing / NB training),
+truncated EWMA, Benford audit, and session paths — hand-computed cases
+and pure-Python twins (the contract queries carry the DuckDB hash
+checks; these pin semantics on adversarial edges)."""
 
 from __future__ import annotations
 
@@ -15,8 +14,6 @@ from pyspark.sql import functions as F
 from frogocr_spark.operators.analytics import (benford_digits,
                                                ewma_trunc,
                                                session_paths)
-from frogocr_spark.operators.graph import (clustering_coefficient,
-                                           jaccard_link_prediction)
 from frogocr_spark.operators.ml import feature_hash, nb_train
 from frogocr_spark.operators.spatial import grid_neighbor_pairs
 from frogocr_spark.operators.textstats import winnowing_fingerprints
@@ -101,41 +98,6 @@ def test_winnowing_short_doc_no_full_window(spark):
     df = spark.createDataFrame([(1, "a b c d")],
                                "doc_id long, text string")
     assert winnowing_fingerprints(df, ngram=3, window=4).count() == 0
-
-
-# ---------------------------------------------------------- link predict
-def test_jaccard_link_prediction_hand_case(spark):
-    # path graph 1-2-3 plus 3-4: non-adjacent (1,3) share {2},
-    # (2,4) share {3}, (1,4) share nothing -> absent.
-    edges = [(1, 2), (2, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {(r.a, r.b): (r.common, r.deg_a, r.deg_b, r.jaccard_e6)
-           for r in jaccard_link_prediction(df, k=10).collect()}
-    # deg: 1->1, 2->2, 3->2, 4->1
-    assert got == {(1, 3): (1, 1, 2, 500000),
-                   (2, 4): (1, 2, 1, 500000)}
-
-
-def test_jaccard_link_prediction_hub_cap(spark):
-    # star center 0 with leaves 1..4: every leaf pair shares {0};
-    # capping the center degree below 4 removes all candidates.
-    edges = [(0, i) for i in range(1, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    assert jaccard_link_prediction(df, k=100).count() == 6  # C(4,2)
-    assert jaccard_link_prediction(
-        df, k=100, max_center_degree=3).count() == 0
-
-
-# ------------------------------------------------------- clustering coeff
-def test_clustering_coefficient_triangle_plus_tail(spark):
-    # triangle {1,2,3} with tail 3-4: cc(1)=cc(2)=1.0, cc(3)=1/3,
-    # cc(4) NULL (deg 1).
-    edges = [(1, 2), (2, 3), (1, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: (r.deg, r.n_triangles, r.cc_e6)
-           for r in clustering_coefficient(df).collect()}
-    assert got == {1: (2, 1, 1000000), 2: (2, 1, 1000000),
-                   3: (3, 1, 333333), 4: (1, 0, None)}
 
 
 # ------------------------------------------------------------- feat hash
@@ -372,206 +334,6 @@ def test_weighted_median_hand_case(spark):
     assert (r.median_v, r.tot_w) == (3, 8)
 
 
-def test_two_hop_reach_hand_case(spark):
-    # path 1-2-3-4: reach(1) = {2,3}, reach(2) = {1,3,4},
-    # reach(3) = {1,2,4}, reach(4) = {2,3}
-    edges = [(1, 2), (2, 3), (3, 4)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from frogocr_spark.operators.graph import two_hop_reach
-    got = {r.node: (r.n_1hop, r.n_2hop_total)
-           for r in two_hop_reach(df).collect()}
-    assert got == {1: (1, 2), 2: (2, 3), 3: (2, 3), 4: (1, 2)}
-
-
-def test_two_hop_reach_mid_cap_hand_case(spark):
-    """max_mid_degree truncates a hub's MID fanout to its cap smallest-id
-    neighbors and flags every node adjacent to a capped hub (VERDICT r3
-    #2/#3 — the dedup-max_bucket pattern applied to wedges)."""
-    # star: hub 0 — {1..6} (deg 6), plus edge (1,2)
-    edges = [(0, i) for i in range(1, 7)] + [(1, 2)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from frogocr_spark.operators.graph import two_hop_reach
-    got = {r.node: (r.n_1hop, r.n_2hop_total, r.capped)
-           for r in two_hop_reach(df, max_mid_degree=3).collect()}
-    # hub 0 exposes only {1,2,3} as a middle node; its own row is
-    # exact (its mids all have deg <= 3) and unflagged
-    assert got == {0: (6, 6, False),
-                   1: (2, 3, True), 2: (2, 3, True), 3: (1, 3, True),
-                   4: (1, 4, True), 5: (1, 4, True), 6: (1, 4, True)}
-    # uncapped run on the same graph: exact counts, nothing flagged
-    exact = {r.node: (r.n_2hop_total, r.capped)
-             for r in two_hop_reach(df).collect()}
-    assert exact[3] == (6, False) and exact[0] == (6, False)
-    assert not any(c for _, c in exact.values())
-
-
-def test_two_hop_reach_precise_capped_flag(spark):
-    """VERDICT r4 #6: precise_capped flags EXACTLY the nodes whose
-    reported count undercounts — a hub-adjacent node that reaches every
-    truncated wedge candidate through kept paths is UNflagged (the
-    cheap default over-approximates and flags it)."""
-    from frogocr_spark.operators.graph import two_hop_reach
-    # hub 0 — {1..5}, cap 3 keeps mids {1,2,3}, truncates {4,5};
-    # node 1 ALSO has direct edges to 4 and 5, so its truncated wedge
-    # candidates were reachable anyway — it loses nothing
-    edges = [(0, i) for i in range(1, 6)] + [(1, 4), (1, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    cheap = {r.node: r.capped
-             for r in two_hop_reach(df, max_mid_degree=3).collect()}
-    precise = {r.node: (r.n_2hop_total, r.capped)
-               for r in two_hop_reach(df, max_mid_degree=3,
-                                      precise_capped=True).collect()}
-    exact = {r.node: r.n_2hop_total
-             for r in two_hop_reach(df).collect()}
-    # cheap mode flags every hub-adjacent node, including non-lossy 1
-    assert cheap[1] is True and cheap[2] is True
-    # precise mode: 1 unflagged with the exact count; 2 flagged (it
-    # really lost {4,5})
-    assert precise[1] == (exact[1], False)
-    assert precise[2][1] is True and precise[2][0] < exact[2]
-    # soundness: every unflagged precise row carries the exact count
-    for n, (cnt, flag) in precise.items():
-        if not flag:
-            assert cnt == exact[n], n
-
-
-def test_two_hop_reach_hll_equals_sketch_of_exact_ball(spark):
-    """The HLL 2-hop composition (1-hop registers + one gather join +
-    max merge) must produce BIT-IDENTICAL registers to sketching the
-    exactly-materialized closed 2-ball — registers are a pure function
-    of the set, so composition correctness is exact, not approximate."""
-    import itertools
-    edges = [(0, i) for i in range(1, 7)] + [(1, 2), (6, 7), (7, 8)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    from frogocr_spark.operators.graph import two_hop_reach_hll
-    from frogocr_spark.operators.sketches import (
-        hll_estimate_from_registers, hll_registers)
-    got = {r.node: (r.n_1hop, r.n_zero_regs, r.reg_sum_scaled, r.hll_est)
-           for r in two_hop_reach_hll(df, p=8).collect()}
-    # exact closed 2-ball per node (python twin)
-    und = {tuple(sorted(e)) for e in edges}
-    adj = {}
-    for u, v in und:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    ball = {n: set(adj[n]) | set(
-        itertools.chain.from_iterable(adj[m] for m in adj[n]))
-        for n in adj}
-    pairs = [(n, c) for n, cs in ball.items() for c in cs]
-    direct = hll_estimate_from_registers(
-        hll_registers(
-            spark.createDataFrame(pairs, "n long, c long"), ["n"], "c",
-            p=8),
-        ["n"], p=8)
-    want = {r.n: (r.n_zero_regs, r.reg_sum_scaled, r.hll_est)
-            for r in direct.collect()}
-    assert set(got) == set(want)
-    for n in want:
-        assert got[n][1:] == want[n], f"node {n}"
-        assert got[n][0] == len(adj[n])
-    # sanity: closed ball includes self (round trip through any mid)
-    assert all(n in ball[n] for n in ball)
-
-
-def test_neighborhood_function_matches_exact_ball_sketches(spark):
-    """HyperANF rounds must aggregate to EXACTLY the sketch of the
-    exact k-balls at every k (registers are a function of the set), and
-    NF must saturate at the component size."""
-    from frogocr_spark.operators.graph import neighborhood_function
-    from frogocr_spark.operators.sketches import hll_registers
-    # path 0-1-2-3-4 plus isolated pair 10-11
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (10, 11)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.k: (r.n_nodes, r.nf_floor, r.sum_reg_scaled,
-                 r.sum_zero_regs)
-           for r in neighborhood_function(df, max_k=4, p=8).collect()}
-    assert set(got) == {0, 1, 2, 3, 4}
-    adj = {}
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    balls = {n: {n} for n in adj}
-    from pyspark.sql import functions as SF
-
-    def agg_of(balls_k):
-        pairs = [(n, c) for n, cs in balls_k.items() for c in cs]
-        regs = hll_registers(
-            spark.createDataFrame(pairs, "n long, c long"), ["n"], "c",
-            p=8)
-        term = SF.expr("shiftleft(cast(1 as bigint), "
-                       "cast(53 - reg as int))")
-        per = regs.groupBy("n").agg(SF.sum(term).alias("h"),
-                                    SF.count(SF.lit(1)).alias("nh"))
-        from frogocr_spark.operators.graph import _lc_floor_table
-        from frogocr_spark.operators.sketches import hll_constants
-        est_num = hll_constants(8)["est_num"]
-        lc = _lc_floor_table(8)
-        full = SF.col("h") + (256 - SF.col("nh")) * SF.lit(1 << 53)
-        raw = SF.lit(est_num) / full.cast("double")
-        v = (256 - SF.col("nh")).cast("int")
-        ef = (SF.when((raw <= 2.5 * 256) & (v > 0),
-                      SF.element_at(SF.array(*[SF.lit(x) for x in lc]),
-                                    v + 1))
-              .otherwise(SF.floor(raw))).cast("long")
-        row = per.groupBy().agg(
-            SF.count(SF.lit(1)).alias("n_nodes"),
-            SF.sum(ef.cast("decimal(38,0)"))
-            .cast("decimal(38,0)").cast("string").alias("f"),
-            SF.sum(full.cast("decimal(38,0)"))
-            .cast("decimal(38,0)").cast("string").alias("s"),
-            SF.sum(256 - SF.col("nh")).cast("long").alias("z")
-        ).collect()[0]
-        return (row.n_nodes, row.f, row.s, row.z)
-
-    for k in range(5):
-        assert got[k] == agg_of(balls), f"k={k}"
-        balls = {n: b | set().union(*(balls[m] for m in adj[n]))
-                 for n, b in balls.items()}
-    # saturation: by k=4 the path component is complete (5 per node)
-    # and the pair component holds 2 per node — spot-check via exact
-    # ball sizes the twin just built
-    assert {n: len(b) for n, b in balls.items()} == {
-        0: 5, 1: 5, 2: 5, 3: 5, 4: 5, 10: 2, 11: 2}
-
-
-def test_effective_diameter_from_nf(spark):
-    from frogocr_spark.operators.graph import (effective_diameter,
-                                               neighborhood_function)
-    # 5-path: diameter 4 — 90%-effective diameter lands in (2, 4];
-    # 4-clique: everything reachable at k=1 → effective diameter <= 1
-    path = spark.createDataFrame([(i, i + 1) for i in range(4)],
-                                 "src long, dst long")
-    rows = [r.asDict() for r in
-            neighborhood_function(path, max_k=4, p=8).collect()]
-    d_path = effective_diameter(rows, q=0.9)
-    assert 1.5 < d_path <= 4.0
-    import itertools
-    clique = spark.createDataFrame(
-        list(itertools.combinations(range(4), 2)), "src long, dst long")
-    rows_c = [r.asDict() for r in
-              neighborhood_function(clique, max_k=3, p=8).collect()]
-    assert effective_diameter(rows_c, q=0.9) <= 1.0
-    with pytest.raises(ValueError):
-        effective_diameter([], q=0.9)
-
-
-def test_effective_diameter_exact_above_2pow53():
-    """ADVICE r4: nf_floor is DECIMAL(38,0) because sums exceed int64
-    at 10^12-node scale — the finish must not lose the crossing point
-    to float53 rounding.  Adjacent NF values differing by 1 at 2^60
-    are indistinguishable after float(): a float parse sees a constant
-    series and returns k=0; the exact-integer finish finds k_max."""
-    from frogocr_spark.operators.graph import effective_diameter
-    base = 1 << 60
-    rows = [{"k": k, "nf_floor": str(base + k)} for k in range(3)]
-    # q=1.0 → target is exactly NF(k_max)=base+2, first reached at k=2
-    assert effective_diameter(rows, q=1.0) == 2.0
-    # interpolation stays exact: target q·(base+2) falls between
-    # integer ks and the returned value must be finite and in range
-    d = effective_diameter(rows, q=0.999999999999999)
-    assert 0.0 <= d <= 2.0
-
-
 def test_charclass_stats_hand_case(spark):
     df = spark.createDataFrame([(1, "Ab 9é"), (2, "")],
                                "doc_id long, text string")
@@ -692,44 +454,6 @@ def test_ams_f2_sketch_python_twin(spark):
         ams_f2_sketch(df, "k", reps=0)
 
 
-# ------------------------------------------------- session 17: dp counts
-def test_dp_noisy_counts_python_twin(spark):
-    import hashlib
-    from frogocr_spark.operators.quality import (_GEOM_THRESHOLDS,
-                                                 dp_noisy_counts)
-    df = spark.createDataFrame([("a",)] * 5 + [("b",)] * 2, "g string")
-    got = {r.g: (r.n, r.noise, r.n_noisy)
-           for r in dp_noisy_counts(df, "g").collect()}
-    for grp, n in (("a", 5), ("b", 2)):
-        h = int(hashlib.md5(f"dp0:{grp}".encode()).hexdigest()[:15], 16)
-        noise = 8
-        for k, th in _GEOM_THRESHOLDS[:-1]:
-            if h < th:
-                noise = k
-                break
-        assert got[grp] == (n, noise, max(n + noise, 0))
-
-
-def test_dp_thresholds_are_a_valid_cdf():
-    from fractions import Fraction
-    from frogocr_spark.operators.quality import _GEOM_THRESHOLDS
-    # thresholds strictly increase and end exactly at 2^60
-    ths = [t for _, t in _GEOM_THRESHOLDS]
-    assert ths == sorted(ths) and len(set(ths)) == len(ths)
-    assert ths[-1] == 1 << 60
-    # recompute from the clipped two-sided geometric (alpha = 1/2)
-    p0 = Fraction(1, 3)
-    probs = {k: (p0 if k == 0 else p0 / (1 << abs(k)))
-             for k in range(-8, 9)}
-    resid = (1 - sum(probs.values())) / 2
-    probs[-8] += resid
-    probs[8] += resid
-    cum = Fraction(0)
-    for (k, th) in _GEOM_THRESHOLDS:
-        cum += probs[k]
-        assert th == (cum * (1 << 60)).__floor__()
-
-
 def test_nullsafe_join_keeps_null_bucket(spark):
     df1 = spark.createDataFrame([(None,), (1,)], "k int")
     df2 = spark.createDataFrame([(None,), (2,)], "k int")
@@ -797,28 +521,6 @@ def test_knn_classify_majority_and_tiebreak(spark):
     assert r.true_label == 7 and r.hit == 0
 
 
-def test_hits_hand_case(spark):
-    from frogocr_spark.operators.graph import hits_int
-    edges = spark.createDataFrame(
-        [("a", "x"), ("a", "y"), ("b", "x")], "src string, dst string")
-    got = {r.node: (r.hub, r.auth)
-           for r in hits_int(edges, iters=2, scale=1000).collect()}
-    # iter1: auth x=2000*1000//3000=666 y=333; hub a=(666+333)*1000//
-    # 1665=600 b=666*1000//1665=400.  iter2: raw auth x=1000 y=600,
-    # tot 1600 -> x=625 y=375; raw hub a=1000 b=625, tot 1625 ->
-    # a=615 b=384.
-    assert got == {"a": (615, 0), "b": (384, 0),
-                   "x": (0, 625), "y": (0, 375)}
-
-
-def test_hits_validates_iters(spark):
-    import pytest
-    from frogocr_spark.operators.graph import hits_int
-    edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError):
-        hits_int(edges, iters=0)
-
-
 def test_geohash_canonical_vector(spark):
     # the classic geohash example: (57.64911, 10.40744) -> u4pruydq
     from frogocr_spark.operators.layout import (geohash_encode_sql,
@@ -858,27 +560,6 @@ def test_geohash_validates_chars():
     for bad in (3, 0, 14):
         with pytest.raises(ValueError):
             geohash_interleave_sql("x", "y", bad)
-
-
-def test_l_diversity_hand_case(spark):
-    from frogocr_spark.operators.quality import l_diversity
-    rows = [("a", "x", 1), ("a", "x", 1), ("a", "x", 2),
-            ("b", "y", 5), ("b", "y", 5), ("b", "y", 5)]
-    df = spark.createDataFrame(rows, "q1 string, q2 string, sv int")
-    got = {(r.q1, r.q2): (r.n, r.n_sensitive, r.diverse)
-           for r in l_diversity(df, ["q1", "q2"], "sv", l=2).collect()}
-    assert got[("a", "x")] == (3, 2, 1)   # two distinct sensitive: ok
-    assert got[("b", "y")] == (3, 1, 0)   # k-large but NOT diverse
-
-
-def test_l_diversity_validates(spark):
-    import pytest
-    from frogocr_spark.operators.quality import l_diversity
-    df = spark.createDataFrame([("a", 1)], "q string, sv int")
-    with pytest.raises(ValueError):
-        l_diversity(df, ["q"], "sv", l=1)
-    with pytest.raises(ValueError):
-        l_diversity(df, [], "sv", l=2)
 
 
 def test_maxmin_coreset_matches_python_twin(spark):
@@ -932,34 +613,6 @@ def test_zipf_fit_negative_slope_on_zipfian_tokens(spark):
     assert row.slope is not None and -1.5 < row.slope < -0.5
 
 
-def test_soundex_nara_vectors(spark):
-    # NARA examples; Ashcraft documents the deliberate simplification
-    # (H/W NOT transparent -> A226, canonical-with-rule would be A261)
-    from pyspark.sql import functions as F
-    from frogocr_spark.functions.phonetic import soundex_sql
-    import duckdb
-    rows = [("Robert",), ("Rupert",), ("Tymczak",), ("Pfister",),
-            ("Honeyman",), ("Ashcraft",), ("123",), ("",)]
-    df = spark.createDataFrame(rows, "x string")
-    got = [r.c for r in df.select(
-        F.expr(soundex_sql("x")).alias("c")).collect()]
-    want = ["R163", "R163", "T522", "P236", "H555", "A226", None, None]
-    assert got == want
-    # identical text, identical result in DuckDB
-    for (x,), w in zip(rows, want):
-        d = duckdb.sql(
-            f"SELECT {soundex_sql('x', dialect='duckdb')} FROM "
-            f"(SELECT '{x}' AS x)").fetchone()[0]
-        assert d == w, (x, d, w)
-
-
-def test_soundex_collapse_long_runs(spark):
-    # a 40-letter same-code run exercises the bounded replace chain
-    from pyspark.sql import functions as F
-    from frogocr_spark.functions.phonetic import soundex_sql
-    df = spark.createDataFrame([("B" + "F" * 40 + "R",)], "x string")
-    [r] = df.select(F.expr(soundex_sql("x")).alias("c")).collect()
-    assert r.c == "B600"  # B,F...F collapse to one '1' (dropped as
     #                        the first code's duplicate), then R=6
 
 
@@ -1091,13 +744,3 @@ def test_theil_sen_outlier_robust(spark):
     [r] = theil_sen_slope(df).collect()
     assert r.n_pairs == 45
     assert r.slope_e6 == 2_000_000  # the median ignores the spike
-
-
-def test_graph_r4_guards(spark):
-    from frogocr_spark.operators.graph import (effective_diameter,
-                                               two_hop_reach)
-    df = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="max_mid_degree"):
-        two_hop_reach(df, max_mid_degree=0)
-    with pytest.raises(ValueError, match="q must be"):
-        effective_diameter([{"k": 0, "nf_floor": "1"}], q=0.0)

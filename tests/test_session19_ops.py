@@ -1,5 +1,5 @@
 """Sessions 21–30 operators: calibration bins, ring negative
-sampling, split-leakage / zone-map / encoding audits, Fano +
+sampling, zone-map / encoding audits, Fano +
 exact k-sigma spikes, vocabulary drift + coverage curves, purged
 time split, layout shootout, context fit / fertility / token runs,
 detector agreement, Bloom FPR + hash-collision audits, ANN recall,
@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from frogocr_spark.operators.layout import zonemap_prune_audit
 from frogocr_spark.operators.ml import calibration_bins, ring_negatives
-from frogocr_spark.operators.quality import split_leakage
 from frogocr_spark.operators.textstats import (MOJIBAKE_MARKERS,
                                                encoding_audit)
 
@@ -68,29 +67,6 @@ def test_ring_negatives_rejects_exact_dups_and_self(spark):
     df = spark.createDataFrame([(1, "same"), (2, "same")],
                                "doc_id long, text string")
     assert ring_negatives(df, k=2).collect() == []
-
-
-def test_split_leakage_group_size_identity(spark):
-    # force known splits by choosing ids whose md5 prefixes land where
-    # we want is brittle — instead verify the identity on a corpus
-    # where EVERY doc shares one text: total pairs = C(n,2)
-    n = 12
-    df = spark.createDataFrame([(i, "dup") for i in range(n)],
-                               "doc_id long, text string")
-    rows = split_leakage(df).collect()
-    assert sum(r.n_pairs for r in rows) == n * (n - 1) // 2
-    assert {(r.split_lo, r.split_hi) for r in rows} == {
-        ("train", "train"), ("val", "val"), ("test", "test"),
-        ("train", "val"), ("train", "test"), ("test", "val")}
-    leak = {(r.split_lo, r.split_hi): r.is_leak for r in rows}
-    assert leak[("train", "train")] is False
-    assert leak[("train", "val")] is True
-
-
-def test_split_leakage_unique_texts_no_pairs(spark):
-    df = spark.createDataFrame([(i, f"u{i}") for i in range(9)],
-                               "doc_id long, text string")
-    assert all(r.n_pairs == 0 for r in split_leakage(df).collect())
 
 
 def test_zonemap_prune_hand_case(spark):

@@ -377,50 +377,3 @@ def test_edit_distance_random_differential(spark):
                 if d <= 4:
                     expect[(ia, ib)] = d
     assert got == expect and len(expect) > 10
-
-
-# ---- t_closeness ----
-
-def test_t_closeness_vs_fraction_twin(spark):
-    from fractions import Fraction
-
-    from frogocr_spark.operators.quality import t_closeness
-    rng = random.Random(21)
-    cats = ["a", "b", "c", "d"]
-    rows = [(f"g{i % 4}", rng.choice(cats[: 2 + i % 3]))
-            for i in range(240)]
-    df = spark.createDataFrame(rows, "qi string, s string")
-    got = {r.qi: (r.n, r.tv_e6, r.ok)
-           for r in t_closeness(df, ["qi"], "s",
-                                t_e6=200_000).collect()}
-    from collections import Counter
-    n_total = len(rows)
-    tot = Counter(s for _, s in rows)
-    for g in ("g0", "g1", "g2", "g3"):
-        grp = Counter(s for q, s in rows if q == g)
-        ng = sum(grp.values())
-        tv = sum(abs(Fraction(grp.get(c, 0), ng)
-                     - Fraction(tot[c], n_total))
-                 for c in tot) / 2
-        tv_e6 = (tv.numerator * 10 ** 6) // tv.denominator  # tv >= 0
-        assert got[g] == (ng, tv_e6, tv_e6 <= 200_000), g
-
-
-def test_t_closeness_absent_value_counted(spark):
-    from frogocr_spark.operators.quality import t_closeness
-    # group g1 never sees 's2': TV = 1/2(|1 - 3/4| + |0 - 1/4|) = 1/4
-    rows = [("g1", "s1"), ("g1", "s1"), ("g2", "s1"), ("g2", "s2")]
-    df = spark.createDataFrame(rows, "qi string, s string")
-    got = {r.qi: r.tv_e6 for r in t_closeness(df, ["qi"], "s").collect()}
-    assert got["g1"] == 250_000
-    assert got["g2"] == 250_000
-
-
-def test_t_closeness_guards(spark):
-    from frogocr_spark.operators.quality import t_closeness
-    df = spark.createDataFrame([("g", "s")], "qi string, s string")
-    with pytest.raises(ValueError):
-        t_closeness(df, ["qi"], "s", t_e6=2_000_000)
-    empty = spark.createDataFrame([], "qi string, s string")
-    with pytest.raises(ValueError):
-        t_closeness(empty, ["qi"], "s")

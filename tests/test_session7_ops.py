@@ -263,39 +263,6 @@ def test_weighted_sample_bias_toward_heavy_rows(spark):
 
 
 # ---------------------------------------------------------------------------
-# triangle counting
-# ---------------------------------------------------------------------------
-
-def test_triangle_counts_hand_computed(spark):
-    from frogocr_spark.operators.graph import triangle_counts
-    # K4 on {1,2,3,4} (4 triangles, 3 per node) + pendant 5 + isolated
-    # edge (6,7); input deliberately messy: reversed dirs, dups, a
-    # self-loop
-    edges = [(1, 2), (2, 1), (1, 3), (3, 1), (1, 4), (2, 3), (4, 2),
-             (3, 4), (4, 5), (6, 7), (7, 6), (5, 5)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r.node: r.n_triangles for r in triangle_counts(df).collect()}
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3, 5: 0, 6: 0, 7: 0}
-
-
-def test_triangle_counts_triangle_free_and_total(spark):
-    from frogocr_spark.operators.graph import triangle_counts
-    # bipartite (no triangles)
-    df = spark.createDataFrame([(1, 10), (1, 11), (2, 10), (2, 11)],
-                               "src long, dst long")
-    got = triangle_counts(df).collect()
-    assert all(r.n_triangles == 0 for r in got) and len(got) == 4
-    # chained triangles sharing an edge: (1,2,3) and (2,3,4)
-    df2 = spark.createDataFrame([(1, 2), (2, 3), (1, 3), (2, 4), (3, 4)],
-                                "src long, dst long")
-    got2 = {r.node: r.n_triangles
-            for r in triangle_counts(df2).collect()}
-    assert got2 == {1: 1, 2: 2, 3: 2, 4: 1}
-    # sum of per-node counts = 3 * #triangles
-    assert sum(got2.values()) == 3 * 2
-
-
-# ---------------------------------------------------------------------------
 # quantized centroids
 # ---------------------------------------------------------------------------
 

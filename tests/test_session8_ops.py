@@ -1,8 +1,8 @@
 """Session-8 operators: SCD2 history, OHLC bars, LOCF gap fill,
-skew-salted join, k-core decomposition.
+skew-salted join.
 
 Hand-computed small cases + structural checks; the DuckDB contract
-twins (scd2_build / ohlc_bars / gap_fill / salted_join / kcore) carry
+twins (scd2_build / ohlc_bars / gap_fill / salted_join) carry
 the at-scale value verification.
 """
 
@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from frogocr_spark.operators.analytics import (gap_fill_locf, ohlc_bars,
                                                scd2_history)
-from frogocr_spark.operators.graph import kcore
 from frogocr_spark.operators.skew import salted_equi_join
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
@@ -148,43 +147,6 @@ def test_salted_join_plan_is_salted_shuffle(spark):
     assert "_salt" in plan
 
 
-# --------------------------------------------------------------- kcore
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(pairs, "src long, dst long")
-
-
-def test_kcore_triangle_with_tail(spark):
-    # triangle 1-2-3 (each degree 2) + tail 3-4 (node 4 degree 1):
-    # 2-core = the triangle, every core degree exactly 2
-    e = _edges(spark, [(1, 2), (2, 3), (3, 1), (3, 4)])
-    got = {r.node: r.core_degree for r in kcore(e, 2).collect()}
-    assert got == {1: 2, 2: 2, 3: 2}
-
-
-def test_kcore_cascade_peels_everything(spark):
-    # path graph: peeling the endpoints exposes new degree-1 nodes each
-    # round — the multi-round cascade; 2-core is empty
-    e = _edges(spark, [(i, i + 1) for i in range(1, 8)])
-    assert kcore(e, 2).count() == 0
-
-
-def test_kcore_fixed_rounds_equals_fixpoint_and_normalizes(spark):
-    # messy input: duplicates, reversed directions, a self-loop
-    e = _edges(spark, [(1, 2), (2, 1), (2, 3), (3, 1), (3, 4), (4, 4),
-                       (1, 2)])
-    fix = {(r.node, r.core_degree) for r in kcore(e, 2).collect()}
-    fixed = {(r.node, r.core_degree)
-             for r in kcore(e, 2, rounds=6).collect()}
-    assert fix == fixed == {(1, 2), (2, 2), (3, 2)}
-
-
-def test_kcore_validates_k(spark):
-    e = _edges(spark, [(1, 2)])
-    with pytest.raises(ValueError, match="k must be"):
-        kcore(e, 0)
-
-
 # ------------------------------------------------------------------ pq
 
 def _vecs(spark, rows):
@@ -311,37 +273,6 @@ def test_winsorize_hand_computed(spark):
         winsorize_stats(ev, "event_type", F.col("value"), p_lo=95, p_hi=5)
 
 
-# ------------------------------------------------------------- quality
-
-def test_dq_report_hand_computed(spark):
-    from frogocr_spark.operators.quality import dq_report
-    df = spark.createDataFrame(
-        [(1, "a", 5.0), (2, "b", -1.0), (2, None, 0.0), (4, "zz", 3.0)],
-        "id long, tag string, amt double")
-    dim = spark.createDataFrame([("a",), ("b",)], "tag string")
-    rep = {r.check: (r.n_violations, r.n_rows)
-           for r in dq_report(
-               df, not_null=["tag"], unique=["id"], positive=["amt"],
-               enum={"tag": ["a", "b"]},
-               ref=("tag", dim, "tag")).collect()}
-    assert rep == {
-        "not_null:tag": (1, 4),
-        "unique:id": (1, 4),       # id 2 twice
-        "positive:amt": (2, 4),    # -1.0 and 0.0
-        "enum:tag": (1, 4),        # 'zz' (NULL not counted)
-        "ref:tag": (2, 4),         # 'zz' and NULL have no dim match
-    }
-
-
-def test_dq_report_requires_checks_and_clean_table_is_zero(spark):
-    from frogocr_spark.operators.quality import dq_report
-    df = spark.createDataFrame([(1, "a")], "id long, tag string")
-    with pytest.raises(ValueError, match="no checks"):
-        dq_report(df)
-    rep = dq_report(df, not_null=["tag"], unique=["id"]).collect()
-    assert all(r.n_violations == 0 for r in rep)
-
-
 # ---------------------------------------------------------- range frame
 
 def test_range_frame_includes_all_equal_ts_peers(spark):
@@ -359,38 +290,3 @@ def test_range_frame_includes_all_equal_ts_peers(spark):
     # both us=1000 rows see BOTH peers; us=5000 sees only itself
     # (5000-3000 > 1000)
     assert got == {1: (2, 30), 2: (2, 30), 3: (1, 30)}
-
-
-# ----------------------------------------------------------------- bfs
-
-def test_bfs_levels_path_and_unreachable(spark):
-    from frogocr_spark.operators.graph import bfs_levels
-    # path 1-2-3-4-5 plus isolated component 8-9; seed = 1, rounds = 3
-    e = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 5), (8, 9)])
-    seeds = spark.createDataFrame([(1,)], "node long")
-    got = {r.node: r.level
-           for r in bfs_levels(e, seeds, rounds=3).collect()}
-    # node 5 is 4 hops away -> absent at rounds=3; 8/9 unreachable
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-
-
-def test_bfs_levels_min_distance_on_diamond_multi_seed(spark):
-    from frogocr_spark.operators.graph import bfs_levels
-    # diamond 1-2, 1-3, 2-4, 3-4 plus a long way 1-5, 5-4: node 4 must
-    # get level 2 (min), not 2-via-5's longer path; multi-seed takes
-    # the global min
-    e = _edges(spark, [(1, 2), (1, 3), (2, 4), (3, 4), (1, 5), (5, 4)])
-    seeds = spark.createDataFrame([(1,), (4,)], "node long")
-    got = {r.node: r.level
-           for r in bfs_levels(e, seeds, rounds=4).collect()}
-    assert got == {1: 0, 4: 0, 2: 1, 3: 1, 5: 1}
-
-
-def test_bfs_levels_zero_rounds_and_validation(spark):
-    from frogocr_spark.operators.graph import bfs_levels
-    e = _edges(spark, [(1, 2)])
-    seeds = spark.createDataFrame([(1,)], "node long")
-    got = bfs_levels(e, seeds, rounds=0).collect()
-    assert [(r.node, r.level) for r in got] == [(1, 0)]
-    with pytest.raises(ValueError, match="rounds"):
-        bfs_levels(e, seeds, rounds=-1)

@@ -1,7 +1,7 @@
-"""HLL sketch (operators/sketches), integer PageRank (operators/graph),
-inverted index / tf-idf / bigram LM (operators/textstats), and int8
-quantization (operators/similarity) — differential-tested against pure
-Python twins and hand-computed values."""
+"""HLL sketch (operators/sketches), inverted index / tf-idf / bigram
+LM (operators/textstats), and int8 quantization
+(operators/similarity) — differential-tested against pure Python twins
+and hand-computed values."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import random
 
 import pytest
 
-from frogocr_spark.operators.graph import pagerank_int
 from frogocr_spark.operators.sketches import (hll_constants, hll_estimate,
                                               hll_estimate_corrected,
                                               hll_registers,
@@ -97,79 +96,6 @@ def test_hll_p_validation():
         hll_constants(5)
     with pytest.raises(ValueError):
         hll_constants(17)
-
-
-# ----------------------------------------------------------- PageRank
-
-def _py_pagerank(edges, iters=3, scale=10**12, dn=85, dd=100):
-    """Pure-Python twin of the integer recurrence."""
-    nodes = {s for s, _ in edges} | {d for _, d in edges}
-    out_deg = {}
-    for s, _ in edges:
-        out_deg[s] = out_deg.get(s, 0) + 1
-    base = (scale * (dd - dn)) // dd
-    score = {n: scale for n in nodes}
-    for _ in range(iters):
-        mass = {}
-        for s, d in edges:
-            mass[d] = mass.get(d, 0) + score[s] // out_deg[s]
-        score = {n: base + (mass.get(n, 0) * dn) // dd for n in nodes}
-    return score
-
-
-def _pr(spark, edges, **kw):
-    df = spark.createDataFrame(edges, "src string, dst string")
-    return {r["node"]: r["score"]
-            for r in pagerank_int(df, **kw).collect()}
-
-
-def test_pagerank_ring_hand_computed(spark):
-    """3-ring: every node keeps the full (damped) mass — symmetric."""
-    edges = [("a", "b"), ("b", "c"), ("c", "a")]
-    got = _pr(spark, edges, iters=3)
-    want = _py_pagerank(edges, iters=3)
-    assert got == want
-    assert len(set(got.values())) == 1  # symmetry
-
-
-def test_pagerank_no_inedge_settles_at_base(spark):
-    edges = [("src_only", "sink")]
-    got = _pr(spark, edges, iters=3)
-    base = (10**12 * 15) // 100
-    assert got["src_only"] == base
-
-
-def test_pagerank_python_twin_random_graph(spark):
-    rng = random.Random(42)
-    nodes = [f"n{i}" for i in range(50)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes))
-                  for _ in range(200)})
-    edges = [(s, d) for s, d in edges if s != d]
-    got = _pr(spark, edges, iters=3)
-    assert got == _py_pagerank(edges, iters=3)
-
-
-def test_pagerank_partitioning_invariant(spark):
-    rng = random.Random(7)
-    nodes = [f"n{i}" for i in range(30)]
-    edges = list({(rng.choice(nodes), rng.choice(nodes))
-                  for _ in range(120)})
-    df = spark.createDataFrame(edges, "src string, dst string")
-    a = {r["node"]: r["score"]
-         for r in pagerank_int(df, iters=2).collect()}
-    b = {r["node"]: r["score"]
-         for r in pagerank_int(df.repartition(13), iters=2).collect()}
-    assert a == b
-
-
-def test_pagerank_validation(spark):
-    df = spark.createDataFrame([("a", "b")], "src string, dst string")
-    with pytest.raises(ValueError):
-        pagerank_int(df, iters=0)
-    with pytest.raises(ValueError):
-        pagerank_int(df, damp_num=100, damp_den=100)
-    with pytest.raises(ValueError):
-        pagerank_int(df, n_nodes_hint=10**7)  # 10^7 * 10^12 * 85 >= 2^63
 
 
 # ----------------------------------------------- inverted index / tf-idf

@@ -77,7 +77,8 @@ def test_drain_writes_one_sidecar_per_epoch(spark, tmp_path):
     # the keys are collected first: the replay overwrites the files
     # they come from
     epoch_keys = spark.createDataFrame(
-        out.read_snapshot(epochs[0]).select("conv_id", "turn_idx").collect())
+        spark.read.parquet(os.path.join(out.data_dir, f"run_id={epochs[0]}"))
+        .select("conv_id", "turn_idx").collect())
     replay = spark.read.parquet(input_dir).join(
         epoch_keys, ["conv_id", "turn_idx"], "left_semi")
     for _ in range(2):

@@ -1,17 +1,29 @@
-"""Dead-code guard — pure Python, no Spark session, no git.
+"""Dead-code guard — pure Python, no Spark session, no git.  Three
+checks:
 
-Every top-level function, class and assigned name in ``frogocr_spark/``
-must be named somewhere outside its own definition: in the package, the
-tests, the tools, the pipeline benchmark, ``bench.py`` or
-``__spark_entry__.py``.  A name is counted as a whole word anywhere in
-those ``.py`` files (code, strings and comments alike), less the
-occurrences inside the lines of its own definition, so a def that only
-calls itself or names itself in its docstring still counts as dead.
-Dunder names (``__all__``, ``__version__``) are skipped.
-
-The top-level walk cannot see methods, so the catalog's classes get a
-second check: each method must be named as an attribute (``.name``) in
-a scanned file outside ``tests/``, less its own definition lines.
+- *Modules.*  The walk follows ``frogocr_spark`` imports from the entry
+  points that run the pipeline or verify it outside pytest:
+  ``frogocr_spark/job.py``, ``frogocr_spark/streaming/stream.py``,
+  ``__spark_entry__.py``, ``bench.py``, ``perfbench/*.py`` and
+  ``tools/*.py``.  Every import statement counts, function-level ones
+  included, and relative imports are resolved against the importing
+  module.  The package modules the walk does not reach are only reached
+  by tests; they must be exactly ``TEST_ONLY_MODULES``.  So the check
+  fails both when a new test-only module lands and when one is deleted
+  (or becomes reachable) without shrinking the pin.
+- *Top-level names.*  Every top-level function, class and assigned name
+  in ``frogocr_spark/`` must be named somewhere outside its own
+  definition: in the package, the tests, the tools, the pipeline
+  benchmark, ``bench.py`` or ``__spark_entry__.py``.  A name is counted
+  as a whole word anywhere in those ``.py`` files (code, strings and
+  comments alike), less the occurrences inside the lines of its own
+  definition, so a def that only calls itself or names itself in its
+  docstring still counts as dead.  Dunder names (``__all__``,
+  ``__version__``) are skipped.
+- *Catalog methods.*  The top-level walk cannot see methods, so each
+  method of the catalog's classes must be named as an attribute
+  (``.name``) in a scanned file outside ``tests/``, less its own
+  definition lines.
 """
 
 from __future__ import annotations
@@ -28,8 +40,19 @@ SCANNED_FILES = ("bench.py", "__spark_entry__.py")
 WORD = re.compile(r"\w+")
 ATTRIBUTE = re.compile(r"\.(\w+)")
 CATALOG = PACKAGE / "sources" / "catalog.py"
-# methods only tests call; this set may only shrink
-TEST_ONLY_METHODS = {"read_snapshot"}
+ROOTS = (
+    [PACKAGE / "job.py", PACKAGE / "streaming" / "stream.py",
+     REPO / "__spark_entry__.py", REPO / "bench.py"]
+    + sorted((REPO / "perfbench").glob("*.py"))
+    + sorted((REPO / "tools").glob("*.py")))
+
+# operator and function families that only tests import (see ROADMAP
+# item 3, which deletes them one family per change)
+TEST_ONLY_MODULES = {
+    *(f"frogocr_spark.operators.{m}" for m in (
+        "analytics", "clustering", "layout", "ml", "sketches", "spatial")),
+    "frogocr_spark.functions.urls",
+}
 
 
 def _sources() -> dict[Path, str]:
@@ -37,6 +60,43 @@ def _sources() -> dict[Path, str]:
              if "__pycache__" not in p.parts]
     paths += [REPO / f for f in SCANNED_FILES]
     return {p: p.read_text(encoding="utf-8") for p in paths}
+
+
+def _package_modules() -> dict[str, Path]:
+    mods = {}
+    for p in PACKAGE.rglob("*.py"):
+        parts = p.relative_to(REPO).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mods[".".join(parts)] = p
+    return mods
+
+
+def _imports(path: Path, name: str | None, mods: dict[str, Path]):
+    """Package modules one file imports; ``name`` is the file's dotted
+    module name (``None`` outside the package)."""
+    package = (name if path.name == "__init__.py"
+               else name.rpartition(".")[0]) if name else ""
+    found = set()
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        if isinstance(node, ast.Import):
+            targets = [a.name for a in node.names]
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                up = package.rsplit(".", node.level - 1)[0]
+                base = f"{up}.{base}" if base else up
+            # ``from pkg import mod`` imports the submodule too
+            targets = [base] + [f"{base}.{a.name}" for a in node.names]
+        else:
+            continue
+        for t in targets:
+            # importing a.b.c also runs the ``__init__`` of a and a.b
+            parts = t.split(".")
+            found.update(m for m in (".".join(parts[:i + 1])
+                                     for i in range(len(parts)))
+                         if m in mods)
+    return found
 
 
 def _own_matches(pattern: re.Pattern, node: ast.AST, lines: list[str]):
@@ -66,6 +126,24 @@ def _top_level_defs(src: str):
                 yield name, node.lineno, own
 
 
+def test_only_the_pinned_modules_are_test_only():
+    mods = _package_modules()
+    by_path = {p: m for m, p in mods.items()}
+    todo = [(p, by_path.get(p)) for p in ROOTS]
+    reached: set[str] = set()
+    while todo:
+        path, name = todo.pop()
+        if name:
+            reached.add(name)
+        for m in _imports(path, name, mods) - reached:
+            reached.add(m)
+            todo.append((mods[m], m))
+    test_only = set(mods) - reached
+    assert test_only == TEST_ONLY_MODULES, (
+        f"newly test-only: {sorted(test_only - TEST_ONLY_MODULES)}; "
+        f"no longer test-only: {sorted(TEST_ONLY_MODULES - test_only)}")
+
+
 def test_every_top_level_name_is_referenced():
     sources = _sources()
     counts = Counter()
@@ -86,7 +164,7 @@ def test_every_catalog_method_is_called_outside_tests():
     for src in sources.values():
         counts.update(ATTRIBUTE.findall(src))
     lines = sources[CATALOG].splitlines()
-    unreferenced = set()
+    unreferenced = []
     for cls in ast.parse(sources[CATALOG]).body:
         if not isinstance(cls, ast.ClassDef):
             continue
@@ -96,9 +174,6 @@ def test_every_catalog_method_is_called_outside_tests():
                 continue
             own = _own_matches(ATTRIBUTE, node, lines)
             if counts[node.name] - own[node.name] <= 0:
-                unreferenced.add(node.name)
-    assert unreferenced == TEST_ONLY_METHODS, (
-        f"catalog methods no non-test file calls: "
-        f"{sorted(unreferenced - TEST_ONLY_METHODS)}; allowed but now "
-        f"called (drop from TEST_ONLY_METHODS): "
-        f"{sorted(TEST_ONLY_METHODS - unreferenced)}")
+                unreferenced.append(f"{cls.name}.{node.name}")
+    assert not unreferenced, (
+        f"catalog methods no non-test file calls: {unreferenced}")
