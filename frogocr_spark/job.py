@@ -68,7 +68,10 @@ def main(argv: list[str] | None = None) -> None:
                    help="generate a synthetic transcripts table instead of "
                         "--input (deterministic, seed-stable)")
     p.add_argument("--skew-conv-turns", type=int, default=0)
-    p.add_argument("--output", required=True, help="output table root")
+    p.add_argument("--output", required=True,
+                   help="output table root: a path every executor can "
+                        "see, since the extraction tasks write their "
+                        "part files there")
     p.add_argument("--run-id", default="r1",
                    help="commit id of the output and its sidecar; a "
                         "rerun of a committed id raises if the input has "

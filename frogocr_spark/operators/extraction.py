@@ -18,6 +18,15 @@ partition, keyed by ``partition_id`` and merged last-wins
 (:class:`LastWins`), which ``plans.metrics.tally_sidecar`` turns into
 the lineage sidecar without another Spark job.
 
+Given a ``write_dir``, each task also writes its own output: its Arrow
+batches go into one parquet file, written with pyarrow from the task
+that extracted them (the reference writes each ALTO file from the task
+that recognized it, ``Source/TaskProcessor.cpp:356-369``), and the
+frame yields no rows.  The rows then never travel back through the JVM,
+and no Spark write stage encodes them again; the caller runs the frame
+into the ``noop`` sink.  ``write_dir`` must be a path every executor
+can see.
+
 Column pruning matters at 100 TB: the operator selects only the columns it
 consumes plus the requested passthrough keys before the UDF, so the Arrow
 transfer width stays minimal (SURVEY §4 "column pruning").
@@ -28,12 +37,14 @@ from __future__ import annotations
 import os
 import sys
 import time
+import uuid
 from collections.abc import Iterator
 
 from pyspark.accumulators import Accumulator, AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.extract import extract_batch
 
@@ -124,7 +135,8 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                   passthrough: tuple[str, ...] = ("conv_id", "turn_idx", "role"),
                   with_partition_id: bool = True,
                   settings_col: str | None = None,
-                  tally: Accumulator | None = None) -> DataFrame:
+                  tally: Accumulator | None = None,
+                  write_dir: str | None = None) -> DataFrame:
     """raw transcripts → extraction results (1 row in = 1 row out).
 
     ``with_partition_id`` stamps ``F.spark_partition_id()`` *before* the UDF
@@ -135,14 +147,24 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     batches are exhausted, it adds ``{partition_id: entry}``, the entry
     a dict keyed by sidecar column: ``rows_in``, ``rows_out``,
     ``empty_after_strip``, ``parse_failures``, ``n_convs_approx``,
-    ``confidence_sum`` and ``python_cpu_s`` (the worker's
-    ``time.process_time()`` over the task).  ``n_convs_approx`` counts
+    ``confidence_sum``, ``python_cpu_s`` (the worker's
+    ``time.process_time()`` over the task) and ``python_wall_s`` (its
+    wall seconds, the write included), plus ``class_rows``: rows per
+    payload class.  ``n_convs_approx`` counts
     runs of equal consecutive ``conv_id``s, so a task's state is a few
     numbers whatever its size: it is the exact distinct count when the
     partition is sorted by ``conv_id`` (``salted_repartition`` sorts
     it), an upper bound otherwise.  A partition with no rows adds
     nothing.  Needs ``with_partition_id`` and ``conv_id`` among the
     passthrough columns.
+    ``write_dir`` = optional directory every executor can see: each task
+    writes its output batches into one parquet file there, and the frame
+    yields no rows.  The file is written under a dot-prefixed name of
+    its own (no reader lists dot files; a new name per attempt) and
+    renamed to ``part-<partition_id:05d>.parquet`` once the task's
+    batches end, so a task that runs again replaces its partition's
+    file with the same rows, and a partition with no rows writes no
+    file.  Needs ``with_partition_id``.
     """
     cols = [*passthrough, text_col]
     if settings_col:
@@ -155,10 +177,14 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     pass_cols = [c for c in cols if c != text_col and c != settings_col]
     out_schema = T.StructType([narrow.schema[c] for c in pass_cols]
                               + EXTRACTION_FIELDS)
-    out_names = pass_cols + [f.name for f in EXTRACTION_FIELDS]
+    # the declared schema, nullability included, so each part file has
+    # the schema Spark's writer gave it (and an empty run's file)
+    out_arrow = to_arrow_schema(out_schema)
 
     def run(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        cpu0 = time.process_time()
+        # the wall interval encloses the CPU one: wall >= CPU while the
+        # worker runs one thread
+        wall0, cpu0 = time.perf_counter(), time.process_time()
         _skip_unchanged_zip_rereads()
         # mapInArrow, not mapInPandas: the passthrough columns are
         # forwarded zero-copy, and pyarrow converts extract_batch's frame
@@ -166,11 +192,12 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
         # end) pairs straight to the struct list)
         import pyarrow as pa
         import pyarrow.compute as pc
-        from pyspark.sql.pandas.types import to_arrow_schema
+        import pyarrow.parquet as pq
         res_schema = to_arrow_schema(T.StructType(EXTRACTION_FIELDS))
-        pid = last_conv = None
+        pid = last_conv = writer = None
         t = {"rows_in": 0, "rows_out": 0, "empty_after_strip": 0,
-             "parse_failures": 0, "n_convs_approx": 0, "confidence_sum": 0.0}
+             "parse_failures": 0, "n_convs_approx": 0, "confidence_sum": 0.0,
+             "class_rows": {}}
         for rb in batches:
             if rb.num_rows == 0:
                 continue
@@ -180,24 +207,50 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                                   spans_as="pairs")
             res = pa.RecordBatch.from_pandas(frame, schema=res_schema,
                                              preserve_index=False)
-            if tally is not None:
+            if with_partition_id:
                 pid = rb.column("partition_id")[0].as_py()
+            if tally is not None:
                 t["rows_in"] += rb.num_rows
                 t["rows_out"] += res.num_rows
                 t["empty_after_strip"] += int(frame["empty_after_strip"].sum())
                 t["parse_failures"] += int(frame["parse_failed"].sum())
                 t["confidence_sum"] += float(frame["confidence"].sum())
+                for c, n in frame["payload_class"].value_counts().items():
+                    t["class_rows"][c] = t["class_rows"].get(c, 0) + int(n)
                 conv = rb.column("conv_id")
                 changes = pc.sum(pc.not_equal(
                     conv.slice(1), conv.slice(0, len(conv) - 1))).as_py()
                 t["n_convs_approx"] += ((changes or 0)
                                         + (conv[0].as_py() != last_conv))
                 last_conv = conv[-1].as_py()
-            yield pa.RecordBatch.from_arrays(
+            out = pa.RecordBatch.from_arrays(
                 [rb.column(c) for c in pass_cols] + res.columns,
-                names=out_names)
-        if pid is not None:
+                schema=out_arrow)
+            if write_dir is None:
+                yield out
+                continue
+            if writer is None:
+                tmp = os.path.join(write_dir, f".part-{pid:05d}-"
+                                              f"{uuid.uuid4().hex}.parquet")
+                # snappy and dictionary encoding, as Spark's writer.  No
+                # min/max statistics: a task's rows are a hash-spread set
+                # of conversations, so its key ranges span nearly the
+                # whole key space and prune nothing, and no reader
+                # filters on the text and span columns (0.4% of
+                # agent_resume's output bytes).  No Arrow schema in the
+                # footer (1.5%): Spark and pyarrow read the types from
+                # the parquet schema.
+                writer = pq.ParquetWriter(
+                    tmp, out_arrow, compression="snappy",
+                    use_dictionary=True, write_statistics=False,
+                    store_schema=False)
+            writer.write_batch(out)
+        if writer is not None:
+            writer.close()
+            os.replace(tmp, os.path.join(write_dir, f"part-{pid:05d}.parquet"))
+        if tally is not None and pid is not None:
             t["python_cpu_s"] = time.process_time() - cpu0
+            t["python_wall_s"] = time.perf_counter() - wall0
             tally.add({pid: t})
 
     return narrow.mapInArrow(run, schema=out_schema)

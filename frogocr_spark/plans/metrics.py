@@ -7,31 +7,32 @@ counters (``Source/TaskProcessor.hpp:51``, ``Source/Application.cpp:
 
 ``(run_id, partition_id) → rows_in, rows_out, empty_after_strip,
 parse_failures, n_convs_approx, mean_confidence, created_at,
-python_cpu_s``
+python_cpu_s, python_wall_s``
 
 Each extraction task counts its own partition into a ``LastWins``
 accumulator (``operators.extraction.extract_turns(tally=...)``), and
 :func:`tally_sidecar` turns those entries into the sidecar rows on the
 driver; the pipeline writes them with pyarrow, so no Spark job runs
-after the output write.  ``n_convs_approx`` counts runs of equal
-consecutive ``conv_id``s (exact within a partition sorted by
-``conv_id``, as the salted shuffle leaves it) and ``python_cpu_s`` is
-the task's Python worker CPU seconds.
+after the extraction (whose tasks write the output).
+``n_convs_approx`` counts runs of equal consecutive ``conv_id``s
+(exact within a partition sorted by ``conv_id``, as the salted shuffle
+leaves it), ``python_cpu_s`` is the task's Python worker CPU seconds
+and ``python_wall_s`` its wall seconds, from the start of its UDF body
+to the rename of its part file (input waits and the write included).
 
 The check is the pipeline's (``plans.pipeline.commit_run``), three
-independent counts of one run: the rows observed entering extraction,
-the rows the tasks counted (the sidecar's ``rows_out`` total, read back
-by :func:`sidecar_totals`, FIXTURES.md §5.6) and the rows in the
-committed parquet footers; plus the parse failures observed leaving
-extraction against those the tasks counted.  The sidecar is published
+independent counts of one run: the rows observed in the JVM entering
+extraction, the rows the tasks counted (the sidecar's ``rows_out``
+total, read back by :func:`sidecar_totals`, FIXTURES.md §5.6) and the
+rows in the committed parquet footers.  The sidecar is published
 before the output, so a committed run always has its sidecar: a crash
 between the two leaves a sidecar without output, whose turns the
 resume re-extracts, replacing it.
 
 :func:`build_sidecar` is the same table as one Spark aggregation over
 an extraction output (``n_convs_approx`` approximate, no
-``python_cpu_s``); the pipeline benchmark times it as the cost the
-tallies replace.
+``python_cpu_s`` or ``python_wall_s``); the pipeline benchmark times
+it as the cost the tallies replace.
 """
 
 from __future__ import annotations
@@ -58,6 +59,7 @@ SIDECAR_SCHEMA = pa.schema([
     ("run_id", pa.string()),
     ("created_at", pa.timestamp("us", tz="UTC")),
     ("python_cpu_s", pa.float64()),
+    ("python_wall_s", pa.float64()),
 ])
 
 

@@ -4,16 +4,28 @@
       → F1 anti-join committed keys           (resume)
       → conv_id-salted repartition + secondary sort   (skew + ordering)
       → commit_run:
-          observe rows_in                     (rows entering extraction)
+          observe rows_in                     (rows entering extraction,
+                                               counted in the JVM)
           → fused mapInArrow extraction       (one Arrow pass; each task
-                                               also tallies its partition)
-          → run_id output staged              (the one Spark action)
+                                               tallies its partition and
+                                               writes its own part file
+                                               into the run's staging
+                                               dir with pyarrow)
+          → noop sink                         (the one Spark action: no
+                                               rows come back through the
+                                               JVM, no Spark write stage)
           → lineage/metrics sidecar built on the driver from the tallies,
             appended with pyarrow             (no Spark job)
           → the staged output published       (exactly-once; its rows
                                                counted from the footers)
           → three-way check: rows observed entering extraction = rows
             the tasks counted = rows in the committed files
+
+The tasks write into the output table's staging dir, so ``output_dir``
+must be a path every executor can see (any path in local mode; a shared
+mount on a cluster).  A ``BucketedTable`` output is the one exception:
+its files need Spark's bucket hashing and file naming, so Spark's
+``bucketBy`` write stages them, and that write is the action.
 
 The sidecar is published before the output, so a committed run always
 has its sidecar: a crash between the two publishes leaves a sidecar
@@ -43,6 +55,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.observation import Observation
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.sniff import CLASSES
 from ..operators.extraction import LastWins, extract_turns
@@ -75,39 +88,54 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
                side_table: Table) -> dict:
     """Extract ``todo`` with ``extract`` and commit it as run ``run_id``.
 
-    Observe → extract, each task tallying its partition → stage the
-    output → append the sidecar rows from the tallies with pyarrow →
-    publish the output → reconcile; the observe() counters and the
-    tallies fill on the staging write, the one Spark action.  ``extract``
-    takes the frame and a ``tally`` keyword (``extract_turns``'s).
+    Observe ``rows_in`` → extract, each task tallying its partition and
+    writing its own part file into ``out_table``'s staging dir → run
+    that frame into the ``noop`` sink, the one Spark action → append the
+    sidecar rows from the tallies with pyarrow → publish the output →
+    reconcile.  ``extract`` takes the frame and ``tally`` and
+    ``write_dir`` keywords (``extract_turns``'s).  A ``BucketedTable``'s
+    files need Spark's bucket hashing and file naming, so its output is
+    staged by Spark's ``bucketBy`` write instead, the action there.  A
+    run whose tasks wrote nothing (no rows) stages one schema-only part
+    file, as Spark's writer did, so the committed run reads as an empty
+    table.
+
     ``rows_in`` is observed on ``todo`` as given, after any shuffle: AQE
     swaps a shuffle stage that produced no rows, observe() included, for
     an empty relation.  Returns the sidecar totals of the committed run,
-    plus ``class_rows`` (rows per payload class that left extraction)
-    and ``phase_s`` (wall seconds of the extract+stage, and of the
-    sidecar append and output publish); raises
-    RuntimeError when the rows that entered extraction, the rows its
-    tasks counted and the rows in the committed files disagree, or the
-    parse failures observed and counted do."""
+    plus ``observed`` (``rows_in`` observed in the JVM, and the tasks'
+    ``rows_out``, ``parse_failures`` and ``empty`` totals),
+    ``class_rows`` (rows per payload class, counted by the tasks) and
+    ``phase_s`` (wall seconds of the extract+stage, and of the sidecar
+    append and output publish); raises RuntimeError when the rows that
+    entered extraction, the rows its tasks counted and the rows in the
+    committed files disagree."""
     t0 = time.perf_counter()
     # one accumulator per call, emptied once read: PySpark's driver
     # registry keeps every accumulator for the session's life
     tally = todo.sparkSession.sparkContext.accumulator({}, LastWins())
-    obs_in, obs_out = Observation("rows_in"), Observation("extract")
-    extracted = extract(
-        todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in")),
-        tally=tally)
-    extracted = extracted.observe(
-        obs_out,
-        F.count(F.lit(1)).alias("rows_out"),
-        F.sum(F.col("parse_failed").cast("long")).alias("parse_failures"),
-        F.sum(F.col("empty_after_strip").cast("long")).alias("empty"),
-        *(F.count_if(F.col("payload_class") == c).alias(f"class_{c}")
-          for c in CLASSES))
-    out_table.stage(extracted, run_id)
-    observed = {**obs_in.get, **obs_out.get}
-    class_rows = {c: observed.pop(f"class_{c}") or 0 for c in CLASSES}
+    obs_in = Observation("rows_in")
+    todo = todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
+    if isinstance(out_table, BucketedTable):
+        out_table.stage(extract(todo, tally=tally), run_id)
+    else:
+        extracted = extract(todo, tally=tally,
+                            write_dir=out_table.stage_dir(run_id))
+        extracted.write.format("noop").mode("overwrite").save()
+        if not tally.value:
+            out_table.stage(to_arrow_schema(extracted.schema).empty_table(),
+                            run_id)
     counted, tally.value = tally.value, {}
+
+    def total(col: str) -> int:
+        return sum(e[col] for e in counted.values())
+
+    observed = {"rows_in": obs_in.get["rows_in"],
+                "rows_out": total("rows_out"),
+                "parse_failures": total("parse_failures"),
+                "empty": total("empty_after_strip")}
+    class_rows = {c: sum(e["class_rows"].get(c, 0) for e in counted.values())
+                  for c in CLASSES}
     t1 = time.perf_counter()
 
     side_table.append(tally_sidecar(counted, run_id), run_id)
@@ -122,20 +150,18 @@ def _reconciled(run_id: str, out_table: Table | BucketedTable,
                 side_table: Table, observed: dict, class_rows: dict,
                 phase_s: dict) -> dict:
     """The sidecar totals of committed run ``run_id`` with ``observed``,
-    ``class_rows`` and ``phase_s`` added, once the totals agree with the
-    rows in the run's committed files and with ``observed`` (no Spark
-    job)."""
+    ``class_rows`` and ``phase_s`` added, once the rows its tasks
+    counted (the sidecar's ``rows_out``) agree with the rows in the
+    run's committed files and, when any entered, with the rows observed
+    entering extraction (no Spark job)."""
     committed = out_table.committed_rows(run_id)
     stats = sidecar_totals(side_table, run_id)
     rows_in = observed["rows_in"]
-    failures = observed["parse_failures"] or 0
-    if committed != stats["rows_out"] or (rows_in and (
-            rows_in != committed or failures != stats["parse_failures"])):
+    if committed != stats["rows_out"] or (rows_in and rows_in != committed):
         raise RuntimeError(
-            f"run {run_id!r}: extraction observed {rows_in} rows in / "
-            f"{failures} parse failures, its tasks counted "
-            f"{stats['rows_out']} / {stats['parse_failures']}, the "
-            f"committed files hold {committed} / {rows_in} rows")
+            f"run {run_id!r}: extraction observed {rows_in} rows in, its "
+            f"tasks counted {stats['rows_out']}, the committed files hold "
+            f"{committed} / {rows_in} rows")
     return {**stats, "observed": observed, "class_rows": class_rows,
             "phase_s": phase_s}
 

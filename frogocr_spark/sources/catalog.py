@@ -15,6 +15,14 @@ parquet directory with identical *semantics* behind one interface
   either leaves the run's ``.staging-``/``.replaced-`` dirs beside
   ``data/``, where no reader looks; rerunning the same run_id removes
   them.
+- ``stage_dir(run_id)``   — the emptied staging dir, for writers that
+  stage part files themselves: the pipeline's extraction tasks each
+  write one with pyarrow (``plans.pipeline.commit_run`` runs them into
+  the ``noop`` sink, the run's one Spark action), so a ``Table`` the
+  pipeline writes needs a ``path`` every executor can see.  The
+  pipeline then checks three counts of the run: the rows observed in
+  the JVM entering extraction, the rows the tasks counted, and
+  ``committed_rows`` from the published footers.
 - ``read()``              — full table scan.
 - ``snapshots()``         — committed run_ids; ``committed_rows(run_id)``
   — a run's row count from the parquet footers (no Spark job).
@@ -78,15 +86,24 @@ class Table:
         # recursive lookup and must never see half-written/deleted files
         return os.path.join(self.path, f".staging-run_id={run_id}")
 
-    def stage(self, df: DataFrame | pa.Table, run_id: str) -> None:
-        """Write ``df`` as run ``run_id``'s next version into a staging
-        dir that no reader sees (any earlier staged write is dropped)."""
+    def stage_dir(self, run_id: str) -> str:
+        """Run ``run_id``'s staging dir, emptied (any earlier staged write
+        is dropped) and created: the dir :meth:`publish` commits.  A
+        writer other than :meth:`stage` puts its part files there itself
+        (the extraction tasks, ``plans.pipeline.commit_run``), so it must
+        be a path every executor can see."""
         import shutil
 
         staging = self._staging(run_id)
         shutil.rmtree(staging, ignore_errors=True)
+        os.makedirs(staging)
+        return staging
+
+    def stage(self, df: DataFrame | pa.Table, run_id: str) -> None:
+        """Write ``df`` as run ``run_id``'s next version into a staging
+        dir that no reader sees (any earlier staged write is dropped)."""
+        staging = self.stage_dir(run_id)
         if isinstance(df, pa.Table):
-            os.makedirs(staging)
             pq.write_table(df, os.path.join(staging, "part-00000.parquet"))
         else:
             df.write.mode("overwrite").parquet(staging)
@@ -106,13 +123,20 @@ class Table:
         implementation did exactly that); with nothing staged at all, the
         publish only removes the run's leftover staged and set-aside
         dirs.  An empty result with no prior dir still publishes (a
-        legitimately-empty run is recorded)."""
+        legitimately-empty run is recorded).  A staged part file still
+        under a dot-prefixed temp name (a task attempt that failed or was
+        killed before its rename) is deleted first: no reader reads it,
+        and it must not reach a committed run."""
         import shutil
 
         out = os.path.join(self.data_dir, f"run_id={run_id}")
         staging = self._staging(run_id)
         replaced = os.path.join(self.path, f".replaced-run_id={run_id}")
         shutil.rmtree(replaced, ignore_errors=True)
+        if os.path.isdir(staging):
+            for f in os.listdir(staging):
+                if f.startswith(".") and f.endswith(".parquet"):
+                    os.remove(os.path.join(staging, f))
         # footer row counts, no Spark job: an empty DataFrame writes one
         # schema-only part file, and a corrupt footer raises here instead
         # of passing for empty (which would discard real new rows)

@@ -127,3 +127,21 @@ def test_append_publish_crash_never_shows_part_of_a_run(spark, tmp_path,
         fail_at += 1
     assert rows(t) == want_new
     assert fail_at >= 3      # both renames and the cleanup were each hit
+
+
+def test_publish_deletes_a_failed_attempts_temp_file(spark, tmp_path):
+    """A part file a task attempt left under its dot-prefixed temp name
+    (it failed or was killed before its rename) is deleted by the
+    publish: only renamed part files reach the committed run."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = Table(spark, str(tmp_path / "tbl"))
+    staging = t.stage_dir("r1")
+    for name, ids in (("part-00000.parquet", [1, 2]),
+                      (".part-00001-0123abcd.parquet", [3])):
+        pq.write_table(pa.table({"id": ids}), os.path.join(staging, name))
+    t.publish("r1")
+    assert os.listdir(os.path.join(t.data_dir, "run_id=r1")) == [
+        "part-00000.parquet"]
+    assert t.committed_rows("r1") == 2

@@ -1,10 +1,12 @@
 """End-to-end Spark pipeline: oracle parity, determinism under
 repartitioning, resume exactly-once, skew, sidecar reconciliation from
-the extraction tasks' tallies, Spark jobs per run (FIXTURES.md §5
-invariants 1, 2, 5, 6)."""
+the extraction tasks' tallies, the tasks' own part-file writes, Spark
+jobs per run (FIXTURES.md §5 invariants 1, 2, 5, 6)."""
 
+import os
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.parquet as pq
 import pytest
 
 from frogocr_spark.core.extract import extract_turn
@@ -17,7 +19,7 @@ from frogocr_spark.plans.metrics import TOTALS
 from frogocr_spark.plans.pipeline import (PipelineConfig, commit_run,
                                           run_extraction)
 from frogocr_spark.sources import payloadgen, transcripts
-from frogocr_spark.sources.catalog import BucketedTable, Table
+from frogocr_spark.sources.catalog import BucketedTable, Table, footer_rows
 
 N_CONVS = 40
 
@@ -79,7 +81,8 @@ def test_pipeline_end_to_end_with_sidecar(spark, tdf, oracle, tmp_path):
     stats = run_extraction(spark, tdf, cfg)
     assert stats["rows_in"] == len(oracle)
     assert stats["rows_in"] == stats["rows_out"]
-    # per-class rows from the extraction observe(): they partition rows_in
+    # per-class rows counted by the extraction tasks: they partition
+    # rows_in
     assert sum(stats["class_rows"].values()) == stats["observed"]["rows_in"]
     assert stats["class_rows"] == {
         c: sum(rec["payload_class"] == c for rec in oracle.values())
@@ -100,6 +103,7 @@ def test_pipeline_end_to_end_with_sidecar(spark, tdf, oracle, tmp_path):
     assert sum(r.rows_in for r in side) == stats["observed"]["rows_in"]
     assert sum(r.rows_out for r in side) == len(oracle)
     assert all(r.python_cpu_s > 0 for r in side)
+    assert all(r.python_wall_s >= r.python_cpu_s > 0 for r in side)
     n_failures = sum(1 for rec in oracle.values() if rec["parse_failed"])
     assert sum(r.parse_failures for r in side) == n_failures
     n_empty = sum(1 for rec in oracle.values() if rec["empty_after_strip"])
@@ -205,20 +209,25 @@ def test_blind_retry_of_completed_run_keeps_data(spark, tmp_path):
 
 
 def test_reconciliation_mismatch_raises(spark, tdf, tmp_path, monkeypatch):
-    """Rows lost between the observed extraction and the committed files
-    (here: the output append drops turn_idx 3) fail the run loudly — a
-    RuntimeError carrying both counts, not an assert ``python -O``
-    strips."""
+    """Rows lost between the tasks' write and the committed files (here:
+    the staged part files lose turn_idx 3 just before the output
+    publish) fail the run loudly — a RuntimeError carrying both counts,
+    not an assert ``python -O`` strips."""
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
-    stage = Table.stage
+    publish = Table.publish
 
-    def lossy_stage(self, df, run_id):
+    def lossy_publish(self, run_id):
         if self.path.endswith("extractions"):
-            df = df.where(F.col("turn_idx") != 3)
-        stage(self, df, run_id)
+            staging = self._staging(run_id)
+            for f in os.listdir(staging):
+                part = os.path.join(staging, f)
+                t = pq.read_table(part)
+                pq.write_table(t.filter(pc.field("turn_idx") != 3), part)
+        publish(self, run_id)
 
-    monkeypatch.setattr(Table, "stage", lossy_stage)
+    monkeypatch.setattr(Table, "publish", lossy_publish)
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
                          salt_buckets=0)
     n = tdf.count()
@@ -230,16 +239,16 @@ def test_reconciliation_mismatch_raises(spark, tdf, tmp_path, monkeypatch):
 
 def test_extraction_row_loss_raises_through_rows_in(spark, tdf, tmp_path,
                                                     monkeypatch):
-    """rows_in is observed on the frame that enters extraction, so rows
-    the extraction itself drops (here: turn_idx 3) fail the
-    reconciliation, although the extraction output and the committed
-    files agree with each other."""
+    """rows_in is observed in the JVM on the frame that enters
+    extraction, so rows lost after that (here: turn_idx 3, dropped
+    before the tasks see them) fail the reconciliation, although the
+    tasks' counts and the committed files agree with each other."""
     from pyspark.sql import functions as F
 
     extract = pipeline.extract_turns
     monkeypatch.setattr(
         pipeline, "extract_turns",
-        lambda df, **kw: extract(df, **kw).where(F.col("turn_idx") != 3))
+        lambda df, **kw: extract(df.where(F.col("turn_idx") != 3), **kw))
     cfg = PipelineConfig(output_dir=str(tmp_path), run_id="lossy",
                          num_partitions=4)
     n = tdf.count()
@@ -303,10 +312,54 @@ def test_partition_with_no_rows_writes_no_sidecar_row(spark, tdf, tmp_path):
     assert all(r.rows_in == 1 for r in rows)
 
 
+def test_task_write_run_twice_leaves_one_part_file(spark, tdf, tmp_path):
+    """One partition's write run twice, as a re-executed task would run
+    it: the second attempt's file replaces the first under the same
+    name, so the dir holds one part file with the partition's rows, no
+    temp file, and a footer that agrees with the tally."""
+    acc = spark.sparkContext.accumulator({}, LastWins())
+    out = extract_turns(tdf.coalesce(1), tally=acc, write_dir=str(tmp_path))
+    for _ in range(2):
+        out.write.format("noop").mode("overwrite").save()
+    assert os.listdir(tmp_path) == ["part-00000.parquet"]
+    assert footer_rows(str(tmp_path)) == acc.value[0]["rows_out"] \
+        == tdf.count()
+    keys = pq.read_table(tmp_path / "part-00000.parquet",
+                         columns=["conv_id", "turn_idx"]).to_pydict()
+    assert sorted(zip(keys["conv_id"], keys["turn_idx"])) == sorted(
+        tdf.select("conv_id", "turn_idx").collect())
+
+
+def test_empty_run_commits_a_schema_only_part_file(spark, tdf, tmp_path):
+    """A run whose tasks wrote nothing commits one schema-only part
+    file, as Spark's writer did, with the schema the tasks give theirs:
+    the run reads as an empty table and the resume check finds no
+    keys in it."""
+    out = Table(spark, str(tmp_path / "extractions"))
+    side = Table(spark, str(tmp_path / "metrics"))
+    stats = commit_run(tdf.limit(0), extract_turns, "empty", out, side)
+    assert stats["rows_out"] == stats["observed"]["rows_in"] == 0
+    assert out.snapshots() == ["empty"]
+    empty_dir = os.path.join(out.data_dir, "run_id=empty")
+    assert os.listdir(empty_dir) == ["part-00000.parquet"]
+    assert out.read().count() == 0
+    assert out.read().columns == extract_turns(tdf).columns
+    keys = out.processed_keys("conv_id", "turn_idx")
+    assert keys is not None and keys.count() == 0
+
+    commit_run(tdf.limit(5), extract_turns, "full", out, side)
+    full_dir = os.path.join(out.data_dir, "run_id=full")
+    schemas = {str(pq.read_schema(os.path.join(d, f)))
+               for d in (empty_dir, full_dir) for f in os.listdir(d)}
+    assert len(schemas) == 1
+
+
 def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
-    """A fresh run is two Spark jobs, the salted shuffle and the output
-    write; nothing after the output write runs one.  A new hidden job
-    (a schema inference, a read-back) fails this test."""
+    """A fresh run is two Spark jobs, the salted shuffle and the noop
+    action whose tasks write the output; nothing after it runs one.  A
+    new hidden job (a schema inference, a read-back) fails this test."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
     sc = spark.sparkContext
     group = "test-fresh-run-jobs"
 
@@ -315,14 +368,13 @@ def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     after_output = []
-    stage = Table.stage
+    save = DataFrameWriter.save
 
-    def counting_stage(self, df, run_id):
-        stage(self, df, run_id)
-        if self.path.endswith("extractions"):
-            after_output.append(jobs())
+    def counting_save(self, *args, **kwargs):
+        save(self, *args, **kwargs)
+        after_output.append(jobs())
 
-    monkeypatch.setattr(Table, "stage", counting_stage)
+    monkeypatch.setattr(DataFrameWriter, "save", counting_save)
     tdf = transcripts.generate(spark, 500)
     sc.setLocalProperty("spark.jobGroup.id", group)
     try:
