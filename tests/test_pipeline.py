@@ -1,9 +1,14 @@
 """End-to-end Spark pipeline: oracle parity, determinism under
 repartitioning, resume exactly-once, skew, sidecar reconciliation from
-the extraction tasks' tallies, the tasks' own part-file writes, Spark
-jobs per run (FIXTURES.md §5 invariants 1, 2, 5, 6)."""
+the extraction tasks' tallies, the tasks' own part-file writes (a
+retried task's included), the workers' frozen import heap, Spark jobs
+per run (FIXTURES.md §5 invariants 1, 2, 5, 6)."""
 
+import gc
+import json
 import os
+import subprocess
+import sys
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as pq
@@ -260,8 +265,9 @@ def test_extraction_row_loss_raises_through_rows_in(spark, tdf, tmp_path,
 
 def test_last_wins_merge_counts_a_partition_once(spark):
     """A partition's entry added twice (a re-executed task) counts
-    once.  A real task failure cannot be injected: the shared local
-    session runs with spark.task.maxFailures=1."""
+    once.  The shared local session runs with spark.task.maxFailures=1,
+    so a real retried task runs in its own session
+    (``test_retried_task_commits_each_row_once``)."""
     acc = spark.sparkContext.accumulator({}, LastWins())
     for pid in (3, 3, 4):
         acc.add({pid: {"rows_in": 5, "rows_out": 5}})
@@ -328,6 +334,103 @@ def test_task_write_run_twice_leaves_one_part_file(spark, tdf, tmp_path):
                          columns=["conv_id", "turn_idx"]).to_pydict()
     assert sorted(zip(keys["conv_id"], keys["turn_idx"])) == sorted(
         tdf.select("conv_id", "turn_idx").collect())
+
+
+# Runs in its own process: a retry needs a local[N,F] master, and the
+# shared session's local[N] fails a job at its first task failure.
+_RETRY_RUN = """
+import json, os, sys
+from pyspark.sql import SparkSession
+from frogocr_spark.operators.extraction import extract_turns
+from frogocr_spark.plans.pipeline import commit_run
+from frogocr_spark.sources import payloadgen
+from frogocr_spark.sources.catalog import Table
+
+root = sys.argv[1]
+spark = (SparkSession.builder.master("local[2,2]").appName("retry")
+         .config("spark.ui.enabled", "false")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+out = Table(spark, os.path.join(root, "extractions"))
+side = Table(spark, os.path.join(root, "metrics"))
+staging = out._staging("r1")
+seen = os.path.join(root, "failed_attempt_saw.json")
+
+
+def fail_first_attempt(batches):
+    from pyspark import TaskContext
+    for _ in batches:        # ends once the extraction task's file is in place
+        pass
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 1 and ctx.attemptNumber() == 0:
+        with open(seen, "w") as fh:
+            json.dump(sorted(os.listdir(staging)), fh)
+        raise RuntimeError("injected failure after the part file was written")
+    yield from ()
+
+
+def extract(df, **kw):
+    extracted = extract_turns(df, **kw)
+    return extracted.mapInArrow(fail_first_attempt, extracted.schema)
+
+
+rows = list(payloadgen.gen_transcripts(20))
+stats = commit_run(spark.createDataFrame(rows).repartition(4), extract, "r1",
+                   out, side)
+print(json.dumps({"keys": [[r["conv_id"], r["turn_idx"]] for r in rows],
+                  "rows_out": stats["rows_out"],
+                  "rows_in": stats["observed"]["rows_in"],
+                  "run_dir": os.path.join(out.data_dir, "run_id=r1")}))
+spark.stop()
+"""
+
+
+def test_retried_task_commits_each_row_once(tmp_path):
+    """A task whose first attempt fails after it renamed its part file
+    into the staging dir runs again and replaces that file: the run
+    commits one part file per partition, no temp file, and every input
+    row exactly once."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run(
+        [sys.executable, "-c", _RETRY_RUN, str(tmp_path)], cwd=root,
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "PYTHONPATH": root})
+    assert done.returncode == 0, done.stderr[-3000:]
+    res = json.loads(done.stdout.strip().splitlines()[-1])
+    with open(tmp_path / "failed_attempt_saw.json") as fh:
+        assert "part-00001.parquet" in json.load(fh)
+    files = sorted(os.listdir(res["run_dir"]))
+    assert files == [f"part-{p:05d}.parquet" for p in range(4)]
+    committed = pq.read_table(res["run_dir"],
+                              columns=["conv_id", "turn_idx"]).to_pydict()
+    keys = sorted(zip(committed["conv_id"], committed["turn_idx"]))
+    assert len(keys) == len(set(keys))
+    assert keys == sorted(map(tuple, res["keys"]))
+    assert res["rows_out"] == res["rows_in"] == len(keys)
+
+
+def test_workers_freeze_their_import_heap_and_the_driver_does_not(
+        spark, tdf):
+    """After an extraction over four partitions, the Python workers that
+    ran it report a frozen import heap (``gc.get_freeze_count() > 0``),
+    and the driver process, which only plans the operator, froze
+    nothing."""
+    extract_turns(tdf.repartition(4)).write.format("noop") \
+        .mode("overwrite").save()
+
+    def probe(batches):
+        import gc
+
+        import pyarrow as pa
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({"frozen": [gc.get_freeze_count()]})
+
+    # more probe tasks than the session keeps idle workers, so the
+    # workers that ran the extraction are among those probed
+    rows = spark.range(32, numPartitions=32).mapInArrow(
+        probe, "frozen long").collect()
+    assert max(r.frozen for r in rows) > 0
+    assert gc.get_freeze_count() == 0
 
 
 def test_empty_run_commits_a_schema_only_part_file(spark, tdf, tmp_path):

@@ -1,9 +1,15 @@
-"""The extraction operator's stat-checked zip-import cache reset
-(``operators.extraction._skip_unchanged_zip_rereads``), pure Python, no
-Spark.  Every test restores the process's ``zipimporter`` through
-``monkeypatch``, so the patch does not leak into later tests."""
+"""The extraction operator's one-time Python worker installs, pure
+Python, no Spark: the stat-checked zip-import cache reset
+(``operators.extraction._skip_unchanged_zip_rereads``) and the import
+heap freeze (``_freeze_import_heap``).  Every zip test restores the
+process's ``zipimporter`` through ``monkeypatch``, so the patch does not
+leak into later tests; the freeze runs in a subprocess, so this
+process's garbage collector is left alone."""
 
 import importlib
+import json
+import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -96,3 +102,41 @@ def test_noop_on_lazy_invalidating_python(monkeypatch):
     monkeypatch.setattr(sys, "version_info", (3, 12, 0, "final", 0))
     _skip_unchanged_zip_rereads()
     assert zipimport.zipimporter.invalidate_caches is before
+
+
+# argv[1] names the freeze under test: the operator's helper, or
+# gc.freeze itself, which freezes again at every call
+_FREEZE_RUN = """
+import gc, json, sys
+import pandas, pyarrow, pyarrow.compute, pyarrow.parquet
+from frogocr_spark.operators import extraction
+freeze = {"helper": extraction._freeze_import_heap,
+          "every_call": gc.freeze}[sys.argv[1]]
+tracked = len(gc.get_objects())
+freeze()
+first = gc.get_freeze_count()
+young = [[i] for i in range(1000)]
+freeze()
+print(json.dumps({"tracked": tracked, "first": first,
+                  "second": gc.get_freeze_count()}))
+"""
+
+
+def _freeze_counts(freeze: str) -> dict:
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run([sys.executable, "-c", _FREEZE_RUN, freeze],
+                          cwd=root, capture_output=True, text=True,
+                          timeout=300, env={**os.environ, "PYTHONPATH": root})
+    assert done.returncode == 0, done.stderr[-3000:]
+    return json.loads(done.stdout.strip().splitlines()[-1])
+
+
+def _frozen_once(c: dict) -> bool:
+    """The first call froze every object the imports had tracked; the
+    second, made after new objects exist, froze nothing more."""
+    return c["first"] >= c["tracked"] and c["second"] == c["first"]
+
+
+def test_import_heap_is_frozen_once_per_process():
+    assert _frozen_once(_freeze_counts("helper"))
+    assert not _frozen_once(_freeze_counts("every_call"))
