@@ -13,8 +13,8 @@ DataFrame pipeline over multi-turn agent transcripts:
 - ``streaming/``  Structured Streaming variant of the pipeline
 
 Design notes (SURVEY.md §4, §7): zero custom Catalyst rules; the custom
-pieces are (a) conv_id-salted repartition + secondary sort for skew + stable
-turn ordering, (b) snapshot/manifest bookkeeping for resumability, (c) the
+pieces are (a) conv_id-salted repartition + secondary sort where the scan's
+splits do not bound the tasks or a resume run's new rows need packing, (b) snapshot/manifest bookkeeping for resumability, (c) the
 extraction core itself, executed as Arrow-batched ``mapInArrow`` — never
 per-row Python UDFs.
 """

@@ -54,7 +54,6 @@ import json
 
 # absolute imports: spark-submit executes this file as a top-level script
 # (no parent package); the package itself ships via --py-files
-from frogocr_spark.operators.skew import DEFAULT_SALT_BUCKETS
 from frogocr_spark.plans.pipeline import PipelineConfig, run_extraction
 from frogocr_spark.session import get_spark
 from frogocr_spark.sources import transcripts
@@ -77,7 +76,13 @@ def main(argv: list[str] | None = None) -> None:
                         "rerun of a committed id raises if the input has "
                         "new turns, so give new input a new id")
     p.add_argument("--partitions", type=int, default=None)
-    p.add_argument("--salt-buckets", type=int, default=DEFAULT_SALT_BUCKETS)
+    p.add_argument("--salt-buckets", type=int, default=None,
+                   help="buckets of the conv_id-salted shuffle before "
+                        "extraction; 0 runs map-only over the scan's "
+                        "splits.  Default: salt only a resume run over "
+                        "committed turns (to pack its new turns into few "
+                        "files), a --partitions run, a generated input or "
+                        "a parquet row group larger than a scan split")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--bucketed-table", default=None,
                    help="write output to a conv_id-bucketed session table "

@@ -190,7 +190,8 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     runs of equal consecutive ``conv_id``s, so a task's state is a few
     numbers whatever its size: it is the exact distinct count when the
     partition is sorted by ``conv_id`` (``salted_repartition`` sorts
-    it), an upper bound otherwise.  A partition with no rows adds
+    it), an upper bound otherwise (a map-only partition keeps the
+    input's row order).  A partition with no rows adds
     nothing.  Needs ``with_partition_id`` and ``conv_id`` among the
     passthrough columns.
     ``write_dir`` = optional directory every executor can see: each task
@@ -270,10 +271,10 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                 tmp = os.path.join(write_dir, f".part-{pid:05d}-"
                                               f"{uuid.uuid4().hex}.parquet")
                 # snappy and dictionary encoding, as Spark's writer.  No
-                # min/max statistics: a task's rows are a hash-spread set
-                # of conversations, so its key ranges span nearly the
-                # whole key space and prune nothing, and no reader
-                # filters on the text and span columns (0.4% of
+                # min/max statistics: no reader filters on the keys (the
+                # resume anti-join reads every committed key, and a
+                # salted task's rows span nearly the whole key space
+                # anyway) or on the text and span columns (0.4% of
                 # agent_resume's output bytes).  No Arrow schema in the
                 # footer (1.5%): Spark and pyarrow read the types from
                 # the parquet schema.

@@ -1,23 +1,44 @@
-"""conv_id-salted repartition + secondary sort (SURVEY §4 custom piece a).
+"""The run's partitioning: map-only over the scan's own splits, or a
+conv_id-salted repartition + secondary sort (SURVEY §4 custom piece a).
 
 Extraction is a pure per-row map, so correctness never depends on
 partitioning — ordering comes from the ``(conv_id, turn_idx)`` data keys,
-never from partition iteration order (SURVEY §7 hard part 2).  But at
-10^12 turns a hash-repartition on ``conv_id`` alone would put a
-10^4-turn conversation (the long-agent-session skew case) into one task.
+never from partition iteration order (SURVEY §7 hard part 2) — and the
+extraction tasks write the output themselves, so no per-conversation
+operator reads their partitions.  A parquet scan already bounds each
+task: Spark cuts the files into splits of at most
+``FilePartition.maxSplitBytes`` and a split reads the row groups whose
+midpoint it holds, so a hot conversation in ordinary row groups is
+spread over the splits.  :func:`salt_buckets_for` keeps that map-only
+plan whenever it holds, and salts otherwise:
+
+- a row group larger than a split would be one oversized task, and an
+  input that is not a file scan (a generated frame) has no splits to
+  bound it;
+- a resume run's anti-join leaves a sparse set of new rows over the
+  scan's splits; the shuffle lets AQE pack them into few tasks, so few
+  output files, each with its own column dictionaries (map-only spread
+  ``agent_resume``'s 5.2k new turns over 3 files, +24% bytes per turn);
+- an explicit partition count asks for a repartition.
+
 Salting on ``pmod(turn_idx, salt_buckets)`` splits hot conversations
-across ``salt_buckets`` tasks while keeping small conversations one-task;
-``sortWithinPartitions(conv_id, turn_idx)`` then restores stable turn
-order inside every task so Arrow batches see contiguous turns (locality
-for downstream per-conv ops + deterministic batch content).
+across ``salt_buckets`` tasks while keeping small conversations
+one-task (a hash-repartition on ``conv_id`` alone would put a
+10^4-turn conversation into one task);
+``sortWithinPartitions(conv_id, turn_idx)`` then gives every task
+contiguous turns, so its Arrow batches have deterministic content.
 
 The reference has no cross-task shuffle at all (FIFO thread dispatch —
-``Source/Application.cpp:318-335``); this module is the Spark-native
-replacement for that scheduler.
+``Source/Application.cpp:318-335``).
 """
 
 from __future__ import annotations
 
+import os
+from urllib.parse import unquote, urlparse
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -37,81 +58,62 @@ def salted_repartition(df: DataFrame, num_partitions: int | None = None,
     return out.sortWithinPartitions(conv_col, turn_col)
 
 
-def salted_equi_join(fact: DataFrame, dim: DataFrame, key: str,
-                     salt_buckets: int = 8, *, fact_salt_col: str,
-                     how: str = "inner") -> DataFrame:
-    """Skew-salted equi-join: spread a hot join key's fact rows over
-    ``salt_buckets`` tasks by joining on ``(key, salt)`` with the dim
-    side REPLICATED once per salt value — the standard hand-salting
-    remedy when the key cardinality is below the task count or one key
-    dominates (the hazard class AQE's byte-based skew split cannot
-    always see; cf. the LSH hot-bucket analysis in tests/test_plans.py).
-
-    The salt is DETERMINISTIC — ``pmod(xxhash64(fact_salt_col), B)``
-    over a fact-side column (use a unique id) — never ``rand()``, so
-    retried/recomputed tasks salt identically (a rand() salt breaks
-    exactly-once under task retry).  The dim side explodes a literal
-    0..B-1 sequence (B× replication of the SMALL side only).  A
-    ``shuffle_hash`` hint pins the non-broadcast path: with a broadcast
-    dim the salt would be a no-op; the hint makes the salted shuffle
-    the demonstrated plan at any dim size.
-
-    Semantics: exactly an equi-join on ``key`` (every fact row meets
-    every matching dim row exactly once — it carries one salt value and
-    the dim has exactly one replica per salt).  Output: the plain-join
-    columns (salt dropped)."""
-    if salt_buckets < 1:
-        raise ValueError(f"salt_buckets must be >= 1, got {salt_buckets}")
-    fact_s = fact.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(F.col(fact_salt_col)),
-               F.lit(salt_buckets)).cast("int"))
-    dim_s = dim.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_buckets - 1))))
-    return (fact_s.join(dim_s.hint("shuffle_hash"),
-                        [key, "_salt"], how)
-            .drop("_salt"))
+def salt_buckets_for(df: DataFrame, num_partitions: int | None,
+                     resumed: bool) -> int:
+    """The salt a run over input ``df`` takes when none is given:
+    ``DEFAULT_SALT_BUCKETS`` when ``num_partitions`` is set, when the
+    run resumes over committed keys (``resumed``) or when the scan's
+    splits do not bound its tasks (:func:`_splits_bound_tasks`); 0, the
+    map-only plan, otherwise.  Decided on the driver: no Spark job."""
+    if num_partitions or resumed or not _splits_bound_tasks(df):
+        return DEFAULT_SALT_BUCKETS
+    return 0
 
 
-def skew_report(df: DataFrame, key_col: str,
-                top_k: int = 10) -> DataFrame:
-    """Key-distribution skew diagnosis for a prospective join/agg key —
-    the measurement that DECIDES between a plain join,
-    :func:`salted_equi_join`, and a broadcast: top-``top_k`` heavy keys
-    plus exact integer Gini ingredients of the whole key distribution.
+def _splits_bound_tasks(df: DataFrame) -> bool:
+    """Whether ``df`` is a file scan whose every row group fits in one of
+    the scan's splits.  The split size is Spark's
+    ``FilePartition.maxSplitBytes`` over ``df.inputFiles()``; only files
+    larger than it have their parquet footer read, and a row group's
+    size is its columns' compressed bytes, the span a split's midpoint
+    rule assigns whole.  False for a frame with no input files, and when
+    the driver cannot stat or read one (a path it does not see)."""
+    files = df.inputFiles()
+    if not files:
+        return False
+    jspark = df.sparkSession._jsparkSession
+    conf = jspark.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (min_parts.get() if min_parts.isDefined()
+                 else jspark.leafNodeDefaultParallelism())
+    try:
+        sizes = {path: os.path.getsize(path)
+                 for path in map(_local_path, files)}
+        split = min(conf.filesMaxPartitionBytes(),
+                    max(open_cost,
+                        sum(s + open_cost for s in sizes.values())
+                        // min_parts))
+        return all(_largest_row_group(path) <= split
+                   for path, size in sizes.items() if size > split)
+    except (OSError, ValueError, pa.ArrowException):
+        return False
 
-    Gini numerator over counts sorted ascending (rank i of n keys):
-    ``G_num = Σ (2i − n − 1)·c_i`` with ``G = G_num / (n · total)`` —
-    all-integer, order-pinned by (count, key), no float summation.
 
-    Scale shape: one map-side-combined key count; the rank comes from
-    the range-partitioned :func:`~frogocr_spark.operators.ranking.
-    global_rank` (no single-partition window at any key cardinality);
-    the heavy-key cut is TakeOrderedAndProject; the 1-row Gini/total
-    aggregate cross-joins (broadcast) onto the ``top_k`` rows.  EAGER
-    at plan-construction (global_rank).  Output: ``rank, key, cnt,
-    n_keys, n_rows, gini_num`` — one row per heavy key."""
-    from frogocr_spark.operators.ranking import global_rank
+def _local_path(uri: str) -> str:
+    """The local path of an input file URI; ValueError for a file system
+    the driver cannot stat."""
+    parsed = urlparse(uri)
+    if parsed.scheme not in ("", "file"):
+        raise ValueError(f"not a local file: {uri}")
+    return unquote(parsed.path)
 
-    counts = (df.select(F.col(key_col).alias("key"))
-              .groupBy("key").agg(F.count(F.lit(1)).alias("cnt")))
-    ranked = global_rank(counts, ["cnt", "key"], "_i")
-    # Σ(2i − n − 1)·c = 2Σ(i·c) − (n+1)·Σc — one map-side-combined agg,
-    # the (n+1) term folded in afterwards (no global window anywhere)
-    summary = (ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum("cnt").cast("long").alias("n_rows"),
-        F.sum(2 * F.col("_i") * F.col("cnt")).cast("long").alias("_s2ic"))
-        .select("n_keys", "n_rows",
-                (F.col("_s2ic") - (F.col("n_keys") + 1)
-                 * F.col("n_rows")).alias("gini_num")))
-    # heavy keys: TakeOrdered cut first, the rank stamped on the
-    # top_k survivors only (a window over top_k rows, not the universe)
-    from pyspark.sql import Window
-    heavy = (counts.orderBy(F.desc("cnt"), F.asc("key")).limit(top_k)
-             .withColumn("rank", F.row_number().over(
-                 Window.orderBy(F.desc("cnt"), F.asc("key"))))
-             .select("rank", "key", F.col("cnt").cast("long")
-                     .alias("cnt")))
-    return heavy.crossJoin(F.broadcast(summary))
+
+def _largest_row_group(path: str) -> int:
+    """Compressed bytes of the largest row group in parquet file ``path``,
+    from its footer."""
+    meta = pq.read_metadata(path)
+    return max((sum(rg.column(c).total_compressed_size
+                    for c in range(rg.num_columns))
+                for rg in map(meta.row_group, range(meta.num_row_groups))),
+               default=0)

@@ -14,9 +14,11 @@ accumulator (``operators.extraction.extract_turns(tally=...)``), and
 :func:`tally_sidecar` turns those entries into the sidecar rows on the
 driver; the pipeline writes them with pyarrow, so no Spark job runs
 after the extraction (whose tasks write the output).
-``n_convs_approx`` counts runs of equal consecutive ``conv_id``s
-(exact within a partition sorted by ``conv_id``, as the salted shuffle
-leaves it), ``python_cpu_s`` is the task's Python worker CPU seconds
+``n_convs_approx`` counts runs of equal consecutive ``conv_id``s:
+exact within a partition sorted by ``conv_id``, as the salted shuffle
+leaves it, and an upper bound in a map-only run's partition, which
+keeps the input's row order (it counts a conversation once per run of
+its turns).  ``python_cpu_s`` is the task's Python worker CPU seconds
 and ``python_wall_s`` its wall seconds, from the start of its UDF body
 to the rename of its part file (input waits and the write included).
 

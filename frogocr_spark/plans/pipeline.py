@@ -2,7 +2,8 @@
 
     read(transcripts)
       → F1 anti-join committed keys           (resume)
-      → conv_id-salted repartition + secondary sort   (skew + ordering)
+      → the scan's own splits, or a conv_id-salted repartition +
+        secondary sort                        (chosen on the driver)
       → commit_run:
           observe rows_in                     (rows entering extraction,
                                                counted in the JVM)
@@ -40,9 +41,15 @@ drain and continuous modes (``Source/Application.cpp:287-336``).
 
 Scale notes: every step before the UDF is Catalyst-planned (scan with
 column pruning, anti-join broadcast/shuffle via AQE); the UDF itself is
-embarrassingly parallel; the only shuffles are the anti-join (resume runs
-only) and the salted repartition — both keyed, skew-safe, and independent
-of total table size per-partition.
+embarrassingly parallel.  A fresh run over parquet whose row groups fit
+the scan's splits is map-only: the splits bound every task, so it runs
+no shuffle and is one Spark job.  Otherwise the run salts
+(``operators.skew.salt_buckets_for``): a resume run, so AQE packs the
+anti-join's survivors into few tasks and output files; a row group
+larger than a split, or an input that is not a file scan, so no task
+gets a hot conversation whole.  The only shuffles are then the
+anti-join (resume runs only) and the salted repartition, both keyed and
+skew-safe.
 """
 
 from __future__ import annotations
@@ -60,7 +67,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..core.sniff import CLASSES
 from ..operators.extraction import LastWins, extract_turns
 from ..operators.resume import filter_unprocessed
-from ..operators.skew import DEFAULT_SALT_BUCKETS, salted_repartition
+from ..operators.skew import salt_buckets_for, salted_repartition
 from ..sources.catalog import BucketedTable, Table
 # build_sidecar is not called here; it stays bound as
 # pipeline.build_sidecar, which the pipeline benchmark's traced run wraps
@@ -72,7 +79,9 @@ class PipelineConfig:
     output_dir: str
     run_id: str = "r0"
     num_partitions: int | None = None
-    salt_buckets: int = DEFAULT_SALT_BUCKETS
+    # None: decide per run (operators.skew.salt_buckets_for); N > 0
+    # forces the salted shuffle with N buckets, 0 the map-only plan
+    salt_buckets: int | None = None
     resume: bool = True
     # bucketed output layout (the 10^12-row resume path): when set, the
     # extraction output lands in a conv_id-bucketed session table of this
@@ -170,8 +179,11 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
                    cfg: PipelineConfig) -> dict:
     """Execute the pipeline; returns run stats from the sidecar (see
     :func:`commit_run`), with ``phase_s["resume_check"]``: the wall
-    seconds of the committed-key lookup and committed-``run_id`` check
-    (the anti-join itself runs inside ``extract_append``).
+    seconds of the committed-key lookup, committed-``run_id`` check and
+    plan choice (the anti-join itself runs inside ``extract_append``),
+    and, when the run extracted, ``salt_buckets``: the salt it used, 0
+    for the map-only plan (``cfg.salt_buckets``, or when that is None
+    the choice of :func:`~frogocr_spark.operators.skew.salt_buckets_for`).
 
     With resume on, a rerun under an already-committed ``run_id`` that
     still finds new rows raises ValueError before writing anything: the
@@ -187,10 +199,10 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     side_table = Table(spark, os.path.join(cfg.output_dir, "metrics"))
 
     t0 = time.perf_counter()
-    todo = transcripts
+    todo, committed = transcripts, None
     if cfg.resume:
-        todo = filter_unprocessed(
-            todo, out_table.processed_keys("conv_id", "turn_idx"))
+        committed = out_table.processed_keys("conv_id", "turn_idx")
+        todo = filter_unprocessed(todo, committed)
         if cfg.run_id in out_table.snapshots():
             if not todo.isEmpty():
                 raise ValueError(
@@ -209,17 +221,21 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
                 dict.fromkeys(CLASSES, 0),
                 {"resume_check": round(time.perf_counter() - t0, 3),
                  "extract_append": 0.0, "sidecar": 0.0})
+    # 0 → map-only (zero shuffles; extraction is per-row, so any plan
+    # gives the same rows): the scan's splits bound the tasks.  The
+    # salted shuffle packs a resume run's anti-join survivors into few
+    # output files and splits oversized row groups and non-file inputs.
+    salt = cfg.salt_buckets
+    if salt is None:
+        salt = salt_buckets_for(transcripts, cfg.num_partitions,
+                                resumed=committed is not None)
     resume_s = time.perf_counter() - t0
 
-    # salt_buckets=0 → map-only plan (zero shuffles): correct whenever the
-    # input layout already bounds task sizes (parquet maxPartitionBytes
-    # splits a hot conversation's files automatically, and extraction is
-    # per-row).  The salted shuffle is for pathological layouts and for
-    # feeding downstream per-conversation operators.
-    if cfg.salt_buckets > 0:
-        todo = salted_repartition(todo, cfg.num_partitions, cfg.salt_buckets)
+    if salt > 0:
+        todo = salted_repartition(todo, cfg.num_partitions, salt)
     stats = commit_run(todo, extract_turns, cfg.run_id, out_table,
                        side_table)
     stats["phase_s"] = {"resume_check": round(resume_s, 3),
                         **stats["phase_s"]}
+    stats["salt_buckets"] = salt
     return stats

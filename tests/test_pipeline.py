@@ -18,7 +18,8 @@ from frogocr_spark.core.extract import extract_turn
 from frogocr_spark.core.sniff import CLASSES
 from frogocr_spark.operators.extraction import LastWins, extract_turns
 from frogocr_spark.operators.resume import filter_unprocessed
-from frogocr_spark.operators.skew import salted_repartition
+from frogocr_spark.operators.skew import (DEFAULT_SALT_BUCKETS,
+                                          salted_repartition)
 from frogocr_spark.plans import pipeline
 from frogocr_spark.plans.metrics import TOTALS
 from frogocr_spark.plans.pipeline import (PipelineConfig, commit_run,
@@ -458,9 +459,12 @@ def test_empty_run_commits_a_schema_only_part_file(spark, tdf, tmp_path):
 
 
 def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
-    """A fresh run is two Spark jobs, the salted shuffle and the noop
-    action whose tasks write the output; nothing after it runs one.  A
-    new hidden job (a schema inference, a read-back) fails this test."""
+    """A fresh run over a generated input is two Spark jobs, the salted
+    shuffle and the noop action whose tasks write the output; nothing
+    after it runs one.  The input is not a file scan, so no scan splits
+    bound its tasks and the run salts (a fresh run over parquet is one
+    job: test_fresh_run_over_parquet_is_one_map_only_spark_job).  A new
+    hidden job (a schema inference, a read-back) fails this test."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     sc = spark.sparkContext
@@ -488,6 +492,142 @@ def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
     assert stats["rows_out"] == stats["observed"]["rows_in"] > 0
     assert after_output == [2]
     assert jobs() == 2
+
+
+def _parquet_input(spark, path, rows, row_group_size=None):
+    """``rows`` as one parquet file under ``path``, written with pyarrow,
+    read back under TRANSCRIPT_SCHEMA (no schema-inference job)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    os.makedirs(path)
+    pq.write_table(pa.Table.from_pylist(
+        rows, schema=to_arrow_schema(transcripts.TRANSCRIPT_SCHEMA)),
+        os.path.join(path, "part-0.parquet"), row_group_size=row_group_size)
+    return spark.read.schema(transcripts.TRANSCRIPT_SCHEMA).parquet(str(path))
+
+
+@pytest.fixture
+def salt_calls(monkeypatch):
+    """The salt_buckets of every salted_repartition the pipeline makes,
+    looked up through the module name the pipeline benchmark patches."""
+    calls = []
+    salted = pipeline.salted_repartition
+
+    def recording(df, num_partitions=None,
+                  salt_buckets=DEFAULT_SALT_BUCKETS):
+        calls.append(salt_buckets)
+        return salted(df, num_partitions, salt_buckets)
+
+    monkeypatch.setattr(pipeline, "salted_repartition", recording)
+    return calls
+
+
+def _output_digest(spark, out_dir):
+    return _digest(Table(spark, os.path.join(out_dir, "extractions")).read())
+
+
+def test_fresh_run_over_parquet_is_one_map_only_spark_job(
+        spark, tmp_path, salt_calls):
+    """A fresh run over parquet whose row groups fit the scan's splits
+    extracts straight from the splits: no salted shuffle, so one Spark
+    job (the noop action), and the same rows as the salted plan."""
+    sc = spark.sparkContext
+    group = "test-fresh-parquet-run-jobs"
+    inp = _parquet_input(spark, tmp_path / "in",
+                         payloadgen.gen_transcripts(N_CONVS))
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        stats = run_extraction(spark, inp, PipelineConfig(
+            output_dir=str(tmp_path / "out"), run_id="r1"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    assert stats["salt_buckets"] == 0 and salt_calls == []
+    assert stats["rows_out"] == stats["observed"]["rows_in"] == inp.count()
+    salted = run_extraction(spark, inp, PipelineConfig(
+        output_dir=str(tmp_path / "salted"), run_id="r1", salt_buckets=8))
+    assert salted["salt_buckets"] == 8 and salt_calls == [8]
+    assert _output_digest(spark, str(tmp_path / "out")) == _output_digest(
+        spark, str(tmp_path / "salted"))
+
+
+def test_row_group_larger_than_a_split_takes_the_salted_plan(
+        spark, tmp_path, salt_calls):
+    """With the split size between the row-group sizes of two inputs of
+    the same rows, the input of small row groups stays map-only (its
+    file, larger than a split, has its footer read) and the input whose
+    one row group is larger than a split salts; both give the same
+    rows."""
+    rows = payloadgen.gen_transcripts(N_CONVS)
+    fine = _parquet_input(spark, tmp_path / "fine", rows, row_group_size=8)
+    coarse = _parquet_input(spark, tmp_path / "coarse", rows)
+
+    def row_groups(path):
+        meta = pq.read_metadata(os.path.join(path, "part-0.parquet"))
+        return [sum(rg.column(c).total_compressed_size
+                    for c in range(rg.num_columns))
+                for rg in map(meta.row_group, range(meta.num_row_groups))]
+
+    small, (big,) = (max(row_groups(tmp_path / "fine")),
+                     row_groups(tmp_path / "coarse"))
+    split = (small + big) // 2
+    assert os.path.getsize(tmp_path / "fine" / "part-0.parquet") > split
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(split))
+    try:
+        runs = [run_extraction(spark, inp, PipelineConfig(
+                    output_dir=str(tmp_path / name), run_id="r1"))
+                for name, inp in (("fine_out", fine), ("coarse_out", coarse))]
+    finally:
+        spark.conf.set(key, saved)
+    assert [r["salt_buckets"] for r in runs] == [0, DEFAULT_SALT_BUCKETS]
+    assert salt_calls == [DEFAULT_SALT_BUCKETS]
+    assert runs[0]["rows_out"] == runs[1]["rows_out"] == len(rows)
+    assert _output_digest(spark, str(tmp_path / "fine_out")) == \
+        _output_digest(spark, str(tmp_path / "coarse_out"))
+
+
+def test_resume_over_committed_keys_takes_the_salted_plan(
+        spark, tmp_path, salt_calls):
+    """A resume run that finds committed keys salts, so AQE can pack the
+    anti-join's survivors into few output files; the fresh base run
+    before it is map-only.  Base plus resume hold the salted fresh
+    run's rows."""
+    rows = payloadgen.gen_transcripts(N_CONVS)
+    base = _parquet_input(spark, tmp_path / "base", rows[: len(rows) // 2])
+    full = _parquet_input(spark, tmp_path / "full", rows)
+    out = str(tmp_path / "out")
+    first = run_extraction(spark, base, PipelineConfig(output_dir=out,
+                                                       run_id="base"))
+    resumed = run_extraction(spark, full, PipelineConfig(output_dir=out,
+                                                         run_id="inc"))
+    assert (first["salt_buckets"], resumed["salt_buckets"]) == (
+        0, DEFAULT_SALT_BUCKETS)
+    assert salt_calls == [DEFAULT_SALT_BUCKETS]
+    assert resumed["rows_out"] == len(rows) - len(rows) // 2
+    run_extraction(spark, full, PipelineConfig(
+        output_dir=str(tmp_path / "salted"), run_id="r1", salt_buckets=8))
+    assert _output_digest(spark, out) == _output_digest(
+        spark, str(tmp_path / "salted"))
+
+
+def test_explicit_salt_buckets_are_honoured(spark, tmp_path, salt_calls):
+    """salt_buckets=N salts a run the rules would leave map-only, and
+    salt_buckets=0 keeps map-only a resume run the rules would salt."""
+    rows = payloadgen.gen_transcripts(N_CONVS)
+    base = _parquet_input(spark, tmp_path / "base", rows[: len(rows) // 2])
+    full = _parquet_input(spark, tmp_path / "full", rows)
+    out = str(tmp_path / "out")
+    forced = run_extraction(spark, base, PipelineConfig(
+        output_dir=out, run_id="base", salt_buckets=4))
+    unsalted = run_extraction(spark, full, PipelineConfig(
+        output_dir=out, run_id="inc", salt_buckets=0))
+    assert (forced["salt_buckets"], unsalted["salt_buckets"]) == (4, 0)
+    assert salt_calls == [4]
+    assert forced["rows_out"] + unsalted["rows_out"] == len(rows)
 
 
 def test_blind_retry_runs_only_the_resume_check(spark, tmp_path):

@@ -336,29 +336,6 @@ def test_kmeans_int_validates(spark):
         kmeans_int(df, k=4, iters=3)  # corpus smaller than k
 
 
-# ------------------------------------------------------------ skew report
-def test_skew_report_uniform_gini_is_zero(spark):
-    from frogocr_spark.operators.skew import skew_report
-    rows = [(i % 4,) for i in range(40)]   # 4 keys x 10 rows
-    df = spark.createDataFrame(rows, "k long")
-    out = skew_report(df, "k", top_k=2).collect()
-    assert len(out) == 2
-    assert out[0].n_keys == 4 and out[0].n_rows == 40
-    assert out[0].gini_num == 0            # equal counts -> Gini 0
-    assert out[0].rank == 1 and out[0].cnt == 10
-
-
-def test_skew_report_hand_computed_gini(spark):
-    from frogocr_spark.operators.skew import skew_report
-    # counts {a:1, b:2, c:5}: ascending ranks 1,2,3 (n=3)
-    # gini_num = (2*1-4)*1 + (2*2-4)*2 + (2*3-4)*5 = -2 + 0 + 10 = 8
-    rows = [("a",)] + [("b",)] * 2 + [("c",)] * 5
-    df = spark.createDataFrame(rows, "k string")
-    out = skew_report(df, "k", top_k=1).collect()[0]
-    assert (out.key, out.cnt, out.gini_num, out.n_keys, out.n_rows) == \
-        ("c", 5, 8, 3, 8)
-
-
 # ---------------------------------------------------------------- hll ops
 def test_hll_setops_subset_union_equals_superset(spark):
     from frogocr_spark.operators.sketches import hll_union_intersect

@@ -1,9 +1,8 @@
-"""Session-8 operators: SCD2 history, OHLC bars, LOCF gap fill,
-skew-salted join.
+"""Session-8 operators: SCD2 history, OHLC bars, LOCF gap fill.
 
 Hand-computed small cases + structural checks; the DuckDB contract
-twins (scd2_build / ohlc_bars / gap_fill / salted_join) carry
-the at-scale value verification.
+twins (scd2_build / ohlc_bars / gap_fill) carry the at-scale value
+verification.
 """
 
 from __future__ import annotations
@@ -15,7 +14,6 @@ from pyspark.sql import functions as F
 
 from frogocr_spark.operators.analytics import (gap_fill_locf, ohlc_bars,
                                                scd2_history)
-from frogocr_spark.operators.skew import salted_equi_join
 
 T0 = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -114,37 +112,6 @@ def test_gap_fill_no_gaps_and_single_obs(spark):
     rows = gap_fill_locf(ev, "user_id").collect()
     # each user has exactly one observed bucket -> one grid row, no gap
     assert len(rows) == 2 and not any(r.is_gap for r in rows)
-
-
-# -------------------------------------------------------------- salted
-
-def test_salted_join_equals_plain_join(spark):
-    ev = _ev(spark, [(i, i % 3, "t" + str(i % 2), float(i), i)
-                     for i in range(40)])
-    dim = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    fact = ev.select("event_id", "event_type")
-    plain = {(r.event_id, r.event_type, r.n)
-             for r in fact.join(dim, "event_type").collect()}
-    for b in (1, 3, 8):
-        salted = {(r.event_id, r.event_type, r.n)
-                  for r in salted_equi_join(
-                      fact, dim, "event_type", b,
-                      fact_salt_col="event_id").collect()}
-        assert salted == plain
-    with pytest.raises(ValueError, match="salt_buckets"):
-        salted_equi_join(fact, dim, "event_type", 0,
-                         fact_salt_col="event_id")
-
-
-def test_salted_join_plan_is_salted_shuffle(spark):
-    ev = _ev(spark, [(i, i, "t", float(i), i) for i in range(10)])
-    dim = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    out = salted_equi_join(ev.select("event_id", "event_type"), dim,
-                           "event_type", 8, fact_salt_col="event_id")
-    out.collect()
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan and "BroadcastHashJoin" not in plan
-    assert "_salt" in plan
 
 
 # ------------------------------------------------------------------ pq
