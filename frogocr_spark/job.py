@@ -85,10 +85,14 @@ def main(argv: list[str] | None = None) -> None:
                         "a parquet row group larger than a scan split")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--bucketed-table", default=None,
-                   help="write output to a conv_id-bucketed session table "
-                        "of this name (storage-partitioned resume "
+                   help="write the output (under --output) in conv_id "
+                        "buckets and register it in the session catalog "
+                        "under this name (storage-partitioned resume "
                         "anti-join — the 10^12-row layout)")
-    p.add_argument("--buckets", type=int, default=PipelineConfig.buckets)
+    p.add_argument("--buckets", type=int, default=PipelineConfig.buckets,
+                   help="bucket count of a --bucketed-table output; an "
+                        "input laid out in as many conv_id buckets joins "
+                        "it with no shuffle")
     p.add_argument("--cores", type=int, default=None,
                    help="local[] cores; ignored under a real cluster master")
     args = p.parse_args(argv)

@@ -19,9 +19,10 @@ partition, keyed by ``partition_id`` and merged last-wins
 the lineage sidecar without another Spark job.
 
 Given a ``write_dir``, each task also writes its own output: its Arrow
-batches go into one parquet file, written with pyarrow from the task
-that extracted them (the reference writes each ALTO file from the task
-that recognized it, ``Source/TaskProcessor.cpp:356-369``), and the
+batches go into one parquet file (one per bucket, given a table's
+``bucket`` rule), written with pyarrow from the task that extracted
+them (the reference writes each ALTO file from the task that
+recognized it, ``Source/TaskProcessor.cpp:356-369``), and the
 frame yields no rows.  The rows then never travel back through the JVM,
 and no Spark write stage encodes them again; the caller runs the frame
 into the ``noop`` sink.  ``write_dir`` must be a path every executor
@@ -47,12 +48,13 @@ import uuid
 from collections.abc import Iterator
 
 from pyspark.accumulators import Accumulator, AccumulatorParam
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..core.extract import extract_batch
+from ..sources.catalog import part_name
 
 SPAN_TYPE = T.ArrayType(T.StructType([
     T.StructField("start", T.IntegerType(), False),
@@ -172,7 +174,8 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                   with_partition_id: bool = True,
                   settings_col: str | None = None,
                   tally: Accumulator | None = None,
-                  write_dir: str | None = None) -> DataFrame:
+                  write_dir: str | None = None,
+                  bucket: Column | None = None) -> DataFrame:
     """raw transcripts → extraction results (1 row in = 1 row out).
 
     ``with_partition_id`` stamps ``F.spark_partition_id()`` *before* the UDF
@@ -202,6 +205,9 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     batches end, so a task that runs again replaces its partition's
     file with the same rows, and a partition with no rows writes no
     file.  Needs ``with_partition_id``.
+    ``bucket`` = optional bucket-id Column (a ``BucketedTable``'s), stamped
+    before the UDF: each task then writes one file per bucket it meets,
+    named by ``sources.catalog.part_name``.  Needs ``write_dir``.
     """
     cols = [*passthrough, text_col]
     if settings_col:
@@ -210,6 +216,9 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     if with_partition_id:
         narrow = narrow.withColumn("partition_id", F.spark_partition_id())
         cols = [*cols, "partition_id"]
+    bucketed = bucket is not None   # the Column itself does not pickle
+    if bucketed:
+        narrow = narrow.withColumn("bucket_id", bucket)
 
     pass_cols = [c for c in cols if c != text_col and c != settings_col]
     out_schema = T.StructType([narrow.schema[c] for c in pass_cols]
@@ -232,7 +241,8 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
         import pyarrow.parquet as pq
         res_schema = to_arrow_schema(T.StructType(EXTRACTION_FIELDS))
         _freeze_import_heap()
-        pid = last_conv = writer = None
+        pid = last_conv = None
+        writers = {}    # bucket id (None: unbucketed) → (temp path, writer)
         t = {"rows_in": 0, "rows_out": 0, "empty_after_strip": 0,
              "parse_failures": 0, "n_convs_approx": 0, "confidence_sum": 0.0,
              "class_rows": {}}
@@ -267,25 +277,28 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
             if write_dir is None:
                 yield out
                 continue
-            if writer is None:
-                tmp = os.path.join(write_dir, f".part-{pid:05d}-"
-                                              f"{uuid.uuid4().hex}.parquet")
-                # snappy and dictionary encoding, as Spark's writer.  No
-                # min/max statistics: no reader filters on the keys (the
-                # resume anti-join reads every committed key, and a
-                # salted task's rows span nearly the whole key space
-                # anyway) or on the text and span columns (0.4% of
-                # agent_resume's output bytes).  No Arrow schema in the
-                # footer (1.5%): Spark and pyarrow read the types from
-                # the parquet schema.
-                writer = pq.ParquetWriter(
-                    tmp, out_arrow, compression="snappy",
-                    use_dictionary=True, write_statistics=False,
-                    store_schema=False)
-            writer.write_batch(out)
-        if writer is not None:
+            bk = rb.column("bucket_id") if bucketed else None
+            for b in pc.unique(bk).to_pylist() if bucketed else [None]:
+                if b not in writers:
+                    tmp = os.path.join(write_dir, f".part-{pid:05d}-"
+                                                  f"{uuid.uuid4().hex}.parquet")
+                    # snappy and dictionary encoding, as Spark's writer.
+                    # No min/max statistics: no reader filters on the keys
+                    # (the resume anti-join reads every committed key, and
+                    # a salted task's rows span nearly the whole key space
+                    # anyway) or on the text and span columns (0.4% of
+                    # agent_resume's output bytes).  No Arrow schema in the
+                    # footer (1.5%): Spark and pyarrow read the types from
+                    # the parquet schema.
+                    writers[b] = tmp, pq.ParquetWriter(
+                        tmp, out_arrow, compression="snappy",
+                        use_dictionary=True, write_statistics=False,
+                        store_schema=False)
+                writers[b][1].write_batch(
+                    out if b is None else out.filter(pc.equal(bk, b)))
+        for b, (tmp, writer) in writers.items():
             writer.close()
-            os.replace(tmp, os.path.join(write_dir, f"part-{pid:05d}.parquet"))
+            os.replace(tmp, os.path.join(write_dir, part_name(pid, b)))
         if tally is not None and pid is not None:
             t["python_cpu_s"] = time.process_time() - cpu0
             t["python_wall_s"] = time.perf_counter() - wall0

@@ -39,9 +39,10 @@ def filter_unprocessed(input_df: DataFrame,
 
     The committed keys are not de-duplicated: a duplicate key cannot
     change a left anti join's result, and a dropDuplicates would add an
-    aggregate and a shuffle.  When both sides come from conv_id-bucketed
-    tables with the same bucket count (``sources.catalog.BucketedTable``)
-    the join reads matching buckets pairwise with ZERO Exchange
+    aggregate and a shuffle.  When both sides are conv_id-bucketed tables
+    with the same bucket count (the committed keys a
+    ``sources.catalog.BucketedTable`` the extraction tasks wrote) the
+    join reads matching buckets pairwise with ZERO Exchange
     (plan-asserted in tests/test_bucketed.py)."""
     if processed is None:
         return input_df

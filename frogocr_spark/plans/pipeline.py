@@ -9,7 +9,7 @@
                                                counted in the JVM)
           → fused mapInArrow extraction       (one Arrow pass; each task
                                                tallies its partition and
-                                               writes its own part file
+                                               writes its own part files
                                                into the run's staging
                                                dir with pyarrow)
           → noop sink                         (the one Spark action: no
@@ -24,9 +24,9 @@
 
 The tasks write into the output table's staging dir, so ``output_dir``
 must be a path every executor can see (any path in local mode; a shared
-mount on a cluster).  A ``BucketedTable`` output is the one exception:
-its files need Spark's bucket hashing and file naming, so Spark's
-``bucketBy`` write stages them, and that write is the action.
+mount on a cluster).  A bucketed output (``bucketed_table``) lives there
+too, at ``<output_dir>/extractions``: the table hands the tasks its
+bucket rule, and its catalog entry only names it for the bucketed scan.
 
 The sidecar is published before the output, so a committed run always
 has its sidecar: a crash between the two publishes leaves a sidecar
@@ -84,30 +84,28 @@ class PipelineConfig:
     salt_buckets: int | None = None
     resume: bool = True
     # bucketed output layout (the 10^12-row resume path): when set, the
-    # extraction output lands in a conv_id-bucketed session table of this
-    # name and the resume anti-join is storage-partitioned — zero
-    # exchanges when the input shares the layout, one otherwise (never
-    # wrong; see sources.catalog.BucketedTable)
+    # tasks write the output at <output_dir>/extractions in conv_id
+    # buckets, registered in the session catalog under this name, and the
+    # resume anti-join is storage-partitioned — zero exchanges when the
+    # input shares the layout, one otherwise (never wrong; see
+    # sources.catalog.BucketedTable)
     bucketed_table: str | None = None
     buckets: int = 32
 
 
 def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
-               run_id: str, out_table: Table | BucketedTable,
-               side_table: Table) -> dict:
+               run_id: str, out_table: Table, side_table: Table) -> dict:
     """Extract ``todo`` with ``extract`` and commit it as run ``run_id``.
 
     Observe ``rows_in`` → extract, each task tallying its partition and
-    writing its own part file into ``out_table``'s staging dir → run
+    writing its own part files into ``out_table``'s staging dir → run
     that frame into the ``noop`` sink, the one Spark action → append the
     sidecar rows from the tallies with pyarrow → publish the output →
-    reconcile.  ``extract`` takes the frame and ``tally`` and
-    ``write_dir`` keywords (``extract_turns``'s).  A ``BucketedTable``'s
-    files need Spark's bucket hashing and file naming, so its output is
-    staged by Spark's ``bucketBy`` write instead, the action there.  A
-    run whose tasks wrote nothing (no rows) stages one schema-only part
-    file, as Spark's writer did, so the committed run reads as an empty
-    table.
+    reconcile.  ``extract`` takes the frame and ``tally``, ``write_dir``
+    and ``bucket`` keywords (``extract_turns``'s); ``bucket`` is
+    ``out_table``'s rule, None for an unbucketed table.  A run whose
+    tasks wrote nothing (no rows) stages one schema-only part file, as
+    Spark's writer did, so the committed run reads as an empty table.
 
     ``rows_in`` is observed on ``todo`` as given, after any shuffle: AQE
     swaps a shuffle stage that produced no rows, observe() included, for
@@ -125,15 +123,13 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
     tally = todo.sparkSession.sparkContext.accumulator({}, LastWins())
     obs_in = Observation("rows_in")
     todo = todo.observe(obs_in, F.count(F.lit(1)).alias("rows_in"))
-    if isinstance(out_table, BucketedTable):
-        out_table.stage(extract(todo, tally=tally), run_id)
-    else:
-        extracted = extract(todo, tally=tally,
-                            write_dir=out_table.stage_dir(run_id))
-        extracted.write.format("noop").mode("overwrite").save()
-        if not tally.value:
-            out_table.stage(to_arrow_schema(extracted.schema).empty_table(),
-                            run_id)
+    extracted = extract(todo, tally=tally,
+                        write_dir=out_table.stage_dir(run_id),
+                        bucket=out_table.bucket)
+    extracted.write.format("noop").mode("overwrite").save()
+    if not tally.value:
+        out_table.stage(to_arrow_schema(extracted.schema).empty_table(),
+                        run_id)
     counted, tally.value = tally.value, {}
 
     def total(col: str) -> int:
@@ -155,9 +151,8 @@ def commit_run(todo: DataFrame, extract: Callable[..., DataFrame],
                         "sidecar": round(t2 - t1, 3)})
 
 
-def _reconciled(run_id: str, out_table: Table | BucketedTable,
-                side_table: Table, observed: dict, class_rows: dict,
-                phase_s: dict) -> dict:
+def _reconciled(run_id: str, out_table: Table, side_table: Table,
+                observed: dict, class_rows: dict, phase_s: dict) -> dict:
     """The sidecar totals of committed run ``run_id`` with ``observed``,
     ``class_rows`` and ``phase_s`` added, once the rows its tasks
     counted (the sidecar's ``rows_out``) agree with the rows in the
@@ -191,11 +186,12 @@ def run_extraction(spark: SparkSession, transcripts: DataFrame,
     A blind retry that finds nothing new extracts and writes nothing: it
     removes the run's crash leftovers and re-reports its committed
     totals, with zero counts observed."""
+    path = os.path.join(cfg.output_dir, "extractions")
     if cfg.bucketed_table:
-        out_table = BucketedTable(spark, cfg.bucketed_table,
+        out_table = BucketedTable(spark, path, cfg.bucketed_table,
                                   buckets=cfg.buckets)
     else:
-        out_table = Table(spark, os.path.join(cfg.output_dir, "extractions"))
+        out_table = Table(spark, path)
     side_table = Table(spark, os.path.join(cfg.output_dir, "metrics"))
 
     t0 = time.perf_counter()

@@ -64,8 +64,9 @@ def get_spark(app_name: str = "frogocr_spark", cores: int | None = None,
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # storage-partitioned joins over conv_id-bucketed tables: allow a
         # join on (conv_id, turn_idx) to reuse hash co-location on the
-        # conv_id bucket key alone (sources/catalog.BucketedTable — the
-        # shuffle-free resume anti-join at 10^12-row scale)
+        # conv_id bucket key alone (sources/catalog.BucketedTable, whose
+        # files the extraction tasks write — the shuffle-free resume
+        # anti-join at 10^12-row scale)
         .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
     )
     for k, v in (extra_conf or {}).items():

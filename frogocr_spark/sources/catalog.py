@@ -17,7 +17,8 @@ parquet directory with identical *semantics* behind one interface
   them.
 - ``stage_dir(run_id)``   — the emptied staging dir, for writers that
   stage part files themselves: the pipeline's extraction tasks each
-  write one with pyarrow (``plans.pipeline.commit_run`` runs them into
+  write one with pyarrow, one per bucket of the table's ``bucket``
+  rule if it has one (``plans.pipeline.commit_run`` runs them into
   the ``noop`` sink, the run's one Spark action), so a ``Table`` the
   pipeline writes needs a ``path`` every executor can see.  The
   pipeline then checks three counts of the run: the rows observed in
@@ -31,6 +32,9 @@ parquet directory with identical *semantics* behind one interface
   ``Source/TaskProcessor.cpp:191-209``), typed from one part file's
   footer (no schema-inference Spark job).
 
+``BucketedTable`` adds a ``conv_id`` bucket rule and a session-catalog
+entry, so the resume anti-join reads it as a bucketed table.
+
 At 100 TB the backend would be a real Iceberg catalog; every call site
 only touches these classes, so the swap is one module.
 """
@@ -41,7 +45,21 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+
+
+def part_name(partition_id: int, bucket: int | None = None) -> str:
+    """``part-<partition_id:05d>.parquet``; a bucket id goes after an
+    underscore, where Spark's bucketed reader parses it."""
+    tail = "" if bucket is None else f"_{bucket:05d}"
+    return f"part-{partition_id:05d}{tail}.parquet"
+
+
+def _sql_string(s: str) -> str:
+    """``s`` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def _part_files(run_dir: str):
@@ -61,6 +79,9 @@ def footer_rows(run_dir: str) -> int:
 
 class Table:
     """One logical table rooted at ``path`` (parquet backend)."""
+
+    # each row's bucket id, a Column; None: the table is not bucketed
+    bucket: Column | None = None
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
@@ -104,7 +125,7 @@ class Table:
         dir that no reader sees (any earlier staged write is dropped)."""
         staging = self.stage_dir(run_id)
         if isinstance(df, pa.Table):
-            pq.write_table(df, os.path.join(staging, "part-00000.parquet"))
+            pq.write_table(df, os.path.join(staging, part_name(0)))
         else:
             df.write.mode("overwrite").parquet(staging)
 
@@ -177,168 +198,123 @@ class Table:
         A run_id directory is a snapshot: present ⇔ its job committed."""
         return [n.split("=", 1)[1] for n in self._run_dirs()]
 
+    def _committed_schema(self) -> pa.Schema | None:
+        """The footer schema of one committed part file (None when no
+        run is committed): the table holds no schema of its own."""
+        part = next((f for p in self._run_paths() for f in _part_files(p)),
+                    None)
+        return None if part is None else pq.read_schema(part)
+
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
         """Committed keys for the F1 resume anti-join (column-pruned scan —
-        only the key columns are read from parquet).  Their types come
-        from one committed part file's footer, so no Spark job infers
-        the table's schema; the table holds no schema of its own."""
-        from pyspark.sql.pandas.types import from_arrow_schema
-
-        paths = self._run_paths()
-        part = next((f for p in paths for f in _part_files(p)), None)
-        if part is None:
+        only the key columns are read from parquet), typed from
+        :meth:`_committed_schema`, so no Spark job infers a schema."""
+        footer = self._committed_schema()
+        if footer is None:
             return None
-        footer = pq.read_schema(part)
         keys = from_arrow_schema(pa.schema([footer.field(c)
                                             for c in key_cols]))
         return (self.spark.read.schema(keys)
                 .option("recursiveFileLookup", "true")
-                .parquet(*paths))
+                .parquet(*self._run_paths()))
 
 
-class BucketedTable:
-    """Bucketed-layout table: the scale path for the resume anti-join.
+class BucketedTable(Table):
+    """A :class:`Table` whose files are laid out in ``conv_id`` buckets,
+    registered in the session catalog as ``name``: the scale path for the
+    resume anti-join.
 
     At 10^12 rows the committed-key side of the F1 anti-join (reference
     output-exists skip, ``Source/TaskProcessor.cpp:191-209``) is ~16 TB of
     keys — far past broadcast, and a sort-merge join would shuffle BOTH
     the input and the keys on every resume.  Laying both tables out
-    bucketed by ``conv_id`` (and sorted by ``(conv_id, turn_idx)``) makes
-    the anti-join **storage-partitioned**: each task reads matching
-    buckets from both sides and joins with ZERO Exchange (verified by the
-    plan test).  This class is the sandbox analog of an Iceberg
-    ``bucket(N, conv_id)`` partition transform + storage-partitioned join;
-    on a real catalog only this module changes.
+    bucketed by ``conv_id`` makes the anti-join **storage-partitioned**:
+    each task reads matching buckets from both sides and joins with ZERO
+    Exchange (verified by the plan test).  This class is the sandbox
+    analog of an Iceberg ``bucket(N, conv_id)`` partition transform +
+    storage-partitioned join; on a real catalog only this module changes.
 
     Requires ``spark.sql.requireAllClusterKeysForCoPartition=false`` (set
     in :mod:`frogocr_spark.session`) because the join keys
     ``(conv_id, turn_idx)`` are a superset of the bucket key — hash
     co-location on ``conv_id`` alone already co-locates every join key.
 
-    Writes with ``saveAsTable`` (bucket metadata lives in the session
-    catalog) into a staging dir, then publishes by renaming the
-    ``run_id`` partition dir into place: the same staged, idempotent
-    semantics as :class:`Table.append`, split the same way into
-    :meth:`stage` and :meth:`publish`.
+    The extraction tasks write the files, one per bucket they meet
+    (:attr:`bucket`); staging, publish, row counts and snapshots are the
+    :class:`Table`'s.  The catalog entry is an external table over
+    ``data_dir`` partitioned by ``run_id``.  A task's rows are not sorted
+    per bucket, so it declares no ``SORTED BY``.
     """
 
-    def __init__(self, spark: SparkSession, name: str, *,
-                 buckets: int = 32, bucket_col: str = "conv_id",
-                 sort_cols: tuple[str, ...] = ("conv_id", "turn_idx")):
-        self.spark = spark
-        self.name = name
+    def __init__(self, spark: SparkSession, path: str, name: str, *,
+                 buckets: int = 32):
+        super().__init__(spark, path)
+        # Spark's own bucketed writer checked this before a run started;
+        # the task writer would fail inside the job on pmod(..., 0)
+        most = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
+        if not 0 < buckets <= most:
+            raise ValueError(f"buckets must be in 1..{most}, got {buckets}")
         self.buckets = buckets
-        self.bucket_col = bucket_col
-        self.sort_cols = sort_cols
+        self.ident = "`" + name.replace("`", "``") + "`"
 
-    def _location(self) -> str:
-        wh = self.spark.conf.get("spark.sql.warehouse.dir")
-        return os.path.join(wh.removeprefix("file:"), self.name.lower())
+    @property
+    def bucket(self) -> Column:
+        """Each row's bucket id: ``pmod(hash(conv_id), buckets)``, Spark's
+        own bucket function."""
+        return F.pmod(F.hash("conv_id"), F.lit(self.buckets))
 
-    def _ensure_registered(self) -> None:
-        """Session catalogs are in-memory: a NEW session sees the table's
-        warehouse directory but no metadata (the sandbox analog of losing
-        the metastore; a real Iceberg catalog persists this).  Re-register
-        the existing location as an external table with the same bucket
-        spec so cross-session retries/resumes keep working (found by a
-        fresh-session retry probe — saveAsTable alone fails with
-        LOCATION_ALREADY_EXISTS)."""
-        if self.spark.catalog.tableExists(self.name):
-            return
-        loc = self._location()
-        if not os.path.isdir(loc):
-            return
-        df = self.spark.read.parquet(loc)
-        cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                         for f in df.schema.fields if f.name != "run_id")
+    def stage(self, df: pa.Table, run_id: str) -> None:
+        """Only an empty run's schema-only file, in bucket 0 (Spark's
+        bucketed reader refuses a file with no bucket id): the extraction
+        tasks stage the rows."""
+        if not isinstance(df, pa.Table) or df.num_rows:
+            raise ValueError("the extraction tasks stage a bucketed run")
+        pq.write_table(df, os.path.join(self.stage_dir(run_id),
+                                        part_name(0, 0)))
+
+    def _ensure_registered(self) -> bool:
+        """Whether the catalog holds the table, registering it if a run is
+        committed.  Session catalogs are in-memory, so a new session sees
+        the files but no entry (a real Iceberg catalog persists it): its
+        first use creates the entry with the columns of one committed
+        footer (no schema-inference job), then finds the runs."""
+        if self.spark.catalog.tableExists(self.ident):
+            return True
+        footer = self._committed_schema()
+        if footer is None:
+            return False
         self.spark.sql(
-            f"CREATE TABLE {self.name} ({cols}, run_id STRING) "
-            f"USING PARQUET PARTITIONED BY (run_id) "
-            f"CLUSTERED BY ({self.bucket_col}) "
-            f"SORTED BY ({', '.join(self.sort_cols)}) "
-            f"INTO {self.buckets} BUCKETS "
-            f"LOCATION '{loc}'")
-        self.spark.sql(f"MSCK REPAIR TABLE {self.name}")
-
-    def exists(self) -> bool:
-        self._ensure_registered()
-        return self.spark.catalog.tableExists(self.name)
-
-    def append(self, df: DataFrame, run_id: str) -> None:
-        """Idempotent append: re-running a failed run_id replaces only that
-        run's partition, never duplicating rows; :meth:`stage` then
-        :meth:`publish`, like :meth:`Table.append`."""
-        self.stage(df, run_id)
-        self.publish(run_id)
-
-    def _aside(self, kind: str, run_id: str) -> str:
-        """The staging or set-aside dir of ``run_id``: beside the table's
-        location, never inside it."""
-        return os.path.join(os.path.dirname(self._location()),
-                            f".{kind}-{self.name.lower()}-run_id={run_id}")
-
-    def stage(self, df: DataFrame, run_id: str) -> None:
-        """Write ``df`` as run ``run_id``'s bucketed files into a staging
-        dir outside the table (the bucket layout needs ``saveAsTable``, so
-        under a throwaway external table, dropped at once).  The first
-        stage also creates the table, empty, with the staged bucket
-        spec."""
-        import shutil
-
-        from pyspark.sql import functions as F
-
-        staging, tmp = self._aside("staging", run_id), f"{self.name}__staging"
-        shutil.rmtree(staging, ignore_errors=True)
-        self.spark.sql(f"DROP TABLE IF EXISTS {tmp}")
-        (df.withColumn("run_id", F.lit(run_id)).write.partitionBy("run_id")
-         .bucketBy(self.buckets, self.bucket_col).sortBy(*self.sort_cols)
-         .option("path", staging).saveAsTable(tmp))
-        if not self.exists():
-            self.spark.sql(f"CREATE TABLE {self.name} LIKE {tmp}")
-        self.spark.sql(f"DROP TABLE {tmp}")   # external: the files stay
+            f"CREATE TABLE {self.ident} ({from_arrow_schema(footer).toDDL()}"
+            f", run_id STRING) USING PARQUET PARTITIONED BY (run_id) "
+            f"CLUSTERED BY (conv_id) INTO {self.buckets} BUCKETS "
+            f"LOCATION {_sql_string(self.data_dir)}")
+        self.spark.sql(f"MSCK REPAIR TABLE {self.ident}")
+        return True
 
     def publish(self, run_id: str) -> None:
-        """Move the staged partition of run ``run_id`` into the table: the
-        committed partition dir is renamed aside, the staged one renamed
-        into its place, then the set-aside dir deleted, as in
-        :meth:`Table.publish`.  An empty staged write writes no partition
-        dir and publishes nothing (a blind retry keeps the committed
-        run); nor does a publish with nothing staged, which only removes
-        the run's leftover dirs."""
-        import shutil
-
-        staging = self._aside("staging", run_id)
-        staged = os.path.join(staging, f"run_id={run_id}")
-        out = os.path.join(self._location(), f"run_id={run_id}")
-        replaced = self._aside("replaced", run_id)
-        shutil.rmtree(replaced, ignore_errors=True)
-        if footer_rows(staged):
-            if os.path.isdir(out):
-                os.replace(out, replaced)
-            os.replace(staged, out)
-            self.spark.sql(f"ALTER TABLE {self.name} ADD IF NOT EXISTS "
-                           f"PARTITION (run_id = '{run_id}')")
-            self.spark.sql(f"REFRESH TABLE {self.name}")
-            shutil.rmtree(replaced, ignore_errors=True)
-        shutil.rmtree(staging, ignore_errors=True)
-
-    def committed_rows(self, run_id: str) -> int:
-        """Rows in committed run ``run_id`` (0 if absent), from the parquet
-        footers of its partition dir, like :meth:`Table.committed_rows`."""
-        return footer_rows(os.path.join(self._location(), f"run_id={run_id}"))
+        """:meth:`Table.publish`, then tell the catalog: an entry gets the
+        run's partition, at the run dir (Spark would escape the name
+        otherwise), and drops its cached file listing; a table with no
+        entry is registered."""
+        known = self.spark.catalog.tableExists(self.ident)
+        super().publish(run_id)
+        if not known:
+            self._ensure_registered()
+        elif run_id in self.snapshots():
+            out = os.path.join(self.data_dir, f"run_id={run_id}")
+            self.spark.sql(
+                f"ALTER TABLE {self.ident} ADD IF NOT EXISTS PARTITION "
+                f"(run_id = {_sql_string(run_id)}) "
+                f"LOCATION {_sql_string(out)}")
+            self.spark.sql(f"REFRESH TABLE {self.ident}")
 
     def read(self) -> DataFrame:
-        return self.spark.table(self.name)
-
-    def snapshots(self) -> list[str]:
-        """Committed run_ids, sorted (partition dirs; no Spark job)."""
-        loc = self._location()
-        if not os.path.isdir(loc):
-            return []
-        return [n.split("=", 1)[1] for n in sorted(os.listdir(loc))
-                if n.startswith("run_id=")]
+        """Every committed run through the catalog (a bucketed scan), with
+        its ``run_id`` partition column."""
+        self._ensure_registered()
+        return self.spark.table(self.ident)
 
     def processed_keys(self, *key_cols: str) -> DataFrame | None:
-        if not self.exists():
+        if not self._ensure_registered():
             return None
         return self.read().select(*key_cols)

@@ -345,13 +345,15 @@ from pyspark.sql import SparkSession
 from frogocr_spark.operators.extraction import extract_turns
 from frogocr_spark.plans.pipeline import commit_run
 from frogocr_spark.sources import payloadgen
-from frogocr_spark.sources.catalog import Table
+from frogocr_spark.sources.catalog import BucketedTable, Table
 
-root = sys.argv[1]
+root, bucketed = sys.argv[1], sys.argv[2] == "bucketed"
 spark = (SparkSession.builder.master("local[2,2]").appName("retry")
          .config("spark.ui.enabled", "false")
          .config("spark.sql.shuffle.partitions", "4").getOrCreate())
-out = Table(spark, os.path.join(root, "extractions"))
+path = os.path.join(root, "extractions")
+out = (BucketedTable(spark, path, "bt_retry", buckets=4) if bucketed
+       else Table(spark, path))
 side = Table(spark, os.path.join(root, "metrics"))
 staging = out._staging("r1")
 seen = os.path.join(root, "failed_attempt_saw.json")
@@ -359,7 +361,7 @@ seen = os.path.join(root, "failed_attempt_saw.json")
 
 def fail_first_attempt(batches):
     from pyspark import TaskContext
-    for _ in batches:        # ends once the extraction task's file is in place
+    for _ in batches:        # ends once the extraction task's files are in place
         pass
     ctx = TaskContext.get()
     if ctx.partitionId() == 1 and ctx.attemptNumber() == 0:
@@ -375,9 +377,12 @@ def extract(df, **kw):
 
 
 rows = list(payloadgen.gen_transcripts(20))
-stats = commit_run(spark.createDataFrame(rows).repartition(4), extract, "r1",
-                   out, side)
+todo = spark.createDataFrame(rows)
+stats = commit_run(todo.repartition(4), extract, "r1", out, side)
+buckets = {} if not bucketed else dict(
+    todo.select("conv_id", out.bucket).distinct().collect())
 print(json.dumps({"keys": [[r["conv_id"], r["turn_idx"]] for r in rows],
+                  "buckets": buckets,
                   "rows_out": stats["rows_out"],
                   "rows_in": stats["observed"]["rows_in"],
                   "run_dir": os.path.join(out.data_dir, "run_id=r1")}))
@@ -385,22 +390,34 @@ spark.stop()
 """
 
 
-def test_retried_task_commits_each_row_once(tmp_path):
-    """A task whose first attempt fails after it renamed its part file
-    into the staging dir runs again and replaces that file: the run
-    commits one part file per partition, no temp file, and every input
-    row exactly once."""
+@pytest.mark.parametrize("layout", ["parquet", "bucketed"])
+def test_retried_task_commits_each_row_once(tmp_path, layout):
+    """A task whose first attempt fails after it renamed its part files
+    into the staging dir runs again and replaces each of them: the run
+    commits one part file per partition (per partition and bucket for a
+    bucketed table, each holding only its bucket's rows), no temp file,
+    and every input row exactly once."""
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     done = subprocess.run(
-        [sys.executable, "-c", _RETRY_RUN, str(tmp_path)], cwd=root,
+        [sys.executable, "-c", _RETRY_RUN, str(tmp_path), layout], cwd=root,
         capture_output=True, text=True, timeout=600,
         env={**os.environ, "PYTHONPATH": root})
     assert done.returncode == 0, done.stderr[-3000:]
     res = json.loads(done.stdout.strip().splitlines()[-1])
-    with open(tmp_path / "failed_attempt_saw.json") as fh:
-        assert "part-00001.parquet" in json.load(fh)
     files = sorted(os.listdir(res["run_dir"]))
-    assert files == [f"part-{p:05d}.parquet" for p in range(4)]
+    with open(tmp_path / "failed_attempt_saw.json") as fh:
+        saw = {f for f in json.load(fh) if f.startswith("part-00001")}
+    assert saw and saw == {f for f in files if f.startswith("part-00001")}
+    if layout == "parquet":
+        assert files == [f"part-{p:05d}.parquet" for p in range(4)]
+    else:
+        assert {f[5:10] for f in files} == {f"{p:05d}" for p in range(4)}
+        for f in files:
+            convs = pq.read_table(os.path.join(res["run_dir"], f),
+                                  columns=["conv_id"])["conv_id"]
+            assert f == f"part-{f[5:10]}_{f[11:16]}.parquet"
+            assert {res["buckets"][c] for c in convs.to_pylist()} \
+                == {int(f[11:16])}
     committed = pq.read_table(res["run_dir"],
                               columns=["conv_id", "turn_idx"]).to_pydict()
     keys = sorted(zip(committed["conv_id"], committed["turn_idx"]))
@@ -434,28 +451,40 @@ def test_workers_freeze_their_import_heap_and_the_driver_does_not(
     assert gc.get_freeze_count() == 0
 
 
-def test_empty_run_commits_a_schema_only_part_file(spark, tdf, tmp_path):
+@pytest.mark.parametrize("layout", ["parquet", "bucketed"])
+def test_empty_run_commits_a_schema_only_part_file(spark, tdf, tmp_path,
+                                                   layout):
     """A run whose tasks wrote nothing commits one schema-only part
-    file, as Spark's writer did, with the schema the tasks give theirs:
-    the run reads as an empty table and the resume check finds no
-    keys in it."""
-    out = Table(spark, str(tmp_path / "extractions"))
+    file, as Spark's writer did, with the schema the tasks give theirs
+    (in bucket 0 for a bucketed table, whose reader refuses a file with
+    no bucket id): the run reads as an empty table and the resume check
+    finds no keys in it."""
+    path = str(tmp_path / "extractions")
+    out = (BucketedTable(spark, path, "bt_empty", buckets=4)
+           if layout == "bucketed" else Table(spark, path))
     side = Table(spark, str(tmp_path / "metrics"))
-    stats = commit_run(tdf.limit(0), extract_turns, "empty", out, side)
-    assert stats["rows_out"] == stats["observed"]["rows_in"] == 0
-    assert out.snapshots() == ["empty"]
-    empty_dir = os.path.join(out.data_dir, "run_id=empty")
-    assert os.listdir(empty_dir) == ["part-00000.parquet"]
-    assert out.read().count() == 0
-    assert out.read().columns == extract_turns(tdf).columns
-    keys = out.processed_keys("conv_id", "turn_idx")
-    assert keys is not None and keys.count() == 0
+    try:
+        stats = commit_run(tdf.limit(0), extract_turns, "empty", out, side)
+        assert stats["rows_out"] == stats["observed"]["rows_in"] == 0
+        assert out.snapshots() == ["empty"]
+        empty_dir = os.path.join(out.data_dir, "run_id=empty")
+        assert os.listdir(empty_dir) == [
+            "part-00000_00000.parquet" if layout == "bucketed"
+            else "part-00000.parquet"]
+        assert out.read().count() == 0
+        assert [c for c in out.read().columns if c != "run_id"] \
+            == extract_turns(tdf).columns
+        keys = out.processed_keys("conv_id", "turn_idx")
+        assert keys is not None and keys.count() == 0
 
-    commit_run(tdf.limit(5), extract_turns, "full", out, side)
-    full_dir = os.path.join(out.data_dir, "run_id=full")
-    schemas = {str(pq.read_schema(os.path.join(d, f)))
-               for d in (empty_dir, full_dir) for f in os.listdir(d)}
-    assert len(schemas) == 1
+        commit_run(tdf.limit(5), extract_turns, "full", out, side)
+        full_dir = os.path.join(out.data_dir, "run_id=full")
+        schemas = {str(pq.read_schema(os.path.join(d, f)))
+                   for d in (empty_dir, full_dir) for f in os.listdir(d)}
+        assert len(schemas) == 1
+        assert out.read().count() == 5
+    finally:
+        spark.sql("DROP TABLE IF EXISTS bt_empty")
 
 
 def test_fresh_run_issues_two_spark_jobs(spark, tmp_path, monkeypatch):
@@ -709,8 +738,9 @@ def test_rerun_of_committed_run_id_with_new_rows_raises(spark, tmp_path,
                          bucketed_table="bt_rerun" if bucketed else None)
 
     def keys():
-        out = (BucketedTable(spark, "bt_rerun").read() if bucketed
-               else Table(spark, str(tmp_path / "extractions")).read())
+        path = str(tmp_path / "extractions")
+        out = (BucketedTable(spark, path, "bt_rerun").read() if bucketed
+               else Table(spark, path).read())
         return sorted(out.select("conv_id", "turn_idx").collect())
 
     try:

@@ -26,7 +26,7 @@ checks:
   its own definition lines.  Two receivers name no catalog method: a
   module the file imports (``os.path.exists``), and ``self`` outside
   the class that defines the method.  So a same-named method of
-  another class (``BucketedTable.exists`` calling ``self.exists()``)
+  another class (``BucketedTable.processed_keys`` calling ``self.read()``)
   cannot keep a method alive that only tests call.
 """
 
