@@ -89,8 +89,7 @@ def _time_queries(spark) -> dict[str, float]:
 
 
 def _extraction_run(cores: int, input_dir: str, n_rows: int,
-                    app: str, reps: int = 1, window: int = 1,
-                    extract_kwargs: dict | None = None) -> float:
+                    app: str, reps: int = 1, window: int = 1) -> float:
     """One cold session: read materialized transcripts → extract → noop
     write (map-only: the pure per-row map needs no shuffle; the salted
     path is timed separately).  Each measurement times ``window``
@@ -129,13 +128,12 @@ def _extraction_run(cores: int, input_dir: str, n_rows: int,
         # trigger module imports before the timed run — measures
         # steady-state throughput, not interpreter startup
         warm = df.limit(cores * 64).repartition(cores)
-        ek = extract_kwargs or {}
-        _noop_write(extract_turns(warm, **ek))
+        _noop_write(extract_turns(warm))
         best = float("inf")
         for _ in range(reps):
             t0 = time.time()
             for _ in range(window):
-                _noop_write(extract_turns(df, **ek))
+                _noop_write(extract_turns(df))
             best = min(best, time.time() - t0)
     finally:
         spark.stop()

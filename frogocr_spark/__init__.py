@@ -7,7 +7,7 @@ DataFrame pipeline over multi-turn agent transcripts:
 - ``core/``       pure-Python extraction semantics (the oracle; zero Spark imports)
 - ``operators/``  Spark operators (extraction mapInArrow, dedup, similarity,
                   joins, windows, skew handling, resume anti-join)
-- ``sources/``    table IO (parquet-or-Iceberg catalog, transcript generator)
+- ``sources/``    table IO (parquet catalog, transcript generator)
 - ``functions/``  scalar column-expression helpers (JVM-side, codegen'd)
 - ``plans/``      end-to-end pipeline assembly + metrics/lineage sidecar
 - ``streaming/``  Structured Streaming variant of the pipeline

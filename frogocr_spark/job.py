@@ -5,7 +5,7 @@ Cluster usage (multi-executor):
     zip -r frogocr_spark.zip frogocr_spark
     spark-submit --py-files frogocr_spark.zip \\
         frogocr_spark/job.py \\
-        --input  <transcripts parquet/iceberg path> \\
+        --input  <transcripts parquet path> \\
         --output <output table root> \\
         --run-id r1 [--partitions 2048] [--salt-buckets N] [--no-resume]
 

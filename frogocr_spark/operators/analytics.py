@@ -2208,7 +2208,7 @@ def fleiss_kappa(df: DataFrame, rater_cols: list) -> DataFrame:
     multiplied through so the only division is the final signed
     truncating e6 scaling (``_tdiv``, DuckDB ``//`` semantics).
     Degenerate den = 0 (every rater votes one way on everything) → κ =
-    1e6, the clustering_ari convention.
+    1e6: identical labelings count as full agreement.
 
     Scale shape: votes are a pure map; ONE global 3-value agg (count +
     two sums, map-side combined) reaches the driver, and the finish is

@@ -169,14 +169,15 @@ def _freeze_import_heap() -> None:
     _freeze_import_heap.done = True
 
 
-def extract_turns(df: DataFrame, *, text_col: str = "text",
+def extract_turns(df: DataFrame, *,
                   passthrough: tuple[str, ...] = ("conv_id", "turn_idx", "role"),
                   with_partition_id: bool = True,
                   settings_col: str | None = None,
                   tally: Accumulator | None = None,
                   write_dir: str | None = None,
                   bucket: Column | None = None) -> DataFrame:
-    """raw transcripts → extraction results (1 row in = 1 row out).
+    """raw transcripts → extraction results (1 row in = 1 row out); the
+    payload is column ``text``.
 
     ``with_partition_id`` stamps ``F.spark_partition_id()`` *before* the UDF
     so the lineage sidecar can key by physical partition (A10/§2.10).
@@ -209,7 +210,7 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     before the UDF: each task then writes one file per bucket it meets,
     named by ``sources.catalog.part_name``.  Needs ``write_dir``.
     """
-    cols = [*passthrough, text_col]
+    cols = [*passthrough, "text"]
     if settings_col:
         cols.append(settings_col)
     narrow = df.select(*cols)
@@ -220,7 +221,7 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
     if bucketed:
         narrow = narrow.withColumn("bucket_id", bucket)
 
-    pass_cols = [c for c in cols if c != text_col and c != settings_col]
+    pass_cols = [c for c in cols if c not in ("text", settings_col)]
     out_schema = T.StructType([narrow.schema[c] for c in pass_cols]
                               + EXTRACTION_FIELDS)
     # the declared schema, nullability included, so each part file has
@@ -251,7 +252,7 @@ def extract_turns(df: DataFrame, *, text_col: str = "text",
                 continue
             stngs = (rb.column(settings_col).to_pandas()
                      if settings_col else None)
-            frame = extract_batch(rb.column(text_col).to_pandas(), stngs,
+            frame = extract_batch(rb.column("text").to_pandas(), stngs,
                                   spans_as="pairs")
             res = pa.RecordBatch.from_pandas(frame, schema=res_schema,
                                              preserve_index=False)

@@ -3,10 +3,9 @@ Naive-Bayes training — the two classic "turn a curated corpus into a
 model-ready table" steps that run AFTER the curation loop
 (dedup/quality gates) and BEFORE training.
 
-Same engine-portability discipline as the sketches: md5-derived hashes,
-exact integer counts, one truncating scaled division where a
-probability is reported — no float whose last ulp could differ across
-engines.
+Engine-portable by construction: md5-derived hashes, exact integer
+counts, one truncating scaled division where a probability is reported
+— no float whose last ulp could differ across engines.
 
 Reference parity: the reference's font-interning dimension build
 (SURVEY.md §2 J8) is the same "intern a string universe into dense

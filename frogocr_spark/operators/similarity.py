@@ -995,7 +995,7 @@ def power_iteration_int(df: DataFrame, *, vec_col: str = "embedding",
     Gram partial aggregation; the collect is the bounded d(d+1)/2
     upper triangle and the iteration is O(iters·d²) driver arithmetic
     on exact Python ints — the right split at any corpus size (same
-    bounded-driver contract as ``kmeans_int``/``pq_fit``).  Output
+    bounded-driver contract as ``pq_fit``).  Output
     magnitudes: λ₁ ≤ trace(G) ≤ N·d·scale², ×1e6 must fit int64 —
     holds to ~10^8 rows at the defaults; keep DECIMAL beyond.
 

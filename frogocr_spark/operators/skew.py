@@ -46,16 +46,14 @@ DEFAULT_SALT_BUCKETS = 16
 
 
 def salted_repartition(df: DataFrame, num_partitions: int | None = None,
-                       salt_buckets: int = DEFAULT_SALT_BUCKETS,
-                       conv_col: str = "conv_id",
-                       turn_col: str = "turn_idx") -> DataFrame:
+                       salt_buckets: int = DEFAULT_SALT_BUCKETS) -> DataFrame:
     """Hash-repartition on (conv_id, salt) then secondary-sort the turns."""
-    salt = F.pmod(F.col(turn_col), F.lit(salt_buckets))
+    salt = F.pmod(F.col("turn_idx"), F.lit(salt_buckets))
     if num_partitions:
-        out = df.repartition(num_partitions, F.col(conv_col), salt)
+        out = df.repartition(num_partitions, F.col("conv_id"), salt)
     else:
-        out = df.repartition(F.col(conv_col), salt)
-    return out.sortWithinPartitions(conv_col, turn_col)
+        out = df.repartition(F.col("conv_id"), salt)
+    return out.sortWithinPartitions("conv_id", "turn_idx")
 
 
 def salt_buckets_for(df: DataFrame, num_partitions: int | None,

@@ -3,6 +3,5 @@
 - ``payloadgen``  pure-Python deterministic transcript-payload generator
                   (seed-stable, hash-driven — no RNG state, no wall clock)
 - ``transcripts`` Spark DataFrame builders for the transcripts table
-- ``catalog``     Iceberg-or-parquet table IO behind one interface
-- ``tables``      /root/testdata parquet loaders
+- ``catalog``     parquet table IO behind one interface
 """

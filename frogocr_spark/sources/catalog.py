@@ -1,7 +1,5 @@
-"""Table IO: Iceberg when available, parquet run directories otherwise.
-
-The sandbox image has no Iceberg runtime jar, so the default backend is a
-parquet directory with identical *semantics* behind one interface
+"""Table IO: parquet run directories.  There is no Iceberg backend; a
+parquet directory gives Iceberg's *semantics* behind one interface
 (SURVEY §7 hard part 4):
 
 - ``append(df, run_id)``  — idempotent append: rows land under
@@ -243,7 +241,11 @@ class BucketedTable(Table):
     (:attr:`bucket`); staging, publish, row counts and snapshots are the
     :class:`Table`'s.  The catalog entry is an external table over
     ``data_dir`` partitioned by ``run_id``.  A task's rows are not sorted
-    per bucket, so it declares no ``SORTED BY``.
+    per bucket, so it declares no ``SORTED BY``.  The bucket count is
+    kept in a one-line ``buckets`` file beside ``data_dir``, written
+    before the first run is published: a run that hashed with another
+    count would put a key's rows in a bucket the anti-join never reads
+    for it, so a different count is refused before the run starts.
     """
 
     def __init__(self, spark: SparkSession, path: str, name: str, *,
@@ -254,6 +256,13 @@ class BucketedTable(Table):
         most = int(spark.conf.get("spark.sql.sources.bucketing.maxBuckets"))
         if not 0 < buckets <= most:
             raise ValueError(f"buckets must be in 1..{most}, got {buckets}")
+        self.count_file = os.path.join(path, "buckets")
+        if self.snapshots() and os.path.exists(self.count_file):
+            with open(self.count_file) as f:
+                stored = int(f.read())
+            if stored != buckets:
+                raise ValueError(f"{path} was written with {stored} buckets, "
+                                 f"got {buckets}")
         self.buckets = buckets
         self.ident = "`" + name.replace("`", "``") + "`"
 
@@ -292,11 +301,18 @@ class BucketedTable(Table):
         return True
 
     def publish(self, run_id: str) -> None:
-        """:meth:`Table.publish`, then tell the catalog: an entry gets the
-        run's partition, at the run dir (Spark would escape the name
+        """:meth:`Table.publish`, after persisting the bucket count for the
+        table's first run, then tell the catalog: an entry gets the run's
+        partition, at the run dir (Spark would escape the name
         otherwise), and drops its cached file listing; a table with no
         entry is registered."""
         known = self.spark.catalog.tableExists(self.ident)
+        if not self.snapshots() or not os.path.exists(self.count_file):
+            os.makedirs(self.path, exist_ok=True)
+            tmp = os.path.join(self.path, ".buckets")
+            with open(tmp, "w") as f:
+                f.write(f"{self.buckets}\n")
+            os.replace(tmp, self.count_file)
         super().publish(run_id)
         if not known:
             self._ensure_registered()

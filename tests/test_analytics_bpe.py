@@ -1,12 +1,10 @@
-"""Count-min sketch (operators/sketches) and funnel / cohort /
-histogram / exact moment stats (operators/analytics) —
-differential-tested against pure-Python twins and hand-computed
+"""Funnel / cohort / histogram / exact moment stats
+(operators/analytics) — differential-tested against pure-Python twins and hand-computed
 values."""
 
 from __future__ import annotations
 
 import datetime as dt
-import hashlib
 import math
 import random
 import statistics
@@ -17,72 +15,6 @@ from frogocr_spark.operators.analytics import (cohort_retention,
                                                funnel_counts,
                                                histogram_fixed,
                                                moment_stats_exact)
-from frogocr_spark.operators.sketches import (cms_build, cms_estimate,
-                                              cms_heavy_hitters)
-
-
-# ------------------------------------------------------------- CMS
-
-def _py_cms_cell(key: str, row: int, w: int) -> int:
-    h = int(hashlib.md5(f"{row}:{key}".encode()).hexdigest()[:15], 16)
-    return h % w
-
-
-def _py_cms(keys, d, w):
-    cells = {}
-    for k in keys:
-        for i in range(d):
-            c = (i, _py_cms_cell(k, i, w))
-            cells[c] = cells.get(c, 0) + 1
-    return cells
-
-
-def test_cms_build_matches_python_twin(spark):
-    rng = random.Random(7)
-    keys = [f"tok{rng.randrange(40)}" for _ in range(500)]
-    df = spark.createDataFrame([(k,) for k in keys], ["token"])
-    got = {(r["row"], r["col"]): r["cnt"]
-           for r in cms_build(df, "token", d=3, w=64).collect()}
-    assert got == _py_cms(keys, 3, 64)
-
-
-def test_cms_estimate_never_underestimates_and_is_exact_sans_collision(
-        spark):
-    rng = random.Random(11)
-    keys = [f"tok{rng.randrange(40)}" for _ in range(500)]
-    true = {}
-    for k in keys:
-        true[k] = true.get(k, 0) + 1
-    df = spark.createDataFrame([(k,) for k in keys], ["token"])
-    sketch = cms_build(df, "token", d=4, w=512)
-    est = {r["token"]: r["cms_est"]
-           for r in cms_estimate(sketch, df.distinct(), "token",
-                                 d=4, w=512).collect()}
-    assert set(est) == set(true)
-    for k, t in true.items():
-        assert est[k] >= t          # CMS one-sided error guarantee
-    # with 40 keys in 4x512 cells, at least one row is collision-free
-    # per key with overwhelming probability -> min equals truth
-    assert est == true
-
-
-def test_cms_heavy_hitters_threshold_and_exact_column(spark):
-    keys = ["hot"] * 90 + ["warm"] * 12 + [f"cold{i}" for i in range(30)]
-    df = spark.createDataFrame([(k,) for k in keys], ["token"])
-    hh = {r["token"]: (r["cms_est"], r["n_true"])
-          for r in cms_heavy_hitters(df, "token", threshold=12,
-                                     d=4, w=512).collect()}
-    assert hh["hot"] == (90, 90)
-    assert hh["warm"] == (12, 12)
-    assert all(not t.startswith("cold") for t in hh)
-
-
-def test_cms_build_validates_shape(spark):
-    df = spark.createDataFrame([("x",)], ["token"])
-    with pytest.raises(ValueError):
-        cms_build(df, "token", d=0, w=512)
-    with pytest.raises(ValueError):
-        cms_build(df, "token", d=4, w=1)
 
 
 # ------------------------------------------------------------- funnel

@@ -175,7 +175,8 @@ def test_bucketed_output_under_a_path_sql_must_quote(spark, tmp_path):
         both = tgen.generate(spark, 15)
         stats = run_extraction(spark, both, _bucketed_cfg(root, "b'1", name))
         assert stats["rows_out"] == both.count() - first.count()
-        out = BucketedTable(spark, str(root / "extractions"), name)
+        out = BucketedTable(spark, str(root / "extractions"), name,
+                            buckets=8)
         assert out.snapshots() == ["b'0", "b'1"]
         assert out.read().count() == both.count()
         assert out.read().where(F.col("run_id") == "b'1").count() \
@@ -192,3 +193,27 @@ def test_bucket_count_is_checked_before_the_run(spark, tmp_path):
                        PipelineConfig(output_dir=str(tmp_path),
                                       bucketed_table="bt_zero", buckets=0))
     assert not os.path.exists(tmp_path / "extractions")
+
+    # a run hashing with another count than the committed runs would
+    # file a key under a bucket the anti-join never reads for it, and
+    # commit its turns twice: refused with the catalog entry and without
+    name = "bt_count"
+    try:
+        run_extraction(spark, tgen.generate(spark, 10),
+                       _bucketed_cfg(tmp_path, "b0", name))
+        out = BucketedTable(spark, str(tmp_path / "extractions"), name,
+                            buckets=8)
+        committed = sorted(out.read().collect())
+        for drop_entry in (False, True):
+            if drop_entry:
+                spark.sql(f"DROP TABLE {name}")
+            with pytest.raises(ValueError, match="written with 8 buckets"):
+                run_extraction(spark, tgen.generate(spark, 15),
+                               PipelineConfig(output_dir=str(tmp_path),
+                                              run_id="b1",
+                                              bucketed_table=name,
+                                              buckets=4))
+            assert out.snapshots() == ["b0"]
+            assert sorted(out.read().collect()) == committed
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")

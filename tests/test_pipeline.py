@@ -19,6 +19,7 @@ from frogocr_spark.core.sniff import CLASSES
 from frogocr_spark.operators.extraction import LastWins, extract_turns
 from frogocr_spark.operators.resume import filter_unprocessed
 from frogocr_spark.operators.skew import (DEFAULT_SALT_BUCKETS,
+                                          _local_path, salt_buckets_for,
                                           salted_repartition)
 from frogocr_spark.plans import pipeline
 from frogocr_spark.plans.metrics import TOTALS
@@ -643,6 +644,33 @@ def test_resume_over_committed_keys_takes_the_salted_plan(
         spark, str(tmp_path / "salted"))
 
 
+def test_input_the_driver_cannot_stat_takes_the_salted_plan(spark, tmp_path):
+    """The plan fails safe: an input file deleted after the scan was
+    built, or one on a file system the driver cannot stat, salts."""
+    inp = _parquet_input(spark, tmp_path / "in",
+                         payloadgen.gen_transcripts(N_CONVS))
+    assert salt_buckets_for(inp, None, False) == 0
+    os.remove(tmp_path / "in" / "part-0.parquet")
+    assert salt_buckets_for(inp, None, False) == DEFAULT_SALT_BUCKETS
+    with pytest.raises(ValueError, match="not a local file"):
+        _local_path("hdfs://namenode:8020/in/part-0.parquet")
+
+
+def test_parquet_input_under_a_path_with_a_space_stays_map_only(
+        spark, tmp_path, salt_calls):
+    """The scan lists ``%20`` for a space in the input path; the driver
+    decodes it to stat the file, so the run stays map-only."""
+    inp = _parquet_input(spark, tmp_path / "in put",
+                         payloadgen.gen_transcripts(N_CONVS))
+    assert all("in%20put" in f for f in inp.inputFiles())
+    assert _local_path(inp.inputFiles()[0]) == str(
+        tmp_path / "in put" / "part-0.parquet")
+    stats = run_extraction(spark, inp, PipelineConfig(
+        output_dir=str(tmp_path / "out"), run_id="r1"))
+    assert stats["salt_buckets"] == 0 and salt_calls == []
+    assert stats["rows_out"] == inp.count()
+
+
 def test_explicit_salt_buckets_are_honoured(spark, tmp_path, salt_calls):
     """salt_buckets=N salts a run the rules would leave map-only, and
     salt_buckets=0 keeps map-only a resume run the rules would salt."""
@@ -739,8 +767,8 @@ def test_rerun_of_committed_run_id_with_new_rows_raises(spark, tmp_path,
 
     def keys():
         path = str(tmp_path / "extractions")
-        out = (BucketedTable(spark, path, "bt_rerun").read() if bucketed
-               else Table(spark, path).read())
+        out = (BucketedTable(spark, path, "bt_rerun", buckets=4).read()
+               if bucketed else Table(spark, path).read())
         return sorted(out.select("conv_id", "turn_idx").collect())
 
     try:

@@ -270,93 +270,6 @@ def test_interval_coverage_contained_interval_adds_nothing(spark):
     assert out.covered_us == 1_000_100
 
 
-# --------------------------------------------------------------- kmeans
-def _py_kmeans(vecs, k, iters, scale=10_000):
-    import hashlib
-    q = {vid: [round_half_up(x) for x in v]       # scaling is inside
-         for vid, v in vecs}
-    order = sorted(q, key=lambda i: (hashlib.md5(
-        str(i).encode()).hexdigest(), i))
-    cents = [list(q[i]) for i in order[:k]]
-
-    def assign():
-        a = {}
-        for vid, qv in q.items():
-            ds = [(sum((x - c) ** 2 for x, c in zip(qv, cj)), j)
-                  for j, cj in enumerate(cents)]
-            a[vid] = min(ds)
-        return a
-
-    for _ in range(iters):
-        a = assign()
-        for j in range(k):
-            members = [q[v] for v, (d, jj) in a.items() if jj == j]
-            if members:
-                cents[j] = [sum(col) // len(members)
-                            for col in zip(*members)]
-    a = assign()
-    out = {}
-    for vid, (d, j) in a.items():
-        n, inertia = out.get(j, (0, 0))
-        out[j] = (n + 1, inertia + d)
-    return out, cents
-
-
-def round_half_up(d):
-    import decimal
-    import struct
-    f32 = struct.unpack("f", struct.pack("f", d))[0]
-    return int(decimal.Decimal(f32 * 10_000).quantize(
-        0, rounding=decimal.ROUND_HALF_UP))
-
-
-def test_kmeans_int_matches_pure_python_twin(spark):
-    from frogocr_spark.operators.clustering import kmeans_int
-    import random
-    rng = random.Random(5)
-    vecs = [(i, [round(rng.uniform(-1, 1), 4) for _ in range(6)])
-            for i in range(60)]
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    got = {r.cluster: (r.n_members, r.inertia, list(r.centroid))
-           for r in kmeans_int(df, k=3, iters=2).collect()}
-    want_counts, want_cents = _py_kmeans(vecs, 3, 2)
-    assert {j: (n, i) for j, (n, i) in want_counts.items()} == \
-        {j: (n, i) for j, (n, i, _) in got.items()}
-    for j in got:
-        assert got[j][2] == want_cents[j], j
-
-
-def test_kmeans_int_validates(spark):
-    from frogocr_spark.operators.clustering import kmeans_int
-    df = spark.createDataFrame([(1, [0.1, 0.2])],
-                               "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError):
-        kmeans_int(df, k=1)
-    with pytest.raises(ValueError):
-        kmeans_int(df, k=4, iters=3)  # corpus smaller than k
-
-
-# ---------------------------------------------------------------- hll ops
-def test_hll_setops_subset_union_equals_superset(spark):
-    from frogocr_spark.operators.sketches import hll_union_intersect
-    a = spark.range(0, 500).select(F.col("id").alias("k"))
-    b = spark.range(0, 100).select(F.col("id").alias("k"))  # B ⊆ A
-    out = hll_union_intersect(a, b, "k", p=8).collect()[0]
-    assert out.reg_sum_union == out.reg_sum_a   # max-merge is lossless
-    assert out.est_union == out.est_a
-    # inclusion-exclusion: intersect estimate == est_b exactly here
-    assert abs(out.est_intersect - out.est_b) < 1e-9
-
-
-def test_hll_setops_disjoint_intersection_near_zero(spark):
-    from frogocr_spark.operators.sketches import hll_union_intersect
-    a = spark.range(0, 2000).select(F.col("id").alias("k"))
-    b = spark.range(100000, 102000).select(F.col("id").alias("k"))
-    out = hll_union_intersect(a, b, "k", p=8).collect()[0]
-    # sketch noise, but nowhere near the set sizes
-    assert abs(out.est_intersect) < 0.2 * out.est_a
-
-
 # ---------------------------------------------------------- postings delta
 def test_postings_delta_gaps_and_df_band(spark):
     from frogocr_spark.operators.textstats import postings_delta

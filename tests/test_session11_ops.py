@@ -1,18 +1,12 @@
-"""Session-11 operators: sorted-neighborhood blocking, KMV/theta
-sketches and positional phrase search — hand-computed cases and
-pure-Python twins (the contract queries carry the DuckDB hash checks;
-these pin semantics on adversarial edges)."""
+"""Sorted-neighborhood blocking and positional phrase search —
+hand-computed cases and pure-Python twins (the contract queries carry
+the DuckDB hash checks; these pin semantics on adversarial edges)."""
 
 from __future__ import annotations
-
-import hashlib
 
 import pytest
 
 from frogocr_spark.operators.dedup import snm_candidates
-from frogocr_spark.operators.sketches import (KMV_M, kmv_estimate,
-                                              kmv_sketch,
-                                              kmv_union_intersect)
 from frogocr_spark.operators.textstats import phrase_search
 
 
@@ -42,39 +36,6 @@ def test_snm_window_validation(spark):
     df = spark.createDataFrame([(1, "x")], "doc_id long, k string")
     with pytest.raises(ValueError):
         snm_candidates(df, "k", 0)
-
-
-# ------------------------------------------------------------------- kmv
-def _h60_py(x) -> int:
-    return int(hashlib.md5(str(x).encode()).hexdigest()[:15], 16)
-
-
-def test_kmv_sketch_unfilled_is_exact(spark):
-    # fewer distinct keys than k: theta = M and est = exact count.
-    rows = [(i % 5,) for i in range(50)]
-    df = spark.createDataFrame(rows, "uid long")
-    out = kmv_estimate(kmv_sketch(df, [], "uid", k=16)).collect()[0]
-    assert out.theta == KMV_M and out.n_kept == 5 and out.est == 5
-
-
-def test_kmv_sketch_matches_python_twin(spark):
-    n, k = 300, 32
-    df = spark.createDataFrame([(i,) for i in range(n)], "uid long")
-    out = kmv_sketch(df, [], "uid", k=k).collect()[0]
-    hs = sorted({_h60_py(i) for i in range(n)})
-    assert out.theta == hs[k - 1]
-    assert list(out.kept) == hs[:k - 1]
-    est = kmv_estimate(kmv_sketch(df, [], "uid", k=k)).collect()[0].est
-    assert est == (k - 1) * KMV_M // hs[k - 1]
-
-
-def test_kmv_union_intersect_small_sets_exact(spark):
-    # both sides below k: theta stays M, every estimate is EXACT.
-    a = spark.createDataFrame([(i,) for i in range(10)], "uid long")
-    b = spark.createDataFrame([(i,) for i in range(5, 20)], "uid long")
-    out = kmv_union_intersect(a, b, "uid", k=64).collect()[0]
-    assert (out.est_a, out.est_b, out.est_union, out.est_intersect) \
-        == (10, 15, 20, 5)
 
 
 # ---------------------------------------------------------- phrase search

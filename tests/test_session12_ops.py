@@ -1,8 +1,7 @@
-"""Session-12 operators: grid-blocked spatial join, winnowing
-fingerprints, the ML-prep module (feature hashing / NB training),
-truncated EWMA, Benford audit, and session paths — hand-computed cases
-and pure-Python twins (the contract queries carry the DuckDB hash
-checks; these pin semantics on adversarial edges)."""
+"""Winnowing fingerprints, the ML-prep module (feature hashing / NB
+training), truncated EWMA, Benford audit, and session paths —
+hand-computed cases and pure-Python twins (the contract queries carry
+the DuckDB hash checks; these pin semantics on adversarial edges)."""
 
 from __future__ import annotations
 
@@ -15,7 +14,6 @@ from frogocr_spark.operators.analytics import (benford_digits,
                                                ewma_trunc,
                                                session_paths)
 from frogocr_spark.operators.ml import feature_hash, nb_train
-from frogocr_spark.operators.spatial import grid_neighbor_pairs
 from frogocr_spark.operators.textstats import winnowing_fingerprints
 
 
@@ -25,42 +23,6 @@ def _h60(s: str) -> int:
 
 def _h48(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:12], 16)
-
-
-# --------------------------------------------------------------- spatial
-def test_grid_neighbor_pairs_hand_case(spark):
-    # radius 10: (0,0)-(6,8) dist2=100 kept (boundary); (0,0)-(7,8)
-    # dist2=113 cut; cross-cell neighbors found; far point isolated.
-    pts = [(1, 0, 0), (2, 6, 8), (3, 7, 8), (4, 500, 500)]
-    df = spark.createDataFrame(pts, "id long, x long, y long")
-    got = {(r.id_a, r.id_b): r.dist2
-           for r in grid_neighbor_pairs(df, "id", "x", "y", 10).collect()}
-    assert got == {(1, 2): 100, (2, 3): 1}
-
-
-def test_grid_neighbor_pairs_exactly_once_across_cells(spark):
-    # points straddling a cell boundary (cell side 5): each qualifying
-    # pair appears exactly once even though probes explode x9.
-    pts = [(1, 4, 4), (2, 5, 5), (3, 6, 6), (4, 9, 9)]
-    df = spark.createDataFrame(pts, "id long, x long, y long")
-    rows = grid_neighbor_pairs(df, "id", "x", "y", 5).collect()
-    pairs = [(r.id_a, r.id_b) for r in rows]
-    assert len(pairs) == len(set(pairs))  # no duplicate emission
-    got = dict(((r.id_a, r.id_b), r.dist2) for r in rows)
-    # brute force twin
-    want = {}
-    for i, (ia, xa, ya) in enumerate(pts):
-        for ib, xb, yb in pts[i + 1:]:
-            d2 = (xa - xb) ** 2 + (ya - yb) ** 2
-            if d2 <= 25:
-                want[(min(ia, ib), max(ia, ib))] = d2
-    assert got == want
-
-
-def test_grid_neighbor_pairs_validation(spark):
-    df = spark.createDataFrame([(1, 0, 0)], "id long, x long, y long")
-    with pytest.raises(ValueError):
-        grid_neighbor_pairs(df, "id", "x", "y", 0)
 
 
 # ------------------------------------------------------------- winnowing
@@ -431,29 +393,6 @@ def test_mannwhitney_identical_samples(spark):
     assert (r1.u2, r1.significant) == (r2.u2, r2.significant)
 
 
-def test_ams_f2_sketch_python_twin(spark):
-    import hashlib
-    keys = [1, 1, 1, 2, 2, 3]
-    df = spark.createDataFrame([(k,) for k in keys], "k long")
-    from frogocr_spark.operators.sketches import (ams_f2_estimate,
-                                                  ams_f2_sketch)
-    got = {r.rep: r.z for r in ams_f2_sketch(df, "k", reps=4).collect()}
-    want = {}
-    for r in range(4):
-        z = 0
-        for k in keys:
-            h = int(hashlib.md5(f"ams:{r}:{k}".encode())
-                    .hexdigest()[:15], 16)
-            z += 1 if h % 2 == 0 else -1
-        want[r] = z
-    assert got == want
-    est = ams_f2_estimate(df, "k", reps=4).collect()[0]
-    assert est.f2_exact == 9 + 4 + 1
-    assert est.f2_est == sum(z * z for z in want.values()) // 4
-    with pytest.raises(ValueError):
-        ams_f2_sketch(df, "k", reps=0)
-
-
 def test_nullsafe_join_keeps_null_bucket(spark):
     df1 = spark.createDataFrame([(None,), (1,)], "k int")
     df2 = spark.createDataFrame([(None,), (2,)], "k int")
@@ -560,38 +499,6 @@ def test_geohash_validates_chars():
     for bad in (3, 0, 14):
         with pytest.raises(ValueError):
             geohash_interleave_sql("x", "y", bad)
-
-
-def test_maxmin_coreset_matches_python_twin(spark):
-    import hashlib
-    from frogocr_spark.operators.clustering import maxmin_coreset
-    vecs = {1: [0.0, 0.0], 2: [1.0, 0.0], 3: [0.0, 1.0],
-            4: [0.9, 0.9], 5: [0.05, 0.05]}
-    df = spark.createDataFrame(
-        [(i, v) for i, v in vecs.items()],
-        "vec_id long, embedding array<float>")
-    got = [(r.round, r.vec_id, r.dist)
-           for r in maxmin_coreset(df, k=4).collect()]
-    # python twin of the greedy chain (same quantization and ties)
-    q = {i: [round(x * 10_000) for x in v] for i, v in vecs.items()}
-    seed = min(q, key=lambda i: (hashlib.md5(str(i).encode())
-                                 .hexdigest(), i))
-    sel, picks = [seed], [(0, seed, 0)]
-    for r in range(1, 4):
-        best = None
-        for i in sorted(q):
-            if i in sel:
-                continue
-            d = min(sum((a - b) ** 2 for a, b in zip(q[i], q[s]))
-                    for s in sel)
-            if best is None or d > best[1]:
-                best = (i, d)
-        sel.append(best[0])
-        picks.append((r, best[0], best[1]))
-    assert sorted(got) == sorted(picks)
-    # radius curve is non-increasing after round 1
-    dists = [d for rnd, _, d in sorted(got) if rnd >= 1]
-    assert dists == sorted(dists, reverse=True)
 
 
 def test_zipf_fit_negative_slope_on_zipfian_tokens(spark):

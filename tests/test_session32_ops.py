@@ -1,55 +1,10 @@
-"""Session 32 operators: DBSCAN (grid-blocked, deterministic border
-rule)."""
+"""Integer power iteration, truncating division, isotonic calibration,
+conformal intervals and the cluster-size profile."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from frogocr_spark.operators.clustering import dbscan_grid
-
-
-def _rows(spark, pts):
-    return spark.createDataFrame(pts, "id long, x long, y long")
-
-
-def test_dbscan_hand_case(spark):
-    # one dense triangle (all core, cluster 1), one border hanging off
-    # B, one isolated noise point; eps=2, min_pts=3 (count incl. self)
-    pts = [(1, 0, 0), (2, 1, 0), (3, 0, 1), (4, 3, 0), (5, 9, 9)]
-    got = {r.id: (r.role, r.cluster_id)
-           for r in dbscan_grid(_rows(spark, pts), 2, 3).collect()}
-    assert got == {1: ("core", 1), 2: ("core", 1), 3: ("core", 1),
-                   4: ("border", 1), 5: ("noise", None)}
-
-
-def test_dbscan_border_tiebreak_min_cluster(spark):
-    # two 4-point core clusters (ids 1-4 and 5-8) and a point exactly
-    # eps from a core of EACH; with min_pts=4 it stays non-core (2
-    # neighbors + self) and the deterministic rule assigns the MIN
-    # cluster id (1), independent of any scan order
-    pts = [(1, 0, 0), (2, 1, 0), (3, 2, 0), (4, 1, 1),
-           (5, 6, 0), (6, 7, 0), (7, 8, 0), (8, 7, 1),
-           (9, 4, 0)]
-    got = {r.id: (r.role, r.cluster_id)
-           for r in dbscan_grid(_rows(spark, pts), 2, 4).collect()}
-    assert got[9] == ("border", 1)
-    assert {got[i] for i in (1, 2, 3, 4)} == {("core", 1)}
-    assert {got[i] for i in (5, 6, 7, 8)} == {("core", 5)}
-
-
-def test_dbscan_singleton_core(spark):
-    # min_pts=1: every point is trivially core (itself); an edge-less
-    # core is its own singleton cluster
-    pts = [(7, 0, 0), (9, 50, 50)]
-    got = {r.id: (r.role, r.cluster_id)
-           for r in dbscan_grid(_rows(spark, pts), 2, 1).collect()}
-    assert got == {7: ("core", 7), 9: ("core", 9)}
-
-
-def test_dbscan_min_pts_guard(spark):
-    with pytest.raises(ValueError):
-        dbscan_grid(_rows(spark, [(1, 0, 0)]), 2, 0)
 
 
 def test_power_iteration_hand_case(spark):
@@ -89,67 +44,6 @@ def test_tdiv_matches_duckdb_trunc_semantics():
     for a in (-7, -1, 0, 1, 7, -1000001, 999999):
         got = con.execute(f"SELECT CAST({a} AS HUGEINT) // 2").fetchone()[0]
         assert _tdiv(a, 2) == int(got)
-
-
-def test_silhouette_hand_case(spark):
-    # ids 1..4, md5-order seeds are ids 4 and 1 (a87.. < c4c..); after
-    # one Lloyd round the centroids are hand-derivable: c0 = [100000,
-    # 100001] (floor mean of ids 3,4), c1 = [0, 1] (ids 1,2); expected
-    # a/b/s recomputed below with explicit integer arithmetic
-    from frogocr_spark.operators.clustering import kmeans_silhouette
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [0.0, 0.0002]),
-         (3, [10.0, 10.0]), (4, [10.0, 10.0002])],
-        "vec_id long, embedding array<float>")
-    got = {r.cluster: (r.n_members, r.mean_s_e6)
-           for r in kmeans_silhouette(df, k=2, iters=1).collect()}
-    c0, c1 = [100000, 100001], [0, 1]
-    qs = {1: [0, 0], 2: [0, 2], 3: [100000, 100000],
-          4: [100000, 100002]}
-
-    def d2(q, c):
-        return (q[0] - c[0]) ** 2 + (q[1] - c[1]) ** 2
-
-    exp = {0: [], 1: []}
-    for q in qs.values():
-        da, db = sorted((d2(q, c0), d2(q, c1)))
-        cl = 0 if d2(q, c0) <= d2(q, c1) else 1
-        exp[cl].append((db - da) * 10**6 // db)
-    assert got == {cl: (len(v), sum(v) // len(v))
-                   for cl, v in exp.items()}
-
-
-def test_ari_identical_partitions(spark):
-    # same k, same iters, same corpus -> identical partitions -> ARI
-    # is exactly 1e6 and s_ij == s_a == s_b (= 2 * C(2,2) = 2)
-    from frogocr_spark.operators.clustering import kmeans_agreement_ari
-    df = spark.createDataFrame(
-        [(1, [0.0, 0.0]), (2, [0.0, 0.0002]),
-         (3, [10.0, 10.0]), (4, [10.0, 10.0002])],
-        "vec_id long, embedding array<float>")
-    r = kmeans_agreement_ari(df, k_a=2, k_b=2, iters=2).collect()[0]
-    assert (r.n, r.s_ij, r.s_a, r.s_b) == (4, 2, 2, 2)
-    assert r.ari_e6 == 1_000_000
-
-
-def test_ari_degenerate_single_cluster_convention(spark):
-    # all points identical: both runs collapse to one non-empty
-    # cluster -> denominator 0 -> ARI defined as 1e6
-    from frogocr_spark.operators.clustering import kmeans_agreement_ari
-    df = spark.createDataFrame(
-        [(i, [1.0, 1.0]) for i in range(1, 5)],
-        "vec_id long, embedding array<float>")
-    r = kmeans_agreement_ari(df, k_a=2, k_b=2, iters=1).collect()[0]
-    assert (r.s_ij, r.s_a, r.s_b) == (6, 6, 6)
-    assert r.ari_e6 == 1_000_000
-
-
-def test_silhouette_k_guard(spark):
-    from frogocr_spark.operators.clustering import kmeans_silhouette
-    df = spark.createDataFrame([(1, [0.0])],
-                               "vec_id long, embedding array<float>")
-    with pytest.raises(ValueError):
-        kmeans_silhouette(df, k=1, iters=1)
 
 
 def test_isotonic_pools_violating_bins(spark):
@@ -263,48 +157,6 @@ def test_cluster_size_profile_hand_case(spark):
     assert got == {1: (1, 3, 3, 750000), 0: (1, 1, 3, 750000)}
 
 
-def test_cms_join_size_python_twin(spark):
-    # exact inner-product twin of both the true join size and the CMS
-    # row estimates at w=8 (small enough to force collisions)
-    import hashlib
-    from collections import Counter
-
-    from frogocr_spark.operators.sketches import cms_join_size
-    ka = ["x", "x", "y", "q"]
-    kb = ["x", "y", "y", "z"]
-    a = spark.createDataFrame([(k,) for k in ka], "k string")
-    b = spark.createDataFrame([(k,) for k in kb], "k string")
-    r = cms_join_size(a, b, "k", d=4, w=8).collect()[0]
-    ca, cb = Counter(ka), Counter(kb)
-    exact = sum(ca[k] * cb[k] for k in ca)
-
-    def cell(row, k, w=8):
-        return int(hashlib.md5(f"{row}:{k}".encode())
-                   .hexdigest()[:15], 16) % w
-
-    ests = []
-    for row in range(4):
-        sa, sb = Counter(), Counter()
-        for k in ka:
-            sa[cell(row, k)] += 1
-        for k in kb:
-            sb[cell(row, k)] += 1
-        ests.append(sum(sa[c] * sb[c] for c in sa))
-    assert (r.n_a, r.n_b, r.exact_size) == (4, 4, exact)
-    assert r.est_size == min(ests)
-    assert r.est_size >= exact
-    assert r.over_e6 == (r.est_size - exact) * 10**6 // exact
-
-
-def test_cms_join_size_disjoint_keys(spark):
-    from frogocr_spark.operators.sketches import cms_join_size
-    a = spark.createDataFrame([("p",)], "k string")
-    b = spark.createDataFrame([("q",)], "k string")
-    r = cms_join_size(a, b, "k").collect()[0]
-    assert r.exact_size == 0 and r.over_e6 is None
-    assert r.est_size >= 0
-
-
 def test_power_iteration_top2_separable_axes(spark):
     # axis-aligned corpus: G = diag(2s, s) -> first component on axis
     # 0, second on axis 1; eigen-energies 2/3 and 1/3 of the trace
@@ -340,68 +192,6 @@ def test_power_iteration_top2_rank1_exact_zero_deflate(spark):
     assert [r.c2_e6 for r in rows] == [0, 0]
     assert rows[0].lambda2_e6 == 0 and rows[0].energy2_e6 == 0
     assert rows[0].energy1_e6 >= 999999  # lambda1 = trace (rank 1)
-
-
-def _dbscan_twin(pts, eps, min_pts):
-    # independent textbook DBSCAN with the same determinism rules:
-    # brute-force neighbors, union-find min-label cores, min-cluster
-    # border assignment
-    ids = [p[0] for p in pts]
-    xy = {p[0]: (p[1], p[2]) for p in pts}
-    nb = {i: [] for i in ids}
-    for i in ids:
-        for j in ids:
-            if i != j:
-                dx = xy[i][0] - xy[j][0]
-                dy = xy[i][1] - xy[j][1]
-                if dx * dx + dy * dy <= eps * eps:
-                    nb[i].append(j)
-    core = {i for i in ids if len(nb[i]) + 1 >= min_pts}
-    parent = {i: i for i in core}
-
-    def find(a):
-        while parent[a] != a:
-            parent[a] = parent[parent[a]]
-            a = parent[a]
-        return a
-
-    for i in core:
-        for j in nb[i]:
-            if j in core:
-                ra, rb = find(i), find(j)
-                if ra != rb:
-                    lo, hi = min(ra, rb), max(ra, rb)
-                    parent[hi] = lo
-    # min id per component
-    comp = {}
-    for i in core:
-        r = find(i)
-        comp[r] = min(comp.get(r, i), i)
-    out = {}
-    for i in ids:
-        if i in core:
-            out[i] = ("core", comp[find(i)])
-        else:
-            cls = [comp[find(j)] for j in nb[i] if j in core]
-            out[i] = ("border", min(cls)) if cls else ("noise", None)
-    return out
-
-
-@pytest.mark.parametrize("seed", range(8))
-def test_dbscan_random_vs_twin(spark, seed):
-    import random
-
-    from frogocr_spark.operators.clustering import dbscan_grid
-    rng = random.Random(seed)
-    n = rng.randint(4, 24)
-    pts = [(i, rng.randint(0, 20), rng.randint(0, 20))
-           for i in range(1, n + 1)]
-    eps = rng.randint(1, 5)
-    min_pts = rng.randint(1, 5)
-    df = spark.createDataFrame(pts, "id long, x long, y long")
-    got = {r.id: (r.role, r.cluster_id)
-           for r in dbscan_grid(df, eps, min_pts).collect()}
-    assert got == _dbscan_twin(pts, eps, min_pts)
 
 
 def _pava_twin(bins):

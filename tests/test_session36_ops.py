@@ -242,52 +242,7 @@ def test_curation_funnel_blocklist_guard(spark):
         curation_funnel(_docs(spark, [(1, "x")]), blocklist=["a b"])
 
 
-# ---------------------------------------------------------- source_overlap
-
-def test_kmv_overlap_matrix_exact_when_unsaturated(spark):
-    from frogocr_spark.operators.sketches import kmv_overlap_matrix
-    # sets small vs k: theta = full domain, the estimator degenerates
-    # to EXACT distinct counts — hand-checkable
-    rows = ([("a", f"x{i}") for i in range(10)]
-            + [("b", f"x{i}") for i in range(5, 20)]      # |a∩b| = 5
-            + [("c", "zz")])                               # disjoint
-    df = spark.createDataFrame(rows, "grp string, key string")
-    got = {(r.grp_a, r.grp_b): r
-           for r in kmv_overlap_matrix(df, "grp", "key", k=64).collect()}
-    ab = got[("a", "b")]
-    assert (ab.est_a, ab.est_b) == (10, 15)
-    assert ab.est_intersect == 5 and ab.est_union == 20
-    assert ab.jaccard_e6 == 5 * 1_000_000 // 20
-    assert got[("a", "c")].est_intersect == 0
-    assert got[("b", "c")].est_intersect == 0
-    assert len(got) == 3  # unordered pairs only
-
-
-def test_kmv_overlap_matrix_estimates_saturated(spark):
-    from frogocr_spark.operators.sketches import kmv_overlap_matrix
-    # 2000-element sets with 50% overlap, k=256: estimates must land
-    # within the theta-sketch error envelope (~3/sqrt(k) ≈ 19%)
-    rows = ([("a", f"k{i}") for i in range(2000)]
-            + [("b", f"k{i}") for i in range(1000, 3000)])
-    df = spark.createDataFrame(rows, "grp string, key string")
-    r = kmv_overlap_matrix(df, "grp", "key", k=256).collect()[0]
-    assert abs(r.est_union - 3000) / 3000 < 0.19
-    assert abs(r.est_intersect - 1000) / 1000 < 0.35
-    assert abs(r.jaccard_e6 / 1e6 - 1 / 3) < 0.1
-
-
-def test_kmv_overlap_matrix_dedups_duplicate_keys(spark):
-    from frogocr_spark.operators.sketches import kmv_overlap_matrix
-    # multiset input: KMV is a DISTINCT sketch — duplicates must not
-    # change anything
-    base = [("a", "x"), ("a", "y"), ("b", "x")]
-    df1 = spark.createDataFrame(base, "grp string, key string")
-    df2 = spark.createDataFrame(base * 7, "grp string, key string")
-    a = kmv_overlap_matrix(df1, "grp", "key", k=16).collect()[0]
-    b = kmv_overlap_matrix(df2, "grp", "key", k=16).collect()[0]
-    assert a == b
-    assert a.est_intersect == 1 and a.est_union == 2
-
+# ----------------------------------------------------------- shard_manifest
 
 def test_shard_write_manifest_verifies_on_reread(spark, tmp_path):
     from frogocr_spark.operators.layout import shard_write

@@ -1,101 +1,10 @@
-"""HLL sketch (operators/sketches), inverted index / tf-idf / bigram
-LM (operators/textstats), and int8 quantization
-(operators/similarity) — differential-tested against pure Python twins
-and hand-computed values."""
+"""Inverted index / tf-idf / bigram LM (operators/textstats) and int8
+quantization (operators/similarity) — differential-tested against
+pure Python twins and hand-computed values."""
 
 from __future__ import annotations
 
-import hashlib
 import random
-
-import pytest
-
-from frogocr_spark.operators.sketches import (hll_constants, hll_estimate,
-                                              hll_estimate_corrected,
-                                              hll_registers,
-                                              hll_relative_error)
-
-
-# ---------------------------------------------------------------- HLL
-
-def _py_registers(keys, p=8):
-    """Pure-Python twin of hll_registers — same md5/15-hex/bit layout."""
-    c = hll_constants(p)
-    regs = {}
-    for k in keys:
-        h = int(hashlib.md5(str(k).encode()).hexdigest()[:15], 16)
-        bucket = h >> c["w"]
-        rem = h & c["rem_mask"]
-        rho = c["maxrho"] if rem == 0 else c["w"] + 1 - rem.bit_length()
-        regs[bucket] = max(regs.get(bucket, 0), rho)
-    return regs
-
-
-def _py_reg_sum_scaled(regs, p=8):
-    c = hll_constants(p)
-    return (sum(1 << (c["maxrho"] - r) for r in regs.values())
-            + (c["m"] - len(regs)) * c["empty_term"])
-
-
-def test_hll_registers_bit_for_bit(spark):
-    """Spark registers == the pure-Python md5 twin, exactly."""
-    keys = [f"user-{i}" for i in range(500)] * 3  # duplicates are free
-    df = spark.createDataFrame([(k,) for k in keys], "k string")
-    got = {r["bucket"]: r["reg"]
-           for r in hll_registers(df, [], "k", p=8).collect()}
-    assert got == _py_registers(keys)
-
-
-def test_hll_estimate_matches_python_twin_and_bound(spark):
-    n = 5000
-    df = spark.createDataFrame([(i % n,) for i in range(2 * n)], "k long")
-    row = hll_estimate(df, [], "k", p=8).collect()[0]
-    # exact integer register sum == Python twin (keys hash as str(int))
-    regs = _py_registers([i for i in range(n)])
-    assert row["reg_sum_scaled"] == _py_reg_sum_scaled(regs)
-    # accuracy: within 4 standard errors of the true cardinality
-    err = abs(row["hll_est"] - n) / n
-    assert err < 4 * hll_relative_error(8), (row["hll_est"], n)
-
-
-def test_hll_merge_is_register_max(spark):
-    """Union sketch == element-wise max of part sketches (the property
-    that makes the partial aggregation correct)."""
-    a = [f"a{i}" for i in range(300)]
-    b = [f"b{i}" for i in range(300)] + a[:100]
-    ra, rb = _py_registers(a), _py_registers(b)
-    merged = {k: max(ra.get(k, 0), rb.get(k, 0)) for k in set(ra) | set(rb)}
-    df = spark.createDataFrame([(k,) for k in set(a) | set(b)], "k string")
-    got = {r["bucket"]: r["reg"]
-           for r in hll_registers(df, [], "k", p=8).collect()}
-    assert got == merged
-
-
-def test_hll_grouped_and_partitioning_invariant(spark):
-    rows = [(f"g{i % 3}", f"k{i % 97}") for i in range(1000)]
-    df = spark.createDataFrame(rows, "g string, k string")
-    out1 = {r["g"]: (r["reg_sum_scaled"], r["hll_est"])
-            for r in hll_estimate(df, ["g"], "k", p=8).collect()}
-    out2 = {r["g"]: (r["reg_sum_scaled"], r["hll_est"])
-            for r in hll_estimate(df.repartition(7), ["g"], "k",
-                                  p=8).collect()}
-    assert out1 == out2 and len(out1) == 3
-
-
-def test_hll_corrected_small_range(spark):
-    """Linear counting beats the raw estimator at tiny cardinality."""
-    n = 40  # << m = 256: raw HLL is biased here, LC is near-exact
-    df = spark.createDataFrame([(i,) for i in range(n)], "k long")
-    row = hll_estimate_corrected(df, [], "k", p=8).collect()[0]
-    assert abs(row["hll_est_corrected"] - n) <= abs(row["hll_est"] - n)
-    assert abs(row["hll_est_corrected"] - n) / n < 0.1
-
-
-def test_hll_p_validation():
-    with pytest.raises(ValueError):
-        hll_constants(5)
-    with pytest.raises(ValueError):
-        hll_constants(17)
 
 
 # ----------------------------------------------- inverted index / tf-idf

@@ -50,10 +50,9 @@ ROOTS = (
     + sorted((REPO / "tools").glob("*.py")))
 
 # operator and function families that only tests import (see ROADMAP
-# item 3, which deletes them one family per change)
+# item 5, which deletes them one family per change)
 TEST_ONLY_MODULES = {
-    *(f"frogocr_spark.operators.{m}" for m in (
-        "analytics", "clustering", "layout", "ml", "sketches", "spatial")),
+    *(f"frogocr_spark.operators.{m}" for m in ("analytics", "layout", "ml")),
     "frogocr_spark.functions.urls",
 }
 
